@@ -471,6 +471,26 @@ def test_mix_solver_extreme_mixtures_stay_finite(spark):
     assert None not in w3 and set(w3) == set(w)
 
 
+def test_mix_solver_rejects_unbounded_driver_grid(spark, monkeypatch):
+    """|groups| x n_buckets is checked against MIXFIT_MAX_CELLS, and the
+    count collect is capped, so a high-cardinality group column fails
+    loudly instead of landing on the driver."""
+    from webloghunter_spark.pipelines import split
+
+    rows = [(i, f"g{i % 5}", f"tok{i} tok{i + 1}") for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    target = df.drop("source")
+    monkeypatch.setattr(split, "MIXFIT_MAX_CELLS", 5 * 16)
+    assert split.mix_match_weights(df, target, n_buckets=16).count() == 5
+    with pytest.raises(ValueError, match="MIXFIT_MAX_CELLS"):
+        split.mix_match_weights(df, target, n_buckets=17)
+    # far more non-empty cells than the cap: the capped collect raises too
+    monkeypatch.setattr(split, "MIXFIT_MAX_CELLS", 3)
+    with pytest.raises(ValueError, match="MIXFIT_MAX_CELLS"):
+        split.mix_match_weights(df.withColumn("source", F.col("text")), target,
+                                n_buckets=1)
+
+
 def test_bpe_merge_learn_hierarchy_and_greedy(spark):
     """Merge training: argmax pair per round with (cnt desc, a, b)
     ties, 3-pass delimiter merge reaches the greedy fixpoint on

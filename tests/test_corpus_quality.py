@@ -624,6 +624,24 @@ def test_boilerplate_removed_from_every_copy_including_first(spark):
         assert out[d].new_text == uniq[d]
 
 
+def test_remove_boilerplate_rejects_string_key_model(spark):
+    """A model persisted before the 60-bit BIGINT key format has string
+    seg_keys, which match nothing: applying it raises instead of
+    silently removing no boilerplate."""
+    from webloghunter_spark.pipelines.dedup import (
+        boilerplate_keys,
+        remove_boilerplate,
+    )
+
+    boiler = " ".join(f"b{i}" for i in range(5))
+    df = _docs(spark, [(d, f"{boiler} u{d}") for d in (1, 2, 3)])
+    model = boilerplate_keys(df, seg_tokens=5, min_df=3)
+    assert remove_boilerplate(df, model, seg_tokens=5).count() == 3
+    stale = model.select(F.col("seg_key").cast("string").alias("seg_key"))
+    with pytest.raises(TypeError, match="seg_key"):
+        remove_boilerplate(df, stale, seg_tokens=5)
+
+
 def test_boilerplate_below_min_df_is_kept(spark):
     from webloghunter_spark.pipelines.dedup import boilerplate_segments
 

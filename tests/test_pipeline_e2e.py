@@ -90,11 +90,8 @@ def test_pipeline_filters(spark, logdir):
     assert [r.source for r in out] == sorted(r.source for r in out)
 
 
-def test_curate_corpus_full_funnel(spark):
-    """The one-call funnel: plumbing order, attrition bookkeeping,
-    and stage skipping — each stage's semantics are pinned by its own
-    oracle/tests elsewhere."""
-    from webloghunter_spark.pipelines.curate import curate_corpus
+def _funnel_fixture(spark):
+    """(docs, eval_df) exercising every curate_corpus stage."""
 
     def body(i):  # unique 30-token body per doc (pairwise J ~ 0)
         return " ".join(f"w{i}x{j}" for j in range(30))
@@ -107,7 +104,16 @@ def test_curate_corpus_full_funnel(spark):
         [(900, body(5))], "doc_id long, text string"
     )                                                   # contaminates doc 5
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    return docs, eval_df
 
+
+def test_curate_corpus_full_funnel(spark):
+    """The one-call funnel: plumbing order, attrition bookkeeping,
+    and stage skipping — each stage's semantics are pinned by its own
+    oracle/tests elsewhere."""
+    from webloghunter_spark.pipelines.curate import curate_corpus
+
+    docs, eval_df = _funnel_fixture(spark)
     out, funnel = curate_corpus(
         docs, eval_df=eval_df, min_quality_bp=1000,
         near_dedup_threshold=0.8, decontam_n=8,
@@ -286,3 +292,78 @@ def test_verify_training_dataset_multi_file_shard_order(spark, tmp_path):
     bad = [(0, 0, 4, dig([3, 4, 1, 2]))]
     out = verify_training_dataset(spark, str(tmp_path / "ds"), bad)
     assert out[0][-1] is False
+
+
+def test_funnel_counts_equal_count_actions(spark, monkeypatch):
+    """The funnel's rows come from each settle()'s checkpoint job
+    (session.settled_rows); they must equal what a separate count()
+    per stage boundary returns, for both funnels."""
+    from webloghunter_spark.pipelines import curate
+    from webloghunter_spark.session import materialized_scope
+
+    docs, eval_df = _funnel_fixture(spark)
+    batch = docs.filter("doc_id >= 5")
+    corpus = docs.filter("doc_id < 5")
+    runs = {
+        "corpus": lambda: curate.curate_corpus(
+            docs, eval_df=eval_df, min_quality_bp=1000, token_budget=200,
+        ),
+        "against": lambda: curate.curate_against(
+            batch, corpus, eval_df=eval_df, min_quality_bp=1000,
+        ),
+    }
+    folded = {}
+    with materialized_scope():
+        for name, run in runs.items():
+            folded[name] = run()[1]
+    monkeypatch.setattr(curate, "settled_rows", lambda df: df.count())
+    with materialized_scope():
+        for name, run in runs.items():
+            assert run()[1] == folded[name], name
+    assert len(folded["corpus"]) == 6 and len(folded["against"]) == 5
+
+
+def test_curate_repeat_compiles_no_new_code(spark):
+    """A repeat of the funnel reuses every generated class: the session's
+    codegen cache holds the whole working set, so the second run does
+    no Janino compilation. With Spark's 100-entry default the LRU
+    evicted each class before its next use and every repeat
+    recompiled nearly all of them.
+
+    AQE is off here so both runs plan identically: with it on, a
+    re-plan that depends on which stage finished first (a broadcast
+    build side swapped, stages renumbered) now and then generates a
+    class no earlier run produced — a new class, not a cache miss."""
+    from webloghunter_spark.pipelines.curate import curate_corpus
+    from webloghunter_spark.session import materialized_scope
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles(action):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        out = action()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before, out
+
+    # the metric sees a class no earlier test generated (the literal is
+    # inlined into the generated code)
+    n, _ = compiles(lambda: spark.range(3).selectExpr("id * 7919013").collect())
+    assert n > 0
+
+    docs, eval_df = _funnel_fixture(spark)
+
+    def run():
+        with materialized_scope():
+            out, funnel = curate_corpus(
+                docs, eval_df=eval_df, min_quality_bp=1000, token_budget=200,
+            )
+            return sorted(r.doc_id for r in out.collect()), funnel
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, first = compiles(run)
+        n, second = compiles(run)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert n == 0
+    assert second == first

@@ -20,11 +20,11 @@ survivor set.
 Each stage is optional (None/0 disables it and its jobs entirely).
 Returns (survivors, funnel) where `funnel` is one row per stage with
 rows-in/rows-out — the attrition report every curation run gets
-audited by. The funnel numbers cost one count per stage boundary
-(cheap aggregates over settled survivor sets; the stages themselves
-each materialize once anyway at 100 TB — write survivors between
-stages rather than fusing six corpus-wide joins into one plan whose
-failure loses everything).
+audited by. The funnel numbers cost no extra job: each stage's
+checkpoint job counts its own rows (session.settled_rows; the stages
+themselves each materialize once anyway at 100 TB — write survivors
+between stages rather than fusing six corpus-wide joins into one plan
+whose failure loses everything).
 
 Stage boundaries use session.settle() (eager localCheckpoint), NOT
 persist(): persist caches rows but keeps the nested logical plan, so
@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webloghunter_spark.session import settle
+from webloghunter_spark.session import settle, settled_rows
 
 
 def curate_corpus(
@@ -88,7 +88,7 @@ def curate_corpus(
 
     funnel: list[tuple[str, int, int]] = []
     cur = settle(docs)
-    n = cur.count()
+    n = settled_rows(cur)
 
     if min_quality_bp is not None:
         from webloghunter_spark.pipelines.gate import gate_keep_expr
@@ -107,7 +107,7 @@ def curate_corpus(
                 )
             )
         )
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("quality_gate", n, m))
         n = m
 
@@ -121,7 +121,7 @@ def curate_corpus(
             id_col
         )
         cur = settle(cur.join(keep, id_col, "left_semi"))
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("normalized_dedup", n, m))
         n = m
 
@@ -138,7 +138,7 @@ def curate_corpus(
                 shingle_k=dedup_shingle_k,
             )
         )
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("near_dedup", n, m))
         n = m
 
@@ -160,7 +160,7 @@ def curate_corpus(
         )
         keep = dec.filter(F.col("dropped") == 0).select(id_col)
         cur = settle(cur.join(keep, id_col, "left_semi"))
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("containment_drop", n, m))
         n = m
 
@@ -172,7 +172,7 @@ def curate_corpus(
                 cur, eval_df, id_col=id_col, text_col=text_col, n=decontam_n
             )
         )
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("decontaminate", n, m))
         n = m
 
@@ -200,7 +200,7 @@ def curate_corpus(
         cur = settle(
             sel.filter(F.col("selected")).drop("selected", "ntok", "_score")
         )
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("token_budget", n, m))
         n = m
 
@@ -278,7 +278,7 @@ def curate_against(
 
     funnel: list[tuple[str, int, int]] = []
     cur = settle(batch)
-    n = cur.count()
+    n = settled_rows(cur)
 
     if min_quality_bp is not None:
         from webloghunter_spark.pipelines.gate import gate_keep_expr
@@ -294,7 +294,7 @@ def curate_against(
                 )
             )
         )
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("quality_gate", n, m))
         n = m
 
@@ -310,7 +310,7 @@ def curate_against(
         )
         hit = keyed.join(ckeys, "_k", "left_semi").select(id_col)
         cur = settle(cur.join(hit, id_col, "left_anti"))
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("exact_against", n, m))
         n = m
 
@@ -328,7 +328,7 @@ def curate_against(
                 shingle_k=dedup_shingle_k,
             )
         )
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("near_against", n, m))
         n = m
 
@@ -347,7 +347,7 @@ def curate_against(
         )
         keep = dec.filter(F.col("dropped") == 0).select(id_col)
         cur = settle(cur.join(keep, id_col, "left_semi"))
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("containment_against", n, m))
         n = m
 
@@ -359,7 +359,7 @@ def curate_against(
                 cur, eval_df, id_col=id_col, text_col=text_col, n=decontam_n
             )
         )
-        m = cur.count()
+        m = settled_rows(cur)
         funnel.append(("decontaminate", n, m))
         n = m
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from webloghunter_spark.functions.text import (
     fingerprint_expr,
@@ -1169,7 +1170,18 @@ def remove_boilerplate(
     (seg_key) frame) to a document frame: per-doc removal depends only
     on the doc's own segments and the static key set, so this is
     stateless per document — the property the streaming twin's parity
-    rests on."""
+    rests on.
+
+    Raises TypeError on a model whose seg_key is not a BIGINT: a model
+    persisted before the 60-bit key format has string keys, which
+    never equal a segment's bigint key, so nothing would be removed."""
+    key_type = boiler.schema["seg_key"].dataType
+    if not isinstance(key_type, LongType):
+        raise TypeError(
+            f"boilerplate model seg_key is {key_type.simpleString()}, "
+            "expected the 60-bit bigint key; retrain it with "
+            "boilerplate_keys()"
+        )
     segs = _doc_segments(df, text_col, id_col, seg_tokens)
     kept = segs.filter(F.col("seg").isNotNull()).join(
         boiler, on="seg_key", how="left_anti"

@@ -479,6 +479,9 @@ def with_group_split(
 MIXFIT_BUCKETS = 128
 MIXFIT_LR = 1000.0
 MIXFIT_ITERS = 3
+# bound on the |groups| x n_buckets cells the solver holds and iterates
+# on the driver (one collected count per cell, plus the smoothed grid)
+MIXFIT_MAX_CELLS = 1_000_000
 
 
 def mix_match_weights(
@@ -530,7 +533,12 @@ def mix_match_weights(
     underflow to zero (every source far from the target) keeps the
     previous weights instead of dividing by z = 0 — both rules are
     replayed identically by the SQL oracle. Rows with a NULL group
-    are EXCLUDED from the solve (NULL never joins in the oracle)."""
+    are EXCLUDED from the solve (NULL never joins in the oracle).
+
+    Raises ValueError when |groups| * n_buckets exceeds
+    MIXFIT_MAX_CELLS: the count collect is capped at that many rows,
+    so a high-cardinality group_col (a doc id, say) fails here instead
+    of shipping the corpus to the driver."""
     import math
 
     from webloghunter_spark.functions.text import (
@@ -550,8 +558,14 @@ def mix_match_weights(
     # quantized expressions below are copied VERBATIM from the former
     # in-engine round (same IEEE-double op order), so the weights are
     # bit-identical — pinned by test_mix_match_* and the oracle replay.
+    # Every non-empty cell is one row, so rows <= |groups| * B: capping
+    # the collect at MIXFIT_MAX_CELLS + 1 rows bounds the driver and
+    # still leaves enough groups to see the bound broken.
     crows = (
-        tk.groupBy(group_col, "b").agg(F.count(F.lit(1)).alias("c")).collect()
+        tk.groupBy(group_col, "b")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .limit(MIXFIT_MAX_CELLS + 1)
+        .collect()
     )
     cnt: dict = {}
     ns: dict = {}
@@ -561,6 +575,12 @@ def mix_match_weights(
         ns[g] = ns.get(g, 0) + c
     groups = sorted(ns)
     s_count = len(groups)
+    if s_count * B > MIXFIT_MAX_CELLS:
+        raise ValueError(
+            f"mix_match_weights: {s_count} (or more) groups x {B} buckets"
+            f" exceeds MIXFIT_MAX_CELLS={MIXFIT_MAX_CELLS}; group on a"
+            " lower-cardinality column or use fewer buckets"
+        )
     if s_count == 0:
         return spark.createDataFrame(
             [], f"{group_col} string, n_tokens long, weight_micro long"

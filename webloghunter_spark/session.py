@@ -8,9 +8,12 @@ shuffle partitions sized to the machine rather than the 200 default).
 from __future__ import annotations
 
 import os
+import weakref
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 # Every frame materialize() persists, in persist order. Library
@@ -21,6 +24,16 @@ from pyspark.storagelevel import StorageLevel
 # always safe for correctness: a consumer that reads the frame later
 # just recomputes from lineage.
 _MATERIALIZED: list[DataFrame] = []
+
+# settle()d frame -> the Observation of count(1) its checkpoint job
+# recorded. Weak keys: an entry lives exactly as long as the frame, and
+# a recycled id() can never alias a dead frame's count.
+_SETTLED_ROWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+# Observed metrics reach the driver on the listener bus, a few ms after
+# the checkpoint job returns; settled_rows() waits at most this long for
+# them before paying a count() job instead.
+_OBSERVATION_WAIT_S = 30.0
 
 
 def materialize(df: DataFrame, memory: bool = True) -> DataFrame:
@@ -87,13 +100,47 @@ def settle(df: DataFrame, lineage: bool | None = None) -> DataFrame:
     is the multiplicative per-action driver planning this function
     exists to cut; prefer it only where executor churn is expected and
     funnels are shallow.
+
+    On the checkpoint path the row count rides along: the checkpoint
+    job observes count(1), and settled_rows() returns it without a
+    second job.
     """
     use_lineage = SETTLE_LINEAGE if lineage is None else lineage
     if use_lineage:
         return materialize(df)  # lazy persist: lineage-recoverable
-    df = df.localCheckpoint(eager=True)
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+        eager=True
+    )
     _MATERIALIZED.append(df)
+    _SETTLED_ROWS[df] = obs
     return df
+
+
+def settled_rows(df: DataFrame) -> int:
+    """Row count of a settle()d frame, read from its checkpoint job's
+    observation instead of a separate count() job.
+
+    Any other frame — a lineage-mode settle() (persist() is lazy, so
+    no job has run to observe), or one settle() did not return — is
+    counted with df.count(). Observation.get blocks until a job delivers the
+    metric, so it is only read after a bounded wait for delivery;
+    should the metric not arrive within _OBSERVATION_WAIT_S, the
+    count() is paid instead of blocking."""
+    obs = _SETTLED_ROWS.get(df)
+    if obs is not None:
+        jvm = df.sparkSession._jvm
+        wait = jvm.scala.concurrent.duration.FiniteDuration(
+            int(_OBSERVATION_WAIT_S * 1000),
+            jvm.java.util.concurrent.TimeUnit.MILLISECONDS,
+        )
+        try:
+            jvm.scala.concurrent.Await.ready(obs._jo.future(), wait)
+        except Py4JJavaError:  # TimeoutException: fall through to count()
+            pass
+        else:
+            return int(obs.get["rows"])
+    return df.count()
 
 
 def swap_materialized(old: DataFrame, new: DataFrame) -> None:
@@ -117,6 +164,7 @@ def drop_materialized(df: DataFrame) -> None:
     except ValueError:
         pass
     _unpersist_any(df)
+    _SETTLED_ROWS.pop(df, None)
 
 
 def _unpersist_any(df: DataFrame) -> None:
@@ -138,6 +186,7 @@ def release_materialized() -> int:
     n = 0
     while _MATERIALIZED:
         df = _MATERIALIZED.pop()
+        _SETTLED_ROWS.pop(df, None)
         try:
             _unpersist_any(df)
             n += 1
@@ -171,6 +220,7 @@ def materialized_scope():
         tail, del_from = _MATERIALIZED[mark:], mark
         del _MATERIALIZED[del_from:]
         for df in reversed(tail):
+            _SETTLED_ROWS.pop(df, None)
             try:
                 _unpersist_any(df)
             except Exception:
@@ -183,6 +233,23 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Build (or return the running) session with the engine defaults;
+    `extra_conf` entries are applied last and override any of them.
+
+    Two defaults are about per-query fixed costs rather than data:
+
+    - `spark.sql.codegen.cache.maxEntries` = 2000 (Spark's default is
+      100). The cache holds the Janino-compiled generated classes.
+      One curate_corpus run of the benchmark fixture compiles 114-117
+      of them, and the triage pipeline plus one hunt round 233. At
+      100 entries LRU evicts each class before its next use, so every
+      repeat of the funnel recompiled over 80 classes and the JIT
+      started over on them. At 2000 a repeat compiles none, bar the
+      odd class an adaptive re-plan generates for the first time
+      (SCALING.md, "Generated-code cache").
+    - `spark.ui.showConsoleProgress` = false: the progress bar's `\r`
+      overwrote lines printed by long query sweeps (check_hash).
+    """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 4)
@@ -198,6 +265,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("WLH_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet TIMESTAMP(NANOS) (e.g. pandas-written event tables) is
         # unreadable as a timestamp; read as long and convert explicitly.
