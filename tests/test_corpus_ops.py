@@ -106,25 +106,6 @@ def test_semantic_dedup_keeps_representatives(spark):
     assert kept == {0, 1, 4}
 
 
-def test_semantic_dup_flags_fast_matches_expr(spark):
-    from webloghunter_spark.pipelines.semdedup import semantic_dup_flags_fast
-
-    expr = semantic_dup_flags(_emb(spark), n_centroids=2, tau=0.9).collect()
-    fast = semantic_dup_flags_fast(_emb(spark), n_centroids=2, tau=0.9).collect()
-    key = lambda r: (r.vec_id, r.cent_id, r.max_sim, r.is_dup)
-    assert sorted(map(key, expr)) == sorted(map(key, fast))
-
-
-def test_semantic_dedup_arrow_path(spark):
-    kept = {
-        r.vec_id
-        for r in semantic_dedup(
-            _emb(spark), n_centroids=2, tau=0.9, use_arrow=True
-        ).collect()
-    }
-    assert kept == {0, 1, 4}
-
-
 def test_semantic_dedup_explicit_centroids(spark):
     cents = spark.createDataFrame(
         [(7, [1.0, 0.0, 0.0]), (9, [0.0, 1.0, 0.0])],
@@ -2001,35 +1982,6 @@ def test_dataset_diff_status_and_stage_transitions(spark):
     assert out[("added", -1, 0)] == 1           # doc 5 stub
     assert out[("added", -1, 5)] == 1           # doc 6
     assert sum(out.values()) == 6
-
-
-def test_repeated_window_spans_sort_strategy_parity(spark):
-    """The suffix-ordering ('sort') repeat-set strategy returns
-    row-for-row the hash-aggregate form's output — cross-doc repeats,
-    in-doc repeats, overlapping-span union, and clean docs absent."""
-    from webloghunter_spark.pipelines.dedup import repeated_window_spans
-
-    boiler = "all rights reserved contact us for more info"
-    docs = spark.createDataFrame(
-        [
-            (1, f"alpha beta {boiler} gamma"),
-            (2, f"delta {boiler} epsilon zeta"),
-            (3, "x y z x y z x y z x y z"),      # in-doc repeats
-            (4, "unique words only here now"),    # clean: absent
-            (5, None),
-        ],
-        "doc_id long, text string",
-    )
-    h = sorted(tuple(r) for r in
-               repeated_window_spans(docs, window=4).collect())
-    s = sorted(tuple(r) for r in
-               repeated_window_spans(docs, window=4,
-                                     strategy="sort").collect())
-    assert h == s and len(h) >= 3
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="strategy"):
-        repeated_window_spans(docs, window=4, strategy="suffix")
 
 
 def test_containment_pairs_finds_doc_in_doc(spark):

@@ -168,9 +168,12 @@ def test_pack_chunks_contiguous_spans_per_shard(spark):
             prefix += r.ntok
 
 
-# --- tfidf salted-path parity ------------------------------------------------
+# --- tfidf on NULL / empty documents ----------------------------------------
 
 def test_tfidf_salted_path_identical(spark):
+    """tfidf_topk has one (unsalted) join layout; on a fixture with
+    NULL and empty documents those docs emit no rows but still count
+    in N, and the scores follow tf * ln(N/df) on the 1e-4 grid."""
     from webloghunter_spark.functions.text import tfidf_topk
 
     rows = [
@@ -181,35 +184,15 @@ def test_tfidf_salted_path_identical(spark):
         (5, ""),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    plain = sorted(map(tuple, tfidf_topk(df).collect()))
-    salted = sorted(map(tuple, tfidf_topk(df, salt_partitions=8).collect()))
-    assert plain == salted and len(plain) > 0
+    out = sorted(map(tuple, tfidf_topk(df).collect()))
+    assert {r[0] for r in out} == {1, 2, 3}
+    doc1 = {r[1]: (r[2], r[3]) for r in out if r[0] == 1}
+    assert doc1["the"] == (2, 1.0217)       # 2 * ln(5/3)
+    assert doc1["cat"] == (1, 0.9163)       # ln(5/2)
+    assert doc1["mat"] == (1, 1.6094)       # ln(5)
 
 
 # --- bigram LM scoring -------------------------------------------------------
-
-def test_bigram_logprob_salted_path_identical(spark):
-    """The salt_partitions skew path (round-14, the documented
-    module-docstring pattern) produces IDENTICAL (n_bigrams, avg_ll)
-    rows to the plain path on a hot-bigram fixture — only the shuffle
-    layout changes (two-stage counts + S-way replicated count
-    tables)."""
-    from webloghunter_spark.functions.lm import bigram_logprob
-
-    hot = " ".join(["of the"] * 30)            # one dominant bigram
-    rows = [(i, hot + f" tail{i} bit{i}") for i in range(1, 9)] + [
-        (9, "the cat sat on the mat"),
-        (10, "one"),
-        (11, None),
-        (12, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    plain = sorted(map(tuple, bigram_logprob(df).collect()))
-    salted = sorted(
-        map(tuple, bigram_logprob(df, salt_partitions=8).collect())
-    )
-    assert plain == salted and len(plain) == 12
-
 
 def test_bigram_logprob_ranks_gibberish_below_fluent(spark):
     from math import log

@@ -112,24 +112,6 @@ def _quality_bp(spark, rows):
     return {r.doc_id: r.q for r in out}
 
 
-def test_hashed_pairs_variant_matches_string_pairs(spark):
-    """containment_pairs (string, frozen) and containment_pairs_hashed
-    (the migrated representation) emit identical frames on a fixture
-    with containment + twins + boilerplate grams."""
-    from webloghunter_spark.pipelines.dedup import (
-        containment_pairs,
-        containment_pairs_hashed,
-    )
-
-    docs = spark.createDataFrame(
-        _fixture_rows(), "doc_id long, text string, source string"
-    )
-    s = sorted(map(tuple, containment_pairs(docs).collect()))
-    h = sorted(map(tuple, containment_pairs_hashed(docs).collect()))
-    assert s == h
-    assert len(s) > 0
-
-
 def test_containment_drop_matches_string_reference(spark):
     """The hashed containment_drop reproduces the STRING-shingle
     decision frame exactly: pair machinery, bp drop rules, keep-best
@@ -466,8 +448,7 @@ def test_window_span_family_matches_string_reference(spark):
     """Round-14 posting compression: repeated_window_spans and
     remove_repeated_spans key the repeat-set aggregate and semi-join
     on 60-bit md5-prefix BIGINTs. Pins span stats and the rewritten
-    text to a pure-Python STRING-window reference, for both the hash
-    and sort repeat-set strategies."""
+    text to a pure-Python STRING-window reference."""
     from webloghunter_spark.pipelines.dedup import (
         remove_repeated_spans,
         repeated_window_spans,
@@ -509,10 +490,8 @@ def test_window_span_family_matches_string_reference(spark):
          int((union_len(ps) * 10000.0 / len(toks[i])) + 0.5) if toks[i] else 0)
         for i, ps in hits.items() if ps
     )
-    for strategy in ("hash", "sort"):
-        got = sorted(map(tuple, repeated_window_spans(
-            docs, window=w, strategy=strategy).collect()))
-        assert got == exp_spans, strategy
+    got = sorted(map(tuple, repeated_window_spans(docs, window=w).collect()))
+    assert got == exp_spans
     assert len(exp_spans) == 2                        # docs 1 and 2
 
     covered = {

@@ -236,31 +236,39 @@ FP_EDGE_TEXTS = [
 
 
 def test_fingerprint_fast_twins_match_expr(spark):
-    """The Arrow twins must be bit-identical to the expression forms on
-    edge inputs: empty/blank text, unicode whitespace (Java regex \\s is
-    ASCII-only — Python re must not eat \\xa0), non-ASCII letters, and
-    lengths around the winnow minimum."""
+    """The fingerprint UDFs must be bit-identical to the registry's
+    DuckDB oracles (SQL_DOC_FINGERPRINT, SQL_WINNOW — an independent
+    implementation) on edge inputs: empty/blank text, unicode
+    whitespace (Java regex \\s is ASCII-only — Python re must not eat
+    \\xa0), vertical tab (RE2 \\s omits it, Java \\s does not),
+    non-ASCII letters, and lengths around the winnow minimum."""
+    import duckdb
+    import pandas as pd
+
+    from webloghunter_spark.benchqueries import SQL_DOC_FINGERPRINT, SQL_WINNOW
     from webloghunter_spark.functions.text import (
         with_rolling_fingerprint,
-        with_rolling_fingerprint_fast,
         with_winnowed_fingerprints,
-        with_winnowed_fingerprints_fast,
     )
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(FP_EDGE_TEXTS)], "id long, text string"
-    )
-    slow = with_rolling_fingerprint(df, "text", out_col="fp")
-    fast = with_rolling_fingerprint_fast(df, "text", out_col="fp")
-    srows = {r.id: r.fp for r in slow.collect()}
-    frows = {r.id: r.fp for r in fast.collect()}
-    assert srows == frows
+    rows = [(i, t) for i, t in enumerate(FP_EDGE_TEXTS)]
+    df = spark.createDataFrame(rows, "id long, text string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
 
-    slow_w = with_winnowed_fingerprints(df, "text", out_col="w", kgram=8, window=4)
-    fast_w = with_winnowed_fingerprints_fast(df, "text", out_col="w", kgram=8, window=4)
-    swin = {r.id: list(r.w) for r in slow_w.collect()}
-    fwin = {r.id: list(r.w) for r in fast_w.collect()}
-    assert swin == fwin
+    got = {r.id: r.fp for r in
+           with_rolling_fingerprint(df, "text", out_col="fp").collect()
+           if r.fp is not None}
+    want = dict(con.sql(SQL_DOC_FINGERPRINT).fetchall())
+    assert got == want and len(want) > 0
+
+    got_w = {r.id: list(r.w) for r in with_winnowed_fingerprints(
+        df, "text", out_col="w", kgram=8, window=4).collect() if r.w}
+    want_w: dict = {}
+    for doc_id, fp in con.sql(SQL_WINNOW).fetchall():
+        want_w.setdefault(doc_id, []).append(fp)
+    assert got_w == {k: sorted(v) for k, v in want_w.items()}
+    assert len(want_w) > 0
 
 
 @given(

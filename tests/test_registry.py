@@ -25,6 +25,26 @@ def test_all_queries_have_oracle_or_documented_skip():
     assert orphans == set(), f"oracles without queries: {sorted(orphans)}"
 
 
+# retired twin name -> the survivor whose builder it must share
+RETIRED_TWINS = {
+    "doc_fingerprint_fast": "doc_fingerprint",
+    "winnow_fingerprints_fast": "winnow_fingerprints",
+    "semantic_dedup_fast": "semantic_dedup",
+    "containment_pairs_hashed": "containment_pairs",
+    "tfidf_topk_salted": "tfidf_topk",
+}
+
+
+@pytest.mark.parametrize("alias", sorted(RETIRED_TWINS))
+def test_retired_twin_names_route_to_survivor(alias):
+    """Each operator has one implementation: a retired twin's registry
+    name stays (the driver tracks names) but runs the survivor's
+    builder, so a second physical path cannot return under it."""
+    from webloghunter_spark.benchqueries import QUERIES
+
+    assert QUERIES[alias] is QUERIES[RETIRED_TWINS[alias]]
+
+
 def test_no_complex_toplevel_columns(spark):
     """Schema sweep: driver canon requires scalar columns.
 

@@ -76,22 +76,23 @@ def test_winnow_containment_param_validation(spark):
 
 
 def test_containment_pairs_hashed_matches_string_form(spark):
-    """Posting compression must not change results: the 60-bit
-    md5-prefix int shingles yield the identical pair frame as the
-    string form (collisions would merge shingles — none at any tested
-    scale, and the oracle hashes identically anyway)."""
-    from webloghunter_spark.pipelines.dedup import (
-        containment_pairs,
-        containment_pairs_hashed,
-    )
+    """Posting compression must not change results: containment_pairs
+    on 60-bit md5-prefix int shingles yields the identical pair frame
+    as the string-shingle definition, here the registry's DuckDB
+    oracle SQL_CONTAINMENT_PAIRS (collisions would merge shingles)."""
+    import duckdb
+
+    from webloghunter_spark.benchqueries import SQL_CONTAINMENT_PAIRS
+    from webloghunter_spark.pipelines.dedup import containment_pairs
 
     docs = _quote_farm(spark)
-    key = lambda r: (r.id_a, r.id_b)  # noqa: E731
-    s = {key(r): (r.n_common, r.contain_ab, r.contain_ba)
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    h = {(r.id_a, r.id_b): (r.n_common, r.contain_ab, r.contain_ba)
          for r in containment_pairs(docs).collect()}
-    h = {key(r): (r.n_common, r.contain_ab, r.contain_ba)
-         for r in containment_pairs_hashed(docs).collect()}
-    assert s == h and len(s) > 0
+    s = {(a, b): (n, ab, ba)
+         for a, b, n, ab, ba in con.sql(SQL_CONTAINMENT_PAIRS).fetchall()}
+    assert h == s and len(s) > 0
 
 
 def test_curate_against_slicing_independence(spark):

@@ -1,13 +1,19 @@
 """Time registry queries at two sf dirs (default sf0.1 vs the 32x
-fixture) and print the per-query ratio — the SCALING.md row generator.
+fixture) and print every run, the per-side median and the median
+ratio — the SCALING.md row generator.
 
 Usage: python tools/time_pair.py q1 [q2 ...] [--a /root/testdata/sf0.1]
                                  [--b /tmp/sf0.1_x32] [--repeats 2]
+
+Each run prints one JSON line as it finishes (so a long run that is
+stopped early still leaves its completed timings); each query then
+prints its summary line and the last line is the summary of all.
 """
 
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -17,9 +23,9 @@ from webloghunter_spark.benchqueries import QUERIES
 from webloghunter_spark.session import get_spark, release_materialized
 
 
-def run(spark, name, sf_dir, repeats):
+def run(spark, name, sf_dir, repeats, side):
     times = []
-    for _ in range(repeats):
+    for i in range(repeats):
         t0 = time.perf_counter()
         QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
             "noop"
@@ -27,7 +33,9 @@ def run(spark, name, sf_dir, repeats):
         times.append(round(time.perf_counter() - t0, 2))
         release_materialized()
         spark.catalog.clearCache()
-    return min(times)
+        print(json.dumps({"query": name, "side": side, "run": i,
+                          "s": times[-1]}), flush=True)
+    return times
 
 
 def main():
@@ -42,9 +50,12 @@ def main():
     spark.read.parquet(f"{args.a}/region.parquet").count()
     out = {}
     for name in args.queries:
-        ta = run(spark, name, args.a, args.repeats)
-        tb = run(spark, name, args.b, args.repeats)
-        out[name] = {"a_s": ta, "b_s": tb, "ratio": round(tb / ta, 2)}
+        ta = run(spark, name, args.a, args.repeats, "a")
+        tb = run(spark, name, args.b, args.repeats, "b")
+        ma, mb = statistics.median(ta), statistics.median(tb)
+        out[name] = {"a_runs": ta, "b_runs": tb,
+                     "a_median": round(ma, 2), "b_median": round(mb, 2),
+                     "ratio": round(mb / ma, 2)}
         print(json.dumps({name: out[name]}), flush=True)
     print(json.dumps(out))
 

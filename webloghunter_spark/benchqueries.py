@@ -1225,7 +1225,11 @@ def q_containment_pairs(spark, sf_dir):
     the signal Jaccard/MinHash-LSH structurally miss): candidates
     from a bounded inverted-index join on discriminative shingles
     (2 <= df <= 20), exact |A∩B|/|A| verify on distinct shingle
-    arrays, max-direction threshold 0.5."""
+    arrays, max-direction threshold 0.5. Shingles are 60-bit
+    md5-prefix ints; this builder answers two oracles: the
+    string-shingle SQL_CONTAINMENT_PAIRS (agreement there means no
+    60-bit collision changed a pair on the fixture) and
+    SQL_CONTAINMENT_PAIRS_HASHED (exact by construction)."""
     from webloghunter_spark.pipelines.dedup import containment_pairs
 
     docs = _fan(_t(spark, sf_dir, "documents"))
@@ -1260,24 +1264,6 @@ SQL_CONTAINMENT_PAIRS = f"""
     FROM ex
     WHERE greatest(n_common::DOUBLE / na, n_common::DOUBLE / nb) >= 0.5
 """
-
-
-def q_containment_pairs_hashed(spark, sf_dir):
-    """containment_pairs on POSTING-COMPRESSED shingles: 60-bit
-    md5-prefix int hashes instead of strings — the family's 100 TB
-    scan-width fix (measured 2.7x on the 32x control: int64
-    array-intersect + an int-keyed inverted index vs string
-    everything). Both engines hash identically
-    (conv(substring(md5(s),1,15),16,10) == CAST('0x'||substr AS
-    BIGINT)), so exactness holds by construction even under a
-    collision. Oracle BUILT FROM SQL_CONTAINMENT_PAIRS by anchored
-    dsh-CTE surgery — candidate/verify machinery cannot drift."""
-    from webloghunter_spark.pipelines.dedup import containment_pairs_hashed
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return containment_pairs_hashed(
-        docs, shingle_k=3, threshold=0.5, max_df=20
-    )
 
 
 def _containment_pairs_hashed_sql() -> str:
@@ -1963,18 +1949,22 @@ SQL_KNN_LSH = """
 
 
 def q_doc_fingerprint(spark, sf_dir):
-    """Rolling-hash (Rabin-Karp) whole-document fingerprint."""
+    """Rolling-hash (Rabin-Karp) whole-document fingerprint, computed
+    by a vectorized pandas UDF (numpy dot-with-mod per row)."""
     from webloghunter_spark.functions.text import with_rolling_fingerprint
 
     docs = _fan(_t(spark, sf_dir, "documents"))
     # persist(): the isNotNull filter would otherwise push below the
-    # staged projections with the whole fingerprint expression inlined.
+    # projection and evaluate the Arrow UDF twice.
     fp = with_rolling_fingerprint(docs, "text", out_col="rh").persist()
     return fp.select("doc_id", "rh").filter(F.col("rh").isNotNull())
 
 
+# Whitespace class spelled out: RE2's \s omits \x0B (vertical tab),
+# which Java's \s (the Spark side) includes.
 _NORM_SQL = (
-    "regexp_replace(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),"
+    "regexp_replace(regexp_replace(lower(trim(text)),"
+    " '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'),"
     " '[^\\x20-\\x7e]', '', 'g')"
 )
 
@@ -1991,14 +1981,15 @@ SQL_DOC_FINGERPRINT = f"""
 
 
 def q_winnow_fingerprints(spark, sf_dir):
-    """Winnowed k-gram fingerprints (Schleimer et al.), long form."""
+    """Winnowed k-gram fingerprints (Schleimer et al.), long form: k
+    shifted multiply-adds + strided sliding-min per row in a pandas
+    UDF."""
     from webloghunter_spark.functions.text import with_winnowed_fingerprints
 
     docs = _fan(_t(spark, sf_dir, "documents"))
     # persist() before explode: InferFiltersFromGenerate adds a
-    # size(winnow_fps) > 0 filter that pushdown would otherwise
-    # substitute below the staged projections, re-inlining the whole
-    # per-character pipeline into one per-row filter expression.
+    # size(winnow_fps) > 0 filter that pushdown would otherwise place
+    # below the projection, running the Arrow UDF a second time.
     fps = with_winnowed_fingerprints(docs, "text", kgram=8, window=4).persist()
     return fps.select("doc_id", F.explode("winnow_fps").alias("fp")).distinct()
 
@@ -2063,35 +2054,6 @@ SQL_WINNOW_PAIRS = f"""
            (n_shared * 10000 // least(na, nb))::BIGINT AS overlap_bp
     FROM ex WHERE n_shared >= 2
 """
-
-
-def q_doc_fingerprint_fast(spark, sf_dir):
-    """Arrow twin of doc_fingerprint: identical Rabin-Karp values from
-    a vectorized pandas UDF (numpy dot-with-mod per row) instead of the
-    interpreted per-character HOF aggregate — the 100 TB path. Shares
-    doc_fingerprint's oracle; hash equality IS the twin-parity check."""
-    from webloghunter_spark.functions.text import with_rolling_fingerprint_fast
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    # persist: the isNotNull filter would otherwise push below the
-    # projection and evaluate the Arrow UDF twice (same barrier as the
-    # expr sibling / the winnow twin).
-    fp = with_rolling_fingerprint_fast(docs, "text", out_col="rh").persist()
-    return fp.select("doc_id", "rh").filter(F.col("rh").isNotNull())
-
-
-def q_winnow_fingerprints_fast(spark, sf_dir):
-    """Arrow twin of winnow_fingerprints (k shifted multiply-adds +
-    strided sliding-min per row); shares the winnow oracle."""
-    from webloghunter_spark.functions.text import with_winnowed_fingerprints_fast
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    # persist: InferFiltersFromGenerate's size(winnow_fps) > 0 would
-    # otherwise be pushed below the projection and re-run the Arrow UDF
-    # a second time (one ArrowEvalPython for the filter, one for the
-    # project) — same barrier as the expr sibling.
-    fps = with_winnowed_fingerprints_fast(docs, "text", kgram=8, window=4).persist()
-    return fps.select("doc_id", F.explode("winnow_fps").alias("fp")).distinct()
 
 
 def q_winnow_containment_drop(spark, sf_dir):
@@ -3660,18 +3622,6 @@ def q_tfidf_topk(spark, sf_dir):
     return tfidf_topk(docs, "text", "doc_id", k=5)
 
 
-def q_tfidf_topk_salted(spark, sf_dir):
-    """The 100 TB skew path for tfidf_topk: the tf->df join runs on a
-    salted composite key ((token, pmod(md5(doc), 8))) with the compact
-    df side replicated 8 ways, and df itself is a two-stage partial
-    aggregate — identical results to the unsalted oracle, different
-    shuffle layout (no reducer owns a stopword's full row set)."""
-    from webloghunter_spark.functions.text import tfidf_topk
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return tfidf_topk(docs, "text", "doc_id", k=5, salt_partitions=8)
-
-
 SQL_TFIDF_TOPK = r"""
     WITH toks AS (
         SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN CAST([] AS VARCHAR[])
@@ -4656,9 +4606,11 @@ def q_semantic_dedup(spark, sf_dir):
     """SemDeDup over the embedding store: assign to the nearest of 8
     deterministic centroids (lowest-id vectors — the oracle-checkable
     stand-in for kmeans_centroids), flag every vector with a lower-id
-    same-cluster member at cosine >= 0.35. Assignment is the broadcast
-    ivf_assign kernel; the pair scan shuffles once on cent_id and its
-    cost is bounded by cluster size (raise n_centroids at scale)."""
+    same-cluster member at cosine >= 0.35. Assignment is one matmul
+    per Arrow batch against the closure-shipped centroids; the pair
+    scan shuffles once on cent_id and runs one NumPy matmul per
+    cluster, its cost bounded by cluster size (raise n_centroids at
+    scale)."""
     from webloghunter_spark.pipelines.semdedup import semantic_dup_flags
 
     emb = _fan(_t(spark, sf_dir, "embeddings"))
@@ -4699,18 +4651,6 @@ SQL_SEMANTIC_DEDUP = """
            coalesce(p.max_sim >= 0.35, FALSE) AS is_dup
     FROM assigned a LEFT JOIN pair_sim p ON a.vec_id = p.vec_id
 """
-
-
-def q_semantic_dedup_fast(spark, sf_dir):
-    """Arrow twin of semantic_dedup: identical assignment + keep rule,
-    but the intra-cluster pair scan is one NumPy matmul per cluster
-    (applyInPandas) instead of interpreted HOF folds. Same oracle —
-    the two paths must agree after round(6)."""
-    from webloghunter_spark.pipelines.semdedup import semantic_dup_flags_fast
-
-    emb = _fan(_t(spark, sf_dir, "embeddings"))
-    flags = semantic_dup_flags_fast(emb, n_centroids=8, tau=0.35)
-    return flags.withColumn("max_sim", F.coalesce("max_sim", F.lit(-2.0)))
 
 
 def q_value_quantiles(spark, sf_dir):
@@ -10553,15 +10493,28 @@ SQL_BM25_BATCH = _bm25_batch_sql()
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # ORDER IS DRIVER COVERAGE: the correctness driver samples the
-    # FIRST 50 entries. Round-14 front = the next staleness cohort:
-    # the 2 queries last sampled round 9 (doc_fingerprint_fast,
-    # url_blocklist_big — the fast/big variants round 13 deferred) +
-    # 48 of the 49-query round-10 cohort. The one r10 row deferred to
-    # slot 51 (semantic_dedup_fast) is the fast variant of the
-    # freshly-sampled semantic_dedup. Everything after slot 50 is
+    # FIRST 50 entries. Front = the 14 names whose builder changed when
+    # each operator kept one implementation (the five retired twin
+    # names, each routed to its survivor's builder, the survivors, and
+    # the four callers of a removed path), then the first 36 of the
+    # previous front's staleness cohort. Everything after slot 50 is
     # covered by the committed full-registry HASHCHECK artifacts.
-    # -- round-9/10 staleness cohort (50) --
-    "doc_fingerprint_fast": q_doc_fingerprint_fast,
+    # -- builders changed by the one-implementation pass (14) --
+    "doc_fingerprint": q_doc_fingerprint,
+    "doc_fingerprint_fast": q_doc_fingerprint,
+    "winnow_fingerprints": q_winnow_fingerprints,
+    "winnow_fingerprints_fast": q_winnow_fingerprints,
+    "semantic_dedup": q_semantic_dedup,
+    "semantic_dedup_fast": q_semantic_dedup,
+    "containment_pairs": q_containment_pairs,
+    "containment_pairs_hashed": q_containment_pairs,
+    "tfidf_topk": q_tfidf_topk,
+    "tfidf_topk_salted": q_tfidf_topk,
+    "substring_dedup": q_substring_dedup,
+    "bigram_logprob": q_bigram_logprob,
+    "winnow_pairs": q_winnow_pairs,
+    "winnow_containment_drop": q_winnow_containment_drop,
+    # -- round-9/10 staleness cohort (36) --
     "url_blocklist_big": q_url_blocklist_big,
     "batch_leakage": q_batch_leakage,
     "bloom_audit": q_bloom_audit,
@@ -10598,28 +10551,21 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pii_redact": q_pii_redact,
     "pivot_counts": q_pivot_counts,
     "quality_ecdf": q_quality_ecdf,
+    # -- the remainder (committed full-registry HASHCHECK coverage) --
     "quantize_emb": q_quantize_emb,
     "referrer_hosts": q_referrer_hosts,
     "rep_signals": q_rep_signals,
     "returned_items": q_returned_items,
-    "semantic_dedup": q_semantic_dedup,
     "shard_manifest": q_shard_manifest,
     "simhash_pairs": q_simhash_pairs,
     "stratified_sample": q_stratified_sample,
-    "tfidf_topk": q_tfidf_topk,
-    "tfidf_topk_salted": q_tfidf_topk_salted,
     "value_quantiles": q_value_quantiles,
     "vocab_topk": q_vocab_topk,
     "weighted_sample": q_weighted_sample,
-    # -- deferred round-10 fast variant, then the remainder
-    # (committed full-registry HASHCHECK coverage) --
-    "semantic_dedup_fast": q_semantic_dedup_fast,
     "topk_per_group": q_topk_per_group,
     "url_blocklist": q_url_blocklist,
-    "winnow_fingerprints": q_winnow_fingerprints,
     "ann_recall": q_ann_recall,
     "asof_join": q_asof_join,
-    "bigram_logprob": q_bigram_logprob,
     "bm25_batch": q_bm25_batch,
     "bm25_topk": q_bm25_topk,
     "boundary_leakage": q_boundary_leakage,
@@ -10628,7 +10574,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "char_entropy": q_char_entropy,
     "charset_stats": q_charset_stats,
     "cms_heavy_hitters": q_cms_heavy_hitters,
-    "containment_pairs": q_containment_pairs,
     "dedup_keep_best": q_dedup_keep_best,
     "dedup_sensitivity": q_dedup_sensitivity,
     "domain_mix": q_domain_mix,
@@ -10662,11 +10607,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "train_split": q_train_split,
     "unimax_alloc": q_unimax_alloc,
     "uri_risk": q_uri_risk,
-    "winnow_fingerprints_fast": q_winnow_fingerprints_fast,
-    "winnow_pairs": q_winnow_pairs,
-    "winnow_containment_drop": q_winnow_containment_drop,
     "curate_incremental": q_curate_incremental,
-    "containment_pairs_hashed": q_containment_pairs_hashed,
     "curate_pipeline": q_curate_pipeline,
     "boilerplate_segments": q_boilerplate_segments,
     "bpe_apply": q_bpe_apply,
@@ -10678,7 +10619,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_cross_source": q_dedup_cross_source,
     "dedup_exact": q_dedup_exact,
     "density_sample": q_density_sample,
-    "doc_fingerprint": q_doc_fingerprint,
     "event_risk": q_event_risk,
     "filter_api": q_filter_api,
     "first_last": q_first_last,
@@ -10752,7 +10692,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "snapshot_diff": q_snapshot_diff,
     "source_divergence": q_source_divergence,
     "span_corruption": q_span_corruption,
-    "substring_dedup": q_substring_dedup,
     "substring_remove": q_substring_remove,
     "token_budget": q_token_budget,
     "tokenizer_fertility": q_tokenizer_fertility,

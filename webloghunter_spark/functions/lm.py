@@ -16,11 +16,10 @@ Scale shape (100 TB corpus):
   ((w1, w2) strings); their size is bounded by OBSERVED n-gram
   vocabulary, not corpus size;
 - scoring joins each doc's bigram rows to the count tables — shuffle
-  joins on (w1, w2) and (w1). Hot bigrams ("of the") skew exactly like
-  TF-IDF's stopword df join; the same salting pattern applies
-  (replicate the count row S ways, salt the probe side — see
-  functions/text.tfidf_topk salt_partitions) if AQE's skew handling
-  is not enough;
+  joins on (w1, w2) and (w1). Hot bigrams ("of the") skew those joins;
+  AQE's skew-join splitting handles it, and a salted layout (two-stage
+  counts, count tables replicated S ways) measured ~1.6x slower at
+  both 32x fixtures (SCALING.md round 14);
 - the vocabulary size V is a 1-row broadcast.
 """
 
@@ -61,24 +60,10 @@ def bigram_logprob(
     id_col: str = "doc_id",
     alpha: float = 0.5,
     round_digits: int = 4,
-    salt_partitions: int = 0,
 ) -> DataFrame:
     """(id, n_bigrams, avg_ll): mean ln-likelihood of each document's
     token bigrams under the corpus's own add-alpha bigram model.
-    Documents with < 2 tokens return n_bigrams=0, avg_ll NULL.
-
-    `salt_partitions=S > 0` activates the module-docstring skew path
-    for the probe->count joins (the tfidf_topk salt_partitions
-    pattern): probe rows take a deterministic salt pmod(md5(id), S),
-    the count tables are computed as two-stage (key, salt)-partial
-    then key-total aggregates — so no single reducer ever sees a hot
-    bigram's ("of the") full row set — and the one-row-per-key count
-    tables are replicated S ways so (key, salt) joins co-partition.
-    Counts, ratios and scores are IDENTICAL to the unsalted path;
-    only the shuffle layout changes. Default 0 keeps the plain shape:
-    AQE's skew-join splitting covers the natural-density corpora the
-    32x fixtures model (measured round 14 — see SCALING.md), so the
-    salt is for genuinely degenerate stress corpora."""
+    Documents with < 2 tokens return n_bigrams=0, avg_ll NULL."""
     # The bigram table feeds THREE consumers (cb, cu, the probe side);
     # without materialization the interpreted-HOF extraction re-runs per
     # consumer and the query goes superlinear at scale (13x wall at a
@@ -93,53 +78,17 @@ def bigram_logprob(
         .agg(F.count_distinct("_tok").alias("_v"))
     )
     a = F.lit(float(alpha))
-    if salt_partitions > 0:
-        s = F.lit(int(salt_partitions))
-        salt = F.pmod(
-            F.conv(
-                F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("long"),
-            s,
-        ).cast("int")
-        bi_s = bi.withColumn("_salt", salt)
-        # stage 1: per-(key, salt) partials; stage 2: key totals —
-        # identical counts, no hot-key reducer
-        cb_part = bi_s.groupBy("w1", "w2", "_salt").agg(
-            F.count(F.lit(1)).alias("_p")
+    cb = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("_cb"))
+    cu = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("_cu"))
+    scored = (
+        bi.join(cb, ["w1", "w2"])
+        .join(cu, "w1")
+        .crossJoin(F.broadcast(vocab))
+        .select(
+            id_col,
+            F.log((F.col("_cb") + a) / (F.col("_cu") + a * F.col("_v"))).alias("_lp"),
         )
-        cb = cb_part.groupBy("w1", "w2").agg(F.sum("_p").alias("_cb"))
-        cu_part = bi_s.groupBy("w1", "_salt").agg(
-            F.count(F.lit(1)).alias("_p")
-        )
-        cu = cu_part.groupBy("w1").agg(F.sum("_p").alias("_cu"))
-        rep = F.explode(F.sequence(F.lit(0), s - 1)).alias("_salt")
-        cb_rep = cb.select("w1", "w2", "_cb", rep)
-        cu_rep = cu.select("w1", "_cu", rep)
-        scored = (
-            bi_s.join(cb_rep, ["w1", "w2", "_salt"])
-            .join(cu_rep, ["w1", "_salt"])
-            .crossJoin(F.broadcast(vocab))
-            .select(
-                id_col,
-                F.log(
-                    (F.col("_cb") + a) / (F.col("_cu") + a * F.col("_v"))
-                ).alias("_lp"),
-            )
-        )
-    else:
-        cb = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("_cb"))
-        cu = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("_cu"))
-        scored = (
-            bi.join(cb, ["w1", "w2"])
-            .join(cu, "w1")
-            .crossJoin(F.broadcast(vocab))
-            .select(
-                id_col,
-                F.log((F.col("_cb") + a) / (F.col("_cu") + a * F.col("_v"))).alias("_lp"),
-            )
-        )
+    )
     agg = scored.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         grid_round_expr(F.avg("_lp"), round_digits).alias("avg_ll"),

@@ -1,9 +1,10 @@
 """Text-analysis functions for large-scale document pipelines.
 
-All of these are pure Column expressions (JVM-side, codegen'd) so they
+Most of these are pure Column expressions (JVM-side, codegen'd) so they
 run at full scan speed over 100 TB of documents — no Python per row.
-Formulas are deliberately simple closed forms so an external SQL oracle
-can replicate them bit-for-bit.
+Per-character work (the rolling-hash and winnowing fingerprints) runs
+in Arrow-batched pandas UDFs instead. Formulas are deliberately simple
+closed forms so an external SQL oracle can replicate them bit-for-bit.
 """
 
 from __future__ import annotations
@@ -152,114 +153,11 @@ RH_BASE = 257
 RH_MOD = 999_999_999_999_989  # largest prime < 10^15
 
 
-def _norm_ascii_expr(col: Column | str) -> Column:
-    """Lowercased, whitespace-collapsed, printable-ASCII-only text."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(
-        F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "), r"[^\x20-\x7e]", ""
-    )
-
-
-def _codes_from_norm(norm: Column) -> Column:
-    """Per-character code points of an ALREADY-MATERIALIZED normalized
-    column. `norm` must be a plain column reference: it is captured
-    inside the per-character lambda, and an inlined expression there is
-    re-evaluated per character (the normalization regexes would run
-    len(text) times per row).
-
-    sequence(1, 0) yields a DESCENDING [1, 0] (step is inferred from
-    the bound order), so empty text must be guarded explicitly."""
-    return F.when(F.length(norm) == 0, F.array().cast("array<int>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(norm)),
-            lambda i: F.ascii(F.substring(norm, i, 1)),
-        )
-    )
-
-
-def with_rolling_fingerprint(
-    df, col: str = "text", out_col: str = "rolling_fp"
-):
-    """Whole-document Rabin–Karp polynomial fingerprint:
-    h = sum(c_i * B^(n-1-i)) mod M, folded left-to-right as
-    acc = (acc * B + c) mod M. NULL for empty normalized text.
-
-    A DataFrame transform so the normalized text is materialized before
-    the per-character stages (see `_codes_from_norm`). Scale note: the
-    per-character fold is a higher-order aggregate (interpreted); for
-    100 TB prefer a vectorized pandas-UDF twin, but this closed form is
-    oracle-portable."""
-    codes = F.col("_rf_codes")
-    h = F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * RH_BASE + x) % RH_MOD,
-    )
-    return (
-        df.withColumn("_rf_norm", _norm_ascii_expr(col))
-        .withColumn("_rf_codes", _codes_from_norm(F.col("_rf_norm")))
-        .withColumn(out_col, F.when(F.size(codes) > 0, h))
-        .drop("_rf_norm", "_rf_codes")
-    )
-
-
-def with_winnowed_fingerprints(
-    df, col: str = "text", out_col: str = "winnow_fps",
-    kgram: int = 8, window: int = 4,
-):
-    """Winnowing (Schleimer et al., SIGMOD 2003): rolling hashes of
-    char k-grams, then the minimum of each sliding window of `window`
-    consecutive hashes — the standard local fingerprint set for
-    near-dup / plagiarism detection. Adds `out_col` as a sorted
-    distinct array; empty when the normalized text is shorter than
-    kgram + window - 1 chars.
-
-    A DataFrame transform, not a single Column: each stage (codes →
-    gram hashes → window minima) must be MATERIALIZED before the next —
-    referenced inside a transform() lambda, an inlined stage would be
-    re-evaluated per lambda call (per gram), turning the whole thing
-    O(n^2 * len). Staged columns are multi-referenced non-cheap
-    aliases, so CollapseProject keeps each as one evaluation per row.
-    """
-    codes = F.col("_wf_codes")
-    n_grams = F.size(codes) - F.lit(kgram - 1)
-    gram_hashes = F.when(n_grams >= 1, F.transform(
-        F.sequence(F.lit(1), n_grams),
-        lambda i: F.aggregate(
-            F.slice(codes, i, kgram),
-            F.lit(0).cast("long"),
-            lambda acc, x: (acc * RH_BASE + x) % RH_MOD,
-        ),
-    )).otherwise(F.array().cast("array<long>"))
-
-    gh = F.col("_wf_gh")
-    n_windows = F.size(gh) - F.lit(window - 1)
-    mins = F.when(n_windows >= 1, F.array_sort(F.array_distinct(F.transform(
-        F.sequence(F.lit(1), n_windows),
-        lambda i: F.array_min(F.slice(gh, i, window)),
-    )))).otherwise(F.array().cast("array<long>"))
-
-    return (
-        df.withColumn("_wf_norm", _norm_ascii_expr(col))
-        .withColumn("_wf_codes", _codes_from_norm(F.col("_wf_norm")))
-        .withColumn("_wf_gh", gram_hashes)
-        .withColumn(out_col, mins)
-        .drop("_wf_norm", "_wf_codes", "_wf_gh")
-    )
-
-
-# --- Arrow-vectorized twins of the fingerprint transforms -------------------
-#
-# The expression forms above are oracle-portable but interpreted (per-
-# character higher-order aggregates); at 100 TB the per-char fold is
-# the scan bottleneck. These twins compute the IDENTICAL values (same
-# normalization, base, modulus — asserted by tests and by sharing the
-# SQL oracle in the query registry) inside Arrow-batched pandas UDFs:
-# per row the work is a handful of numpy vector ops over the char
-# codes, no Python per character.
-
-# Java regex \s is ASCII-only ([ \t\n\x0B\f\r]); Python re \s would
-# also eat unicode whitespace and diverge from the Spark expression.
+# Normalization shared with the SQL oracle (_NORM_SQL in the query
+# registry): trim spaces, lowercase, collapse whitespace runs to one
+# space, drop every char outside printable ASCII. The whitespace class
+# is Java regex \s spelled out ([ \t\n\x0B\f\r]); Python re \s would
+# also eat unicode whitespace (\xa0) and RE2 \s omits \x0B.
 _PY_WS_RE = "[ \t\n\x0b\x0c\r]+"
 _PY_NONPRINT_RE = "[^\x20-\x7e]"
 
@@ -276,9 +174,8 @@ def _rh_powers(n: int):
 
 
 def _norm_codes_py(s) -> "bytes | None":
-    """Python twin of _norm_ascii_expr: the normalized text's bytes
-    (all chars are printable ASCII after the final substitution, so
-    byte values == the char codes F.ascii yields)."""
+    """The normalized text's bytes (all chars are printable ASCII after
+    the final substitution, so byte values are the char codes)."""
     import re
 
     if s is None:
@@ -289,7 +186,7 @@ def _norm_codes_py(s) -> "bytes | None":
 
 
 def rolling_fp_udf():
-    """pandas_udf twin of with_rolling_fingerprint: h = fold of
+    """pandas_udf behind with_rolling_fingerprint: h = fold of
     (acc * B + c) mod M == sum(c_i * B^(n-1-i)) mod M, evaluated as one
     vectorized dot-with-mod per row. None for empty normalized text."""
     import numpy as np
@@ -317,9 +214,9 @@ def rolling_fp_udf():
 
 
 def winnow_fps_udf(kgram: int = 8, window: int = 4):
-    """pandas_udf twin of with_winnowed_fingerprints: per row, k-gram
+    """pandas_udf behind with_winnowed_fingerprints: per row, k-gram
     rolling hashes are k shifted vector multiply-adds, window minima a
-    strided sliding view — C speed throughout, identical values."""
+    strided sliding view — C speed throughout."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -348,16 +245,34 @@ def winnow_fps_udf(kgram: int = 8, window: int = 4):
     return _fps
 
 
-def with_rolling_fingerprint_fast(df, col: str = "text", out_col: str = "rolling_fp"):
-    """Drop-in fast twin of with_rolling_fingerprint (Arrow path)."""
+def with_rolling_fingerprint(
+    df, col: str = "text", out_col: str = "rolling_fp"
+):
+    """Whole-document Rabin–Karp polynomial fingerprint of the
+    normalized text: h = sum(c_i * B^(n-1-i)) mod M, i.e. the fold
+    acc = (acc * B + c) mod M. NULL for empty normalized text.
+
+    Runs in an Arrow-batched pandas UDF (one numpy dot-with-mod per
+    row, no Python per character); an interpreted per-character
+    higher-order aggregate computing the same value measured slower
+    (SCALING.md, "One implementation per operator")."""
     return df.withColumn(out_col, rolling_fp_udf()(F.col(col)))
 
 
-def with_winnowed_fingerprints_fast(
+def with_winnowed_fingerprints(
     df, col: str = "text", out_col: str = "winnow_fps",
     kgram: int = 8, window: int = 4,
 ):
-    """Drop-in fast twin of with_winnowed_fingerprints (Arrow path)."""
+    """Winnowing (Schleimer et al., SIGMOD 2003): rolling hashes of
+    char k-grams of the normalized text, then the minimum of each
+    sliding window of `window` consecutive hashes — the standard local
+    fingerprint set for near-dup / plagiarism detection. Adds `out_col`
+    as a sorted distinct array; empty when the normalized text is
+    shorter than kgram + window - 1 chars.
+
+    Runs in an Arrow-batched pandas UDF. Callers that filter or explode
+    `out_col` should persist/materialize first: pushdown would
+    otherwise re-run the UDF below the projection."""
     return df.withColumn(out_col, winnow_fps_udf(kgram, window)(F.col(col)))
 
 
@@ -490,7 +405,6 @@ def tfidf_topk(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    salt_partitions: int = 0,
 ):
     """Per-document top-k terms by TF-IDF (plain ln(N/df), no
     smoothing, so any SQL engine reproduces it bit-for-bit after
@@ -501,17 +415,9 @@ def tfidf_topk(
     (compact, one row per distinct doc-token) rather than rescanning
     text; the per-doc top-k is a bounded window, ordered on the ROUNDED
     score so float ULP differences across engines cannot flip ranks.
-
-    `salt_partitions=S > 0` activates the skew path for the tf->df
-    join: at 100 TB the vocabulary may be too large to broadcast, and a
-    plain shuffle join on `token` sends every tf row for a stopword to
-    one reducer. Salting splits each hot key S ways — tf rows get a
-    deterministic salt pmod(md5(id), S), the one-row-per-token df side
-    is replicated S ways, and the join key becomes (token, salt); df
-    itself is computed as a two-stage (token, salt)-partial then
-    token-total aggregate so no single reducer sees a stopword's full
-    row set. Results are IDENTICAL to the unsalted path (the oracle),
-    only the shuffle layout changes.
+    The tf->df join is a plain shuffle join on token: AQE splits a hot
+    stopword partition, and a salted (token, salt) layout measured no
+    faster (SCALING.md, "One implementation per operator").
     """
     from pyspark.sql import Window as _W
     from pyspark.sql import functions as _F
@@ -524,28 +430,8 @@ def tfidf_topk(
     )
     tf = toks.groupBy(id_col, "token").agg(_F.count(_F.lit(1)).alias("tf"))
     ndocs = df.agg(_F.count(_F.lit(1)).alias("n_docs"))
-    if salt_partitions > 0:
-        s = _F.lit(salt_partitions)
-        salt = _F.pmod(
-            _F.conv(_F.substring(_F.md5(_F.col(id_col).cast("string")), 1, 8), 16, 10)
-            .cast("long"),
-            s,
-        ).cast("int")
-        tf = tf.withColumn("_salt", salt)
-        # stage 1: per-(token, salt) partial df; stage 2: token total.
-        partial = tf.groupBy("token", "_salt").agg(
-            _F.count(_F.lit(1)).alias("_pdf")
-        )
-        dfreq = partial.groupBy("token").agg(_F.sum("_pdf").alias("df"))
-        # replicate the compact df table S ways so (token, salt) joins
-        # co-partition without any reducer owning a whole hot token
-        dfreq = dfreq.select(
-            "token", "df", _F.explode(_F.sequence(_F.lit(0), s - 1)).alias("_salt")
-        )
-        scored = tf.join(dfreq, ["token", "_salt"]).drop("_salt")
-    else:
-        dfreq = tf.groupBy("token").agg(_F.count(_F.lit(1)).alias("df"))
-        scored = tf.join(dfreq, "token")
+    dfreq = tf.groupBy("token").agg(_F.count(_F.lit(1)).alias("df"))
+    scored = tf.join(dfreq, "token")
     from webloghunter_spark.functions.similarity import grid_round_expr
 
     # stored-value grid, not F.round (similarity.py:45)

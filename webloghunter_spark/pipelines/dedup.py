@@ -356,7 +356,14 @@ def containment_pairs(
     boilerplate_segments, not containment. Verification is exact on
     the distinct shingle arrays with the same shuffle_hash discipline
     as ngram_jaccard_pairs (the shingle table scales with the corpus —
-    never broadcast it)."""
+    never broadcast it).
+
+    Shingles are POSTING-COMPRESSED to 60-bit md5-prefix ints
+    (hashed_shingles_expr): the verify intersects int64 arrays and the
+    inverted index is int-keyed (SCALING.md, "One implementation per
+    operator": faster than string shingles at sf0.1 and at the 32x
+    control). Counts differ from the string definition only if two
+    shingles of one doc pair collide in 60 bits."""
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
     if max_df < 2:
@@ -364,7 +371,7 @@ def containment_pairs(
     sh = materialize(
         df.select(
             F.col(id_col),
-            F.array_distinct(shingles_expr(text_col, shingle_k)).alias("_sh"),
+            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
         ).filter(F.size("_sh") > 0)
     )
     ex = _containment_ex(sh, id_col, max_df)
@@ -1054,6 +1061,15 @@ def segment_dedup(
     before the exchange), deliberately NOT a row_number window whose
     hot-key partitions would straggle. Reassembly shuffles once on the
     id. Three narrow exchanges total, all on compact keys.
+
+    Data-loss caveat of the 60-bit segment key (see _doc_segments):
+    two DIFFERENT segments whose keys collide count as one, so the
+    later occurrence is cut from its document as if it were a repeat.
+    That deletes real text, and the oracle cannot catch it because it
+    hashes identically. Expected colliding pairs are ~n^2 / 2^61 for n
+    distinct segments: ~4e-7 at 10^6, ~0.4 at 10^9, ~4e5 at 10^12 —
+    past ~10^9 distinct segments, expect some documents to lose a
+    segment they did not duplicate.
     """
     segs = _doc_segments(df, text_col, id_col, seg_tokens)
     keepers = (
@@ -1328,51 +1344,11 @@ def lsh_recall_audit(
     )
 
 
-def _repeated_hashes_sorted(wins: DataFrame) -> DataFrame:
-    """Repeat set via SORT instead of hash-aggregate: range-partition
-    the window hashes (Spark's range partitioner keys on value
-    comparison, so equal hashes land in one partition), sort within
-    partitions, and emit each value equal to its sorted predecessor
-    exactly once — one Arrow mapInPandas pass with cross-batch carry
-    (Arrow batches arrive in partition order). This is the relational
-    stand-in for the suffix-ordering ExactSubstr pipeline; unlike the
-    hash form, the FULL window volume crosses the range exchange."""
-    import pandas as pd
-
-    def gen(batches):
-        prev = None
-        emitted_prev = False
-        for pdf in batches:
-            out = []
-            for v in pdf["_h"]:
-                if v == prev:
-                    if not emitted_prev:
-                        out.append(v)
-                        emitted_prev = True
-                else:
-                    prev = v
-                    emitted_prev = False
-            if out:
-                yield pd.DataFrame({"_h": out})
-
-    parts = wins.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    # schema follows the wins key type (string historically, 60-bit
-    # BIGINT since the round-14 posting compression)
-    h_type = wins.schema["_h"].dataType.simpleString()
-    return (
-        wins.select("_h")
-        .repartitionByRange(int(parts), "_h")
-        .sortWithinPartitions("_h")
-        .mapInPandas(gen, f"_h {h_type}")
-    )
-
-
 def repeated_window_spans(
     df: DataFrame,
     window: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "hash",
 ) -> DataFrame:
     """Exact-substring duplication signal (the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"
@@ -1400,22 +1376,14 @@ def repeated_window_spans(
       contributes max(0, end - max(start, max_prev_end)) — O(hits)
       rows through the exchange, never O(ntok).
 
-    `strategy` picks how the repeat set is computed — identical
-    output, different physical plan (the ExactSubstr literature's two
-    shapes, measured head-to-head in SCALING.md):
-    - 'hash' (default): groupBy on the window md5 — partial map-side
-      combine shrinks the exchange to |distinct| before the shuffle.
-    - 'sort': the suffix-ordering analog — range-partition the window
-      hashes (equal keys co-locate by range contract), sort within
-      partitions, and mark values equal to their sorted neighbor via
-      one Arrow pass. The FULL window volume crosses the exchange
-      (no combine); it exists as the relational stand-in for the
-      suffix-array pipeline and as the measurement control.
+    The repeat set is a hash aggregate, not the suffix-ordering sort
+    of the ExactSubstr pipeline: the partial map-side combine shrinks
+    the exchange to |distinct| keys, where a range-partitioned sort
+    moves the full window volume (0.99-2.31x the hash form's wall in
+    every measured regime, SCALING.md round 9).
     """
     if window <= 0:
         raise ValueError(f"window must be > 0, got {window}")
-    if strategy not in ("hash", "sort"):
-        raise ValueError(f"strategy must be 'hash' or 'sort', got {strategy!r}")
     from pyspark.sql import Window as W
 
     base = df.select(
@@ -1439,15 +1407,12 @@ def repeated_window_spans(
         .alias("_h"),
     )
     wins = materialize(wins)
-    if strategy == "sort":
-        repeated = _repeated_hashes_sorted(wins)
-    else:
-        repeated = (
-            wins.groupBy("_h")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= 2)
-            .select("_h")
-        )
+    repeated = (
+        wins.groupBy("_h")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") >= 2)
+        .select("_h")
+    )
     rep = wins.join(repeated, "_h", "left_semi")
     w = (
         W.partitionBy(id_col)
@@ -1507,6 +1472,15 @@ def remove_repeated_spans(
       shuffle beyond the left_anti probe;
     - the rebuild is one groupBy(id) with array_sort(collect_list) —
       per-doc memory O(ntok), the same bound as holding the document.
+
+    Data-loss caveat of the 60-bit window key: two DIFFERENT windows
+    whose keys collide both count as repeated, so every token they
+    cover is removed. That deletes real text, and the oracle cannot
+    catch it because it hashes identically. Expected colliding pairs
+    are ~n^2 / 2^61 for n distinct windows: ~4e-7 at 10^6, ~0.4 at
+    10^9, ~4e5 at 10^12 — past ~10^9 distinct windows, expect some
+    documents to lose up to `window` tokens each that were not
+    duplicated.
     """
     if window <= 0:
         raise ValueError(f"window must be > 0, got {window}")
@@ -1845,19 +1819,17 @@ def winnow_pairs(
     never all-pairs); verification is exact on the per-doc sorted
     distinct fingerprint arrays with the same shuffle_hash discipline
     (the fingerprint table scales with the corpus — never broadcast).
-    Fingerprints come from the Arrow fast twin (the 100 TB scan
-    path), whose value-identity with the expression form is pinned by
-    the shared winnow oracle and the property tests."""
-    from webloghunter_spark.functions.text import (
-        with_winnowed_fingerprints_fast,
-    )
+    Fingerprints come from with_winnowed_fingerprints (the Arrow
+    scan path), pinned to the winnow oracle by the registry and the
+    property tests."""
+    from webloghunter_spark.functions.text import with_winnowed_fingerprints
 
     if max_df < 2:
         raise ValueError(f"max_df must be >= 2, got {max_df}")
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     sh = materialize(
-        with_winnowed_fingerprints_fast(
+        with_winnowed_fingerprints(
             df.select(F.col(id_col), F.col(text_col)),
             text_col, out_col="_fp", kgram=kgram, window=window,
         )
@@ -1940,53 +1912,6 @@ def hashed_shingles_expr(text_col: Column | str, k: int = 3) -> Column:
     )
 
 
-def containment_pairs_hashed(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-    max_df: int = 20,
-) -> DataFrame:
-    """containment_pairs on POSTING-COMPRESSED shingles — identical
-    candidate discipline and verify semantics on 60-bit int shingle
-    hashes instead of strings (hashed_shingles_expr: both engines
-    hash identically, so the oracle is exact by construction).
-    Returns the same (id_a, id_b, n_common, contain_ab, contain_ba)
-    frame; values differ from containment_pairs only if two of a
-    doc-pair's shingles md5-collide in 60 bits (none observed at any
-    tested scale — and both engines would agree anyway).
-
-    This is the family's 100 TB scan-width fix, measured at 2.7x on
-    the 32x control (the box-saturating linear-verify fixture); the
-    string form stays frozen for the oracles BUILT FROM it."""
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-    if max_df < 2:
-        raise ValueError(f"max_df must be >= 2, got {max_df}")
-    sh = materialize(
-        df.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        ).filter(F.size("_sh") > 0)
-    )
-    ex = _containment_ex(sh, id_col, max_df)
-    c_ab = F.col("n_common").cast("double") / F.col("_na")
-    c_ba = F.col("n_common").cast("double") / F.col("_nb")
-    from webloghunter_spark.functions.similarity import grid_round_expr
-
-    return (
-        ex.filter(F.greatest(c_ab, c_ba) >= F.lit(float(threshold)))
-        .select(
-            "id_a",
-            "id_b",
-            "n_common",
-            grid_round_expr(c_ab, 4).alias("contain_ab"),
-            grid_round_expr(c_ba, 4).alias("contain_ba"),
-        )
-    )
-
-
 def winnow_containment_drop(
     df: DataFrame,
     text_col: str = "text",
@@ -2030,8 +1955,7 @@ def winnow_containment_drop(
     Output: one row per input doc — (id, n_fps, quality_bp,
     n_containers, dropped), n_fps = 0 for too-short docs.
 
-    Scale shape: ONE text pass (the Arrow winnow twin — the 100 TB
-    scan path) computes fingerprints AND quality; quality rides
+    Scale shape: ONE text pass (the Arrow winnow UDF) computes fingerprints AND quality; quality rides
     through the verify joins as carry_cols (the containment_drop /
     dup_source_matrix lesson); candidates come from discriminative
     fingerprints (2 <= df <= max_df: sum df^2 <= max_df * sum df,
@@ -2051,15 +1975,15 @@ def winnow_containment_drop(
         raise ValueError(f"max_df must be >= 2, got {max_df}")
     from webloghunter_spark.functions.text import (
         quality_bp_expr,
-        with_winnowed_fingerprints_fast,
+        with_winnowed_fingerprints,
     )
 
-    # one text pass: winnowed fingerprints (already distinct-sorted
-    # from the Arrow twin) and quality in the same scan; materialize
-    # is the pushdown barrier the winnow twins need (explode-inferred
-    # size filters would re-run the Arrow UDF below the projection)
+    # one text pass: winnowed fingerprints (already distinct-sorted)
+    # and quality in the same scan; materialize is the pushdown
+    # barrier the winnow UDF needs (explode-inferred size filters
+    # would re-run it below the projection)
     base = materialize(
-        with_winnowed_fingerprints_fast(
+        with_winnowed_fingerprints(
             df.select(
                 F.col(id_col),
                 F.col(text_col),

@@ -6,16 +6,15 @@ document whose cosine similarity to another cluster member exceeds a
 threshold, keeping one representative per near-duplicate group.
 
 Spark shape:
-- Centroid assignment reuses `ivf_assign` — a broadcast nested-loop
-  join against the k-row centroid table, so the corpus is never
-  shuffled for assignment (same kernel the IVF ANN index uses).
-- The intra-cluster pair scan is ONE shuffle of the slim
-  (id, cent_id, vec, norm) projection on cent_id, then a self-join
-  within clusters. Cost is Σ|cluster|² — never corpus², and the
-  operator's scale knob is n_centroids: at 100 TB you raise k so the
-  expected cluster size keeps Σ|cluster|² bounded (SemDeDup used
-  k=50k for a 1.3e9-doc corpus, ~25k docs/cluster). Skewed clusters
-  are the hazard; `max_cluster` guards by sub-salting oversized
+- Centroid assignment is `ivf_assign_fast`: the k-row centroid table
+  rides the task closure and each Arrow batch scores every centroid
+  with one matmul, so the corpus is never shuffled for assignment.
+- The intra-cluster pair scan is ONE shuffle on cent_id, then one
+  NumPy matmul per cluster inside applyInPandas. Cost is Σ|cluster|² —
+  never corpus², and the operator's scale knob is n_centroids: at
+  100 TB you raise k so the expected cluster size keeps Σ|cluster|²
+  bounded (SemDeDup used k=50k for a 1.3e9-doc corpus, ~25k
+  docs/cluster). Skewed clusters are the hazard; sub-salting oversized
   clusters is deliberately NOT done here because dropping across salt
   boundaries would miss pairs — raise k instead.
 - Keep rule: a document is a duplicate iff some SAME-CLUSTER member
@@ -36,14 +35,13 @@ from pyspark.sql import functions as F
 
 from webloghunter_spark.functions.numeric import round_half_up
 from webloghunter_spark.functions.similarity import (
-    grid_round_expr,
-    dot_expr,
     hyperplane_bucket_expr,
-    ivf_assign,
     ivf_assign_fast,
-    norm_expr,
 )
-from webloghunter_spark.session import materialize
+
+# columns of one cluster's similarity slab per matmul: a task holds a
+# (|c| x dim) matrix plus a (|c| x _BLOCK) slab
+_BLOCK = 4096
 
 
 def semantic_dup_flags(
@@ -57,83 +55,14 @@ def semantic_dup_flags(
 ) -> DataFrame:
     """(id, cent_id, max_sim, is_dup) for every vector.
 
-    max_sim = highest cosine to a lower-id member of the same cluster
-    (NULL for the cluster's lowest id); is_dup = max_sim >= tau.
-    """
-    if centroids is None:
-        centroids = df.filter(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("centroid")
-        )
-    assigned = ivf_assign(df, centroids, vec_col=vec_col, id_col=id_col)
-
-    # Slim member table (id, cent_id, vec, norm) feeds BOTH sides of
-    # the intra-cluster self-join; materialize so norms and the
-    # assignment argmax are computed once, not re-derived per side.
-    members = materialize(
-        df.select(
-            F.col(id_col), F.col(vec_col).alias("_v"),
-            norm_expr(F.col(vec_col)).alias("_vn"),
-        ).join(assigned, id_col)
-    )
-
-    a = members.select(
-        F.col(id_col).alias("_ida"), F.col("cent_id").alias("_ca"),
-        F.col("_v").alias("_va"), F.col("_vn").alias("_na"),
-    )
-    b = members.select(
-        F.col(id_col).alias("_idb"), F.col("cent_id").alias("_cb"),
-        F.col("_v").alias("_vb"), F.col("_vn").alias("_nb"),
-    )
-    pair_sim = (
-        a.join(b, (F.col("_ca") == F.col("_cb")) & (F.col("_ida") < F.col("_idb")))
-        .select(
-            F.col("_idb").alias(id_col),
-            # stored-value grid (grid_round_expr), not F.round —
-            # keeps the expr path, the Arrow twin (round_half_up) and
-            # the DuckDB oracle on ONE rounding for grid-line doubles
-            grid_round_expr(
-                dot_expr(F.col("_va"), F.col("_vb"))
-                / (F.col("_na") * F.col("_nb")),
-                round_digits,
-            ).alias("_s"),
-        )
-        .groupBy(id_col)
-        .agg(F.max("_s").alias("max_sim"))
-    )
-    return (
-        members.select(id_col, "cent_id")
-        .join(pair_sim, id_col, "left")
-        .select(
-            id_col,
-            "cent_id",
-            "max_sim",
-            F.coalesce(F.col("max_sim") >= tau, F.lit(False)).alias("is_dup"),
-        )
-    )
-
-
-def semantic_dup_flags_fast(
-    df: DataFrame,
-    centroids: DataFrame | None = None,
-    n_centroids: int = 8,
-    tau: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    block: int = 4096,
-) -> DataFrame:
-    """Arrow twin of `semantic_dup_flags`: same assignment kernel, but
-    the intra-cluster pair scan runs as one NumPy matmul per cluster
-    inside applyInPandas — BLAS throughput instead of interpreted
-    per-element HOF folds (~10-50x on wide clusters; same output
-    after round()).
+    max_sim = highest cosine to a lower-id member of the same cluster,
+    rounded half-up to `round_digits` (NULL for the cluster's lowest
+    id); is_dup = max_sim >= tau.
 
     Each task holds one cluster's (|c| x dim) float64 matrix plus a
-    (|c| x block) similarity slab — the operator's memory contract is
-    the same |cluster| knob that bounds the expr path's pair count, so
-    size n_centroids for |c| in the low tens of thousands and both
-    paths hold. Skewed clusters are AQE-splittable only by raising k;
-    same guidance as the expr path."""
+    (|c| x 4096) similarity slab, so size n_centroids for |c| in the
+    low tens of thousands. Skewed clusters are split only by raising
+    k."""
     import numpy as np
     import pandas as pd
 
@@ -150,8 +79,8 @@ def semantic_dup_flags_fast(
         n = len(pdf)
         norms = np.sqrt((v * v).sum(axis=1))
         max_sim = np.full(n, np.nan)
-        for j0 in range(1, n, block):
-            j1 = min(j0 + block, n)
+        for j0 in range(1, n, _BLOCK):
+            j1 = min(j0 + _BLOCK, n)
             # rows 0..j1-1 against columns j0..j1-1; mask i >= j
             s = (v[:j1] @ v[j0:j1].T) / np.outer(norms[:j1], norms[j0:j1])
             # half-up like F.round/DuckDB (np.round is banker's)
@@ -181,14 +110,10 @@ def semantic_dedup(
     tau: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Corpus with semantic near-duplicates removed (left-anti against
-    the is_dup list — bounded by duplicate volume, not corpus size).
-    `use_arrow=True` switches the pair scan to the NumPy kernel (the
-    production path for wide clusters)."""
-    impl = semantic_dup_flags_fast if use_arrow else semantic_dup_flags
-    flags = impl(df, centroids, n_centroids, tau, id_col, vec_col)
+    the is_dup list — bounded by duplicate volume, not corpus size)."""
+    flags = semantic_dup_flags(df, centroids, n_centroids, tau, id_col, vec_col)
     drop = flags.filter(F.col("is_dup")).select(id_col)
     return df.join(drop, id_col, "left_anti")
 
