@@ -236,20 +236,28 @@ FP_EDGE_TEXTS = [
 
 
 def test_fingerprint_fast_twins_match_expr(spark):
-    """The fingerprint UDFs must be bit-identical to the registry's
-    DuckDB oracles (SQL_DOC_FINGERPRINT, SQL_WINNOW — an independent
-    implementation) on edge inputs: empty/blank text, unicode
-    whitespace (Java regex \\s is ASCII-only — Python re must not eat
-    \\xa0), vertical tab (RE2 \\s omits it, Java \\s does not),
-    non-ASCII letters, and lengths around the winnow minimum."""
+    """The fingerprint UDFs, the token split and the exact-dedup key
+    must be bit-identical to the registry's DuckDB oracles
+    (SQL_DOC_FINGERPRINT, SQL_WINNOW, SQL_TOKEN_STATS, SQL_DEDUP_EXACT
+    — an independent implementation) on edge inputs: empty/blank text,
+    unicode whitespace (Java regex \\s is ASCII-only — Python re must
+    not eat \\xa0), vertical tab (RE2 \\s omits it, Java \\s does
+    not), non-ASCII letters, and lengths around the winnow minimum."""
     import duckdb
     import pandas as pd
 
-    from webloghunter_spark.benchqueries import SQL_DOC_FINGERPRINT, SQL_WINNOW
+    from webloghunter_spark.benchqueries import (
+        SQL_DEDUP_EXACT,
+        SQL_DOC_FINGERPRINT,
+        SQL_TOKEN_STATS,
+        SQL_WINNOW,
+    )
     from webloghunter_spark.functions.text import (
+        token_count_expr,
         with_rolling_fingerprint,
         with_winnowed_fingerprints,
     )
+    from webloghunter_spark.pipelines.dedup import exact_dedup
 
     rows = [(i, t) for i, t in enumerate(FP_EDGE_TEXTS)]
     df = spark.createDataFrame(rows, "id long, text string")
@@ -269,6 +277,14 @@ def test_fingerprint_fast_twins_match_expr(spark):
         want_w.setdefault(doc_id, []).append(fp)
     assert got_w == {k: sorted(v) for k, v in want_w.items()}
     assert len(want_w) > 0
+
+    got_n = {r.id: r.n for r in df.select(
+        "id", token_count_expr("text").alias("n")).collect()}
+    want_n = {i: n for i, n, *_ in con.sql(SQL_TOKEN_STATS).fetchall()}
+    assert got_n == want_n
+
+    got_k = {tuple(r) for r in exact_dedup(df, "text", "id").collect()}
+    assert got_k == set(con.sql(SQL_DEDUP_EXACT).fetchall())
 
 
 @given(

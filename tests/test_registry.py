@@ -132,3 +132,33 @@ def test_bench_stdout_line_is_bounded_and_parseable(
     # capture (failed-name lists are the only registry-sized field,
     # and only on systemic failure)
     assert len(line) < 2000
+
+
+def test_oracles_bind_flat_and_use_the_java_whitespace_class():
+    """Fast oracle guard, no execution: every oracle binds in DuckDB
+    over the fixture views (a broken fragment composition fails here,
+    not in the full hash sweep), renders at most one WITH list, and
+    spells whitespace as _WS — RE2's bare \\s/\\S omit \\x0b, which
+    Spark's Java \\s includes."""
+    import re
+
+    import duckdb
+
+    from tools.check_hash import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    unbound, nested, bare_ws = {}, [], []
+    for name, sql in entrymod.oracle_sql().items():
+        try:
+            con.execute(f"DESCRIBE {sql}")
+        except duckdb.Error as e:
+            unbound[name] = str(e).splitlines()[0]
+        if len(re.findall(r"\bWITH\b", sql)) > 1:
+            nested.append(name)
+        if re.search(r"\\[sS]", sql):
+            bare_ws.append(name)
+    assert unbound == {}
+    assert nested == []
+    assert bare_ws == []

@@ -1,7 +1,6 @@
 """Stricter mimic of the driver's hash-based correctness gate.
 
-Unlike check_oracle.py (multiset compare with 6-digit float rounding),
-this sorts rows the way the driver's canonicalizer does and requires
+It sorts rows the way the driver's canonicalizer does and requires
 EXACT value equality — bit-identical floats, identical epoch seconds —
 AND matching per-column dtype *kinds* (int vs float vs str vs datetime)
 between the Spark and DuckDB frames. The kind check is load-bearing:
@@ -10,12 +9,15 @@ the driver hashes the rendered values, so an oracle whose un-cast
 ``2`` even though every value is equal (round-6 bloom_audit regression).
 A pass here predicts a driver hash_match, not just a value match.
 
+Each PASS/FAIL line ends with the query's Spark and oracle seconds.
+
 Usage: python tools/check_hash.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
 import sys
+import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -120,6 +122,7 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
@@ -129,21 +132,24 @@ def main():
         finally:
             release_materialized()
             spark.catalog.clearCache()
+        spark_s = time.perf_counter() - t0
         if name not in oracles:
             print(f"SKIP  {name}: no oracle (rows={len(sdf)})")
             continue
+        t0 = time.perf_counter()
         try:
             odf = con.sql(oracles[name]).df()
         except Exception as e:
             print(f"FAIL  {name}: oracle error: {e}")
             failures += 1
             continue
+        secs = f"[spark {spark_s:.1f}s, oracle {time.perf_counter() - t0:.1f}s]"
         ok, msg = compare(sdf, odf)
         if ok:
-            print(f"PASS  {name} {msg}")
+            print(f"PASS  {name} {msg} {secs}")
         else:
             failures += 1
-            print(f"FAIL  {name}: {msg}")
+            print(f"FAIL  {name}: {msg} {secs}")
     print(f"\n{'ALL PASS' if failures == 0 else f'{failures} FAILURES'}")
     return 1 if failures else 0
 

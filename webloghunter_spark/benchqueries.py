@@ -1,4 +1,4 @@
-"""Query registry: every operator exposed as (Spark callable, oracle SQL).
+r"""Query registry: every operator exposed as (Spark callable, oracle SQL).
 
 Each entry maps one operator family from SURVEY §2 (or a training-data
 pipeline op) onto the driver's synthetic tables. The Spark side calls
@@ -10,7 +10,34 @@ Conventions keeping the two sides hash-identical:
   floors; DuckDB `floor(epoch(ts))::BIGINT`);
 - doubles rounded (both engines round half-away-from-zero);
 - every computed column aliased identically on both sides;
-- deterministic tie-breaks (ids) wherever ordering feeds a limit.
+- deterministic tie-breaks (ids) wherever ordering feeds a limit;
+- whitespace is `_WS` = `[ \t\n\x0b\f\r]`, Java's `\s` spelled out:
+  RE2's `\s` omits `\x0b`, so no oracle uses a bare `\s` or `\S`.
+- trim passes `' '` (Spark trims spaces only; DuckDB's bare trim
+  also strips U+00A0), and text is lowercased by `_lower` (Java's
+  U+0130 and final-sigma special cases, which DuckDB's lower lacks).
+
+Oracles are composed, never edited. `_with(name=body, ..., select=...)`
+renders one flat WITH list; an oracle passed as a CTE body contributes
+its own CTEs (a repeated name must carry the same body). Every CTE is
+emitted `name AS MATERIALIZED (...)`, a fixed policy: DuckDB 1.0
+inlines a CTE at every reference, so nested references cost
+exponentially (bpe_encode: 714 s inlined, 0.2 s materialized).
+Self-referencing CTEs are listed in `recursive=` and stay plain. The
+shared fragments:
+- `_TOKENS`/`_LTOKENS`, `_toks(...)`: the tokens_expr split (toks);
+- `_shingle_expr(k)`, `_shingles(k, ...)`, `_DOC_SHINGLES`, `_HSH`,
+  `_HASHED_SH`: word k-shingles, as strings or 60-bit ints;
+- `_norm_key`, `_funnel_key`, `_NORM_SQL`: the normalized-text keys;
+- `_NPUNCT`, `_NSTOP`, `_QUALITY_BP`, `_gate(src)`: quality/gate stats;
+- `_minhash(sh, p)`, `_lsh_pairs(p)`: MinHash sig/banded and LSH pairs;
+- `_containment(sh, p)`, `_contained(a, b, p)`, `_keep_best(p)`: the
+  containment pair machinery and its keep-best decision;
+- `_TEMPERATURE`, `_BUDGET_DOCS`, `_BUDGET_WALK`: mix_temperature and
+  the budget_by_source walk (scorecard_budget swaps the allocation);
+- `_curate_funnel(src, p)`, `_CURATE_EVAL`: the curate stage chain;
+- `_bpe_learn`, `_EMB_Q`/`_IVF`, `_SESSIONS`,
+  `_bm25_*`, `_WINNOW_PAIRS`: family-local pieces.
 """
 
 from __future__ import annotations
@@ -185,6 +212,196 @@ def weblog_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(*_weblog_cols())
 
 
+# ---------------------------------------------------------------------------
+# Oracle composition. Every oracle with CTEs is rendered by _with() from
+# named CTE bodies; the shared ones are the fragments below (_TOKENS,
+# _toks, _shingles, _norm_key, ...). An oracle is never built by editing
+# another oracle's text.
+# ---------------------------------------------------------------------------
+
+
+class _Sql(str):
+    """Oracle SQL rendered by _with(). It keeps its CTEs, so an oracle
+    passed as another oracle's CTE is hoisted into one flat WITH list."""
+
+    ctes: dict[str, str]
+    select: str
+    recursive: frozenset[str]
+
+
+def _with(*, select: str, recursive: tuple[str, ...] = (), **ctes: str) -> _Sql:
+    """Render `WITH name AS MATERIALIZED (body), ... select`.
+
+    Every CTE is MATERIALIZED: DuckDB otherwise inlines a CTE at each
+    reference, so nested references cost exponentially. The CTEs named
+    in `recursive` reference themselves; they stay plain and the list
+    opens WITH RECURSIVE. A CTE body that is itself a _with() result
+    contributes its CTEs first and its SELECT as the body, so the
+    oracle stays one flat list. A name may repeat only with the same
+    body (ValueError otherwise: DuckDB rejects duplicate CTE names).
+    """
+    flat: dict[str, str] = {}
+    rec = set(recursive)
+
+    def add(name: str, body: str) -> None:
+        if isinstance(body, _Sql):
+            for n, b in body.ctes.items():
+                add(n, b)
+            rec.update(body.recursive)
+            body = body.select
+        if flat.setdefault(name, body) != body:
+            raise ValueError(f"CTE {name!r} defined twice with different bodies")
+
+    for name, body in ctes.items():
+        add(name, body)
+    head = "WITH RECURSIVE " if rec else "WITH "
+    sql = _Sql(head + ",\n    ".join(
+        f"{n} AS {'' if n in rec else 'MATERIALIZED '}({b})" for n, b in flat.items()
+    ) + select)
+    sql.ctes, sql.select, sql.recursive = flat, select, frozenset(rec)
+    return sql
+
+
+# Java regex \s spelled out. Spark's split/regexp_replace use Java's \s,
+# which includes \x0B (vertical tab); DuckDB's RE2 \s omits it, so no
+# oracle may use a bare \s or \S.
+_WS = r"[ \t\n\x0b\f\r]"
+# Java's String.toLowerCase (Spark's lower) where DuckDB's lower differs:
+# İ lowers to i + U+0307, and a Σ that ends a word (a cased letter
+# before it, none after, case-ignorable marks skipped) lowers to ς.
+_CASED = r"\p{Lu}\p{Ll}\p{Lt}"
+_CASE_IGNORABLE = r"\p{Mn}\p{Me}\p{Cf}\p{Lm}\p{Sk}''.:\x{00B7}\x{2019}"
+
+
+def _lower(x: str) -> str:
+    """lower(x) with Java's special casing (see _CASED)."""
+    final_sigma = (
+        f"regexp_replace({x}, '([{_CASED}][{_CASE_IGNORABLE}]*)Σ([{_CASE_IGNORABLE}]*)"
+        f"([^{_CASED}{_CASE_IGNORABLE}]|$)', '\\1ς\\2\\3', 'g')"
+    )
+    return f"lower(replace({final_sigma}, 'İ', 'i̇'))"
+
+
+# trim removes only spaces (Spark's trim); DuckDB's bare trim also
+# strips the other Unicode space separators (U+00A0, U+2003, ...).
+_TRIMMED = "trim(text, ' ')"
+# The rolling-fingerprint normalization (_norm_codes_py): whitespace
+# runs -> one space, then every char outside printable ASCII dropped.
+_NORM_SQL = (
+    f"regexp_replace(regexp_replace({_lower(_TRIMMED)}, '{_WS}+', ' ', 'g'),"
+    r" '[^\x20-\x7e]', '', 'g')"
+)
+# PUNCT_CLASS as a SQL regex literal.
+_PUNCT = r"""'[.,;:!?''"()\[\]{}-]'"""
+
+# tokens_expr: blank/NULL text -> empty list, else the whitespace split
+# of the space-trimmed text.
+_TOKENS = (
+    "CASE WHEN length(trim(coalesce(text, ''), ' ')) = 0 THEN CAST([] AS VARCHAR[])"
+    f" ELSE string_split_regex(trim(coalesce(text, ''), ' '), '{_WS}+') END"
+)
+_LTOKENS = f"list_transform({_TOKENS}, x -> {_lower('x')})"
+
+
+def _toks(*cols: str, where: str = "", lower: bool = False) -> str:
+    """The toks CTE: `cols` plus each document's token list t."""
+    t = f"{_LTOKENS if lower else _TOKENS} AS t"
+    return f"SELECT {', '.join((*cols, t))} FROM documents {where}"
+
+
+def _shingle_expr(k: int) -> str:
+    """Word k-shingles of toks.t, space-joined; [] below k tokens."""
+    return (
+        f"CASE WHEN len(t) < {k} THEN CAST([] AS VARCHAR[]) ELSE list_transform("
+        f"generate_series(1, len(t) - {k - 1}), i -> array_to_string(t[i:i+{k - 1}], ' ')) END"
+    )
+
+
+def _shingles(k: int, *cols: str) -> str:
+    """A shingles CTE over toks: `cols` plus the k-shingle list s."""
+    return f"SELECT {', '.join(cols)}, {_shingle_expr(k)} AS s FROM toks"
+
+
+def _minhash(sh: str, p: str = "") -> dict[str, str]:
+    """minhash_signatures and their LSH bands over the shingle CTE `sh`
+    (doc_id, s), CTE names prefixed with p: 4 minwise hashes, each an
+    8-hex chunk of md5('0|' || shingle), in 2 bands of 2. Documents
+    without shingles get no signature."""
+    return {
+        f"{p}hashed": f"SELECT doc_id, list_transform(s, x -> md5('0|' || x)) AS h FROM {sh} WHERE len(s) > 0",
+        f"{p}sig": f"""
+        SELECT doc_id,
+               list_transform(generate_series(0, 3),
+                   seed -> list_min(list_transform(h,
+                       x -> substr(x, 1 + 8 * seed, 8)))) AS mh
+        FROM {p}hashed
+    """,
+        f"{p}banded": f"""
+        SELECT doc_id, band, md5(mh[2*band+1] || '|' || mh[2*band+2]) AS bh
+        FROM {p}sig, (SELECT unnest(generate_series(0, 1)) AS band)
+    """,
+    }
+
+
+def _lsh_pairs(p: str = "") -> str:
+    """lsh_candidate_pairs: the doc pairs sharing a band of {p}banded."""
+    return f"""
+        SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+        FROM {p}banded l JOIN {p}banded r
+          ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
+    """
+
+
+# hashed_shingles_expr: the distinct shingles of s as 60-bit md5-prefix ints.
+_HASHED_SH = (
+    "list_distinct(list_transform(list_distinct(s),"
+    " x -> CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)))"
+)
+
+
+def _norm_key(text: str) -> str:
+    """fingerprint_expr: md5 of the lowercased, trimmed,
+    whitespace-collapsed text (the exact-dedup key)."""
+    trimmed = f"trim({text}, ' ')"
+    return f"md5(regexp_replace({_lower(trimmed)}, '{_WS}+', ' ', 'g'))"
+
+
+def _funnel_key(text: str) -> str:
+    """The curate funnel's exact-dedup key: md5 of normalize_text
+    (lowercase, punctuation dropped, whitespace collapsed, trimmed)."""
+    return (
+        f"md5(trim(regexp_replace(regexp_replace({_lower(text)}, {_PUNCT}, '', 'g'),"
+        f" '{_WS}+', ' ', 'g'), ' '))"
+    )
+
+
+# punct_count_expr and stopword_count_expr over text and toks.t.
+_NPUNCT = f"(length(text) - length(regexp_replace(text, {_PUNCT}, '', 'g')))"
+_NSTOP = (
+    "len(list_filter(t, x -> list_contains("
+    f"['the','a','an','of','to','in','and','is','on','for'], {_lower('x')})))"
+)
+# quality_bp_expr (NULL for NULL text).
+_QUALITY_BP = f"""CAST(floor((least(len(t)::DOUBLE / 100.0, 1.0) * 0.5
+                   + (1.0 - {_NPUNCT}::DOUBLE / greatest(length(text)::DOUBLE, 1.0)) * 0.3
+                   + least(({_NSTOP}::DOUBLE / greatest(len(t)::DOUBLE, 1.0)) * 5.0, 1.0) * 0.2)
+                   * 10000.0 + 0.5) AS BIGINT)"""
+
+
+def _gate(src: str = "toks") -> str:
+    """The quality-gate stats CTE over `src` (doc_id, text, t): token
+    count, chars, non-printable chars and quality_bp, NULL-safe."""
+    return rf"""
+        SELECT doc_id,
+               coalesce(len(t), 0)::BIGINT AS ntok,
+               greatest(coalesce(length(text), 0), 1)::BIGINT AS nc,
+               coalesce(length(text) - length(regexp_replace(
+                   text, '[^\x09\x0A\x0D\x20-\x7E]', '', 'g')), 0)::BIGINT AS npr,
+               coalesce({_QUALITY_BP}, 0) AS qbp
+        FROM {src}
+    """
+
+
 WEBLOG_SQL_BASE = """
     SELECT event_id, user_id, ts AS utc_timestamp,
            CASE event_type WHEN 'error' THEN 500 WHEN 'signup' THEN 201
@@ -212,21 +429,10 @@ WEBLOG_SQL_BASE = """
     FROM events
 """
 
-# DuckDB CTEs for document tokenization/shingling (shared).
-DOC_TOKENS_SQL = r"""
-    toks AS (
-        SELECT doc_id, source, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    shingles AS (
-        SELECT doc_id, CASE WHEN len(t) < 3 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 2),
-                                   i -> array_to_string(t[i:i+2], ' ')) END AS s
-        FROM toks
-    )
-"""
+# The word-3-shingle CTE pair shared by the pair/minhash oracles.
+_DOC_SHINGLES = {"toks": _toks("doc_id", "source"), "shingles": _shingles(3, "doc_id")}
+# ... plus dsh: each document's distinct shingles as 60-bit ints.
+_HSH = {**_DOC_SHINGLES, "dsh": f"SELECT doc_id, {_HASHED_SH} AS s FROM shingles"}
 
 
 # ---------------------------------------------------------------------------
@@ -324,30 +530,35 @@ def q_sessionize(spark, sf_dir):
     return out.select("event_id", "user_id", "cluster")
 
 
-SQL_SESSIONIZE = """
-    WITH e AS (
-        SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ep FROM events
-    ),
-    flagged AS (
+# sessionize (30-minute gap): each event's per-user session counter
+# local_c and the global session id cluster.
+_SESSIONS = {
+    "e": "SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ep FROM events",
+    "flagged": """
         SELECT event_id, user_id, ep,
                CASE WHEN ep - lag(ep) OVER (PARTITION BY user_id ORDER BY ep, event_id)
                          >= 1800 THEN 1 ELSE 0 END AS nf
         FROM e
-    ),
-    localc AS (
-        SELECT event_id, user_id,
+    """,
+    "localc": """
+        SELECT event_id, user_id, ep,
                sum(nf) OVER (PARTITION BY user_id ORDER BY ep, event_id
                              ROWS UNBOUNDED PRECEDING) AS local_c
         FROM flagged
-    ),
-    ids AS (
+    """,
+    "ids": """
         SELECT user_id, local_c,
                dense_rank() OVER (ORDER BY user_id, local_c) - 1 AS cluster
         FROM (SELECT DISTINCT user_id, local_c FROM localc)
-    )
+    """,
+}
+
+SQL_SESSIONIZE = _with(
+    **_SESSIONS,
+    select="""
     SELECT l.event_id, l.user_id, ids.cluster
     FROM localc l JOIN ids ON l.user_id = ids.user_id AND l.local_c = ids.local_c
-"""
+""")
 
 
 def q_session_stats(spark, sf_dir):
@@ -369,33 +580,15 @@ def q_session_stats(spark, sf_dir):
     )
 
 
-SQL_SESSION_STATS = """
-    WITH e AS (
-        SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ep FROM events
-    ),
-    flagged AS (
-        SELECT event_id, user_id, ep,
-               CASE WHEN ep - lag(ep) OVER (PARTITION BY user_id ORDER BY ep, event_id)
-                         >= 1800 THEN 1 ELSE 0 END AS nf
-        FROM e
-    ),
-    localc AS (
-        SELECT event_id, user_id, ep,
-               sum(nf) OVER (PARTITION BY user_id ORDER BY ep, event_id
-                             ROWS UNBOUNDED PRECEDING) AS local_c
-        FROM flagged
-    ),
-    ids AS (
-        SELECT user_id, local_c,
-               dense_rank() OVER (ORDER BY user_id, local_c) - 1 AS cluster
-        FROM (SELECT DISTINCT user_id, local_c FROM localc)
-    )
+SQL_SESSION_STATS = _with(
+    **_SESSIONS,
+    select="""
     SELECT l.user_id, ids.cluster, count(*) AS n_events,
            min(ep) AS start_epoch, max(ep) AS end_epoch,
            max(ep) - min(ep) AS duration_s
     FROM localc l JOIN ids ON l.user_id = ids.user_id AND l.local_c = ids.local_c
     GROUP BY l.user_id, ids.cluster
-"""
+""")
 
 
 def q_request_count(spark, sf_dir):
@@ -405,12 +598,13 @@ def q_request_count(spark, sf_dir):
     return out.select("event_id", "request_count")
 
 
-SQL_REQUEST_COUNT = f"""
-    WITH w AS ({WEBLOG_SQL_BASE})
+SQL_REQUEST_COUNT = _with(
+    w=WEBLOG_SQL_BASE,
+    select="""
     SELECT event_id,
            count(*) OVER (PARTITION BY user_id, method, request_uri) AS request_count
     FROM w
-"""
+""")
 
 
 def q_lag_delta(spark, sf_dir):
@@ -456,29 +650,30 @@ def q_burst_detect(spark, sf_dir):
     )
 
 
-SQL_BURST_DETECT = """
-    WITH e AS (
+SQL_BURST_DETECT = _with(
+    e="""
         SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ep
         FROM events WHERE event_type = 'error'
-    ),
-    flagged AS (
+    """,
+    flagged="""
         SELECT event_id, user_id, ep,
                CASE WHEN ep - lag(ep) OVER (PARTITION BY user_id ORDER BY ep, event_id)
                          >= 7200 THEN 1 ELSE 0 END AS nf
         FROM e
-    ),
-    localc AS (
+    """,
+    localc="""
         SELECT user_id, ep,
                sum(nf) OVER (PARTITION BY user_id ORDER BY ep, event_id
                              ROWS UNBOUNDED PRECEDING) AS local_c
         FROM flagged
-    )
+    """,
+    select="""
     SELECT user_id, count(*) AS burst_count,
            min(ep) AS start_epoch, max(ep) AS end_epoch
     FROM localc
     GROUP BY user_id, local_c
     HAVING count(*) >= 2
-"""
+""")
 
 
 def q_first_last(spark, sf_dir):
@@ -518,8 +713,9 @@ def q_event_risk(spark, sf_dir):
     )
 
 
-SQL_EVENT_RISK = f"""
-    WITH w AS ({WEBLOG_SQL_BASE})
+SQL_EVENT_RISK = _with(
+    w=WEBLOG_SQL_BASE,
+    select="""
     SELECT event_id,
            CASE upper(method) WHEN 'GET' THEN 10 WHEN 'HEAD' THEN 20
                 WHEN 'OPTIONS' THEN 25 WHEN 'POST' THEN 45 WHEN 'PUT' THEN 80
@@ -542,7 +738,7 @@ SQL_EVENT_RISK = f"""
                 WHEN status >= 500 AND status < 600 THEN 80
                 ELSE 90 END AS status_risk
     FROM w
-"""
+""")
 
 
 def q_sigma_rules(spark, sf_dir):
@@ -557,17 +753,17 @@ def q_sigma_rules(spark, sf_dir):
 
 # Rule scores are strictly descending in DEFAULT_RULES, so a CASE in
 # score order implements highest-wins + file-order tiebreak exactly.
-SQL_SIGMA_RULES = f"""
-    WITH base AS ({WEBLOG_SQL_BASE}),
-    w AS (
+SQL_SIGMA_RULES = _with(
+    base=WEBLOG_SQL_BASE,
+    w="""
         SELECT *,
                count(*) OVER (PARTITION BY user_id, method, request_uri) AS request_count,
                CASE WHEN status = 200 THEN 30 WHEN status = 201 THEN 90
                     WHEN status = 301 THEN 10 WHEN status = 404 THEN 10
                     WHEN status = 500 THEN 90 ELSE 90 END AS status_risk
         FROM base
-    ),
-    m AS (
+    """,
+    m="""
         SELECT event_id,
            (request_count >= 500 AND status IN (500,502,503,504) AND resp_size >= 25) AS m1,
            (uri_risk >= 70 AND status IN (200,201,202) AND resp_size >= 25) AS m2,
@@ -581,7 +777,8 @@ SQL_SIGMA_RULES = f"""
                 AND status IN (200,201,202,403) AND method = 'POST') AS m7,
            (status_risk >= 70) AS m8
         FROM w
-    )
+    """,
+    select="""
     SELECT event_id,
            CASE WHEN m1 THEN 80.0 WHEN m2 THEN 75.0 WHEN m3 THEN 71.1
                 WHEN m4 THEN 68.0 WHEN m5 THEN 67.5 WHEN m6 THEN 42.0
@@ -596,7 +793,7 @@ SQL_SIGMA_RULES = f"""
                 WHEN m8 THEN 'Status Code Risk'
                 ELSE '' END AS rule_applied
     FROM m
-"""
+""")
 
 
 def q_filter_api(spark, sf_dir):
@@ -618,14 +815,15 @@ def q_filter_api(spark, sf_dir):
     return out.select("event_id")
 
 
-SQL_FILTER_API = f"""
-    WITH w AS ({WEBLOG_SQL_BASE})
+SQL_FILTER_API = _with(
+    w=WEBLOG_SQL_BASE,
+    select="""
     SELECT event_id FROM w
     WHERE status IN (200, 500)
       AND (contains(request_uri, 'admin') OR contains(request_uri, 'passwd'))
       AND resp_size >= 100
       AND NOT (lower(string_split(request_uri, '?')[1]) LIKE '%.jpg')
-"""
+""")
 
 
 def q_cidr_filter(spark, sf_dir):
@@ -635,10 +833,11 @@ def q_cidr_filter(spark, sf_dir):
     return out.select("event_id", "ip")
 
 
-SQL_CIDR_FILTER = f"""
-    WITH w AS ({WEBLOG_SQL_BASE})
+SQL_CIDR_FILTER = _with(
+    w=WEBLOG_SQL_BASE,
+    select="""
     SELECT event_id, ip FROM w WHERE ip = '10.0.1.5'
-"""
+""")
 
 
 def q_topk_per_group(spark, sf_dir):
@@ -687,8 +886,8 @@ def q_dedup_exact(spark, sf_dir):
     return exact_dedup(docs)
 
 
-SQL_DEDUP_EXACT = r"""
-    SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
+SQL_DEDUP_EXACT = f"""
+    SELECT {_norm_key('text')} AS fingerprint,
            min(doc_id) AS doc_id, count(*) AS n_dups
     FROM documents
     GROUP BY 1
@@ -704,22 +903,23 @@ def q_dedup_cross_source(spark, sf_dir):
     return out.select("doc_id")
 
 
-SQL_DEDUP_CROSS_SOURCE = """
-    WITH k AS (
+SQL_DEDUP_CROSS_SOURCE = _with(
+    k=f"""
         SELECT doc_id, source,
-               CASE WHEN regexp_replace(lower(trim(text)), '^"|"$', '') = 'nan'
-                    THEN '' ELSE regexp_replace(lower(trim(text)), '^"|"$', '')
+               CASE WHEN regexp_replace({_lower(_TRIMMED)}, '^"|"$', '') = 'nan'
+                    THEN '' ELSE regexp_replace({_lower(_TRIMMED)}, '^"|"$', '')
                     END AS key
         FROM documents
-    ),
-    marked AS (
+    """,
+    marked="""
         SELECT doc_id,
                row_number() OVER (PARTITION BY key ORDER BY doc_id) AS rn,
                count(DISTINCT source) OVER (PARTITION BY key) AS nsrc
         FROM k
-    )
+    """,
+    select="""
     SELECT doc_id FROM marked WHERE rn = 1 OR nsrc = 1
-"""
+""")
 
 
 def q_token_stats(spark, sf_dir):
@@ -733,21 +933,13 @@ def q_token_stats(spark, sf_dir):
     )
 
 
-SQL_TOKEN_STATS = r"""
-    WITH toks AS (
-        SELECT doc_id, text, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    )
+SQL_TOKEN_STATS = _with(
+    toks=_toks("doc_id", "text"),
+    select=f"""
     SELECT doc_id, len(t)::BIGINT AS n_tokens, length(text)::BIGINT AS n_chars,
-           (length(text) - length(regexp_replace(text,
-               '[.,;:!?''"()\[\]{}-]', '', 'g')))::BIGINT AS n_punct,
-           len(list_filter(t, x -> list_contains(
-               ['the','a','an','of','to','in','and','is','on','for'],
-               lower(x))))::BIGINT AS n_stop
+           {_NPUNCT}::BIGINT AS n_punct, {_NSTOP}::BIGINT AS n_stop
     FROM toks
-"""
+""")
 
 
 def q_quality(spark, sf_dir):
@@ -755,31 +947,9 @@ def q_quality(spark, sf_dir):
     return docs.select("doc_id", quality_bp_expr("text").alias("quality_bp"))
 
 
-SQL_QUALITY = r"""
-    WITH toks AS (
-        SELECT doc_id, text, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    stats AS (
-        SELECT doc_id,
-               len(t)::DOUBLE AS ntok,
-               greatest(length(text)::DOUBLE, 1.0) AS nchar,
-               (length(text) - length(regexp_replace(text,
-                   '[.,;:!?''"()\[\]{}-]', '', 'g')))::DOUBLE AS npunct,
-               len(list_filter(t, x -> list_contains(
-                   ['the','a','an','of','to','in','and','is','on','for'],
-                   lower(x))))::DOUBLE AS nstop
-        FROM toks
-    )
-    SELECT doc_id,
-           CAST(floor((least(ntok / 100.0, 1.0) * 0.5
-                 + (1.0 - npunct / nchar) * 0.3
-                 + least((nstop / greatest(ntok, 1.0)) * 5.0, 1.0) * 0.2)
-                 * 10000.0 + 0.5) AS BIGINT) AS quality_bp
-    FROM stats
-"""
+# The quality_bp frame; a plain subquery (no CTEs), so any oracle can
+# use it as a CTE body.
+SQL_QUALITY = f"SELECT doc_id, {_QUALITY_BP} AS quality_bp FROM ({_toks('doc_id', 'text')})"
 
 
 def q_lang_id(spark, sf_dir):
@@ -787,22 +957,17 @@ def q_lang_id(spark, sf_dir):
     return docs.select("doc_id", lang_id_expr("text").alias("lang_guess"))
 
 
-SQL_LANG_ID = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(string_split_regex(trim(coalesce(text, '')), '\s+'),
-                                   x -> lower(x)) END AS t
-        FROM documents
-    ),
-    c AS (
+SQL_LANG_ID = _with(
+    toks=_toks("doc_id", lower=True),
+    c="""
         SELECT doc_id,
                len(list_filter(t, x -> list_contains(['the','and','of','to','is'], x))) AS en,
                len(list_filter(t, x -> list_contains(['der','die','das','und','ist'], x))) AS de,
                len(list_filter(t, x -> list_contains(['el','la','los','que','es'], x))) AS es,
                len(list_filter(t, x -> list_contains(['le','les','et','une','est'], x))) AS fr
         FROM toks
-    )
+    """,
+    select="""
     SELECT doc_id,
            CASE WHEN en > 0 AND en >= de AND en >= es AND en >= fr THEN 'en'
                 WHEN de > 0 AND de > en AND de >= es AND de >= fr THEN 'de'
@@ -810,7 +975,7 @@ SQL_LANG_ID = r"""
                 WHEN fr > 0 AND fr > en AND fr > de AND fr > es THEN 'fr'
                 ELSE 'und' END AS lang_guess
     FROM c
-"""
+""")
 
 
 def q_minhash(spark, sf_dir):
@@ -819,16 +984,17 @@ def q_minhash(spark, sf_dir):
     return out.withColumn("seed", F.col("seed").cast("long"))
 
 
-SQL_MINHASH = f"""
-    WITH {DOC_TOKENS_SQL},
-    hashed AS (
+SQL_MINHASH = _with(
+    **_DOC_SHINGLES,
+    hashed="""
         SELECT doc_id, list_transform(s, x -> md5('0|' || x)) AS h
         FROM shingles WHERE len(s) > 0
-    )
+    """,
+    select="""
     SELECT doc_id, seed,
            list_min(list_transform(h, x -> substr(x, 1 + 8 * seed, 8))) AS minhash
     FROM hashed, (SELECT unnest(generate_series(0, 3)) AS seed)
-"""
+""")
 
 
 def q_lsh_pairs(spark, sf_dir):
@@ -836,27 +1002,7 @@ def q_lsh_pairs(spark, sf_dir):
     return lsh_candidate_pairs(docs, num_hashes=4, band_size=2)
 
 
-SQL_LSH_PAIRS = f"""
-    WITH {DOC_TOKENS_SQL},
-    hashed AS (
-        SELECT doc_id, list_transform(s, x -> md5('0|' || x)) AS h
-        FROM shingles WHERE len(s) > 0
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 3),
-                   seed -> list_min(list_transform(h,
-                       x -> substr(x, 1 + 8 * seed, 8)))) AS mh
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, band, md5(mh[2*band+1] || '|' || mh[2*band+2]) AS bh
-        FROM sig, (SELECT unnest(generate_series(0, 1)) AS band)
-    )
-    SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-    FROM banded l JOIN banded r
-      ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
-"""
+SQL_LSH_PAIRS = _with(**_DOC_SHINGLES, **_minhash("shingles"), select=_lsh_pairs())
 
 
 def q_knn(spark, sf_dir):
@@ -867,20 +1013,24 @@ def q_knn(spark, sf_dir):
     return cosine_topk(_fan(raw.filter(F.col("vec_id") != 0)), list(qvec), k=10)
 
 
-SQL_KNN = """
-    WITH q AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-    )
+# The embeddings as DOUBLE[] and the kNN query vector (vec_id 0).
+_EMB_Q = {
+    "v": "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings",
+    "q": "SELECT e AS qv FROM v WHERE vec_id = 0",
+}
+
+SQL_KNN = _with(
+    **_EMB_Q,
+    select="""
     SELECT vec_id,
-           round(list_dot_product(CAST(embedding AS DOUBLE[]), qv)
-                 / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                          CAST(embedding AS DOUBLE[])))
+           round(list_dot_product(e, qv)
+                 / (sqrt(list_dot_product(e, e))
                     * sqrt(list_dot_product(qv, qv))), 4) AS cosine
-    FROM embeddings, q
+    FROM v, q
     WHERE vec_id != 0
     ORDER BY cosine DESC, vec_id
     LIMIT 10
-"""
+""")
 
 
 def q_knn_batch(spark, sf_dir):
@@ -914,25 +1064,26 @@ def q_knn_batch(spark, sf_dir):
     )
 
 
-SQL_KNN_BATCH = """
-    WITH v AS (
+SQL_KNN_BATCH = _with(
+    v="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ),
-    q AS (SELECT vec_id AS qid, e AS qv FROM v WHERE vec_id < 5),
-    s AS (SELECT vec_id, e FROM v WHERE vec_id >= 5),
-    scored AS (
+    """,
+    q="SELECT vec_id AS qid, e AS qv FROM v WHERE vec_id < 5",
+    s="SELECT vec_id, e FROM v WHERE vec_id >= 5",
+    scored="""
         SELECT qid, vec_id,
                round(list_dot_product(e, qv)
                      / (sqrt(list_dot_product(e, e))
                         * sqrt(list_dot_product(qv, qv))), 4) AS cosine
         FROM s CROSS JOIN q
-    )
+    """,
+    select="""
     SELECT qid, vec_id, cosine FROM (
         SELECT *, row_number() OVER (
             PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rn
         FROM scored
     ) WHERE rn <= 10
-"""
+""")
 
 
 _PNG_HDR = (
@@ -1077,10 +1228,11 @@ _GIF_HDR_HEX = _GIF_HDR.hex().upper()
 # Byte arithmetic done on uppercase-hex strings (1 byte = 2 chars):
 # this DuckDB build lacks substring/md5 over BLOB, and hex() is the
 # shared uppercase convention with Spark's hex().
-SQL_MEDIA_DECODE = f"""
-    WITH base AS (
+SQL_MEDIA_DECODE = _with(
+    base="""
         SELECT doc_id, hex(encode(coalesce(text, ''))) AS bh FROM documents
-    ), p AS (
+    """,
+    p=f"""
         SELECT doc_id,
                CASE doc_id % 3
                     WHEN 0 THEN '{_PNG_HDR_HEX}' || bh
@@ -1088,11 +1240,13 @@ SQL_MEDIA_DECODE = f"""
                     ELSE '00' || bh END AS ph,
                substr(bh || repeat('00', 64), 1, 128) AS pcm_hex
         FROM base
-    ), geom AS (
+    """,
+    geom="""
         SELECT doc_id, ph, pcm_hex,
                greatest((length(ph) // 2) // 4, 1) AS n
         FROM p
-    )
+    """,
+    select="""
     SELECT g.doc_id,
            CAST(t.i AS INTEGER) AS frame_idx,
            md5(substr(g.ph, CAST(t.i * g.n * 2 + 1 AS BIGINT), g.n * 2)) AS frame_md5,
@@ -1106,7 +1260,7 @@ SQL_MEDIA_DECODE = f"""
            md5(substr(repeat(g.ph, CAST(ceil(16.0 / length(g.ph)) AS INTEGER)),
                       1, 16)) AS resized_md5
     FROM geom g, generate_series(0, 3) AS t(i)
-"""
+""")
 
 
 def q_parse_roundtrip(spark, sf_dir):
@@ -1169,12 +1323,13 @@ def q_parse_roundtrip(spark, sf_dir):
     )
 
 
-SQL_PARSE_ROUNDTRIP = f"""
-    WITH w AS ({WEBLOG_SQL_BASE})
+SQL_PARSE_ROUNDTRIP = _with(
+    w=WEBLOG_SQL_BASE,
+    select="""
     SELECT event_id, ip, method, request_uri, status,
            resp_size, floor(epoch(utc_timestamp))::BIGINT AS epoch
     FROM w
-"""
+""")
 
 
 def q_jaccard_pairs(spark, sf_dir):
@@ -1184,40 +1339,17 @@ def q_jaccard_pairs(spark, sf_dir):
     return ngram_jaccard_pairs(docs, pairs, threshold=0.0)
 
 
-SQL_JACCARD_PAIRS = f"""
-    WITH {DOC_TOKENS_SQL},
-    hashed AS (
-        SELECT doc_id, list_transform(s, x -> md5('0|' || x)) AS h
-        FROM shingles WHERE len(s) > 0
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 3),
-                   seed -> list_min(list_transform(h,
-                       x -> substr(x, 1 + 8 * seed, 8)))) AS mh
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, band, md5(mh[2*band+1] || '|' || mh[2*band+2]) AS bh
-        FROM sig, (SELECT unnest(generate_series(0, 1)) AS band)
-    ),
-    pairs AS (
-        SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-        FROM banded l JOIN banded r
-          ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
-    ),
-    dsh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(list_distinct(s),
-                   x -> CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT))) AS s
-        FROM shingles
-    )
+SQL_JACCARD_PAIRS = _with(
+    **_HSH,
+    **_minhash("shingles"),
+    pairs=_lsh_pairs(),
+    select="""
     SELECT id_a, id_b,
            round(len(list_intersect(a.s, b.s))::DOUBLE
                  / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))::DOUBLE,
                  4) AS jaccard
     FROM pairs JOIN dsh a ON id_a = a.doc_id JOIN dsh b ON id_b = b.doc_id
-"""
+""")
 
 
 def q_containment_pairs(spark, sf_dir):
@@ -1238,58 +1370,81 @@ def q_containment_pairs(spark, sf_dir):
     )
 
 
-SQL_CONTAINMENT_PAIRS = f"""
-    WITH {DOC_TOKENS_SQL},
-    dsh AS (
-        SELECT doc_id, list_distinct(s) AS s FROM shingles WHERE len(s) > 0
-    ),
-    inv AS (SELECT doc_id, unnest(s) AS g FROM dsh),
-    rare AS (SELECT g FROM inv GROUP BY g HAVING count(*) BETWEEN 2 AND 20),
-    rinv AS (SELECT i.doc_id, i.g FROM inv i JOIN rare USING (g)),
-    cand AS (
-        SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-        FROM rinv l JOIN rinv r ON l.g = r.g AND l.doc_id < r.doc_id
-    ),
-    ex AS (
-        SELECT id_a, id_b,
-               len(list_intersect(a.s, b.s))::BIGINT AS n_common,
-               len(a.s)::BIGINT AS na, len(b.s)::BIGINT AS nb
-        FROM cand
-        JOIN dsh a ON a.doc_id = cand.id_a
-        JOIN dsh b ON b.doc_id = cand.id_b
-    )
-    SELECT id_a, id_b, n_common,
-           round(n_common::DOUBLE / na, 4) AS contain_ab,
-           round(n_common::DOUBLE / nb, 4) AS contain_ba
-    FROM ex
-    WHERE greatest(n_common::DOUBLE / na, n_common::DOUBLE / nb) >= 0.5
-"""
+def _contained(a: str, b: str, p: str = "") -> dict[str, str]:
+    """Exact verify of the candidate pairs {p}cand (id_a from shingle
+    CTE `a`, id_b from `b`): {p}pex counts shared shingles, {p}cont
+    keeps the pairs contained >= 0.5 in either direction."""
+    return {
+        f"{p}pex": f"""
+            SELECT id_a, id_b,
+                   len(list_intersect(a.s, b.s))::BIGINT AS n_common,
+                   len(a.s)::BIGINT AS na, len(b.s)::BIGINT AS nb
+            FROM {p}cand c
+            JOIN {a} a ON a.doc_id = c.id_a
+            JOIN {b} b ON b.doc_id = c.id_b
+        """,
+        f"{p}cont": f"""
+            SELECT id_a, id_b, n_common,
+                   round(n_common::DOUBLE / na, 4) AS contain_ab,
+                   round(n_common::DOUBLE / nb, 4) AS contain_ba
+            FROM {p}pex
+            WHERE greatest(n_common::DOUBLE / na, n_common::DOUBLE / nb) >= 0.5
+        """,
+    }
 
 
-def _containment_pairs_hashed_sql() -> str:
-    anchor = (
-        "    dsh AS (\n"
-        "        SELECT doc_id, list_distinct(s) AS s FROM shingles"
-        " WHERE len(s) > 0\n"
-        "    ),"
-    )
-    if SQL_CONTAINMENT_PAIRS.count(anchor) != 1:
-        # not assert: `python -O` strips asserts and the surgery would
-        # silently yield a wrong/unmodified oracle on anchor drift
-        raise RuntimeError("containment_pairs dsh anchor moved")
-    hashed = (
-        "    dsh AS (\n"
-        "        SELECT doc_id,\n"
-        "               list_distinct(list_transform(list_distinct(s),\n"
-        "                   x -> CAST(('0x' || substr(md5(x), 1, 15))"
-        " AS BIGINT))) AS s\n"
-        "        FROM shingles WHERE len(s) > 0\n"
-        "    ),"
-    )
-    return SQL_CONTAINMENT_PAIRS.replace(anchor, hashed)
+def _containment(sh: str, p: str = "") -> dict[str, str]:
+    """containment_pairs over the distinct-shingle CTE `sh` (doc_id, s),
+    CTE names prefixed with p: candidates share a shingle of document
+    frequency 2..20."""
+    return {
+        f"{p}inv": f"SELECT doc_id, unnest(s) AS g FROM {sh}",
+        f"{p}rare": f"SELECT g FROM {p}inv GROUP BY g HAVING count(*) BETWEEN 2 AND 20",
+        f"{p}rinv": f"SELECT i.doc_id, i.g FROM {p}inv i JOIN {p}rare USING (g)",
+        f"{p}cand": f"""
+            SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+            FROM {p}rinv l JOIN {p}rinv r ON l.g = r.g AND l.doc_id < r.doc_id
+        """,
+        **_contained(sh, sh, p),
+    }
 
 
-SQL_CONTAINMENT_PAIRS_HASHED = _containment_pairs_hashed_sql()
+def _keep_best(p: str = "") -> dict[str, str]:
+    """containment_drop's decision over {p}ex (id_a, id_b, n_common,
+    na, nb, qa, qb): a doc contained >= 0.8 in a not-smaller doc is
+    dropped; mutual containment keeps the higher quality (tie -> the
+    lower id). {p}drops counts each dropped doc's containers."""
+    return {
+        f"{p}dec": f"""
+        SELECT CASE
+            WHEN (n_common * 10000 >= 8000 * na AND nb * 10000 >= 10000 * na)
+                 AND (NOT (n_common * 10000 >= 8000 * nb
+                           AND na * 10000 >= 10000 * nb)
+                      OR qa < qb)
+            THEN id_a
+            WHEN (n_common * 10000 >= 8000 * nb AND na * 10000 >= 10000 * nb)
+                 AND (NOT (n_common * 10000 >= 8000 * na
+                           AND nb * 10000 >= 10000 * na)
+                      OR qa >= qb)
+            THEN id_b
+        END AS doc_id
+        FROM {p}ex
+    """,
+        f"{p}drops": f"""
+        SELECT doc_id, count(*)::BIGINT AS n_containers
+        FROM {p}dec WHERE doc_id IS NOT NULL GROUP BY doc_id
+    """,
+    }
+
+
+SQL_CONTAINMENT_PAIRS = _with(
+    **_DOC_SHINGLES,
+    dsh="SELECT doc_id, list_distinct(s) AS s FROM shingles",
+    **_containment("dsh"),
+    select="SELECT * FROM cont")
+
+
+SQL_CONTAINMENT_PAIRS_HASHED = _with(**_HSH, **_containment("dsh"), select="SELECT * FROM cont")
 
 
 def q_containment_drop(spark, sf_dir):
@@ -1307,82 +1462,36 @@ def q_containment_drop(spark, sf_dir):
     )
 
 
-# Oracle BUILT FROM SQL_CONTAINMENT_PAIRS_HASHED (the dataset_diff /
-# dedup_sensitivity discipline): the pair machinery cannot drift. The
-# drop rules are exact-integer on the bp grid, so a drop event at
-# threshold_bp >= 5000 implies max-direction containment >= 0.5 and
-# every decided pair is guaranteed present in the 0.5-threshold pair
-# frame the two sides share. Round 13: the operator migrated to
-# 60-bit hashed postings, so the pair machinery AND the stats dsh
-# below hash shingles exactly like Spark's hashed_shingles_expr —
-# exactness by construction even under a 60-bit collision.
-SQL_CONTAINMENT_DROP = f"""
-    WITH cont AS ({SQL_CONTAINMENT_PAIRS_HASHED}),
-    {DOC_TOKENS_SQL},
-    dsh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(list_distinct(s),
-                   x -> CAST(('0x' || substr(md5(x), 1, 15))
-                        AS BIGINT))) AS s
-        FROM shingles
-    ),
-    qstats AS (
-        SELECT doc_id,
-               len(t)::DOUBLE AS ntokd,
-               greatest(length(text)::DOUBLE, 1.0) AS nchar,
-               (length(text) - length(regexp_replace(text,
-                   '[.,;:!?''"()\\[\\]{{}}-]', '', 'g')))::DOUBLE AS npunct,
-               len(list_filter(t, x -> list_contains(
-                   ['the','a','an','of','to','in','and','is','on','for'],
-                   lower(x))))::DOUBLE AS nstop
-        FROM (SELECT d.doc_id, d.text, toks.t
-              FROM documents d JOIN toks ON d.doc_id = toks.doc_id)
-    ),
-    q AS (
-        SELECT doc_id,
-               coalesce(CAST(floor((least(ntokd / 100.0, 1.0) * 0.5
-                     + (1.0 - npunct / nchar) * 0.3
-                     + least((nstop / greatest(ntokd, 1.0)) * 5.0, 1.0) * 0.2)
-                     * 10000.0 + 0.5) AS BIGINT), 0) AS qbp
-        FROM qstats
-    ),
-    st AS (
+# The pair machinery is SQL_CONTAINMENT_PAIRS_HASHED's. The drop rules
+# are exact-integer on the bp grid, so a drop event at threshold_bp >=
+# 5000 implies max-direction containment >= 0.5 and every decided pair
+# is present in the 0.5-threshold pair frame. Shingles hash exactly
+# like Spark's hashed_shingles_expr, so the oracle stays exact even
+# under a 60-bit collision.
+SQL_CONTAINMENT_DROP = _with(
+    **_HSH,
+    **_containment("dsh"),
+    q=f"SELECT doc_id, coalesce({_QUALITY_BP}, 0) AS qbp FROM documents JOIN toks USING (doc_id)",
+    st="""
         SELECT d.doc_id, len(d.s)::BIGINT AS nsh, q.qbp
         FROM dsh d JOIN q USING (doc_id)
-    ),
-    ex AS (
+    """,
+    ex="""
         SELECT c.id_a, c.id_b, c.n_common,
                a.nsh AS na, b.nsh AS nb, a.qbp AS qa, b.qbp AS qb
         FROM cont c
         JOIN st a ON a.doc_id = c.id_a
         JOIN st b ON b.doc_id = c.id_b
-    ),
-    ev AS (
-        SELECT CASE
-            WHEN (n_common * 10000 >= 8000 * na AND nb * 10000 >= 10000 * na)
-                 AND (NOT (n_common * 10000 >= 8000 * nb
-                           AND na * 10000 >= 10000 * nb)
-                      OR qa < qb)
-            THEN id_a
-            WHEN (n_common * 10000 >= 8000 * nb AND na * 10000 >= 10000 * nb)
-                 AND (NOT (n_common * 10000 >= 8000 * na
-                           AND nb * 10000 >= 10000 * na)
-                      OR qa >= qb)
-            THEN id_b
-        END AS doc_id
-        FROM ex
-    ),
-    drops AS (
-        SELECT doc_id, count(*)::BIGINT AS n_containers
-        FROM ev WHERE doc_id IS NOT NULL GROUP BY doc_id
-    )
+    """,
+    **_keep_best(),
+    select="""
     SELECT s.doc_id, d2.source, s.nsh AS n_shingles, s.qbp AS quality_bp,
            coalesce(dr.n_containers, 0)::BIGINT AS n_containers,
            (coalesce(dr.n_containers, 0) > 0)::BIGINT AS dropped
     FROM st s
     JOIN documents d2 USING (doc_id)
     LEFT JOIN drops dr USING (doc_id)
-"""
+""")
 
 
 def q_containment_pairs_against(spark, sf_dir):
@@ -1403,42 +1512,23 @@ def q_containment_pairs_against(spark, sf_dir):
     )
 
 
-# round 13: dsh hashed to 60-bit md5-prefix ints, mirroring the
-# operator's hashed_shingles_expr (SQL_CONTAINMENT_PAIRS_HASHED's dsh
-# form) — exact by construction under any collision
-SQL_CONTAINMENT_PAIRS_AGAINST = f"""
-    WITH {DOC_TOKENS_SQL},
-    dsh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(list_distinct(s),
-                   x -> CAST(('0x' || substr(md5(x), 1, 15))
-                        AS BIGINT))) AS s
-        FROM shingles WHERE len(s) > 0
-    ),
-    csh AS (SELECT doc_id, s FROM dsh WHERE doc_id % 2 = 0),
-    psh AS (SELECT doc_id, s FROM dsh WHERE doc_id % 2 = 1),
-    cinv AS (SELECT doc_id, unnest(s) AS g FROM csh),
-    rare AS (SELECT g FROM cinv GROUP BY g HAVING count(*) <= 20),
-    rcinv AS (SELECT i.doc_id, i.g FROM cinv i JOIN rare USING (g)),
-    pinv AS (SELECT doc_id, unnest(s) AS g FROM psh),
-    cand AS (
+# Shingles hash like the operator's hashed_shingles_expr: exact by
+# construction under any collision.
+_CONT_AGAINST = dict(
+    **_HSH,
+    csh="SELECT doc_id, s FROM dsh WHERE doc_id % 2 = 0",
+    psh="SELECT doc_id, s FROM dsh WHERE doc_id % 2 = 1",
+    cinv="SELECT doc_id, unnest(s) AS g FROM csh",
+    rare="SELECT g FROM cinv GROUP BY g HAVING count(*) <= 20",
+    rcinv="SELECT i.doc_id, i.g FROM cinv i JOIN rare USING (g)",
+    pinv="SELECT doc_id, unnest(s) AS g FROM psh",
+    cand="""
         SELECT DISTINCT p.doc_id AS id_a, c.doc_id AS id_b
         FROM pinv p JOIN rcinv c ON p.g = c.g
-    ),
-    ex AS (
-        SELECT id_a, id_b,
-               len(list_intersect(a.s, b.s))::BIGINT AS n_common,
-               len(a.s)::BIGINT AS na, len(b.s)::BIGINT AS nb
-        FROM cand
-        JOIN psh a ON a.doc_id = cand.id_a
-        JOIN csh b ON b.doc_id = cand.id_b
-    )
-    SELECT id_a, id_b, n_common,
-           round(n_common::DOUBLE / na, 4) AS contain_ab,
-           round(n_common::DOUBLE / nb, 4) AS contain_ba
-    FROM ex
-    WHERE greatest(n_common::DOUBLE / na, n_common::DOUBLE / nb) >= 0.5
-"""
+    """,
+    **_contained("psh", "csh"),
+)
+SQL_CONTAINMENT_PAIRS_AGAINST = _with(**_CONT_AGAINST, select="SELECT * FROM cont")
 
 
 def q_containment_drop_against(spark, sf_dir):
@@ -1460,24 +1550,14 @@ def q_containment_drop_against(spark, sf_dir):
     )
 
 
-# Oracle BUILT FROM SQL_CONTAINMENT_PAIRS_AGAINST (the
-# SQL_CONTAINMENT_DROP discipline): the frozen-index pair machinery
-# cannot drift. A drop event needs contain_ab >= 0.8 on the exact
-# integer grid, so every decided pair is present in the 0.5-threshold
-# against-pair frame the two sides share. The final per-probe frame is
-# UNFILTERED (dsh without the len>0 guard), mirroring the operator's
+# The frozen-index pair machinery is SQL_CONTAINMENT_PAIRS_AGAINST's.
+# A drop event needs contain_ab >= 0.8 on the exact integer grid, so
+# every decided pair is present in the 0.5-threshold against-pair
+# frame. The per-probe frame is unfiltered, mirroring the operator's
 # pbase: empty-shingle probes report n_shingles=0, dropped=0.
-SQL_CONTAINMENT_DROP_AGAINST = f"""
-    WITH cont AS ({SQL_CONTAINMENT_PAIRS_AGAINST}),
-    {DOC_TOKENS_SQL},
-    dsh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(list_distinct(s),
-                   x -> CAST(('0x' || substr(md5(x), 1, 15))
-                        AS BIGINT))) AS s
-        FROM shingles
-    ),
-    drops AS (
+SQL_CONTAINMENT_DROP_AGAINST = _with(
+    **_CONT_AGAINST,
+    drops="""
         SELECT c.id_a AS doc_id, count(*)::BIGINT AS n_containers
         FROM cont c
         JOIN dsh a ON a.doc_id = c.id_a
@@ -1485,21 +1565,22 @@ SQL_CONTAINMENT_DROP_AGAINST = f"""
         WHERE c.n_common * 10000 >= 8000 * len(a.s)
           AND len(b.s) * 10000 >= 10000 * len(a.s)
         GROUP BY c.id_a
-    )
+    """,
+    select="""
     SELECT p.doc_id, len(p.s)::BIGINT AS n_shingles,
            coalesce(d.n_containers, 0)::BIGINT AS n_containers,
            (coalesce(d.n_containers, 0) > 0)::BIGINT AS dropped
     FROM dsh p LEFT JOIN drops d USING (doc_id)
     WHERE p.doc_id % 2 = 1
-"""
+""")
 
 
 def q_dedup_sensitivity(spark, sf_dir):
     """Near-dup attrition vs threshold (0.7/0.8/0.9): ONE shared
     MinHash/LSH/exact-Jaccard pass, per-threshold pair counts and
     would-drop doc counts on the integer bp grid — the knob-tuning
-    curve run before committing near_dedup's threshold. Oracle BUILT
-    FROM SQL_JACCARD_PAIRS so the pair machinery cannot drift."""
+    curve run before committing near_dedup's threshold. The oracle
+    composes SQL_JACCARD_PAIRS, so the pair machinery is shared."""
     from webloghunter_spark.pipelines.dedup import dedup_sensitivity
 
     docs = _fan(_t(spark, sf_dir, "documents"))
@@ -1508,19 +1589,20 @@ def q_dedup_sensitivity(spark, sf_dir):
     )
 
 
-SQL_DEDUP_SENSITIVITY = f"""
-    WITH jacc AS ({SQL_JACCARD_PAIRS}),
-    b AS (
+SQL_DEDUP_SENSITIVITY = _with(
+    jacc=SQL_JACCARD_PAIRS,
+    b="""
         SELECT id_a, id_b,
                CAST(floor(jaccard * 10000 + 0.5) AS BIGINT) AS jbp
         FROM jacc
-    ),
-    t AS (SELECT CAST(unnest([7000, 8000, 9000]) AS BIGINT) AS t_bp)
+    """,
+    t="SELECT CAST(unnest([7000, 8000, 9000]) AS BIGINT) AS t_bp",
+    select="""
     SELECT t_bp, count(*)::BIGINT AS n_pairs,
            count(DISTINCT id_b)::BIGINT AS n_docs_dropped
     FROM b JOIN t ON b.jbp >= t.t_bp
     GROUP BY t_bp
-"""
+""")
 
 
 def q_dup_source_matrix(spark, sf_dir):
@@ -1529,8 +1611,8 @@ def q_dup_source_matrix(spark, sf_dir):
     within-source churn; off-diagonal = one source copying another) —
     the diagnostic that decides whether cross-source dedup is worth
     its shuffle before anything is dropped. Same MinHash/LSH/exact
-    verify and parameters as near_dedup; the oracle is BUILT FROM
-    SQL_JACCARD_PAIRS so the pair machinery cannot drift."""
+    verify and parameters as near_dedup; the oracle composes
+    SQL_JACCARD_PAIRS, so the pair machinery is shared."""
     from webloghunter_spark.pipelines.dedup import dup_source_matrix
 
     docs = _fan(_t(spark, sf_dir, "documents"))
@@ -1539,10 +1621,10 @@ def q_dup_source_matrix(spark, sf_dir):
     )
 
 
-SQL_DUP_SOURCE_MATRIX = f"""
-    WITH jacc AS ({SQL_JACCARD_PAIRS}),
-    sel AS (SELECT id_a, id_b FROM jacc WHERE jaccard >= 0.8),
-    lab AS (
+SQL_DUP_SOURCE_MATRIX = _with(
+    jacc=SQL_JACCARD_PAIRS,
+    sel="SELECT id_a, id_b FROM jacc WHERE jaccard >= 0.8",
+    lab="""
         SELECT least(coalesce(da.source, ''), coalesce(db.source, ''))
                    AS source_lo,
                greatest(coalesce(da.source, ''), coalesce(db.source, ''))
@@ -1550,17 +1632,18 @@ SQL_DUP_SOURCE_MATRIX = f"""
         FROM sel
         JOIN documents da ON sel.id_a = da.doc_id
         JOIN documents db ON sel.id_b = db.doc_id
-    ),
-    m AS (
+    """,
+    m="""
         SELECT source_lo, source_hi, count(*)::BIGINT AS n_pairs
         FROM lab GROUP BY 1, 2
-    ),
-    t AS (SELECT sum(n_pairs)::BIGINT AS tot FROM m)
+    """,
+    t="SELECT sum(n_pairs)::BIGINT AS tot FROM m",
+    select="""
     SELECT source_lo, source_hi, n_pairs,
            ((n_pairs * 20000 + tot) // (2 * tot))::BIGINT AS share_bp,
            (source_lo <> source_hi) AS cross_source
     FROM m, t
-"""
+""")
 
 
 def q_simhash(spark, sf_dir):
@@ -1574,22 +1657,23 @@ def q_simhash(spark, sf_dir):
     ).filter(F.col("simhash").isNotNull())
 
 
-SQL_SIMHASH = f"""
-    WITH {DOC_TOKENS_SQL},
-    hashed AS (
+SQL_SIMHASH = _with(
+    **_DOC_SHINGLES,
+    hashed="""
         SELECT doc_id, list_transform(s, x -> md5(x)) AS h, len(s) AS n
         FROM shingles WHERE len(s) > 0
-    ),
-    bits AS (
+    """,
+    bits="""
         SELECT doc_id, b,
                CASE WHEN 2 * len(list_filter(h, x ->
                         ((strpos('0123456789abcdef', substr(x, b + 1, 1)) - 1)
                          // CAST(pow(2, b % 4) AS INTEGER)) % 2 = 1)) >= n
                     THEN CAST(pow(2, b) AS BIGINT) ELSE 0 END AS bit
         FROM hashed, (SELECT unnest(generate_series(0, 15)) AS b)
-    )
+    """,
+    select="""
     SELECT doc_id, CAST(sum(bit) AS BIGINT) AS simhash FROM bits GROUP BY doc_id
-"""
+""")
 
 
 def q_neardup_embeddings(spark, sf_dir):
@@ -1600,21 +1684,22 @@ def q_neardup_embeddings(spark, sf_dir):
     return neardup_pairs_lsh(emb, num_planes=4, dim=64, threshold=0.2)
 
 
-SQL_NEARDUP_EMB = """
-    WITH coeff AS (
+SQL_NEARDUP_EMB = _with(
+    coeff="""
         SELECT p, list_transform(generate_series(0, 63),
                    d -> (strpos('0123456789abcdef',
                          substr(md5(p::VARCHAR || '|' || d::VARCHAR), 1, 1))
                          - 8.5)) AS c
         FROM (SELECT unnest(generate_series(0, 3)) AS p)
-    ),
-    bucketed AS (
+    """,
+    bucketed="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
                CAST(sum(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), c) >= 0
                              THEN pow(2, p) ELSE 0 END) AS BIGINT) AS bucket
         FROM embeddings, coeff
         GROUP BY vec_id, CAST(embedding AS DOUBLE[])
-    )
+    """,
+    select="""
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            round(list_dot_product(a.v, b.v)
                  / (sqrt(list_dot_product(a.v, a.v))
@@ -1624,7 +1709,7 @@ SQL_NEARDUP_EMB = """
     WHERE round(list_dot_product(a.v, b.v)
                 / (sqrt(list_dot_product(a.v, a.v))
                    * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.2
-"""
+""")
 
 
 def q_burst_success(spark, sf_dir):
@@ -1646,34 +1731,35 @@ def q_burst_success(spark, sf_dir):
     return out.select("event_id", "risk_score", "rule_applied")
 
 
-SQL_BURST_SUCCESS = f"""
-    WITH w AS ({WEBLOG_SQL_BASE}),
-    errors AS (
+SQL_BURST_SUCCESS = _with(
+    w=WEBLOG_SQL_BASE,
+    errors="""
         SELECT event_id, ip, request_uri, method,
                epoch(utc_timestamp) AS ep, utc_timestamp
         FROM w WHERE status = 500
-    ),
-    flagged AS (
+    """,
+    flagged="""
         SELECT *, CASE WHEN ep - lag(ep) OVER
                    (PARTITION BY ip, request_uri, method ORDER BY utc_timestamp)
                    > 3600 THEN 1 ELSE 0 END AS nb
         FROM errors
-    ),
-    runs AS (
+    """,
+    runs="""
         SELECT *, sum(nb) OVER (PARTITION BY ip, request_uri, method
                                 ORDER BY utc_timestamp
                                 ROWS UNBOUNDED PRECEDING) AS burst_id
         FROM flagged
-    ),
-    bursts AS (
+    """,
+    bursts="""
         SELECT ip, request_uri, min(utc_timestamp) AS min_time
         FROM runs GROUP BY ip, request_uri, method, burst_id
         HAVING count(*) >= 3
-    ),
-    earliest AS (
+    """,
+    earliest="""
         SELECT ip, request_uri, min(min_time) AS m FROM bursts
         GROUP BY ip, request_uri
-    )
+    """,
+    select="""
     SELECT w.event_id,
            CASE WHEN w.status = 200 AND e.m IS NOT NULL
                      AND w.utc_timestamp >= e.m
@@ -1684,7 +1770,7 @@ SQL_BURST_SUCCESS = f"""
                 ELSE '' END AS rule_applied
     FROM w LEFT JOIN earliest e
       ON w.ip = e.ip AND w.request_uri = e.request_uri
-"""
+""")
 
 
 def _tool_scan_frame(spark, sf_dir):
@@ -1738,9 +1824,9 @@ def q_tool_scan(spark, sf_dir):
 # State per row: the span start and the running keyword mask; a span
 # closes at the first row whose cumulative mask is complete, and every
 # candidate row of a closed span is stamped.
-SQL_TOOL_SCAN = f"""
-    WITH RECURSIVE w AS ({WEBLOG_SQL_BASE}),
-    cand AS (
+SQL_TOOL_SCAN = _with(
+    w=WEBLOG_SQL_BASE,
+    cand="""
         SELECT user_id, event_id,
                row_number() OVER (
                    PARTITION BY user_id
@@ -1753,8 +1839,8 @@ SQL_TOOL_SCAN = f"""
         WHERE contains(request_uri, '/admin')
            OR contains(request_uri, '/login')
            OR contains(request_uri, '/dump.sql')
-    ),
-    walk AS (
+    """,
+    walk="""
         SELECT user_id, rn, event_id, rn AS span_start,
                b1 AS m1, b2 AS m2, b3 AS m3
         FROM cand WHERE rn = 1
@@ -1765,13 +1851,15 @@ SQL_TOOL_SCAN = f"""
                CASE WHEN p.m1 + p.m2 + p.m3 = 3 THEN c.b2 ELSE greatest(p.m2, c.b2) END,
                CASE WHEN p.m1 + p.m2 + p.m3 = 3 THEN c.b3 ELSE greatest(p.m3, c.b3) END
         FROM walk p JOIN cand c ON c.user_id = p.user_id AND c.rn = p.rn + 1
-    )
+    """,
+    recursive=("walk",),
+    select="""
     SELECT s.event_id, 'SC01' AS tool, 'SynthScan' AS tool_name
     FROM walk s
     JOIN (SELECT DISTINCT user_id, span_start FROM walk
           WHERE m1 + m2 + m3 = 3) done
       ON s.user_id = done.user_id AND s.span_start = done.span_start
-"""
+""")
 
 
 def q_tool_scan_single(spark, sf_dir):
@@ -1798,15 +1886,16 @@ def q_tool_scan_single(spark, sf_dir):
     )
 
 
-SQL_TOOL_SCAN_SINGLE = f"""
-    WITH w AS ({WEBLOG_SQL_BASE})
+SQL_TOOL_SCAN_SINGLE = _with(
+    w=WEBLOG_SQL_BASE,
+    select="""
     SELECT event_id,
            CASE WHEN contains(request_uri, '/dump.sql') THEN 'SQ01' ELSE '' END AS tool,
            CASE WHEN contains(request_uri, '/dump.sql') THEN 'SqlDump' ELSE '' END AS name,
            CASE WHEN contains(request_uri, '/dump.sql')
                 THEN 'database dump fetch' ELSE '' END AS description
     FROM w
-"""
+""")
 
 
 def q_tool_scan_windowed(spark, sf_dir):
@@ -1850,9 +1939,9 @@ def q_tool_scan_windowed(spark, sf_dir):
 # after a failed one — exactly the kernel's claimed-set behavior, since
 # successful spans claim precisely [start, comp] and failures claim
 # nothing.
-SQL_TOOL_SCAN_WINDOWED = f"""
-    WITH RECURSIVE w AS ({WEBLOG_SQL_BASE}),
-    cand AS (
+SQL_TOOL_SCAN_WINDOWED = _with(
+    w=WEBLOG_SQL_BASE,
+    cand="""
         SELECT user_id, event_id,
                CAST(floor(epoch(utc_timestamp)) AS BIGINT) AS t,
                row_number() OVER (
@@ -1866,8 +1955,8 @@ SQL_TOOL_SCAN_WINDOWED = f"""
         WHERE contains(request_uri, '/admin')
            OR contains(request_uri, '/login')
            OR contains(request_uri, '/dump.sql')
-    ),
-    nexts AS (
+    """,
+    nexts="""
         SELECT user_id, rn, event_id, t,
                min(CASE WHEN b1 = 1 THEN rn END) OVER fwd AS n1,
                min(CASE WHEN b2 = 1 THEN rn END) OVER fwd AS n2,
@@ -1875,38 +1964,40 @@ SQL_TOOL_SCAN_WINDOWED = f"""
         FROM cand
         WINDOW fwd AS (PARTITION BY user_id ORDER BY rn
                        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-    ),
-    need AS (
+    """,
+    need="""
         -- explicit NULL guard: greatest() must not treat a keyword with
         -- no future occurrence (NULL next) as satisfied
         SELECT user_id, rn, event_id, t,
                CASE WHEN n1 IS NOT NULL AND n2 IS NOT NULL AND n3 IS NOT NULL
                     THEN greatest(n1, n2, n3) END AS need_rn
         FROM nexts
-    ),
-    comp AS (
+    """,
+    comp="""
         SELECT n.user_id, n.rn,
                CASE WHEN n.need_rn IS NOT NULL AND c2.t - n.t <= 180000
                     THEN n.need_rn END AS comp_rn
         FROM need n
         LEFT JOIN cand c2 ON c2.user_id = n.user_id AND c2.rn = n.need_rn
-    ),
-    walk AS (
+    """,
+    walk="""
         SELECT user_id, 1 AS s FROM (SELECT DISTINCT user_id FROM cand)
         UNION ALL
         SELECT c.user_id,
                CASE WHEN c.comp_rn IS NOT NULL THEN c.comp_rn + 1 ELSE w2.s + 1 END
         FROM walk w2 JOIN comp c ON c.user_id = w2.user_id AND c.rn = w2.s
-    ),
-    spans AS (
+    """,
+    spans="""
         SELECT c.user_id, w2.s AS lo, c.comp_rn AS hi
         FROM walk w2 JOIN comp c ON c.user_id = w2.user_id AND c.rn = w2.s
         WHERE c.comp_rn IS NOT NULL
-    )
+    """,
+    recursive=("walk",),
+    select="""
     SELECT c.event_id, 'DW01' AS tool, 'WindowScan' AS tool_name
     FROM cand c
     JOIN spans sp ON c.user_id = sp.user_id AND c.rn BETWEEN sp.lo AND sp.hi
-"""
+""")
 
 
 def q_knn_lsh(spark, sf_dir):
@@ -1921,22 +2012,23 @@ def q_knn_lsh(spark, sf_dir):
     )
 
 
-SQL_KNN_LSH = """
-    WITH coeff AS (
+SQL_KNN_LSH = _with(
+    coeff="""
         SELECT p, list_transform(generate_series(0, 63),
                    d -> (strpos('0123456789abcdef',
                          substr(md5(p::VARCHAR || '|' || d::VARCHAR), 1, 1))
                          - 8.5)) AS c
         FROM (SELECT unnest(generate_series(0, 3)) AS p)
-    ),
-    bucketed AS (
+    """,
+    bucketed="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
                CAST(sum(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), c) >= 0
                              THEN pow(2, p) ELSE 0 END) AS BIGINT) AS bucket
         FROM embeddings, coeff
         GROUP BY vec_id, CAST(embedding AS DOUBLE[])
-    ),
-    q AS (SELECT v AS qv, bucket AS qb FROM bucketed WHERE vec_id = 0)
+    """,
+    q="SELECT v AS qv, bucket AS qb FROM bucketed WHERE vec_id = 0",
+    select="""
     SELECT vec_id,
            round(list_dot_product(v, qv)
                  / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))),
@@ -1945,7 +2037,7 @@ SQL_KNN_LSH = """
     WHERE vec_id != 0 AND bucket = qb
     ORDER BY cosine DESC, vec_id
     LIMIT 10
-"""
+""")
 
 
 def q_doc_fingerprint(spark, sf_dir):
@@ -1960,16 +2052,9 @@ def q_doc_fingerprint(spark, sf_dir):
     return fp.select("doc_id", "rh").filter(F.col("rh").isNotNull())
 
 
-# Whitespace class spelled out: RE2's \s omits \x0B (vertical tab),
-# which Java's \s (the Spark side) includes.
-_NORM_SQL = (
-    "regexp_replace(regexp_replace(lower(trim(text)),"
-    " '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'),"
-    " '[^\\x20-\\x7e]', '', 'g')"
-)
-
-SQL_DOC_FINGERPRINT = f"""
-    WITH norm AS (SELECT doc_id, {_NORM_SQL} AS s FROM documents)
+SQL_DOC_FINGERPRINT = _with(
+    norm=f"SELECT doc_id, {_NORM_SQL} AS s FROM documents",
+    select="""
     SELECT doc_id,
            list_reduce(
                list_prepend(CAST(0 AS BIGINT),
@@ -1977,7 +2062,7 @@ SQL_DOC_FINGERPRINT = f"""
                        i -> CAST(ascii(substr(s, i, 1)) AS BIGINT))),
                (acc, x) -> (acc * 257 + x) % 999999999999989) AS rh
     FROM norm WHERE length(s) > 0
-"""
+""")
 
 
 def q_winnow_fingerprints(spark, sf_dir):
@@ -1994,26 +2079,27 @@ def q_winnow_fingerprints(spark, sf_dir):
     return fps.select("doc_id", F.explode("winnow_fps").alias("fp")).distinct()
 
 
-SQL_WINNOW = f"""
-    WITH norm AS (SELECT doc_id, {_NORM_SQL} AS s FROM documents),
-    codes AS (
+SQL_WINNOW = _with(
+    norm=f"SELECT doc_id, {_NORM_SQL} AS s FROM documents",
+    codes="""
         SELECT doc_id,
                list_transform(generate_series(1, length(s)),
                    i -> CAST(ascii(substr(s, i, 1)) AS BIGINT)) AS cs
         FROM norm
-    ),
-    grams AS (
+    """,
+    grams="""
         SELECT doc_id,
                list_transform(generate_series(1, len(cs) - 7),
                    i -> list_reduce(list_prepend(CAST(0 AS BIGINT), cs[i:i+7]),
                         (acc, x) -> (acc * 257 + x) % 999999999999989)) AS gh
         FROM codes WHERE len(cs) >= 11
-    )
+    """,
+    select="""
     SELECT DISTINCT doc_id,
            unnest(list_transform(generate_series(1, len(gh) - 3),
                   i -> list_min(gh[i:i+3]))) AS fp
     FROM grams
-"""
+""")
 
 
 def q_winnow_pairs(spark, sf_dir):
@@ -2023,8 +2109,8 @@ def q_winnow_pairs(spark, sf_dir):
     candidates from discriminative fingerprints (2 <= df <= 20),
     exact shared-count verify on the per-doc sorted distinct
     fingerprint arrays, n_shared >= 2, overlap on the integer bp
-    grid. Oracle BUILT FROM SQL_WINNOW so the fingerprint definition
-    cannot drift."""
+    grid. The oracle composes SQL_WINNOW, so the fingerprint
+    definition is shared."""
     from webloghunter_spark.pipelines.dedup import winnow_pairs
 
     docs = _fan(_t(spark, sf_dir, "documents"))
@@ -2033,27 +2119,34 @@ def q_winnow_pairs(spark, sf_dir):
     )
 
 
-SQL_WINNOW_PAIRS = f"""
-    WITH w0 AS ({SQL_WINNOW}),
-    agg AS (SELECT doc_id, list_sort(list(fp)) AS fps FROM w0 GROUP BY doc_id),
-    rare AS (SELECT fp FROM w0 GROUP BY fp HAVING count(*) BETWEEN 2 AND 20),
-    rinv AS (SELECT w0.doc_id, w0.fp FROM w0 JOIN rare USING (fp)),
-    cand AS (
+# winnow_pairs' machinery over SQL_WINNOW: wex holds every candidate
+# pair's shared-fingerprint count, before the min_shared filter.
+_WINNOW_PAIRS = {
+    "w0": SQL_WINNOW,
+    "agg": "SELECT doc_id, list_sort(list(fp)) AS fps FROM w0 GROUP BY doc_id",
+    "rare": "SELECT fp FROM w0 GROUP BY fp HAVING count(*) BETWEEN 2 AND 20",
+    "rinv": "SELECT w0.doc_id, w0.fp FROM w0 JOIN rare USING (fp)",
+    "cand": """
         SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
         FROM rinv l JOIN rinv r ON l.fp = r.fp AND l.doc_id < r.doc_id
-    ),
-    ex AS (
+    """,
+    "wex": """
         SELECT id_a, id_b,
                len(list_intersect(a.fps, b.fps))::BIGINT AS n_shared,
                len(a.fps)::BIGINT AS na, len(b.fps)::BIGINT AS nb
         FROM cand
         JOIN agg a ON a.doc_id = cand.id_a
         JOIN agg b ON b.doc_id = cand.id_b
-    )
+    """,
+}
+
+SQL_WINNOW_PAIRS = _with(
+    **_WINNOW_PAIRS,
+    select="""
     SELECT id_a, id_b, n_shared,
            (n_shared * 10000 // least(na, nb))::BIGINT AS overlap_bp
-    FROM ex WHERE n_shared >= 2
-"""
+    FROM wex WHERE n_shared >= 2
+""")
 
 
 def q_winnow_containment_drop(spark, sf_dir):
@@ -2061,11 +2154,9 @@ def q_winnow_containment_drop(spark, sf_dir):
     MOSS candidate generator (~1/((window+1)/2) the shingle index
     density) feeding the same exact-integer drop rules (contained at
     >= 0.8 in a not-smaller doc -> dropped; mutual containment ->
-    keep-best). Oracle BUILT FROM the frozen pieces: pair machinery
-    from SQL_WINNOW_PAIRS (tail-surgered to expose n_common/na/nb
-    without the min_shared filter), quality + decision CTEs lifted
-    VERBATIM from SQL_CONTAINMENT_DROP by anchored slicing — neither
-    the fingerprint definition nor the drop rules can drift."""
+    keep-best). The oracle composes winnow_pairs' machinery
+    (_WINNOW_PAIRS) with the quality score and the keep-best decision
+    (_keep_best) that SQL_CONTAINMENT_DROP uses."""
     from webloghunter_spark.pipelines.dedup import winnow_containment_drop
 
     docs = _fan(_t(spark, sf_dir, "documents"))
@@ -2075,69 +2166,33 @@ def q_winnow_containment_drop(spark, sf_dir):
     )
 
 
-def _winnow_containment_drop_sql() -> str:
-    # pair machinery: SQL_WINNOW_PAIRS minus its n_shared >= 2 tail
-    # (a drop event needs n_common >= ceil(threshold_bp * na / 10000),
-    # which is 1 for a single-fingerprint contained doc)
-    tail = (
-        "    SELECT id_a, id_b, n_shared,\n"
-        "           (n_shared * 10000 // least(na, nb))::BIGINT AS overlap_bp\n"
-        "    FROM ex WHERE n_shared >= 2\n"
-    )
-    if SQL_WINNOW_PAIRS.count(tail) != 1:
-        # raise, not assert: anchored surgery must fail loudly under -O
-        raise RuntimeError("winnow_pairs tail anchor moved")
-    wp = SQL_WINNOW_PAIRS.replace(
-        tail, "    SELECT id_a, id_b, n_shared AS n_common, na, nb FROM ex\n"
-    )
-    # quality CTEs (qstats, q) and the decision CASE (ev), verbatim
-    # from the shingle drop oracle
-    q0, q1 = "    qstats AS (", "    st AS ("
-    qblock = SQL_CONTAINMENT_DROP[
-        SQL_CONTAINMENT_DROP.index(q0):SQL_CONTAINMENT_DROP.index(q1)
-    ]
-    if not qblock.rstrip().endswith("),"):
-        raise RuntimeError("quality block anchor moved")
-    e0, e1 = "    ev AS (", "    drops AS ("
-    evblock = SQL_CONTAINMENT_DROP[
-        SQL_CONTAINMENT_DROP.index(e0):SQL_CONTAINMENT_DROP.index(e1)
-    ]
-    if "n_common * 10000 >= 8000" not in evblock:
-        raise RuntimeError("decision anchor moved")
-    return f"""
-    WITH wp AS ({wp}),
-    w0 AS ({SQL_WINNOW}),
-    fstats AS (
-        SELECT doc_id, count(*)::BIGINT AS nfp FROM w0 GROUP BY doc_id
-    ),
-    {DOC_TOKENS_SQL.strip().rstrip()},
-    {qblock}
-    st AS (
+SQL_WINNOW_CONTAINMENT_DROP = _with(
+    **_WINNOW_PAIRS,
+    fstats="SELECT doc_id, count(*)::BIGINT AS nfp FROM w0 GROUP BY doc_id",
+    toks=_toks("doc_id", "text"),
+    q=f"SELECT doc_id, coalesce({_QUALITY_BP}, 0) AS qbp FROM toks",
+    st="""
         SELECT d.doc_id, coalesce(f.nfp, 0)::BIGINT AS nfp, q.qbp
         FROM documents d
         LEFT JOIN fstats f USING (doc_id)
         JOIN q USING (doc_id)
-    ),
-    ex AS (
-        SELECT w.id_a, w.id_b, w.n_common,
+    """,
+    # no min_shared filter: a drop event needs n_common >=
+    # ceil(threshold_bp * na / 10000), 1 for a single-fingerprint doc
+    ex="""
+        SELECT w.id_a, w.id_b, w.n_shared AS n_common,
                w.na, w.nb, a.qbp AS qa, b.qbp AS qb
-        FROM wp w
+        FROM wex w
         JOIN st a ON a.doc_id = w.id_a
         JOIN st b ON b.doc_id = w.id_b
-    ),
-    {evblock}
-    drops AS (
-        SELECT doc_id, count(*)::BIGINT AS n_containers
-        FROM ev WHERE doc_id IS NOT NULL GROUP BY doc_id
-    )
+    """,
+    **_keep_best(),
+    select="""
     SELECT s.doc_id, s.nfp AS n_fps, s.qbp AS quality_bp,
            coalesce(dr.n_containers, 0)::BIGINT AS n_containers,
            (coalesce(dr.n_containers, 0) > 0)::BIGINT AS dropped
     FROM st s LEFT JOIN drops dr USING (doc_id)
-    """
-
-
-SQL_WINNOW_CONTAINMENT_DROP = _winnow_containment_drop_sql()
+""")
 
 
 def q_knn_ivf(spark, sf_dir):
@@ -2154,21 +2209,12 @@ def q_knn_ivf(spark, sf_dir):
     )
 
 
-SQL_KNN_IVF = """
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ),
-    q AS (SELECT e AS qv FROM v WHERE vec_id = 0),
-    cents AS (SELECT vec_id AS cent_id, e AS cv FROM v
-              WHERE vec_id >= 1 AND vec_id < 8),
-    probes AS (
-        SELECT cent_id FROM cents, q
-        ORDER BY list_dot_product(cv, qv)
-                 / (sqrt(list_dot_product(cv, cv)) * sqrt(list_dot_product(qv, qv)))
-                 DESC, cent_id
-        LIMIT 2
-    ),
-    assigned AS (
+# IVF lists: centroids are vec_ids 1..7, every other non-query vector
+# is assigned to its most cosine-similar centroid.
+_IVF = {
+    **_EMB_Q,
+    "cents": "SELECT vec_id AS cent_id, e AS cv FROM v WHERE vec_id >= 1 AND vec_id < 8",
+    "assigned": """
         SELECT vec_id, cent_id FROM (
             SELECT v.vec_id, c.cent_id,
                    row_number() OVER (PARTITION BY v.vec_id ORDER BY
@@ -2178,18 +2224,38 @@ SQL_KNN_IVF = """
                        c.cent_id) AS rn
             FROM v, cents c WHERE v.vec_id != 0
         ) WHERE rn = 1
-    )
+    """,
+}
+
+
+def _ivf_probes(n: int) -> str:
+    """The n centroids nearest the query (ties by id)."""
+    return f"""
+        SELECT cent_id FROM cents, q
+        ORDER BY list_dot_product(cv, qv)
+                 / (sqrt(list_dot_product(cv, cv)) * sqrt(list_dot_product(qv, qv)))
+                 DESC, cent_id
+        LIMIT {n}
+    """
+
+
+def _ivf_topk(probes: str) -> str:
+    """Top-10 by cosine among the vectors in the lists of `probes`."""
+    return f"""
     SELECT v.vec_id,
            round(list_dot_product(v.e, qv)
                  / (sqrt(list_dot_product(v.e, v.e))
                     * sqrt(list_dot_product(qv, qv))), 4) AS cosine
     FROM v
     JOIN assigned a ON v.vec_id = a.vec_id
-    JOIN probes p ON a.cent_id = p.cent_id
+    JOIN {probes} p ON a.cent_id = p.cent_id
     CROSS JOIN q
     ORDER BY cosine DESC, v.vec_id
     LIMIT 10
 """
+
+
+SQL_KNN_IVF = _with(**_IVF, probes=_ivf_probes(2), select=_ivf_topk("probes"))
 
 
 def q_ann_recall(spark, sf_dir):
@@ -2215,22 +2281,22 @@ def q_ann_recall(spark, sf_dir):
     )
 
 
-SQL_ANN_RECALL = f"""
-    WITH brute AS (SELECT vec_id FROM ({SQL_KNN})),
-    approx AS (SELECT vec_id FROM ({SQL_KNN_IVF}))
+SQL_ANN_RECALL = _with(
+    brute=SQL_KNN,
+    approx=SQL_KNN_IVF,
+    select="""
     SELECT CAST(10 AS INTEGER) AS k,
            CAST(count(*) AS BIGINT) AS n_common
     FROM brute JOIN approx USING (vec_id)
-"""
+""")
 
 
 def q_ivf_probe_curve(spark, sf_dir):
     """Recall@10 vs n_probe (1/2/4) — the IVF tuning curve read
     before pinning the probe setting: one brute-force truth + ONE
     materialized list assignment shared across every probe branch.
-    The oracle replays each branch with SQL_KNN_IVF's probe LIMIT
-    swapped (built by replacement, import-time assert) so the IVF
-    topology cannot drift."""
+    The oracle replays each branch from SQL_KNN_IVF's fragments
+    (_IVF, _ivf_probes, _ivf_topk), so the IVF topology is shared."""
     from webloghunter_spark.functions.similarity import ivf_probe_curve
 
     raw = _t(spark, sf_dir, "embeddings")
@@ -2243,20 +2309,20 @@ def q_ivf_probe_curve(spark, sf_dir):
     )
 
 
-# one probe LIMIT in SQL_KNN_IVF (the final LIMIT is the top-k) —
-# the curve swaps it per branch
-assert SQL_KNN_IVF.count("LIMIT 2") == 1, "probe LIMIT drifted in SQL_KNN_IVF"
-SQL_IVF_PROBE_CURVE = "\n    UNION ALL\n".join(
-    f"""
+SQL_IVF_PROBE_CURVE = _with(
+    brute=SQL_KNN,
+    **_IVF,
+    **{f"probes{n}": _ivf_probes(n) for n in (1, 2, 4)},
+    **{f"ivf{n}": _ivf_topk(f"probes{n}") for n in (1, 2, 4)},
+    select="\n    UNION ALL\n".join(
+        f"""
     SELECT CAST({n} AS BIGINT) AS n_probe,
            CAST(count(*) AS BIGINT) AS n_common,
            (count(*) * 10000 // 10)::BIGINT AS recall_bp
-    FROM (SELECT vec_id FROM ({SQL_KNN})) b
-    JOIN (SELECT vec_id FROM ({SQL_KNN_IVF.replace("LIMIT 2", f"LIMIT {n}")})) a
-      USING (vec_id)
+    FROM brute JOIN ivf{n} USING (vec_id)
 """
-    for n in (1, 2, 4)
-)
+        for n in (1, 2, 4)
+    ))
 
 
 def q_tool_focus(spark, sf_dir):
@@ -2280,25 +2346,26 @@ def q_tool_focus(spark, sf_dir):
     return out.select("event_id", "tool")
 
 
-SQL_TOOL_FOCUS = f"""
-    WITH w AS ({WEBLOG_SQL_BASE}),
-    t AS (
+SQL_TOOL_FOCUS = _with(
+    w=WEBLOG_SQL_BASE,
+    t="""
         SELECT event_id, ip, utc_timestamp,
                CASE WHEN request_uri IN ('/admin/panel', '/login') THEN 'DS01'
                     WHEN request_uri IN ('/dump.sql', '/cgi?cmd=whoami') THEN 'SC01'
                     ELSE '' END AS tool
         FROM w
-    ),
-    r AS (
+    """,
+    r="""
         SELECT event_id, tool,
                row_number() OVER (PARTITION BY ip, tool
                                   ORDER BY utc_timestamp) AS rna,
                row_number() OVER (PARTITION BY ip, tool
                                   ORDER BY utc_timestamp DESC) AS rnd
         FROM t WHERE tool != ''
-    )
+    """,
+    select="""
     SELECT event_id, tool FROM r WHERE rna = 1 OR rnd = 1
-"""
+""")
 
 
 # URIs exercising every R1 component; expected scores derived BY HAND
@@ -2369,12 +2436,11 @@ def q_bpe_tokens(spark, sf_dir):
     )
 
 
-SQL_BPE_TOKENS = r"""
-    SELECT doc_id,
-           CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS ws_tokens,
+# BPE_TOKEN_RE with Java's \s spelled out.
+SQL_BPE_TOKENS = f"""
+    SELECT doc_id, len({_TOKENS}) AS ws_tokens,
            len(regexp_extract_all(text,
-               '''s|''t|''re|''ve|''m|''ll|''d| ?[A-Za-z]+| ?[0-9]+| ?[^\sA-Za-z0-9]+|\s+'))
+               '''s|''t|''re|''ve|''m|''ll|''d| ?[A-Za-z]+| ?[0-9]+| ?[^{_WS[1:-1]}A-Za-z0-9]+|{_WS}+'))
                AS bpe_tokens
     FROM documents
 """
@@ -2404,14 +2470,15 @@ def q_salted_join(spark, sf_dir):
     )
 
 
-SQL_SALTED_JOIN = """
-    WITH cust AS (
+SQL_SALTED_JOIN = _with(
+    cust="""
         SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY o_custkey
-    )
+    """,
+    select="""
     SELECT o.o_orderkey, o.o_custkey,
            round(CAST(o.o_totalprice AS DOUBLE), 2) AS price, c.n_orders
     FROM orders o JOIN cust c ON o.o_custkey = c.o_custkey
-"""
+""")
 
 
 def q_salted_collect(spark, sf_dir):
@@ -2506,17 +2573,18 @@ def q_asof_join(spark, sf_dir):
     return j.select("event_id", "version_id")
 
 
-SQL_ASOF_JOIN = """
-    WITH v AS (
+SQL_ASOF_JOIN = _with(
+    v="""
         SELECT user_id, ts, event_id AS version_id FROM events
         WHERE event_type = 'signup'
-    ),
-    f AS (
+    """,
+    f="""
         SELECT event_id, user_id, ts FROM events WHERE event_type != 'signup'
-    )
+    """,
+    select="""
     SELECT f.event_id, v.version_id
     FROM f ASOF JOIN v ON f.user_id = v.user_id AND f.ts >= v.ts
-"""
+""")
 
 
 def q_train_split(spark, sf_dir):
@@ -2557,29 +2625,30 @@ def q_domain_mix(spark, sf_dir):
     return out.select("doc_id", "lang")
 
 
-SQL_DOMAIN_MIX = """
-    WITH shares(lang, share) AS (
-        VALUES ('en', CAST(0.5 AS DOUBLE)), ('de', CAST(0.2 AS DOUBLE)),
-               ('fr', CAST(0.3 AS DOUBLE))
-    ),
-    counts AS (
+SQL_DOMAIN_MIX = _with(
+    shares="""
+        SELECT * FROM (VALUES ('en', CAST(0.5 AS DOUBLE)), ('de', CAST(0.2 AS DOUBLE)),
+                              ('fr', CAST(0.3 AS DOUBLE))) v(lang, share)
+    """,
+    counts="""
         SELECT d.lang, CAST(count(*) AS DOUBLE) AS cnt, any_value(share) AS share
         FROM documents d JOIN shares s ON d.lang = s.lang
         GROUP BY d.lang
-    ),
-    t AS (SELECT min(cnt / share) AS total FROM counts),
-    cuts AS (
+    """,
+    t="SELECT min(cnt / share) AS total FROM counts",
+    cuts="""
         SELECT lang,
                least(CAST(10000 AS BIGINT),
                      CAST(floor(share * total / cnt * 10000 + 1e-6) AS BIGINT))
                    AS cut
         FROM counts CROSS JOIN t
-    )
+    """,
+    select="""
     SELECT d.doc_id, d.lang
     FROM documents d JOIN cuts c ON d.lang = c.lang
     WHERE CAST(CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || 'mix'), 1, 8)
                AS BIGINT) % 10000 AS INTEGER) < c.cut
-"""
+""")
 
 
 def q_segment_dedup(spark, sf_dir):
@@ -2592,25 +2661,20 @@ def q_segment_dedup(spark, sf_dir):
     return segment_dedup(docs, "text", "doc_id", seg_tokens=10)
 
 
-SQL_SEGMENT_DEDUP = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    base AS (
+SQL_SEGMENT_DEDUP = _with(
+    toks=_toks("doc_id"),
+    base="""
         SELECT doc_id,
                coalesce(CAST(ceil(len(t) / 10.0) AS INTEGER), 0) AS n_seg, t
         FROM toks
-    ),
-    segs AS (
+    """,
+    segs="""
         SELECT doc_id, i AS seg_idx,
                array_to_string(t[i*10+1 : i*10+10], ' ') AS seg
         FROM base, UNNEST(generate_series(0, n_seg - 1)) AS u(i)
         WHERE n_seg > 0
-    ),
-    kept AS (
+    """,
+    kept="""
         -- 60-bit md5-prefix segment key: the engine's round-14
         -- posting compression, mirrored so both engines merge the
         -- same segments even under a collision
@@ -2620,17 +2684,18 @@ SQL_SEGMENT_DEDUP = r"""
                 ORDER BY doc_id, seg_idx) AS rn
             FROM segs
         ) WHERE rn = 1
-    ),
-    stats AS (
+    """,
+    stats="""
         SELECT doc_id, count(*) AS n_kept,
                string_agg(seg, ' ' ORDER BY seg_idx) AS new_text
         FROM kept GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT b.doc_id, b.n_seg,
            coalesce(s.n_kept, 0) AS n_kept,
            coalesce(s.new_text, '') AS new_text
     FROM base b LEFT JOIN stats s ON b.doc_id = s.doc_id
-"""
+""")
 
 
 def q_cms_heavy_hitters(spark, sf_dir):
@@ -2643,37 +2708,31 @@ def q_cms_heavy_hitters(spark, sf_dir):
     return cms_heavy_hitters(docs, "text", threshold=100)
 
 
-SQL_CMS_HEAVY_HITTERS = r"""
-    WITH toks AS (
-        SELECT lower(tok) AS tok FROM (
-            SELECT unnest(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END) AS tok
-            FROM documents
-        )
-    ),
-    rowsr AS (SELECT unnest(generate_series(0, 3)) AS r),
-    cells AS (
+SQL_CMS_HEAVY_HITTERS = _with(
+    toks=f"SELECT unnest({_LTOKENS}) AS tok FROM documents",
+    rowsr="SELECT unnest(generate_series(0, 3)) AS r",
+    cells="""
         SELECT r,
                CAST(CAST('0x' || substr(md5(CAST(r AS VARCHAR) || '|' || tok), 1, 8)
                     AS BIGINT) % 1024 AS BIGINT) AS pos
         FROM toks CROSS JOIN rowsr
-    ),
-    sketch AS (SELECT r, pos, count(*) AS n FROM cells GROUP BY r, pos),
-    probe AS (SELECT DISTINCT tok FROM toks),
-    pcells AS (
+    """,
+    sketch="SELECT r, pos, count(*) AS n FROM cells GROUP BY r, pos",
+    probe="SELECT DISTINCT tok FROM toks",
+    pcells="""
         SELECT tok, r,
                CAST(CAST('0x' || substr(md5(CAST(r AS VARCHAR) || '|' || tok), 1, 8)
                     AS BIGINT) % 1024 AS BIGINT) AS pos
         FROM probe CROSS JOIN rowsr
-    ),
-    est AS (
+    """,
+    est="""
         SELECT tok AS token, min(coalesce(n, 0)) AS est
         FROM pcells LEFT JOIN sketch USING (r, pos)
         GROUP BY tok
-    )
+    """,
+    select="""
     SELECT token, est FROM est WHERE est >= 100
-"""
+""")
 
 
 def q_charset_stats(spark, sf_dir):
@@ -2719,39 +2778,37 @@ def q_bigram_logprob(spark, sf_dir):
     return out.withColumn("avg_ll", F.coalesce("avg_ll", F.lit(0.0)))
 
 
-SQL_BIGRAM_LOGPROB = r"""
-    WITH toks AS (
+SQL_BIGRAM_LOGPROB = _with(
+    toks=rf"""
         SELECT doc_id,
-               list_transform(
-                   CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN CAST([] AS VARCHAR[])
-                        ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END,
-                   x -> lower(x)) AS t
+               {_LTOKENS} AS t
         FROM documents
-    ),
-    bi AS (
+    """,
+    bi="""
         SELECT doc_id, t[i] AS w1, t[i+1] AS w2
         FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS u(i)
         WHERE len(t) >= 2
-    ),
-    cb AS (SELECT w1, w2, count(*) AS cb FROM bi GROUP BY w1, w2),
-    cu AS (SELECT w1, count(*) AS cu FROM bi GROUP BY w1),
-    v AS (
+    """,
+    cb="SELECT w1, w2, count(*) AS cb FROM bi GROUP BY w1, w2",
+    cu="SELECT w1, count(*) AS cu FROM bi GROUP BY w1",
+    v="""
         SELECT count(DISTINCT tok) AS v
         FROM (SELECT unnest(t) AS tok FROM toks)
-    ),
-    scored AS (
+    """,
+    scored="""
         SELECT bi.doc_id,
                ln((cb.cb + 0.5) / (cu.cu + 0.5 * v.v)) AS lp
         FROM bi JOIN cb USING (w1, w2) JOIN cu USING (w1) CROSS JOIN v
-    ),
-    agg AS (
+    """,
+    agg="""
         SELECT doc_id, count(*) AS n_bigrams, round(avg(lp), 4) AS avg_ll
         FROM scored GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT d.doc_id, coalesce(a.n_bigrams, 0) AS n_bigrams,
            coalesce(a.avg_ll, 0.0) AS avg_ll
     FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-"""
+""")
 
 
 def q_perplexity_filter(spark, sf_dir):
@@ -2766,48 +2823,46 @@ def q_perplexity_filter(spark, sf_dir):
     return perplexity_bands(docs, "text", "doc_id", "lang", alpha=0.5)
 
 
-SQL_PERPLEXITY_FILTER = r"""
-    WITH toks AS (
+SQL_PERPLEXITY_FILTER = _with(
+    toks=rf"""
         SELECT doc_id,
-               list_transform(
-                   CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN CAST([] AS VARCHAR[])
-                        ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END,
-                   x -> lower(x)) AS t
+               {_LTOKENS} AS t
         FROM documents
-    ),
-    bi AS (
+    """,
+    bi="""
         SELECT doc_id, t[i] AS w1, t[i+1] AS w2
         FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS u(i)
         WHERE len(t) >= 2
-    ),
-    cb AS (SELECT w1, w2, count(*) AS cb FROM bi GROUP BY w1, w2),
-    cu AS (SELECT w1, count(*) AS cu FROM bi GROUP BY w1),
-    v AS (
+    """,
+    cb="SELECT w1, w2, count(*) AS cb FROM bi GROUP BY w1, w2",
+    cu="SELECT w1, count(*) AS cu FROM bi GROUP BY w1",
+    v="""
         SELECT count(DISTINCT tok) AS v
         FROM (SELECT unnest(t) AS tok FROM toks)
-    ),
-    scored AS (
+    """,
+    scored="""
         SELECT bi.doc_id,
                ln((cb.cb + 0.5) / (cu.cu + 0.5 * v.v)) AS lp
         FROM bi JOIN cb USING (w1, w2) JOIN cu USING (w1) CROSS JOIN v
-    ),
-    agg AS (
+    """,
+    agg="""
         SELECT doc_id, count(*) AS n_bigrams, round(avg(lp), 4) AS avg_ll
         FROM scored GROUP BY doc_id
-    ),
-    sc AS (
+    """,
+    sc="""
         SELECT d.doc_id, d.lang,
                coalesce(a.n_bigrams, 0)::BIGINT AS n_bigrams,
                coalesce(a.avg_ll, 0.0) AS avg_ll,
                floor(coalesce(a.avg_ll, 0.0) * 10000 + 0.5)::BIGINT AS llq
         FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-    ),
-    nt AS (
+    """,
+    nt="""
         SELECT doc_id,
                ntile(3) OVER (PARTITION BY lang
                               ORDER BY llq DESC, doc_id) AS b
         FROM sc WHERE n_bigrams > 0
-    )
+    """,
+    select="""
     SELECT sc.doc_id, sc.lang, sc.n_bigrams, sc.avg_ll,
            CASE WHEN sc.n_bigrams = 0 THEN 'empty'
                 WHEN nt.b = 1 THEN 'head'
@@ -2816,7 +2871,7 @@ SQL_PERPLEXITY_FILTER = r"""
            CASE WHEN sc.n_bigrams = 0 THEN FALSE
                 ELSE nt.b <= 2 END AS kept
     FROM sc LEFT JOIN nt ON sc.doc_id = nt.doc_id
-"""
+""")
 
 
 def q_fim_split(spark, sf_dir):
@@ -2830,13 +2885,13 @@ def q_fim_split(spark, sf_dir):
     return fim_splits(docs, "text", "doc_id", seed="r7f")
 
 
-SQL_FIM_SPLIT = r"""
-    WITH base AS (
+SQL_FIM_SPLIT = _with(
+    base="""
         SELECT doc_id, coalesce(text, '') AS s,
                length(coalesce(text, ''))::BIGINT AS n
         FROM documents
-    ),
-    cuts AS (
+    """,
+    cuts="""
         SELECT doc_id, s, n,
                CASE WHEN n > 0 THEN
                     CAST('0x' || substr(md5('r7f|1|'
@@ -2847,12 +2902,13 @@ SQL_FIM_SPLIT = r"""
                          || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % n
                     ELSE 0 END AS h2
         FROM base
-    ),
-    spans AS (
+    """,
+    spans="""
         SELECT doc_id, s, n,
                least(h1, h2) AS lo, greatest(h1, h2) AS hi
         FROM cuts
-    )
+    """,
+    select="""
     SELECT doc_id, n AS n_chars,
            lo AS n_prefix, (hi - lo) AS n_middle, (n - hi) AS n_suffix,
            md5(substr(s, 1, lo::INTEGER) || chr(31)
@@ -2860,7 +2916,7 @@ SQL_FIM_SPLIT = r"""
                || substr(s, (hi + 1)::INTEGER, (n - hi)::INTEGER))
                AS fim_digest
     FROM spans
-"""
+""")
 
 
 def q_budget_by_source(spark, sf_dir):
@@ -2890,62 +2946,42 @@ def q_budget_by_source(spark, sf_dir):
     return out.select("doc_id", "source", "quality_bp", "ntok", "selected")
 
 
-SQL_BUDGET_BY_SOURCE = r"""
-    WITH RECURSIVE toks AS (
-        SELECT doc_id, source, text,
-               CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    stats AS (
-        SELECT doc_id, source,
-               len(t)::BIGINT AS ntok,
-               len(t)::DOUBLE AS ntokd,
-               greatest(length(text)::DOUBLE, 1.0) AS nchar,
-               (length(text) - length(regexp_replace(text,
-                   '[.,;:!?''"()\[\]{}-]', '', 'g')))::DOUBLE AS npunct,
-               len(list_filter(t, x -> list_contains(
-                   ['the','a','an','of','to','in','and','is','on','for'],
-                   lower(x))))::DOUBLE AS nstop
-        FROM toks
-    ),
-    d AS (
-        SELECT doc_id, source, ntok,
-               coalesce(CAST(floor((least(ntokd / 100.0, 1.0) * 0.5
-                     + (1.0 - npunct / nchar) * 0.3
-                     + least((nstop / greatest(ntokd, 1.0)) * 5.0, 1.0) * 0.2)
-                     * 10000.0 + 0.5) AS BIGINT), 0) AS quality_bp
-        FROM stats
-    ),
-    per AS (SELECT source, sum(ntok)::BIGINT AS n_tokens FROM d GROUP BY source),
-    tot AS (SELECT sum(n_tokens)::DOUBLE AS tot FROM per),
-    r AS (
-        SELECT source, n_tokens,
-               CASE WHEN tot > 0 THEN n_tokens / tot ELSE 0.0 END AS raw
-        FROM per, tot
-    ),
-    z AS (SELECT sum(CAST(floor(pow(raw, 0.7) * 1000000000.0 + 0.5)
+# mix_temperature (tau 0.7) over per (source, n_tokens, ...): each
+# source's token share raw (0 when the corpus has no tokens) and the
+# normalizer z of raw^0.7, nano-quantized so the integer sum is
+# aggregation-order-free (as in pipelines/split.mix_temperature).
+_TEMPERATURE = {
+    "tot": "SELECT sum(n_tokens)::DOUBLE AS tot FROM per",
+    "r": "SELECT per.*, CASE WHEN tot > 0 THEN n_tokens / tot ELSE 0.0 END AS raw FROM per, tot",
+    "z": """SELECT sum(CAST(floor(pow(raw, 0.7) * 1000000000.0 + 0.5)
                           AS BIGINT))::DOUBLE / 1000000000.0 AS z
-          FROM r),
-    bud AS (
-        SELECT source,
-               (20000 * CAST(floor(CASE WHEN z > 0 THEN pow(raw, 0.7) / z
-                                        ELSE 0.0 END * 10000.0 + 0.5)
-                             AS BIGINT)) // 10000 AS budget
-        FROM r, z
-    ),
-    hist AS (
+          FROM r""",
+}
+
+
+# budget_by_source's per-doc frame: token count and quality_bp.
+_BUDGET_DOCS = {
+    "d": f"""
+        SELECT doc_id, source, len(t)::BIGINT AS ntok,
+               coalesce({_QUALITY_BP}, 0) AS quality_bp
+        FROM ({_toks("doc_id", "source", "text")})
+    """,
+}
+# budget_by_source's selection walk over d and each source's budget
+# (bud): admit whole quality_bp levels while they fit, then walk the
+# boundary level's docs by id (rec). Needs recursive=("rec",).
+_BUDGET_WALK = {
+    "hist": """
         SELECT source, quality_bp, sum(ntok) AS btok
         FROM d GROUP BY source, quality_bp
-    ),
-    csum AS (
+    """,
+    "csum": """
         SELECT source, quality_bp, btok,
                sum(btok) OVER (PARTITION BY source
                                ORDER BY quality_bp DESC) AS cum
         FROM hist
-    ),
-    cut AS (
+    """,
+    "cut": """
         SELECT csum.source, quality_bp AS cutoff,
                b.budget - (cum - btok) AS remaining
         FROM csum JOIN bud b
@@ -2953,16 +2989,16 @@ SQL_BUDGET_BY_SOURCE = r"""
         WHERE cum > b.budget
         QUALIFY row_number() OVER (PARTITION BY csum.source
                                    ORDER BY quality_bp DESC) = 1
-    ),
-    bnd AS (
+    """,
+    "bnd": """
         SELECT d.source, d.doc_id, d.ntok,
                row_number() OVER (PARTITION BY d.source
                                   ORDER BY d.doc_id) AS rn
         FROM d JOIN cut c ON d.source IS NOT DISTINCT FROM c.source
                           AND d.quality_bp = c.cutoff
         WHERE d.ntok > 0
-    ),
-    rec AS (
+    """,
+    "rec": """
         SELECT b.source, b.rn, b.doc_id, b.ntok,
                b.ntok <= c.remaining AS admit,
                CASE WHEN b.ntok <= c.remaining THEN c.remaining - b.ntok
@@ -2976,7 +3012,9 @@ SQL_BUDGET_BY_SOURCE = r"""
                CASE WHEN b.ntok <= r.rem THEN r.rem - b.ntok ELSE r.rem END
         FROM rec r JOIN bnd b
           ON b.source IS NOT DISTINCT FROM r.source AND b.rn = r.rn + 1
-    )
+    """,
+}
+_BUDGET_SELECT = """
     SELECT d.doc_id, d.source, d.quality_bp, d.ntok,
            CASE WHEN c.cutoff IS NULL THEN TRUE
                 WHEN d.quality_bp > c.cutoff THEN TRUE
@@ -2988,6 +3026,21 @@ SQL_BUDGET_BY_SOURCE = r"""
                 ELSE FALSE END AS selected
     FROM d LEFT JOIN cut c ON d.source IS NOT DISTINCT FROM c.source
 """
+
+SQL_BUDGET_BY_SOURCE = _with(
+    **_BUDGET_DOCS,
+    per="SELECT source, sum(ntok)::BIGINT AS n_tokens FROM d GROUP BY source",
+    **_TEMPERATURE,
+    bud="""
+        SELECT source,
+               (20000 * CAST(floor(CASE WHEN z > 0 THEN pow(raw, 0.7) / z
+                                        ELSE 0.0 END * 10000.0 + 0.5)
+                             AS BIGINT)) // 10000 AS budget
+        FROM r, z
+    """,
+    **_BUDGET_WALK,
+    recursive=("rec",),
+    select=_BUDGET_SELECT)
 
 
 def q_unimax_alloc(spark, sf_dir):
@@ -3005,21 +3058,16 @@ def q_unimax_alloc(spark, sf_dir):
     return unimax_alloc(docs, budget_bp_of_total=18000, max_epochs=2)
 
 
-SQL_UNIMAX_ALLOC = r"""
-    WITH RECURSIVE toks AS (
-        SELECT source, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    src AS (SELECT source, sum(len(t))::BIGINT AS c FROM toks GROUP BY source),
-    tot AS (SELECT sum(c)::BIGINT AS t, count(*)::BIGINT AS n FROM src),
-    ranked AS (
+SQL_UNIMAX_ALLOC = _with(
+    toks=_toks("source"),
+    src="SELECT source, sum(len(t))::BIGINT AS c FROM toks GROUP BY source",
+    tot="SELECT sum(c)::BIGINT AS t, count(*)::BIGINT AS n FROM src",
+    ranked="""
         SELECT source, c, (2 * c)::BIGINT AS cap,
                row_number() OVER (ORDER BY 2 * c, source)::BIGINT AS rk
         FROM src
-    ),
-    fill AS (
+    """,
+    fill="""
         SELECT 0::BIGINT AS rk,
                ((SELECT t FROM tot) * 18000 // 10000)::BIGINT AS rem,
                NULL::VARCHAR AS source, NULL::BIGINT AS c,
@@ -3030,13 +3078,15 @@ SQL_UNIMAX_ALLOC = r"""
                r.source, r.c, r.cap,
                least(r.cap, f.rem // ((SELECT n FROM tot) - r.rk + 1))
         FROM fill f JOIN ranked r ON r.rk = f.rk + 1
-    )
+    """,
+    recursive=("fill",),
+    select="""
     SELECT source, c AS c_tokens, cap AS cap_tokens, alloc AS alloc_tokens,
            (alloc = cap) AS capped,
            CASE WHEN c > 0 THEN alloc * 10000 // c ELSE 0 END::BIGINT
                AS epochs_bp
     FROM fill WHERE rk >= 1
-"""
+""")
 
 
 def q_triplet_mining(spark, sf_dir):
@@ -3052,36 +3102,37 @@ def q_triplet_mining(spark, sf_dir):
     return triplet_mining(qs, store)
 
 
-SQL_TRIPLET_MINING = """
-    WITH v AS (
+SQL_TRIPLET_MINING = _with(
+    v="""
         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
         FROM embeddings WHERE label IS NOT NULL
-    ),
-    q AS (SELECT vec_id AS qid, label AS qlab, e AS qv
+    """,
+    q="""SELECT vec_id AS qid, label AS qlab, e AS qv
           FROM v WHERE vec_id < 10
-            AND list_dot_product(e, e) > 0),
-    s AS (SELECT vec_id, label, e FROM v WHERE vec_id >= 10
-            AND list_dot_product(e, e) > 0),
-    raw AS (
+            AND list_dot_product(e, e) > 0""",
+    s="""SELECT vec_id, label, e FROM v WHERE vec_id >= 10
+            AND list_dot_product(e, e) > 0""",
+    raw="""
         SELECT qid, s.label = q.qlab AS same, s.vec_id AS sid,
                list_dot_product(s.e, q.qv)
                / (sqrt(list_dot_product(s.e, s.e))
                   * sqrt(list_dot_product(q.qv, q.qv))) AS c
         FROM s CROSS JOIN q
-    ),
-    scored AS (
+    """,
+    scored="""
         SELECT qid, same, sid,
                CAST(CASE WHEN c >= 0 THEN floor(abs(c) * 10000 + 0.5)
                          ELSE -floor(abs(c) * 10000 + 0.5) END
                     AS BIGINT) AS bp
         FROM raw
-    ),
-    best AS (
+    """,
+    best="""
         SELECT qid, same, bp, sid
         FROM scored
         QUALIFY row_number() OVER (PARTITION BY qid, same
                                    ORDER BY bp DESC, sid) = 1
-    )
+    """,
+    select="""
     SELECT q.qid,
            p.sid AS pos_id, coalesce(p.bp, 0) AS pos_bp,
            n.sid AS neg_id, coalesce(n.bp, 0) AS neg_bp,
@@ -3089,7 +3140,7 @@ SQL_TRIPLET_MINING = """
     FROM (SELECT qid FROM q) q
     LEFT JOIN best p ON p.qid = q.qid AND p.same
     LEFT JOIN best n ON n.qid = q.qid AND NOT n.same
-"""
+""")
 
 
 def q_snapshot_diff(spark, sf_dir):
@@ -3118,14 +3169,9 @@ def q_snapshot_diff(spark, sf_dir):
     return snapshot_diff(docs, survivors.unionByName(fresh))
 
 
-SQL_SNAPSHOT_DIFF = r"""
-    WITH old AS (
-        SELECT doc_id,
-               md5(regexp_replace(lower(trim(coalesce(text, ''))),
-                                  '\s+', ' ', 'g')) AS old_md5
-        FROM documents
-    ),
-    newsnap AS (
+SQL_SNAPSHOT_DIFF = _with(
+    old=f"""SELECT doc_id, {_norm_key("coalesce(text, '')")} AS old_md5 FROM documents""",
+    newsnap="""
         SELECT doc_id,
                CASE WHEN doc_id % 7 = 0 THEN text || ' rev2'
                     ELSE text END AS text
@@ -3134,13 +3180,9 @@ SQL_SNAPSHOT_DIFF = r"""
         SELECT doc_id + 100000 AS doc_id,
                'new doc ' || CAST(doc_id AS VARCHAR) AS text
         FROM documents WHERE doc_id % 11 = 0
-    ),
-    n AS (
-        SELECT doc_id,
-               md5(regexp_replace(lower(trim(coalesce(text, ''))),
-                                  '\s+', ' ', 'g')) AS new_md5
-        FROM newsnap
-    )
+    """,
+    n=f"""SELECT doc_id, {_norm_key("coalesce(text, '')")} AS new_md5 FROM newsnap""",
+    select="""
     SELECT coalesce(old.doc_id, n.doc_id) AS doc_id,
            CASE WHEN old.doc_id IS NULL THEN 'added'
                 WHEN n.doc_id IS NULL THEN 'removed'
@@ -3148,7 +3190,7 @@ SQL_SNAPSHOT_DIFF = r"""
                 ELSE 'changed' END AS status,
            old_md5, new_md5
     FROM old FULL OUTER JOIN n ON old.doc_id = n.doc_id
-"""
+""")
 
 
 def q_dataset_diff(spark, sf_dir):
@@ -3157,11 +3199,9 @@ def q_dataset_diff(spark, sf_dir):
     curate train split; new run = deterministic perturbation (every
     13th doc dropped, every 7th rewritten, a short 'new doc' per 11th
     id — short enough to die at the gate, so added rows land in
-    stage 0). Oracle replays the curate CTE chain TWICE (o_/n_
-    prefixed, re-rooted at each snapshot CTE) — built from
-    SQL_CURATE_PIPELINE by string surgery with import-time asserts,
-    so the funnel stages can never drift from curate_pipeline/
-    filter_track."""
+    stage 0). The oracle replays the curate funnel fragment
+    (_curate_funnel) TWICE, o_/n_ prefixed and rooted at each
+    snapshot CTE: the same stages as curate_pipeline/filter_track."""
     from webloghunter_spark.pipelines.curate import dataset_diff
 
     docs = _fan(_t(spark, sf_dir, "documents"))
@@ -3211,27 +3251,14 @@ def q_epoch_order(spark, sf_dir):
                        n_shards=8, seed="r7e")
 
 
-SQL_EPOCH_ORDER = r"""
-    WITH toks AS (
-        SELECT doc_id, source, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    per AS (
+SQL_EPOCH_ORDER = _with(
+    toks=_toks("doc_id", "source"),
+    per="""
         SELECT source, sum(len(t))::BIGINT AS n_tokens
         FROM toks GROUP BY source
-    ),
-    tot AS (SELECT sum(n_tokens)::DOUBLE AS tot FROM per),
-    r AS (
-        SELECT source, n_tokens,
-               CASE WHEN tot > 0 THEN n_tokens / tot ELSE 0.0 END AS raw
-        FROM per, tot
-    ),
-    z AS (SELECT sum(CAST(floor(pow(raw, 0.7) * 1000000000.0 + 0.5)
-                          AS BIGINT))::DOUBLE / 1000000000.0 AS z
-          FROM r),
-    plan AS (
+    """,
+    **_TEMPERATURE,
+    plan="""
         SELECT source,
                CAST(least(4, greatest(1,
                     (CASE WHEN n_tokens > 0
@@ -3242,31 +3269,32 @@ SQL_EPOCH_ORDER = r"""
                           ELSE 0 END + 9999) // 10000))
                     AS INTEGER) AS n_epochs
         FROM r, z
-    ),
-    up AS (
+    """,
+    up="""
         SELECT d.doc_id, d.source, u.epoch::INTEGER AS epoch
         FROM documents d
         JOIN plan p ON d.source IS NOT DISTINCT FROM p.source,
         UNNEST(generate_series(0, p.n_epochs - 1)) AS u(epoch)
-    ),
-    keyed AS (
+    """,
+    keyed="""
         SELECT epoch, doc_id, source,
                md5('r7e|' || CAST(epoch AS VARCHAR) || '|'
                    || CAST(doc_id AS VARCHAR)) AS h
         FROM up
-    ),
-    a AS (
+    """,
+    a="""
         SELECT epoch, doc_id, source, h,
                CAST(CAST('0x' || substr(h, 1, 8) AS BIGINT) % 8
                     AS INTEGER) AS shard_id
         FROM keyed
-    )
+    """,
+    select="""
     SELECT epoch, shard_id,
            (row_number() OVER (PARTITION BY epoch, shard_id
                                ORDER BY h, doc_id) - 1)::BIGINT AS position,
            doc_id, source
     FROM a
-"""
+""")
 
 
 def q_span_corruption(spark, sf_dir):
@@ -3280,15 +3308,10 @@ def q_span_corruption(spark, sf_dir):
                                 rate_bp=1500)
 
 
-SQL_SPAN_CORRUPTION = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    base AS (SELECT doc_id, t, len(t)::BIGINT AS n FROM toks),
-    f AS (
+SQL_SPAN_CORRUPTION = _with(
+    toks=_toks("doc_id"),
+    base="SELECT doc_id, t, len(t)::BIGINT AS n FROM toks",
+    f="""
         SELECT doc_id, t, n,
                list_transform(generate_series(1, n::INTEGER), i ->
                    CAST('0x' || substr(md5('r7t5|'
@@ -3296,7 +3319,8 @@ SQL_SPAN_CORRUPTION = r"""
                         || CAST(i AS VARCHAR)), 1, 8) AS BIGINT)
                    % 10000 < 1500) AS flags
         FROM base
-    )
+    """,
+    select="""
     SELECT doc_id, n AS ntok,
            coalesce(len(list_filter(flags, x -> x)), 0)::BIGINT
                AS n_corrupted,
@@ -3312,7 +3336,7 @@ SQL_SPAN_CORRUPTION = r"""
                i -> CASE WHEN flags[i] THEN '<X>' ELSE t[i] END), ' '))
                AS masked_digest
     FROM f
-"""
+""")
 
 
 def q_readability(spark, sf_dir):
@@ -3333,19 +3357,17 @@ def q_readability(spark, sf_dir):
     )
 
 
-SQL_READABILITY = r"""
-    WITH s AS (
+SQL_READABILITY = _with(
+    s=rf"""
         SELECT doc_id,
-               len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-                   END)::BIGINT AS ntok,
+               len({_TOKENS})::BIGINT AS ntok,
                greatest(len(regexp_extract_all(coalesce(text, ''),
                                                '[.!?]+')), 1)::BIGINT AS n_sent,
-               len(regexp_extract_all(lower(coalesce(text, '')),
+               len(regexp_extract_all({_lower("coalesce(text, '')")},
                                       '[aeiouy]+'))::BIGINT AS n_syll
         FROM documents
-    )
+    """,
+    select="""
     SELECT doc_id, ntok, n_sent, n_syll,
            CASE WHEN ntok > 0
                 THEN CAST(floor((206.835
@@ -3354,7 +3376,7 @@ SQL_READABILITY = r"""
                                 * 100 + 0.5) AS BIGINT)
                 ELSE 0 END AS flesch_centi
     FROM s
-"""
+""")
 
 
 def q_pmi_collocations(spark, sf_dir):
@@ -3368,27 +3390,25 @@ def q_pmi_collocations(spark, sf_dir):
     return pmi_collocations(docs, "text", "doc_id", min_count=5, k=100)
 
 
-SQL_PMI_COLLOCATIONS = r"""
-    WITH toks AS (
+SQL_PMI_COLLOCATIONS = _with(
+    toks=rf"""
         SELECT doc_id,
-               list_transform(
-                   CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN CAST([] AS VARCHAR[])
-                        ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END,
-                   x -> lower(x)) AS t
+               {_LTOKENS} AS t
         FROM documents
-    ),
-    bi AS (
+    """,
+    bi="""
         SELECT t[i] AS w1, t[i+1] AS w2
         FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS u(i)
         WHERE len(t) >= 2
-    ),
-    cb AS (
+    """,
+    cb="""
         SELECT w1, w2, count(*)::BIGINT AS n_pair
         FROM bi GROUP BY w1, w2 HAVING count(*) >= 5
-    ),
-    c1 AS (SELECT w1, count(*)::BIGINT AS c1 FROM bi GROUP BY w1),
-    c2 AS (SELECT w2, count(*)::BIGINT AS c2 FROM bi GROUP BY w2),
-    n AS (SELECT count(*)::DOUBLE AS n FROM bi)
+    """,
+    c1="SELECT w1, count(*)::BIGINT AS c1 FROM bi GROUP BY w1",
+    c2="SELECT w2, count(*)::BIGINT AS c2 FROM bi GROUP BY w2",
+    n="SELECT count(*)::DOUBLE AS n FROM bi",
+    select="""
     SELECT cb.w1, cb.w2, cb.n_pair,
            CAST(floor(ln((cb.n_pair::DOUBLE * n.n)
                          / (c1.c1::DOUBLE * c2.c2::DOUBLE))
@@ -3396,7 +3416,7 @@ SQL_PMI_COLLOCATIONS = r"""
     FROM cb JOIN c1 USING (w1) JOIN c2 USING (w2), n
     ORDER BY pmi_micro DESC, cb.w1, cb.w2
     LIMIT 100
-"""
+""")
 
 
 def q_quality_gate(spark, sf_dir):
@@ -3413,51 +3433,29 @@ def q_quality_gate(spark, sf_dir):
     )
 
 
-SQL_QUALITY_GATE = r"""
-    WITH toks AS (
-        SELECT doc_id, text, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    base AS (
-        SELECT doc_id,
-               coalesce(len(t), 0)::BIGINT AS ntok,
-               greatest(coalesce(length(text), 0), 1)::BIGINT AS nc,
-               coalesce(length(text) - length(regexp_replace(
-                   text, '[^\x09\x0A\x0D\x20-\x7E]', '', 'g')), 0)::BIGINT
-                   AS npr,
-               coalesce(CAST(floor((least(len(t)::DOUBLE / 100.0, 1.0) * 0.5
-                   + (1.0 - (length(text) - length(regexp_replace(text,
-                       '[.,;:!?''"()\[\]{}-]', '', 'g')))::DOUBLE
-                       / greatest(length(text)::DOUBLE, 1.0)) * 0.3
-                   + least((len(list_filter(t, x -> list_contains(
-                       ['the','a','an','of','to','in','and','is','on','for'],
-                       lower(x))))::DOUBLE
-                       / greatest(len(t)::DOUBLE, 1.0)) * 5.0, 1.0) * 0.2)
-                   * 10000.0 + 0.5) AS BIGINT), 0) AS qbp
-        FROM toks
-    ),
-    lt AS (SELECT doc_id, list_transform(t, x -> lower(x)) AS t FROM toks),
-    bi AS (
+SQL_QUALITY_GATE = _with(
+    toks=_toks("doc_id", "text"),
+    base=_gate(),
+    lt=f"SELECT doc_id, list_transform(t, x -> {_lower('x')}) AS t FROM toks",
+    bi="""
         SELECT doc_id, t[i] AS w1, t[i+1] AS w2
         FROM lt, UNNEST(generate_series(1, len(t) - 1)) AS u(i)
         WHERE len(t) >= 2
-    ),
-    cb AS (SELECT w1, w2, count(*) AS cb FROM bi GROUP BY w1, w2),
-    cu AS (SELECT w1, count(*) AS cu FROM bi GROUP BY w1),
-    v AS (
+    """,
+    cb="SELECT w1, w2, count(*) AS cb FROM bi GROUP BY w1, w2",
+    cu="SELECT w1, count(*) AS cu FROM bi GROUP BY w1",
+    v="""
         SELECT count(DISTINCT tok) AS v
         FROM (SELECT unnest(t) AS tok FROM lt)
-    ),
-    scored AS (
+    """,
+    scored="""
         SELECT bi.doc_id, ln((cb.cb + 0.5) / (cu.cu + 0.5 * v.v)) AS lp
         FROM bi JOIN cb USING (w1, w2) JOIN cu USING (w1) CROSS JOIN v
-    ),
-    agg AS (
+    """,
+    agg="""
         SELECT doc_id, round(avg(lp), 4) AS avg_ll FROM scored GROUP BY doc_id
-    ),
-    gated AS (
+    """,
+    gated="""
         SELECT b.doc_id,
                CASE WHEN b.ntok < 30 THEN 'too_short'
                     WHEN b.ntok > 5000 THEN 'too_long'
@@ -3466,9 +3464,10 @@ SQL_QUALITY_GATE = r"""
                     WHEN a.avg_ll IS NULL OR a.avg_ll < -8.0 THEN 'low_lm'
                     ELSE '' END AS reason
         FROM base b LEFT JOIN agg a ON b.doc_id = a.doc_id
-    )
+    """,
+    select="""
     SELECT doc_id, reason = '' AS keep, reason FROM gated
-"""
+""")
 
 
 def q_novelty_frac(spark, sf_dir):
@@ -3481,28 +3480,25 @@ def q_novelty_frac(spark, sf_dir):
     return novelty_frac(docs, "text", "doc_id", k=3)
 
 
-SQL_NOVELTY_FRAC = f"""
-    WITH {DOC_TOKENS_SQL},
-    -- 60-bit hashed grams mirroring Spark's hashed_shingles_expr
-    -- (round-13): both engines hash identically, so the first-id
-    -- and novelty counts stay exact even under a collision
-    d AS (SELECT doc_id,
-                 list_distinct(list_transform(list_distinct(s),
-                     x -> CAST(('0x' || substr(md5(x), 1, 15))
-                          AS BIGINT))) AS s
-          FROM shingles),
-    grams AS (SELECT doc_id, unnest(s) AS g FROM d),
-    first AS (SELECT g, min(doc_id) AS first_id FROM grams GROUP BY g),
-    per AS (
+SQL_NOVELTY_FRAC = _with(
+    **_DOC_SHINGLES,
+    # 60-bit hashed grams mirroring Spark's hashed_shingles_expr
+    # (round-13): both engines hash identically, so the first-id
+    # and novelty counts stay exact even under a collision
+    d=f"SELECT doc_id, {_HASHED_SH} AS s FROM shingles",
+    grams="SELECT doc_id, unnest(s) AS g FROM d",
+    first="SELECT g, min(doc_id) AS first_id FROM grams GROUP BY g",
+    per="""
         SELECT doc_id, count(*) AS n_grams,
                CAST(sum(CASE WHEN first_id = doc_id THEN 1 ELSE 0 END)
                     AS BIGINT) AS n_novel
         FROM grams JOIN first USING (g) GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT d2.doc_id, coalesce(per.n_grams, 0) AS n_grams,
            coalesce(per.n_novel, 0) AS n_novel
     FROM documents d2 LEFT JOIN per ON d2.doc_id = per.doc_id
-"""
+""")
 
 
 def q_source_overlap(spark, sf_dir):
@@ -3514,21 +3510,11 @@ def q_source_overlap(spark, sf_dir):
     return source_overlap(docs, "text", "source", k=3)
 
 
-SQL_SOURCE_OVERLAP = r"""
-    WITH toks AS (
-        SELECT source, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT source, CASE WHEN len(t) < 3 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 2),
-                                   i -> array_to_string(t[i:i+2], ' ')) END AS s
-        FROM toks
-    ),
-    -- hashed gram key (SQL_NOVELTY_FRAC's note)
-    sg AS (
+SQL_SOURCE_OVERLAP = _with(
+    toks=_toks("source"),
+    sh=_shingles(3, "source"),
+    # hashed gram key (SQL_NOVELTY_FRAC's note)
+    sg="""
         SELECT DISTINCT src, g FROM (
             SELECT source AS src,
                    unnest(list_transform(s,
@@ -3536,18 +3522,19 @@ SQL_SOURCE_OVERLAP = r"""
                             AS BIGINT))) AS g
             FROM sh
         )
-    ),
-    sizes AS (SELECT src, count(*) AS n FROM sg GROUP BY src),
-    common AS (
+    """,
+    sizes="SELECT src, count(*) AS n FROM sg GROUP BY src",
+    common="""
         SELECT a.src AS src_a, b.src AS src_b, count(*) AS n_common
         FROM sg a JOIN sg b ON a.g = b.g AND a.src < b.src
         GROUP BY a.src, b.src
-    )
+    """,
+    select="""
     SELECT na.src AS src_a, nb.src AS src_b, na.n AS n_a, nb.n AS n_b,
            coalesce(c.n_common, 0) AS n_common
     FROM sizes na JOIN sizes nb ON na.src < nb.src
     LEFT JOIN common c ON c.src_a = na.src AND c.src_b = nb.src
-"""
+""")
 
 
 def q_token_entropy(spark, sf_dir):
@@ -3563,30 +3550,25 @@ def q_token_entropy(spark, sf_dir):
     return out.withColumn("entropy", F.coalesce("entropy", F.lit(-1.0)))
 
 
-SQL_TOKEN_ENTROPY = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(string_split_regex(trim(coalesce(text, '')), '\s+'),
-                                   x -> lower(x)) END AS t
-        FROM documents
-    ),
-    flat AS (SELECT doc_id, unnest(t) AS tok FROM toks),
-    tf AS (SELECT doc_id, tok, count(*) AS c FROM flat GROUP BY doc_id, tok),
-    agg AS (
+SQL_TOKEN_ENTROPY = _with(
+    toks=_toks("doc_id", lower=True),
+    flat="SELECT doc_id, unnest(t) AS tok FROM toks",
+    tf="SELECT doc_id, tok, count(*) AS c FROM flat GROUP BY doc_id, tok",
+    agg="""
         SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
                sum(c::DOUBLE * ln(c::DOUBLE)) AS cl
         FROM tf GROUP BY doc_id
-    ),
-    ent AS (
+    """,
+    ent="""
         SELECT doc_id, n AS ntok,
                round(ln(n::DOUBLE) - cl / n::DOUBLE, 4) AS entropy
         FROM agg
-    )
+    """,
+    select="""
     SELECT d.doc_id, coalesce(e.ntok, 0) AS ntok,
            coalesce(e.entropy, -1.0) AS entropy
     FROM documents d LEFT JOIN ent e ON d.doc_id = e.doc_id
-"""
+""")
 
 
 def q_vocab_topk(spark, sf_dir):
@@ -3598,18 +3580,15 @@ def q_vocab_topk(spark, sf_dir):
     return vocab_topk(docs, "text", k=100)
 
 
-SQL_VOCAB_TOPK = r"""
-    WITH toks AS (
-        SELECT CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(lower(trim(text)), '\s+') END AS t
-        FROM documents
-    ),
-    flat AS (SELECT unnest(t) AS token FROM toks)
+SQL_VOCAB_TOPK = _with(
+    toks=_toks(lower=True),
+    flat="SELECT unnest(t) AS token FROM toks",
+    select="""
     SELECT token, count(*) AS n
     FROM flat GROUP BY token
     ORDER BY n DESC, token
     LIMIT 100
-"""
+""")
 
 
 def q_tfidf_topk(spark, sf_dir):
@@ -3622,27 +3601,24 @@ def q_tfidf_topk(spark, sf_dir):
     return tfidf_topk(docs, "text", "doc_id", k=5)
 
 
-SQL_TFIDF_TOPK = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(lower(trim(text)), '\s+') END AS t
-        FROM documents
-    ),
-    flat AS (SELECT doc_id, unnest(t) AS token FROM toks),
-    tf AS (SELECT doc_id, token, count(*) AS tf FROM flat GROUP BY doc_id, token),
-    dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-    n AS (SELECT count(*) AS n_docs FROM documents),
-    scored AS (
+SQL_TFIDF_TOPK = _with(
+    toks=_toks("doc_id", lower=True),
+    flat="SELECT doc_id, unnest(t) AS token FROM toks",
+    tf="SELECT doc_id, token, count(*) AS tf FROM flat GROUP BY doc_id, token",
+    dfreq="SELECT token, count(*) AS df FROM tf GROUP BY token",
+    n="SELECT count(*) AS n_docs FROM documents",
+    scored="""
         SELECT tf.doc_id, tf.token, tf.tf,
                round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfreq.df), 4) AS tfidf
         FROM tf JOIN dfreq ON tf.token = dfreq.token CROSS JOIN n
-    )
+    """,
+    select="""
     SELECT doc_id, token, tf, tfidf FROM (
         SELECT *, row_number() OVER (
             PARTITION BY doc_id ORDER BY tfidf DESC, token) AS rn
         FROM scored
     ) WHERE rn <= 5
-"""
+""")
 
 
 def q_near_dedup(spark, sf_dir):
@@ -3656,14 +3632,15 @@ def q_near_dedup(spark, sf_dir):
     return out.select("doc_id", "source")
 
 
-SQL_NEAR_DEDUP = f"""
-    WITH jacc AS ({SQL_JACCARD_PAIRS})
+SQL_NEAR_DEDUP = _with(
+    jacc=SQL_JACCARD_PAIRS,
+    select="""
     SELECT d.doc_id, d.source
     FROM documents d
     WHERE d.doc_id NOT IN (
         SELECT id_b FROM jacc WHERE jaccard >= 0.8
     )
-"""
+""")
 
 
 def q_near_dedup_cc(spark, sf_dir):
@@ -3700,31 +3677,34 @@ def q_dup_stats(spark, sf_dir):
 
 # Min reachable id per node: reach(id, r) = "r is reachable from id",
 # grown breadth-first (UNION dedupes, so it terminates); rep = min(r).
-SQL_NEAR_DEDUP_CC = f"""
-    WITH RECURSIVE jacc AS ({SQL_JACCARD_PAIRS}),
-    e2 AS (
+SQL_NEAR_DEDUP_CC = _with(
+    jacc=SQL_JACCARD_PAIRS,
+    e2="""
         SELECT id_a AS src, id_b AS dst FROM jacc WHERE jaccard >= 0.8
         UNION ALL
         SELECT id_b AS src, id_a AS dst FROM jacc WHERE jaccard >= 0.8
-    ),
-    reach AS (
+    """,
+    reach="""
         SELECT doc_id AS id, doc_id AS r FROM documents
         UNION
         SELECT reach.id, e2.dst AS r
         FROM reach JOIN e2 ON e2.src = reach.r
-    )
+    """,
+    recursive=("reach",),
+    select="""
     SELECT id AS doc_id, min(r) AS rep FROM reach GROUP BY id
-"""
+""")
 
 
-SQL_DUP_STATS = f"""
-    WITH cc AS (SELECT * FROM ({SQL_NEAR_DEDUP_CC})),
-    sizes AS (SELECT rep, count(*) AS cluster_size FROM cc GROUP BY rep)
+SQL_DUP_STATS = _with(
+    cc=SQL_NEAR_DEDUP_CC,
+    sizes="SELECT rep, count(*) AS cluster_size FROM cc GROUP BY rep",
+    select="""
     SELECT cluster_size,
            CAST(count(*) AS BIGINT) AS n_clusters,
            CAST(count(*) * cluster_size AS BIGINT) AS n_docs
     FROM sizes GROUP BY cluster_size
-"""
+""")
 
 
 def q_stratified_sample(spark, sf_dir):
@@ -3740,18 +3720,19 @@ def q_stratified_sample(spark, sf_dir):
     return out.select("doc_id", "source")
 
 
-SQL_STRATIFIED_SAMPLE = """
-    WITH b AS (
+SQL_STRATIFIED_SAMPLE = _with(
+    b="""
         SELECT doc_id, source,
                CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'sample'), 1, 8)
                     AS BIGINT) % 10000 AS INTEGER) AS bucket
         FROM documents
-    )
+    """,
+    select="""
     SELECT doc_id, source FROM b
     WHERE CASE WHEN source = 'src0' THEN bucket < 2000
                WHEN source = 'src1' THEN bucket < 5000
                ELSE TRUE END
-"""
+""")
 
 
 def q_quantize_emb(spark, sf_dir):
@@ -3772,14 +3753,15 @@ def q_quantize_emb(spark, sf_dir):
     )
 
 
-SQL_QUANTIZE_EMB = """
-    WITH s AS (
+SQL_QUANTIZE_EMB = _with(
+    s="""
         SELECT vec_id,
                list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127
                    AS raw_scale,
                embedding
         FROM embeddings
-    )
+    """,
+    select="""
     SELECT vec_id,
            round(CASE WHEN raw_scale > 0 THEN raw_scale ELSE 0 END, 4) AS scale,
            array_to_string(
@@ -3792,7 +3774,7 @@ SQL_QUANTIZE_EMB = """
                            -128), 127) AS INTEGER))
                ELSE list_transform(embedding, x -> 0) END, ',') AS codes
     FROM s
-"""
+""")
 
 
 def q_knn_quantized(spark, sf_dir):
@@ -3820,16 +3802,16 @@ def q_knn_quantized(spark, sf_dir):
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(10)
 
 
-SQL_KNN_QUANTIZED = """
-    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-    qz AS (
+SQL_KNN_QUANTIZED = _with(
+    qq="SELECT embedding AS qv FROM embeddings WHERE vec_id = 0",
+    qz="""
         SELECT vec_id,
                list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127
                    AS sc,
                embedding
         FROM embeddings WHERE vec_id <> 0
-    ),
-    deq AS (
+    """,
+    deq="""
         SELECT vec_id,
                list_transform(embedding, x ->
                    CAST(CASE WHEN sc > 0 THEN least(greatest(
@@ -3838,7 +3820,8 @@ SQL_KNN_QUANTIZED = """
                             ELSE -floor(-(CAST(x AS DOUBLE) / sc) + 0.5) END,
                        -128), 127) ELSE 0 END AS DOUBLE) * sc) AS dv
         FROM qz
-    )
+    """,
+    select="""
     SELECT vec_id,
            round(
                list_sum(list_transform(generate_series(1, len(dv)),
@@ -3846,10 +3829,10 @@ SQL_KNN_QUANTIZED = """
                / (sqrt(list_sum(list_transform(dv, x -> x * x)))
                   * sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * x)))),
                4) AS cosine
-    FROM deq, q
+    FROM deq, qq
     ORDER BY cosine DESC, vec_id
     LIMIT 10
-"""
+""")
 
 
 def q_quantize_recall(spark, sf_dir):
@@ -3895,14 +3878,15 @@ def q_quantize_recall(spark, sf_dir):
     )
 
 
-SQL_QUANTIZE_RECALL = f"""
-    WITH brute AS (SELECT vec_id FROM ({SQL_KNN})),
-    approx AS (SELECT vec_id FROM ({SQL_KNN_QUANTIZED}))
+SQL_QUANTIZE_RECALL = _with(
+    brute=SQL_KNN,
+    approx=SQL_KNN_QUANTIZED,
+    select="""
     SELECT CAST(10 AS INTEGER) AS k,
            CAST(count(*) AS BIGINT) AS n_common,
            (count(*) * 10000 // 10)::BIGINT AS recall_bp
     FROM brute JOIN approx USING (vec_id)
-"""
+""")
 
 
 def q_simhash_pairs(spark, sf_dir):
@@ -3928,14 +3912,15 @@ def q_simhash_pairs(spark, sf_dir):
     )
 
 
-SQL_SIMHASH_PAIRS = f"""
-    WITH sim AS ({SQL_SIMHASH})
+SQL_SIMHASH_PAIRS = _with(
+    sim=SQL_SIMHASH,
+    select="""
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            bit_count(xor(a.simhash, b.simhash)) AS hamming
     FROM sim a JOIN sim b ON a.doc_id < b.doc_id
     WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
     QUALIFY row_number() OVER (PARTITION BY id_a ORDER BY hamming, id_b) <= 64
-"""
+""")
 
 
 def q_referrer_hosts(spark, sf_dir):
@@ -3953,14 +3938,15 @@ def q_referrer_hosts(spark, sf_dir):
     )
 
 
-SQL_REFERRER_HOSTS = f"""
-    WITH w AS ({WEBLOG_SQL_BASE})
+SQL_REFERRER_HOSTS = _with(
+    w=WEBLOG_SQL_BASE,
+    select="""
     SELECT regexp_extract(referrer, '^https?://([^/]+)', 1) AS host,
            count(*) AS n
     FROM w
     WHERE regexp_extract(referrer, '^https?://([^/]+)', 1) <> ''
     GROUP BY 1
-"""
+""")
 
 
 def q_funnel(spark, sf_dir):
@@ -3997,34 +3983,35 @@ def q_funnel(spark, sf_dir):
     )
 
 
-SQL_FUNNEL = """
-    WITH e AS (
+SQL_FUNNEL = _with(
+    e="""
         SELECT user_id, event_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS t
         FROM events
-    ),
-    fv AS (
+    """,
+    fv="""
         SELECT user_id, t AS vt, event_id AS v_eid
         FROM (SELECT user_id, t, event_id,
                      row_number() OVER (PARTITION BY user_id
                                         ORDER BY t, event_id) AS rn
               FROM e WHERE event_type = 'view')
         WHERE rn = 1
-    ),
-    conv AS (
+    """,
+    conv="""
         SELECT f.user_id, count(*) AS n
         FROM fv f JOIN e p ON p.user_id = f.user_id
         WHERE p.event_type = 'purchase'
           AND (p.t > f.vt OR (p.t = f.vt AND p.event_id > f.v_eid))
         GROUP BY f.user_id
-    )
+    """,
+    select="""
     SELECT u.user_id,
            (f.user_id IS NOT NULL) AS viewed,
            (f.user_id IS NOT NULL AND coalesce(c.n, 0) > 0) AS converted
     FROM (SELECT DISTINCT user_id FROM e) u
     LEFT JOIN fv f ON u.user_id = f.user_id
     LEFT JOIN conv c ON u.user_id = c.user_id
-"""
+""")
 
 
 def q_pivot_counts(spark, sf_dir):
@@ -4073,14 +4060,15 @@ def q_clean_html(spark, sf_dir):
     return seeded.select("doc_id", clean_html_expr("_h").alias("cleaned"))
 
 
-SQL_CLEAN_HTML = r"""
-    WITH s AS (
+SQL_CLEAN_HTML = _with(
+    s="""
         SELECT doc_id,
                '<html><body class="x"><p>' || text ||
                '</p><script type="text/javascript">var a="<b>";</script>' ||
                '&amp;lt; &lt;kept&gt;&nbsp;&#39;q&#39;</body></html>' AS h
         FROM documents
-    )
+    """,
+    select=rf"""
     SELECT doc_id,
            trim(regexp_replace(
                replace(replace(replace(replace(replace(replace(
@@ -4091,9 +4079,9 @@ SQL_CLEAN_HTML = r"""
                        '(?s)<[^>]+>', ' ', 'g'),
                    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
                    '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-               '\s+', ' ', 'g')) AS cleaned
+               '{_WS}+', ' ', 'g'), ' ') AS cleaned
     FROM s
-"""
+""")
 
 
 def q_mad_outliers(spark, sf_dir):
@@ -4117,23 +4105,24 @@ def q_mad_outliers(spark, sf_dir):
     )
 
 
-SQL_MAD_OUTLIERS = f"""
-    WITH w AS ({WEBLOG_SQL_BASE}),
-    v AS (
+SQL_MAD_OUTLIERS = _with(
+    w=WEBLOG_SQL_BASE,
+    v="""
         SELECT event_id, ip,
                resp_size * CASE WHEN event_id % 97 = 0 THEN 50 ELSE 1 END AS sz
         FROM w
-    ),
-    med AS (SELECT ip, quantile_cont(sz, 0.5) AS med FROM v GROUP BY ip),
-    mad AS (
+    """,
+    med="SELECT ip, quantile_cont(sz, 0.5) AS med FROM v GROUP BY ip",
+    mad="""
         SELECT v.ip, quantile_cont(abs(v.sz - med.med), 0.5) AS mad
         FROM v JOIN med ON v.ip = med.ip GROUP BY v.ip
-    )
+    """,
+    select="""
     SELECT v.event_id, v.ip, v.sz,
            round(med.med, 4) AS med, round(mad.mad, 4) AS mad,
            abs(v.sz - med.med) > 3.0 * mad.mad AS is_outlier
     FROM v JOIN med ON v.ip = med.ip JOIN mad ON v.ip = mad.ip
-"""
+""")
 
 
 def q_pack_chunks(spark, sf_dir):
@@ -4148,20 +4137,19 @@ def q_pack_chunks(spark, sf_dir):
     return out.select("doc_id", "source", "ntok", "first_chunk", "last_chunk", "n_chunks")
 
 
-SQL_PACK_CHUNKS = r"""
-    WITH t AS (
+SQL_PACK_CHUNKS = _with(
+    t=rf"""
         SELECT doc_id, source,
-               len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END)::BIGINT AS ntok
+               len({_TOKENS})::BIGINT AS ntok
         FROM documents
-    ),
-    p AS (
+    """,
+    p="""
         SELECT doc_id, source, ntok,
                sum(ntok) OVER (PARTITION BY source ORDER BY doc_id
                                ROWS UNBOUNDED PRECEDING) - ntok AS prefix
         FROM t
-    )
+    """,
+    select="""
     SELECT doc_id, source, ntok,
            (prefix // 512)::BIGINT AS first_chunk,
            CASE WHEN ntok > 0 THEN ((prefix + ntok - 1) // 512)::BIGINT
@@ -4169,7 +4157,7 @@ SQL_PACK_CHUNKS = r"""
            (CASE WHEN ntok > 0 THEN ((prefix + ntok - 1) // 512)
                  ELSE (prefix // 512) END - (prefix // 512) + 1)::BIGINT AS n_chunks
     FROM p
-"""
+""")
 
 
 def q_rep_signals(spark, sf_dir):
@@ -4202,16 +4190,15 @@ def q_rep_signals(spark, sf_dir):
     )
 
 
-SQL_REP_SIGNALS = r"""
-    WITH s AS (
+SQL_REP_SIGNALS = _with(
+    s=rf"""
         SELECT doc_id, text,
                string_split(regexp_replace(text, ' ', chr(10), 'g'), chr(10)) AS nl,
-               CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN CAST([] AS VARCHAR[])
-                    ELSE list_transform(string_split_regex(trim(coalesce(text, '')), '\s+'),
-                                        x -> lower(x)) END AS lt,
+               {_LTOKENS} AS lt,
                CASE WHEN doc_id % 5 = 0 THEN text || ' ##…#' ELSE text END AS sym
         FROM documents
-    )
+    """,
+    select="""
     SELECT doc_id,
            CAST(floor(CASE WHEN len(nl) > 0 THEN
                     (len(nl) - len(list_distinct(nl)))::DOUBLE / len(nl)
@@ -4225,7 +4212,7 @@ SQL_REP_SIGNALS = r"""
                     / length(sym)
                 ELSE 0 END * 10000.0 + 0.5) AS BIGINT) AS symbol_bp
     FROM s
-"""
+""")
 
 
 def q_corpus_stats(spark, sf_dir):
@@ -4251,20 +4238,19 @@ def q_corpus_stats(spark, sf_dir):
     )
 
 
-SQL_CORPUS_STATS = r"""
-    WITH t AS (
-        SELECT source, len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END)::BIGINT AS ntok
+SQL_CORPUS_STATS = _with(
+    t=rf"""
+        SELECT source, len({_TOKENS})::BIGINT AS ntok
         FROM documents
-    )
+    """,
+    select="""
     SELECT source, count(*) AS n_docs,
            round(quantile_cont(ntok, 0.5), 4) AS p50_tokens,
            round(quantile_cont(ntok, 0.9), 4) AS p90_tokens,
            round(quantile_cont(ntok, 0.99), 4) AS p99_tokens,
            round(avg(ntok), 4) AS mean_tokens
     FROM t GROUP BY source
-"""
+""")
 
 
 def q_pii_redact(spark, sf_dir):
@@ -4292,14 +4278,15 @@ def q_pii_redact(spark, sf_dir):
     )
 
 
-SQL_PII_REDACT = r"""
-    WITH seeded AS (
+SQL_PII_REDACT = _with(
+    seeded="""
         SELECT doc_id,
                text || ' contact user' || CAST(doc_id AS VARCHAR)
                     || '@example.com or +1 555-000-' || CAST(doc_id AS VARCHAR)
                     || '1 at 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7 ' AS text
         FROM documents
-    )
+    """,
+    select=r"""
     SELECT doc_id,
            regexp_replace(regexp_replace(regexp_replace(text,
                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
@@ -4309,7 +4296,7 @@ SQL_PII_REDACT = r"""
            len(regexp_extract_all(text, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS n_ipv4,
            len(regexp_extract_all(text, '\+\d[\d()\- ]{7,}\d')) AS n_phone
     FROM seeded
-"""
+""")
 
 
 def q_decontaminate(spark, sf_dir):
@@ -4328,25 +4315,16 @@ def q_decontaminate(spark, sf_dir):
     return contaminated_docs(train, eval_df, n=4)
 
 
-SQL_DECONTAMINATE = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, CASE WHEN len(t) < 4 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 3),
-                                   i -> array_to_string(t[i:i+3], ' ')) END AS s
-        FROM toks
-    ),
-    ev AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 50 = 0),
-    tr AS (SELECT DISTINCT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 50 != 0)
+SQL_DECONTAMINATE = _with(
+    toks=_toks("doc_id"),
+    sh=_shingles(4, "doc_id"),
+    ev="SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 50 = 0",
+    tr="SELECT DISTINCT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 50 != 0",
+    select="""
     SELECT tr.doc_id, count(*) AS n_hits
     FROM tr JOIN ev USING (g)
     GROUP BY tr.doc_id
-"""
+""")
 
 
 def q_group_split(spark, sf_dir):
@@ -4434,21 +4412,22 @@ def q_interval_join(spark, sf_dir):
     )
 
 
-SQL_INTERVAL_JOIN = """
-    WITH w AS (
+SQL_INTERVAL_JOIN = _with(
+    w="""
         SELECT date_trunc('hour', ts) - INTERVAL 30 MINUTE AS w_start,
                date_trunc('hour', ts) + INTERVAL 90 MINUTE AS w_end
         FROM events WHERE event_type = 'error'
         GROUP BY date_trunc('hour', ts)
         HAVING count(*) >= 2
-    )
+    """,
+    select="""
     SELECT floor(epoch(w.w_start))::BIGINT AS w_start_epoch,
            count(*) AS n_events,
            count(DISTINCT e.user_id) AS n_users
     FROM events e JOIN w
       ON e.ts >= w.w_start AND e.ts < w.w_end
     GROUP BY w.w_start
-"""
+""")
 
 
 def q_weighted_sample(spark, sf_dir):
@@ -4467,9 +4446,9 @@ def q_weighted_sample(spark, sf_dir):
     return weighted_sample(scored, "quality_bp", k=200)
 
 
-SQL_WEIGHTED_SAMPLE = f"""
-    WITH scored AS ({SQL_QUALITY}),
-    keyed AS (
+SQL_WEIGHTED_SAMPLE = _with(
+    scored=SQL_QUALITY,
+    keyed="""
         -- weight <= 0 rows are ineligible: filtered, not keyed 0.0
         SELECT s.doc_id, d.lang, s.quality_bp,
                pow((CAST('0x' ||
@@ -4479,10 +4458,11 @@ SQL_WEIGHTED_SAMPLE = f"""
                    1.0 / s.quality_bp) AS skey
         FROM scored s JOIN documents d USING (doc_id)
         WHERE s.quality_bp > 0
-    )
+    """,
+    select="""
     SELECT doc_id, lang, quality_bp
     FROM keyed ORDER BY skey DESC, doc_id LIMIT 200
-"""
+""")
 
 
 def q_decontam_bloom(spark, sf_dir):
@@ -4506,28 +4486,19 @@ def q_decontam_bloom(spark, sf_dir):
     )
 
 
-SQL_DECONTAM_BLOOM = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, CASE WHEN len(t) < 4 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 3),
-                                   i -> array_to_string(t[i:i+3], ' ')) END AS s
-        FROM toks
-    ),
-    ev AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 50 = 0),
-    tr AS (SELECT DISTINCT doc_id, unnest(s) AS g FROM sh
-           WHERE doc_id % 50 != 0),
-    bad AS (SELECT DISTINCT tr.doc_id FROM tr JOIN ev USING (g))
+SQL_DECONTAM_BLOOM = _with(
+    toks=_toks("doc_id"),
+    sh=_shingles(4, "doc_id"),
+    ev="SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 50 = 0",
+    tr="""SELECT DISTINCT doc_id, unnest(s) AS g FROM sh
+           WHERE doc_id % 50 != 0""",
+    bad="SELECT DISTINCT tr.doc_id FROM tr JOIN ev USING (g)",
+    select="""
     SELECT d.doc_id, d.lang, d.source
     FROM documents d
     WHERE d.doc_id % 50 != 0
       AND d.doc_id NOT IN (SELECT doc_id FROM bad)
-"""
+""")
 
 
 def q_bloom_audit(spark, sf_dir):
@@ -4549,39 +4520,29 @@ def q_bloom_audit(spark, sf_dir):
     return bloom_prefilter_audit(tr, ev, n=4, k=3, m=65536)
 
 
-SQL_BLOOM_AUDIT = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, CASE WHEN len(t) < 4 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 3),
-                                   i -> array_to_string(t[i:i+3], ' ')) END AS s
-        FROM toks
-    ),
-    ev AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 50 = 0),
-    tr AS (SELECT DISTINCT doc_id, unnest(s) AS g FROM sh
-           WHERE doc_id % 50 != 0),
-    evpos AS (
+SQL_BLOOM_AUDIT = _with(
+    toks=_toks("doc_id"),
+    sh=_shingles(4, "doc_id"),
+    ev="SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 50 = 0",
+    tr="""SELECT DISTINCT doc_id, unnest(s) AS g FROM sh
+           WHERE doc_id % 50 != 0""",
+    evpos="""
         SELECT CAST('0x' || substr(md5(CAST(i AS VARCHAR) || '|' || g),
                                    1, 12) AS BIGINT) % 65536 AS h
         FROM ev, (SELECT unnest(generate_series(0, 2)) AS i)
-    ),
-    bloom AS (
+    """,
+    bloom="""
         SELECT h // 32 AS w, bit_or(1::BIGINT << CAST(h % 32 AS INTEGER))
                    AS bits
         FROM evpos GROUP BY 1
-    ),
-    probes AS (
+    """,
+    probes="""
         SELECT doc_id, g,
                CAST('0x' || substr(md5(CAST(i AS VARCHAR) || '|' || g),
                                    1, 12) AS BIGINT) % 65536 AS h
         FROM tr, (SELECT unnest(generate_series(0, 2)) AS i)
-    ),
-    gram_hits AS (
+    """,
+    gram_hits="""
         SELECT doc_id, g,
                CAST(sum(CASE WHEN (coalesce(bits, 0)
                                    & (1::BIGINT << CAST(h % 32 AS INTEGER)))
@@ -4590,8 +4551,9 @@ SQL_BLOOM_AUDIT = r"""
                    AS bloom_hit
         FROM probes LEFT JOIN bloom ON bloom.w = probes.h // 32
         GROUP BY doc_id, g
-    ),
-    exact AS (SELECT doc_id, g, 1 AS exact_hit FROM tr JOIN ev USING (g))
+    """,
+    exact="SELECT doc_id, g, 1 AS exact_hit FROM tr JOIN ev USING (g)",
+    select="""
     SELECT gh.doc_id,
            count(*) AS n_grams,
            sum(bloom_hit)::BIGINT AS n_bloom_hits,
@@ -4599,7 +4561,7 @@ SQL_BLOOM_AUDIT = r"""
     FROM gram_hits gh
     LEFT JOIN exact e ON e.doc_id = gh.doc_id AND e.g = gh.g
     GROUP BY gh.doc_id
-"""
+""")
 
 
 def q_semantic_dedup(spark, sf_dir):
@@ -4620,12 +4582,12 @@ def q_semantic_dedup(spark, sf_dir):
     return flags.withColumn("max_sim", F.coalesce("max_sim", F.lit(-2.0)))
 
 
-SQL_SEMANTIC_DEDUP = """
-    WITH v AS (
+SQL_SEMANTIC_DEDUP = _with(
+    v="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ),
-    cents AS (SELECT vec_id AS cent_id, e AS cv FROM v WHERE vec_id < 8),
-    assigned AS (
+    """,
+    cents="SELECT vec_id AS cent_id, e AS cv FROM v WHERE vec_id < 8",
+    assigned="""
         SELECT vec_id, cent_id FROM (
             SELECT v.vec_id, c.cent_id,
                    row_number() OVER (PARTITION BY v.vec_id ORDER BY
@@ -4635,8 +4597,8 @@ SQL_SEMANTIC_DEDUP = """
                        c.cent_id) AS rn
             FROM v, cents c
         ) WHERE rn = 1
-    ),
-    pair_sim AS (
+    """,
+    pair_sim="""
         SELECT b.vec_id,
                max(round(list_dot_product(ea.e, eb.e)
                          / (sqrt(list_dot_product(ea.e, ea.e))
@@ -4646,11 +4608,12 @@ SQL_SEMANTIC_DEDUP = """
         JOIN v ea ON ea.vec_id = a.vec_id
         JOIN v eb ON eb.vec_id = b.vec_id
         GROUP BY b.vec_id
-    )
+    """,
+    select="""
     SELECT a.vec_id, a.cent_id, coalesce(p.max_sim, -2.0) AS max_sim,
            coalesce(p.max_sim >= 0.35, FALSE) AS is_dup
     FROM assigned a LEFT JOIN pair_sim p ON a.vec_id = p.vec_id
-"""
+""")
 
 
 def q_value_quantiles(spark, sf_dir):
@@ -4692,26 +4655,27 @@ def q_value_quantiles(spark, sf_dir):
     )
 
 
-SQL_VALUE_QUANTILES = """
-    WITH hist AS (
+SQL_VALUE_QUANTILES = _with(
+    hist="""
         SELECT event_type,
                CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
                count(*) AS c
         FROM events GROUP BY 1, 2
-    ),
-    cum AS (
+    """,
+    cum="""
         SELECT event_type, v,
                sum(c) OVER (PARTITION BY event_type ORDER BY v
                             ROWS UNBOUNDED PRECEDING) AS cum,
                sum(c) OVER (PARTITION BY event_type) AS n
         FROM hist
-    )
+    """,
+    select="""
     SELECT event_type,
            min(CASE WHEN cum >= ceil(0.5 * n) THEN v END) AS p50_centi,
            min(CASE WHEN cum >= ceil(0.9 * n) THEN v END) AS p90_centi,
            min(CASE WHEN cum >= ceil(0.99 * n) THEN v END) AS p99_centi
     FROM cum GROUP BY event_type
-"""
+""")
 
 
 def q_gapfill_hourly(spark, sf_dir):
@@ -4745,26 +4709,27 @@ def q_gapfill_hourly(spark, sf_dir):
     )
 
 
-SQL_GAPFILL_HOURLY = """
-    WITH c AS (
+SQL_GAPFILL_HOURLY = _with(
+    c="""
         SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS n
         FROM events GROUP BY 1, 2
-    ),
-    b AS (
+    """,
+    b="""
         SELECT date_trunc('hour', min(ts)) AS mn,
                date_trunc('hour', max(ts)) AS mx
         FROM events
-    ),
-    spine AS (
+    """,
+    spine="""
         SELECT unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS h
         FROM b
-    ),
-    ty AS (SELECT DISTINCT event_type FROM events)
+    """,
+    ty="SELECT DISTINCT event_type FROM events",
+    select="""
     SELECT floor(epoch(s.h))::BIGINT AS hour_epoch, ty.event_type,
            coalesce(n, 0) AS n
     FROM spine s CROSS JOIN ty
     LEFT JOIN c ON c.h = s.h AND c.event_type = ty.event_type
-"""
+""")
 
 
 def q_fuzzy_match(spark, sf_dir):
@@ -4803,18 +4768,19 @@ def q_fuzzy_match(spark, sf_dir):
     )
 
 
-SQL_FUZZY_MATCH = """
-    WITH probes AS (
+SQL_FUZZY_MATCH = _with(
+    probes="""
         SELECT c_custkey AS probe_key,
                substr(c_name, 1, length(c_name) - 1) || 'X' AS probe_name
         FROM customer WHERE c_custkey % 97 = 0
-    )
+    """,
+    select="""
     SELECT probe_key, c.c_custkey AS match_key,
            levenshtein(probe_name, c_name) AS dist
     FROM probes p JOIN customer c
       ON substr(p.probe_name, 1, 16) = substr(c.c_name, 1, 16)
      AND levenshtein(p.probe_name, c.c_name) <= 1
-"""
+""")
 
 
 def q_lsh_recall(spark, sf_dir):
@@ -4837,63 +4803,46 @@ def q_lsh_recall(spark, sf_dir):
     )
 
 
-SQL_LSH_RECALL = f"""
-    WITH {DOC_TOKENS_SQL},
-    aud AS (
+SQL_LSH_RECALL = _with(
+    **_DOC_SHINGLES,
+    aud="""
         -- mirror of split_bucket_expr(doc_id, 'lshaudit') < 2000:
         -- the audit's deterministic 20% md5-bucket document sample
         SELECT sh.doc_id, sh.s FROM shingles sh
         WHERE CAST('0x' || substr(md5(CAST(sh.doc_id AS VARCHAR) || 'lshaudit'), 1, 8)
                    AS BIGINT) % 10000 < 2000
-    ),
-    dsh AS (
+    """,
+    dsh="""
         SELECT doc_id, list_distinct(s) AS s FROM aud WHERE len(s) > 0
-    ),
-    sz AS (SELECT doc_id, len(s) AS n FROM dsh),
-    g AS (SELECT doc_id, unnest(s) AS gram FROM dsh),
-    shared AS (
+    """,
+    sz="SELECT doc_id, len(s) AS n FROM dsh",
+    g="SELECT doc_id, unnest(s) AS gram FROM dsh",
+    shared="""
         SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS sh
         FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
         GROUP BY 1, 2
-    ),
-    truth AS (
+    """,
+    truth="""
         SELECT id_a, id_b FROM shared
         JOIN sz x ON x.doc_id = id_a
         JOIN sz y ON y.doc_id = id_b
         WHERE sh >= 0.5 * (x.n + y.n - sh)
-    ),
-    hashed AS (
-        SELECT doc_id, list_transform(s, x -> md5('0|' || x)) AS h
-        FROM aud WHERE len(s) > 0
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 3),
-                   seed -> list_min(list_transform(h,
-                       x -> substr(x, 1 + 8 * seed, 8)))) AS mh
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, band, md5(mh[2*band+1] || '|' || mh[2*band+2]) AS bh
-        FROM sig, (SELECT unnest(generate_series(0, 1)) AS band)
-    ),
-    cand AS (
-        SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-        FROM banded l JOIN banded r
-          ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
-    ),
-    caught AS (SELECT id_a, id_b FROM truth JOIN cand USING (id_a, id_b)),
-    m AS (
+    """,
+    **_minhash("aud"),
+    cand=_lsh_pairs(),
+    caught="SELECT id_a, id_b FROM truth JOIN cand USING (id_a, id_b)",
+    m="""
         SELECT (SELECT count(*) FROM truth) AS n_true,
                (SELECT count(*) FROM cand) AS n_cand,
                (SELECT count(*) FROM caught) AS n_caught
-    )
+    """,
+    select="""
     SELECT n_true, n_cand, n_caught,
            CASE WHEN n_true > 0
                 THEN CAST(floor(n_caught * 10000.0 / n_true) AS BIGINT)
                 ELSE -1 END AS recall_bp
     FROM m
-"""
+""")
 
 
 def q_pack_bins(spark, sf_dir):
@@ -4910,30 +4859,27 @@ def q_pack_bins(spark, sf_dir):
     return pack_bins(docs, budget=512)
 
 
-SQL_PACK_BINS = r"""
-    WITH RECURSIVE ns AS (
+SQL_PACK_BINS = _with(
+    ns="""
         -- mirror of auto_pack_shards(count(*)): max(4, ceil(n/5000))
         SELECT GREATEST(4, (count(*) + 4999) // 5000) AS n
         FROM documents
-    ),
-    t AS (
+    """,
+    t=rf"""
         SELECT doc_id,
                CAST(CAST('0x' ||
                    substr(md5(CAST(doc_id AS VARCHAR) || 'pack'), 1, 8)
                AS BIGINT) % ns.n AS INTEGER) AS shard_id,
-               len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-                   END)::BIGINT AS ntok
+               len({_TOKENS})::BIGINT AS ntok
         FROM documents, ns
-    ),
-    seq AS (
+    """,
+    seq="""
         SELECT shard_id, doc_id, ntok,
                row_number() OVER (PARTITION BY shard_id
                                   ORDER BY ntok DESC, doc_id) AS rn
         FROM t
-    ),
-    rec AS (
+    """,
+    rec="""
         SELECT shard_id, doc_id, ntok, rn,
                CAST(0 AS BIGINT) AS bin_id, ntok AS fill
         FROM seq WHERE rn = 1
@@ -4945,9 +4891,11 @@ SQL_PACK_BINS = r"""
                     THEN s.ntok ELSE r.fill + s.ntok END
         FROM rec r
         JOIN seq s ON s.shard_id = r.shard_id AND s.rn = r.rn + 1
-    )
+    """,
+    recursive=("rec",),
+    select="""
     SELECT doc_id, shard_id, ntok, bin_id FROM rec
-"""
+""")
 
 
 def q_pagerank(spark, sf_dir):
@@ -4973,46 +4921,47 @@ def q_pagerank(spark, sf_dir):
     return pagerank(edges, iters=2, damping=0.85)
 
 
-SQL_PAGERANK = f"""
-    WITH w AS ({WEBLOG_SQL_BASE}),
-    e AS (
+SQL_PAGERANK = _with(
+    w=WEBLOG_SQL_BASE,
+    e="""
         SELECT src, dst FROM (
             SELECT lag(request_uri) OVER (PARTITION BY user_id
                        ORDER BY utc_timestamp, event_id) AS src,
                    request_uri AS dst
             FROM w
         ) WHERE src IS NOT NULL
-    ),
-    nodes AS (
+    """,
+    nodes="""
         SELECT DISTINCT node FROM (
             SELECT src AS node FROM e UNION ALL SELECT dst FROM e
         )
-    ),
-    t AS (SELECT count(*)::DOUBLE AS n FROM nodes),
-    deg AS (SELECT src, count(*) AS d FROM e GROUP BY src),
-    p0 AS (SELECT node, round(1.0 / n, 6) AS pr FROM nodes CROSS JOIN t),
-    s1 AS (
+    """,
+    t="SELECT count(*)::DOUBLE AS n FROM nodes",
+    deg="SELECT src, count(*) AS d FROM e GROUP BY src",
+    p0="SELECT node, round(1.0 / n, 6) AS pr FROM nodes CROSS JOIN t",
+    s1="""
         SELECT e.dst AS node, sum(p.pr / deg.d) AS s
         FROM e JOIN deg USING (src) JOIN p0 p ON p.node = e.src
         GROUP BY e.dst
-    ),
-    p1 AS (
+    """,
+    p1="""
         SELECT nodes.node,
                round((1 - 0.85) / n + 0.85 * coalesce(s, 0), 6) AS pr
         FROM nodes CROSS JOIN t LEFT JOIN s1 ON s1.node = nodes.node
-    ),
-    s2 AS (
+    """,
+    s2="""
         SELECT e.dst AS node, sum(p.pr / deg.d) AS s
         FROM e JOIN deg USING (src) JOIN p1 p ON p.node = e.src
         GROUP BY e.dst
-    ),
-    p2 AS (
+    """,
+    p2="""
         SELECT nodes.node,
                round((1 - 0.85) / n + 0.85 * coalesce(s, 0), 6) AS pr
         FROM nodes CROSS JOIN t LEFT JOIN s2 ON s2.node = nodes.node
-    )
+    """,
+    select="""
     SELECT node, pr FROM p2
-"""
+""")
 
 
 def q_hll_distinct(spark, sf_dir):
@@ -5034,41 +4983,38 @@ def q_hll_distinct(spark, sf_dir):
     return hll_distinct(toks, "tok", ["source"])
 
 
-SQL_HLL_DISTINCT = r"""
-    WITH toks AS (
-        SELECT source, lower(unnest(string_split_regex(trim(coalesce(text, '')), '\s+')))
-                   AS tok
-        FROM documents WHERE length(trim(text)) > 0
-    ),
-    h AS (
+SQL_HLL_DISTINCT = _with(
+    toks=f"SELECT source, unnest({_LTOKENS}) AS tok FROM documents WHERE length({_TRIMMED}) > 0",
+    h="""
         SELECT source, tok,
                CAST('0x' || substr(md5(tok), 1, 14) AS BIGINT) AS hv
         FROM toks
-    ),
-    r AS (
+    """,
+    r="""
         SELECT source, hv % 64 AS bucket,
                CASE WHEN hv // 64 = 0 THEN 51
                     ELSE strpos(lpad(bin(hv // 64), 50, '0'), '1')
                END AS rho
         FROM h
-    ),
-    regs AS (
+    """,
+    regs="""
         SELECT source, bucket, max(rho) AS reg
         FROM r GROUP BY source, bucket
-    ),
-    est AS (
+    """,
+    est="""
         SELECT source,
                round(0.7213 / (1.0 + 1.079 / 64) * 64 * 64
                      / (sum(pow(2.0, -reg)) + (64 - count(*))), 2)
                    AS hll_est
         FROM regs GROUP BY source
-    ),
-    ex AS (
+    """,
+    ex="""
         SELECT source, count(DISTINCT tok) AS n_exact
         FROM toks GROUP BY source
-    )
+    """,
+    select="""
     SELECT ex.source, n_exact, hll_est FROM ex JOIN est USING (source)
-"""
+""")
 
 
 def q_quality_ecdf(spark, sf_dir):
@@ -5085,22 +5031,23 @@ def q_quality_ecdf(spark, sf_dir):
     return ecdf_bp(scored, "quality_bp")
 
 
-SQL_QUALITY_ECDF = f"""
-    WITH scored AS ({SQL_QUALITY}),
-    hist AS (
+SQL_QUALITY_ECDF = _with(
+    scored=SQL_QUALITY,
+    hist="""
         SELECT quality_bp, count(*) AS c FROM scored GROUP BY quality_bp
-    ),
-    cum AS (
+    """,
+    cum="""
         SELECT quality_bp,
                sum(c) OVER (ORDER BY quality_bp
                             ROWS UNBOUNDED PRECEDING) - c AS below
         FROM hist
-    ),
-    t AS (SELECT count(*) AS n FROM scored)
+    """,
+    t="SELECT count(*) AS n FROM scored",
+    select="""
     SELECT s.doc_id, s.quality_bp,
            CAST(floor(below * 10000.0 / n) AS BIGINT) AS pctile_bp
     FROM scored s JOIN cum USING (quality_bp) CROSS JOIN t
-"""
+""")
 
 
 def q_shard_manifest(spark, sf_dir):
@@ -5117,7 +5064,7 @@ def q_shard_manifest(spark, sf_dir):
     return shard_manifest(docs, n_shards=16)
 
 
-SQL_SHARD_MANIFEST = r"""
+SQL_SHARD_MANIFEST = rf"""
     SELECT shard_id,
            count(*) AS n_docs,
            CAST(sum(ntok) AS BIGINT) AS n_tokens,
@@ -5126,10 +5073,7 @@ SQL_SHARD_MANIFEST = r"""
         SELECT CAST(CAST('0x' ||
                    substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
                AS BIGINT) % 16 AS INTEGER) AS shard_id,
-               len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-                   END)::BIGINT AS ntok,
+               len({_TOKENS})::BIGINT AS ntok,
                CAST('0x' ||
                    substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
                AS BIGINT) AS dig
@@ -5157,21 +5101,21 @@ def q_knn_ivf_trained(spark, sf_dir):
     )
 
 
-SQL_KNN_IVF_TRAINED = """
-    WITH v AS (
+SQL_KNN_IVF_TRAINED = _with(
+    v="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
         FROM embeddings WHERE vec_id != 0
-    ),
-    q AS (
+    """,
+    q="""
         SELECT CAST(embedding AS DOUBLE[]) AS qv
         FROM embeddings WHERE vec_id = 0
-    ),
-    c0 AS (
+    """,
+    c0="""
         SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cent_id,
                e AS cv
         FROM v ORDER BY vec_id LIMIT 8
-    ),
-    a1 AS (
+    """,
+    a1="""
         SELECT vec_id, cent_id FROM (
             SELECT v.vec_id, c.cent_id,
                    list_dot_product(v.e, v.e)
@@ -5180,12 +5124,12 @@ SQL_KNN_IVF_TRAINED = """
             FROM v, c0 c
         ) QUALIFY row_number()
               OVER (PARTITION BY vec_id ORDER BY d, cent_id) = 1
-    ),
-    le AS (
+    """,
+    le="""
         SELECT vec_id, generate_subscripts(e, 1) AS pos, unnest(e) AS val
         FROM v
-    ),
-    c1 AS (
+    """,
+    c1="""
         SELECT cent_id, list(val ORDER BY pos) AS cv FROM (
             -- integer micro-unit mean (order-free), mirroring
             -- kmeans_fit: a raw float avg's summation order can flip
@@ -5196,16 +5140,16 @@ SQL_KNN_IVF_TRAINED = """
             FROM a1 JOIN le USING (vec_id)
             GROUP BY a1.cent_id, pos
         ) GROUP BY cent_id
-    ),
-    probes AS (
+    """,
+    probes="""
         SELECT cent_id FROM c1, q
         ORDER BY list_dot_product(cv, cv)
                  - 2 * list_dot_product(cv, qv)
                  + list_dot_product(qv, qv),
                  cent_id
         LIMIT 2
-    ),
-    a2 AS (
+    """,
+    a2="""
         SELECT vec_id, cent_id FROM (
             SELECT v.vec_id, c.cent_id,
                    list_dot_product(v.e, v.e)
@@ -5214,7 +5158,8 @@ SQL_KNN_IVF_TRAINED = """
             FROM v, c1 c
         ) QUALIFY row_number()
               OVER (PARTITION BY vec_id ORDER BY d, cent_id) = 1
-    )
+    """,
+    select="""
     SELECT v.vec_id, a2.cent_id,
            round(list_dot_product(v.e, v.e)
                  - 2 * list_dot_product(v.e, qv)
@@ -5225,7 +5170,7 @@ SQL_KNN_IVF_TRAINED = """
     CROSS JOIN q
     ORDER BY dist, v.vec_id
     LIMIT 10
-"""
+""")
 
 
 def q_jl_project(spark, sf_dir):
@@ -5240,30 +5185,31 @@ def q_jl_project(spark, sf_dir):
     return jl_project(emb, out_dim=16, in_dim=64)
 
 
-SQL_JL_PROJECT = """
-    WITH v AS (
+SQL_JL_PROJECT = _with(
+    v="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ),
-    idx AS (SELECT unnest(generate_series(0, 63)) AS i),
-    jdx AS (SELECT unnest(generate_series(0, 15)) AS j),
-    r AS (
+    """,
+    idx="SELECT unnest(generate_series(0, 63)) AS i",
+    jdx="SELECT unnest(generate_series(0, 15)) AS j",
+    r="""
         SELECT i, j,
                CASE CAST('0x' ||
                         substr(md5('jl:' || i || ':' || j), 1, 8)
                     AS BIGINT) % 6
                     WHEN 0 THEN 1 WHEN 1 THEN -1 ELSE 0 END AS rv
         FROM idx CROSS JOIN jdx
-    ),
-    le AS (
+    """,
+    le="""
         SELECT vec_id, generate_subscripts(e, 1) - 1 AS i,
                unnest(e) AS ev
         FROM v
-    )
+    """,
+    select="""
     SELECT le.vec_id, CAST(r.j AS INTEGER) AS dim,
            round(sqrt(3.0 / 16) * sum(le.ev * r.rv), 6) AS val
     FROM le JOIN r USING (i)
     GROUP BY le.vec_id, r.j
-"""
+""")
 
 
 def q_chunk_sliding(spark, sf_dir):
@@ -5279,27 +5225,26 @@ def q_chunk_sliding(spark, sf_dir):
     return sliding_chunks(docs, window=32, stride=24)
 
 
-SQL_CHUNK_SLIDING = r"""
-    WITH t AS (
+SQL_CHUNK_SLIDING = _with(
+    t=rf"""
         SELECT doc_id,
-               CASE WHEN length(trim(coalesce(text, ''))) = 0
-                    THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS toks
+               {_TOKENS} AS toks
         FROM documents
-    ),
-    n AS (
+    """,
+    n="""
         SELECT doc_id, toks,
                CASE WHEN len(toks) <= 0 THEN 0
                     ELSE 1 + greatest((len(toks) - 32 + 24 - 1) // 24, 0)
                END::BIGINT AS n_chunks
         FROM t
-    ),
-    c AS (
+    """,
+    c="""
         SELECT doc_id, toks,
                CAST(unnest(generate_series(0, CAST(n_chunks AS INTEGER) - 1))
                     AS INTEGER) AS chunk_id
         FROM n
-    )
+    """,
+    select="""
     SELECT doc_id, chunk_id,
            CAST(chunk_id * 24 AS BIGINT) AS start_tok,
            len(toks[chunk_id * 24 + 1 : chunk_id * 24 + 32])::BIGINT
@@ -5308,7 +5253,7 @@ SQL_CHUNK_SLIDING = r"""
                toks[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' '))
                AS chunk_md5
     FROM c
-"""
+""")
 
 
 def q_mix_resample(spark, sf_dir):
@@ -5327,24 +5272,24 @@ def q_mix_resample(spark, sf_dir):
     return out.select("doc_id", "lang", "rep")
 
 
-SQL_MIX_RESAMPLE = """
-    WITH n AS (
+SQL_MIX_RESAMPLE = _with(
+    n="""
         SELECT lang, CAST(count(*) AS DOUBLE) AS cnt
         FROM documents GROUP BY lang
-    ),
-    t AS (SELECT sum(cnt) AS total FROM n),
-    p AS (
+    """,
+    t="SELECT sum(cnt) AS total FROM n",
+    p="""
         SELECT lang, cnt, total, pow(cnt / total, 0.5) AS pw
         FROM n CROSS JOIN t
-    ),
-    z AS (SELECT sum(pw) AS zz FROM p),
-    r AS (
+    """,
+    z="SELECT sum(pw) AS zz FROM p",
+    r="""
         SELECT lang,
                CAST(floor(pw / zz * total / cnt * 10000 + 1e-6) AS BIGINT)
                    AS rbp
         FROM p CROSS JOIN z
-    ),
-    c AS (
+    """,
+    c="""
         SELECT d.doc_id, d.lang,
                r.rbp // 10000
                + CASE WHEN CAST(CAST('0x' ||
@@ -5352,12 +5297,13 @@ SQL_MIX_RESAMPLE = """
                        AS BIGINT) % 10000 AS BIGINT) < r.rbp % 10000
                       THEN 1 ELSE 0 END AS copies
         FROM documents d JOIN r USING (lang)
-    )
+    """,
+    select="""
     SELECT doc_id, lang,
            CAST(unnest(generate_series(0, CAST(copies AS INTEGER) - 1))
                 AS INTEGER) AS rep
     FROM c
-"""
+""")
 
 
 def q_kmeans_train(spark, sf_dir):
@@ -5375,16 +5321,16 @@ def q_kmeans_train(spark, sf_dir):
     return kmeans_lloyd(emb, k=8, iters=2)
 
 
-SQL_KMEANS_TRAIN = """
-    WITH v AS (
+SQL_KMEANS_TRAIN = _with(
+    v="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ),
-    c0 AS (
+    """,
+    c0="""
         SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cent_id,
                e AS cv
         FROM v ORDER BY vec_id LIMIT 8
-    ),
-    a1 AS (
+    """,
+    a1="""
         SELECT vec_id, cent_id FROM (
             SELECT v.vec_id, c.cent_id,
                    list_dot_product(v.e, v.e)
@@ -5393,12 +5339,12 @@ SQL_KMEANS_TRAIN = """
             FROM v, c0 c
         ) QUALIFY row_number()
               OVER (PARTITION BY vec_id ORDER BY d, cent_id) = 1
-    ),
-    le AS (
+    """,
+    le="""
         SELECT vec_id, generate_subscripts(e, 1) AS pos, unnest(e) AS val
         FROM v
-    ),
-    c1 AS (
+    """,
+    c1="""
         SELECT cent_id, list(val ORDER BY pos) AS cv FROM (
             -- integer micro-unit mean (order-free), mirroring
             -- kmeans_fit: a raw float avg's summation order can flip
@@ -5409,7 +5355,8 @@ SQL_KMEANS_TRAIN = """
             FROM a1 JOIN le USING (vec_id)
             GROUP BY a1.cent_id, pos
         ) GROUP BY cent_id
-    )
+    """,
+    select="""
     SELECT vec_id, cent_id, round(d, 6) AS dist FROM (
         SELECT v.vec_id, c.cent_id,
                list_dot_product(v.e, v.e)
@@ -5418,7 +5365,7 @@ SQL_KMEANS_TRAIN = """
         FROM v, c1 c
     ) QUALIFY row_number()
           OVER (PARTITION BY vec_id ORDER BY d, cent_id) = 1
-"""
+""")
 
 
 def q_kmeans_sizes(spark, sf_dir):
@@ -5433,13 +5380,14 @@ def q_kmeans_sizes(spark, sf_dir):
     return kmeans_cluster_sizes(kmeans_lloyd(emb, k=8, iters=2))
 
 
-SQL_KMEANS_SIZES = f"""
-    WITH assigned AS ({SQL_KMEANS_TRAIN})
+SQL_KMEANS_SIZES = _with(
+    assigned=SQL_KMEANS_TRAIN,
+    select="""
     SELECT cent_id, count(*) AS n,
            round(sum(CAST(round(dist * 1e6) AS BIGINT)) / count(*) / 1e6,
                  6) AS mean_dist
     FROM assigned GROUP BY cent_id
-"""
+""")
 
 
 def q_cluster_purity(spark, sf_dir):
@@ -5457,50 +5405,52 @@ def q_cluster_purity(spark, sf_dir):
     return cluster_label_purity(kmeans_lloyd(emb, k=8, iters=2), labels)
 
 
-SQL_CLUSTER_PURITY = f"""
-    WITH assigned AS ({SQL_KMEANS_TRAIN}),
-    j AS (
+SQL_CLUSTER_PURITY = _with(
+    assigned=SQL_KMEANS_TRAIN,
+    j="""
         SELECT a.cent_id, l.label::BIGINT AS lab
         FROM assigned a JOIN embeddings l USING (vec_id)
         WHERE l.label IS NOT NULL
-    ),
-    counts AS (
+    """,
+    counts="""
         SELECT cent_id, lab, count(*)::BIGINT AS n FROM j GROUP BY 1, 2
-    ),
-    tot AS (
+    """,
+    tot="""
         SELECT cent_id, sum(n)::BIGINT AS n_total,
                count(*)::BIGINT AS n_labels
         FROM counts GROUP BY 1
-    ),
-    top AS (
+    """,
+    top="""
         SELECT cent_id, lab AS top_label, n AS top_n FROM (
             SELECT *, row_number() OVER (
                 PARTITION BY cent_id ORDER BY n DESC, lab) AS rn
             FROM counts
         ) WHERE rn = 1
-    )
+    """,
+    select="""
     SELECT t.cent_id, t.n_total, t.n_labels, p.top_label, p.top_n,
            CAST(floor(p.top_n * 10000.0 / t.n_total + 0.5) AS BIGINT)
                AS purity_bp
     FROM tot t JOIN top p USING (cent_id)
-"""
+""")
 
 
-SQL_EMB_OUTLIERS = f"""
-    WITH assigned AS ({SQL_KMEANS_TRAIN}),
-    med AS (
+SQL_EMB_OUTLIERS = _with(
+    assigned=SQL_KMEANS_TRAIN,
+    med="""
         SELECT cent_id, quantile_cont(dist, 0.5) AS med
         FROM assigned GROUP BY cent_id
-    ),
-    mad AS (
+    """,
+    mad="""
         SELECT a.cent_id, quantile_cont(abs(a.dist - med.med), 0.5) AS mad
         FROM assigned a JOIN med USING (cent_id) GROUP BY a.cent_id
-    )
+    """,
+    select="""
     SELECT a.vec_id, a.cent_id, a.dist,
            round(med.med, 4) AS med, round(mad.mad, 4) AS mad,
            abs(a.dist - med.med) > 3.0 * mad.mad AS is_outlier
     FROM assigned a JOIN med USING (cent_id) JOIN mad USING (cent_id)
-"""
+""")
 
 
 def q_local_volume(spark, sf_dir):
@@ -5704,8 +5654,9 @@ def q_url_normalize(spark, sf_dir):
     )
 
 
-SQL_URL_NORMALIZE = rf"""
-    WITH w AS ({WEBLOG_SQL_BASE})
+SQL_URL_NORMALIZE = _with(
+    w=WEBLOG_SQL_BASE,
+    select=rf"""
     SELECT lower(regexp_replace(regexp_replace(
                regexp_replace(request_uri, '[?#].*$', ''),
                '/{{2,}}', '/'), '(.)/$', '\1')) AS canon,
@@ -5713,7 +5664,7 @@ SQL_URL_NORMALIZE = rf"""
            count(DISTINCT request_uri) AS n_raw
     FROM w
     GROUP BY 1
-"""
+""")
 
 
 def q_mix_temperature(spark, sf_dir):
@@ -5728,31 +5679,16 @@ def q_mix_temperature(spark, sf_dir):
     return mix_temperature(docs, group_col="source", alpha=0.7)
 
 
-SQL_MIX_TEMPERATURE = r"""
-    WITH toks AS (
-        SELECT doc_id, source, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    per AS (
+SQL_MIX_TEMPERATURE = _with(
+    toks=_toks("doc_id", "source"),
+    per="""
         SELECT source, count(*) AS n_docs,
                sum(len(t))::BIGINT AS n_tokens
         FROM toks GROUP BY source
-    ),
-    tot AS (SELECT sum(n_tokens)::DOUBLE AS tot FROM per),
-    -- zero-token-corpus guards mirror the operator: raw pinned to 0
-    -- when tot = 0, temp pinned to 0 when z = 0
-    r AS (
-        SELECT source, n_docs, n_tokens,
-               CASE WHEN tot > 0 THEN n_tokens / tot ELSE 0.0 END AS raw
-        FROM per, tot
-    ),
-    -- nano-quantized normalizer: integer sum is aggregation-order-free
-    -- (matches pipelines/split.mix_temperature and streaming/mix.py)
-    z AS (SELECT sum(CAST(floor(pow(raw, 0.7) * 1000000000.0 + 0.5)
-                          AS BIGINT))::DOUBLE / 1000000000.0 AS z
-          FROM r)
+    """,
+    # temp pinned to 0 when z = 0, as in the operator
+    **_TEMPERATURE,
+    select="""
     SELECT source, n_docs, n_tokens,
            CAST(floor(raw * 10000.0 + 0.5) AS BIGINT) AS raw_bp,
            CAST(floor(CASE WHEN z > 0 THEN pow(raw, 0.7) / z
@@ -5764,7 +5700,7 @@ SQL_MIX_TEMPERATURE = r"""
                                 / raw * 10000.0 + 0.5) AS BIGINT)
                 ELSE 0 END AS boost_bp
     FROM r, z
-"""
+""")
 
 
 def q_upsample_epochs(spark, sf_dir):
@@ -5778,28 +5714,15 @@ def q_upsample_epochs(spark, sf_dir):
     return upsample_epochs(docs, "source", alpha=0.7, max_epochs=4)
 
 
-SQL_UPSAMPLE_EPOCHS = r"""
-    WITH toks AS (
-        SELECT doc_id, source, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    per AS (
+SQL_UPSAMPLE_EPOCHS = _with(
+    toks=_toks("doc_id", "source"),
+    per="""
         SELECT source, count(*) AS n_docs,
                sum(len(t))::BIGINT AS n_tokens
         FROM toks GROUP BY source
-    ),
-    tot AS (SELECT sum(n_tokens)::DOUBLE AS tot FROM per),
-    r AS (
-        SELECT source, n_tokens,
-               CASE WHEN tot > 0 THEN n_tokens / tot ELSE 0.0 END AS raw
-        FROM per, tot
-    ),
-    z AS (SELECT sum(CAST(floor(pow(raw, 0.7) * 1000000000.0 + 0.5)
-                          AS BIGINT))::DOUBLE / 1000000000.0 AS z
-          FROM r),
-    plan AS (
+    """,
+    **_TEMPERATURE,
+    plan="""
         SELECT source,
                CAST(least(4, greatest(1,
                     (CASE WHEN n_tokens > 0
@@ -5810,12 +5733,13 @@ SQL_UPSAMPLE_EPOCHS = r"""
                           ELSE 0 END + 9999) // 10000))
                     AS INTEGER) AS n_epochs
         FROM r, z
-    )
+    """,
+    select="""
     SELECT d.doc_id, d.source, u.epoch::INTEGER AS epoch, p.n_epochs
     FROM documents d
     JOIN plan p ON d.source IS NOT DISTINCT FROM p.source,
     UNNEST(generate_series(0, p.n_epochs - 1)) AS u(epoch)
-"""
+""")
 
 
 def q_oov_rate(spark, sf_dir):
@@ -5829,25 +5753,21 @@ def q_oov_rate(spark, sf_dir):
     return oov_rate(docs, vocab_size=1000)
 
 
-SQL_OOV_RATE = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    tk AS (SELECT doc_id, unnest(t) AS tok FROM toks),
-    vc AS (
+SQL_OOV_RATE = _with(
+    toks=_toks("doc_id"),
+    tk="SELECT doc_id, unnest(t) AS tok FROM toks",
+    vc="""
         SELECT tok FROM (
             SELECT tok, count(*) AS n FROM tk GROUP BY tok
             ORDER BY n DESC, tok LIMIT 1000
         )
-    ),
-    oov AS (
+    """,
+    oov="""
         SELECT doc_id, count(*) AS n_oov FROM tk
         WHERE tok NOT IN (SELECT tok FROM vc)
         GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT t.doc_id, len(t.t)::BIGINT AS ntok,
            coalesce(o.n_oov, 0)::BIGINT AS n_oov,
            CASE WHEN len(t.t) > 0
@@ -5855,7 +5775,7 @@ SQL_OOV_RATE = r"""
                                 / len(t.t) + 0.5) AS BIGINT)
                 ELSE 0 END AS oov_bp
     FROM toks t LEFT JOIN oov o USING (doc_id)
-"""
+""")
 
 
 def q_contam_spans(spark, sf_dir):
@@ -5873,35 +5793,26 @@ def q_contam_spans(spark, sf_dir):
     return contamination_spans(tr, ev, n=4)
 
 
-SQL_CONTAM_SPANS = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, CASE WHEN len(t) < 4 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 3),
-                                   i -> array_to_string(t[i:i+3], ' ')) END AS s
-        FROM toks
-    ),
-    ev AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 50 = 0),
-    pos AS (
+SQL_CONTAM_SPANS = _with(
+    toks=_toks("doc_id"),
+    sh=_shingles(4, "doc_id"),
+    ev="SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 50 = 0",
+    pos="""
         SELECT doc_id, generate_subscripts(s, 1) - 1 AS p, unnest(s) AS g
         FROM sh WHERE doc_id % 50 != 0
-    ),
-    hit AS (SELECT doc_id, p FROM pos WHERE g IN (SELECT g FROM ev)),
-    runs AS (
+    """,
+    hit="SELECT doc_id, p FROM pos WHERE g IN (SELECT g FROM ev)",
+    runs="""
         SELECT doc_id, p,
                p - row_number() OVER (PARTITION BY doc_id ORDER BY p) AS grp
         FROM hit
-    ),
-    rl AS (SELECT doc_id, grp, count(*) AS rlen FROM runs GROUP BY 1, 2)
+    """,
+    rl="SELECT doc_id, grp, count(*) AS rlen FROM runs GROUP BY 1, 2",
+    select="""
     SELECT doc_id, sum(rlen)::BIGINT AS n_pos_hits,
            max(rlen)::BIGINT AS max_run
     FROM rl GROUP BY doc_id
-"""
+""")
 
 
 def q_token_budget(spark, sf_dir):
@@ -5922,35 +5833,30 @@ def q_token_budget(spark, sf_dir):
     )
 
 
-SQL_TOKEN_BUDGET = rf"""
-    WITH RECURSIVE q AS ({SQL_QUALITY}),
-    toks2 AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    d AS (
+SQL_TOKEN_BUDGET = _with(
+    q=SQL_QUALITY,
+    toks2=_toks("doc_id"),
+    d="""
         SELECT q.doc_id, q.quality_bp, len(t2.t)::BIGINT AS ntok
         FROM q JOIN toks2 t2 USING (doc_id)
-    ),
-    hist AS (SELECT quality_bp, sum(ntok) AS btok FROM d GROUP BY quality_bp),
-    csum AS (
+    """,
+    hist="SELECT quality_bp, sum(ntok) AS btok FROM d GROUP BY quality_bp",
+    csum="""
         SELECT quality_bp, btok,
                sum(btok) OVER (ORDER BY quality_bp DESC) AS cum
         FROM hist
-    ),
-    cut AS (
+    """,
+    cut="""
         SELECT quality_bp AS cutoff, 10000 - (cum - btok) AS remaining
         FROM csum WHERE cum > 10000
         ORDER BY quality_bp DESC LIMIT 1
-    ),
-    bnd AS (
+    """,
+    bnd="""
         SELECT d.doc_id, d.ntok,
                row_number() OVER (ORDER BY d.doc_id) AS rn
         FROM d, cut WHERE d.quality_bp = cut.cutoff
-    ),
-    rec AS (
+    """,
+    rec="""
         SELECT rn, doc_id, ntok,
                ntok <= c.remaining AS admit,
                CASE WHEN ntok <= c.remaining THEN c.remaining - ntok
@@ -5961,7 +5867,9 @@ SQL_TOKEN_BUDGET = rf"""
                b.ntok <= r.rem,
                CASE WHEN b.ntok <= r.rem THEN r.rem - b.ntok ELSE r.rem END
         FROM rec r JOIN bnd b ON b.rn = r.rn + 1
-    )
+    """,
+    recursive=("rec",),
+    select="""
     SELECT d.doc_id, d.quality_bp, d.ntok,
            CASE WHEN NOT EXISTS (SELECT 1 FROM cut) THEN TRUE
                 WHEN d.quality_bp > (SELECT cutoff FROM cut) THEN TRUE
@@ -5972,7 +5880,7 @@ SQL_TOKEN_BUDGET = rf"""
                      THEN TRUE
                 ELSE FALSE END AS selected
     FROM d
-"""
+""")
 
 
 def q_substring_dedup(spark, sf_dir):
@@ -5987,46 +5895,37 @@ def q_substring_dedup(spark, sf_dir):
     return repeated_window_spans(docs, window=8)
 
 
-SQL_SUBSTRING_DEDUP = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, CASE WHEN len(t) < 8 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 7),
-                                   i -> array_to_string(t[i:i+7], ' ')) END AS s
-        FROM toks
-    ),
-    base AS (SELECT doc_id, len(t)::BIGINT AS ntok FROM toks),
-    w AS (
+SQL_SUBSTRING_DEDUP = _with(
+    toks=_toks("doc_id"),
+    sh=_shingles(8, "doc_id"),
+    base="SELECT doc_id, len(t)::BIGINT AS ntok FROM toks",
+    w="""
         SELECT doc_id, generate_subscripts(s, 1) - 1 AS pos,
                -- 60-bit md5-prefix window key (engine round-14
                -- posting compression, mirrored bit-for-bit)
                CAST(('0x' || substr(md5(unnest(s)), 1, 15)) AS BIGINT) AS h
         FROM sh
-    ),
-    repd AS (SELECT h FROM w GROUP BY h HAVING count(*) >= 2),
-    rep AS (SELECT doc_id, pos FROM w WHERE h IN (SELECT h FROM repd)),
-    iv AS (
+    """,
+    repd="SELECT h FROM w GROUP BY h HAVING count(*) >= 2",
+    rep="SELECT doc_id, pos FROM w WHERE h IN (SELECT h FROM repd)",
+    iv="""
         SELECT doc_id, pos, pos + 8 AS e,
                max(pos + 8) OVER (PARTITION BY doc_id ORDER BY pos
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
         FROM rep
-    ),
-    pd AS (
+    """,
+    pd="""
         SELECT doc_id, count(*) AS n_rep_windows,
                sum(greatest(e - greatest(pos, coalesce(pe, pos)), 0))::BIGINT
                    AS dup_tokens
         FROM iv GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT p.doc_id, b.ntok, p.n_rep_windows, p.dup_tokens,
            CAST(floor(p.dup_tokens * 10000.0 / b.ntok + 0.5) AS BIGINT)
                AS dup_bp
     FROM pd p JOIN base b USING (doc_id)
-"""
+""")
 
 
 def q_substring_remove(spark, sf_dir):
@@ -6041,54 +5940,45 @@ def q_substring_remove(spark, sf_dir):
     return remove_repeated_spans(docs, window=8)
 
 
-SQL_SUBSTRING_REMOVE = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, CASE WHEN len(t) < 8 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 7),
-                                   i -> array_to_string(t[i:i+7], ' ')) END AS s
-        FROM toks
-    ),
-    base AS (SELECT doc_id, len(t)::BIGINT AS ntok FROM toks),
-    w AS (
+SQL_SUBSTRING_REMOVE = _with(
+    toks=_toks("doc_id"),
+    sh=_shingles(8, "doc_id"),
+    base="SELECT doc_id, len(t)::BIGINT AS ntok FROM toks",
+    w="""
         SELECT doc_id, generate_subscripts(s, 1) - 1 AS pos,
                -- 60-bit md5-prefix window key (engine round-14
                -- posting compression, mirrored bit-for-bit)
                CAST(('0x' || substr(md5(unnest(s)), 1, 15)) AS BIGINT) AS h
         FROM sh
-    ),
-    repd AS (SELECT h FROM w GROUP BY h HAVING count(*) >= 2),
-    rep AS (SELECT doc_id, pos FROM w WHERE h IN (SELECT h FROM repd)),
-    cov AS (
+    """,
+    repd="SELECT h FROM w GROUP BY h HAVING count(*) >= 2",
+    rep="SELECT doc_id, pos FROM w WHERE h IN (SELECT h FROM repd)",
+    cov="""
         SELECT DISTINCT doc_id, pos + i AS idx
         FROM rep, (SELECT unnest(generate_series(0, 7)) AS i)
-    ),
-    tok AS (
+    """,
+    tok="""
         SELECT doc_id, generate_subscripts(t, 1) - 1 AS idx,
                unnest(t) AS tk
         FROM toks
-    ),
-    kept AS (
+    """,
+    kept="""
         SELECT tok.doc_id, tok.idx, tok.tk
         FROM tok LEFT JOIN cov
           ON cov.doc_id = tok.doc_id AND cov.idx = tok.idx
         WHERE cov.doc_id IS NULL
-    ),
-    reb AS (
+    """,
+    reb="""
         SELECT doc_id, count(*)::BIGINT AS kept_n,
                string_agg(tk, ' ' ORDER BY idx) AS clean
         FROM kept GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT b.doc_id, b.ntok,
            (b.ntok - coalesce(r.kept_n, 0))::BIGINT AS removed_tokens,
            coalesce(r.clean, '') AS clean_text
     FROM base b LEFT JOIN reb r USING (doc_id)
-"""
+""")
 
 
 def q_padding_waste(spark, sf_dir):
@@ -6102,16 +5992,14 @@ def q_padding_waste(spark, sf_dir):
     return padding_waste(docs, max_seq_len=128, group_col="source")
 
 
-SQL_PADDING_WASTE = r"""
-    WITH per AS (
+SQL_PADDING_WASTE = _with(
+    per=rf"""
         SELECT source,
-               len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-                   END)::BIGINT AS ntok
+               len({_TOKENS})::BIGINT AS ntok
         FROM documents
-    ),
-    x AS (SELECT source, ntok, (ntok + 127) // 128 AS seqs FROM per)
+    """,
+    x="SELECT source, ntok, (ntok + 127) // 128 AS seqs FROM per",
+    select="""
     SELECT source,
            count(*) AS n_docs,
            sum(ntok)::BIGINT AS n_tokens,
@@ -6124,7 +6012,7 @@ SQL_PADDING_WASTE = r"""
                 ELSE 0 END AS waste_bp
     FROM x
     GROUP BY source
-"""
+""")
 
 
 def q_padding_curve(spark, sf_dir):
@@ -6139,7 +6027,19 @@ def q_padding_curve(spark, sf_dir):
     return padding_curve(docs, seq_lens=(128, 512, 1024, 2048))
 
 
-_PADDING_CURVE_BRANCH = """
+SQL_PADDING_CURVE = _with(
+    per=f"SELECT len({_TOKENS})::BIGINT AS ntok FROM documents",
+    t="""
+        SELECT count(*)::BIGINT AS n_docs,
+               coalesce(sum(ntok), 0)::BIGINT AS n_tokens,
+               coalesce(sum((ntok + 127) // 128), 0)::BIGINT AS s_128,
+               coalesce(sum((ntok + 511) // 512), 0)::BIGINT AS s_512,
+               coalesce(sum((ntok + 1023) // 1024), 0)::BIGINT AS s_1024,
+               coalesce(sum((ntok + 2047) // 2048), 0)::BIGINT AS s_2048
+        FROM per
+    """,
+    select="\n    UNION ALL\n".join(
+        f"""
     SELECT CAST({L} AS BIGINT) AS seq_len, n_docs, n_tokens,
            s_{L} AS n_seqs,
            (s_{L} * {L} - n_tokens)::BIGINT AS pad_tokens,
@@ -6149,29 +6049,8 @@ _PADDING_CURVE_BRANCH = """
                 ELSE 0 END AS waste_bp
     FROM t
 """
-SQL_PADDING_CURVE = (
-    r"""
-    WITH per AS (
-        SELECT len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END)::BIGINT AS ntok
-        FROM documents
-    ),
-    t AS (
-        SELECT count(*)::BIGINT AS n_docs,
-               coalesce(sum(ntok), 0)::BIGINT AS n_tokens,
-               coalesce(sum((ntok + 127) // 128), 0)::BIGINT AS s_128,
-               coalesce(sum((ntok + 511) // 512), 0)::BIGINT AS s_512,
-               coalesce(sum((ntok + 1023) // 1024), 0)::BIGINT AS s_1024,
-               coalesce(sum((ntok + 2047) // 2048), 0)::BIGINT AS s_2048
-        FROM per
-    )
-"""
-    + "\n    UNION ALL\n".join(
-        _PADDING_CURVE_BRANCH.format(L=x) for x in (128, 512, 1024, 2048)
-    )
-)
+        for L in (128, 512, 1024, 2048)
+    ))
 
 
 def q_vocab_coverage(spark, sf_dir):
@@ -6185,26 +6064,24 @@ def q_vocab_coverage(spark, sf_dir):
     return vocab_coverage(docs, sizes=[250, 1000, 4000, 16000])
 
 
-SQL_VOCAB_COVERAGE = r"""
-    WITH toks AS (
-        SELECT unnest(CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END) AS tok
+SQL_VOCAB_COVERAGE = _with(
+    toks=rf"""
+        SELECT unnest({_TOKENS}) AS tok
         FROM documents
-    ),
-    counts AS (SELECT tok, count(*)::BIGINT AS n FROM toks GROUP BY tok),
-    ranked AS (
+    """,
+    counts="SELECT tok, count(*)::BIGINT AS n FROM toks GROUP BY tok",
+    ranked="""
         SELECT row_number() OVER (ORDER BY n DESC, tok) AS r,
                sum(n) OVER (ORDER BY n DESC, tok
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
         FROM counts
         QUALIFY r <= 16000
-    ),
-    tot AS (
+    """,
+    tot="""
         SELECT coalesce(sum(n), 0)::BIGINT AS total FROM counts
-    ),
-    spine AS (SELECT unnest([250, 1000, 4000, 16000]) AS vocab_size)
+    """,
+    spine="SELECT unnest([250, 1000, 4000, 16000]) AS vocab_size",
+    select="""
     SELECT s.vocab_size::BIGINT AS vocab_size,
            count(r.r)::BIGINT AS n_types,
            coalesce(max(r.cum), 0)::BIGINT AS covered_tokens,
@@ -6216,7 +6093,7 @@ SQL_VOCAB_COVERAGE = r"""
     FROM spine s CROSS JOIN tot t
     LEFT JOIN ranked r ON r.r <= s.vocab_size
     GROUP BY s.vocab_size, t.total
-"""
+""")
 
 
 def q_source_divergence(spark, sf_dir):
@@ -6231,40 +6108,36 @@ def q_source_divergence(spark, sf_dir):
     return source_divergence(docs, group_col="source")
 
 
-SQL_SOURCE_DIVERGENCE = r"""
-    WITH toks AS (
-        SELECT source, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    tk AS (
+SQL_SOURCE_DIVERGENCE = _with(
+    toks=_toks("source"),
+    tk="""
         SELECT source,
                CAST('0x' || substr(md5(unnest(t)), 1, 8) AS BIGINT)
                    % 1024 AS b
         FROM toks
-    ),
-    c AS (SELECT source, b, count(*) AS c FROM tk GROUP BY source, b),
-    t AS (SELECT source, count(*)::BIGINT AS t FROM tk GROUP BY source),
-    spine AS (SELECT unnest(generate_series(0, 1023)) AS b),
-    vec AS (
+    """,
+    c="SELECT source, b, count(*) AS c FROM tk GROUP BY source, b",
+    t="SELECT source, count(*)::BIGINT AS t FROM tk GROUP BY source",
+    spine="SELECT unnest(generate_series(0, 1023)) AS b",
+    vec="""
         SELECT t.source, s.b, t.t,
                (coalesce(c.c, 0) + 1) / (t.t + 1024) AS p
         FROM spine s CROSS JOIN t
         LEFT JOIN c ON c.source = t.source AND c.b = s.b
-    ),
-    pairs AS (
+    """,
+    pairs="""
         SELECT a.source AS source_a, b.source AS source_b,
                a.t AS n_a, b.t AS n_b, a.p AS p, b.p AS q
         FROM vec a JOIN vec b ON a.b = b.b AND a.source < b.source
-    )
+    """,
+    select="""
     SELECT source_a, source_b, n_a, n_b,
            sum(CAST(round((p * ln(p / ((p + q) / 2.0))
                            + q * ln(q / ((p + q) / 2.0)))
                           / 2.0 * 1e9) AS BIGINT))::BIGINT AS js_nano
     FROM pairs
     GROUP BY source_a, source_b, n_a, n_b
-"""
+""")
 
 
 def q_zipf_fit(spark, sf_dir):
@@ -6278,48 +6151,46 @@ def q_zipf_fit(spark, sf_dir):
     return zipf_fit(docs, top_k=1000)
 
 
-SQL_ZIPF_FIT = r"""
-    WITH toks AS (
-        SELECT unnest(CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END) AS tok
+SQL_ZIPF_FIT = _with(
+    toks=rf"""
+        SELECT unnest({_TOKENS}) AS tok
         FROM documents
-    ),
-    counts AS (SELECT tok, count(*)::BIGINT AS n FROM toks GROUP BY tok),
-    ranked AS (
+    """,
+    counts="SELECT tok, count(*)::BIGINT AS n FROM toks GROUP BY tok",
+    ranked="""
         SELECT row_number() OVER (ORDER BY n DESC, tok) AS r, n
         FROM counts
         QUALIFY r <= 1000
-    ),
-    terms AS (
+    """,
+    terms="""
         SELECT CAST(round(ln(r) * 1e9) AS BIGINT) AS xn,
                CAST(round(ln(n) * 1e9) AS BIGINT) AS yn,
                CAST(round(ln(r) * ln(r) * 1e9) AS BIGINT) AS xxn,
                CAST(round(ln(r) * ln(n) * 1e9) AS BIGINT) AS xyn
         FROM ranked
-    ),
-    s AS (
+    """,
+    s="""
         SELECT count(*)::BIGINT AS k,
                coalesce(sum(xn), 0)::BIGINT AS sx,
                coalesce(sum(yn), 0)::BIGINT AS sy,
                coalesce(sum(xxn), 0)::BIGINT AS sxx,
                coalesce(sum(xyn), 0)::BIGINT AS sxy
         FROM terms
-    ),
-    d AS (
+    """,
+    d="""
         SELECT k,
                CAST(k AS DOUBLE) AS kd,
                sx / 1e9 AS sxd, sy / 1e9 AS syd,
                sxx / 1e9 AS sxxd, sxy / 1e9 AS sxyd
         FROM s
-    ),
-    f AS (
+    """,
+    f="""
         SELECT k, kd, sxd, syd,
                kd * sxxd - sxd * sxd AS den,
                kd * sxyd - sxd * syd AS num
         FROM d
-    )
+    """,
+    select="""
     SELECT k AS n_types,
            CASE WHEN den > 0
                 THEN CAST(floor(num / den * 1e6 + 0.5) AS BIGINT)
@@ -6329,7 +6200,7 @@ SQL_ZIPF_FIT = r"""
                                 + 0.5) AS BIGINT)
                 ELSE 0 END AS intercept_micro
     FROM f
-"""
+""")
 
 
 def q_cms_counts(spark, sf_dir):
@@ -6345,47 +6216,40 @@ def q_cms_counts(spark, sf_dir):
     return cms_overestimate_audit(docs, "text", k=20)
 
 
-SQL_CMS_COUNTS = r"""
-    WITH toks AS (
-        SELECT lower(tok) AS tok FROM (
-            SELECT unnest(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-                   END) AS tok
-            FROM documents
-        )
-    ),
-    counters AS (
+SQL_CMS_COUNTS = _with(
+    toks=f"SELECT unnest({_LTOKENS}) AS tok FROM documents",
+    counters="""
         SELECT i AS row,
                CAST('0x' || substr(md5(CAST(i AS VARCHAR) || '|' || tok),
                                    1, 8) AS BIGINT) % 1024 AS pos,
                count(*)::BIGINT AS n
         FROM toks, (SELECT unnest(generate_series(0, 3)) AS i)
         GROUP BY 1, 2
-    ),
-    top AS (
+    """,
+    top="""
         SELECT tok AS token, count(*)::BIGINT AS true_cnt
         FROM toks GROUP BY tok
         ORDER BY true_cnt DESC, token
         LIMIT 20
-    ),
-    probes AS (
+    """,
+    probes="""
         SELECT token, true_cnt, i AS row,
                CAST('0x' || substr(md5(CAST(i AS VARCHAR) || '|' || token),
                                    1, 8) AS BIGINT) % 1024 AS pos
         FROM top, (SELECT unnest(generate_series(0, 3)) AS i)
-    ),
-    est AS (
+    """,
+    est="""
         SELECT p.token, p.true_cnt,
                min(coalesce(c.n, 0))::BIGINT AS est_cnt
         FROM probes p LEFT JOIN counters c USING (row, pos)
         GROUP BY p.token, p.true_cnt
-    )
+    """,
+    select="""
     SELECT token, true_cnt, est_cnt,
            CAST(floor((est_cnt - true_cnt) * 10000.0 / true_cnt + 0.5)
                AS BIGINT) AS over_bp
     FROM est
-"""
+""")
 
 
 def q_quality_classifier(spark, sf_dir):
@@ -6411,102 +6275,98 @@ def q_quality_classifier(spark, sf_dir):
     return quality_classifier_scores(docs, w, features=feat)
 
 
-SQL_QUALITY_CLASSIFIER = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    tk AS (
+SQL_QUALITY_CLASSIFIER = _with(
+    toks=_toks("doc_id"),
+    tk="""
         SELECT doc_id,
                CAST('0x' || substr(md5(unnest(t)), 1, 8) AS BIGINT)
                    % 128 AS b
         FROM toks
-    ),
-    cnt AS (SELECT doc_id, b, count(*) AS c FROM tk GROUP BY doc_id, b),
-    tot AS (SELECT doc_id, count(*) AS n FROM tk GROUP BY doc_id),
-    feat AS (
+    """,
+    cnt="SELECT doc_id, b, count(*) AS c FROM tk GROUP BY doc_id, b",
+    tot="SELECT doc_id, count(*) AS n FROM tk GROUP BY doc_id",
+    feat="""
         SELECT cnt.doc_id, cnt.b, cnt.c::DOUBLE / tot.n AS x
         FROM cnt JOIN tot USING (doc_id)
-    ),
-    lab AS (
+    """,
+    lab="""
         SELECT doc_id,
                CASE WHEN coalesce(lang, '') = 'en' THEN 1.0 ELSE 0.0 END AS y
         FROM documents
-    ),
-    nn AS (SELECT count(*)::BIGINT AS n FROM lab),
-    spine AS (SELECT unnest(generate_series(0, 127)) AS b),
-    r1 AS (
+    """,
+    nn="SELECT count(*)::BIGINT AS n FROM lab",
+    spine="SELECT unnest(generate_series(0, 127)) AS b",
+    r1="""
         SELECT doc_id,
                CAST(floor((y - 0.5) * 1e9 + 0.5) AS BIGINT) AS rn
         FROM lab
-    ),
-    g1 AS (
+    """,
+    g1="""
         SELECT b, sum(CAST(floor((rn / 1e9) * x * 1e9 + 0.5)
                            AS BIGINT))::BIGINT AS gn
         FROM feat JOIN r1 USING (doc_id) GROUP BY b
-    ),
-    w1 AS (
+    """,
+    w1="""
         SELECT s.b,
                CAST(floor(100.0 * (coalesce(g1.gn, 0) / (1e9 * nn.n))
                           * 1e6 + 0.5) AS BIGINT) AS w
         FROM spine s CROSS JOIN nn LEFT JOIN g1 USING (b)
-    ),
-    z2 AS (
+    """,
+    z2="""
         SELECT doc_id,
                sum(CAST(floor(x * (w / 1e6) * 1e9 + 0.5)
                         AS BIGINT))::DOUBLE / 1e9 AS z
         FROM feat JOIN w1 USING (b) GROUP BY doc_id
-    ),
-    r2 AS (
+    """,
+    r2="""
         SELECT lab.doc_id,
                CAST(floor((y - 1.0 / (1.0 + exp(-coalesce(z, 0.0))))
                           * 1e9 + 0.5) AS BIGINT) AS rn
         FROM lab LEFT JOIN z2 USING (doc_id)
-    ),
-    g2 AS (
+    """,
+    g2="""
         SELECT b, sum(CAST(floor((rn / 1e9) * x * 1e9 + 0.5)
                            AS BIGINT))::BIGINT AS gn
         FROM feat JOIN r2 USING (doc_id) GROUP BY b
-    ),
-    w2 AS (
+    """,
+    w2="""
         SELECT w1.b,
                w1.w + CAST(floor(100.0 * (coalesce(g2.gn, 0)
                                           / (1e9 * nn.n))
                                  * 1e6 + 0.5) AS BIGINT) AS w
         FROM w1 CROSS JOIN nn LEFT JOIN g2 USING (b)
-    ),
-    z3 AS (
+    """,
+    z3="""
         SELECT doc_id,
                sum(CAST(floor(x * (w / 1e6) * 1e9 + 0.5)
                         AS BIGINT))::DOUBLE / 1e9 AS z
         FROM feat JOIN w2 USING (b) GROUP BY doc_id
-    ),
-    r3 AS (
+    """,
+    r3="""
         SELECT lab.doc_id,
                CAST(floor((y - 1.0 / (1.0 + exp(-coalesce(z, 0.0))))
                           * 1e9 + 0.5) AS BIGINT) AS rn
         FROM lab LEFT JOIN z3 USING (doc_id)
-    ),
-    g3 AS (
+    """,
+    g3="""
         SELECT b, sum(CAST(floor((rn / 1e9) * x * 1e9 + 0.5)
                            AS BIGINT))::BIGINT AS gn
         FROM feat JOIN r3 USING (doc_id) GROUP BY b
-    ),
-    w3 AS (
+    """,
+    w3="""
         SELECT w2.b,
                w2.w + CAST(floor(100.0 * (coalesce(g3.gn, 0)
                                           / (1e9 * nn.n))
                                  * 1e6 + 0.5) AS BIGINT) AS w
         FROM w2 CROSS JOIN nn LEFT JOIN g3 USING (b)
-    ),
-    zf AS (
+    """,
+    zf="""
         SELECT doc_id,
                sum(CAST(floor(x * (w / 1e6) * 1e9 + 0.5)
                         AS BIGINT))::DOUBLE / 1e9 AS z
         FROM feat JOIN w3 USING (b) GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT d.doc_id,
            len(t.t)::BIGINT AS ntok,
            CAST(floor(coalesce(zf.z, 0.0) * 1e6 + 0.5) AS BIGINT)
@@ -6516,7 +6376,7 @@ SQL_QUALITY_CLASSIFIER = r"""
     FROM documents d
     JOIN toks t USING (doc_id)
     LEFT JOIN zf USING (doc_id)
-"""
+""")
 
 
 def q_mix_solver(spark, sf_dir):
@@ -6531,125 +6391,121 @@ def q_mix_solver(spark, sf_dir):
     return mix_match_weights(docs, target, group_col="source")
 
 
-SQL_MIX_SOLVER = r"""
-    WITH toks AS (
-        SELECT source, lang, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    tk AS (
+SQL_MIX_SOLVER = _with(
+    toks=_toks("source", "lang"),
+    tk="""
         SELECT source,
                CAST('0x' || substr(md5(unnest(t)), 1, 8) AS BIGINT)
                    % 128 AS b
         FROM toks
-    ),
-    c AS (SELECT source, b, count(*) AS c FROM tk GROUP BY source, b),
-    tt AS (SELECT source, count(*)::BIGINT AS n FROM tk GROUP BY source),
-    spine AS (SELECT unnest(generate_series(0, 127)) AS b),
-    p AS (
+    """,
+    c="SELECT source, b, count(*) AS c FROM tk GROUP BY source, b",
+    tt="SELECT source, count(*)::BIGINT AS n FROM tk GROUP BY source",
+    spine="SELECT unnest(generate_series(0, 127)) AS b",
+    p="""
         SELECT tt.source, s.b, tt.n,
                (coalesce(c.c, 0) + 1) / (tt.n + 128) AS p
         FROM spine s CROSS JOIN tt
         LEFT JOIN c ON c.source = tt.source AND c.b = s.b
-    ),
-    ttk AS (
+    """,
+    ttk="""
         SELECT CAST('0x' || substr(md5(unnest(t)), 1, 8) AS BIGINT)
                    % 128 AS b
         FROM toks WHERE coalesce(lang, '') = 'en'
-    ),
-    tcnt AS (SELECT b, count(*) AS ct FROM ttk GROUP BY b),
-    ttot AS (SELECT count(*)::BIGINT AS tn FROM ttk),
-    td AS (
+    """,
+    tcnt="SELECT b, count(*) AS ct FROM ttk GROUP BY b",
+    ttot="SELECT count(*)::BIGINT AS tn FROM ttk",
+    td="""
         SELECT s.b, (coalesce(tcnt.ct, 0) + 1) / (ttot.tn + 128) AS t
         FROM spine s CROSS JOIN ttot LEFT JOIN tcnt USING (b)
-    ),
-    sn AS (SELECT count(*)::BIGINT AS s FROM tt),
-    a0 AS (
+    """,
+    sn="SELECT count(*)::BIGINT AS s FROM tt",
+    a0="""
         SELECT source, CAST(floor(1e6 / sn.s + 0.5) AS BIGINT) AS am
         FROM tt CROSS JOIN sn
-    ),
-    m1 AS (
+    """,
+    m1="""
         SELECT b, sum(CAST(floor((am / 1e6) * p * 1e9 + 0.5)
                            AS BIGINT))::DOUBLE / 1e9 AS m
         FROM p JOIN a0 USING (source) GROUP BY b
-    ),
-    g1 AS (
+    """,
+    g1="""
         SELECT source, sum(CAST(floor(2.0 * p * (m - t) * 1e9 + 0.5)
                                AS BIGINT))::BIGINT AS gn
         FROM p JOIN m1 USING (b) JOIN td USING (b) GROUP BY source
-    ),
-    r1 AS (
+    """,
+    r1="""
         SELECT a0.source, a0.am AS prev_am,
                CAST(floor((am / 1e6)
                           * exp(-greatest(-20.0,
                                           least(20.0, 1000.0 * (gn / 1e9))))
                           * 1e9 + 0.5) AS BIGINT) AS rn
         FROM a0 JOIN g1 USING (source)
-    ),
-    z1 AS (SELECT sum(rn)::DOUBLE / 1e9 AS z FROM r1),
-    a1 AS (
+    """,
+    z1="SELECT sum(rn)::DOUBLE / 1e9 AS z FROM r1",
+    a1="""
         SELECT source,
                CASE WHEN z > 0
                     THEN CAST(floor((rn / 1e9) / z * 1e6 + 0.5) AS BIGINT)
                     ELSE prev_am END AS am
         FROM r1 CROSS JOIN z1
-    ),
-    m2 AS (
+    """,
+    m2="""
         SELECT b, sum(CAST(floor((am / 1e6) * p * 1e9 + 0.5)
                            AS BIGINT))::DOUBLE / 1e9 AS m
         FROM p JOIN a1 USING (source) GROUP BY b
-    ),
-    g2 AS (
+    """,
+    g2="""
         SELECT source, sum(CAST(floor(2.0 * p * (m - t) * 1e9 + 0.5)
                                AS BIGINT))::BIGINT AS gn
         FROM p JOIN m2 USING (b) JOIN td USING (b) GROUP BY source
-    ),
-    r2 AS (
+    """,
+    r2="""
         SELECT a1.source, a1.am AS prev_am,
                CAST(floor((am / 1e6)
                           * exp(-greatest(-20.0,
                                           least(20.0, 1000.0 * (gn / 1e9))))
                           * 1e9 + 0.5) AS BIGINT) AS rn
         FROM a1 JOIN g2 USING (source)
-    ),
-    z2 AS (SELECT sum(rn)::DOUBLE / 1e9 AS z FROM r2),
-    a2 AS (
+    """,
+    z2="SELECT sum(rn)::DOUBLE / 1e9 AS z FROM r2",
+    a2="""
         SELECT source,
                CASE WHEN z > 0
                     THEN CAST(floor((rn / 1e9) / z * 1e6 + 0.5) AS BIGINT)
                     ELSE prev_am END AS am
         FROM r2 CROSS JOIN z2
-    ),
-    m3 AS (
+    """,
+    m3="""
         SELECT b, sum(CAST(floor((am / 1e6) * p * 1e9 + 0.5)
                            AS BIGINT))::DOUBLE / 1e9 AS m
         FROM p JOIN a2 USING (source) GROUP BY b
-    ),
-    g3 AS (
+    """,
+    g3="""
         SELECT source, sum(CAST(floor(2.0 * p * (m - t) * 1e9 + 0.5)
                                AS BIGINT))::BIGINT AS gn
         FROM p JOIN m3 USING (b) JOIN td USING (b) GROUP BY source
-    ),
-    r3 AS (
+    """,
+    r3="""
         SELECT a2.source, a2.am AS prev_am,
                CAST(floor((am / 1e6)
                           * exp(-greatest(-20.0,
                                           least(20.0, 1000.0 * (gn / 1e9))))
                           * 1e9 + 0.5) AS BIGINT) AS rn
         FROM a2 JOIN g3 USING (source)
-    ),
-    z3 AS (SELECT sum(rn)::DOUBLE / 1e9 AS z FROM r3),
-    a3 AS (
+    """,
+    z3="SELECT sum(rn)::DOUBLE / 1e9 AS z FROM r3",
+    a3="""
         SELECT source,
                CASE WHEN z > 0
                     THEN CAST(floor((rn / 1e9) / z * 1e6 + 0.5) AS BIGINT)
                     ELSE prev_am END AS am
         FROM r3 CROSS JOIN z3
-    )
+    """,
+    select="""
     SELECT tt.source, tt.n AS n_tokens, a3.am AS weight_micro
     FROM tt JOIN a3 USING (source)
-"""
+""")
 
 
 def q_bpe_merges(spark, sf_dir):
@@ -6665,88 +6521,42 @@ def q_bpe_merges(spark, sf_dir):
     return bpe_merge_learn(docs, steps=4)
 
 
-SQL_BPE_MERGES = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    s0 AS (
-        SELECT ' ' || array_to_string(t, ' ') || ' ' AS s FROM toks
-    ),
-    p1 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM s0 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m1 AS (
-        SELECT a, b, cnt FROM p1 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s1 AS (
-        SELECT replace(replace(replace(s,
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m1), (SELECT ' ' || a || chr(1) || b || ' ' FROM m1)),
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m1), (SELECT ' ' || a || chr(1) || b || ' ' FROM m1)),
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m1), (SELECT ' ' || a || chr(1) || b || ' ' FROM m1)) AS s
-        FROM s0
-    ),
-    p2 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM s1 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m2 AS (
-        SELECT a, b, cnt FROM p2 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s2 AS (
-        SELECT replace(replace(replace(s,
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m2), (SELECT ' ' || a || chr(1) || b || ' ' FROM m2)),
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m2), (SELECT ' ' || a || chr(1) || b || ' ' FROM m2)),
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m2), (SELECT ' ' || a || chr(1) || b || ' ' FROM m2)) AS s
-        FROM s1
-    ),
-    p3 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM s2 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m3 AS (
-        SELECT a, b, cnt FROM p3 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s3 AS (
-        SELECT replace(replace(replace(s,
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m3), (SELECT ' ' || a || chr(1) || b || ' ' FROM m3)),
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m3), (SELECT ' ' || a || chr(1) || b || ' ' FROM m3)),
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m3), (SELECT ' ' || a || chr(1) || b || ' ' FROM m3)) AS s
-        FROM s2
-    ),
-    p4 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM s3 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m4 AS (
-        SELECT a, b, cnt FROM p4 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s4 AS (
-        SELECT replace(replace(replace(s,
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m4), (SELECT ' ' || a || chr(1) || b || ' ' FROM m4)),
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m4), (SELECT ' ' || a || chr(1) || b || ' ' FROM m4)),
-            (SELECT ' ' || a || ' ' || b || ' ' FROM m4), (SELECT ' ' || a || chr(1) || b || ' ' FROM m4)) AS s
-        FROM s3
+def _bpe_merge(m: str, src: str) -> str:
+    """Merge the symbol pair of the one-row CTE `m` in every src.s
+    (three passes catch overlapping runs; no-op when m is empty)."""
+    pat = f"coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM {m}), chr(2))"
+    rep = f"coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM {m}), chr(2))"
+    return (
+        f"SELECT doc_id, replace(replace(replace(s, {pat}, {rep}), {pat}, {rep}), {pat}, {rep})"
+        f" AS s FROM {src}"
     )
+
+
+def _bpe_learn(s: str, steps: int = 4) -> dict[str, str]:
+    """bpe_merge_learn over the CTE {s}0 (doc_id, s = ' '-padded
+    symbols): round k counts adjacent pairs (pk), picks the top pair
+    with count >= 2, ties by symbols (mk), and merges it ({s}k)."""
+    ctes = {}
+    for k in range(1, steps + 1):
+        ctes[f"p{k}"] = f"""
+        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
+        FROM (SELECT string_split(trim(s, ' '), ' ') AS tt
+              FROM {s}{k - 1} WHERE length(trim(s, ' ')) > 0),
+             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
+        GROUP BY 1, 2
+    """
+        ctes[f"m{k}"] = f"SELECT a, b, cnt FROM p{k} WHERE cnt >= 2 ORDER BY cnt DESC, a, b LIMIT 1"
+        ctes[f"{s}{k}"] = _bpe_merge(f"m{k}", f"{s}{k - 1}")
+    return ctes
+
+
+_BPE_S0 = "SELECT doc_id, ' ' || array_to_string(t, ' ') || ' ' AS s FROM "
+
+SQL_BPE_MERGES = _with(
+    toks=_toks("doc_id"),
+    s0=_BPE_S0 + "toks",
+    **_bpe_learn("s"),
+    select="""
     SELECT 1 AS step, a AS sym_a, b AS sym_b, cnt AS pair_count FROM m1
     UNION ALL
     SELECT 2 AS step, a AS sym_a, b AS sym_b, cnt AS pair_count FROM m2
@@ -6754,7 +6564,7 @@ SQL_BPE_MERGES = r"""
     SELECT 3 AS step, a AS sym_a, b AS sym_b, cnt AS pair_count FROM m3
     UNION ALL
     SELECT 4 AS step, a AS sym_a, b AS sym_b, cnt AS pair_count FROM m4
-"""
+""")
 
 
 def q_bpe_encode(spark, sf_dir):
@@ -6769,102 +6579,24 @@ def q_bpe_encode(spark, sf_dir):
     return bpe_encode(docs, steps=4)
 
 
-SQL_BPE_ENCODE = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    s0 AS (
-        SELECT doc_id, ' ' || array_to_string(t, ' ') || ' ' AS s FROM toks
-    ),
-    p1 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM s0 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m1 AS (
-        SELECT a, b, cnt FROM p1 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s1 AS (
-        SELECT doc_id, replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m1), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m1), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m1), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m1), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m1), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m1), chr(2))) AS s
-        FROM s0
-    ),
-    p2 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM s1 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m2 AS (
-        SELECT a, b, cnt FROM p2 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s2 AS (
-        SELECT doc_id, replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m2), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m2), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m2), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m2), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m2), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m2), chr(2))) AS s
-        FROM s1
-    ),
-    p3 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM s2 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m3 AS (
-        SELECT a, b, cnt FROM p3 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s3 AS (
-        SELECT doc_id, replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m3), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m3), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m3), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m3), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m3), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m3), chr(2))) AS s
-        FROM s2
-    ),
-    p4 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM s3 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m4 AS (
-        SELECT a, b, cnt FROM p4 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s4 AS (
-        SELECT doc_id, replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m4), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m4), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m4), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m4), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m4), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m4), chr(2))) AS s
-        FROM s3
-    )
+SQL_BPE_ENCODE = _with(
+    toks=_toks("doc_id"),
+    s0=_BPE_S0 + "toks",
+    **_bpe_learn("s"),
+    select="""
     SELECT t.doc_id,
            len(t.t)::BIGINT AS ntok,
-           CASE WHEN length(trim(f.s)) = 0 THEN 0
-                ELSE len(string_split(trim(f.s), ' ')) END::BIGINT
+           CASE WHEN length(trim(f.s, ' ')) = 0 THEN 0
+                ELSE len(string_split(trim(f.s, ' '), ' ')) END::BIGINT
                AS n_symbols,
            CASE WHEN len(t.t) > 0
                 THEN CAST(floor((len(t.t)
-                                 - CASE WHEN length(trim(f.s)) = 0 THEN 0
-                                        ELSE len(string_split(trim(f.s), ' '))
+                                 - CASE WHEN length(trim(f.s, ' ')) = 0 THEN 0
+                                        ELSE len(string_split(trim(f.s, ' '), ' '))
                                    END) * 10000.0 / len(t.t) + 0.5) AS BIGINT)
                 ELSE 0 END AS saved_bp
     FROM toks t JOIN s4 f USING (doc_id)
-"""
-
+""")
 
 
 def q_bpe_apply(spark, sf_dir):
@@ -6883,140 +6615,32 @@ def q_bpe_apply(spark, sf_dir):
     return bpe_apply(docs.filter(F.col("doc_id") % 2 == 1), merges)
 
 
-SQL_BPE_APPLY = r"""
-    WITH ttoks AS (
-        SELECT CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents WHERE doc_id % 2 = 0
-    ),
-    ts0 AS (
-        SELECT ' ' || array_to_string(t, ' ') || ' ' AS s FROM ttoks
-    ),
-    p1 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM ts0 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m1 AS (
-        SELECT a, b, cnt FROM p1 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    ts1 AS (
-        SELECT replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m1), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m1), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m1), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m1), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m1), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m1), chr(2))) AS s
-        FROM ts0
-    ),
-    p2 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM ts1 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m2 AS (
-        SELECT a, b, cnt FROM p2 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    ts2 AS (
-        SELECT replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m2), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m2), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m2), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m2), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m2), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m2), chr(2))) AS s
-        FROM ts1
-    ),
-    p3 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM ts2 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m3 AS (
-        SELECT a, b, cnt FROM p3 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    ts3 AS (
-        SELECT replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m3), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m3), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m3), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m3), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m3), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m3), chr(2))) AS s
-        FROM ts2
-    ),
-    p4 AS (
-        SELECT tt[i] AS a, tt[i + 1] AS b, count(*)::BIGINT AS cnt
-        FROM (SELECT string_split(trim(s), ' ') AS tt
-              FROM ts3 WHERE length(trim(s)) > 0),
-             LATERAL (SELECT unnest(generate_series(1, len(tt) - 1)) AS i)
-        GROUP BY 1, 2
-    ),
-    m4 AS (
-        SELECT a, b, cnt FROM p4 WHERE cnt >= 2
-        ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    ts4 AS (
-        SELECT replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m4), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m4), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m4), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m4), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m4), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m4), chr(2))) AS s
-        FROM ts3
-    ),
-    atoks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents WHERE doc_id % 2 = 1
-    ),
-    as0 AS (
-        SELECT doc_id, ' ' || array_to_string(t, ' ') || ' ' AS s FROM atoks
-    ),
-    as1 AS (
-        SELECT doc_id, replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m1), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m1), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m1), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m1), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m1), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m1), chr(2))) AS s
-        FROM as0
-    ),
-    as2 AS (
-        SELECT doc_id, replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m2), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m2), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m2), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m2), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m2), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m2), chr(2))) AS s
-        FROM as1
-    ),
-    as3 AS (
-        SELECT doc_id, replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m3), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m3), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m3), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m3), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m3), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m3), chr(2))) AS s
-        FROM as2
-    ),
-    as4 AS (
-        SELECT doc_id, replace(replace(replace(s,
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m4), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m4), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m4), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m4), chr(2))),
-            coalesce((SELECT ' ' || a || ' ' || b || ' ' FROM m4), chr(2)), coalesce((SELECT ' ' || a || chr(1) || b || ' ' FROM m4), chr(2))) AS s
-        FROM as3
-    ),
-    rep AS (
-        SELECT t.doc_id,
-               len(t.t)::BIGINT AS ntok,
-               CASE WHEN length(trim(f.s)) = 0 THEN 0
-                    ELSE len(string_split(trim(f.s), ' ')) END::BIGINT
-                   AS n_symbols
+# Merges learned on the even half (ts*), replayed on the odd half (as*).
+_BPE_APPLY = {
+    "ttoks": _toks("doc_id", where="WHERE doc_id % 2 = 0"),
+    "ts0": _BPE_S0 + "ttoks",
+    **_bpe_learn("ts"),
+    "atoks": _toks("doc_id", where="WHERE doc_id % 2 = 1"),
+    "as0": _BPE_S0 + "atoks",
+    **{f"as{k}": _bpe_merge(f"m{k}", f"as{k - 1}") for k in range(1, 5)},
+}
+_BPE_N_SYMBOLS = """CASE WHEN length(trim(f.s, ' ')) = 0 THEN 0
+                    ELSE len(string_split(trim(f.s, ' '), ' ')) END::BIGINT AS n_symbols"""
+
+SQL_BPE_APPLY = _with(
+    **_BPE_APPLY,
+    rep=f"""
+        SELECT t.doc_id, len(t.t)::BIGINT AS ntok, {_BPE_N_SYMBOLS}
         FROM atoks t JOIN as4 f USING (doc_id)
-    )
+    """,
+    select="""
     SELECT doc_id, ntok, n_symbols,
            CASE WHEN ntok > 0
                 THEN ((ntok - n_symbols) * 20000 + ntok)
                      // (2 * ntok)
                 ELSE 0 END::BIGINT AS saved_bp
     FROM rep
-"""
+""")
 
 
 def q_bpe_roundtrip(spark, sf_dir):
@@ -7033,40 +6657,15 @@ def q_bpe_roundtrip(spark, sf_dir):
     return bpe_roundtrip(docs.filter(F.col("doc_id") % 2 == 1), merges)
 
 
-# The roundtrip oracle IS the apply oracle with the report tail swapped
-# for the decode-and-compare tail — built by replacement so the learn/
-# apply replay CTEs can never drift between the two.
-_BPE_REPORT_TAIL = """    rep AS (
-        SELECT t.doc_id,
-               len(t.t)::BIGINT AS ntok,
-               CASE WHEN length(trim(f.s)) = 0 THEN 0
-                    ELSE len(string_split(trim(f.s), ' ')) END::BIGINT
-                   AS n_symbols
-        FROM atoks t JOIN as4 f USING (doc_id)
-    )
-    SELECT doc_id, ntok, n_symbols,
-           CASE WHEN ntok > 0
-                THEN ((ntok - n_symbols) * 20000 + ntok)
-                     // (2 * ntok)
-                ELSE 0 END::BIGINT AS saved_bp
-    FROM rep
-"""
-_BPE_ROUNDTRIP_TAIL = """    rep AS (
-        SELECT t.doc_id,
-               len(t.t)::BIGINT AS ntok,
-               CASE WHEN length(trim(f.s)) = 0 THEN 0
-                    ELSE len(string_split(trim(f.s), ' ')) END::BIGINT
-                   AS n_symbols,
-               (replace(f.s, chr(1), ' ') = a0.s) AS ok
-        FROM atoks t
-        JOIN as4 f USING (doc_id)
-        JOIN as0 a0 USING (doc_id)
-    )
-    SELECT doc_id, ntok, n_symbols, ok
-    FROM rep
-"""
-assert _BPE_REPORT_TAIL in SQL_BPE_APPLY, "bpe tail drifted from SQL_BPE_APPLY"
-SQL_BPE_ROUNDTRIP = SQL_BPE_APPLY.replace(_BPE_REPORT_TAIL, _BPE_ROUNDTRIP_TAIL)
+SQL_BPE_ROUNDTRIP = _with(
+    **_BPE_APPLY,
+    select=f"""
+    SELECT t.doc_id, len(t.t)::BIGINT AS ntok, {_BPE_N_SYMBOLS},
+           (replace(f.s, chr(1), ' ') = a0.s) AS ok
+    FROM atoks t
+    JOIN as4 f USING (doc_id)
+    JOIN as0 a0 USING (doc_id)
+""")
 
 
 def q_mmr_select(spark, sf_dir):
@@ -7081,31 +6680,31 @@ def q_mmr_select(spark, sf_dir):
     return mmr_select(emb, k=4, lam_bp=5000, query_id=0)
 
 
-SQL_MMR_SELECT = """
-    WITH v AS (
+SQL_MMR_SELECT = _with(
+    v="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ),
-    q AS (SELECT e AS qv FROM v WHERE vec_id = 0),
-    cand AS (
+    """,
+    q="SELECT e AS qv FROM v WHERE vec_id = 0",
+    cand="""
         SELECT vec_id, e,
                CAST(floor(list_dot_product(e, qv)
                     / (sqrt(list_dot_product(e, e))
                        * sqrt(list_dot_product(qv, qv)))
                     * 10000 + 0.5) AS BIGINT) AS rel
         FROM v CROSS JOIN q WHERE vec_id <> 0
-    ),
-    p1 AS (SELECT vec_id, e, rel FROM cand ORDER BY rel DESC, vec_id LIMIT 1),
-    c1 AS (
+    """,
+    p1="SELECT vec_id, e, rel FROM cand ORDER BY rel DESC, vec_id LIMIT 1",
+    c1="""
         SELECT c.vec_id, c.e, c.rel,
                CAST(floor(list_dot_product(c.e, p.e)
                     / (sqrt(list_dot_product(c.e, c.e))
                        * sqrt(list_dot_product(p.e, p.e)))
                     * 10000 + 0.5) AS BIGINT) AS ms
         FROM cand c CROSS JOIN p1 p WHERE c.vec_id <> p.vec_id
-    ),
-    p2 AS (SELECT vec_id, e, rel, ms FROM c1
-           ORDER BY (5000 * rel - 5000 * ms) DESC, vec_id LIMIT 1),
-    c2 AS (
+    """,
+    p2="""SELECT vec_id, e, rel, ms FROM c1
+           ORDER BY (5000 * rel - 5000 * ms) DESC, vec_id LIMIT 1""",
+    c2="""
         SELECT c.vec_id, c.e, c.rel,
                greatest(c.ms,
                    CAST(floor(list_dot_product(c.e, p.e)
@@ -7113,10 +6712,10 @@ SQL_MMR_SELECT = """
                            * sqrt(list_dot_product(p.e, p.e)))
                         * 10000 + 0.5) AS BIGINT)) AS ms
         FROM c1 c CROSS JOIN p2 p WHERE c.vec_id <> p.vec_id
-    ),
-    p3 AS (SELECT vec_id, e, rel, ms FROM c2
-           ORDER BY (5000 * rel - 5000 * ms) DESC, vec_id LIMIT 1),
-    c3 AS (
+    """,
+    p3="""SELECT vec_id, e, rel, ms FROM c2
+           ORDER BY (5000 * rel - 5000 * ms) DESC, vec_id LIMIT 1""",
+    c3="""
         SELECT c.vec_id, c.e, c.rel,
                greatest(c.ms,
                    CAST(floor(list_dot_product(c.e, p.e)
@@ -7124,9 +6723,10 @@ SQL_MMR_SELECT = """
                            * sqrt(list_dot_product(p.e, p.e)))
                         * 10000 + 0.5) AS BIGINT)) AS ms
         FROM c2 c CROSS JOIN p3 p WHERE c.vec_id <> p.vec_id
-    ),
-    p4 AS (SELECT vec_id, e, rel, ms FROM c3
-           ORDER BY (5000 * rel - 5000 * ms) DESC, vec_id LIMIT 1)
+    """,
+    p4="""SELECT vec_id, e, rel, ms FROM c3
+           ORDER BY (5000 * rel - 5000 * ms) DESC, vec_id LIMIT 1""",
+    select="""
     SELECT 1::BIGINT AS sel_rank, vec_id, rel AS rel_bp,
            0::BIGINT AS penalty_bp, (5000 * rel)::BIGINT AS score_micro
     FROM p1
@@ -7139,7 +6739,7 @@ SQL_MMR_SELECT = """
     UNION ALL
     SELECT 4::BIGINT, vec_id, rel, ms,
            (5000 * rel - 5000 * ms)::BIGINT FROM p4
-"""
+""")
 
 
 def q_dataset_card(spark, sf_dir):
@@ -7153,42 +6753,40 @@ def q_dataset_card(spark, sf_dir):
     return dataset_card(docs)
 
 
-SQL_DATASET_CARD = r"""
-    WITH base AS (
+SQL_DATASET_CARD = _with(
+    base=rf"""
         SELECT source, lang, md5(coalesce(text, '')) AS h,
-               len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-                   END)::BIGINT AS ntok,
-               CASE WHEN length(trim(coalesce(text, ''))) = 0
+               len({_TOKENS})::BIGINT AS ntok,
+               CASE WHEN length(trim(coalesce(text, ''), ' ')) = 0
                     THEN 1 ELSE 0 END AS emp
         FROM documents
-    ),
-    tot AS (
+    """,
+    tot="""
         SELECT source, count(*)::BIGINT AS n_docs,
                sum(ntok)::BIGINT AS n_tokens,
                sum(emp)::BIGINT AS n_empty
         FROM base GROUP BY source
-    ),
-    lc AS (
+    """,
+    lc="""
         SELECT source, lang, count(*)::BIGINT AS n
         FROM base WHERE lang IS NOT NULL GROUP BY 1, 2
-    ),
-    langs AS (SELECT source, count(*)::BIGINT AS n_langs FROM lc GROUP BY 1),
-    top AS (
+    """,
+    langs="SELECT source, count(*)::BIGINT AS n_langs FROM lc GROUP BY 1",
+    top="""
         SELECT source, lang AS top_lang, n AS top_n FROM (
             SELECT *, row_number() OVER (
                 PARTITION BY source ORDER BY n DESC, lang) AS rn
             FROM lc
         ) WHERE rn = 1
-    ),
-    dup AS (
+    """,
+    dup="""
         SELECT source,
                coalesce(sum(CASE WHEN c >= 2 THEN c END), 0)::BIGINT AS n_dup
         FROM (SELECT source, h, count(*)::BIGINT AS c
               FROM base GROUP BY 1, 2)
         GROUP BY source
-    )
+    """,
+    select="""
     SELECT t.source, t.n_docs, t.n_tokens,
            coalesce(l.n_langs, 0)::BIGINT AS n_langs,
            p.top_lang,
@@ -7202,7 +6800,7 @@ SQL_DATASET_CARD = r"""
     LEFT JOIN langs l USING (source)
     LEFT JOIN top p USING (source)
     LEFT JOIN dup d USING (source)
-"""
+""")
 
 
 def q_source_scorecard(spark, sf_dir):
@@ -7221,21 +6819,20 @@ def q_source_scorecard(spark, sf_dir):
     )
 
 
-# Oracle BUILT FROM SQL_DATASET_CARD + SQL_DUP_SOURCE_MATRIX +
-# SQL_CONTAINMENT_DROP (the dataset_diff discipline): the three
-# pipelines replay their own frozen registry definitions, so none of
-# the machinery can drift from its individually-verified form. The
+# Composed from SQL_DATASET_CARD + SQL_DUP_SOURCE_MATRIX +
+# SQL_CONTAINMENT_DROP: the three pipelines replay their own registry
+# oracles' CTEs, so the machinery is the individually-verified one. The
 # join key is coalesce(source, '') on the card side, mirroring the
 # matrix/containment aggregates' internal NULL->'' convention.
-SQL_SOURCE_SCORECARD = f"""
-    WITH card AS ({SQL_DATASET_CARD}),
-    mat AS ({SQL_DUP_SOURCE_MATRIX}),
-    cdrop AS ({SQL_CONTAINMENT_DROP}),
-    selfp AS (
+SQL_SOURCE_SCORECARD = _with(
+    card=SQL_DATASET_CARD,
+    mat=SQL_DUP_SOURCE_MATRIX,
+    cdrop=SQL_CONTAINMENT_DROP,
+    selfp="""
         SELECT source_lo AS s, n_pairs AS self_dup_pairs
         FROM mat WHERE source_lo = source_hi
-    ),
-    crossp AS (
+    """,
+    crossp="""
         SELECT s, sum(n_pairs)::BIGINT AS cross_dup_pairs FROM (
             SELECT source_lo AS s, n_pairs
             FROM mat WHERE source_lo <> source_hi
@@ -7243,12 +6840,13 @@ SQL_SOURCE_SCORECARD = f"""
             SELECT source_hi AS s, n_pairs
             FROM mat WHERE source_lo <> source_hi
         ) GROUP BY s
-    ),
-    cont AS (
+    """,
+    contained="""
         SELECT coalesce(source, '') AS s,
                sum(dropped)::BIGINT AS contained_docs
         FROM cdrop GROUP BY 1
-    )
+    """,
+    select="""
     SELECT c.source, c.n_docs, c.n_tokens, c.n_langs, c.top_lang,
            c.top_lang_bp, c.dup_doc_bp, c.empty_bp,
            coalesce(sp.self_dup_pairs, 0)::BIGINT AS self_dup_pairs,
@@ -7259,8 +6857,8 @@ SQL_SOURCE_SCORECARD = f"""
     FROM card c
     LEFT JOIN selfp sp ON coalesce(c.source, '') = sp.s
     LEFT JOIN crossp cp ON coalesce(c.source, '') = cp.s
-    LEFT JOIN cont ct ON coalesce(c.source, '') = ct.s
-"""
+    LEFT JOIN contained ct ON coalesce(c.source, '') = ct.s
+""")
 
 
 def q_scorecard_budget(spark, sf_dir):
@@ -7281,58 +6879,27 @@ def q_scorecard_budget(spark, sf_dir):
     )
 
 
-def _scorecard_budget_sql() -> str:
-    """SQL_BUDGET_BY_SOURCE's selection walk re-budgeted FROM the
-    scorecard (the dataset_diff string-surgery discipline): the
-    mix_temperature budget CTEs (per/tot/r/z/bud) are swapped for the
-    scorecard-effective-token allocation; the per-doc quality frame,
-    histogram-cutoff walk, and boundary recursion stay byte-identical
-    to the individually-verified budget_by_source oracle. Import-time
-    asserts pin the anchor so drift fails loudly."""
-    old = """    per AS (SELECT source, sum(ntok)::BIGINT AS n_tokens FROM d GROUP BY source),
-    tot AS (SELECT sum(n_tokens)::DOUBLE AS tot FROM per),
-    r AS (
-        SELECT source, n_tokens,
-               CASE WHEN tot > 0 THEN n_tokens / tot ELSE 0.0 END AS raw
-        FROM per, tot
-    ),
-    z AS (SELECT sum(CAST(floor(pow(raw, 0.7) * 1000000000.0 + 0.5)
-                          AS BIGINT))::DOUBLE / 1000000000.0 AS z
-          FROM r),
-    bud AS (
-        SELECT source,
-               (20000 * CAST(floor(CASE WHEN z > 0 THEN pow(raw, 0.7) / z
-                                        ELSE 0.0 END * 10000.0 + 0.5)
-                             AS BIGINT)) // 10000 AS budget
-        FROM r, z
-    ),
-"""
-    if SQL_BUDGET_BY_SOURCE.count(old) != 1:
-        # raise, not assert: loud under `python -O`
-        raise RuntimeError("budget_by_source allocation anchor drifted")
-    new = f"""    sc AS ({SQL_SOURCE_SCORECARD}),
-    eff AS (
+# budget_by_source's per-doc frame and selection walk, with the
+# temperature allocation replaced by the scorecard-effective-token one.
+SQL_SCORECARD_BUDGET = _with(
+    **_BUDGET_DOCS,
+    sc=SQL_SOURCE_SCORECARD,
+    eff="""
         SELECT source,
                (n_tokens * (10000 - least(dup_doc_bp + contained_bp, 10000)))
                    // 10000 AS eff
         FROM sc
-    ),
-    tote AS (SELECT sum(eff)::BIGINT AS tot FROM eff),
-    bud AS (
+    """,
+    tote="SELECT sum(eff)::BIGINT AS tot FROM eff",
+    bud="""
         SELECT source,
                CASE WHEN tot > 0 THEN (20000 * eff) // tot
                     ELSE 0 END AS budget
         FROM eff, tote
-    ),
-"""
-    return SQL_BUDGET_BY_SOURCE.replace(old, new)
-
-
-SQL_SCORECARD_BUDGET = _scorecard_budget_sql()
-if "sc AS (" not in SQL_SCORECARD_BUDGET:
-    raise RuntimeError("scorecard_budget surgery lost the scorecard CTE")
-if "pow(raw, 0.7)" in SQL_SCORECARD_BUDGET:
-    raise RuntimeError("scorecard_budget surgery left the old allocation")
+    """,
+    **_BUDGET_WALK,
+    recursive=("rec",),
+    select=_BUDGET_SELECT)
 
 
 def q_hard_negatives(spark, sf_dir):
@@ -7348,28 +6915,29 @@ def q_hard_negatives(spark, sf_dir):
     return hard_negatives(qs, store, k=10)
 
 
-SQL_HARD_NEGATIVES = """
-    WITH v AS (
+SQL_HARD_NEGATIVES = _with(
+    v="""
         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
         FROM embeddings
-    ),
-    q AS (SELECT vec_id AS qid, label AS qlab, e AS qv
-          FROM v WHERE vec_id < 5 AND list_dot_product(e, e) > 0),
-    s AS (SELECT vec_id, label, e FROM v
-          WHERE vec_id >= 5 AND list_dot_product(e, e) > 0),
-    scored AS (
+    """,
+    q="""SELECT vec_id AS qid, label AS qlab, e AS qv
+          FROM v WHERE vec_id < 5 AND list_dot_product(e, e) > 0""",
+    s="""SELECT vec_id, label, e FROM v
+          WHERE vec_id >= 5 AND list_dot_product(e, e) > 0""",
+    scored="""
         SELECT qid, s.vec_id, s.label,
                round(list_dot_product(e, qv)
                      / (sqrt(list_dot_product(e, e))
                         * sqrt(list_dot_product(qv, qv))), 4) AS cosine
         FROM s CROSS JOIN q WHERE s.label <> q.qlab
-    )
+    """,
+    select="""
     SELECT qid, vec_id, label, cosine FROM (
         SELECT *, row_number() OVER (
             PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rn
         FROM scored
     ) WHERE rn <= 10
-"""
+""")
 
 
 def q_semantic_contam(spark, sf_dir):
@@ -7387,41 +6955,42 @@ def q_semantic_contam(spark, sf_dir):
     return semantic_contam(tr, ev, threshold=0.3, num_planes=4, dim=64)
 
 
-SQL_SEMANTIC_CONTAM = """
-    WITH coeff AS (
+SQL_SEMANTIC_CONTAM = _with(
+    coeff="""
         SELECT p, list_transform(generate_series(0, 63),
                    d -> (strpos('0123456789abcdef',
                          substr(md5(p::VARCHAR || '|' || d::VARCHAR), 1, 1))
                          - 8.5)) AS c
         FROM (SELECT unnest(generate_series(0, 3)) AS p)
-    ),
-    bucketed AS (
+    """,
+    bucketed="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
                CAST(sum(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), c) >= 0
                              THEN pow(2, p) ELSE 0 END) AS BIGINT) AS bucket
         FROM embeddings, coeff
         GROUP BY vec_id, CAST(embedding AS DOUBLE[])
-    ),
-    tr AS (SELECT vec_id, v, bucket FROM bucketed WHERE vec_id >= 200),
-    ev AS (SELECT v AS evv, bucket FROM bucketed WHERE vec_id < 200),
-    hits AS (
+    """,
+    tr="SELECT vec_id, v, bucket FROM bucketed WHERE vec_id >= 200",
+    ev="SELECT v AS evv, bucket FROM bucketed WHERE vec_id < 200",
+    hits="""
         SELECT tr.vec_id,
                round(list_dot_product(tr.v, ev.evv)
                      / (sqrt(list_dot_product(tr.v, tr.v))
                         * sqrt(list_dot_product(ev.evv, ev.evv))), 4) AS c
         FROM tr JOIN ev USING (bucket)
-    ),
-    agg AS (
+    """,
+    agg="""
         SELECT vec_id, count(*)::BIGINT AS n_contam,
                CAST(floor(max(c) * 10000 + 0.5) AS BIGINT) AS max_cos_bp
         FROM hits WHERE c >= 0.3 GROUP BY vec_id
-    )
+    """,
+    select="""
     SELECT tr.vec_id,
            coalesce(a.n_contam, 0) AS n_contam,
            coalesce(a.max_cos_bp, 0) AS max_cos_bp,
            coalesce(a.n_contam, 0) > 0 AS contaminated
     FROM tr LEFT JOIN agg a ON tr.vec_id = a.vec_id
-"""
+""")
 
 
 def q_label_propagation(spark, sf_dir):
@@ -7443,39 +7012,40 @@ def q_label_propagation(spark, sf_dir):
     return label_propagation_fast(unlabeled, seeds, k=10)
 
 
-SQL_LABEL_PROPAGATION = """
-    WITH v AS (
+SQL_LABEL_PROPAGATION = _with(
+    v="""
         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
         FROM embeddings
-    ),
-    s AS (SELECT vec_id AS sid, label AS slab, e AS sv
+    """,
+    s="""SELECT vec_id AS sid, label AS slab, e AS sv
           FROM v WHERE vec_id < 100 AND label IS NOT NULL
-            AND list_dot_product(e, e) > 0),
-    u AS (SELECT vec_id, e FROM v
-          WHERE vec_id >= 100 AND list_dot_product(e, e) > 0),
-    scored AS (
+            AND list_dot_product(e, e) > 0""",
+    u="""SELECT vec_id, e FROM v
+          WHERE vec_id >= 100 AND list_dot_product(e, e) > 0""",
+    scored="""
         SELECT u.vec_id, s.sid, s.slab,
                round(list_dot_product(u.e, s.sv)
                      / (sqrt(list_dot_product(u.e, u.e))
                         * sqrt(list_dot_product(s.sv, s.sv))), 4) AS c
         FROM u CROSS JOIN s
-    ),
-    topk AS (
+    """,
+    topk="""
         SELECT vec_id, slab FROM (
             SELECT vec_id, slab, row_number() OVER (
                 PARTITION BY vec_id ORDER BY c DESC, sid) AS rn
             FROM scored
         ) WHERE rn <= 10
-    ),
-    votes AS (
+    """,
+    votes="""
         SELECT vec_id, slab, count(*)::BIGINT AS votes
         FROM topk GROUP BY vec_id, slab
-    )
+    """,
+    select="""
     SELECT vec_id, slab AS pred_label, votes
     FROM votes
     QUALIFY row_number() OVER (
         PARTITION BY vec_id ORDER BY votes DESC, slab) = 1
-"""
+""")
 
 
 def q_train_order(spark, sf_dir):
@@ -7507,71 +7077,49 @@ def q_curriculum_order(spark, sf_dir):
     )
 
 
-SQL_CURRICULUM_ORDER = r"""
-    WITH toks AS (
-        SELECT doc_id, text, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    stats AS (
-        SELECT doc_id,
-               len(t)::DOUBLE AS ntok,
-               greatest(length(text)::DOUBLE, 1.0) AS nchar,
-               (length(text) - length(regexp_replace(text,
-                   '[.,;:!?''"()\[\]{}-]', '', 'g')))::DOUBLE AS npunct,
-               len(list_filter(t, x -> list_contains(
-                   ['the','a','an','of','to','in','and','is','on','for'],
-                   lower(x))))::DOUBLE AS nstop
-        FROM toks
-    ),
-    scored AS (
-        SELECT doc_id,
-               CAST(floor((least(ntok / 100.0, 1.0) * 0.5
-                     + (1.0 - npunct / nchar) * 0.3
-                     + least((nstop / greatest(ntok, 1.0)) * 5.0, 1.0) * 0.2)
-                     * 10000.0 + 0.5) AS BIGINT) AS score
-        FROM stats
-    ),
-    keyed AS (
+SQL_CURRICULUM_ORDER = _with(
+    scored=f"SELECT doc_id, {_QUALITY_BP} AS score FROM ({_toks('doc_id', 'text')})",
+    keyed="""
         SELECT doc_id, score,
                md5('r7c|' || CAST(doc_id AS VARCHAR)) AS h,
                CAST(least(3, greatest(0, ((10000 - score) * 4) // 10001))
                     AS INTEGER) AS stage
         FROM scored
-    ),
-    a AS (
+    """,
+    a="""
         SELECT doc_id, score, h, stage,
                CAST(CAST('0x' || substr(h, 1, 8) AS BIGINT) % 8
                     AS INTEGER) AS shard_id
         FROM keyed
-    )
+    """,
+    select="""
     SELECT stage, shard_id,
            (row_number() OVER (PARTITION BY stage, shard_id
                                ORDER BY h, doc_id) - 1)::BIGINT AS position,
            doc_id, score
     FROM a
-"""
+""")
 
 
-SQL_TRAIN_ORDER = r"""
-    WITH s AS (
+SQL_TRAIN_ORDER = _with(
+    s="""
         SELECT doc_id,
                md5('r7|' || CAST(doc_id AS VARCHAR)) AS h
         FROM documents
-    ),
-    a AS (
+    """,
+    a="""
         SELECT doc_id, h,
                CAST(CAST('0x' || substr(h, 1, 8) AS BIGINT) % 16
                     AS INTEGER) AS shard_id
         FROM s
-    )
+    """,
+    select="""
     SELECT shard_id,
            (row_number() OVER (PARTITION BY shard_id ORDER BY h, doc_id)
             - 1)::BIGINT AS position,
            doc_id
     FROM a
-"""
+""")
 
 
 def q_train_manifest(spark, sf_dir):
@@ -7586,28 +7134,26 @@ def q_train_manifest(spark, sf_dir):
     return train_order_manifest(docs, n_shards=16, seed="r7")
 
 
-SQL_TRAIN_MANIFEST = r"""
-    WITH s AS (
+SQL_TRAIN_MANIFEST = _with(
+    s=rf"""
         SELECT doc_id,
                md5('r7|' || CAST(doc_id AS VARCHAR)) AS h,
-               len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-                   END)::BIGINT AS ntok
+               len({_TOKENS})::BIGINT AS ntok
         FROM documents
-    ),
-    a AS (
+    """,
+    a="""
         SELECT doc_id, h, ntok,
                CAST(CAST('0x' || substr(h, 1, 8) AS BIGINT) % 16
                     AS INTEGER) AS shard_id
         FROM s
-    ),
-    o AS (
+    """,
+    o="""
         SELECT shard_id, doc_id, ntok,
                row_number() OVER (PARTITION BY shard_id ORDER BY h, doc_id)
                    - 1 AS position
         FROM a
-    )
+    """,
+    select="""
     SELECT shard_id,
            count(*) AS n_docs,
            sum(ntok)::BIGINT AS n_tokens,
@@ -7617,7 +7163,7 @@ SQL_TRAIN_MANIFEST = r"""
                AS BIGINT)) AS order_digest
     FROM o
     GROUP BY shard_id
-"""
+""")
 
 
 def q_dsir_weights(spark, sf_dir):
@@ -7635,38 +7181,34 @@ def q_dsir_weights(spark, sf_dir):
     return dsir_weights(raw, target)
 
 
-SQL_DSIR_WEIGHTS = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    tk AS (
+SQL_DSIR_WEIGHTS = _with(
+    toks=_toks("doc_id"),
+    tk="""
         SELECT doc_id,
                CAST('0x' || substr(md5(unnest(t)), 1, 8) AS BIGINT)
                    % 1024 AS b
         FROM toks
-    ),
-    rt AS (SELECT doc_id, b FROM tk WHERE doc_id % 50 != 0),
-    tt AS (SELECT doc_id, b FROM tk WHERE doc_id % 50 = 0),
-    rc AS (SELECT b, count(*) AS cr FROM rt GROUP BY b),
-    tc AS (SELECT b, count(*) AS ct FROM tt GROUP BY b),
-    tr AS (SELECT count(*)::BIGINT AS trn FROM rt),
-    ttot AS (SELECT count(*)::BIGINT AS ttn FROM tt),
-    ratios AS (
+    """,
+    rt="SELECT doc_id, b FROM tk WHERE doc_id % 50 != 0",
+    tt="SELECT doc_id, b FROM tk WHERE doc_id % 50 = 0",
+    rc="SELECT b, count(*) AS cr FROM rt GROUP BY b",
+    tc="SELECT b, count(*) AS ct FROM tt GROUP BY b",
+    tr="SELECT count(*)::BIGINT AS trn FROM rt",
+    ttot="SELECT count(*)::BIGINT AS ttn FROM tt",
+    ratios="""
         SELECT rc.b,
                CAST(round(ln(((coalesce(tc.ct, 0) + 1)
                               / (ttot.ttn + 1024.0))
                              / ((rc.cr + 1) / (tr.trn + 1024.0)))
                           * 1e6) AS BIGINT) AS lr
         FROM rc LEFT JOIN tc ON rc.b = tc.b, tr, ttot
-    )
+    """,
+    select="""
     SELECT rt.doc_id, count(*) AS n_grams,
            sum(r.lr)::BIGINT AS weight_micro
     FROM rt JOIN ratios r ON r.b = rt.b
     GROUP BY rt.doc_id
-"""
+""")
 
 
 def q_quality_calibration(spark, sf_dir):
@@ -7684,23 +7226,24 @@ def q_quality_calibration(spark, sf_dir):
     return score_calibration(base)
 
 
-SQL_QUALITY_CALIBRATION = rf"""
-    WITH q AS ({SQL_QUALITY}),
-    d AS (
+SQL_QUALITY_CALIBRATION = _with(
+    q=SQL_QUALITY,
+    d="""
         SELECT doc.source, q.quality_bp
         FROM q JOIN documents doc USING (doc_id)
-    ),
-    hist AS (
+    """,
+    hist="""
         SELECT source, quality_bp, count(*) AS c
         FROM d GROUP BY source, quality_bp
-    ),
-    cum AS (
+    """,
+    cum="""
         SELECT source, quality_bp,
                sum(c) OVER (PARTITION BY source ORDER BY quality_bp)
                    AS cum,
                sum(c) OVER (PARTITION BY source) AS n
         FROM hist
-    )
+    """,
+    select="""
     SELECT source, max(n)::BIGINT AS n_docs,
            min(CASE WHEN cum >= (2500 * n + 9999) // 10000
                     THEN quality_bp END) AS p2500_bp,
@@ -7709,7 +7252,7 @@ SQL_QUALITY_CALIBRATION = rf"""
            min(CASE WHEN cum >= (7500 * n + 9999) // 10000
                     THEN quality_bp END) AS p7500_bp
     FROM cum GROUP BY source
-"""
+""")
 
 
 def q_cc_representatives(spark, sf_dir):
@@ -7733,21 +7276,22 @@ def q_cc_representatives(spark, sf_dir):
     return component_representatives(cc.select("doc_id", "rep"), scores)
 
 
-SQL_CC_REPRESENTATIVES = f"""
-    WITH cc AS (SELECT * FROM ({SQL_NEAR_DEDUP_CC})),
-    q AS ({SQL_QUALITY}),
-    j AS (
+SQL_CC_REPRESENTATIVES = _with(
+    cc=SQL_NEAR_DEDUP_CC,
+    q=SQL_QUALITY,
+    j="""
         SELECT cc.doc_id, cc.rep, q.quality_bp
         FROM cc JOIN q USING (doc_id)
-    ),
-    sel AS (
+    """,
+    sel="""
         SELECT doc_id, rep, quality_bp,
                row_number() OVER (PARTITION BY rep
                    ORDER BY quality_bp DESC, doc_id) AS rn
         FROM j
-    )
+    """,
+    select="""
     SELECT doc_id, rep, quality_bp, rn = 1 AS is_rep FROM sel
-"""
+""")
 
 
 def q_dedup_normalized(spark, sf_dir):
@@ -7781,23 +7325,17 @@ def q_dedup_normalized(spark, sf_dir):
     )
 
 
-SQL_DEDUP_NORMALIZED = r"""
-    WITH keyed AS (
-        SELECT doc_id,
-               md5(trim(regexp_replace(
-                   regexp_replace(lower(text),
-                       '[.,;:!?''"()\[\]{}-]', '', 'g'),
-                   '\s+', ' ', 'g'))) AS norm_md5
-        FROM documents
-    ),
-    fam AS (
+SQL_DEDUP_NORMALIZED = _with(
+    keyed=f"SELECT doc_id, {_funnel_key('text')} AS norm_md5 FROM documents",
+    fam="""
         SELECT norm_md5, min(doc_id) AS keep, count(*) AS family_n
         FROM keyed GROUP BY norm_md5
-    )
+    """,
+    select="""
     SELECT k.doc_id, k.norm_md5, f.family_n,
            k.doc_id = f.keep AS is_kept
     FROM keyed k JOIN fam f USING (norm_md5)
-"""
+""")
 
 
 def q_incremental_dedup(spark, sf_dir):
@@ -7817,46 +7355,28 @@ def q_incremental_dedup(spark, sf_dir):
     ).select("doc_id", "lang", "source")
 
 
-SQL_INCREMENTAL_DEDUP = f"""
-    WITH {DOC_TOKENS_SQL},
-    hashed AS (
-        SELECT doc_id, list_transform(s, x -> md5('0|' || x)) AS h
-        FROM shingles WHERE len(s) > 0
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 3),
-                   seed -> list_min(list_transform(h,
-                       x -> substr(x, 1 + 8 * seed, 8)))) AS mh
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, band, md5(mh[2*band+1] || '|' || mh[2*band+2]) AS bh
-        FROM sig, (SELECT unnest(generate_series(0, 1)) AS band)
-    ),
-    nb AS (SELECT * FROM banded WHERE doc_id % 5 = 0),
-    cb AS (SELECT * FROM banded WHERE doc_id % 5 != 0),
-    cand AS (
+SQL_INCREMENTAL_DEDUP = _with(
+    **_DOC_SHINGLES,
+    **_minhash("shingles"),
+    nb="SELECT * FROM banded WHERE doc_id % 5 = 0",
+    cb="SELECT * FROM banded WHERE doc_id % 5 != 0",
+    cand="""
         SELECT DISTINCT nb.doc_id AS id_a, cb.doc_id AS id_b
         FROM nb JOIN cb ON nb.band = cb.band AND nb.bh = cb.bh
-    ),
-    dsh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(list_distinct(s),
-                   x -> CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT))) AS sh
-        FROM shingles
-    ),
-    hit AS (
+    """,
+    dsh=f"SELECT doc_id, {_HASHED_SH} AS s FROM shingles",
+    hit="""
         SELECT DISTINCT id_a FROM cand
         JOIN dsh a ON a.doc_id = cand.id_a
         JOIN dsh b ON b.doc_id = cand.id_b
-        WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
-              / len(list_distinct(a.sh || b.sh)) >= 0.8
-    )
+        WHERE len(list_intersect(a.s, b.s))::DOUBLE
+              / len(list_distinct(a.s || b.s)) >= 0.8
+    """,
+    select="""
     SELECT d.doc_id, d.lang, d.source FROM documents d
     WHERE d.doc_id % 5 = 0
       AND d.doc_id NOT IN (SELECT id_a FROM hit)
-"""
+""")
 
 
 def q_tokenizer_fertility(spark, sf_dir):
@@ -7890,19 +7410,15 @@ def q_tokenizer_fertility(spark, sf_dir):
     )
 
 
-SQL_TOKENIZER_FERTILITY = r"""
-    WITH toks AS (
-        SELECT lang, text, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    b AS (
+SQL_TOKENIZER_FERTILITY = _with(
+    toks=_toks("lang", "text"),
+    b="""
         SELECT lang, len(t)::BIGINT AS ntok,
                length(text)::BIGINT AS nchar,
                octet_length(encode(text))::BIGINT AS nbyte
         FROM toks
-    )
+    """,
+    select="""
     SELECT lang, count(*) AS n_docs,
            sum(ntok)::BIGINT AS n_tokens,
            sum(nbyte)::BIGINT AS n_bytes,
@@ -7913,7 +7429,7 @@ SQL_TOKENIZER_FERTILITY = r"""
                 THEN CAST(floor(sum(nbyte) * 100.0 / sum(ntok) + 0.5)
                           AS BIGINT) ELSE 0 END AS bytes_per_tok_c
     FROM b GROUP BY lang
-"""
+""")
 
 
 def q_curate_pipeline(spark, sf_dir):
@@ -7949,159 +7465,72 @@ def q_curate_pipeline(spark, sf_dir):
     return out.select("doc_id", "lang", "source")
 
 
-SQL_CURATE_PIPELINE = r"""
-    WITH toks AS (
-        SELECT doc_id, text, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents WHERE doc_id % 50 != 0
-    ),
-    gate AS (
-        SELECT doc_id,
-               coalesce(len(t), 0)::BIGINT AS ntok,
-               greatest(coalesce(length(text), 0), 1)::BIGINT AS nc,
-               coalesce(length(text) - length(regexp_replace(
-                   text, '[^\x09\x0A\x0D\x20-\x7E]', '', 'g')), 0)::BIGINT
-                   AS npr,
-               coalesce(CAST(floor((least(len(t)::DOUBLE / 100.0, 1.0) * 0.5
-                   + (1.0 - (length(text) - length(regexp_replace(text,
-                       '[.,;:!?''"()\[\]{}-]', '', 'g')))::DOUBLE
-                       / greatest(length(text)::DOUBLE, 1.0)) * 0.3
-                   + least((len(list_filter(t, x -> list_contains(
-                       ['the','a','an','of','to','in','and','is','on','for'],
-                       lower(x))))::DOUBLE
-                       / greatest(len(t)::DOUBLE, 1.0)) * 5.0, 1.0) * 0.2)
-                   * 10000.0 + 0.5) AS BIGINT), 0) AS qbp
-        FROM toks
-    ),
-    s1 AS (
-        SELECT doc_id FROM gate
+# The curate eval set (every 50th doc) as distinct word 4-grams.
+_CURATE_EVAL = {
+    "evt": _toks("doc_id", where="WHERE doc_id % 50 = 0"),
+    "ev": f"SELECT DISTINCT unnest({_shingle_expr(4)}) AS g FROM evt",
+}
+
+
+def _curate_funnel(src: str, p: str = "") -> dict[str, str]:
+    """curate_corpus' stage chain over the CTE `src` (doc_id, text),
+    CTE names prefixed with p. {p}s1..{p}s4 are the survivors of the
+    gate, exact dedup, MinHash near dedup (Jaccard >= 0.8) and the
+    containment keep-best drop; {p}bad are the s4 docs that share a
+    4-gram with the eval set (needs _CURATE_EVAL)."""
+    return {
+        f"{p}toks": f"SELECT doc_id, text, {_TOKENS} AS t FROM {src}",
+        f"{p}gate": _gate(f"{p}toks"),
+        f"{p}s1": f"""
+        SELECT doc_id FROM {p}gate
         WHERE ntok >= 10 AND ntok <= 5000
           AND npr * 10000 <= 1000 * nc AND qbp >= 3000
-    ),
-    keyed AS (
-        SELECT d.doc_id,
-               md5(trim(regexp_replace(
-                   regexp_replace(lower(d.text),
-                       '[.,;:!?''"()\[\]{}-]', '', 'g'),
-                   '\s+', ' ', 'g'))) AS k
-        FROM documents d JOIN s1 USING (doc_id)
-    ),
-    s2 AS (SELECT min(doc_id) AS doc_id FROM keyed GROUP BY k),
-    sh3 AS (
-        SELECT t.doc_id,
-               CASE WHEN len(t.t) < 3 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t.t) - 2),
-                   i -> array_to_string(t.t[i:i+2], ' ')) END AS s
-        FROM toks t JOIN s2 USING (doc_id)
-    ),
-    hashed AS (
-        SELECT doc_id, list_transform(s, x -> md5('0|' || x)) AS h
-        FROM sh3 WHERE len(s) > 0
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 3),
-                   seed -> list_min(list_transform(h,
-                       x -> substr(x, 1 + 8 * seed, 8)))) AS mh
-        FROM hashed
-    ),
-    banded AS (
-        SELECT doc_id, band, md5(mh[2*band+1] || '|' || mh[2*band+2]) AS bh
-        FROM sig, (SELECT unnest(generate_series(0, 1)) AS band)
-    ),
-    cand AS (
-        SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-        FROM banded l JOIN banded r
-          ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
-    ),
-    dsh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(list_distinct(s),
-                   x -> CAST(('0x' || substr(md5(x), 1, 15))
-                        AS BIGINT))) AS sh
-        FROM sh3
-    ),
-    dropped AS (
-        SELECT DISTINCT id_b FROM cand
-        JOIN dsh a ON a.doc_id = cand.id_a
-        JOIN dsh b ON b.doc_id = cand.id_b
-        WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
-              / len(list_distinct(a.sh || b.sh)) >= 0.8
-    ),
-    s3 AS (
-        SELECT doc_id FROM s2
-        WHERE doc_id NOT IN (SELECT id_b FROM dropped)
-    ),
-    hdsh AS (SELECT doc_id, sh FROM dsh),
-    cinv2 AS (
-        SELECT d.doc_id, unnest(d.sh) AS g
-        FROM hdsh d JOIN s3 USING (doc_id) WHERE len(d.sh) > 0
-    ),
-    crare AS (
-        SELECT g FROM cinv2 GROUP BY g HAVING count(*) BETWEEN 2 AND 20
-    ),
-    crinv AS (SELECT i.doc_id, i.g FROM cinv2 i JOIN crare USING (g)),
-    ccand AS (
-        SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-        FROM crinv l JOIN crinv r ON l.g = r.g AND l.doc_id < r.doc_id
-    ),
-    cex AS (
-        SELECT id_a, id_b,
-               len(list_intersect(a.sh, b.sh))::BIGINT AS n_common,
-               len(a.sh)::BIGINT AS na, len(b.sh)::BIGINT AS nb,
-               ga.qbp AS qa, gb.qbp AS qb
-        FROM ccand
-        JOIN hdsh a ON a.doc_id = ccand.id_a
-        JOIN hdsh b ON b.doc_id = ccand.id_b
-        JOIN gate ga ON ga.doc_id = ccand.id_a
-        JOIN gate gb ON gb.doc_id = ccand.id_b
-    ),
-    cev AS (
-        SELECT CASE
-            WHEN (n_common * 10000 >= 8000 * na AND nb * 10000 >= 10000 * na)
-                 AND (NOT (n_common * 10000 >= 8000 * nb
-                           AND na * 10000 >= 10000 * nb)
-                      OR qa < qb)
-            THEN id_a
-            WHEN (n_common * 10000 >= 8000 * nb AND na * 10000 >= 10000 * nb)
-                 AND (NOT (n_common * 10000 >= 8000 * na
-                           AND nb * 10000 >= 10000 * na)
-                      OR qa >= qb)
-            THEN id_b
-        END AS doc_id
-        FROM cex
-    ),
-    s4 AS (
-        SELECT doc_id FROM s3
-        WHERE doc_id NOT IN (SELECT doc_id FROM cev WHERE doc_id IS NOT NULL)
-    ),
-    evt AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents WHERE doc_id % 50 = 0
-    ),
-    ev AS (
-        SELECT DISTINCT unnest(CASE WHEN len(t) < 4
-               THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 3),
-                   i -> array_to_string(t[i:i+3], ' ')) END) AS g
-        FROM evt
-    ),
-    tr4 AS (
-        SELECT DISTINCT t.doc_id,
-               unnest(CASE WHEN len(t.t) < 4
-               THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t.t) - 3),
-                   i -> array_to_string(t.t[i:i+3], ' ')) END) AS g
-        FROM toks t JOIN s4 USING (doc_id)
-    ),
-    bad AS (SELECT DISTINCT tr4.doc_id FROM tr4 JOIN ev USING (g))
+    """,
+        f"{p}keyed": f"SELECT doc_id, {_funnel_key('text')} AS k FROM {p}toks JOIN {p}s1 USING (doc_id)",
+        f"{p}s2": f"SELECT min(doc_id) AS doc_id FROM {p}keyed GROUP BY k",
+        f"{p}sh3": f"SELECT doc_id, {_shingle_expr(3)} AS s FROM {p}toks JOIN {p}s2 USING (doc_id)",
+        **_minhash(f"{p}sh3", p),
+        f"{p}ncand": _lsh_pairs(p),
+        f"{p}dsh": f"SELECT doc_id, {_HASHED_SH} AS s FROM {p}sh3",
+        f"{p}dropped": f"""
+        SELECT DISTINCT id_b FROM {p}ncand c
+        JOIN {p}dsh a ON a.doc_id = c.id_a
+        JOIN {p}dsh b ON b.doc_id = c.id_b
+        WHERE len(list_intersect(a.s, b.s))::DOUBLE
+              / len(list_distinct(a.s || b.s)) >= 0.8
+    """,
+        f"{p}s3": f"SELECT doc_id FROM {p}s2 WHERE doc_id NOT IN (SELECT id_b FROM {p}dropped)",
+        f"{p}csh": f"SELECT doc_id, s FROM {p}dsh JOIN {p}s3 USING (doc_id)",
+        **_containment(f"{p}csh", p),
+        f"{p}ex": f"""
+        SELECT c.id_a, c.id_b, c.n_common, c.na, c.nb, ga.qbp AS qa, gb.qbp AS qb
+        FROM {p}pex c
+        JOIN {p}gate ga ON ga.doc_id = c.id_a
+        JOIN {p}gate gb ON gb.doc_id = c.id_b
+    """,
+        **_keep_best(p),
+        f"{p}s4": f"SELECT doc_id FROM {p}s3 WHERE doc_id NOT IN (SELECT doc_id FROM {p}drops)",
+        f"{p}tr4": f"""
+        SELECT DISTINCT doc_id, unnest({_shingle_expr(4)}) AS g
+        FROM {p}toks JOIN {p}s4 USING (doc_id)
+    """,
+        f"{p}bad": f"SELECT DISTINCT doc_id FROM {p}tr4 JOIN ev USING (g)",
+    }
+
+
+_CURATE = {
+    "train": "SELECT * FROM documents WHERE doc_id % 50 != 0",
+    **_CURATE_EVAL,
+    **_curate_funnel("train"),
+}
+
+SQL_CURATE_PIPELINE = _with(
+    **_CURATE,
+    select="""
     SELECT d.doc_id, d.lang, d.source
     FROM documents d JOIN s4 USING (doc_id)
     WHERE d.doc_id NOT IN (SELECT doc_id FROM bad)
-"""
+""")
 
 
 def q_curate_incremental(spark, sf_dir):
@@ -8142,194 +7571,64 @@ def q_curate_incremental(spark, sf_dir):
     return out.select("doc_id", "lang", "source")
 
 
-SQL_CURATE_INCREMENTAL = r"""
-    WITH btoks AS (
-        SELECT doc_id, text, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents WHERE doc_id % 5 = 0 AND doc_id % 50 != 0
-    ),
-    ctoks AS (
-        SELECT doc_id, text, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents WHERE doc_id % 5 != 0
-    ),
-    gate AS (
-        SELECT doc_id,
-               coalesce(len(t), 0)::BIGINT AS ntok,
-               greatest(coalesce(length(text), 0), 1)::BIGINT AS nc,
-               coalesce(length(text) - length(regexp_replace(
-                   text, '[^\x09\x0A\x0D\x20-\x7E]', '', 'g')), 0)::BIGINT
-                   AS npr,
-               coalesce(CAST(floor((least(len(t)::DOUBLE / 100.0, 1.0) * 0.5
-                   + (1.0 - (length(text) - length(regexp_replace(text,
-                       '[.,;:!?''"()\[\]{}-]', '', 'g')))::DOUBLE
-                       / greatest(length(text)::DOUBLE, 1.0)) * 0.3
-                   + least((len(list_filter(t, x -> list_contains(
-                       ['the','a','an','of','to','in','and','is','on','for'],
-                       lower(x))))::DOUBLE
-                       / greatest(len(t)::DOUBLE, 1.0)) * 5.0, 1.0) * 0.2)
-                   * 10000.0 + 0.5) AS BIGINT), 0) AS qbp
-        FROM btoks
-    ),
-    s1 AS (
+SQL_CURATE_INCREMENTAL = _with(
+    btoks=_toks("doc_id", "text", where="WHERE doc_id % 5 = 0 AND doc_id % 50 != 0"),
+    ctoks=_toks("doc_id", "text", where="WHERE doc_id % 5 != 0"),
+    gate=_gate("btoks"),
+    s1="""
         SELECT doc_id FROM gate
         WHERE ntok >= 10 AND ntok <= 5000
           AND npr * 10000 <= 1000 * nc AND qbp >= 3000
-    ),
-    bkey AS (
-        SELECT b.doc_id,
-               md5(trim(regexp_replace(
-                   regexp_replace(lower(b.text),
-                       '[.,;:!?''"()\[\]{}-]', '', 'g'),
-                   '\s+', ' ', 'g'))) AS k
-        FROM btoks b JOIN s1 USING (doc_id)
-    ),
-    ckey AS (
-        SELECT DISTINCT md5(trim(regexp_replace(
-                   regexp_replace(lower(c.text),
-                       '[.,;:!?''"()\[\]{}-]', '', 'g'),
-                   '\s+', ' ', 'g'))) AS k
-        FROM ctoks c
-    ),
-    s2 AS (
-        -- NULL corpus keys (NULL text) never match anything, exactly
-        -- like Spark's null-keyed left_semi; keep them out of NOT IN
-        SELECT doc_id FROM bkey
-        WHERE k NOT IN (SELECT k FROM ckey WHERE k IS NOT NULL)
-    ),
-    bsh AS (
-        SELECT t.doc_id,
-               CASE WHEN len(t.t) < 3 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t.t) - 2),
-                   i -> array_to_string(t.t[i:i+2], ' ')) END AS s
-        FROM btoks t JOIN s2 USING (doc_id)
-    ),
-    csh AS (
-        SELECT t.doc_id,
-               CASE WHEN len(t.t) < 3 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t.t) - 2),
-                   i -> array_to_string(t.t[i:i+2], ' ')) END AS s
-        FROM ctoks t
-    ),
-    bhashed AS (
-        SELECT doc_id, list_transform(s, x -> md5('0|' || x)) AS h
-        FROM bsh WHERE len(s) > 0
-    ),
-    chashed AS (
-        SELECT doc_id, list_transform(s, x -> md5('0|' || x)) AS h
-        FROM csh WHERE len(s) > 0
-    ),
-    bsig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 3),
-                   seed -> list_min(list_transform(h,
-                       x -> substr(x, 1 + 8 * seed, 8)))) AS mh
-        FROM bhashed
-    ),
-    csig AS (
-        SELECT doc_id,
-               list_transform(generate_series(0, 3),
-                   seed -> list_min(list_transform(h,
-                       x -> substr(x, 1 + 8 * seed, 8)))) AS mh
-        FROM chashed
-    ),
-    bbanded AS (
-        SELECT doc_id, band, md5(mh[2*band+1] || '|' || mh[2*band+2]) AS bh
-        FROM bsig, (SELECT unnest(generate_series(0, 1)) AS band)
-    ),
-    cbanded AS (
-        SELECT doc_id, band, md5(mh[2*band+1] || '|' || mh[2*band+2]) AS bh
-        FROM csig, (SELECT unnest(generate_series(0, 1)) AS band)
-    ),
-    ncand AS (
+    """,
+    bkey=f"SELECT doc_id, {_funnel_key('text')} AS k FROM btoks JOIN s1 USING (doc_id)",
+    ckey=f"SELECT DISTINCT {_funnel_key('text')} AS k FROM ctoks",
+    # NULL corpus keys (NULL text) never match anything, exactly like
+    # Spark's null-keyed left_semi; keep them out of NOT IN
+    s2="SELECT doc_id FROM bkey WHERE k NOT IN (SELECT k FROM ckey WHERE k IS NOT NULL)",
+    bsh=f"SELECT doc_id, {_shingle_expr(3)} AS s FROM btoks JOIN s2 USING (doc_id)",
+    csh=f"SELECT doc_id, {_shingle_expr(3)} AS s FROM ctoks",
+    **_minhash("bsh", "b"),
+    **_minhash("csh", "c"),
+    ncand="""
         SELECT DISTINCT b.doc_id AS id_a, c.doc_id AS id_b
         FROM bbanded b JOIN cbanded c
           ON b.band = c.band AND b.bh = c.bh
-    ),
-    bdsh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(list_distinct(s),
-                   x -> CAST(('0x' || substr(md5(x), 1, 15))
-                        AS BIGINT))) AS sh
-        FROM bsh
-    ),
-    cdsh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(list_distinct(s),
-                   x -> CAST(('0x' || substr(md5(x), 1, 15))
-                        AS BIGINT))) AS sh
-        FROM csh
-    ),
-    ndrop AS (
+    """,
+    bdsh=f"SELECT doc_id, {_HASHED_SH} AS s FROM bsh",
+    cdsh=f"SELECT doc_id, {_HASHED_SH} AS s FROM csh",
+    ndrop="""
         SELECT DISTINCT id_a FROM ncand
         JOIN bdsh a ON a.doc_id = ncand.id_a
         JOIN cdsh b ON b.doc_id = ncand.id_b
-        WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
-              / len(list_distinct(a.sh || b.sh)) >= 0.8
-    ),
-    s3 AS (
-        SELECT doc_id FROM s2
-        WHERE doc_id NOT IN (SELECT id_a FROM ndrop)
-    ),
-    bhdsh AS (SELECT doc_id, sh FROM bdsh),
-    chdsh AS (SELECT doc_id, sh FROM cdsh),
-    cinv AS (
-        SELECT d.doc_id, unnest(d.sh) AS g FROM chdsh d WHERE len(d.sh) > 0
-    ),
-    ckeep AS (SELECT g FROM cinv GROUP BY g HAVING count(*) <= 20),
-    crinv AS (SELECT i.doc_id, i.g FROM cinv i JOIN ckeep USING (g)),
-    pinv AS (
-        SELECT d.doc_id, unnest(d.sh) AS g
-        FROM bhdsh d JOIN s3 USING (doc_id) WHERE len(d.sh) > 0
-    ),
-    ccand AS (
+        WHERE len(list_intersect(a.s, b.s))::DOUBLE
+              / len(list_distinct(a.s || b.s)) >= 0.8
+    """,
+    s3="SELECT doc_id FROM s2 WHERE doc_id NOT IN (SELECT id_a FROM ndrop)",
+    cinv="SELECT doc_id, unnest(s) AS g FROM cdsh",
+    ckeep="SELECT g FROM cinv GROUP BY g HAVING count(*) <= 20",
+    crinv="SELECT i.doc_id, i.g FROM cinv i JOIN ckeep USING (g)",
+    pinv="SELECT doc_id, unnest(s) AS g FROM bdsh JOIN s3 USING (doc_id)",
+    cand="""
         SELECT DISTINCT p.doc_id AS id_a, c.doc_id AS id_b
         FROM pinv p JOIN crinv c USING (g)
-    ),
-    cex AS (
-        SELECT id_a,
-               len(list_intersect(a.sh, b.sh))::BIGINT AS n_common,
-               len(a.sh)::BIGINT AS na, len(b.sh)::BIGINT AS nb
-        FROM ccand
-        JOIN bhdsh a ON a.doc_id = ccand.id_a
-        JOIN chdsh b ON b.doc_id = ccand.id_b
-    ),
-    cdrop AS (
-        SELECT DISTINCT id_a FROM cex
+    """,
+    **_contained("bdsh", "cdsh"),
+    cdrop="""
+        SELECT DISTINCT id_a FROM pex
         WHERE n_common * 10000 >= 8000 * na AND nb * 10000 >= 10000 * na
-    ),
-    s4 AS (
-        SELECT doc_id FROM s3
-        WHERE doc_id NOT IN (SELECT id_a FROM cdrop)
-    ),
-    evt AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents WHERE doc_id % 50 = 0
-    ),
-    ev AS (
-        SELECT DISTINCT unnest(CASE WHEN len(t) < 4
-               THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 3),
-                   i -> array_to_string(t[i:i+3], ' ')) END) AS g
-        FROM evt
-    ),
-    tr4 AS (
-        SELECT DISTINCT t.doc_id,
-               unnest(CASE WHEN len(t.t) < 4
-               THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t.t) - 3),
-                   i -> array_to_string(t.t[i:i+3], ' ')) END) AS g
-        FROM btoks t JOIN s4 USING (doc_id)
-    ),
-    bad AS (SELECT DISTINCT tr4.doc_id FROM tr4 JOIN ev USING (g))
+    """,
+    s4="SELECT doc_id FROM s3 WHERE doc_id NOT IN (SELECT id_a FROM cdrop)",
+    **_CURATE_EVAL,
+    tr4=f"""
+        SELECT DISTINCT doc_id, unnest({_shingle_expr(4)}) AS g
+        FROM btoks JOIN s4 USING (doc_id)
+    """,
+    bad="SELECT DISTINCT tr4.doc_id FROM tr4 JOIN ev USING (g)",
+    select="""
     SELECT d.doc_id, d.lang, d.source
     FROM documents d JOIN s4 USING (doc_id)
     WHERE d.doc_id NOT IN (SELECT doc_id FROM bad)
-"""
+""")
 
 
 def q_filter_track(spark, sf_dir):
@@ -8338,8 +7637,7 @@ def q_filter_track(spark, sf_dir):
     band), how many documents survive the gate, each dedup tier, the
     containment intervention, and decontamination — the report that
     shows WHERE a source's data dies. The oracle shares
-    curate_pipeline's stage CTEs verbatim (built from the same
-    string), so the two rows can never drift."""
+    curate_pipeline's stage CTEs (_CURATE)."""
     from webloghunter_spark.pipelines.curate import filter_track
 
     docs = _fan(_t(spark, sf_dir, "documents"))
@@ -8361,14 +7659,10 @@ def q_filter_track(spark, sf_dir):
     )
 
 
-SQL_FILTER_TRACK = SQL_CURATE_PIPELINE.replace(
-    """    SELECT d.doc_id, d.lang, d.source
-    FROM documents d JOIN s4 USING (doc_id)
-    WHERE d.doc_id NOT IN (SELECT doc_id FROM bad)""",
-    """    , clean AS (
-        SELECT doc_id FROM s4
-        WHERE doc_id NOT IN (SELECT doc_id FROM bad)
-    )
+SQL_FILTER_TRACK = _with(
+    **_CURATE,
+    clean="SELECT doc_id FROM s4 WHERE doc_id NOT IN (SELECT doc_id FROM bad)",
+    select="""
     SELECT d.source,
            least(g.qbp // 2500, 3)::BIGINT AS quality_band,
            count(*)::BIGINT AS n_raw,
@@ -8385,62 +7679,14 @@ SQL_FILTER_TRACK = SQL_CURATE_PIPELINE.replace(
            ((sum((d.doc_id IN (SELECT doc_id FROM clean))::INT)::BIGINT
              * 20000 + count(*))
             // (2 * count(*)))::BIGINT AS survived_bp
-    FROM documents d JOIN gate g USING (doc_id)
-    WHERE d.doc_id % 50 != 0
-    GROUP BY 1, 2""",
-)
-# a silent .replace() no-op (anchor drift in SQL_CURATE_PIPELINE) would
-# leave filter_track with curate_pipeline's oracle - fail at import
-# (raise, not assert: must fail loudly under `python -O` too)
-if SQL_FILTER_TRACK == SQL_CURATE_PIPELINE:
-    raise RuntimeError("filter_track tail anchor drifted (replace no-op)")
-if "quality_band" not in SQL_FILTER_TRACK:
-    raise RuntimeError("filter_track surgery lost the quality_band tail")
+    FROM train d JOIN gate g USING (doc_id)
+    GROUP BY 1, 2
+""")
 
 
-def _curate_stage_chain(prefix: str, src: str) -> str:
-    """The curate funnel's CTE chain re-rooted at the snapshot CTE
-    `src`, every CTE name `prefix`ed — lets ONE query replay the
-    funnel on two corpora. Import-time asserts pin every anchor so a
-    drift in SQL_CURATE_PIPELINE fails loudly here, not as a silent
-    oracle fork."""
-    import re as _re
-
-    body = SQL_CURATE_PIPELINE
-    tail = """    SELECT d.doc_id, d.lang, d.source
-    FROM documents d JOIN s4 USING (doc_id)
-    WHERE d.doc_id NOT IN (SELECT doc_id FROM bad)
-"""
-    if tail not in body:  # raise, not assert: loud under `python -O`
-        raise RuntimeError("curate final SELECT drifted")
-    body = body.replace(tail, "")
-    old_src = "FROM documents WHERE doc_id % 50 != 0"
-    if body.count(old_src) != 1:
-        raise RuntimeError("curate train-split anchor drifted")
-    body = body.replace(old_src, f"FROM {src}")
-    old_keyed = "FROM documents d JOIN s1 USING (doc_id)"
-    if body.count(old_keyed) != 1:
-        raise RuntimeError("curate keyed anchor drifted")
-    body = body.replace(old_keyed, f"FROM {src} d JOIN s1 USING (doc_id)")
-    body = body.strip()
-    if not body.startswith("WITH "):
-        raise RuntimeError("curate chain shape drifted")
-    body = body[len("WITH "):]
-    # longer names BEFORE their prefixes (evt before ev)
-    names = (
-        "toks|gate|keyed|sh3|hashed|sig|banded|cand|hdsh|dsh|dropped"
-        "|cinv2|crare|crinv|ccand|cex|cev"
-        "|evt|ev|tr4|bad|s1|s2|s3|s4"
-    )
-    return _re.sub(
-        rf"\b({names})\b", lambda m: prefix + m.group(1), body
-    ).rstrip()
-
-
-def _curate_stage_case(prefix: str) -> str:
-    """last-survived-stage CASE over one prefixed funnel replay."""
-    p = prefix
-    return f"""(
+def _curate_stage(p: str) -> str:
+    """Each doc's last survived funnel stage (0..5) in one replay."""
+    return f"""
         SELECT t.doc_id,
                CASE WHEN t.doc_id IN (SELECT doc_id FROM {p}s4)
                      AND t.doc_id NOT IN (SELECT doc_id FROM {p}bad) THEN 5
@@ -8450,15 +7696,13 @@ def _curate_stage_case(prefix: str) -> str:
                     WHEN t.doc_id IN (SELECT doc_id FROM {p}s1) THEN 1
                     ELSE 0 END AS stage
         FROM {p}toks t
-    )"""
-
-
-SQL_DATASET_DIFF = (
     """
-    WITH o_src AS (
-        SELECT doc_id, text FROM documents WHERE doc_id % 50 != 0
-    ),
-    n_src AS (
+
+
+# The curate funnel replayed on both snapshots (o_ and n_ prefixes).
+SQL_DATASET_DIFF = _with(
+    o_src="SELECT doc_id, text FROM documents WHERE doc_id % 50 != 0",
+    n_src="""
         SELECT doc_id,
                CASE WHEN doc_id % 7 = 0 THEN text || ' rev2'
                     ELSE text END AS text
@@ -8467,24 +7711,13 @@ SQL_DATASET_DIFF = (
         SELECT doc_id + 10000000 AS doc_id,
                'new doc ' || CAST(doc_id AS VARCHAR) AS text
         FROM documents WHERE doc_id % 50 != 0 AND doc_id % 11 = 0
-    ),
-    """
-    + _curate_stage_chain("o_", "o_src")
-    + ",\n    "
-    + _curate_stage_chain("n_", "n_src")
-    + ",\n    ofp AS (\n"
-    + """        SELECT doc_id,
-               md5(regexp_replace(lower(trim(coalesce(text, ''))),
-                                  '\\s+', ' ', 'g')) AS old_md5
-        FROM o_src
-    ),
-    nfp AS (
-        SELECT doc_id,
-               md5(regexp_replace(lower(trim(coalesce(text, ''))),
-                                  '\\s+', ' ', 'g')) AS new_md5
-        FROM n_src
-    ),
-    dsj AS (
+    """,
+    **_CURATE_EVAL,
+    **_curate_funnel("o_src", "o_"),
+    **_curate_funnel("n_src", "n_"),
+    ofp=f"""SELECT doc_id, {_norm_key("coalesce(text, '')")} AS old_md5 FROM o_src""",
+    nfp=f"""SELECT doc_id, {_norm_key("coalesce(text, '')")} AS new_md5 FROM n_src""",
+    dsj="""
         SELECT coalesce(ofp.doc_id, nfp.doc_id) AS doc_id,
                CASE WHEN ofp.doc_id IS NULL THEN 'added'
                     WHEN nfp.doc_id IS NULL THEN 'removed'
@@ -8492,12 +7725,10 @@ SQL_DATASET_DIFF = (
                     ELSE 'changed' END AS status,
                old_md5, new_md5
         FROM ofp FULL OUTER JOIN nfp ON ofp.doc_id = nfp.doc_id
-    ),
-    ost AS """
-    + _curate_stage_case("o_")
-    + ",\n    nst AS "
-    + _curate_stage_case("n_")
-    + """
+    """,
+    ost=_curate_stage("o_"),
+    nst=_curate_stage("n_"),
+    select="""
     SELECT d.status,
            (CASE WHEN d.old_md5 IS NOT NULL
                  THEN coalesce(o.stage, 0) ELSE -1 END)::BIGINT AS old_stage,
@@ -8508,8 +7739,7 @@ SQL_DATASET_DIFF = (
     LEFT JOIN ost o USING (doc_id)
     LEFT JOIN nst nn USING (doc_id)
     GROUP BY 1, 2, 3
-"""
-)
+""")
 
 
 def q_longest_repeat(spark, sf_dir):
@@ -8525,39 +7755,35 @@ def q_longest_repeat(spark, sf_dir):
     return longest_repeat(docs)
 
 
-SQL_LONGEST_REPEAT = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    grams AS (
+SQL_LONGEST_REPEAT = _with(
+    toks=_toks("doc_id"),
+    grams="""
         SELECT doc_id, k, array_to_string(t[i:i+k-1], chr(31)) AS g
         FROM (SELECT doc_id, t FROM toks WHERE len(t) >= 2),
              LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS k),
              LATERAL (SELECT unnest(generate_series(1, len(t) - k + 1)) AS i)
-    ),
-    rep AS (
+    """,
+    rep="""
         SELECT doc_id, k, g FROM grams
         GROUP BY doc_id, k, g HAVING count(*) >= 2
-    ),
-    best AS (
+    """,
+    best="""
         SELECT doc_id, max(k)::BIGINT AS longest_len FROM rep GROUP BY doc_id
-    ),
-    cnt AS (
+    """,
+    cnt="""
         SELECT r.doc_id, count(*)::BIGINT AS n_longest
         FROM rep r JOIN best b
           ON r.doc_id = b.doc_id AND r.k = b.longest_len
         GROUP BY r.doc_id
-    )
+    """,
+    select="""
     SELECT t.doc_id, len(t.t)::BIGINT AS ntok,
            coalesce(b.longest_len, 0)::BIGINT AS longest_len,
            coalesce(c.n_longest, 0)::BIGINT AS n_longest
     FROM toks t
     LEFT JOIN best b USING (doc_id)
     LEFT JOIN cnt c USING (doc_id)
-"""
+""")
 
 
 def q_url_blocklist(spark, sf_dir):
@@ -8590,8 +7816,8 @@ def q_url_blocklist(spark, sf_dir):
     )
 
 
-SQL_URL_BLOCKLIST = """
-    WITH u AS (
+SQL_URL_BLOCKLIST = _with(
+    u="""
         SELECT CASE (user_id % 5)
                WHEN 0 THEN 'https://ads.tracker.example/p'
                WHEN 1 THEN 'https://www.fofa.info/p'
@@ -8599,9 +7825,9 @@ SQL_URL_BLOCKLIST = """
                WHEN 3 THEN 'https://fofa.info/p'
                ELSE '-' END AS url
         FROM events
-    ),
-    h AS (SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host FROM u),
-    g AS (
+    """,
+    h="SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host FROM u",
+    g="""
         SELECT host,
                CASE WHEN lower(host) = 'tracker.example'
                          OR lower(host) LIKE '%.tracker.example'
@@ -8610,11 +7836,12 @@ SQL_URL_BLOCKLIST = """
                          OR lower(host) LIKE '%.fofa.info'
                     THEN 'fofa.info' END AS blocked_by
         FROM h
-    )
+    """,
+    select="""
     SELECT host, blocked_by, blocked_by IS NOT NULL AS blocked,
            count(*)::BIGINT AS n
     FROM g GROUP BY 1, 2, 3
-"""
+""")
 
 
 def q_url_blocklist_big(spark, sf_dir):
@@ -8648,8 +7875,8 @@ def q_url_blocklist_big(spark, sf_dir):
     )
 
 
-SQL_URL_BLOCKLIST_BIG = """
-    WITH u AS (
+SQL_URL_BLOCKLIST_BIG = _with(
+    u="""
         SELECT CASE (user_id % 5)
                WHEN 0 THEN 'https://sub.blk' || (user_id % 97) || '.example/p'
                WHEN 1 THEN 'https://blk' || (user_id % 97) || '.example/q'
@@ -8657,32 +7884,33 @@ SQL_URL_BLOCKLIST_BIG = """
                WHEN 3 THEN 'https://example.org/p'
                ELSE '-' END AS url
         FROM events
-    ),
-    h AS (SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host FROM u),
-    bl AS (
+    """,
+    h="SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host FROM u",
+    bl="""
         SELECT 'blk' || i || '.example' AS domain
         FROM generate_series(0, 9999) t(i)
         UNION ALL SELECT 'tracker.example'
         UNION ALL SELECT 'fofa.info'
-    ),
-    hosts AS (
+    """,
+    hosts="""
         SELECT DISTINCT lower(host) AS lh FROM h WHERE lower(host) <> ''
-    ),
-    sfx AS (
+    """,
+    sfx="""
         SELECT lh, array_to_string(list_slice(p, i, len(p)), '.') AS s
         FROM (SELECT lh, string_split(lh, '.') AS p FROM hosts),
              LATERAL (SELECT unnest(generate_series(1, len(p))) AS i)
-    ),
-    m AS (
+    """,
+    m="""
         SELECT lh, arg_max(domain, length(domain)) AS blocked_by
         FROM sfx JOIN bl ON sfx.s = bl.domain
         GROUP BY lh
-    )
+    """,
+    select="""
     SELECT h.host, m.blocked_by, m.blocked_by IS NOT NULL AS blocked,
            count(*)::BIGINT AS n
     FROM h LEFT JOIN m ON lower(h.host) = m.lh
     GROUP BY 1, 2, 3
-"""
+""")
 
 
 
@@ -8699,24 +7927,22 @@ def q_shard_balance(spark, sf_dir):
     return shard_balance(docs, n_shards=16, seed="bal")
 
 
-SQL_SHARD_BALANCE = r"""
-    WITH s AS (
+SQL_SHARD_BALANCE = _with(
+    s=rf"""
         SELECT doc_id,
                CAST(CAST('0x' || substr(md5('bal|' || CAST(doc_id AS VARCHAR)),
                                         1, 8) AS BIGINT) % 16 AS INTEGER)
                    AS shard_id,
-               len(CASE WHEN length(trim(coalesce(text, ''))) = 0
-                   THEN CAST([] AS VARCHAR[])
-                   ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-                   END)::BIGINT AS ntok
+               len({_TOKENS})::BIGINT AS ntok
         FROM documents
-    ),
-    per AS (
+    """,
+    per="""
         SELECT shard_id, count(*)::BIGINT AS n_docs,
                sum(ntok)::BIGINT AS n_tokens
         FROM s GROUP BY shard_id
-    ),
-    tot AS (SELECT sum(n_tokens)::BIGINT AS t FROM per)
+    """,
+    tot="SELECT sum(n_tokens)::BIGINT AS t FROM per",
+    select="""
     SELECT shard_id, n_docs, n_tokens,
            CASE WHEN t > 0
                 THEN (n_tokens * 20000 + t) // (2 * t)
@@ -8726,7 +7952,7 @@ SQL_SHARD_BALANCE = r"""
                      // (2 * t * 16)
                 ELSE 0 END::BIGINT AS dev_bp
     FROM per, tot
-"""
+""")
 
 
 def q_time_split(spark, sf_dir):
@@ -8774,50 +8000,32 @@ def q_contam_sensitivity(spark, sf_dir):
 
 
 def _contam_n_cte(n: int) -> str:
-    g = n - 1
     return f"""
     SELECT {n} AS n,
            (SELECT count(*) FROM documents WHERE doc_id % 50 != 0)::BIGINT
                AS n_train,
            count(DISTINCT tr.doc_id)::BIGINT AS n_contaminated
     FROM (
-        SELECT t.doc_id, unnest(CASE WHEN len(t.t) < {n}
-               THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t.t) - {g}),
-                   i -> array_to_string(t.t[i:i+{g}], ' ')) END) AS gram
-        FROM toks t WHERE t.doc_id % 50 != 0
+        SELECT doc_id, unnest({_shingle_expr(n)}) AS gram
+        FROM toks WHERE doc_id % 50 != 0
     ) tr
     JOIN (
-        SELECT DISTINCT unnest(CASE WHEN len(t.t) < {n}
-               THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t.t) - {g}),
-                   i -> array_to_string(t.t[i:i+{g}], ' ')) END) AS gram
-        FROM toks t WHERE t.doc_id % 50 = 0
+        SELECT DISTINCT unnest({_shingle_expr(n)}) AS gram
+        FROM toks WHERE doc_id % 50 = 0
     ) ev USING (gram)
 """
 
 
-SQL_CONTAM_SENSITIVITY = (
-    r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    hits AS (
-"""
-    + "        UNION ALL".join(_contam_n_cte(n) for n in (3, 4, 6))
-    + """
-    )
+SQL_CONTAM_SENSITIVITY = _with(
+    toks=_toks("doc_id"),
+    hits="        UNION ALL".join(_contam_n_cte(n) for n in (3, 4, 6)),
+    select="""
     SELECT n, n_train, n_contaminated,
            CASE WHEN n_train > 0
                 THEN (n_contaminated * 20000 + n_train) // (2 * n_train)
                 ELSE 0 END::BIGINT AS contam_bp
     FROM hits ORDER BY n
-"""
-)
-
+""")
 
 
 def q_dist_drift(spark, sf_dir):
@@ -8836,37 +8044,33 @@ def q_dist_drift(spark, sf_dir):
     )
 
 
-SQL_DIST_DRIFT = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    tk AS (
+SQL_DIST_DRIFT = _with(
+    toks=_toks("doc_id"),
+    tk="""
         SELECT doc_id,
                CAST('0x' || substr(md5(unnest(t)), 1, 8) AS BIGINT)
                    % 1024 AS b
         FROM toks
-    ),
-    ca AS (SELECT b, count(*) AS ca FROM tk WHERE doc_id % 2 = 0 GROUP BY b),
-    cb AS (SELECT b, count(*) AS cb FROM tk WHERE doc_id % 2 = 1 GROUP BY b),
-    ta AS (SELECT count(*)::BIGINT AS ta FROM tk WHERE doc_id % 2 = 0),
-    tb AS (SELECT count(*)::BIGINT AS tb FROM tk WHERE doc_id % 2 = 1),
-    spine AS (SELECT unnest(generate_series(0, 1023)) AS b),
-    terms AS (
+    """,
+    ca="SELECT b, count(*) AS ca FROM tk WHERE doc_id % 2 = 0 GROUP BY b",
+    cb="SELECT b, count(*) AS cb FROM tk WHERE doc_id % 2 = 1 GROUP BY b",
+    ta="SELECT count(*)::BIGINT AS ta FROM tk WHERE doc_id % 2 = 0",
+    tb="SELECT count(*)::BIGINT AS tb FROM tk WHERE doc_id % 2 = 1",
+    spine="SELECT unnest(generate_series(0, 1023)) AS b",
+    terms="""
         SELECT ta.ta, tb.tb,
                (coalesce(ca.ca, 0) + 1) / (ta.ta + 1024) AS p,
                (coalesce(cb.cb, 0) + 1) / (tb.tb + 1024) AS q
         FROM spine
         LEFT JOIN ca USING (b) LEFT JOIN cb USING (b), ta, tb
-    )
+    """,
+    select="""
     SELECT ta AS n_a, tb AS n_b,
            sum(CAST(round((p * ln(p / ((p + q) / 2.0))
                            + q * ln(q / ((p + q) / 2.0)))
                           / 2.0 * 1e9) AS BIGINT))::BIGINT AS js_nano
     FROM terms GROUP BY ta, tb
-"""
+""")
 
 
 def q_emb_drift(spark, sf_dir):
@@ -8885,42 +8089,43 @@ def q_emb_drift(spark, sf_dir):
     )
 
 
-SQL_EMB_DRIFT = r"""
-    WITH coeff AS (
+SQL_EMB_DRIFT = _with(
+    coeff="""
         SELECT p, list_transform(generate_series(0, 63),
                    d -> (strpos('0123456789abcdef',
                          substr(md5(p::VARCHAR || '|' || d::VARCHAR), 1, 1))
                          - 8.5)) AS c
         FROM (SELECT unnest(generate_series(0, 3)) AS p)
-    ),
-    bucketed AS (
+    """,
+    bucketed="""
         SELECT vec_id,
                CAST(sum(CASE WHEN list_dot_product(
                                  CAST(embedding AS DOUBLE[]), c) >= 0
                              THEN pow(2, p) ELSE 0 END) AS BIGINT) AS b
         FROM embeddings, coeff
         GROUP BY vec_id
-    ),
-    ca AS (SELECT b, count(*) AS ca FROM bucketed WHERE vec_id % 2 = 0
-           GROUP BY b),
-    cb AS (SELECT b, count(*) AS cb FROM bucketed WHERE vec_id % 2 = 1
-           GROUP BY b),
-    ta AS (SELECT count(*)::BIGINT AS ta FROM bucketed WHERE vec_id % 2 = 0),
-    tb AS (SELECT count(*)::BIGINT AS tb FROM bucketed WHERE vec_id % 2 = 1),
-    spine AS (SELECT unnest(generate_series(0, 15)) AS b),
-    terms AS (
+    """,
+    ca="""SELECT b, count(*) AS ca FROM bucketed WHERE vec_id % 2 = 0
+           GROUP BY b""",
+    cb="""SELECT b, count(*) AS cb FROM bucketed WHERE vec_id % 2 = 1
+           GROUP BY b""",
+    ta="SELECT count(*)::BIGINT AS ta FROM bucketed WHERE vec_id % 2 = 0",
+    tb="SELECT count(*)::BIGINT AS tb FROM bucketed WHERE vec_id % 2 = 1",
+    spine="SELECT unnest(generate_series(0, 15)) AS b",
+    terms="""
         SELECT ta.ta, tb.tb,
                (coalesce(ca.ca, 0) + 1) / (ta.ta + 16) AS p,
                (coalesce(cb.cb, 0) + 1) / (tb.tb + 16) AS q
         FROM spine
         LEFT JOIN ca USING (b) LEFT JOIN cb USING (b), ta, tb
-    )
+    """,
+    select="""
     SELECT ta AS n_a, tb AS n_b,
            sum(CAST(round((p * ln(p / ((p + q) / 2.0))
                            + q * ln(q / ((p + q) / 2.0)))
                           / 2.0 * 1e9) AS BIGINT))::BIGINT AS js_nano
     FROM terms GROUP BY ta, tb
-"""
+""")
 
 
 def q_topic_classify(spark, sf_dir):
@@ -8955,19 +8160,14 @@ def _topic_classify_sql() -> str:
     case = "CASE " + " ".join(arms) + " ELSE 'none' END"
     best = "greatest(" + ", ".join(cols.values()) + ")"
     total = "(" + " + ".join(cols.values()) + ")"
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                                   x -> lower(x)) END AS t
-        FROM documents
-    ),
-    c AS (
+    return _with(
+        toks=_toks("doc_id", lower=True),
+        c=f"""
         SELECT doc_id,
                {count_lines}
         FROM toks
-    )
+    """,
+        select=f"""
     SELECT doc_id,
            {case} AS topic,
            {best} AS topic_hits,
@@ -8976,7 +8176,7 @@ def _topic_classify_sql() -> str:
                 THEN ({best} * 20000 + {total}) // (2 * {total})
                 ELSE 0 END::BIGINT AS confidence_bp
     FROM c
-"""
+""")
 
 
 SQL_TOPIC_CLASSIFY = _topic_classify_sql()
@@ -9000,60 +8200,61 @@ def q_interleave_audit(spark, sf_dir):
     return interleave_audit(ordered)
 
 
-SQL_INTERLEAVE_AUDIT = r"""
-    WITH s AS (
+SQL_INTERLEAVE_AUDIT = _with(
+    s="""
         SELECT doc_id, source,
                md5('r7|' || CAST(doc_id AS VARCHAR)) AS h
         FROM documents
-    ),
-    a AS (
+    """,
+    a="""
         SELECT doc_id, source, h,
                CAST(CAST('0x' || substr(h, 1, 8) AS BIGINT) % 16
                     AS INTEGER) AS shard_id
         FROM s
-    ),
-    o AS (
+    """,
+    o="""
         SELECT shard_id, source,
                row_number() OVER (PARTITION BY shard_id ORDER BY h, doc_id)
                - 1 AS position
         FROM a
-    ),
-    f AS (
+    """,
+    f="""
         SELECT shard_id, position, source,
                CASE WHEN lag(position) OVER w IS NULL THEN 1
                     WHEN source IS DISTINCT FROM lag(source) OVER w THEN 1
                     ELSE 0 END AS nr
         FROM o
         WINDOW w AS (PARTITION BY shard_id ORDER BY position)
-    ),
-    r AS (
+    """,
+    r="""
         SELECT shard_id, position,
                sum(nr) OVER (PARTITION BY shard_id ORDER BY position
                              ROWS BETWEEN UNBOUNDED PRECEDING
                              AND CURRENT ROW) AS run_id
         FROM f
-    ),
-    rl AS (
+    """,
+    rl="""
         SELECT shard_id, run_id, count(*)::BIGINT AS run_len
         FROM r GROUP BY shard_id, run_id
-    ),
-    ps AS (
+    """,
+    ps="""
         SELECT shard_id,
                sum(run_len)::BIGINT AS n_rows,
                count(*)::BIGINT AS n_runs,
                max(run_len)::BIGINT AS max_run
         FROM rl GROUP BY shard_id
-    ),
-    gc AS (SELECT source, count(*)::BIGINT AS c
-           FROM documents GROUP BY source),
-    ex AS (
+    """,
+    gc="""SELECT source, count(*)::BIGINT AS c
+           FROM documents GROUP BY source""",
+    ex="""
         SELECT CASE WHEN sum(c) > 1
                     THEN CAST((sum(c * (c - 1)) * 20000
                                + sum(c) * (sum(c) - 1))
                               // (2 * sum(c) * (sum(c) - 1)) AS BIGINT)
                     ELSE NULL END AS expected_same_bp
         FROM gc
-    )
+    """,
+    select="""
     SELECT shard_id, n_rows, n_runs,
            (n_rows - n_runs)::BIGINT AS n_adj_same,
            max_run,
@@ -9063,7 +8264,7 @@ SQL_INTERLEAVE_AUDIT = r"""
                 ELSE NULL END AS BIGINT) AS same_bp,
            expected_same_bp
     FROM ps, ex
-"""
+""")
 
 
 def q_lang_consistency(spark, sf_dir):
@@ -9100,15 +8301,9 @@ def _lang_consistency_sql() -> str:
         + " ".join(f"WHEN '{lang}' THEN {i}" for i, lang in enumerate(langs))
         + f" ELSE {len(langs)} END"
     )
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\\s+')
-               END AS t
-        FROM documents
-    ),
-    seg AS (
+    return _with(
+        toks=_toks("doc_id"),
+        seg="""
         SELECT doc_id,
                CASE WHEN len(t) = 0 THEN CAST([] AS VARCHAR[])
                     ELSE list_transform(
@@ -9117,31 +8312,32 @@ def _lang_consistency_sql() -> str:
                         i -> array_to_string(t[i*10+1:i*10+10], ' '))
                     END AS segs
         FROM toks
-    ),
-    ex AS (SELECT doc_id, unnest(segs) AS s FROM seg),
-    st AS (
+    """,
+        ex="SELECT doc_id, unnest(segs) AS s FROM seg",
+        st=f"""
         SELECT doc_id,
-               list_transform(string_split_regex(trim(s), '\\s+'),
-                              x -> lower(x)) AS ts
+               list_transform(string_split_regex(trim(s, ' '), '{_WS}+'),
+                              x -> {_lower('x')}) AS ts
         FROM ex
-    ),
-    lc AS (
+    """,
+        lc=f"""
         SELECT doc_id,
                {counts}
         FROM st
-    ),
-    sl AS (SELECT doc_id, {lang_case} AS lang FROM lc),
-    cnt AS (SELECT doc_id, lang, count(*)::BIGINT AS c
-            FROM sl GROUP BY doc_id, lang),
-    per AS (SELECT doc_id, sum(c)::BIGINT AS n_segments,
+    """,
+        sl=f"SELECT doc_id, {lang_case} AS lang FROM lc",
+        cnt="""SELECT doc_id, lang, count(*)::BIGINT AS c
+            FROM sl GROUP BY doc_id, lang""",
+        per="""SELECT doc_id, sum(c)::BIGINT AS n_segments,
                    count(DISTINCT lang)::BIGINT AS n_langs
-            FROM cnt GROUP BY doc_id),
-    win AS (
+            FROM cnt GROUP BY doc_id""",
+        win=f"""
         SELECT doc_id, lang AS majority_lang, c AS n_majority,
                row_number() OVER (PARTITION BY doc_id
                    ORDER BY c DESC, {idx_case}) AS rn
         FROM cnt
-    )
+    """,
+        select="""
     SELECT d.doc_id,
            coalesce(per.n_segments, 0)::BIGINT AS n_segments,
            coalesce(win.majority_lang, 'und') AS majority_lang,
@@ -9155,7 +8351,7 @@ def _lang_consistency_sql() -> str:
     FROM documents d
     LEFT JOIN per ON per.doc_id = d.doc_id
     LEFT JOIN win ON win.doc_id = d.doc_id AND win.rn = 1
-"""
+""")
 
 
 SQL_LANG_CONSISTENCY = _lang_consistency_sql()
@@ -9176,37 +8372,26 @@ def q_contam_matrix(spark, sf_dir):
     return contamination_matrix(train, evals, n=4)
 
 
-SQL_CONTAM_MATRIX = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, CASE WHEN len(t) < 4 THEN CAST([] AS VARCHAR[])
-               ELSE list_transform(generate_series(1, len(t) - 3),
-                                   i -> array_to_string(t[i:i+3], ' '))
-               END AS s
-        FROM toks
-    ),
-    evd AS (
+SQL_CONTAM_MATRIX = _with(
+    toks=_toks("doc_id"),
+    sh=_shingles(4, "doc_id"),
+    evd="""
         SELECT DISTINCT 'eval' || CAST(doc_id % 50 AS VARCHAR) AS eval_set,
                unnest(s) AS g
         FROM sh WHERE doc_id % 50 < 4
-    ),
-    tot AS (SELECT eval_set, count(*)::BIGINT AS n_eval_grams
-            FROM evd GROUP BY eval_set),
-    tr AS (SELECT DISTINCT doc_id, unnest(s) AS g
-           FROM sh WHERE doc_id % 50 >= 4),
-    agg AS (
+    """,
+    tot="""SELECT eval_set, count(*)::BIGINT AS n_eval_grams
+            FROM evd GROUP BY eval_set""",
+    tr="""SELECT DISTINCT doc_id, unnest(s) AS g
+           FROM sh WHERE doc_id % 50 >= 4""",
+    agg="""
         SELECT evd.eval_set,
                count(DISTINCT tr.g)::BIGINT AS n_hit_grams,
                count(DISTINCT tr.doc_id)::BIGINT AS n_docs_hit
         FROM evd JOIN tr ON evd.g = tr.g
         GROUP BY evd.eval_set
-    )
+    """,
+    select="""
     SELECT tot.eval_set,
            tot.n_eval_grams,
            coalesce(agg.n_hit_grams, 0)::BIGINT AS n_hit_grams,
@@ -9216,7 +8401,7 @@ SQL_CONTAM_MATRIX = r"""
                       + tot.n_eval_grams) // (2 * tot.n_eval_grams)
                 ELSE NULL END AS BIGINT) AS coverage_bp
     FROM tot LEFT JOIN agg ON agg.eval_set = tot.eval_set
-"""
+""")
 
 
 def q_text_normalize(spark, sf_dir):
@@ -9229,23 +8414,24 @@ def q_text_normalize(spark, sf_dir):
     return text_normalize(docs)
 
 
-SQL_TEXT_NORMALIZE = r"""
-    WITH n AS (
+SQL_TEXT_NORMALIZE = _with(
+    n=rf"""
         SELECT doc_id,
                coalesce(text, '') AS raw,
                trim(regexp_replace(
                    regexp_replace(nfc_normalize(coalesce(text, '')),
                        '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-                   '\s+', ' ', 'g')) AS norm
+                   '{_WS}+', ' ', 'g'), ' ') AS norm
         FROM documents
-    )
+    """,
+    select="""
     SELECT doc_id,
            norm AS text,
            (norm <> raw) AS changed,
            length(raw)::BIGINT AS n_chars_raw,
            length(norm)::BIGINT AS n_chars_norm
     FROM n
-"""
+""")
 
 
 def q_sample_exact_k(spark, sf_dir):
@@ -9289,17 +8475,14 @@ def q_gopher_rules(spark, sf_dir):
     )
 
 
-SQL_GOPHER_RULES = r"""
-    WITH base AS (
+SQL_GOPHER_RULES = _with(
+    base=rf"""
         SELECT doc_id, coalesce(text, '') AS c,
-               CASE WHEN length(trim(coalesce(text, ''))) = 0
-                    THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END AS t,
+               {_TOKENS} AS t,
                string_split(coalesce(text, ''), chr(10)) AS ls
         FROM documents
-    ),
-    m AS (
+    """,
+    m="""
         SELECT doc_id,
                len(t)::BIGINT AS ntok,
                length(array_to_string(t, ''))::BIGINT AS sumlen,
@@ -9312,13 +8495,13 @@ SQL_GOPHER_RULES = r"""
                    ['the','a','an','of','to','in','and','is','on','for'],
                    s -> list_contains(t, s)))::BIGINT AS n_stop,
                len(ls)::BIGINT AS n_lines,
-               len(list_filter(ls, l -> substr(ltrim(l), 1, 1)
+               len(list_filter(ls, l -> substr(ltrim(l, ' '), 1, 1)
                    IN ('-', '*', '•')))::BIGINT AS n_bullet,
-               len(list_filter(ls, l -> rtrim(l) LIKE '%...'
-                   OR rtrim(l) LIKE '%…'))::BIGINT AS n_ell_l
+               len(list_filter(ls, l -> rtrim(l, ' ') LIKE '%...'
+                   OR rtrim(l, ' ') LIKE '%…'))::BIGINT AS n_ell_l
         FROM base
-    ),
-    r AS (
+    """,
+    r="""
         SELECT doc_id,
                (ntok >= 30 AND ntok <= 60) AS r_word_count,
                (sumlen*10 >= 38*ntok AND sumlen*10 <= 45*ntok)
@@ -9329,7 +8512,8 @@ SQL_GOPHER_RULES = r"""
                (n_bullet*10000 <= 9000*n_lines) AS r_bullet_lines,
                (n_ell_l*10000 <= 3000*n_lines) AS r_ellipsis_lines
         FROM m
-    )
+    """,
+    select="""
     SELECT doc_id, r_word_count, r_mean_word_len, r_symbol_ratio,
            r_alpha_words, r_stopwords, r_bullet_lines, r_ellipsis_lines,
            ((NOT r_word_count)::INT + (NOT r_mean_word_len)::INT
@@ -9341,7 +8525,7 @@ SQL_GOPHER_RULES = r"""
             + (NOT r_stopwords)::INT + (NOT r_bullet_lines)::INT
             + (NOT r_ellipsis_lines)::INT) = 0 AS pass_all
     FROM r
-"""
+""")
 
 
 def q_rank_fusion(spark, sf_dir):
@@ -9371,36 +8555,18 @@ def q_rank_fusion(spark, sf_dir):
     )
 
 
-SQL_RANK_FUSION = r"""
-    WITH toks AS (
+SQL_RANK_FUSION = _with(
+    toks=rf"""
         SELECT doc_id, lang, text, coalesce(n_chars, 0)::BIGINT AS nch,
-               CASE WHEN length(trim(coalesce(text, ''))) = 0
-                    THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END AS t
+               {_TOKENS} AS t
         FROM documents
-    ),
-    stats AS (
-        SELECT doc_id, lang, nch,
-               len(t)::BIGINT AS ntok,
-               len(t)::DOUBLE AS ntok_d,
-               greatest(length(text)::DOUBLE, 1.0) AS nchar,
-               (length(text) - length(regexp_replace(text,
-                   '[.,;:!?''"()\[\]{}-]', '', 'g')))::DOUBLE AS npunct,
-               len(list_filter(t, x -> list_contains(
-                   ['the','a','an','of','to','in','and','is','on','for'],
-                   lower(x))))::DOUBLE AS nstop
+    """,
+    sig=f"""
+        SELECT doc_id, lang, len(t)::BIGINT AS ntok, nch,
+               coalesce({_QUALITY_BP}, 0) AS quality_bp
         FROM toks
-    ),
-    sig AS (
-        SELECT doc_id, lang, ntok, nch,
-               coalesce(CAST(floor((least(ntok_d / 100.0, 1.0) * 0.5
-                   + (1.0 - npunct / nchar) * 0.3
-                   + least((nstop / greatest(ntok_d, 1.0)) * 5.0, 1.0) * 0.2)
-                   * 10000.0 + 0.5) AS BIGINT), 0) AS quality_bp
-        FROM stats
-    ),
-    ranked AS (
+    """,
+    ranked="""
         SELECT lang, doc_id,
                row_number() OVER (PARTITION BY lang
                    ORDER BY quality_bp DESC NULLS LAST, doc_id)
@@ -9410,19 +8576,20 @@ SQL_RANK_FUSION = r"""
                row_number() OVER (PARTITION BY lang
                    ORDER BY nch DESC NULLS LAST, doc_id) AS rank_nch
         FROM sig
-    ),
-    fused AS (
+    """,
+    fused="""
         SELECT lang, doc_id, rank_quality_bp, rank_ntok, rank_nch,
                (1000000 // (60 + rank_quality_bp)
                 + 1000000 // (60 + rank_ntok)
                 + 1000000 // (60 + rank_nch))::BIGINT AS rrf_micro
         FROM ranked
-    )
+    """,
+    select="""
     SELECT lang, doc_id, rank_quality_bp, rank_ntok, rank_nch, rrf_micro,
            row_number() OVER (PARTITION BY lang
                ORDER BY rrf_micro DESC, doc_id) AS fused_rank
     FROM fused
-"""
+""")
 
 
 def q_boilerplate_segments(spark, sf_dir):
@@ -9437,45 +8604,40 @@ def q_boilerplate_segments(spark, sf_dir):
     return boilerplate_segments(docs, seg_tokens=5, min_df=2)
 
 
-SQL_BOILERPLATE_SEGMENTS = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END AS t
-        FROM documents
-    ),
-    base AS (
+SQL_BOILERPLATE_SEGMENTS = _with(
+    toks=_toks("doc_id"),
+    base="""
         SELECT doc_id, CAST(ceil(len(t) / 5.0) AS INT) AS n_seg, t
         FROM toks
-    ),
-    segs AS (
+    """,
+    segs="""
         SELECT doc_id, i - 1 AS seg_idx,
                array_to_string(t[(i-1)*5+1:(i-1)*5+5], ' ') AS seg
         FROM base, unnest(generate_series(1, n_seg)) AS u(i)
-    ),
-    boiler AS (
+    """,
+    boiler="""
         -- 60-bit md5-prefix segment key (engine round-14 posting
         -- compression, mirrored): a collision merges the same
         -- segments in both engines
         SELECT CAST(('0x' || substr(md5(seg), 1, 15)) AS BIGINT) AS segk
         FROM segs GROUP BY segk
         HAVING count(DISTINCT doc_id) >= 2
-    ),
-    kept AS (
+    """,
+    kept="""
         SELECT segs.* FROM segs ANTI JOIN boiler
           ON CAST(('0x' || substr(md5(segs.seg), 1, 15)) AS BIGINT) = boiler.segk
-    ),
-    stats AS (
+    """,
+    stats="""
         SELECT doc_id, count(*)::BIGINT AS n_kept,
                string_agg(seg, ' ' ORDER BY seg_idx) AS new_text
         FROM kept GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT b.doc_id, b.n_seg,
            coalesce(s.n_kept, 0)::BIGINT AS n_kept,
            coalesce(s.new_text, '') AS new_text
     FROM base b LEFT JOIN stats s USING (doc_id)
-"""
+""")
 
 
 def q_density_sample(spark, sf_dir):
@@ -9489,35 +8651,36 @@ def q_density_sample(spark, sf_dir):
     return density_sample(emb, cap=20, num_planes=4)
 
 
-SQL_DENSITY_SAMPLE = r"""
-    WITH coeff AS (
+SQL_DENSITY_SAMPLE = _with(
+    coeff="""
         SELECT p, list_transform(generate_series(0, 63),
                    d -> (strpos('0123456789abcdef',
                          substr(md5(p::VARCHAR || '|' || d::VARCHAR), 1, 1))
                          - 8.5)) AS c
         FROM (SELECT unnest(generate_series(0, 3)) AS p)
-    ),
-    bucketed AS (
+    """,
+    bucketed="""
         SELECT vec_id,
                CAST(sum(CASE WHEN list_dot_product(
                                  CAST(embedding AS DOUBLE[]), c) >= 0
                              THEN pow(2, p) ELSE 0 END) AS BIGINT) AS bucket
         FROM embeddings, coeff
         GROUP BY vec_id
-    ),
-    ranked AS (
+    """,
+    ranked="""
         SELECT vec_id, bucket,
                count(*) OVER (PARTITION BY bucket)::BIGINT AS bucket_n,
                row_number() OVER (PARTITION BY bucket
                    ORDER BY md5('density|' || CAST(vec_id AS VARCHAR)),
                             vec_id)::BIGINT AS keep_rank
         FROM bucketed
-    )
+    """,
+    select="""
     SELECT vec_id, bucket, bucket_n, keep_rank,
            (bucket_n * 1000000 // least(bucket_n, 20))::BIGINT
                AS weight_micro
     FROM ranked WHERE keep_rank <= 20
-"""
+""")
 
 
 BM25_QUERY_TERMS = ["spark", "query", "table", "join"]
@@ -9549,144 +8712,131 @@ def q_bm25_drift(spark, sf_dir):
     return bm25_drift(ref, docs, BM25_QUERY_TERMS, k=20)
 
 
+def _bm25_term(i: int, s: str) -> str:
+    """One query term's BM25 (k1 1.2, b 0.75) for doc d: tf_{i} and dl
+    from d, n, sdl and df_{i} from the stats CTE `s`."""
+    return (
+        f"ln(({s}.n - {s}.df_{i} + 0.5) / ({s}.df_{i} + 0.5) + 1.0)\n"
+        f"                   * (CAST(d.tf_{i} AS DOUBLE) * (1.2 + 1.0))\n"
+        f"                   / (CAST(d.tf_{i} AS DOUBLE)\n"
+        f"                      + 1.2 * ((1.0 - 0.75) + 0.75\n"
+        f"                               * (CAST(d.dl AS DOUBLE)\n"
+        f"                                  / (CAST({s}.sdl AS DOUBLE)\n"
+        f"                                     / CAST({s}.n AS DOUBLE)))))"
+    )
+
+
+def _bm25_docs(terms: list[str]) -> dict[str, str]:
+    """toks and d: each doc's length dl and tf_{i} per sorted term i."""
+    tf_cols = ",\n               ".join(
+        f"len(list_filter(t, x -> x = '{t}'))::BIGINT AS tf_{i}"
+        for i, t in enumerate(terms)
+    )
+    return {
+        "toks": _toks("doc_id", lower=True),
+        "d": f"""
+        SELECT doc_id, len(t)::BIGINT AS dl,
+               {tf_cols}
+        FROM toks
+    """,
+    }
+
+
+def _bm25_stats(n_terms: int, where: str = "") -> str:
+    """The corpus stats CTE over d: n, sdl and df_{i} per term."""
+    dfs = ",\n               ".join(
+        f"sum((tf_{i} > 0)::BIGINT)::BIGINT AS df_{i}" for i in range(n_terms)
+    )
+    return f"""
+        SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS sdl,
+               {dfs}
+        FROM d{where}
+    """
+
+
 def _bm25_drift_sql() -> str:
-    """Oracle BUILT FROM the same term table as q_bm25_topk
+    """Oracle built from the same term table as q_bm25_topk
     (BM25_QUERY_TERMS, the _bm25_batch_sql hardening discipline:
     lowercased terms, positional tf_/df_ identifiers, [a-z0-9]+
-    asserted) — the frozen side's stats CTE aggregates the even-id
+    checked) — the frozen side's stats CTE aggregates the even-id
     reference subset, the fresh side the full corpus; both scores
     fold in SQL_BM25_TOPK's exact association."""
     import re as _re
 
     terms = [t.lower() for t in BM25_QUERY_TERMS]
     for t in terms:
-        assert _re.fullmatch(r"[a-z0-9]+", t), (
-            f"bm25_drift oracle: unsafe term {t!r}"
-        )
+        if not _re.fullmatch(r"[a-z0-9]+", t):
+            raise ValueError(f"bm25_drift oracle: unsafe term {t!r}")
     uniq = sorted(set(terms))
     tidx = {t: i for i, t in enumerate(uniq)}
-    tf_cols = ",\n               ".join(
-        f"len(list_filter(t, x -> x = '{t}'))::BIGINT AS tf_{i}"
-        for i, t in enumerate(uniq)
-    )
 
-    def stats(name, where):
-        dfs = ",\n               ".join(
-            f"sum((tf_{i} > 0)::BIGINT)::BIGINT AS df_{i}"
-            for i in range(len(uniq))
-        )
-        return (
-            f"{name} AS (\n"
-            f"        SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS sdl,\n"
-            f"               {dfs}\n"
-            f"        FROM d{where}\n"
-            f"    )"
-        )
-
-    def term(t, s):
-        i = tidx[t]
-        return (
-            f"ln(({s}.n - {s}.df_{i} + 0.5) / ({s}.df_{i} + 0.5) + 1.0)\n"
-            f"                   * (CAST(d.tf_{i} AS DOUBLE) * (1.2 + 1.0))\n"
-            f"                   / (CAST(d.tf_{i} AS DOUBLE)\n"
-            f"                      + 1.2 * ((1.0 - 0.75) + 0.75\n"
-            f"                               * (CAST(d.dl AS DOUBLE)\n"
-            f"                                  / (CAST({s}.sdl AS DOUBLE)\n"
-            f"                                     / CAST({s}.n AS DOUBLE)))))"
-        )
-
-    def scored(name, s):
+    def scored(s):
         sc = "0.0\n                 + " + "\n                 + ".join(
-            term(t, s) for t in terms
+            _bm25_term(tidx[t], s) for t in terms
         )
-        return (
-            f"{name} AS (\n"
-            f"        SELECT d.doc_id,\n"
-            f"               round({sc}\n"
-            f"               , 4) AS bm25\n"
-            f"        FROM d CROSS JOIN {s}\n"
-            f"    )"
-        )
-
-    return (
-        r"""
-    WITH toks AS (
-        SELECT doc_id,
-               CASE WHEN length(trim(coalesce(text, ''))) = 0
-                    THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(lower(trim(text)), '\s+')
-               END AS t
-        FROM documents
-    ),
-    d AS (
-        SELECT doc_id, len(t)::BIGINT AS dl,
-               """
-        + tf_cols
-        + r"""
-        FROM toks
-    ),
+        return f"""
+        SELECT d.doc_id,
+               round({sc}
+               , 4) AS bm25
+        FROM d CROSS JOIN {s}
     """
-        + stats("sref", " WHERE doc_id % 2 = 0")
-        + ",\n    "
-        + stats("sful", "")
-        + ",\n    "
-        + scored("fro", "sref")
-        + ",\n    "
-        + scored("fre", "sful")
-        + r""",
-    topf AS (
+
+    return _with(
+        **_bm25_docs(uniq),
+        sref=_bm25_stats(len(uniq), " WHERE doc_id % 2 = 0"),
+        sful=_bm25_stats(len(uniq)),
+        fro=scored("sref"),
+        fre=scored("sful"),
+        topf="""
         SELECT doc_id, bm25 AS bm25_frozen,
                row_number() OVER (ORDER BY bm25 DESC, doc_id)::BIGINT
                    AS rank_frozen
         FROM fro WHERE bm25 > 0
         QUALIFY rank_frozen <= 20
-    ),
-    topr AS (
+    """,
+        topr="""
         SELECT doc_id, bm25 AS bm25_fresh,
                row_number() OVER (ORDER BY bm25 DESC, doc_id)::BIGINT
                    AS rank_fresh
         FROM fre WHERE bm25 > 0
         QUALIFY rank_fresh <= 20
-    )
+    """,
+        select="""
     SELECT coalesce(f.doc_id, g.doc_id) AS doc_id,
            coalesce(f.rank_frozen, 0)::BIGINT AS rank_frozen,
            coalesce(g.rank_fresh, 0)::BIGINT AS rank_fresh,
            coalesce(f.bm25_frozen, 0.0) AS bm25_frozen,
            coalesce(g.bm25_fresh, 0.0) AS bm25_fresh
     FROM topf f FULL OUTER JOIN topr g ON f.doc_id = g.doc_id
-"""
-    )
+""")
 
 
 SQL_BM25_DRIFT = _bm25_drift_sql()
 
 
-SQL_BM25_TOPK = r"""
-    WITH toks AS (
+SQL_BM25_TOPK = _with(
+    toks=rf"""
         SELECT doc_id,
-               CASE WHEN length(trim(coalesce(text, ''))) = 0
-                    THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(lower(trim(text)), '\s+')
-               END AS t
+               {_LTOKENS} AS t
         FROM documents
-    ),
-    d AS (
+    """,
+    d="""
         SELECT doc_id, len(t)::BIGINT AS dl,
                len(list_filter(t, x -> x = 'spark'))::BIGINT AS tf0,
                len(list_filter(t, x -> x = 'query'))::BIGINT AS tf1,
                len(list_filter(t, x -> x = 'table'))::BIGINT AS tf2,
                len(list_filter(t, x -> x = 'join'))::BIGINT AS tf3
         FROM toks
-    ),
-    s AS (
+    """,
+    s="""
         SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS sdl,
                sum((tf0 > 0)::BIGINT)::BIGINT AS df0,
                sum((tf1 > 0)::BIGINT)::BIGINT AS df1,
                sum((tf2 > 0)::BIGINT)::BIGINT AS df2,
                sum((tf3 > 0)::BIGINT)::BIGINT AS df3
         FROM d
-    ),
-    scored AS (
+    """,
+    scored="""
         SELECT d.doc_id, d.dl,
                round(
                  0.0
@@ -9720,12 +8870,13 @@ SQL_BM25_TOPK = r"""
                                      / CAST(s.n AS DOUBLE)))))
                , 4) AS bm25
         FROM d CROSS JOIN s
-    )
+    """,
+    select="""
     SELECT doc_id, dl, bm25 FROM scored
     WHERE bm25 > 0
     ORDER BY bm25 DESC, doc_id
     LIMIT 20
-"""
+""")
 
 
 def q_ewma_alerts(spark, sf_dir):
@@ -9740,30 +8891,30 @@ def q_ewma_alerts(spark, sf_dir):
     return ewma_alerts(ev, lam_num=1, lam_denom=4, threshold_num=2)
 
 
-SQL_EWMA_ALERTS = """
-    WITH RECURSIVE c AS (
+SQL_EWMA_ALERTS = _with(
+    c="""
         SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS n
         FROM events GROUP BY 1, 2
-    ),
-    b AS (
+    """,
+    b="""
         SELECT date_trunc('hour', min(ts)) AS mn,
                date_trunc('hour', max(ts)) AS mx
         FROM events
-    ),
-    spine AS (
+    """,
+    spine="""
         SELECT unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS h,
                generate_subscripts(generate_series(mn, mx, INTERVAL 1 HOUR), 1) - 1 AS i
         FROM b
-    ),
-    ty AS (SELECT DISTINCT event_type FROM events),
-    g AS (
+    """,
+    ty="SELECT DISTINCT event_type FROM events",
+    g="""
         SELECT ty.event_type, s.i,
                floor(epoch(s.h))::BIGINT AS hour_epoch,
                coalesce(c.n, 0)::BIGINT AS cnt
         FROM spine s CROSS JOIN ty
         LEFT JOIN c ON c.h = s.h AND c.event_type = ty.event_type
-    ),
-    r AS (
+    """,
+    r="""
         SELECT event_type, i, hour_epoch, cnt,
                (cnt * 1000000)::BIGINT AS ewma_micro,
                0::BIGINT AS prev_micro,
@@ -9776,10 +8927,12 @@ SQL_EWMA_ALERTS = """
                (CASE WHEN g.cnt * 1000000 > 2 * r.ewma_micro
                      THEN 1 ELSE 0 END)::BIGINT
         FROM g JOIN r ON g.event_type = r.event_type AND g.i = r.i + 1
-    )
+    """,
+    recursive=("r",),
+    select="""
     SELECT event_type, hour_epoch, cnt, ewma_micro, prev_micro, alert
     FROM r
-"""
+""")
 
 
 def q_heaps_fit(spark, sf_dir):
@@ -9794,27 +8947,17 @@ def q_heaps_fit(spark, sf_dir):
     return heaps_fit(docs, n_points=7)
 
 
-SQL_HEAPS_FIT = r"""
-    WITH nn AS (SELECT count(*)::BIGINT AS n FROM documents),
-    toks AS (
+SQL_HEAPS_FIT = _with(
+    nn="SELECT count(*)::BIGINT AS n FROM documents",
+    toks=rf"""
         SELECT doc_id, unnest(
-            CASE WHEN length(trim(coalesce(text, ''))) = 0
-                 THEN CAST([] AS VARCHAR[])
-                 ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-            END) AS tok
+            {_TOKENS}) AS tok
         FROM documents
-    ),
-    firsts AS (SELECT tok, min(doc_id)::BIGINT AS f FROM toks GROUP BY tok),
-    dl AS (
-        SELECT doc_id,
-               (CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN 0
-                     ELSE len(string_split_regex(trim(coalesce(text, '')),
-                                                 '\s+'))
-                END)::BIGINT AS k
-        FROM documents
-    ),
-    grid AS (SELECT unnest([64, 32, 16, 8, 4, 2, 1]) AS denom),
-    pts AS (
+    """,
+    firsts="SELECT tok, min(doc_id)::BIGINT AS f FROM toks GROUP BY tok",
+    dl=f"SELECT doc_id, len({_TOKENS})::BIGINT AS k FROM documents",
+    grid="SELECT unnest([64, 32, 16, 8, 4, 2, 1]) AS denom",
+    pts="""
         SELECT g.denom::BIGINT AS denom,
                greatest(1, nn.n // g.denom)::BIGINT AS n_prefix_docs,
                (SELECT coalesce(sum(k), 0) FROM dl
@@ -9823,37 +8966,37 @@ SQL_HEAPS_FIT = r"""
                (SELECT count(*) FROM firsts
                 WHERE f < greatest(1, nn.n // g.denom))::BIGINT AS vocab
         FROM grid g CROSS JOIN nn
-    ),
-    kept AS (SELECT * FROM pts WHERE cum_tokens > 0 AND vocab > 0),
-    terms AS (
+    """,
+    kept="SELECT * FROM pts WHERE cum_tokens > 0 AND vocab > 0",
+    terms="""
         SELECT CAST(round(ln(cum_tokens) * 1e9) AS BIGINT) AS xn,
                CAST(round(ln(vocab) * 1e9) AS BIGINT) AS yn,
                CAST(round(ln(cum_tokens) * ln(cum_tokens) * 1e9) AS BIGINT)
                    AS xxn,
                CAST(round(ln(cum_tokens) * ln(vocab) * 1e9) AS BIGINT) AS xyn
         FROM kept
-    ),
-    s AS (
+    """,
+    s="""
         SELECT count(*)::BIGINT AS k,
                coalesce(sum(xn), 0)::BIGINT AS sx,
                coalesce(sum(yn), 0)::BIGINT AS sy,
                coalesce(sum(xxn), 0)::BIGINT AS sxx,
                coalesce(sum(xyn), 0)::BIGINT AS sxy
         FROM terms
-    ),
-    d AS (
+    """,
+    d="""
         SELECT CAST(k AS DOUBLE) AS kd,
                sx / 1e9 AS sxd, sy / 1e9 AS syd,
                sxx / 1e9 AS sxxd, sxy / 1e9 AS sxyd
         FROM s
-    ),
-    f AS (
+    """,
+    f="""
         SELECT kd, sxd, syd,
                kd * sxxd - sxd * sxd AS den,
                kd * sxyd - sxd * syd AS num
         FROM d
-    ),
-    fit AS (
+    """,
+    fit="""
         SELECT CASE WHEN den > 0
                     THEN CAST(floor(num / den * 1e6 + 0.5) AS BIGINT)
                     ELSE 0 END AS beta_micro,
@@ -9862,12 +9005,13 @@ SQL_HEAPS_FIT = r"""
                                     + 0.5) AS BIGINT)
                     ELSE 0 END AS logk_micro
         FROM f
-    )
+    """,
+    select="""
     SELECT kept.denom, kept.n_prefix_docs, kept.cum_tokens, kept.vocab,
            fit.beta_micro, fit.logk_micro
     FROM kept CROSS JOIN fit
     ORDER BY kept.denom DESC
-"""
+""")
 
 
 def q_effective_data(spark, sf_dir):
@@ -9882,22 +9026,18 @@ def q_effective_data(spark, sf_dir):
     return effective_data(docs, epochs_grid=(1, 2, 4, 8, 16, 32))
 
 
-SQL_EFFECTIVE_DATA = r"""
-    WITH fp AS (
-        SELECT source,
-               md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS f,
-               min((CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN 0
-                         ELSE len(string_split_regex(trim(coalesce(text, '')),
-                                                     '\s+'))
-                    END)::BIGINT) AS mk
+SQL_EFFECTIVE_DATA = _with(
+    fp=f"""
+        SELECT source, {_norm_key('text')} AS f, min(len({_TOKENS})::BIGINT) AS mk
         FROM documents
         GROUP BY 1, 2
-    ),
-    u AS (
+    """,
+    u="""
         SELECT source, sum(mk)::BIGINT AS unique_tokens
         FROM fp GROUP BY source
-    ),
-    g AS (SELECT unnest([1, 2, 4, 8, 16, 32]) AS epochs)
+    """,
+    g="SELECT unnest([1, 2, 4, 8, 16, 32]) AS epochs",
+    select="""
     SELECT u.source, g.epochs::BIGINT AS epochs, u.unique_tokens,
            CAST(floor(
                (CAST(u.unique_tokens AS DOUBLE)
@@ -9914,7 +9054,7 @@ SQL_EFFECTIVE_DATA = r"""
                    * 10000.0 + 0.5) AS BIGINT)
            ELSE 0 END AS efficiency_bp
     FROM u CROSS JOIN g
-"""
+""")
 
 
 def q_dedup_keep_best(spark, sf_dir):
@@ -9928,44 +9068,24 @@ def q_dedup_keep_best(spark, sf_dir):
     return dedup_keep_best(docs)
 
 
-SQL_DEDUP_KEEP_BEST = r"""
-    WITH toks AS (
-        SELECT doc_id, text, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+') END AS t
-        FROM documents
-    ),
-    stats AS (
-        SELECT doc_id,
-               md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-                   AS fingerprint,
-               len(t)::DOUBLE AS ntok,
-               greatest(length(text)::DOUBLE, 1.0) AS nchar,
-               (length(text) - length(regexp_replace(text,
-                   '[.,;:!?''"()\[\]{}-]', '', 'g')))::DOUBLE AS npunct,
-               len(list_filter(t, x -> list_contains(
-                   ['the','a','an','of','to','in','and','is','on','for'],
-                   lower(x))))::DOUBLE AS nstop
+SQL_DEDUP_KEEP_BEST = _with(
+    toks=_toks("doc_id", "text"),
+    bp=f"""
+        SELECT doc_id, {_norm_key('text')} AS fingerprint,
+               {_QUALITY_BP} AS quality_bp
         FROM toks
-    ),
-    bp AS (
-        SELECT doc_id, fingerprint,
-               CAST(floor((least(ntok / 100.0, 1.0) * 0.5
-                     + (1.0 - npunct / nchar) * 0.3
-                     + least((nstop / greatest(ntok, 1.0)) * 5.0, 1.0) * 0.2)
-                     * 10000.0 + 0.5) AS BIGINT) AS quality_bp
-        FROM stats
-    ),
-    ranked AS (
+    """,
+    ranked="""
         SELECT fingerprint, doc_id, quality_bp,
                count(*) OVER (PARTITION BY fingerprint)::BIGINT AS n_dups,
                row_number() OVER (PARTITION BY fingerprint
                    ORDER BY quality_bp DESC, doc_id) AS rn
         FROM bp
-    )
+    """,
+    select="""
     SELECT fingerprint, doc_id, quality_bp, n_dups
     FROM ranked WHERE rn = 1
-"""
+""")
 
 
 def q_tail_index(spark, sf_dir):
@@ -9978,40 +9098,38 @@ def q_tail_index(spark, sf_dir):
     return tail_index(docs, k=20)
 
 
-SQL_TAIL_INDEX = r"""
-    WITH toks AS (
-        SELECT unnest(CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END) AS tok
+SQL_TAIL_INDEX = _with(
+    toks=rf"""
+        SELECT unnest({_TOKENS}) AS tok
         FROM documents
-    ),
-    counts AS (SELECT tok, count(*)::BIGINT AS n FROM toks GROUP BY tok),
-    ranked AS (
+    """,
+    counts="SELECT tok, count(*)::BIGINT AS n FROM toks GROUP BY tok",
+    ranked="""
         SELECT row_number() OVER (ORDER BY n DESC, tok) AS r, n
         FROM counts
         QUALIFY r <= 21
-    ),
-    s AS (
+    """,
+    s="""
         SELECT count(*)::BIGINT AS k_used,
                coalesce(sum(CAST(round(ln(n) * 1e9) AS BIGINT)), 0)::BIGINT
                    AS s_ln
         FROM ranked WHERE r <= 20
-    ),
-    thr AS (SELECT n::BIGINT AS f_threshold FROM ranked WHERE r = 21),
-    h AS (
+    """,
+    thr="SELECT n::BIGINT AS f_threshold FROM ranked WHERE r = 21",
+    h="""
         SELECT s.k_used, thr.f_threshold,
                (s.s_ln / 1e9) / CAST(s.k_used AS DOUBLE)
                    - ln(thr.f_threshold) AS hv
         FROM s CROSS JOIN thr
-    )
+    """,
+    select="""
     SELECT k_used, f_threshold,
            CAST(round(hv * 1e9) AS BIGINT) AS h_nano,
            CASE WHEN hv > 0
                 THEN CAST(floor(1.0 / hv * 1e6 + 0.5) AS BIGINT)
                 ELSE 0 END AS alpha_micro
     FROM h
-"""
+""")
 
 
 def q_boundary_leakage(spark, sf_dir):
@@ -10038,27 +9156,18 @@ def q_batch_leakage(spark, sf_dir):
     return batch_leakage(docs, batch_size=8, n_shards=16, seed="lk")
 
 
-SQL_BATCH_LEAKAGE = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END AS t
-        FROM documents
-    ),
-    sh AS (
+SQL_BATCH_LEAKAGE = _with(
+    toks=_toks("doc_id"),
+    sh=f"""
         SELECT doc_id, list_distinct(
-            CASE WHEN len(t) < 3 THEN CAST([] AS VARCHAR[])
-                 ELSE list_transform(generate_series(1, len(t) - 2),
-                                     i -> array_to_string(t[i:i+2], ' '))
-            END) AS s
+            {_shingle_expr(3)}) AS s
         FROM toks
-    ),
-    ordk AS (
+    """,
+    ordk="""
         SELECT doc_id, md5('lk|' || CAST(doc_id AS VARCHAR)) AS h
         FROM documents
-    ),
-    pos AS (
+    """,
+    pos="""
         SELECT doc_id,
                CAST(CAST('0x' || substr(h, 1, 8) AS BIGINT) % 16
                     AS INTEGER) AS shard_id,
@@ -10067,8 +9176,8 @@ SQL_BATCH_LEAKAGE = r"""
                                       % 16 AS INTEGER)
                     ORDER BY h, doc_id) - 1)::BIGINT AS position
         FROM ordk
-    ),
-    j AS (
+    """,
+    j="""
         SELECT a.shard_id, a.position AS pos_a, b.position AS pos_b,
                a.doc_id AS id_a, b.doc_id AS id_b,
                sa.s AS sa, sb.s AS sb
@@ -10078,7 +9187,8 @@ SQL_BATCH_LEAKAGE = r"""
                   AND b.position <= a.position + 7
         JOIN sh sa ON sa.doc_id = a.doc_id
         JOIN sh sb ON sb.doc_id = b.doc_id
-    )
+    """,
+    select="""
     SELECT shard_id, pos_a, pos_b, (pos_b - pos_a)::BIGINT AS dist,
            id_a, id_b,
            len(list_intersect(sa, sb))::BIGINT AS n_inter,
@@ -10090,30 +9200,21 @@ SQL_BATCH_LEAKAGE = r"""
                          - len(list_intersect(sa, sb)))::BIGINT
                 ELSE 0 END AS jaccard_bp
     FROM j
-"""
+""")
 
 
-SQL_BOUNDARY_LEAKAGE = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END AS t
-        FROM documents
-    ),
-    sh AS (
+SQL_BOUNDARY_LEAKAGE = _with(
+    toks=_toks("doc_id"),
+    sh=f"""
         SELECT doc_id, list_distinct(
-            CASE WHEN len(t) < 3 THEN CAST([] AS VARCHAR[])
-                 ELSE list_transform(generate_series(1, len(t) - 2),
-                                     i -> array_to_string(t[i:i+2], ' '))
-            END) AS s
+            {_shingle_expr(3)}) AS s
         FROM toks
-    ),
-    ordk AS (
+    """,
+    ordk="""
         SELECT doc_id, md5('lk|' || CAST(doc_id AS VARCHAR)) AS h
         FROM documents
-    ),
-    pos AS (
+    """,
+    pos="""
         SELECT doc_id,
                CAST(CAST('0x' || substr(h, 1, 8) AS BIGINT) % 16
                     AS INTEGER) AS shard_id,
@@ -10122,8 +9223,8 @@ SQL_BOUNDARY_LEAKAGE = r"""
                                       % 16 AS INTEGER)
                     ORDER BY h, doc_id) - 1)::BIGINT AS position
         FROM ordk
-    ),
-    j AS (
+    """,
+    j="""
         SELECT a.shard_id, a.position, a.doc_id AS id_a, b.doc_id AS id_b,
                sa.s AS sa, sb.s AS sb
         FROM pos a
@@ -10131,7 +9232,8 @@ SQL_BOUNDARY_LEAKAGE = r"""
                   AND b.position = a.position + 1
         JOIN sh sa ON sa.doc_id = a.doc_id
         JOIN sh sb ON sb.doc_id = b.doc_id
-    )
+    """,
+    select="""
     SELECT shard_id, position, id_a, id_b,
            len(list_intersect(sa, sb))::BIGINT AS n_inter,
            (len(sa) + len(sb) - len(list_intersect(sa, sb)))::BIGINT
@@ -10142,7 +9244,7 @@ SQL_BOUNDARY_LEAKAGE = r"""
                          - len(list_intersect(sa, sb)))::BIGINT
                 ELSE 0 END AS jaccard_bp
     FROM j
-"""
+""")
 
 
 def q_char_entropy(spark, sf_dir):
@@ -10156,38 +9258,39 @@ def q_char_entropy(spark, sf_dir):
     return char_entropy(docs)
 
 
-SQL_CHAR_ENTROPY = r"""
-    WITH base AS (
-        SELECT doc_id, trim(coalesce(text, '')) AS t FROM documents
-    ),
-    chars AS (
+SQL_CHAR_ENTROPY = _with(
+    base="""
+        SELECT doc_id, trim(coalesce(text, ''), ' ') AS t FROM documents
+    """,
+    chars="""
         SELECT doc_id, substr(t, i, 1) AS ch, length(t) AS n
         FROM base, unnest(generate_series(1, length(t))) AS u(i)
-    ),
-    hist AS (
+    """,
+    hist="""
         SELECT doc_id, n, ch, count(*)::BIGINT AS c
         FROM chars GROUP BY doc_id, n, ch
-    ),
-    terms AS (
+    """,
+    terms="""
         SELECT doc_id, n,
                CAST(round(
                    -((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
                      * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)))
                    * 1e9) AS BIGINT) AS tn
         FROM hist
-    ),
-    agg AS (
+    """,
+    agg="""
         SELECT doc_id, any_value(n)::BIGINT AS n_chars,
                count(*)::BIGINT AS n_distinct,
                sum(tn)::BIGINT AS entropy_nano
         FROM terms GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT b.doc_id,
            coalesce(a.n_chars, 0) AS n_chars,
            coalesce(a.n_distinct, 0) AS n_distinct,
            coalesce(a.entropy_nano, 0) AS entropy_nano
     FROM base b LEFT JOIN agg a USING (doc_id)
-"""
+""")
 
 
 def q_split_coherence(spark, sf_dir):
@@ -10200,21 +9303,15 @@ def q_split_coherence(spark, sf_dir):
     return split_coherence(docs, shingle_k=3)
 
 
-SQL_SPLIT_COHERENCE = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END AS t
-        FROM documents
-    ),
-    halves AS (
+SQL_SPLIT_COHERENCE = _with(
+    toks=_toks("doc_id"),
+    halves="""
         SELECT doc_id, len(t)::BIGINT AS n_tokens,
                t[1:len(t) // 2] AS ta,
                t[len(t) // 2 + 1:len(t)] AS tb
         FROM toks
-    ),
-    sh AS (
+    """,
+    sh="""
         SELECT doc_id, n_tokens,
                list_distinct(CASE WHEN len(ta) < 3 THEN CAST([] AS VARCHAR[])
                     ELSE list_transform(generate_series(1, len(ta) - 2),
@@ -10223,7 +9320,8 @@ SQL_SPLIT_COHERENCE = r"""
                     ELSE list_transform(generate_series(1, len(tb) - 2),
                          i -> array_to_string(tb[i:i+2], ' ')) END) AS sb
         FROM halves
-    )
+    """,
+    select="""
     SELECT doc_id, n_tokens,
            len(list_intersect(sa, sb))::BIGINT AS n_inter,
            (len(sa) + len(sb) - len(list_intersect(sa, sb)))::BIGINT
@@ -10234,7 +9332,7 @@ SQL_SPLIT_COHERENCE = r"""
                          - len(list_intersect(sa, sb)))::BIGINT
                 ELSE 0 END AS coherence_bp
     FROM sh
-"""
+""")
 
 
 def q_dup_ngram_frac(spark, sf_dir):
@@ -10248,35 +9346,27 @@ def q_dup_ngram_frac(spark, sf_dir):
     return dup_ngram_frac(docs, shingle_k=3)
 
 
-SQL_DUP_NGRAM_FRAC = r"""
-    WITH toks AS (
-        SELECT doc_id, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END AS t
-        FROM documents
-    ),
-    -- 60-bit hashed shingle postings, mirroring Spark's
-    -- hashed_shingles_expr (round-13): identical hashing both
-    -- engines, so df and the counts stay exact under any collision
-    sh AS (
+SQL_DUP_NGRAM_FRAC = _with(
+    toks=_toks("doc_id"),
+    # 60-bit hashed shingle postings, mirroring Spark's
+    # hashed_shingles_expr (round-13): identical hashing both
+    # engines, so df and the counts stay exact under any collision
+    sh=f"""
         SELECT doc_id, unnest(list_distinct(list_transform(list_distinct(
-            CASE WHEN len(t) < 3 THEN CAST([] AS VARCHAR[])
-                 ELSE list_transform(generate_series(1, len(t) - 2),
-                                     i -> array_to_string(t[i:i+2], ' '))
-            END), x -> CAST(('0x' || substr(md5(x), 1, 15))
+            {_shingle_expr(3)}), x -> CAST(('0x' || substr(md5(x), 1, 15))
                        AS BIGINT)))) AS s
         FROM toks
-    ),
-    with_df AS (
+    """,
+    with_df="""
         SELECT doc_id, count(*) OVER (PARTITION BY s)::BIGINT AS df
         FROM sh
-    ),
-    per_doc AS (
+    """,
+    per_doc="""
         SELECT doc_id, count(*)::BIGINT AS n_shingles,
                sum((df >= 2)::BIGINT)::BIGINT AS n_dup
         FROM with_df GROUP BY doc_id
-    )
+    """,
+    select="""
     SELECT d.doc_id,
            coalesce(p.n_shingles, 0) AS n_shingles,
            coalesce(p.n_dup, 0) AS n_dup,
@@ -10284,7 +9374,7 @@ SQL_DUP_NGRAM_FRAC = r"""
                 THEN (p.n_dup * 10000) // p.n_shingles
                 ELSE 0 END AS dup_bp
     FROM documents d LEFT JOIN per_doc p USING (doc_id)
-"""
+""")
 
 
 def q_prefix_modal(spark, sf_dir):
@@ -10298,35 +9388,30 @@ def q_prefix_modal(spark, sf_dir):
     return prefix_modal(docs, n_tokens=3)
 
 
-SQL_PREFIX_MODAL = r"""
-    WITH toks AS (
-        SELECT source, CASE WHEN length(trim(coalesce(text, ''))) = 0
-               THEN CAST([] AS VARCHAR[])
-               ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-               END AS t
-        FROM documents
-    ),
-    pre AS (
+SQL_PREFIX_MODAL = _with(
+    toks=_toks("source"),
+    pre="""
         SELECT source,
                array_to_string(t[1:least(len(t), 3)], ' ') AS p
         FROM toks
-    ),
-    counts AS (
+    """,
+    counts="""
         SELECT source, p, count(*)::BIGINT AS n
         FROM pre GROUP BY source, p
-    ),
-    ranked AS (
+    """,
+    ranked="""
         SELECT source, p, n,
                sum(n) OVER (PARTITION BY source)::BIGINT AS n_docs,
                count(*) OVER (PARTITION BY source)::BIGINT AS n_prefixes,
                row_number() OVER (PARTITION BY source
                                   ORDER BY n DESC, p) AS rn
         FROM counts
-    )
+    """,
+    select="""
     SELECT source, n_docs, n_prefixes, p AS top_prefix, n AS top_n,
            (n * 10000) // n_docs AS top_share_bp
     FROM ranked WHERE rn = 1
-"""
+""")
 
 
 def q_len_quantiles(spark, sf_dir):
@@ -10340,34 +9425,28 @@ def q_len_quantiles(spark, sf_dir):
     return len_quantiles(docs, qs_bp=(1000, 5000, 9000))
 
 
-SQL_LEN_QUANTILES = r"""
-    WITH dl AS (
-        SELECT source,
-               (CASE WHEN length(trim(coalesce(text, ''))) = 0 THEN 0
-                     ELSE len(string_split_regex(trim(coalesce(text, '')),
-                                                 '\s+'))
-                END)::BIGINT AS k
-        FROM documents
-    ),
-    hist AS (
+SQL_LEN_QUANTILES = _with(
+    dl=f"SELECT source, len({_TOKENS})::BIGINT AS k FROM documents",
+    hist="""
         SELECT source, k, count(*)::BIGINT AS c
         FROM dl GROUP BY source, k
-    ),
-    cum AS (
+    """,
+    cum="""
         SELECT source, k,
                sum(c) OVER (PARTITION BY source ORDER BY k)::BIGINT AS cm,
                sum(c) OVER (PARTITION BY source)::BIGINT AS n
         FROM hist
-    ),
-    q AS (SELECT unnest([1000, 5000, 9000]) AS q_bp),
-    hit AS (
+    """,
+    q="SELECT unnest([1000, 5000, 9000]) AS q_bp",
+    hit="""
         SELECT cum.source, q.q_bp::BIGINT AS q_bp, cum.n, cum.k
         FROM cum CROSS JOIN q
         WHERE cum.cm >= greatest((q.q_bp * cum.n + 9999) // 10000, 1)
-    )
+    """,
+    select="""
     SELECT source, q_bp, min(n)::BIGINT AS n_docs, min(k)::BIGINT AS ntok
     FROM hit GROUP BY source, q_bp
-"""
+""")
 
 
 BM25_BATCH_QUERIES = {
@@ -10389,8 +9468,8 @@ def q_bm25_batch(spark, sf_dir):
 
 
 def _bm25_batch_sql() -> str:
-    """Oracle BUILT FROM the same query table the Spark entry uses
-    (BM25_BATCH_QUERIES), so the two cannot drift: per query, the
+    """Oracle built from the same query table the Spark entry uses
+    (BM25_BATCH_QUERIES), so the two stay in step: per query, the
     score folds over ITS term list in declaration order with the
     association bm25_topk's oracle pins.
 
@@ -10400,9 +9479,10 @@ def _bm25_batch_sql() -> str:
     and miss oracle-side without this); tf_/df_ identifiers are
     POSITIONAL indices over the sorted lowercased union (term-derived
     identifiers collide when two terms normalize equal and break on
-    SQL metacharacters); and every term is asserted [a-z0-9]+ AFTER
-    lowering so a quote or regex metachar in a future registry edit
-    fails loudly at import instead of generating broken SQL.
+    SQL metacharacters); and every term must match [a-z0-9]+ AFTER
+    lowering (ValueError otherwise) so a quote or regex metachar in a
+    future registry edit fails loudly at import instead of generating
+    broken SQL.
     """
     import re as _re
 
@@ -10411,41 +9491,21 @@ def _bm25_batch_sql() -> str:
         for qid, ts in BM25_BATCH_QUERIES.items()
     }
     for qid, ts in qnorm.items():
-        assert _re.fullmatch(r"[A-Za-z0-9_]+", qid), (
-            f"bm25_batch oracle: unsafe qid {qid!r}"
-        )
+        if not _re.fullmatch(r"[A-Za-z0-9_]+", qid):
+            raise ValueError(f"bm25_batch oracle: unsafe qid {qid!r}")
         for t in ts:
-            assert _re.fullmatch(r"[a-z0-9]+", t), (
-                f"bm25_batch oracle: unsafe term {t!r} in query {qid!r} "
-                "(must be [a-z0-9]+ after lowercasing)"
-            )
+            if not _re.fullmatch(r"[a-z0-9]+", t):
+                raise ValueError(
+                    f"bm25_batch oracle: unsafe term {t!r} in query {qid!r} "
+                    "(must be [a-z0-9]+ after lowercasing)"
+                )
     union_terms = sorted({t for ts in qnorm.values() for t in ts})
     tidx = {t: i for i, t in enumerate(union_terms)}
-    tf_cols = ",\n               ".join(
-        f"len(list_filter(t, x -> x = '{t}'))::BIGINT AS tf_{i}"
-        for i, t in enumerate(union_terms)
-    )
-    df_cols = ",\n               ".join(
-        f"sum((tf_{i} > 0)::BIGINT)::BIGINT AS df_{i}"
-        for i in range(len(union_terms))
-    )
-
-    def term(t):
-        i = tidx[t]
-        return (
-            f"ln((s.n - s.df_{i} + 0.5) / (s.df_{i} + 0.5) + 1.0)\n"
-            f"                   * (CAST(d.tf_{i} AS DOUBLE) * (1.2 + 1.0))\n"
-            f"                   / (CAST(d.tf_{i} AS DOUBLE)\n"
-            f"                      + 1.2 * ((1.0 - 0.75) + 0.75\n"
-            f"                               * (CAST(d.dl AS DOUBLE)\n"
-            f"                                  / (CAST(s.sdl AS DOUBLE)\n"
-            f"                                     / CAST(s.n AS DOUBLE)))))"
-        )
 
     branches = []
     for qid in sorted(qnorm):
         score = "0.0\n                 + " + "\n                 + ".join(
-            term(t) for t in qnorm[qid]
+            _bm25_term(tidx[t], "s") for t in qnorm[qid]
         )
         branches.append(
             f"""SELECT * FROM (
@@ -10459,32 +9519,10 @@ def _bm25_batch_sql() -> str:
         LIMIT 10
     )"""
         )
-    return (
-        r"""
-    WITH toks AS (
-        SELECT doc_id,
-               CASE WHEN length(trim(coalesce(text, ''))) = 0
-                    THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(lower(trim(text)), '\s+')
-               END AS t
-        FROM documents
-    ),
-    d AS (
-        SELECT doc_id, len(t)::BIGINT AS dl,
-               """
-        + tf_cols
-        + r"""
-        FROM toks
-    ),
-    s AS (
-        SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS sdl,
-               """
-        + df_cols
-        + r"""
-        FROM d
-    )
-    """
-        + "\n    UNION ALL\n    ".join(branches)
+    return _with(
+        **_bm25_docs(union_terms),
+        s=_bm25_stats(len(union_terms)),
+        select="\n    " + "\n    UNION ALL\n    ".join(branches),
     )
 
 
