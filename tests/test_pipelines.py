@@ -62,12 +62,12 @@ def test_minhash_simhash_vectorized_match_scalar_reference(spark):
 
     from webloghunter_spark.pipelines.dedup import minhash_sig_udf, simhash_udf
 
-    ws = re.compile(r"\s+")
+    ws = re.compile("[ \t\n\x0b\x0c\r]+")  # Java's \s, as tokens_expr splits
 
     def ref_minhash(text, num_hashes, shingle_k):
         if text is None:
             return None
-        toks = ws.split(text.strip()) if text.strip() else []
+        toks = ws.split(text.strip(" ")) if text.strip(" ") else []
         if len(toks) < shingle_k:
             return None
         sh = [" ".join(toks[i:i + shingle_k])
@@ -84,7 +84,7 @@ def test_minhash_simhash_vectorized_match_scalar_reference(spark):
     def ref_simhash(text, shingle_k, bits):
         if text is None:
             return None
-        toks = ws.split(text.strip()) if text.strip() else []
+        toks = ws.split(text.strip(" ")) if text.strip(" ") else []
         if len(toks) < shingle_k:
             return None
         sh = [" ".join(toks[i:i + shingle_k])

@@ -287,6 +287,37 @@ def test_fingerprint_fast_twins_match_expr(spark):
     assert got_k == set(con.sql(SQL_DEDUP_EXACT).fetchall())
 
 
+def test_minhash_simhash_udfs_match_oracles_on_edge_texts(spark):
+    """minhash_signatures and simhash_udf tokenize like tokens_expr
+    (Java whitespace class, spaces-only trim), so they match their
+    DuckDB oracles SQL_MINHASH and SQL_SIMHASH on the edge texts and
+    on a U+00A0 inside a document, which is part of a token, not a
+    separator."""
+    import duckdb
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from webloghunter_spark.benchqueries import SQL_MINHASH, SQL_SIMHASH
+    from webloghunter_spark.pipelines.dedup import (
+        minhash_signatures,
+        simhash_udf,
+    )
+
+    texts = FP_EDGE_TEXTS + ["alpha beta\xa0gamma delta epsilon"]
+    rows = [(i, t, "s") for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"]))
+
+    got = {tuple(r) for r in minhash_signatures(df, num_hashes=4).collect()}
+    assert got == set(con.sql(SQL_MINHASH).fetchall()) and len(got) > 0
+
+    got_s = {(r.doc_id, r.s) for r in df.select(
+        "doc_id", simhash_udf(3, 16)(F.col("text")).alias("s")).collect()
+        if r.s is not None}
+    assert got_s == set(con.sql(SQL_SIMHASH).fetchall()) and len(got_s) > 0
+
+
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 24), st.integers(0, 24)),

@@ -1,6 +1,14 @@
-"""Session defaults and the settle() stage-boundary contract."""
+"""Session defaults, the Python worker daemon, and the settle()
+stage-boundary contract."""
 
+import os
+import subprocess
+import sys
 import threading
+import zipfile
+import zipimport
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -11,6 +19,91 @@ def test_session_conf_defaults(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.ui.showConsoleProgress") == "false"
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+
+
+def test_session_names_the_worker_daemon(spark):
+    assert spark.conf.get("spark.python.daemon.module") == "webloghunter_spark.pydaemon"
+    paths = spark.conf.get("spark.executorEnv.PYTHONPATH").split(os.pathsep)
+    assert S._PACKAGE_ROOT in paths
+
+
+def test_workers_run_the_stamped_zip_invalidation(spark):
+    """A pandas UDF reports, from inside a Python worker, which
+    zipimporter.invalidate_caches it runs."""
+
+    @F.pandas_udf("string")
+    def which(ids):
+        import zipimport
+
+        return ids.map(lambda _: zipimport.zipimporter.invalidate_caches.__qualname__)
+
+    got = {r.w for r in spark.range(0, 4, 1, 2).select(which("id").alias("w")).collect()}
+    patched = sys.version_info < (3, 12)
+    assert got == {"stamped_invalidate_caches.<locals>.invalidate_caches"
+                   if patched else "zipimporter.invalidate_caches"}
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="3.12 reads zip directories lazily")
+def test_zip_directory_is_reread_only_after_a_change(tmp_path, monkeypatch):
+    from webloghunter_spark.pydaemon import stamped_invalidate_caches
+
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda path: reads.append(path) or real(path))
+    invalidate = stamped_invalidate_caches(zipimport.zipimporter.invalidate_caches)
+    path = str(tmp_path / "m.zip")
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("a.py", "X = 1\n")
+    imp, twin = zipimport.zipimporter(path), zipimport.zipimporter(path)
+    reads.clear()
+    invalidate(imp)  # first sight of the archive: read
+    invalidate(imp)
+    invalidate(twin)
+    assert reads == [path]
+    assert imp.find_spec("b") is None
+
+    with zipfile.ZipFile(path, "w") as z:  # rewritten: read afresh
+        z.writestr("a.py", "X = 1\n")
+        z.writestr("b.py", "Y = 2\n")
+    invalidate(imp)
+    assert reads == [path, path]
+    assert imp.find_spec("b") is not None
+    invalidate(twin)
+    assert reads == [path, path] and twin.find_spec("b") is not None
+
+    other = str(tmp_path / "n.zip")  # a new archive: read
+    with zipfile.ZipFile(other, "w") as z:
+        z.writestr("c.py", "Z = 3\n")
+    invalidate(zipimport.zipimporter(other))
+    assert reads[-1] == other
+
+
+def test_udf_runs_from_a_driver_outside_the_repo(tmp_path):
+    """Spark's workers start the daemon module by name, so they must
+    find the package when the driver's cwd is elsewhere and nothing on
+    PYTHONPATH points at it."""
+    script = tmp_path / "drive.py"
+    script.write_text(f"""
+import sys
+sys.path.insert(0, {S._PACKAGE_ROOT!r})
+from pyspark.sql import functions as F
+from webloghunter_spark import get_spark
+
+spark = get_spark(app_name="cwd-probe", master="local[1]", shuffle_partitions=1)
+
+@F.pandas_udf("long")
+def plus1(s):
+    return s + 1
+
+print("SUM", spark.range(3).select(plus1("id").alias("x")).agg(F.sum("x")).first()[0])
+spark.stop()
+""")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["WLH_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert "SUM 6" in out.stdout, out.stderr[-3000:]
 
 
 def test_settled_rows_needs_no_extra_job(spark):

@@ -1,8 +1,9 @@
 """Physical-plan audit over the query registry.
 
 For each query: exchanges (shuffles), broadcast joins, sort-merge joins,
-parquet PushedFilters, whole-stage-codegen coverage, and Python
-(Arrow/UDF) stages. Writes a markdown table to PLANS.md so plan quality
+parquet PushedFilters, whole-stage-codegen coverage, Python
+(Arrow/UDF) stages, and the Python UDFs evaluated in more than one
+node. Writes a markdown table to PLANS.md so plan quality
 is reviewable without running anything.
 
 Usage: python tools/plan_audit.py [sf_dir] [out_md]
@@ -20,6 +21,45 @@ from webloghunter_spark.benchqueries import QUERIES
 from webloghunter_spark.session import get_spark
 
 
+# A Python evaluation node lists the UDF calls it runs, each rendered
+# `name(args)#resultId`, then the attributes it outputs, e.g.
+# `ArrowEvalPython [_udf(text#1)#5], [pythonUDF0#20], 200`.
+_EVAL_NODE = re.compile(r"(?:ArrowEvalPython|BatchEvalPython) \[(.*?)\], \[(.*?)\]")
+
+
+def _calls(listing: str) -> set[str]:
+    """The comma-separated calls of one node's UDF list."""
+    calls, depth, start = set(), 0, 0
+    for i, ch in enumerate(listing):
+        depth += (ch == "(") - (ch == ")")
+        if ch == "," and depth == 0:
+            calls.add(listing[start:i].strip())
+            start = i + 1
+    calls.add(listing[start:].strip())
+    return calls
+
+
+def udf_nodes(plan: str) -> dict[str, int]:
+    """Each Python UDF call in `plan` -> the number of nodes that
+    evaluate it. A call keeps its result id wherever Catalyst copies
+    it, so the same `name(args)#id` in two nodes (told apart by their
+    output attributes) means the UDF runs twice per row: a filter on
+    its output was pushed beneath its projection. The same UDF on
+    another input has another id, and a cached subtree printed under
+    each of its scans is one node."""
+    nodes: dict[str, set[str]] = {}
+    for listing, outputs in _EVAL_NODE.findall(plan):
+        for call in _calls(listing):
+            nodes.setdefault(call, set()).add(outputs)
+    return {call: len(outs) for call, outs in nodes.items()}
+
+
+def repeated_udfs(plan: str) -> list[str]:
+    """Names of the Python UDFs that more than one node of `plan`
+    evaluates on the same input (see udf_nodes)."""
+    return sorted({c.split("(", 1)[0] for c, n in udf_nodes(plan).items() if n > 1})
+
+
 def audit(plan: str) -> dict[str, object]:
     return {
         "shuffles": len(re.findall(r"Exchange (?:hashpartitioning|rangepartitioning)", plan)),
@@ -33,6 +73,7 @@ def audit(plan: str) -> dict[str, object]:
         + plan.count("FlatMapGroupsInPandas")
         + plan.count("MapInPandas")
         + plan.count("BatchEvalPython"),
+        "repeated_udfs": repeated_udfs(plan),
         "topk": "TakeOrderedAndProject" in plan,
         "pushed": bool(re.search(r"PushedFilters: \[[^\]]", plan)),
     }
@@ -63,16 +104,17 @@ def main() -> int:
         f"Generated by `python tools/plan_audit.py {sf_dir}`. Columns:",
         "hash/range shuffles, round-robin fan-outs (explicit repartition),",
         "broadcast joins, sort-merge joins, whole-stage-codegen spans,",
-        "Python (Arrow) stages, top-k via TakeOrderedAndProject, parquet",
-        "filter pushdown.",
+        "Python (Arrow) stages, Python UDFs evaluated in more than one node,",
+        "top-k via TakeOrderedAndProject, parquet filter pushdown.",
         "",
-        "| query | shuffles | fan-out | BHJ | SMJ | WSCG | Python | top-k | pushed |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | fan-out | BHJ | SMJ | WSCG | Python | repeated UDFs | top-k | pushed |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, a in rows:
         lines.append(
             f"| {name} | {a['shuffles']} | {a['roundrobin']} | {a['bhj']} | "
             f"{a['smj']} | {a['wscg']} | {a['python']} | "
+            f"{' '.join(a['repeated_udfs'])} | "
             f"{'y' if a['topk'] else ''} | {'y' if a['pushed'] else ''} |"
         )
     lines += [
@@ -86,6 +128,8 @@ def main() -> int:
         "  this data) should be broadcast (BHJ), not SMJ.",
         "- `Python` stages are confined to Arrow-batched UDF/kernel operators",
         "  (uri_risk, minhash/simhash, tool scanner, multimodal).",
+        "- `repeated UDFs` must stay empty: a UDF named there runs twice per",
+        "  row, because a filter on its output was pushed beneath it.",
         "- top-k queries must plan TakeOrderedAndProject, never a global sort.",
     ]
     Path(out_md).write_text("\n".join(lines) + "\n")

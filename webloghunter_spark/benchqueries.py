@@ -1648,13 +1648,10 @@ SQL_DUP_SOURCE_MATRIX = _with(
 
 def q_simhash(spark, sf_dir):
     """16-bit SimHash fingerprint per document."""
-    from webloghunter_spark.pipelines.dedup import simhash_udf
+    from webloghunter_spark.pipelines.dedup import simhash_fingerprints
 
     docs = _fan(_t(spark, sf_dir, "documents"))
-    udf = simhash_udf(shingle_k=3, bits=16)
-    return docs.select(
-        "doc_id", udf(F.col("text")).alias("simhash")
-    ).filter(F.col("simhash").isNotNull())
+    return simhash_fingerprints(docs, shingle_k=3, bits=16)
 
 
 SQL_SIMHASH = _with(
@@ -3900,13 +3897,10 @@ def q_simhash_pairs(spark, sf_dir):
     the O(n^2) brute force at gate scale; the banding keeps the real
     plan at sum(bucket^2)."""
     from webloghunter_spark.functions.similarity import simhash_hamming_pairs
-    from webloghunter_spark.pipelines.dedup import simhash_udf
+    from webloghunter_spark.pipelines.dedup import simhash_fingerprints
 
     docs = _fan(_t(spark, sf_dir, "documents"))
-    udf = simhash_udf(shingle_k=3, bits=16)
-    sh = docs.select(
-        "doc_id", udf(F.col("text")).alias("simhash")
-    ).filter(F.col("simhash").isNotNull())
+    sh = simhash_fingerprints(docs, shingle_k=3, bits=16)
     return simhash_hamming_pairs(
         sh, max_distance=3, bits=16, n_bands=4, max_pairs_per_doc=64
     )
@@ -9531,13 +9525,35 @@ SQL_BM25_BATCH = _bm25_batch_sql()
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # ORDER IS DRIVER COVERAGE: the correctness driver samples the
-    # FIRST 50 entries. Front = the 14 names whose builder changed when
-    # each operator kept one implementation (the five retired twin
-    # names, each routed to its survivor's builder, the survivors, and
-    # the four callers of a removed path), then the first 36 of the
-    # previous front's staleness cohort. Everything after slot 50 is
-    # covered by the committed full-registry HASHCHECK artifacts.
-    # -- builders changed by the one-implementation pass (14) --
+    # FIRST 50 entries. Front = the 20 names whose work changed when
+    # each Python UDF became one evaluation per row (their plans, or
+    # the plans of the stages they settle, apply the MinHash, SimHash
+    # or winnowing UDF), then the other 13 names whose builder changed
+    # when each operator kept one implementation, then the first 17 of
+    # the previous front's staleness cohort. Everything after slot 50
+    # is covered by the committed full-registry HASHCHECK artifacts.
+    # -- plans changed by one evaluation per UDF (20) --
+    "cc_representatives": q_cc_representatives,
+    "dup_stats": q_dup_stats,
+    "lsh_recall": q_lsh_recall,
+    "near_dedup": q_near_dedup,
+    "near_dedup_cc": q_near_dedup_cc,
+    "simhash_pairs": q_simhash_pairs,
+    "dedup_sensitivity": q_dedup_sensitivity,
+    "dup_source_matrix": q_dup_source_matrix,
+    "curate_incremental": q_curate_incremental,
+    "curate_pipeline": q_curate_pipeline,
+    "jaccard_pairs": q_jaccard_pairs,
+    "lsh_pairs": q_lsh_pairs,
+    "minhash_signatures": q_minhash,
+    "simhash": q_simhash,
+    "scorecard_budget": q_scorecard_budget,
+    "filter_track": q_filter_track,
+    "dataset_diff": q_dataset_diff,
+    "source_scorecard": q_source_scorecard,
+    "incremental_dedup": q_incremental_dedup,
+    "winnow_pairs": q_winnow_pairs,
+    # -- builders changed by the one-implementation pass (13) --
     "doc_fingerprint": q_doc_fingerprint,
     "doc_fingerprint_fast": q_doc_fingerprint,
     "winnow_fingerprints": q_winnow_fingerprints,
@@ -9550,9 +9566,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "tfidf_topk_salted": q_tfidf_topk,
     "substring_dedup": q_substring_dedup,
     "bigram_logprob": q_bigram_logprob,
-    "winnow_pairs": q_winnow_pairs,
     "winnow_containment_drop": q_winnow_containment_drop,
-    # -- round-9/10 staleness cohort (36) --
+    # -- round-9/10 staleness cohort (17) --
     "url_blocklist_big": q_url_blocklist_big,
     "batch_leakage": q_batch_leakage,
     "bloom_audit": q_bloom_audit,
@@ -9560,7 +9575,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bpe_encode": q_bpe_encode,
     "bpe_merges": q_bpe_merges,
     "budget_by_source": q_budget_by_source,
-    "cc_representatives": q_cc_representatives,
     "chunk_sliding": q_chunk_sliding,
     "clean_html": q_clean_html,
     "cluster_purity": q_cluster_purity,
@@ -9568,34 +9582,29 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "corpus_stats": q_corpus_stats,
     "decontam_bloom": q_decontam_bloom,
     "decontaminate": q_decontaminate,
-    "dup_stats": q_dup_stats,
     "funnel": q_funnel,
     "fuzzy_match": q_fuzzy_match,
     "gapfill_hourly": q_gapfill_hourly,
+    # -- the remainder (committed full-registry HASHCHECK coverage) --
     "hll_distinct": q_hll_distinct,
     "jl_project": q_jl_project,
     "kmeans_sizes": q_kmeans_sizes,
     "kmeans_train": q_kmeans_train,
     "knn_ivf_trained": q_knn_ivf_trained,
     "knn_quantized": q_knn_quantized,
-    "lsh_recall": q_lsh_recall,
     "mad_outliers": q_mad_outliers,
     "mix_resample": q_mix_resample,
-    "near_dedup": q_near_dedup,
-    "near_dedup_cc": q_near_dedup_cc,
     "pack_bins": q_pack_bins,
     "pack_chunks": q_pack_chunks,
     "pagerank": q_pagerank,
     "pii_redact": q_pii_redact,
     "pivot_counts": q_pivot_counts,
     "quality_ecdf": q_quality_ecdf,
-    # -- the remainder (committed full-registry HASHCHECK coverage) --
     "quantize_emb": q_quantize_emb,
     "referrer_hosts": q_referrer_hosts,
     "rep_signals": q_rep_signals,
     "returned_items": q_returned_items,
     "shard_manifest": q_shard_manifest,
-    "simhash_pairs": q_simhash_pairs,
     "stratified_sample": q_stratified_sample,
     "value_quantiles": q_value_quantiles,
     "vocab_topk": q_vocab_topk,
@@ -9613,10 +9622,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "charset_stats": q_charset_stats,
     "cms_heavy_hitters": q_cms_heavy_hitters,
     "dedup_keep_best": q_dedup_keep_best,
-    "dedup_sensitivity": q_dedup_sensitivity,
     "domain_mix": q_domain_mix,
     "dup_ngram_frac": q_dup_ngram_frac,
-    "dup_source_matrix": q_dup_source_matrix,
     "effective_data": q_effective_data,
     "ewma_alerts": q_ewma_alerts,
     "heaps_fit": q_heaps_fit,
@@ -9645,8 +9652,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "train_split": q_train_split,
     "unimax_alloc": q_unimax_alloc,
     "uri_risk": q_uri_risk,
-    "curate_incremental": q_curate_incremental,
-    "curate_pipeline": q_curate_pipeline,
     "boilerplate_segments": q_boilerplate_segments,
     "bpe_apply": q_bpe_apply,
     "burst_detect": q_burst_detect,
@@ -9662,7 +9667,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "first_last": q_first_last,
     "gopher_rules": q_gopher_rules,
     "interleave_audit": q_interleave_audit,
-    "jaccard_pairs": q_jaccard_pairs,
     "json_agg": q_json_agg,
     "knn_bruteforce": q_knn,
     "knn_lsh": q_knn_lsh,
@@ -9670,8 +9674,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lang_consistency": q_lang_consistency,
     "lang_id": q_lang_id,
     "longest_repeat": q_longest_repeat,
-    "lsh_pairs": q_lsh_pairs,
-    "minhash_signatures": q_minhash,
     "neardup_embeddings": q_neardup_embeddings,
     "parse_roundtrip": q_parse_roundtrip,
     "pricing_summary": q_pricing_summary,
@@ -9683,7 +9685,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sessionize": q_sessionize,
     "shard_balance": q_shard_balance,
     "sigma_rules": q_sigma_rules,
-    "simhash": q_simhash,
     "text_normalize": q_text_normalize,
     "time_split": q_time_split,
     "token_stats": q_token_stats,
@@ -9694,10 +9695,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "topic_classify": q_topic_classify,
     "containment_drop_against": q_containment_drop_against,
     "containment_pairs_against": q_containment_pairs_against,
-    "scorecard_budget": q_scorecard_budget,
-    "filter_track": q_filter_track,
-    "dataset_diff": q_dataset_diff,
-    "source_scorecard": q_source_scorecard,
     "cms_counts": q_cms_counts,
     "contam_spans": q_contam_spans,
     "curriculum_order": q_curriculum_order,
@@ -9711,7 +9708,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "fim_split": q_fim_split,
     "group_split": q_group_split,
     "hard_negatives": q_hard_negatives,
-    "incremental_dedup": q_incremental_dedup,
     "interval_join": q_interval_join,
     "label_propagation": q_label_propagation,
     "local_volume": q_local_volume,

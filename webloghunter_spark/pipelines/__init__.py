@@ -4,4 +4,5 @@ from webloghunter_spark.pipelines.dedup import (  # noqa: F401
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash_expr,
+    simhash_fingerprints,
 )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from webloghunter_spark.functions.text import (
+    _PY_WS_RE,
     fingerprint_expr,
     shingles_expr,
     tokens_expr,
@@ -54,12 +55,25 @@ def minhash_sig_udf(num_hashes: int = 8, shingle_k: int = 3):
     `seed` is the minimum of 8-hex-digit chunk (seed % 4) of that
     digest — 4 independent 32-bit minwise hashes per md5 evaluation.
 
+    Tokens are `tokens_expr`'s: spaces trimmed, split on the Java
+    whitespace class. Python's `str.strip()` and regex whitespace class
+    would also eat U+00A0 and other Unicode spaces, which Spark and the
+    oracles keep.
+
     Why a UDF and not Column exprs: Spark's higher-order array
     functions are interpreted (not codegen'd) and projection collapsing
     re-inlines the shared hashed-shingle array into every per-seed
     reference, re-hashing everything num_hashes times. A Python UDF is
-    extracted into its own plan node, evaluated once, and its Arrow
-    batches stream at ~md5 speed. Returns NULL for docs with < k
+    extracted into its own plan node and its Arrow batches stream at
+    ~md5 speed. It is evaluated once per row only if no filter on its
+    output can be pushed beneath it: `select(udf(text).alias("s"))
+    .filter(col("s").isNotNull())` lets Catalyst push the filter below
+    the projection with the alias substituted, and the planner then
+    runs the UDF in two ArrowEvalPython nodes, the filter's and the
+    projection's. So does `posexplode("s")`, whose inferred
+    `isnotnull(s) AND size(s) > 0` filter is pushed the same way. Drop
+    the NULL rows inside a generator over a non-attribute input
+    instead (`_explode_signed`). Returns NULL for docs with < k
     tokens.
     """
     import hashlib
@@ -67,13 +81,14 @@ def minhash_sig_udf(num_hashes: int = 8, shingle_k: int = 3):
 
     import numpy as np
 
-    ws = _re.compile(r"\s+")
+    ws = _re.compile(_PY_WS_RE)
     n_groups = (num_hashes + 3) // 4
 
     def sig(text) -> list | None:
         if text is None:
             return None
-        toks = ws.split(text.strip()) if text.strip() else []
+        t = text.strip(" ")
+        toks = ws.split(t) if t else []
         if len(toks) < shingle_k:
             return None
         shingles = [
@@ -99,10 +114,20 @@ def minhash_sig_udf(num_hashes: int = 8, shingle_k: int = 3):
         return out
 
     @F.pandas_udf("array<string>")
-    def _udf(texts: pd.Series) -> pd.Series:
+    def minhash_sig(texts: pd.Series) -> pd.Series:
         return texts.map(sig)
 
-    return _udf
+    return minhash_sig
+
+
+def _explode_signed(sig: str, *items: Column) -> Column:
+    """explode(CASE WHEN sig IS NOT NULL THEN array(items) END): the
+    items as rows where the UDF output column `sig` is not NULL, no
+    row where it is. The NULL rows go inside the generator, and its
+    input is not a bare attribute, so Catalyst infers no filter on
+    `sig` that it could push beneath the UDF (see `minhash_sig_udf`):
+    the UDF runs once per row."""
+    return F.explode(F.when(F.col(sig).isNotNull(), F.array(*items)))
 
 
 def minhash_signatures(
@@ -114,12 +139,17 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, seed, minhash) — long form; docs with < k tokens are dropped."""
     udf = minhash_sig_udf(num_hashes, shingle_k)
-    wide = df.select(F.col(id_col), udf(F.col(text_col)).alias("_sig")).filter(
-        F.col("_sig").isNotNull()
+    wide = df.select(F.col(id_col), udf(F.col(text_col)).alias("_sig"))
+    seeds = [
+        F.struct(
+            F.lit(s).cast("long").alias("seed"),
+            F.element_at("_sig", s + 1).alias("minhash"),
+        )
+        for s in range(num_hashes)
+    ]
+    return wide.select(id_col, _explode_signed("_sig", *seeds).alias("m")).select(
+        id_col, "m.seed", "m.minhash"
     )
-    return wide.select(
-        id_col, F.posexplode("_sig").alias("seed", "minhash")
-    ).withColumn("seed", F.col("seed").cast("long"))
 
 
 def lsh_band_signatures(
@@ -135,9 +165,7 @@ def lsh_band_signatures(
     any future batch joins against it on (band, bh) without
     re-signaturing the corpus (incremental_near_dedup's shape)."""
     udf = minhash_sig_udf(num_hashes, shingle_k)
-    base = df.select(F.col(id_col), udf(F.col(text_col)).alias("_sig")).filter(
-        F.col("_sig").isNotNull()
-    )
+    base = df.select(F.col(id_col), udf(F.col(text_col)).alias("_sig"))
     n_bands = num_hashes // band_size
     band_cols = []
     for b in range(n_bands):
@@ -148,7 +176,7 @@ def lsh_band_signatures(
             F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *parts)).alias("bh"))
         )
     return base.select(
-        id_col, F.explode(F.array(*band_cols)).alias("b")
+        id_col, _explode_signed("_sig", *band_cols).alias("b")
     ).select(id_col, F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
 
 
@@ -759,14 +787,15 @@ def containment_drop(
 def simhash_udf(shingle_k: int = 3, bits: int = 16):
     """Arrow-vectorized SimHash: one md5 per shingle, bit b from nibble
     b of the digest (bit index b % 4), majority vote over shingles.
-    Same UDF-over-exprs rationale as `minhash_sig_udf`. NULL for docs
-    with < k tokens."""
+    Same UDF-over-exprs rationale, tokens and filter-pushdown trap as
+    `minhash_sig_udf`; `simhash_fingerprints` applies it safely. NULL
+    for docs with < k tokens."""
     import hashlib
     import re as _re
 
     import numpy as np
 
-    ws = _re.compile(r"\s+")
+    ws = _re.compile(_PY_WS_RE)
     nbytes = (bits + 1) // 2
     # per-bit shift: bit b reads bit (b % 4) of hex nibble b
     shifts = np.arange(bits, dtype=np.uint8) % 4
@@ -774,7 +803,8 @@ def simhash_udf(shingle_k: int = 3, bits: int = 16):
     def sh(text):
         if text is None:
             return None
-        toks = ws.split(text.strip()) if text.strip() else []
+        t = text.strip(" ")
+        toks = ws.split(t) if t else []
         if len(toks) < shingle_k:
             return None
         shingles = [
@@ -799,10 +829,26 @@ def simhash_udf(shingle_k: int = 3, bits: int = 16):
         return int((mask << np.arange(bits, dtype=np.uint64)).sum())
 
     @F.pandas_udf("long")
-    def _udf(texts: pd.Series) -> pd.Series:
+    def simhash(texts: pd.Series) -> pd.Series:
         return texts.map(sh)
 
-    return _udf
+    return simhash
+
+
+def simhash_fingerprints(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_k: int = 3,
+    bits: int = 16,
+) -> DataFrame:
+    """(id, simhash) per document with >= k tokens. The docs without a
+    fingerprint are dropped by `_explode_signed`, not by a filter, so
+    `simhash_udf` runs once per row (see `minhash_sig_udf`)."""
+    udf = simhash_udf(shingle_k, bits)
+    return df.select(F.col(id_col), udf(F.col(text_col)).alias("_sh")).select(
+        id_col, _explode_signed("_sh", F.col("_sh")).alias("simhash")
+    )
 
 
 def simhash_expr(text_col: Column | str, shingle_k: int = 3, bits: int = 16) -> Column:
@@ -1828,13 +1874,14 @@ def winnow_pairs(
         raise ValueError(f"max_df must be >= 2, got {max_df}")
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
+    # No filter on _fp: Catalyst would push it beneath the UDF and run
+    # the UDF twice (see minhash_sig_udf). A doc without fingerprints
+    # explodes to no rows, so it never enters a candidate pair.
     sh = materialize(
         with_winnowed_fingerprints(
             df.select(F.col(id_col), F.col(text_col)),
             text_col, out_col="_fp", kgram=kgram, window=window,
-        )
-        .select(F.col(id_col), F.col("_fp"))
-        .filter(F.size("_fp") > 0)
+        ).select(F.col(id_col), F.col("_fp"))
     )
     inv = sh.select(F.col(id_col), F.explode("_fp").alias("_g"))
     rare = (

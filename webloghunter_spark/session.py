@@ -227,6 +227,11 @@ def materialized_scope():
                 pass
 
 
+# The directory holding the package, for Spark's Python workers.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
+
 def get_spark(
     app_name: str = "webloghunter_spark",
     master: str | None = None,
@@ -236,7 +241,7 @@ def get_spark(
     """Build (or return the running) session with the engine defaults;
     `extra_conf` entries are applied last and override any of them.
 
-    Two defaults are about per-query fixed costs rather than data:
+    Three defaults are about per-query fixed costs rather than data:
 
     - `spark.sql.codegen.cache.maxEntries` = 2000 (Spark's default is
       100). The cache holds the Janino-compiled generated classes.
@@ -247,12 +252,26 @@ def get_spark(
       started over on them. At 2000 a repeat compiles none, bar the
       odd class an adaptive re-plan generates for the first time
       (SCALING.md, "Generated-code cache").
+    - `spark.python.daemon.module` = `webloghunter_spark.pydaemon`.
+      Spark's Python workers import pyspark from pyspark.zip, and on
+      Python < 3.12 every task's `importlib.invalidate_caches()` made
+      each of the ~16 zip importers re-read the archive's directory:
+      about 0.29 CPU-s per Python task, where the MinHash UDF itself
+      needs milliseconds. The daemon re-reads an archive only when it
+      changed (see `pydaemon`); its workers are forked from it. So that
+      the workers can import it from any driver cwd, the package root
+      is added to `spark.executorEnv.PYTHONPATH`, after any value
+      `extra_conf` gives it.
     - `spark.ui.showConsoleProgress` = false: the progress bar's `\r`
       overwrote lines printed by long query sweeps (check_hash).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 4)
+    extra_conf = dict(extra_conf or {})
+    worker_path = os.pathsep.join(
+        p for p in (extra_conf.pop(_WORKER_PATH, None), _PACKAGE_ROOT) if p
+    )
 
     builder = (
         SparkSession.builder.master(master)
@@ -267,12 +286,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.python.daemon.module", "webloghunter_spark.pydaemon")
+        .config(_WORKER_PATH, worker_path)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet TIMESTAMP(NANOS) (e.g. pandas-written event tables) is
         # unreadable as a timestamp; read as long and convert explicitly.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

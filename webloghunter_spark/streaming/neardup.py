@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from webloghunter_spark.pipelines.dedup import minhash_sig_udf
+from webloghunter_spark.pipelines.dedup import lsh_band_signatures
 
 PAIR_SCHEMA = "band int, bh string, id_a long, id_b long"
 BUCKET_STATE_SCHEMA = "ids array<long>"
@@ -80,23 +80,9 @@ def lsh_pairs_stream(
     candidate rows in append mode. Same signature/banding math as the
     batch pipeline (md5-portable), so a drained stream's
     `.select("id_a","id_b").distinct()` equals the batch candidates."""
-    udf = minhash_sig_udf(num_hashes, shingle_k)
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), udf(F.col(text_col)).alias("_sig")
-    ).filter(F.col("_sig").isNotNull())
-    n_bands = num_hashes // band_size
-    band_cols = []
-    for b in range(n_bands):
-        parts = [
-            F.element_at("_sig", b * band_size + s + 1) for s in range(band_size)
-        ]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"),
-                     F.md5(F.concat_ws("|", *parts)).alias("bh"))
-        )
-    banded = base.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("b")
-    ).select("doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
+    banded = lsh_band_signatures(
+        docs, text_col, id_col, num_hashes, band_size, shingle_k
+    ).select(F.col(id_col).alias("doc_id"), "band", "bh")
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if idle_timeout_ms > 0
