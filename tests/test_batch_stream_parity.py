@@ -545,9 +545,9 @@ def test_mix_temperature_stream_replay_idempotent(spark):
 
 
 def test_incremental_dedup_stream_replay_idempotent(spark):
-    """Replay guard for the incremental-dedup twin: the frozen index
-    makes `kept` deterministic, so a replayed batch re-emits the same
-    survivors but must not double the running counter/survivor list."""
+    """Replay for the incremental-dedup twin: the frozen index makes
+    the survivors deterministic, so a replayed batch re-emits the same
+    rows to the sink."""
     from webloghunter_spark.streaming.incdedup import (
         incremental_dedup_stream_writer,
     )
@@ -564,14 +564,11 @@ def test_incremental_dedup_stream_replay_idempotent(spark):
     fn = incremental_dedup_stream_writer(
         lambda rows, bid: emitted.append(rows),
         corpus,
-        track_survivors=True,
     )
     try:
         fn(batch, 0)
-        assert fn.survivor_count() == 1
+        assert emitted == [[(10,)]]
         fn(batch, 0)  # replay: same batch_id
-        assert fn.survivor_count() == 1  # not double-counted
-        assert fn.survivors == [10]
         assert emitted[0] == emitted[1]  # sink re-saw the same rows
     finally:
         fn.release()
@@ -990,7 +987,6 @@ def test_incremental_dedup_batch_stream_parity(spark, tmp_path):
     fn = incremental_dedup_stream_writer(
         lambda rows, bid: seen.append(rows), corpus,
         threshold=0.8, num_hashes=4, band_size=2,
-        track_survivors=True,
     )
     q = (
         stream.writeStream.foreachBatch(fn)
@@ -1002,9 +998,9 @@ def test_incremental_dedup_batch_stream_parity(spark, tmp_path):
     finally:
         q.stop()
         fn.release()
-    assert sorted(fn.survivors) == want
-    assert fn.survivor_count() == len(want)
-    assert 200 not in fn.survivors  # the planted corpus near-dup died
+    survivors = [i for rows in seen for (i,) in rows]
+    assert sorted(survivors) == want
+    assert 200 not in survivors  # the planted corpus near-dup died
     assert len(seen) >= 2
 
 

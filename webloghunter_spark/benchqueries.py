@@ -2385,7 +2385,6 @@ URI_RISK_PROBES = [
     "/index.html", "/admin/c99.php", "/%2e%2e/x.exe", "/%252e%252e/y",
     "/upload/shell.php.jpg", "/data.sql?q=..%2Fetc", "/cmd.php?x=1", "/x%00y",
 ]
-URI_RISK_EXPECTED = [0, 75, 100, 100, 100, 35, 50, 10]
 
 
 def q_uri_risk(spark, sf_dir):

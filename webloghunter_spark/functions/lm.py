@@ -309,7 +309,9 @@ def bigram_lm_model(
     so plain persist — NOT session.materialize, whose registry is for
     query-scoped intermediates). The dict is the model: pass it to
     `bigram_logprob_frozen` / the streaming scorer."""
-    bi = _bigram_rows(df, text_col, id_col)
+    # the bigram frame feeds both count tables: persist it so the
+    # extraction runs once, and free it once they are filled
+    bi = _bigram_rows(df, text_col, id_col).persist()
     cb = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("_cb")).persist()
     cu = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("_cu")).persist()
     v = int(
@@ -322,6 +324,7 @@ def bigram_lm_model(
         .collect()[0]["_v"]
     )
     cb.count(), cu.count()  # pin state before the source frame moves on
+    bi.unpersist()
     return {"cb": cb, "cu": cu, "v": v}
 
 
@@ -369,56 +372,5 @@ def bigram_logprob_frozen(
             id_col,
             F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
             F.col("avg_ll"),
-        )
-    )
-
-
-def bigram_ll_nano_frozen(
-    df: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.5,
-) -> DataFrame:
-    """Integer twin of bigram_logprob_frozen: each bigram's logprob is
-    quantized to 1e-9 nats on the stored-value half-away grid BEFORE
-    the per-doc sum, so the total is an order-free exact integer —
-    the dist_drift/mix_temperature discipline, for callers that go on
-    to COMBINE scores across models (a float avg rounded late is fine
-    for one model, but a DIFFERENCE of two float sums is exactly the
-    boundary-flip exposure the integer grid exists to close).
-
-    Returns (id_col, n_bigrams, sum_ll_nano); docs with no bigram
-    score (0, 0)."""
-    bi = _bigram_rows(df, text_col, id_col)
-    a = F.lit(float(alpha))
-    v = F.lit(int(model["v"]))
-    lp = F.log(
-        (F.coalesce("_cb", F.lit(0)) + a)
-        / (F.coalesce("_cu", F.lit(0)) + a * v)
-    )
-    # integer grid directly (no /1e9*1e9 round trip): stored-value
-    # half-away, the grid_round_expr family's semantics
-    lp_nano = (
-        F.signum(lp) * F.floor(F.abs(lp) * F.lit(1e9) + F.lit(0.5))
-    ).cast("long")
-    scored = (
-        bi.join(model["cb"], ["w1", "w2"], "left")
-        .join(model["cu"], "w1", "left")
-        .select(id_col, lp_nano.alias("_lp_nano"))
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum("_lp_nano").alias("sum_ll_nano"),
-    )
-    return (
-        df.select(id_col)
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            F.coalesce("sum_ll_nano", F.lit(0)).cast("long").alias(
-                "sum_ll_nano"
-            ),
         )
     )

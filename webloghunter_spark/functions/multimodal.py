@@ -43,7 +43,6 @@ except Exception:  # pragma: no cover - environment-dependent
     _PILImage = None
     HAS_PIL = False
 
-MEDIA_META_SCHEMA = "mime string, n_bytes long, sha1 string"
 DECODED_SCHEMA = "width int, height int, channels int"
 
 # PNG color type -> sample channels

@@ -100,18 +100,6 @@ def quality_score_raw_expr(col: Column | str) -> Column:
     )
 
 
-def quality_score_expr(col: Column | str) -> Column:
-    """Stored-value half-up grid, not F.round: the score is a DOUBLE
-    in [0,1] whose shortest decimal repr can sit ON a .xxxx5 midpoint
-    the stored value is just below — F.round (BigDecimal HALF_UP on
-    the repr) rounds UP there while DuckDB round() / the Arrow
-    kernels round DOWN (see functions/similarity.py:45). Feeds
-    quality_gate / curate_pipeline / filter_track / dataset_card."""
-    from webloghunter_spark.functions.similarity import grid_round_expr
-
-    return grid_round_expr(quality_score_raw_expr(col), 4)
-
-
 def quality_bp_expr(col: Column | str) -> Column:
     """Quality in integer basis points (0-10000). floor(x*1e4 + 0.5)
     over identical IEEE doubles is engine-portable, unlike decimal

@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-APACHE_TS_RE = r"^\d{2}/[A-Za-z]{3}/\d{4}:\d{2}:\d{2}:\d{2}\s(?:[+-]\d{4}|UTC|[A-Za-z]+)$"
 IIS_TS_RE = r"^\d{4}-\d{2}-\d{2}\s\d{2}:\d{2}:\d{2}$"
 
 

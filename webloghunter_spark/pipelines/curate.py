@@ -49,6 +49,37 @@ from pyspark.sql import functions as F
 from webloghunter_spark.session import settle, settled_rows
 
 
+def _corpus_keys(corpus: DataFrame, text_col: str) -> DataFrame:
+    """The exact-against corpus side: distinct normalized-key md5s."""
+    from webloghunter_spark.functions.text import normalized_text_expr
+
+    return corpus.select(
+        F.md5(normalized_text_expr(text_col)).alias("_k")
+    ).distinct()
+
+
+def _exact_against(
+    cur: DataFrame, ckeys: DataFrame, text_col: str, id_col: str
+) -> DataFrame:
+    """Drop the rows of `cur` whose normalized key is in `ckeys`: the
+    corpus is authoritative, and `cur`'s rows never key-match each
+    other (anti-join on 16-byte digests — no text moves)."""
+    from webloghunter_spark.functions.text import normalized_text_expr
+
+    keyed = cur.select(
+        F.col(id_col), F.md5(normalized_text_expr(text_col)).alias("_k")
+    )
+    hit = keyed.join(ckeys, "_k", "left_semi").select(id_col)
+    return cur.join(hit, id_col, "left_anti")
+
+
+def _undropped(cur: DataFrame, dec: DataFrame, id_col: str) -> DataFrame:
+    """The rows of `cur` that a containment-drop verdict frame `dec`
+    keeps (dropped = 0)."""
+    keep = dec.filter(F.col("dropped") == 0).select(id_col)
+    return cur.join(keep, id_col, "left_semi")
+
+
 def curate_corpus(
     docs: DataFrame,
     eval_df: DataFrame | None = None,
@@ -158,8 +189,7 @@ def curate_corpus(
             size_ratio_bp=containment_size_ratio_bp,
             max_df=containment_max_df,
         )
-        keep = dec.filter(F.col("dropped") == 0).select(id_col)
-        cur = settle(cur.join(keep, id_col, "left_semi"))
+        cur = settle(_undropped(cur, dec, id_col))
         m = settled_rows(cur)
         funnel.append(("containment_drop", n, m))
         n = m
@@ -268,14 +298,14 @@ def curate_against(
     share the flag. `containment_threshold_bp=None` skips only the
     containment stage; `eval_df=None` skips only decontamination.
 
-    Scale shape: the corpus-side artifacts (normalized-key digests,
-    LSH band signatures, the df-capped shingle inverted index) are
-    written ONCE per corpus freeze and reused across batches; each
-    batch pays |batch| scans plus candidate-bounded joins — never a
-    corpus re-scan. At 100 TB the corpus sides here are the persisted
-    indexes the streaming twins already maintain."""
-    from webloghunter_spark.functions.text import normalized_text_expr
-
+    Scale shape: each batch pays |batch| scans plus candidate-bounded
+    joins against the corpus-side artifacts (normalized-key digests,
+    LSH band signatures, the df-capped shingle inverted index). This
+    one-shot form builds them from `corpus` on every call; the
+    streaming twin (streaming/curate.curate_against_stream_writer)
+    builds them once, persists them for the stream's life, and runs
+    the same stage kernels (_exact_against, _near_drop, _drop_against,
+    decontaminate) on each micro-batch."""
     funnel: list[tuple[str, int, int]] = []
     cur = settle(batch)
     n = settled_rows(cur)
@@ -299,17 +329,9 @@ def curate_against(
         n = m
 
     if near_dedup_threshold is not None:
-        # exact-against: the corpus is authoritative — a batch doc
-        # whose canonical key is already accepted drops; batch docs
-        # never key-match each other
-        ckeys = corpus.select(
-            F.md5(normalized_text_expr(text_col)).alias("_k")
-        ).distinct()
-        keyed = cur.select(
-            F.col(id_col), F.md5(normalized_text_expr(text_col)).alias("_k")
+        cur = settle(
+            _exact_against(cur, _corpus_keys(corpus, text_col), text_col, id_col)
         )
-        hit = keyed.join(ckeys, "_k", "left_semi").select(id_col)
-        cur = settle(cur.join(hit, id_col, "left_anti"))
         m = settled_rows(cur)
         funnel.append(("exact_against", n, m))
         n = m
@@ -345,8 +367,7 @@ def curate_against(
             size_ratio_bp=containment_size_ratio_bp,
             max_df=containment_max_df,
         )
-        keep = dec.filter(F.col("dropped") == 0).select(id_col)
-        cur = settle(cur.join(keep, id_col, "left_semi"))
+        cur = settle(_undropped(cur, dec, id_col))
         m = settled_rows(cur)
         funnel.append(("containment_against", n, m))
         n = m

@@ -261,6 +261,22 @@ def ngram_jaccard_pairs(
         hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
         *[F.col(c) for c in carry_cols],
     ))
+    return _jaccard_verify(pairs, sh, sh, id_col, threshold, carry_cols)
+
+
+def _jaccard_verify(
+    pairs: DataFrame,
+    a_sh: DataFrame,
+    b_sh: DataFrame,
+    id_col: str,
+    threshold: float,
+    carry_cols: tuple = (),
+) -> DataFrame:
+    """ngram_jaccard_pairs' verify: join each (id_a, id_b) pair to its
+    two (id, _sh) hashed shingle sets — id_a's from `a_sh`, id_b's from
+    `b_sh` — and keep the pairs with Jaccard >= threshold. The batch
+    operators pass one materialized table as both sides; the streaming
+    twin passes the micro-batch and its persisted corpus index."""
     # shuffle_hash hint: the shingle table scales WITH THE CORPUS, so
     # it is never broadcastable at scale — but the planner estimates
     # the persisted projection from parquet stats, under-sizing the
@@ -270,8 +286,8 @@ def ngram_jaccard_pairs(
     # this hint). Shuffle-hash joins on the id key instead: both
     # sides partition on id, the build side is one partition's
     # shingles, and no sort touches the wide arrays.
-    a = sh.alias("a").hint("shuffle_hash")
-    b = sh.alias("b").hint("shuffle_hash")
+    a = a_sh.alias("a").hint("shuffle_hash")
+    b = b_sh.alias("b").hint("shuffle_hash")
     j = (
         pairs.join(a, pairs.id_a == F.col(f"a.{id_col}"))
         .join(b, pairs.id_b == F.col(f"b.{id_col}"))
@@ -295,20 +311,72 @@ def ngram_jaccard_pairs(
     )
 
 
-def _containment_ex(
-    sh: DataFrame,
+def _check_pairs_args(threshold: float, max_df: int, min_max_df: int = 1) -> None:
+    """The containment-pairs argument checks (self and against forms)."""
+    if not 0.0 <= threshold <= 1.0:
+        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
+    if max_df < min_max_df:
+        raise ValueError(f"max_df must be >= {min_max_df}, got {max_df}")
+
+
+def _check_drop_args(
+    threshold_bp: int, size_ratio_bp: int, max_df: int, min_max_df: int = 1
+) -> None:
+    """The containment-drop argument checks (shingle, winnow and
+    against forms). max_df below the floor freezes an EMPTY inverted
+    index, and every doc would pass with no error."""
+    if not 5000 <= threshold_bp <= 10000:
+        raise ValueError(
+            f"threshold_bp must be in [5000, 10000], got {threshold_bp}"
+        )
+    if size_ratio_bp < 10000:
+        raise ValueError(
+            f"size_ratio_bp must be >= 10000 (container not smaller), "
+            f"got {size_ratio_bp}"
+        )
+    if max_df < min_max_df:
+        raise ValueError(f"max_df must be >= {min_max_df}, got {max_df}")
+
+
+def _shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, shingle_k: int
+) -> DataFrame:
+    """(id, _sh): each doc's distinct shingles as 60-bit hashed ints."""
+    return df.select(
+        F.col(id_col),
+        hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
+    )
+
+
+def _rare_postings(
+    sh: DataFrame, id_col: str, max_df: int, min_df: int = 1
+) -> DataFrame:
+    """(id, _g) postings of the shingles whose document frequency in
+    `sh` lies in [min_df, max_df] — the discriminative inverted index
+    candidate pairs are drawn from (Σ df² <= max_df · Σ df)."""
+    inv = sh.select(F.col(id_col), F.explode("_sh").alias("_g"))
+    n = F.col("_n")
+    keep = n <= int(max_df) if min_df <= 1 else (n >= min_df) & (n <= int(max_df))
+    rare = (
+        inv.groupBy("_g")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(keep)
+        .select("_g")
+    )
+    return inv.join(rare, "_g", "left_semi")
+
+
+def _containment_verify(
+    cand: DataFrame,
+    a_sh: DataFrame,
+    b_sh: DataFrame,
     id_col: str,
-    max_df: int,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Shared containment machinery: given a MATERIALIZED
-    (id, _sh distinct-shingle-array) frame, emit verified candidate
-    pairs (id_a < id_b, n_common, _na, _nb). Candidates come from the
-    df-bounded inverted-index join on discriminative shingles
-    (2 <= df <= max_df; Σ df² <= max_df · Σ df); verification is exact
-    array-intersect under shuffle_hash (the shingle table scales with
-    the corpus — never broadcast it). Used by containment_pairs (float
-    threshold + grid round) and containment_drop (integer bp rules).
+    """Exact verify of (id_a, id_b) candidates against their (id, _sh)
+    sets — id_a's from `a_sh`, id_b's from `b_sh`: emits (id_a, id_b,
+    n_common, _na, _nb). shuffle_hash on both sides: the shingle table
+    scales with the corpus — never broadcast it.
 
     `carry_cols` rides extra per-doc attributes (quality, source ...)
     THROUGH the verify joins as <c>_a / <c>_b — the dup_source_matrix
@@ -316,29 +384,8 @@ def _containment_ex(
     back onto the pair frame afterwards pays pair-keyed shuffles of a
     corpus-sized side, which dominate exactly when pair volume is
     high."""
-    inv = sh.select(F.col(id_col), F.explode("_sh").alias("_g"))
-    rare = (
-        inv.groupBy("_g")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter((F.col("_n") >= 2) & (F.col("_n") <= int(max_df)))
-        .select("_g")
-    )
-    rinv = inv.join(rare, "_g", "left_semi")
-    cand = (
-        rinv.alias("l")
-        .join(
-            rinv.alias("r"),
-            (F.col("l._g") == F.col("r._g"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    a = sh.alias("a").hint("shuffle_hash")
-    b = sh.alias("b").hint("shuffle_hash")
+    a = a_sh.alias("a").hint("shuffle_hash")
+    b = b_sh.alias("b").hint("shuffle_hash")
     inter = F.size(F.array_intersect("a._sh", "b._sh")).cast("long")
     return (
         cand.join(a, cand.id_a == F.col(f"a.{id_col}"))
@@ -353,6 +400,157 @@ def _containment_ex(
             *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry_cols],
         )
     )
+
+
+def _containment_ex(
+    sh: DataFrame,
+    id_col: str,
+    max_df: int,
+    carry_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Self containment machinery: given a MATERIALIZED (id, _sh)
+    frame, emit verified candidate pairs (id_a < id_b, n_common, _na,
+    _nb, carry). Candidates come from the df-bounded inverted-index
+    join on discriminative shingles (2 <= df <= max_df)."""
+    rinv = _rare_postings(sh, id_col, max_df, min_df=2)
+    cand = (
+        rinv.alias("l")
+        .join(
+            rinv.alias("r"),
+            (F.col("l._g") == F.col("r._g"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
+    return _containment_verify(cand, sh, sh, id_col, carry_cols)
+
+
+def _probe_verify(
+    pbase: DataFrame, csh: DataFrame, rcinv: DataFrame, id_col: str
+) -> DataFrame:
+    """Probe-vs-frozen-corpus containment kernel: candidates are the
+    probe docs of `pbase` (id, _sh) sharing a posting of the corpus
+    index `rcinv` (_rare_postings of `csh`), verified exactly against
+    `csh`; emits _containment_verify's (id_a=probe, id_b=corpus,
+    n_common, _na, _nb). The batch operators and the streaming twins
+    call this one function; it never materializes, so a twin may run
+    it inside foreachBatch."""
+    psh = pbase.filter(F.size("_sh") > 0)
+    pinv = psh.select(F.col(id_col), F.explode("_sh").alias("_g"))
+    cand = (
+        pinv.alias("p")
+        .join(rcinv.alias("c"), F.col("p._g") == F.col("c._g"))
+        .select(
+            F.col(f"p.{id_col}").alias("id_a"),
+            F.col(f"c.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
+    return _containment_verify(cand, psh, csh, id_col)
+
+
+def _pairs_decision(ex: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, n_common, contain_ab, contain_ba) for the verified
+    pairs whose max-direction containment is >= threshold."""
+    from webloghunter_spark.functions.similarity import grid_round_expr
+
+    c_ab = F.col("n_common").cast("double") / F.col("_na")
+    c_ba = F.col("n_common").cast("double") / F.col("_nb")
+    return (
+        ex.filter(F.greatest(c_ab, c_ba) >= F.lit(float(threshold)))
+        .select(
+            "id_a",
+            "id_b",
+            "n_common",
+            # stored-value grid, not F.round (similarity.py:45)
+            grid_round_expr(c_ab, 4).alias("contain_ab"),
+            grid_round_expr(c_ba, 4).alias("contain_ba"),
+        )
+    )
+
+
+def _pairs_against(
+    pbase: DataFrame,
+    csh: DataFrame,
+    rcinv: DataFrame,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """containment_pairs_against's decision over _probe_verify."""
+    return _pairs_decision(_probe_verify(pbase, csh, rcinv, id_col), threshold)
+
+
+def _inside(
+    n_in: str, n_out: str, threshold_bp: int, size_ratio_bp: int
+) -> Column:
+    """The exact-integer contained-in rule on a verified pair: the doc
+    with `n_in` shingles lies in the doc with `n_out` shingles."""
+    t = F.lit(int(threshold_bp))
+    r = F.lit(int(size_ratio_bp))
+    return (F.col("n_common") * 10000 >= t * F.col(n_in)) & (
+        F.col(n_out) * 10000 >= r * F.col(n_in)
+    )
+
+
+def _keep_best_drops(
+    scored: DataFrame, id_col: str, threshold_bp: int, size_ratio_bp: int
+) -> DataFrame:
+    """(id, n_containers) over self pairs carrying quality (_qa, _qb):
+    one direction drops the contained doc; mutual containment drops
+    the worse quality (tie -> the higher id; id_a < id_b always, so a
+    tie drops B)."""
+    a_in_b = _inside("_na", "_nb", threshold_bp, size_ratio_bp)
+    b_in_a = _inside("_nb", "_na", threshold_bp, size_ratio_bp)
+    # Mutually exclusive by construction: mutual containment resolves
+    # to exactly one drop side.
+    drop_a = a_in_b & (~b_in_a | (F.col("_qa") < F.col("_qb")))
+    drop_b = b_in_a & (~a_in_b | (F.col("_qa") >= F.col("_qb")))
+    victim = F.when(drop_a, F.col("id_a")).when(drop_b, F.col("id_b"))
+    return (
+        scored.select(victim.alias(id_col))
+        .filter(F.col(id_col).isNotNull())
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("n_containers"))
+    )
+
+
+def _drop_verdicts(stats: DataFrame, drops: DataFrame, id_col: str) -> DataFrame:
+    """One row per doc of the narrow `stats` frame: its columns, then
+    n_containers (drop events naming the doc) and dropped 0/1."""
+    n = F.coalesce("n_containers", F.lit(0))
+    return stats.join(drops, id_col, "left").select(
+        *stats.columns,
+        n.cast("long").alias("n_containers"),
+        (n > 0).cast("long").alias("dropped"),
+    )
+
+
+def _drop_against(
+    pbase: DataFrame,
+    csh: DataFrame,
+    rcinv: DataFrame,
+    id_col: str,
+    threshold_bp: int,
+    size_ratio_bp: int,
+) -> DataFrame:
+    """containment_drop_against's decision over _probe_verify: (id,
+    n_shingles, n_containers, dropped) per probe doc of `pbase`."""
+    drops = (
+        _probe_verify(pbase, csh, rcinv, id_col)
+        .filter(_inside("_na", "_nb", threshold_bp, size_ratio_bp))
+        .groupBy("id_a")
+        .agg(F.count(F.lit(1)).alias("n_containers"))
+        .withColumnRenamed("id_a", id_col)
+    )
+    stats = pbase.select(
+        F.col(id_col),
+        F.size("_sh").cast("long").alias("n_shingles"),
+    )
+    return _drop_verdicts(stats, drops, id_col)
 
 
 def containment_pairs(
@@ -392,32 +590,13 @@ def containment_pairs(
     operator": faster than string shingles at sf0.1 and at the 32x
     control). Counts differ from the string definition only if two
     shingles of one doc pair collide in 60 bits."""
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-    if max_df < 2:
-        raise ValueError(f"max_df must be >= 2, got {max_df}")
+    _check_pairs_args(threshold, max_df, min_max_df=2)
     sh = materialize(
-        df.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        ).filter(F.size("_sh") > 0)
-    )
-    ex = _containment_ex(sh, id_col, max_df)
-    c_ab = F.col("n_common").cast("double") / F.col("_na")
-    c_ba = F.col("n_common").cast("double") / F.col("_nb")
-    from webloghunter_spark.functions.similarity import grid_round_expr
-
-    return (
-        ex.filter(F.greatest(c_ab, c_ba) >= F.lit(float(threshold)))
-        .select(
-            "id_a",
-            "id_b",
-            "n_common",
-            # stored-value grid, not F.round (similarity.py:45)
-            grid_round_expr(c_ab, 4).alias("contain_ab"),
-            grid_round_expr(c_ba, 4).alias("contain_ba"),
+        _shingle_sets(df, text_col, id_col, shingle_k).filter(
+            F.size("_sh") > 0
         )
     )
+    return _pairs_decision(_containment_ex(sh, id_col, max_df), threshold)
 
 
 def containment_pairs_against(
@@ -439,71 +618,28 @@ def containment_pairs_against(
     probe side never contributes to df, so per-batch results don't
     depend on batch slicing). Because probes are only compared against
     the corpus — never each other — the union of per-batch results
-    over any slicing equals the one-shot run exactly; the streaming
-    twin (streaming/incdedup.containment_stream_writer) gets parity
-    for free. Shingles are posting-compressed to 60-bit md5-prefix
-    ints (hashed_shingles_expr; oracle exact by construction — see
-    containment_drop's note)."""
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-    if max_df < 1:
-        raise ValueError(f"max_df must be >= 1, got {max_df}")
-    csh = materialize(
-        corpus.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        ).filter(F.size("_sh") > 0)
-    )
-    cinv = csh.select(F.col(id_col), F.explode("_sh").alias("_g"))
-    keep = (
-        cinv.groupBy("_g")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= int(max_df))
-        .select("_g")
-    )
-    rcinv = cinv.join(keep, "_g", "left_semi")
-    psh = probe.select(
-        F.col(id_col),
-        hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-    ).filter(F.size("_sh") > 0)
-    pinv = psh.select(F.col(id_col), F.explode("_sh").alias("_g"))
-    cand = (
-        pinv.alias("p")
-        .join(rcinv.alias("c"), F.col("p._g") == F.col("c._g"))
-        .select(
-            F.col(f"p.{id_col}").alias("id_a"),
-            F.col(f"c.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    a = psh.alias("a").hint("shuffle_hash")
-    b = csh.alias("b").hint("shuffle_hash")
-    ex = (
-        cand.join(a, cand.id_a == F.col(f"a.{id_col}"))
-        .join(b, cand.id_b == F.col(f"b.{id_col}"))
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("a._sh", "b._sh"))
-            .cast("long")
-            .alias("n_common"),
-            F.size("a._sh").cast("long").alias("_na"),
-            F.size("b._sh").cast("long").alias("_nb"),
-        )
-    )
-    c_ab = F.col("n_common").cast("double") / F.col("_na")
-    c_ba = F.col("n_common").cast("double") / F.col("_nb")
-    from webloghunter_spark.functions.similarity import grid_round_expr
+    over any slicing equals the one-shot run exactly.
 
-    return (
-        ex.filter(F.greatest(c_ab, c_ba) >= F.lit(float(threshold)))
-        .select(
-            "id_a",
-            "id_b",
-            "n_common",
-            grid_round_expr(c_ab, 4).alias("contain_ab"),
-            grid_round_expr(c_ba, 4).alias("contain_ba"),
+    Composition: the corpus side (shingle sets + _rare_postings) is
+    built once, then _pairs_against scores the probe against it. The
+    streaming twin (streaming/incdedup.containment_stream_writer)
+    persists the same corpus side and calls _pairs_against per
+    micro-batch.
+    Shingles are posting-compressed to 60-bit md5-prefix ints
+    (hashed_shingles_expr; oracle exact by construction — see
+    containment_drop's note)."""
+    _check_pairs_args(threshold, max_df)
+    csh = materialize(
+        _shingle_sets(corpus, text_col, id_col, shingle_k).filter(
+            F.size("_sh") > 0
         )
+    )
+    return _pairs_against(
+        _shingle_sets(probe, text_col, id_col, shingle_k),
+        csh,
+        _rare_postings(csh, id_col, max_df),
+        id_col,
+        threshold,
     )
 
 
@@ -531,8 +667,9 @@ def containment_drop_against(
     Because probes are only compared against the corpus — never each
     other — the union of per-batch decisions over ANY slicing equals
     the one-shot run exactly; the streaming twin
-    (streaming/incdedup.containment_drop_stream_writer) gets parity
-    for free.
+    (streaming/incdedup.containment_drop_stream_writer) persists this
+    operator's corpus side and calls the same `_drop_against` per
+    micro-batch.
 
     Output: one row per probe doc —
     (id, n_shingles, n_containers, dropped 0/1).
@@ -556,89 +693,21 @@ def containment_drop_against(
     (hashed_shingles_expr; oracle exact by construction — see
     containment_drop's note).
     """
-    if not 5000 <= threshold_bp <= 10000:
-        raise ValueError(
-            f"threshold_bp must be in [5000, 10000], got {threshold_bp}"
-        )
-    if size_ratio_bp < 10000:
-        raise ValueError(
-            f"size_ratio_bp must be >= 10000 (container not smaller), "
-            f"got {size_ratio_bp}"
-        )
-    if max_df < 1:
-        raise ValueError(f"max_df must be >= 1, got {max_df}")
+    _check_drop_args(threshold_bp, size_ratio_bp, max_df)
     csh = materialize(
-        corpus.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        ).filter(F.size("_sh") > 0)
-    )
-    cinv = csh.select(F.col(id_col), F.explode("_sh").alias("_g"))
-    keep = (
-        cinv.groupBy("_g")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= int(max_df))
-        .select("_g")
-    )
-    rcinv = cinv.join(keep, "_g", "left_semi")
-    pbase = materialize(
-        probe.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
+        _shingle_sets(corpus, text_col, id_col, shingle_k).filter(
+            F.size("_sh") > 0
         )
     )
-    psh = pbase.filter(F.size("_sh") > 0)
-    pinv = psh.select(F.col(id_col), F.explode("_sh").alias("_g"))
-    cand = (
-        pinv.alias("p")
-        .join(rcinv.alias("c"), F.col("p._g") == F.col("c._g"))
-        .select(
-            F.col(f"p.{id_col}").alias("id_a"),
-            F.col(f"c.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    a = psh.alias("a").hint("shuffle_hash")
-    b = csh.alias("b").hint("shuffle_hash")
-    ex = (
-        cand.join(a, cand.id_a == F.col(f"a.{id_col}"))
-        .join(b, cand.id_b == F.col(f"b.{id_col}"))
-        .select(
-            "id_a",
-            F.size(F.array_intersect("a._sh", "b._sh"))
-            .cast("long")
-            .alias("n_common"),
-            F.size("a._sh").cast("long").alias("_na"),
-            F.size("b._sh").cast("long").alias("_nb"),
-        )
-    )
-    t = F.lit(int(threshold_bp))
-    r = F.lit(int(size_ratio_bp))
-    a_in_b = (F.col("n_common") * 10000 >= t * F.col("_na")) & (
-        F.col("_nb") * 10000 >= r * F.col("_na")
-    )
-    drops = (
-        ex.filter(a_in_b)
-        .groupBy("id_a")
-        .agg(F.count(F.lit(1)).alias("n_containers"))
-        .withColumnRenamed("id_a", id_col)
-    )
-    stats = pbase.select(
-        F.col(id_col),
-        F.size("_sh").cast("long").alias("n_shingles"),
-    )
-    return (
-        stats.join(drops, id_col, "left")
-        .select(
-            F.col(id_col),
-            "n_shingles",
-            F.coalesce("n_containers", F.lit(0))
-            .cast("long")
-            .alias("n_containers"),
-            (F.coalesce("n_containers", F.lit(0)) > 0)
-            .cast("long")
-            .alias("dropped"),
-        )
+    # the probe shingles feed both the verify and the per-probe stats
+    pbase = materialize(_shingle_sets(probe, text_col, id_col, shingle_k))
+    return _drop_against(
+        pbase,
+        csh,
+        _rare_postings(csh, id_col, max_df),
+        id_col,
+        threshold_bp,
+        size_ratio_bp,
     )
 
 
@@ -710,17 +779,7 @@ def containment_drop(
     (none observed at any tested scale; the paired oracle hashes
     identically, so exactness holds by construction regardless).
     """
-    if not 5000 <= threshold_bp <= 10000:
-        raise ValueError(
-            f"threshold_bp must be in [5000, 10000], got {threshold_bp}"
-        )
-    if size_ratio_bp < 10000:
-        raise ValueError(
-            f"size_ratio_bp must be >= 10000 (container not smaller), "
-            f"got {size_ratio_bp}"
-        )
-    if max_df < 2:
-        raise ValueError(f"max_df must be >= 2, got {max_df}")
+    _check_drop_args(threshold_bp, size_ratio_bp, max_df, min_max_df=2)
     from webloghunter_spark.functions.text import quality_bp_expr
 
     src = (
@@ -740,26 +799,7 @@ def containment_drop(
     scored = _containment_ex(
         sh, id_col, max_df, carry_cols=("_q",)
     ).withColumnsRenamed({"_q_a": "_qa", "_q_b": "_qb"})
-    t = F.lit(int(threshold_bp))
-    r = F.lit(int(size_ratio_bp))
-    a_in_b = (F.col("n_common") * 10000 >= t * F.col("_na")) & (
-        F.col("_nb") * 10000 >= r * F.col("_na")
-    )
-    b_in_a = (F.col("n_common") * 10000 >= t * F.col("_nb")) & (
-        F.col("_na") * 10000 >= r * F.col("_nb")
-    )
-    # Mutually exclusive by construction: mutual containment resolves
-    # to exactly one drop side (worse quality; tie -> higher id, and
-    # id_a < id_b always, so a tie drops B).
-    drop_a = a_in_b & (~b_in_a | (F.col("_qa") < F.col("_qb")))
-    drop_b = b_in_a & (~a_in_b | (F.col("_qa") >= F.col("_qb")))
-    victim = F.when(drop_a, F.col("id_a")).when(drop_b, F.col("id_b"))
-    drops = (
-        scored.select(victim.alias(id_col))
-        .filter(F.col(id_col).isNotNull())
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_containers"))
-    )
+    drops = _keep_best_drops(scored, id_col, threshold_bp, size_ratio_bp)
     srcname = ["source"] if source_col is not None else []
     stats = base.select(
         F.col(id_col),
@@ -767,21 +807,7 @@ def containment_drop(
         F.size("_sh").cast("long").alias("n_shingles"),
         F.col("_q").alias("quality_bp"),
     )
-    return (
-        stats.join(drops, id_col, "left")
-        .select(
-            F.col(id_col),
-            *srcname,
-            "n_shingles",
-            "quality_bp",
-            F.coalesce("n_containers", F.lit(0))
-            .cast("long")
-            .alias("n_containers"),
-            (F.coalesce("n_containers", F.lit(0)) > 0)
-            .cast("long")
-            .alias("dropped"),
-        )
-    )
+    return _drop_verdicts(stats, drops, id_col)
 
 
 def simhash_udf(shingle_k: int = 3, bits: int = 16):
@@ -1650,6 +1676,41 @@ def component_representatives(
     )
 
 
+def _band_candidates(nb: DataFrame, cb: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (id_a=new, id_b=corpus) pairs sharing an LSH band hash:
+    the equi-join of two lsh_band_signatures frames on (band, bh)."""
+    n, c = nb.alias("n"), cb.alias("c")
+    return (
+        n.join(
+            c,
+            (F.col("n.band") == F.col("c.band"))
+            & (F.col("n.bh") == F.col("c.bh")),
+        )
+        .select(
+            F.col(f"n.{id_col}").alias("id_a"),
+            F.col(f"c.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
+
+
+def _near_drop(
+    new: DataFrame,
+    cand: DataFrame,
+    new_sh: DataFrame,
+    corpus_sh: DataFrame,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """incremental_near_dedup's decision: the rows of `new` with no
+    band candidate in `cand` whose exact Jaccard (over the (id, _sh)
+    sets `new_sh` / `corpus_sh`) reaches threshold. Never
+    materializes, so the streaming twin runs it per micro-batch."""
+    sims = _jaccard_verify(cand, new_sh, corpus_sh, id_col, threshold)
+    drop = sims.select(F.col("id_a").alias(id_col)).distinct()
+    return new.join(drop, id_col, "left_anti")
+
+
 def incremental_near_dedup(
     new: DataFrame,
     corpus: DataFrame,
@@ -1676,31 +1737,23 @@ def incremental_near_dedup(
     left-anti drop. Only documents that actually appear in a candidate
     pair are shingled for the exact-Jaccard pass (a left_semi prunes
     new ∪ corpus to the candidate id set first), so the corpus is
-    never re-tokenized wholesale per ingest batch — the property the
-    streaming twin (streaming/incdedup.py) gets from its persisted
-    shingle index, delivered here by pruning instead."""
+    never re-tokenized wholesale per ingest batch.
+
+    Composition: _band_candidates, then _near_drop. The streaming twin
+    (streaming/incdedup.incremental_dedup_stream_writer) calls the same
+    two functions per micro-batch; it persists the corpus band
+    signatures and shingle sets once instead of pruning."""
     nb = materialize(
         lsh_band_signatures(
             new, text_col, id_col, num_hashes, band_size, shingle_k
         )
-    ).alias("n")
+    )
     cb = lsh_band_signatures(
         corpus, text_col, id_col, num_hashes, band_size, shingle_k
-    ).alias("c")
+    )
     # cand feeds three consumers (the id-universe prune below plus both
     # sides of the pair join) — materialize so the banded join runs once
-    cand = materialize(
-        nb.join(
-            cb,
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.bh") == F.col("c.bh")),
-        )
-        .select(
-            F.col(f"n.{id_col}").alias("id_a"),
-            F.col(f"c.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    cand = materialize(_band_candidates(nb, cb, id_col))
     cand_ids = (
         cand.select(F.col("id_a").alias(id_col))
         .union(cand.select(F.col("id_b").alias(id_col)))
@@ -1711,12 +1764,9 @@ def incremental_near_dedup(
         .union(corpus.select(id_col, text_col))
         .join(cand_ids, id_col, "left_semi")
     )
-    sims = ngram_jaccard_pairs(
-        u, cand, text_col=text_col, id_col=id_col,
-        shingle_k=shingle_k, threshold=threshold,
-    )
-    drop = sims.select(F.col("id_a").alias(id_col)).distinct()
-    return new.join(drop, id_col, "left_anti")
+    # the pruned shingle table feeds both sides of the pair join
+    sh = materialize(_shingle_sets(u, text_col, id_col, shingle_k))
+    return _near_drop(new, cand, sh, sh, id_col, threshold)
 
 
 def dup_source_matrix(
@@ -2009,17 +2059,7 @@ def winnow_containment_drop(
     never all-pairs); verification is exact array-intersect under
     shuffle_hash (the fingerprint table scales with the corpus —
     never broadcast it)."""
-    if not 5000 <= threshold_bp <= 10000:
-        raise ValueError(
-            f"threshold_bp must be in [5000, 10000], got {threshold_bp}"
-        )
-    if size_ratio_bp < 10000:
-        raise ValueError(
-            f"size_ratio_bp must be >= 10000 (container not smaller), "
-            f"got {size_ratio_bp}"
-        )
-    if max_df < 2:
-        raise ValueError(f"max_df must be >= 2, got {max_df}")
+    _check_drop_args(threshold_bp, size_ratio_bp, max_df, min_max_df=2)
     from webloghunter_spark.functions.text import (
         quality_bp_expr,
         with_winnowed_fingerprints,
@@ -2048,44 +2088,13 @@ def winnow_containment_drop(
     scored = _containment_ex(
         sh, id_col, max_df, carry_cols=("_q",)
     ).withColumnsRenamed({"_q_a": "_qa", "_q_b": "_qb"})
-    t = F.lit(int(threshold_bp))
-    r = F.lit(int(size_ratio_bp))
-    a_in_b = (F.col("n_common") * 10000 >= t * F.col("_na")) & (
-        F.col("_nb") * 10000 >= r * F.col("_na")
-    )
-    b_in_a = (F.col("n_common") * 10000 >= t * F.col("_nb")) & (
-        F.col("_na") * 10000 >= r * F.col("_nb")
-    )
-    # mutually exclusive by construction (containment_drop's rule):
-    # mutual containment resolves to exactly one drop side
-    drop_a = a_in_b & (~b_in_a | (F.col("_qa") < F.col("_qb")))
-    drop_b = b_in_a & (~a_in_b | (F.col("_qa") >= F.col("_qb")))
-    victim = F.when(drop_a, F.col("id_a")).when(drop_b, F.col("id_b"))
-    drops = (
-        scored.select(victim.alias(id_col))
-        .filter(F.col(id_col).isNotNull())
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_containers"))
-    )
+    drops = _keep_best_drops(scored, id_col, threshold_bp, size_ratio_bp)
     stats = base.select(
         F.col(id_col),
         F.size("_sh").cast("long").alias("n_fps"),
         F.col("_q").alias("quality_bp"),
     )
-    return (
-        stats.join(drops, id_col, "left")
-        .select(
-            F.col(id_col),
-            "n_fps",
-            "quality_bp",
-            F.coalesce("n_containers", F.lit(0))
-            .cast("long")
-            .alias("n_containers"),
-            (F.coalesce("n_containers", F.lit(0)) > 0)
-            .cast("long")
-            .alias("dropped"),
-        )
-    )
+    return _drop_verdicts(stats, drops, id_col)
 
 
 def dedup_keep_best(

@@ -94,7 +94,33 @@ def quality_gate(
     from GATE_RULES; keep=true rows have reason=''.
 
     `min_avg_ll=None` disables the LM rule (and its join entirely —
-    the gate is then a single scan pass)."""
+    the gate is then a single scan pass). With the rule on, the LM is
+    self-trained on `df` (bigram_logprob); the streaming twin scores
+    under a frozen model instead and shares the verdict, _gate_verdicts."""
+    ll = None
+    if min_avg_ll is not None:
+        ll = bigram_logprob(df, text_col, id_col, alpha=lm_alpha)
+    return _gate_verdicts(
+        df, ll, text_col, id_col, min_tokens, max_tokens,
+        max_nonprintable_bp, min_quality_bp, min_avg_ll,
+    )
+
+
+def _gate_verdicts(
+    df: DataFrame,
+    ll: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    min_tokens: int,
+    max_tokens: int,
+    max_nonprintable_bp: int,
+    min_quality_bp: int,
+    min_avg_ll: float | None,
+) -> DataFrame:
+    """quality_gate's (id, keep, reason) rule stack over `df`, with the
+    LM rule reading `avg_ll` from the per-doc score frame `ll` (left
+    joined on id; a doc without a score fails it). `ll=None` leaves
+    the LM rule out."""
     c = F.col(text_col)
     ntok, nchar, npr, qbp = _gate_metrics(c)
 
@@ -105,11 +131,8 @@ def quality_gate(
         npr.alias("_npr"),
         qbp.alias("_qbp"),
     )
-    if min_avg_ll is not None:
-        ll = bigram_logprob(df, text_col, id_col, alpha=lm_alpha).select(
-            id_col, "avg_ll"
-        )
-        out = out.join(ll, id_col, "left")
+    if ll is not None:
+        out = out.join(ll.select(id_col, "avg_ll"), id_col, "left")
 
     reason = (
         F.when(F.col("_ntok") < min_tokens, "too_short")
@@ -120,7 +143,7 @@ def quality_gate(
         )
         .when(F.col("_qbp") < min_quality_bp, "low_quality")
     )
-    if min_avg_ll is not None:
+    if ll is not None:
         reason = reason.when(
             F.col("avg_ll").isNull() | (F.col("avg_ll") < min_avg_ll), "low_lm"
         )

@@ -245,24 +245,41 @@ def oov_rate(
     per-doc OOV count via an explode + broadcast LEFT ANTI join
     against the k-row vocab. The explode's shuffle is the groupBy
     back to doc_id, bounded by token volume; at 100 TB prefer a
-    precomputed static vocab and skip pass one."""
-    if vocab_size <= 0:
-        raise ValueError(f"vocab_size must be > 0, got {vocab_size}")
+    precomputed static vocab and skip pass one (the streaming twin,
+    streaming/oov.py, does exactly that: _top_vocab once, _oov_scores
+    per micro-batch)."""
     toks = df.select(
         F.col(id_col), F.explode(tokens_expr(text_col)).alias("_tok")
     )
-    vocab = (
+    return _oov_scores(df, toks, _top_vocab(toks, vocab_size), id_col, text_col)
+
+
+def _top_vocab(toks: DataFrame, vocab_size: int) -> DataFrame:
+    """The `vocab_size` most frequent `_tok` values of a token frame
+    (count DESC, token ASC), as a one-column `_tok` frame."""
+    if vocab_size <= 0:
+        raise ValueError(f"vocab_size must be > 0, got {vocab_size}")
+    return (
         toks.groupBy("_tok")
         .agg(F.count(F.lit(1)).alias("_n"))
         .orderBy(F.col("_n").desc(), F.col("_tok"))
         .limit(vocab_size)
         .select("_tok")
     )
+
+
+def _oov_scores(
+    df: DataFrame, toks: DataFrame, vocab: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """oov_rate's per-doc scoring of `df` (whose (id, _tok) rows are
+    `toks`) against a `_tok` vocabulary frame small enough to
+    broadcast."""
     oov = (
         toks.join(F.broadcast(vocab), "_tok", "left_anti")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_oov"))
     )
+    n_oov = F.coalesce(F.col("n_oov"), F.lit(0))
     return (
         df.select(
             id_col, token_count_expr(text_col).cast("long").alias("ntok")
@@ -271,15 +288,10 @@ def oov_rate(
         .select(
             id_col,
             "ntok",
-            F.coalesce(F.col("n_oov"), F.lit(0)).alias("n_oov"),
+            n_oov.alias("n_oov"),
             F.when(
                 F.col("ntok") > 0,
-                F.floor(
-                    F.coalesce(F.col("n_oov"), F.lit(0))
-                    * 10000.0
-                    / F.col("ntok")
-                    + F.lit(0.5)
-                ),
+                F.floor(n_oov * 10000.0 / F.col("ntok") + F.lit(0.5)),
             )
             .otherwise(F.lit(0))
             .cast("long")

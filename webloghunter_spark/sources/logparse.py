@@ -79,8 +79,6 @@ LOG_FORMATS: list[tuple[str, str, dict[str, int]]] = [
     ),
 ]
 
-FIELDS = ["ip", "timestamp", "method", "request_uri", "status", "resp_size", "referrer", "user_agent", "extra", "time_taken"]
-
 # apache_ssl is COMMENTED OUT in the reference's format list
 # (parser.py:15) but its special case — no status group, assume 200
 # (parser.py:146-147) — is kept; here it is opt-in via

@@ -13,16 +13,22 @@ tests/test_batch_stream_parity.py).
 
 Frozen artifacts, built ONCE per stream start and persisted in the
 closure (never session.materialize(), whose registry is drained by
-batch callers — the stream twins' convention):
+batch callers — the stream twins' convention), and the kernel each
+stage runs per micro-batch — the one curate_against runs:
 
-    1. quality gate        none (row-local, stateless)
-    2. exact-against       corpus normalized-key md5 digests
-    3. near-against        the incremental_dedup_stream_writer closure
-                           (corpus LSH band signatures + shingle sets)
-    4. containment-against the containment_drop_stream_writer closure
-                           (corpus 60-bit hashed-posting sets +
-                           df-capped inverted index)
-    5. decontamination     the frozen eval n-gram set
+    1. quality gate        none            gate_keep_expr filter
+    2. exact-against       corpus key md5s _exact_against
+    3. near-against        corpus LSH band _near_drop
+                           signatures +
+                           shingle sets
+    4. containment-against corpus shingle  _drop_against
+                           sets + df-capped
+                           postings
+    5. decontamination     eval n-gram set decontaminate
+
+The stages chain as DataFrames: a micro-batch's survivors flow from
+stage to stage on the executors, and only the final survivor ids reach
+the driver, for the sink.
 
 At-least-once replay is safe with zero cross-batch state: every
 stage's decisions are deterministic against the frozen artifacts, so
@@ -45,8 +51,20 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+
+from webloghunter_spark.pipelines.curate import (
+    _corpus_keys,
+    _exact_against,
+    _undropped,
+)
+from webloghunter_spark.pipelines.decontam import decontaminate, eval_shingle_set
+from webloghunter_spark.pipelines.gate import gate_keep_expr
+from webloghunter_spark.streaming.incdedup import (
+    _drop_stage,
+    _filled,
+    _near_stage,
+    _sorted_rows,
+)
 
 
 def curate_against_stream_writer(
@@ -73,146 +91,67 @@ def curate_against_stream_writer(
     curate_against's verbatim, including the documented coupling:
     `near_dedup_threshold=None` skips BOTH exact-against and
     near-against. Exposes `.release` to free every frozen artifact
-    after stream stop.
+    after stream stop."""
+    steps: list[Callable[[DataFrame], DataFrame]] = []
+    frozen: list[DataFrame] = []
 
-    Stage chaining is id-list based: each stateful stage's verdicts
-    are collected (micro-batch-bounded — the per-stage twins already
-    collect to sink) and the survivor ids re-enter as a left-semi
-    join frame, so batch text never round-trips through the driver.
+    if min_quality_bp is not None:
+        keep = gate_keep_expr(
+            text_col,
+            min_tokens=min_tokens,
+            max_tokens=max_tokens,
+            min_quality_bp=min_quality_bp,
+        )
+        steps.append(lambda cur: cur.filter(keep))
 
-    DISTRIBUTED-SINK DESIGN NOTE (round-14, the production-batch-size
-    path — no code change here because the twins' sink CONTRACT is a
-    driver callback and the registry twin is pinned to it): the id
-    round-trip exists only because each stage's verdict frame funnels
-    through `sink(rows, batch_id)`. At production micro-batch sizes
-    the same composition chains WITHOUT any driver materialization:
-    have each stateful stage write its survivor-id FRAME to durable
-    storage partitioned by batch_id (or foreachBatch-local
-    `batch.persist()` the verdict frame), left-semi join the NEXT
-    stage against that frame directly, and let the terminal stage
-    write surviving rows to the output table — ids then flow
-    executor-to-executor and the driver holds only batch_id metadata.
-    The per-stage twins already expose frame-level machinery
-    (`*_stream_writer` internals compute verdicts as DataFrames before
-    collecting), so the swap is a sink-contract variant (sink receives
-    a DataFrame, not rows), not an algorithm change; parity and
-    at-least-once replay arguments carry over unchanged because stage
-    decisions stay deterministic against the frozen artifacts.
-    """
-    from webloghunter_spark.functions.text import normalized_text_expr
-    from webloghunter_spark.pipelines.decontam import eval_shingle_set
-    from webloghunter_spark.streaming.incdedup import (
-        containment_drop_stream_writer,
-        incremental_dedup_stream_writer,
-    )
-
-    ckeys = None
-    near_fn = None
-    near_cap: list = [None]
     if near_dedup_threshold is not None:
-        ckeys = (
-            corpus.select(
-                F.md5(normalized_text_expr(text_col)).alias("_k")
-            )
-            .distinct()
-            .persist()
+        ckeys = _corpus_keys(corpus, text_col).persist()
+        frozen += _filled(ckeys)
+        steps.append(lambda cur: _exact_against(cur, ckeys, text_col, id_col))
+        near, near_frozen = _near_stage(
+            corpus, text_col, id_col, near_dedup_threshold,
+            dedup_num_hashes, dedup_band_size, dedup_shingle_k,
         )
-        ckeys.count()  # settle the frozen digest set
-        near_fn = incremental_dedup_stream_writer(
-            lambda rows, bid: near_cap.__setitem__(0, rows),
-            corpus,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=near_dedup_threshold,
-            num_hashes=dedup_num_hashes,
-            band_size=dedup_band_size,
-            shingle_k=dedup_shingle_k,
-        )
+        frozen += near_frozen
+        steps.append(near)
 
-    cont_fn = None
-    cont_cap: list = [None]
     if containment_threshold_bp is not None:
-        cont_fn = containment_drop_stream_writer(
-            lambda rows, bid: cont_cap.__setitem__(0, rows),
-            corpus,
-            text_col=text_col,
-            id_col=id_col,
-            shingle_k=dedup_shingle_k,
-            threshold_bp=containment_threshold_bp,
-            size_ratio_bp=containment_size_ratio_bp,
-            max_df=containment_max_df,
+        drop, drop_frozen = _drop_stage(
+            corpus, text_col, id_col, dedup_shingle_k,
+            containment_threshold_bp, containment_size_ratio_bp,
+            containment_max_df,
         )
+        frozen += drop_frozen
+        steps.append(lambda cur: _undropped(cur, drop(cur), id_col))
 
-    grams = None
     if eval_df is not None:
         grams = eval_shingle_set(eval_df, text_col, decontam_n).persist()
-        grams.count()  # settle the frozen eval gram set
-
-    def _ids_frame(src: DataFrame, ids: list) -> DataFrame:
-        sch = StructType([src.schema[id_col]])
-        return src.sparkSession.createDataFrame(
-            [(i,) for i in ids], sch
+        frozen += _filled(grams)
+        steps.append(
+            lambda cur: decontaminate(
+                cur, id_col=id_col, text_col=text_col, n=decontam_n,
+                eval_grams=grams,
+            )
         )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        cur = batch_df
-
-        if min_quality_bp is not None:
-            from webloghunter_spark.pipelines.gate import gate_keep_expr
-
-            # row-local gate filter — the batch twin's form (§2.4)
-            cur = cur.filter(
-                gate_keep_expr(
-                    text_col,
-                    min_tokens=min_tokens,
-                    max_tokens=max_tokens,
-                    min_quality_bp=min_quality_bp,
-                )
-            )
-
-        if near_dedup_threshold is not None:
-            keyed = cur.select(
-                F.col(id_col),
-                F.md5(normalized_text_expr(text_col)).alias("_k"),
-            )
-            hit = keyed.join(ckeys, "_k", "left_semi").select(id_col)
-            cur = cur.join(hit, id_col, "left_anti")
-
-            near_cap[0] = None
-            near_fn(cur, batch_id)
-            surv = [r[0] for r in (near_cap[0] or [])]
-            cur = cur.join(_ids_frame(cur, surv), id_col, "left_semi")
-
-        if containment_threshold_bp is not None:
-            cont_cap[0] = None
-            cont_fn(cur, batch_id)
-            surv = [r[0] for r in (cont_cap[0] or []) if r[3] == 0]
-            cur = cur.join(_ids_frame(cur, surv), id_col, "left_semi")
-
-        if eval_df is not None:
-            from webloghunter_spark.pipelines.decontam import decontaminate
-
-            cur = decontaminate(
-                cur,
-                id_col=id_col,
-                text_col=text_col,
-                n=decontam_n,
-                eval_grams=grams,
-            )
-
-        rows = cur.select(id_col).collect()
-        rows.sort(key=lambda r: (r[0] is not None, r[0]))
-        sink([tuple(r) for r in rows], batch_id)
+        # a step reads its input more than once, so every step's input
+        # but the batch's own is persisted for this batch only (a local
+        # barrier, released before process returns)
+        held = []
+        try:
+            for i, step in enumerate(steps):
+                if i:
+                    held.append(batch_df.persist())
+                batch_df = step(batch_df)
+            sink(_sorted_rows(batch_df.select(id_col)), batch_id)
+        finally:
+            for f in held:
+                f.unpersist()
 
     def release() -> None:
-        if ckeys is not None:
-            ckeys.unpersist()
-        if near_fn is not None:
-            near_fn.release()
-        if cont_fn is not None:
-            cont_fn.release()
-        if grams is not None:
-            grams.unpersist()
+        for f in frozen:
+            f.unpersist()
 
     process.release = release
     return process

@@ -7,7 +7,8 @@ corpus-relative and needs a bigram model; online self-training would
 make early verdicts depend on arrival order, so the streaming form
 takes a FROZEN model trained batch-side (the standard CCNet shape: the
 LM is trained on a reference corpus, not the stream) and joins it per
-micro-batch via foreachBatch, reusing the persisted count tables.
+micro-batch via foreachBatch, reusing the persisted count tables
+(functions/lm.bigram_lm_model / bigram_logprob_frozen).
 
 With `lm=None` the gate is a pure stateless stream transformation —
 use `quality_gate_stream` directly in a writeStream pipeline. With a
@@ -21,9 +22,8 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webloghunter_spark.functions.lm import bigram_logprob
-from webloghunter_spark.functions.similarity import grid_round_expr
-from webloghunter_spark.pipelines.gate import quality_gate
+from webloghunter_spark.functions.lm import bigram_lm_model, bigram_logprob_frozen
+from webloghunter_spark.pipelines.gate import _gate_verdicts, quality_gate
 
 
 def quality_gate_stream(
@@ -56,83 +56,32 @@ def quality_gate_stream_writer(
     lm_alpha: float = 0.5,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch form with the LM rule: the bigram model is trained
-    ONCE on `ref_corpus` (batch) and applied to each micro-batch —
-    verdicts are arrival-order independent, unlike self-training on the
-    stream. Per batch: counting rules first (row-local), then the LM
-    join against the frozen model for rows the cheap rules kept alive.
-    """
-    from webloghunter_spark.functions.text import tokens_expr
-
-    # frozen model: counts + vocab from the reference corpus. The
-    # bigram frame feeds BOTH count aggregates — persist it so the
-    # extraction runs once (the exact lesson functions/lm.py codifies),
-    # then release it: only cb/cu stay resident for the stream's life.
-    # cb/cu are persist()ed directly and held by the closure, NOT via
-    # session.materialize(): the global registry is drained by
-    # release_materialized() after unrelated batch queries (bench.py
-    # does so per query), which would silently unpersist a live
-    # stream's model and degrade "trained once" into a full recompute
-    # per micro-batch (matches streaming/decontam.py's grams.persist()).
-    from webloghunter_spark.functions.lm import _bigram_rows
-
-    bi = _bigram_rows(ref_corpus, text_col, id_col).persist()
-    cb = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("_cb")).persist()
-    cu = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("_cu")).persist()
-    cb.count(), cu.count()  # settle both off the cached frame
-    bi.unpersist()
-    v_rows = (
-        ref_corpus.select(
-            F.explode(F.transform(tokens_expr(text_col), lambda t: F.lower(t))).alias("_tok")
-        ).agg(F.count_distinct("_tok").alias("_v")).collect()
-    )
-    v = int(v_rows[0][0])
-    a = float(lm_alpha)
+    ONCE on `ref_corpus` (bigram_lm_model, persisted in the closure —
+    not session.materialize(), whose registry batch callers drain) and
+    applied to each micro-batch — verdicts are arrival-order
+    independent, unlike self-training on the stream. Per batch the
+    docs are scored by bigram_logprob_frozen and judged by
+    quality_gate's own rule stack (_gate_verdicts). `.release` frees
+    the model after stream stop."""
+    model = bigram_lm_model(ref_corpus, text_col, id_col)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        base = quality_gate(
-            batch_df, text_col, id_col, min_tokens, max_tokens,
-            max_nonprintable_bp, min_quality_bp, min_avg_ll=None,
+        ll = bigram_logprob_frozen(
+            batch_df, model, text_col, id_col, alpha=lm_alpha
         )
-        probe = _bigram_rows(batch_df, text_col, id_col)
-        scored = (
-            probe.join(cb, ["w1", "w2"], "left")
-            .join(cu, "w1", "left")
-            .select(
-                id_col,
-                F.log(
-                    (F.coalesce(F.col("_cb"), F.lit(0)) + F.lit(a))
-                    / (F.coalesce(F.col("_cu"), F.lit(0)) + F.lit(a * v))
-                ).alias("_lp"),
-            )
-            .groupBy(id_col)
-            # grid, matching the batch side's grid_round_expr (the
-            # batch lm.py migrated off F.round; the twin must follow
-            # or a boundary value breaks stream/batch parity)
-            .agg(grid_round_expr(F.avg("_lp"), 4).alias("avg_ll"))
+        sink(
+            _gate_verdicts(
+                batch_df, ll, text_col, id_col, min_tokens, max_tokens,
+                max_nonprintable_bp, min_quality_bp, min_avg_ll,
+            ),
+            batch_id,
         )
-        out = (
-            base.join(scored, id_col, "left")
-            .select(
-                id_col,
-                F.when(~F.col("keep"), F.col("keep")).otherwise(
-                    F.col("avg_ll").isNotNull() & (F.col("avg_ll") >= min_avg_ll)
-                ).alias("keep"),
-                F.when(F.col("reason") != "", F.col("reason"))
-                .when(
-                    F.col("avg_ll").isNull() | (F.col("avg_ll") < min_avg_ll),
-                    F.lit("low_lm"),
-                )
-                .otherwise(F.lit(""))
-                .alias("reason"),
-            )
-        )
-        sink(out, batch_id)
 
     def release() -> None:
-        cb.unpersist()
-        cu.unpersist()
+        model["cb"].unpersist()
+        model["cu"].unpersist()
 
-    process.release = release  # free the frozen model after stream stop
+    process.release = release
     return process
 
 

@@ -1,16 +1,19 @@
-"""Streaming twin of pipelines/dedup.incremental_near_dedup — the
-continuous-ingest near-dedup gate.
+"""Streaming twins of the frozen-corpus dedup operators of
+pipelines/dedup.py: incremental_near_dedup, containment_pairs_against
+and containment_drop_against.
 
-The accepted corpus's LSH band signatures are the FROZEN INDEX
-(computed once, persisted for the stream's life — the gate/decontam
-frozen-model discipline); each micro-batch signatures only ITSELF,
-joins the index on (band, bh), exact-Jaccards the candidates, and
-forwards survivors to the sink. Because the operator is ASYMMETRIC
-(batch docs are only compared against the corpus, never against each
-other or other batches), the union of per-batch survivor sets equals
-the batch operator over the union of all batches EXACTLY — parity is
-free, like the sum/max-merge twins (hll, mix), with no cross-batch
-state at all.
+Each batch operator is a corpus side, built once, plus a scoring
+kernel. A twin persist()s the corpus side for the stream's life (NOT
+session.materialize(), whose registry batch callers drain) and calls
+the batch operator's own kernel on every micro-batch; the kernels
+never materialize, so nothing is cached per batch. The operators are
+ASYMMETRIC (batch docs are compared only against the corpus, never
+against each other or other batches), so the union of per-batch sink
+rows over ANY slicing equals the batch operator over the union of all
+batches — with no cross-batch state. A replayed batch re-emits the
+same rows: the at-least-once-correct behavior (an early-return guard
+would LOSE rows when Spark replays a batch whose sink failed
+mid-write).
 
 Index freshness is the caller's policy: fold accepted survivors back
 into the index offline and restart the stream with the new index
@@ -25,7 +28,136 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webloghunter_spark.pipelines.dedup import lsh_band_signatures
+from webloghunter_spark.pipelines.dedup import (
+    _band_candidates,
+    _check_drop_args,
+    _check_pairs_args,
+    _drop_against,
+    _near_drop,
+    _pairs_against,
+    _rare_postings,
+    _shingle_sets,
+    lsh_band_signatures,
+)
+
+# A stage: (score, frozen). score(frame) -> DataFrame scores a frame
+# against the persisted corpus-side frames `frozen`.
+_Stage = tuple[Callable[[DataFrame], DataFrame], tuple[DataFrame, ...]]
+
+
+def _filled(*frames: DataFrame) -> tuple[DataFrame, ...]:
+    """Run each (already persist()ed) frozen frame once so its cache is
+    full before the first micro-batch."""
+    for f in frames:
+        f.count()
+    return frames
+
+
+def _sorted_rows(df: DataFrame) -> list[tuple]:
+    """`df` collected as tuples, sorted column by column with NULLs
+    first (ids can be NULL in bad-record reality) — the twins' sink
+    order."""
+    rows = [tuple(r) for r in df.collect()]
+    rows.sort(key=lambda r: [(v is not None, v) for v in r])
+    return rows
+
+
+def _stage_writer(
+    sink: Callable[[list[tuple], int], None], stage: _Stage
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch function: `sink(_sorted_rows(score(batch)),
+    batch_id)` per micro-batch. `.release` unpersists the frozen
+    frames after stream stop."""
+    score, frozen = stage
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        sink(_sorted_rows(score(batch_df)), batch_id)
+
+    def release() -> None:
+        for f in frozen:
+            f.unpersist()
+
+    process.release = release
+    return process
+
+
+def _near_stage(
+    corpus: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float,
+    num_hashes: int,
+    band_size: int,
+    shingle_k: int,
+) -> _Stage:
+    """incremental_near_dedup against a persisted corpus side (LSH band
+    signatures + 60-bit hashed shingle sets): score(batch) is the
+    batch's surviving rows."""
+    cb = lsh_band_signatures(
+        corpus, text_col, id_col, num_hashes, band_size, shingle_k
+    ).persist()
+    csh = _shingle_sets(corpus, text_col, id_col, shingle_k).persist()
+
+    def score(batch: DataFrame) -> DataFrame:
+        nb = lsh_band_signatures(
+            batch, text_col, id_col, num_hashes, band_size, shingle_k
+        )
+        return _near_drop(
+            batch,
+            _band_candidates(nb, cb, id_col),
+            _shingle_sets(batch, text_col, id_col, shingle_k),
+            csh,
+            id_col,
+            threshold,
+        )
+
+    return score, _filled(cb, csh)
+
+
+def _containment_stage(
+    corpus: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_k: int,
+    max_df: int,
+    decide: Callable[[DataFrame, DataFrame, DataFrame], DataFrame],
+) -> _Stage:
+    """The containment-against corpus side, persisted: the corpus's
+    non-empty hashed shingle sets and their df-capped postings
+    (_rare_postings). score(batch) is `decide(pbase, csh, rcinv)` on
+    the batch's (id, _sh) frame."""
+    csh = (
+        _shingle_sets(corpus, text_col, id_col, shingle_k)
+        .filter(F.size("_sh") > 0)
+        .persist()
+    )
+    rcinv = _rare_postings(csh, id_col, max_df).persist()
+
+    def score(batch: DataFrame) -> DataFrame:
+        pbase = _shingle_sets(batch, text_col, id_col, shingle_k)
+        return decide(pbase, csh, rcinv)
+
+    return score, _filled(csh, rcinv)
+
+
+def _drop_stage(
+    corpus: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_k: int,
+    threshold_bp: int,
+    size_ratio_bp: int,
+    max_df: int,
+) -> _Stage:
+    """containment_drop_against as a stage: score(batch) is one
+    (id, n_shingles, n_containers, dropped) row per batch doc."""
+    _check_drop_args(threshold_bp, size_ratio_bp, max_df)
+    return _containment_stage(
+        corpus, text_col, id_col, shingle_k, max_df,
+        lambda pbase, csh, rcinv: _drop_against(
+            pbase, csh, rcinv, id_col, threshold_bp, size_ratio_bp
+        ),
+    )
 
 
 def incremental_dedup_stream_writer(
@@ -37,102 +169,16 @@ def incremental_dedup_stream_writer(
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_k: int = 3,
-    track_survivors: bool = False,
 ) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function. Per micro-batch, `sink(rows,
-    batch_id)` receives the batch's SURVIVING (id,) rows. The frozen
-    corpus index (band signatures + distinct shingle sets) is
-    persist()ed in the closure — NOT session.materialize(), whose
-    registry is drained per-query by bench/batch callers and would
-    silently unpersist a live stream's index. Exposes `.release` to
-    free it after stream stop, and `.survivor_count` (running total).
-
-    `track_survivors=True` additionally accumulates every surviving
-    id into `.survivors` — O(all rows ever seen) DRIVER memory, for
-    tests/small runs only; a continuous-ingest deployment keeps it
-    off (the sink already receives each batch's survivors) so the
-    closure holds only bounded state, like the other stream twins."""
-    cb = lsh_band_signatures(
-        corpus, text_col, id_col, num_hashes, band_size, shingle_k
-    ).persist()
-    from webloghunter_spark.pipelines.dedup import hashed_shingles_expr
-
-    # 60-bit hashed postings, matching ngram_jaccard_pairs' batch
-    # verify (round-13 migration): the frozen corpus shingle index and
-    # the per-batch probe frames move 8-byte ints, not strings
-    csh = corpus.select(
-        F.col(id_col),
-        hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-    ).persist()
-    cb.count(), csh.count()  # settle the frozen index
-
-    survivors: list = []
-    counts = {"n": 0}
-    # bounded replay guard: batch_ids are monotone within a query, so
-    # one high-water int gives identical at-least-once protection
-    # without accumulating a set entry per micro-batch forever
-    last_seen = [-1]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        nb = lsh_band_signatures(
-            batch_df, text_col, id_col, num_hashes, band_size, shingle_k
-        ).alias("n")
-        cand = (
-            nb.join(
-                cb.alias("c"),
-                (F.col("n.band") == F.col("c.band"))
-                & (F.col("n.bh") == F.col("c.bh")),
-            )
-            .select(
-                F.col(f"n.{id_col}").alias("id_a"),
-                F.col(f"c.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        bsh = batch_df.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        )
-        a = bsh.alias("a")
-        b = csh.alias("b")
-        sims = (
-            cand.join(a, cand.id_a == F.col(f"a.{id_col}"))
-            .join(b, cand.id_b == F.col(f"b.{id_col}"))
-            .select(
-                "id_a",
-                (
-                    F.size(F.array_intersect("a._sh", "b._sh")).cast("double")
-                    / F.size(F.array_union("a._sh", "b._sh")).cast("double")
-                ).alias("j"),
-            )
-            .filter(F.col("j") >= threshold)
-            .select(F.col("id_a").alias(id_col))
-            .distinct()
-        )
-        kept = [
-            (r[id_col],)
-            for r in batch_df.join(sims, id_col, "left_anti")
-            .select(id_col)
-            .collect()
-        ]
-        # foreachBatch is at-least-once: the frozen index makes `kept`
-        # deterministic per batch, so a replay re-emits the same rows,
-        # but the running counter / survivor list must not re-add them.
-        if batch_id > last_seen[0]:
-            last_seen[0] = batch_id
-            counts["n"] += len(kept)
-            if track_survivors:
-                survivors.extend(k for k, in kept)
-        sink(kept, batch_id)
-
-    def release() -> None:
-        cb.unpersist()
-        csh.unpersist()
-
-    process.release = release
-    process.survivors = survivors
-    process.survivor_count = lambda: counts["n"]
-    return process
+    """Streaming twin of pipelines/dedup.incremental_near_dedup — the
+    continuous-ingest near-dedup gate. Per micro-batch, `sink(rows,
+    batch_id)` receives the batch's SURVIVING (id,) rows; the twin
+    keeps no per-stream state beyond the frozen corpus side."""
+    score, frozen = _near_stage(
+        corpus, text_col, id_col, threshold, num_hashes, band_size,
+        shingle_k,
+    )
+    return _stage_writer(sink, (lambda b: score(b).select(id_col), frozen))
 
 
 def containment_stream_writer(
@@ -145,110 +191,16 @@ def containment_stream_writer(
     max_df: int = 20,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming twin of pipelines/dedup.containment_pairs_against —
-    the continuous-ingest doc-in-doc gate. The FROZEN index is the
-    corpus's distinct shingle sets (posting-compressed to 60-bit
-    hashed ints like the batch twin — hashed_shingles_expr) plus its
-    discriminative inverted
-    index (corpus df <= max_df; the probe side never contributes to
-    df, so results are independent of batch slicing). Asymmetric, so
-    the union of per-batch sink rows over ANY slicing equals the
-    one-shot batch operator exactly — parity for free, no cross-batch
-    state. Index persisted in the closure (never
-    session.materialize(), whose registry is drained by batch
-    callers); `.release` frees it after stream stop. No replay guard
-    NEEDED: the twin holds zero cross-batch state, and re-emitting a
-    replayed batch is the at-least-once-correct behavior (the frozen
-    index makes the re-emit deterministic; an early-return guard
-    would LOSE rows when Spark replays a batch whose sink failed
-    mid-write)."""
-    from webloghunter_spark.functions.similarity import grid_round_expr
-    from webloghunter_spark.pipelines.dedup import hashed_shingles_expr
-
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-    if max_df < 1:
-        # max_df <= 0 silently freezes an EMPTY inverted index — every
-        # probe passes with no error (batch twin's guard, mirrored)
-        raise ValueError(f"max_df must be >= 1, got {max_df}")
-    csh = (
-        corpus.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        )
-        .filter(F.size("_sh") > 0)
-        .persist()
-    )
-    cinv = csh.select(F.col(id_col), F.explode("_sh").alias("_g"))
-    rcinv = (
-        cinv.join(
-            cinv.groupBy("_g")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= int(max_df))
-            .select("_g"),
-            "_g",
-            "left_semi",
-        )
-        .persist()
-    )
-    csh.count(), rcinv.count()  # settle the frozen index
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        psh = batch_df.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        ).filter(F.size("_sh") > 0)
-        pinv = psh.select(F.col(id_col), F.explode("_sh").alias("_g"))
-        cand = (
-            pinv.alias("p")
-            .join(rcinv.alias("c"), F.col("p._g") == F.col("c._g"))
-            .select(
-                F.col(f"p.{id_col}").alias("id_a"),
-                F.col(f"c.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        # shuffle_hash on BOTH verify sides (the batch twins' hint):
-        # the corpus shingle table scales with the corpus — without the
-        # hint the planner may broadcast csh for a large frozen corpus
-        a = psh.alias("a").hint("shuffle_hash")
-        b = csh.alias("b").hint("shuffle_hash")
-        ex = (
-            cand.join(a, cand.id_a == F.col(f"a.{id_col}"))
-            .join(b, cand.id_b == F.col(f"b.{id_col}"))
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("a._sh", "b._sh"))
-                .cast("long")
-                .alias("n_common"),
-                F.size("a._sh").cast("long").alias("_na"),
-                F.size("b._sh").cast("long").alias("_nb"),
-            )
-        )
-        c_ab = F.col("n_common").cast("double") / F.col("_na")
-        c_ba = F.col("n_common").cast("double") / F.col("_nb")
-        rows = (
-            ex.filter(F.greatest(c_ab, c_ba) >= F.lit(float(threshold)))
-            .select(
-                "id_a",
-                "id_b",
-                "n_common",
-                grid_round_expr(c_ab, 4).alias("contain_ab"),
-                grid_round_expr(c_ba, 4).alias("contain_ba"),
-            )
-            .collect()
-        )
-        # NULL-safe sort keys (ids can be NULL in bad-record reality)
-        rows.sort(key=lambda r: ((r[0] is not None, r[0]),
-                                 (r[1] is not None, r[1])))
-        sink([tuple(r) for r in rows], batch_id)
-
-    def release() -> None:
-        csh.unpersist()
-        rcinv.unpersist()
-
-    process.release = release
-    return process
+    the continuous-ingest doc-in-doc finder. Per micro-batch, `sink`
+    receives the batch's (id_a, id_b, n_common, contain_ab,
+    contain_ba) rows, from the batch operator's _pairs_against."""
+    _check_pairs_args(threshold, max_df)
+    return _stage_writer(sink, _containment_stage(
+        corpus, text_col, id_col, shingle_k, max_df,
+        lambda pbase, csh, rcinv: _pairs_against(
+            pbase, csh, rcinv, id_col, threshold
+        ),
+    ))
 
 
 def containment_drop_stream_writer(
@@ -262,121 +214,12 @@ def containment_drop_stream_writer(
     max_df: int = 20,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming twin of pipelines/dedup.containment_drop_against —
-    the continuous-ingest quote-farm GATE (the pairs twin above
-    finds; this decides). The frozen index is the same corpus
-    shingle-set (60-bit hashed postings) +
-    discriminative-inverted-index pair as
-    containment_stream_writer; the corpus is authoritative (no
-    keep-best), the probe side never contributes to df, and probes
-    are never compared to each other — so the union of per-batch
-    decisions over ANY slicing equals the one-shot batch operator,
-    parity for free, zero cross-batch state, and at-least-once
-    replays re-emit deterministically. Index persisted in the
-    closure (never session.materialize()); `.release` frees it."""
-    from webloghunter_spark.pipelines.dedup import hashed_shingles_expr
-
-    if not 5000 <= threshold_bp <= 10000:
-        raise ValueError(
-            f"threshold_bp must be in [5000, 10000], got {threshold_bp}"
-        )
-    if size_ratio_bp < 10000:
-        raise ValueError(
-            f"size_ratio_bp must be >= 10000, got {size_ratio_bp}"
-        )
-    if max_df < 1:
-        # max_df <= 0 silently freezes an EMPTY inverted index — the
-        # gate would pass every probe with no error (batch twin's guard,
-        # containment_drop_against, mirrored)
-        raise ValueError(f"max_df must be >= 1, got {max_df}")
-    csh = (
-        corpus.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        )
-        .filter(F.size("_sh") > 0)
-        .persist()
-    )
-    cinv = csh.select(F.col(id_col), F.explode("_sh").alias("_g"))
-    rcinv = (
-        cinv.join(
-            cinv.groupBy("_g")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= int(max_df))
-            .select("_g"),
-            "_g",
-            "left_semi",
-        )
-        .persist()
-    )
-    csh.count(), rcinv.count()  # settle the frozen index
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        pbase = batch_df.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        )
-        psh = pbase.filter(F.size("_sh") > 0)
-        pinv = psh.select(F.col(id_col), F.explode("_sh").alias("_g"))
-        cand = (
-            pinv.alias("p")
-            .join(rcinv.alias("c"), F.col("p._g") == F.col("c._g"))
-            .select(
-                F.col(f"p.{id_col}").alias("id_a"),
-                F.col(f"c.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        # shuffle_hash on BOTH verify sides (the batch twins' hint):
-        # the corpus shingle table scales with the corpus — without the
-        # hint the planner may broadcast csh for a large frozen corpus
-        a = psh.alias("a").hint("shuffle_hash")
-        b = csh.alias("b").hint("shuffle_hash")
-        ex = (
-            cand.join(a, cand.id_a == F.col(f"a.{id_col}"))
-            .join(b, cand.id_b == F.col(f"b.{id_col}"))
-            .select(
-                "id_a",
-                F.size(F.array_intersect("a._sh", "b._sh"))
-                .cast("long")
-                .alias("n_common"),
-                F.size("a._sh").cast("long").alias("_na"),
-                F.size("b._sh").cast("long").alias("_nb"),
-            )
-        )
-        t = F.lit(int(threshold_bp))
-        r = F.lit(int(size_ratio_bp))
-        a_in_b = (F.col("n_common") * 10000 >= t * F.col("_na")) & (
-            F.col("_nb") * 10000 >= r * F.col("_na")
-        )
-        drops = (
-            ex.filter(a_in_b)
-            .groupBy("id_a")
-            .agg(F.count(F.lit(1)).alias("n_containers"))
-            .withColumnRenamed("id_a", id_col)
-        )
-        stats = pbase.select(
-            F.col(id_col), F.size("_sh").cast("long").alias("n_shingles")
-        )
-        rows = (
-            stats.join(drops, id_col, "left")
-            .select(
-                F.col(id_col),
-                "n_shingles",
-                F.coalesce("n_containers", F.lit(0))
-                .cast("long")
-                .alias("n_containers"),
-                (F.coalesce("n_containers", F.lit(0)) > 0)
-                .cast("long")
-                .alias("dropped"),
-            )
-            .collect()
-        )
-        rows.sort(key=lambda rr: (rr[0] is not None, rr[0]))
-        sink([tuple(rr) for rr in rows], batch_id)
-
-    def release() -> None:
-        csh.unpersist()
-        rcinv.unpersist()
-
-    process.release = release
-    return process
+    the continuous-ingest quote-farm GATE (the pairs twin above finds;
+    this decides). Per micro-batch, `sink` receives one (id,
+    n_shingles, n_containers, dropped) row per batch doc, from the
+    batch operator's _drop_against. The corpus is authoritative (no
+    keep-best)."""
+    return _stage_writer(sink, _drop_stage(
+        corpus, text_col, id_col, shingle_k, threshold_bp, size_ratio_bp,
+        max_df,
+    ))

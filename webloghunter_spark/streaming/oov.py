@@ -21,24 +21,18 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webloghunter_spark.functions.text import token_count_expr, tokens_expr
+from webloghunter_spark.functions.text import tokens_expr
+from webloghunter_spark.pipelines.select import _oov_scores, _top_vocab
 
 
 def frozen_vocab(
     ref_corpus: DataFrame, vocab_size: int = 1000, text_col: str = "text"
 ) -> DataFrame:
     """Top-`vocab_size` token vocabulary of the reference corpus
-    (count DESC, token ASC — the batch operator's tie rule),
-    persisted; caller releases via .unpersist()."""
-    v = (
-        ref_corpus.select(F.explode(tokens_expr(text_col)).alias("_tok"))
-        .groupBy("_tok")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .orderBy(F.col("_n").desc(), F.col("_tok"))
-        .limit(vocab_size)
-        .select("_tok")
-        .persist()
-    )
+    (oov_rate's _top_vocab: count DESC, token ASC), persisted; caller
+    releases via .unpersist()."""
+    toks = ref_corpus.select(F.explode(tokens_expr(text_col)).alias("_tok"))
+    v = _top_vocab(toks, vocab_size).persist()
     v.count()  # settle
     return v
 
@@ -51,43 +45,15 @@ def oov_rate_stream_writer(
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function: per micro-batch, `sink(rows,
     batch_id)` receives [(id, ntok, n_oov, oov_bp)] for the batch's
-    documents, scored against the frozen `vocab` (from
-    `frozen_vocab`, or any persisted single-column `_tok` frame)."""
+    documents, scored by oov_rate's _oov_scores against the frozen
+    `vocab` (from `frozen_vocab`, or any persisted single-column `_tok`
+    frame)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         toks = batch_df.select(
             F.col(id_col), F.explode(tokens_expr(text_col)).alias("_tok")
         )
-        oov = (
-            toks.join(F.broadcast(vocab), "_tok", "left_anti")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_oov"))
-        )
-        rows = (
-            batch_df.select(
-                F.col(id_col),
-                token_count_expr(text_col).cast("long").alias("ntok"),
-            )
-            .join(oov, id_col, "left")
-            .select(
-                id_col,
-                "ntok",
-                F.coalesce(F.col("n_oov"), F.lit(0)).alias("n_oov"),
-                F.when(
-                    F.col("ntok") > 0,
-                    F.floor(
-                        F.coalesce(F.col("n_oov"), F.lit(0))
-                        * 10000.0
-                        / F.col("ntok")
-                        + F.lit(0.5)
-                    ),
-                )
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("oov_bp"),
-            )
-            .collect()
-        )
+        rows = _oov_scores(batch_df, toks, vocab, id_col, text_col).collect()
         sink([tuple(r) for r in rows], batch_id)
 
     return process
