@@ -5,6 +5,7 @@ behavior change in either path fails loudly."""
 
 import time
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -403,7 +404,7 @@ def test_dist_drift_batch_stream_parity(spark, tmp_path):
     finally:
         q.stop()
     assert seen["batches"] >= 2
-    assert seen["last"] == (expected.n_a, expected.n_b, expected.js_nano)
+    assert seen["last"] == [(expected.n_a, expected.n_b, expected.js_nano)]
 
 
 def test_quality_scores_batch_stream_parity(spark, tmp_path):
@@ -445,10 +446,10 @@ def test_quality_scores_batch_stream_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    seen = {"last": None, "batches": 0}
+    seen = {"rows": [], "batches": 0}
 
     def sink(rows, batch_id):
-        seen["last"] = rows
+        seen["rows"].extend(rows)
         seen["batches"] += 1
 
     fn = quality_scores_stream_writer(w, sink)
@@ -462,7 +463,7 @@ def test_quality_scores_batch_stream_parity(spark, tmp_path):
     finally:
         q.stop()
     assert seen["batches"] >= 2
-    assert seen["last"] == expected
+    assert sorted(seen["rows"]) == expected
 
 
 def test_dist_drift_stream_replay_idempotent(spark):
@@ -480,12 +481,12 @@ def test_dist_drift_stream_replay_idempotent(spark):
     emitted = []
     fn = dist_drift_stream_writer(ref, lambda row, bid: emitted.append(row))
     fn(batch, 0)
-    first = dict(fn.counts)
+    first = list(fn.state)
     fn(batch, 0)  # replay: same batch_id
-    assert fn.counts == first  # no double count
+    assert fn.state == first  # no double count
     assert emitted[0] == emitted[1]  # but the sink still saw a row
     fn(batch, 1)  # a genuinely new batch does merge
-    assert sum(fn.counts.values()) == 2 * sum(first.values())
+    assert sum(c for _, c in fn.state) == 2 * sum(c for _, c in first)
 
 
 def test_contam_matrix_stream_replay_idempotent(spark):
@@ -536,12 +537,12 @@ def test_mix_temperature_stream_replay_idempotent(spark):
         lambda rows, bid: emitted.append(rows)
     )
     fn(batch, 0)
-    first = {k: list(v) for k, v in fn.totals.items()}
+    first = list(fn.state)
     fn(batch, 0)  # replay: same batch_id
-    assert {k: list(v) for k, v in fn.totals.items()} == first
+    assert fn.state == first
     assert emitted[0] == emitted[1]
     fn(batch, 1)  # a genuinely new batch does merge
-    assert fn.totals["web"] == [2, 6]
+    assert {g: [d, t] for g, d, t in fn.state}["web"] == [2, 6]
 
 
 def test_incremental_dedup_stream_replay_idempotent(spark):
@@ -614,10 +615,10 @@ def test_contam_spans_batch_stream_parity(spark, tmp_path):
         .parquet(str(src / "*"))
     )
 
-    seen = {"rows": None, "batches": 0}
+    seen = {"rows": [], "batches": 0}
 
     def sink(rows, batch_id):
-        seen["rows"] = rows
+        seen["rows"].extend(rows)
         seen["batches"] += 1
 
     fn = contamination_spans_stream_writer(eval_df, sink, n=5)
@@ -632,7 +633,7 @@ def test_contam_spans_batch_stream_parity(spark, tmp_path):
         q.stop()
         fn.release()
     assert seen["batches"] >= 2
-    assert seen["rows"] == expected
+    assert sorted(seen["rows"]) == expected
 
 
 def test_semantic_dedup_batch_stream_parity(spark, tmp_path):
@@ -903,7 +904,7 @@ def test_hll_batch_stream_parity_exact(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    got = {(g,): est for g, est in fn.estimates()}
+    got = {(g,): est for g, est in fn.current()}
     assert got == batch
     assert len(seen) >= 2  # really ran as multiple micro-batches
 
@@ -947,7 +948,7 @@ def test_mix_temperature_batch_stream_parity(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    assert sorted(fn.weights()) == batch
+    assert sorted(fn.current()) == batch
     assert len(seen) >= 2
 
 
@@ -1105,8 +1106,8 @@ def test_mix_temperature_stream_zero_token_groups_no_crash(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    assert sorted(fn.weights()) == batch
-    z = dict((g, (rb, tb, bb)) for g, _, _, rb, tb, bb in fn.weights())
+    assert sorted(fn.current()) == batch
+    z = dict((g, (rb, tb, bb)) for g, _, _, rb, tb, bb in fn.current())
     assert z["emptysrc"] == (0, 0, 0)
 
 
@@ -1144,10 +1145,10 @@ def test_bigram_ll_batch_stream_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    seen = {"last": None, "batches": 0}
+    seen = {"rows": [], "batches": 0}
 
     def sink(rows, batch_id):
-        seen["last"] = rows
+        seen["rows"].extend(rows)
         seen["batches"] += 1
 
     fn = bigram_ll_stream_writer(model, sink)
@@ -1161,7 +1162,7 @@ def test_bigram_ll_batch_stream_parity(spark, tmp_path):
     finally:
         q.stop()
     assert seen["batches"] >= 3
-    assert seen["last"] == expected
+    assert sorted(seen["rows"]) == expected
     # out-of-model feed: an unseen left token scores the smoothed
     # floor ln(1/V) per bigram
     from webloghunter_spark.functions.lm import bigram_logprob_frozen
@@ -1209,10 +1210,10 @@ def test_semantic_contam_batch_stream_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    seen = {"last": None, "batches": 0}
+    seen = {"rows": [], "batches": 0}
 
     def sink(rows, batch_id):
-        seen["last"] = rows
+        seen["rows"].extend(rows)
         seen["batches"] += 1
 
     fn = semantic_contam_stream_writer(
@@ -1228,8 +1229,8 @@ def test_semantic_contam_batch_stream_parity(spark, tmp_path):
     finally:
         q.stop()
     assert seen["batches"] >= 2
-    assert seen["last"] == expected
-    fn.eval_prepared.unpersist()
+    assert sorted(seen["rows"]) == expected
+    fn.release()
 
 
 def test_upsample_epochs_batch_stream_parity(spark, tmp_path):
@@ -1388,10 +1389,10 @@ def test_boilerplate_batch_stream_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    seen = {"last": None, "batches": 0}
+    seen = {"rows": [], "batches": 0}
 
     def sink(out_rows, batch_id):
-        seen["last"] = out_rows
+        seen["rows"].extend(out_rows)
         seen["batches"] += 1
 
     boiler = boilerplate_keys(corpus, seg_tokens=5, min_df=3)
@@ -1407,7 +1408,7 @@ def test_boilerplate_batch_stream_parity(spark, tmp_path):
         q.stop()
         fn.release()
     assert seen["batches"] >= 3
-    assert seen["last"] == expected
+    assert sorted(seen["rows"]) == expected
 
 
 def test_density_sample_batch_stream_parity(spark, tmp_path):
@@ -1614,9 +1615,9 @@ def test_shard_balance_batch_stream_parity_and_replay(spark, tmp_path):
     )
     assert sorted(seen["last"]) == expected
     # replay guard
-    first = {k: list(v) for k, v in fn.totals.items()}
+    first = list(fn.state)
     fn(docs.limit(5), 0)  # stale batch_id: must not merge
-    assert {k: list(v) for k, v in fn.totals.items()} == first
+    assert fn.state == first
 
 
 def test_time_split_batch_stream_parity_and_replay(spark, tmp_path):
@@ -1663,9 +1664,9 @@ def test_time_split_batch_stream_parity_and_replay(spark, tmp_path):
         tuple(r) for r in time_split_audit(ev, cut).collect()
     )
     assert sorted(seen["last"]) == expected
-    first = {k: list(v) for k, v in fn.totals.items()}
+    first = list(fn.state)
     fn(ev, 0)  # stale batch_id
-    assert {k: list(v) for k, v in fn.totals.items()} == first
+    assert fn.state == first
 
 
 def test_stream_twins_null_keys_no_crash(spark):
@@ -2085,9 +2086,9 @@ def test_unimax_alloc_batch_stream_parity_and_replay(spark, tmp_path):
             ).collect()
         )
         assert sorted(got) == exp
-    first = dict(fn.totals)
+    first = list(fn.state)
     fn(docs.limit(5), 0)  # stale batch_id: must not merge
-    assert dict(fn.totals) == first
+    assert fn.state == first
     nulls = spark.createDataFrame(
         [(None, "w w")], "source string, text string"
     )
@@ -2125,9 +2126,9 @@ def test_ewma_alerts_batch_stream_parity_and_replay(spark, tmp_path):
             tuple(r) for r in ewma_alerts(prefix).collect()
         )
         assert sorted(fn.current()) == exp
-    first = dict(fn.counts)
+    first = list(fn.state)
     fn(ev, 0)  # stale batch_id: must not merge
-    assert dict(fn.counts) == first
+    assert fn.state == first
     # NULL ts: type enters the dim with zero counts, span unchanged
     nulls = spark.createDataFrame(
         [("ghost", None)], "event_type string, ts timestamp"
@@ -2190,9 +2191,9 @@ def test_len_quantiles_batch_stream_parity_and_replay(spark):
             key=lambda t: (t[0] is not None, t[0], t[1]),
         )
         assert fn.current() == exp
-    snap = dict(fn.counts)
+    snap = list(fn.state)
     fn(df, 0)
-    assert dict(fn.counts) == snap
+    assert fn.state == snap
 
 
 def test_prefix_modal_batch_stream_parity(spark):
@@ -2337,3 +2338,116 @@ def test_curate_against_twin_every_prefix_vs_registry(spark):
         release_materialized()
     assert {r[0] for r in got} == full
     assert 0 < len(got) < batch.count()  # stages actually dropped docs
+
+
+def _merge_twin(name, spark, sink):
+    """(writer, batch operator over a frame, projected to the sink
+    columns) for one merge twin."""
+    from webloghunter_spark.detectors.ewma import ewma_alerts
+    from webloghunter_spark.functions.sketches import hll_distinct
+    from webloghunter_spark.pipelines.curate import prefix_modal
+    from webloghunter_spark.pipelines.select import (
+        distribution_drift,
+        len_quantiles,
+        unimax_alloc,
+    )
+    from webloghunter_spark.pipelines.shard import shard_balance
+    from webloghunter_spark.pipelines.split import (
+        mix_temperature,
+        time_split_audit,
+    )
+    from webloghunter_spark.streaming import drift, hll, mix
+
+    cut = "2024-01-01 01:00:00"
+    ref = spark.createDataFrame(
+        [(0, "alpha beta gamma"), (1, "beta delta")],
+        "doc_id long, text string",
+    )
+    make, batch_op = {
+        "mix_temperature": (
+            lambda: mix.mix_temperature_stream_writer(sink),
+            mix_temperature,
+        ),
+        "shard_balance": (
+            lambda: mix.shard_balance_stream_writer(sink, n_shards=3),
+            lambda d: shard_balance(d, n_shards=3),
+        ),
+        "time_split": (
+            lambda: mix.time_split_stream_writer(sink, cut),
+            lambda d: time_split_audit(d, cut),
+        ),
+        "unimax_alloc": (
+            lambda: mix.unimax_alloc_stream_writer(sink),
+            unimax_alloc,
+        ),
+        "len_quantiles": (
+            lambda: mix.len_quantiles_stream_writer(sink),
+            len_quantiles,
+        ),
+        "prefix_modal": (
+            lambda: mix.prefix_modal_stream_writer(sink, n_tokens=1),
+            lambda d: prefix_modal(d, n_tokens=1),
+        ),
+        "dist_drift": (
+            lambda: drift.dist_drift_stream_writer(ref, sink),
+            lambda d: distribution_drift(ref, d),
+        ),
+        "ewma_alerts": (
+            lambda: drift.ewma_alerts_stream_writer(sink),
+            ewma_alerts,
+        ),
+        "hll_distinct": (
+            lambda: hll.hll_distinct_stream_writer(sink, "text", ["source"]),
+            lambda d: hll_distinct(d, "text", ["source"]).select(
+                "source", "hll_est"
+            ),
+        ),
+    }[name]
+    return make(), batch_op
+
+
+def _jobs_in(sc, group, action):
+    """Spark job ids `action()` runs, tagged through a job group."""
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["mix_temperature", "shard_balance", "time_split", "unimax_alloc",
+     "len_quantiles", "prefix_modal", "dist_drift", "ewma_alerts",
+     "hll_distinct"],
+)
+def test_merge_twin_replay_reemits_without_a_job(spark, name):
+    """The merge runner's one replay guard, per twin: a replayed
+    batch_id re-emits the last rows and leaves the state alone without
+    running a Spark job; the next batch_id merges, so the sink then
+    holds the batch operator over both deliveries."""
+    from webloghunter_spark.streaming.runner import _sorted_rows
+
+    emitted = []
+    fn, batch_op = _merge_twin(
+        name, spark, lambda rows, bid: emitted.append(rows)
+    )
+    b = spark.createDataFrame(
+        [(0, "web", "alpha beta gamma", 1, "2024-01-01 00:10:00", "click"),
+         (1, "web", "alpha zeta", 2, "2024-01-01 01:20:00", "error"),
+         (2, "code", "beta beta eta theta", 1, "2024-01-01 03:05:00",
+          "click")],
+        "doc_id long, source string, text string, user_id long, "
+        "ts_s string, event_type string",
+    ).withColumn("ts", F.to_timestamp("ts_s"))
+    sc = spark.sparkContext
+    try:
+        fn(b, 0)
+        state, rows = list(fn.state), emitted[-1]
+        assert _jobs_in(sc, f"replay-{name}", lambda: fn(b, 0)) == []
+        assert fn.state == state and emitted[-1] == rows == fn.current()
+        assert _jobs_in(sc, f"merge-{name}", lambda: fn(b, 1))
+        assert emitted[-1] == _sorted_rows(batch_op(b.unionByName(b)))
+    finally:
+        fn.release()

@@ -9524,13 +9524,27 @@ SQL_BM25_BATCH = _bm25_batch_sql()
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # ORDER IS DRIVER COVERAGE: the correctness driver samples the
-    # FIRST 50 entries. Front = the 20 names whose work changed when
-    # each Python UDF became one evaluation per row (their plans, or
-    # the plans of the stages they settle, apply the MinHash, SimHash
-    # or winnowing UDF), then the other 13 names whose builder changed
-    # when each operator kept one implementation, then the first 17 of
-    # the previous front's staleness cohort. Everything after slot 50
-    # is covered by the committed full-registry HASHCHECK artifacts.
+    # FIRST 50 entries. Front = the 11 names whose operator was split
+    # into a partial aggregate and a finalize (its streaming twin runs
+    # both), then the 20 names whose work changed when each Python UDF
+    # became one evaluation per row (their plans, or the plans of the
+    # stages they settle, apply the MinHash, SimHash or winnowing UDF),
+    # then the other 13 names whose builder changed when each operator
+    # kept one implementation, then the first 6 of the previous
+    # front's staleness cohort. Everything after slot 50 is covered by
+    # the committed full-registry HASHCHECK artifacts.
+    # -- operators split into partial and finalize (11) --
+    "mix_temperature": q_mix_temperature,
+    "upsample_epochs": q_upsample_epochs,
+    "shard_balance": q_shard_balance,
+    "time_split": q_time_split,
+    "unimax_alloc": q_unimax_alloc,
+    "len_quantiles": q_len_quantiles,
+    "prefix_modal": q_prefix_modal,
+    "dist_drift": q_dist_drift,
+    "emb_drift": q_emb_drift,
+    "hll_distinct": q_hll_distinct,
+    "ewma_alerts": q_ewma_alerts,
     # -- plans changed by one evaluation per UDF (20) --
     "cc_representatives": q_cc_representatives,
     "dup_stats": q_dup_stats,
@@ -9585,7 +9599,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "fuzzy_match": q_fuzzy_match,
     "gapfill_hourly": q_gapfill_hourly,
     # -- the remainder (committed full-registry HASHCHECK coverage) --
-    "hll_distinct": q_hll_distinct,
     "jl_project": q_jl_project,
     "kmeans_sizes": q_kmeans_sizes,
     "kmeans_train": q_kmeans_train,
@@ -9624,17 +9637,14 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "domain_mix": q_domain_mix,
     "dup_ngram_frac": q_dup_ngram_frac,
     "effective_data": q_effective_data,
-    "ewma_alerts": q_ewma_alerts,
     "heaps_fit": q_heaps_fit,
     "ivf_probe_curve": q_ivf_probe_curve,
     "knn_batch": q_knn_batch,
     "knn_ivf": q_knn_ivf,
-    "len_quantiles": q_len_quantiles,
     "media_decode": q_media_decode,
     "media_sniff": q_media_sniff,
     "novelty_frac": q_novelty_frac,
     "padding_curve": q_padding_curve,
-    "prefix_modal": q_prefix_modal,
     "quality_gate": q_quality_gate,
     "quantize_recall": q_quantize_recall,
     "rollup_counts": q_rollup_counts,
@@ -9649,7 +9659,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "tool_focus": q_tool_focus,
     "trailing_rate": q_trailing_rate,
     "train_split": q_train_split,
-    "unimax_alloc": q_unimax_alloc,
     "uri_risk": q_uri_risk,
     "boilerplate_segments": q_boilerplate_segments,
     "bpe_apply": q_bpe_apply,
@@ -9682,10 +9691,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sample_exact_k": q_sample_exact_k,
     "session_stats": q_session_stats,
     "sessionize": q_sessionize,
-    "shard_balance": q_shard_balance,
     "sigma_rules": q_sigma_rules,
     "text_normalize": q_text_normalize,
-    "time_split": q_time_split,
     "token_stats": q_token_stats,
     "tool_scan": q_tool_scan,
     "tool_scan_single": q_tool_scan_single,
@@ -9699,9 +9706,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "curriculum_order": q_curriculum_order,
     "dataset_card": q_dataset_card,
     "dedup_normalized": q_dedup_normalized,
-    "dist_drift": q_dist_drift,
     "dsir_weights": q_dsir_weights,
-    "emb_drift": q_emb_drift,
     "emb_outliers": q_emb_outliers,
     "epoch_order": q_epoch_order,
     "fim_split": q_fim_split,
@@ -9711,7 +9716,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "label_propagation": q_label_propagation,
     "local_volume": q_local_volume,
     "mix_solver": q_mix_solver,
-    "mix_temperature": q_mix_temperature,
     "mmr_select": q_mmr_select,
     "oov_rate": q_oov_rate,
     "order_priority": q_order_priority,
@@ -9731,7 +9735,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "train_manifest": q_train_manifest,
     "train_order": q_train_order,
     "triplet_mining": q_triplet_mining,
-    "upsample_epochs": q_upsample_epochs,
     "url_normalize": q_url_normalize,
     "vocab_coverage": q_vocab_coverage,
     "zipf_fit": q_zipf_fit,

@@ -73,8 +73,19 @@ def hll_distinct(
     """(group..., n_exact, hll_est): the raw HLL estimate next to the
     exact distinct count — the accuracy audit row. Exact count is for
     the audit only; the sketch path never shuffles distinct values."""
-    regs = hll_registers(df, value_col, group_cols)
-    est = (
+    est = hll_estimate(hll_registers(df, value_col, group_cols), group_cols)
+    exact = df.groupBy(*group_cols).agg(
+        F.count_distinct(value_col).alias("n_exact")
+    )
+    return exact.join(est, on=group_cols).select(
+        *group_cols, "n_exact", "hll_est"
+    )
+
+
+def hll_estimate(regs: DataFrame, group_cols: list[str]) -> DataFrame:
+    """(group..., hll_est): the raw estimate from a register frame
+    (absent buckets contribute 2^0), rounded to 2 decimals."""
+    return (
         regs.groupBy(*group_cols)
         .agg(
             F.sum(F.pow(F.lit(2.0), -F.col("reg"))).alias("_s"),
@@ -90,11 +101,5 @@ def hll_distinct(
                 2,
             ).alias("hll_est"),
         )
-    )
-    exact = df.groupBy(*group_cols).agg(
-        F.count_distinct(value_col).alias("n_exact")
-    )
-    return exact.join(est, on=group_cols).select(
-        *group_cols, "n_exact", "hll_est"
     )
 

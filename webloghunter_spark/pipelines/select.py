@@ -458,30 +458,48 @@ def distribution_drift(
     B-cell aggregates + arithmetic on a B-row spine."""
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be > 0, got {n_buckets}")
-    tok = lambda df: df.select(  # noqa: E731
-        F.explode(tokens_expr(text_col)).alias("_t")
-    ).select(hash_bucket_expr("_t", n_buckets).alias("_b"))
-    return _js_divergence(tok(a), tok(b), n_buckets)
+    return _js_divergence(
+        _token_bucket_counts(a, text_col, n_buckets),
+        _token_bucket_counts(b, text_col, n_buckets),
+        n_buckets,
+    )
 
 
-def _js_divergence(fa: DataFrame, fb: DataFrame, n_cells: int) -> DataFrame:
-    """Shared JS core over two single-column `_b` feature frames:
-    Laplace-smoothed distributions on the full n_cells spine,
-    per-cell contributions quantized to 1e-9 nats, order-free
-    integer sum -> one (n_a, n_b, js_nano) row."""
+def _bucket_counts(f: DataFrame) -> DataFrame:
+    """(_b, _c) cell counts of a single-column `_b` feature frame: the
+    drift operators' combinable half; partials merge by sum."""
+    return f.groupBy("_b").agg(F.count(F.lit(1)).alias("_c"))
+
+
+def _token_bucket_counts(
+    df: DataFrame, text_col: str, n_buckets: int
+) -> DataFrame:
+    """distribution_drift's partial: md5 token-bucket counts (the
+    dsir_weights feature space)."""
+    return _bucket_counts(
+        df.select(F.explode(tokens_expr(text_col)).alias("_t")).select(
+            hash_bucket_expr("_t", n_buckets).alias("_b")
+        )
+    )
+
+
+def _js_divergence(ca: DataFrame, cb: DataFrame, n_cells: int) -> DataFrame:
+    """Shared JS core over two (_b, _c) count frames: Laplace-smoothed
+    distributions on the full n_cells spine, per-cell contributions
+    quantized to 1e-9 nats, order-free integer sum -> one (n_a, n_b,
+    js_nano) row. Totals are the count frames' sums (0 when empty)."""
     bl = F.lit(int(n_cells))
-    ca = fa.groupBy("_b").agg(F.count(F.lit(1)).alias("_ca"))
-    cb = fb.groupBy("_b").agg(F.count(F.lit(1)).alias("_cb"))
-    ta = fa.agg(F.count(F.lit(1)).alias("_ta"))
-    tb = fb.agg(F.count(F.lit(1)).alias("_tb"))
-    spine = fa.sparkSession.range(int(n_cells)).select(
+    total = lambda c, name: c.agg(  # noqa: E731
+        F.coalesce(F.sum("_c"), F.lit(0)).alias(name)
+    )
+    spine = ca.sparkSession.range(int(n_cells)).select(
         F.col("id").alias("_b")
     )
     j = (
-        spine.join(ca, "_b", "left")
-        .join(cb, "_b", "left")
-        .crossJoin(F.broadcast(ta))
-        .crossJoin(F.broadcast(tb))
+        spine.join(ca.withColumnRenamed("_c", "_ca"), "_b", "left")
+        .join(cb.withColumnRenamed("_c", "_cb"), "_b", "left")
+        .crossJoin(F.broadcast(total(ca, "_ta")))
+        .crossJoin(F.broadcast(total(cb, "_tb")))
     )
     p = (F.coalesce(F.col("_ca"), F.lit(0)) + F.lit(1)) / (F.col("_ta") + bl)
     q = (F.coalesce(F.col("_cb"), F.lit(0)) + F.lit(1)) / (F.col("_tb") + bl)
@@ -521,10 +539,10 @@ def embedding_drift(
         hyperplane_bucket_expr,
     )
 
-    feat = lambda df: df.select(  # noqa: E731
-        hyperplane_bucket_expr(vec_col, num_planes, dim).alias("_b")
+    counts = lambda df: _bucket_counts(  # noqa: E731
+        df.select(hyperplane_bucket_expr(vec_col, num_planes, dim).alias("_b"))
     )
-    return _js_divergence(feat(a), feat(b), 1 << num_planes)
+    return _js_divergence(counts(a), counts(b), 1 << num_planes)
 
 
 def vocab_coverage(
@@ -1268,24 +1286,41 @@ def unimax_alloc(
     A NULL group cannot rank deterministically across engines
     (Spark asc = NULLS FIRST, DuckDB = NULLS LAST) — fail loudly,
     as token_budget_by_group does for NULL scores."""
+    _check_unimax_args(budget_bp_of_total, max_epochs)
+    ntok = (
+        F.col(ntok_col) if isinstance(ntok_col, str)
+        else ntok_col if ntok_col is not None
+        else token_count_expr(text_col)
+    )
+    return _unimax_finalize(
+        _unimax_partial(df, group_col, ntok),
+        budget_bp_of_total, max_epochs, group_col,
+    )
+
+
+def _check_unimax_args(budget_bp_of_total: int, max_epochs: int) -> None:
     if budget_bp_of_total < 0:
         raise ValueError(
             f"budget_bp_of_total must be >= 0, got {budget_bp_of_total}"
         )
     if max_epochs < 1:
         raise ValueError(f"max_epochs must be >= 1, got {max_epochs}")
-    ntok = (
-        F.col(ntok_col) if isinstance(ntok_col, str)
-        else ntok_col if ntok_col is not None
-        else token_count_expr(text_col)
-    )
-    rows = (
-        df.groupBy(group_col)
-        .agg(F.sum(ntok.cast("long")).alias("_c"))
-        .collect()
-    )
-    spark = df.sparkSession
-    gtype = df.schema[group_col].dataType.simpleString()
+
+
+def _unimax_partial(df: DataFrame, group_col: str, ntok: Column) -> DataFrame:
+    """(group, _c) token counts: unimax_alloc's combinable half;
+    partials merge by sum."""
+    return df.groupBy(group_col).agg(F.sum(ntok.cast("long")).alias("_c"))
+
+
+def _unimax_finalize(
+    per: DataFrame, budget_bp_of_total: int, max_epochs: int, group_col: str
+) -> DataFrame:
+    """Collect the per-group counts and run the waterfill on the
+    driver."""
+    rows = per.collect()
+    spark = per.sparkSession
+    gtype = per.schema[group_col].dataType.simpleString()
     schema = (
         f"{group_col} {gtype}, c_tokens long, cap_tokens long, "
         "alloc_tokens long, capped boolean, epochs_bp long"
@@ -1305,8 +1340,7 @@ def unimax_alloc(
 def unimax_waterfill(
     counts: list, budget_bp_of_total: int, max_epochs: int
 ) -> list:
-    """The pure integer waterfill shared by unimax_alloc and its
-    streaming twin (one algorithm, no drift): counts is [(group,
+    """unimax_alloc's pure integer waterfill: counts is [(group,
     c_tokens)]; returns [(group, c, cap, alloc, capped, epochs_bp)]
     in ascending (capacity, group) order."""
     total = sum(c for _, c in counts)
@@ -1603,9 +1637,17 @@ def len_quantiles(
     """
     if not qs_bp or any(not (0 < q <= 10000) for q in qs_bp):
         raise ValueError(f"qs_bp must be in (0, 10000], got {qs_bp}")
-    from pyspark.sql import Window as W
+    return _len_quantiles_finalize(
+        _len_quantiles_partial(df, text_col, group_col), qs_bp
+    )
 
-    hist = (
+
+def _len_quantiles_partial(
+    df: DataFrame, text_col: str, group_col: str
+) -> DataFrame:
+    """(source, _k, _c) length histogram: len_quantiles' combinable
+    half; partials merge by sum."""
+    return (
         df.select(
             F.col(group_col).alias("source"),
             token_count_expr(text_col).alias("_k"),
@@ -1613,6 +1655,14 @@ def len_quantiles(
         .groupBy("source", "_k")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
+
+
+def _len_quantiles_finalize(
+    hist: DataFrame, qs_bp: tuple[int, ...]
+) -> DataFrame:
+    """The nearest-rank walk over each source's length histogram."""
+    from pyspark.sql import Window as W
+
     w = W.partitionBy("source").orderBy("_k")
     cum = hist.withColumn(
         "_cum", F.sum("_c").over(w)

@@ -486,12 +486,21 @@ def shard_balance(
     over those same rows."""
     if n_shards <= 0:
         raise ValueError(f"n_shards must be > 0, got {n_shards}")
-    from pyspark.sql import Window as W
+    return _shard_balance_finalize(
+        _shard_balance_partial(df, n_shards, seed, id_col, text_col),
+        n_shards,
+    )
 
+
+def _shard_balance_partial(
+    df: DataFrame, n_shards: int, seed: str, id_col: str, text_col: str
+) -> DataFrame:
+    """(shard_id, n_docs, n_tokens): shard_balance's combinable half;
+    partials merge by sum."""
     from webloghunter_spark.functions.text import token_count_expr
 
     shard = shard_from_key_expr(order_key_expr(id_col, seed), n_shards)
-    per = (
+    return (
         df.select(
             shard.alias("shard_id"),
             token_count_expr(text_col).cast("long").alias("_ntok"),
@@ -502,6 +511,12 @@ def shard_balance(
             F.sum("_ntok").alias("n_tokens"),
         )
     )
+
+
+def _shard_balance_finalize(per: DataFrame, n_shards: int) -> DataFrame:
+    """Token shares and deviations from the per-shard partial frame."""
+    from pyspark.sql import Window as W
+
     total = F.sum("n_tokens").over(W.partitionBy())
     n = int(n_shards)
     return per.select(

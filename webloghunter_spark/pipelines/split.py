@@ -303,13 +303,28 @@ def mix_temperature(
         else ntok_col if ntok_col is not None
         else token_count_expr("text")
     )
-    per = df.groupBy(group_col).agg(
+    return _mix_temperature_finalize(
+        _mix_temperature_partial(df, group_col, ntok), group_col, alpha
+    )
+
+
+def _mix_temperature_partial(
+    df: DataFrame, group_col: str, ntok: Column
+) -> DataFrame:
+    """(group, n_docs, n_tokens): mix_temperature's map-side-combinable
+    half; partials merge by sum."""
+    return df.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(ntok.cast("long")).alias("n_tokens"),
     )
+
+
+def _mix_temperature_finalize(
+    per: DataFrame, group_col: str, alpha: float
+) -> DataFrame:
+    """mix_temperature's weights from its per-group partial frame."""
     # zero-token CORPUS guard: _tot = 0 would make raw = 0/0 = NaN and
     # ANSI-error the bp casts; pin raw to 0 so every bp column is 0
-    # (matching the streaming twin's all-zero rows for the same input)
     raw = F.when(
         F.col("_tot") > 0,
         F.col("n_tokens").cast("double") / F.col("_tot"),
@@ -715,20 +730,26 @@ def time_split_audit(
     Scale: one conditional-count aggregate per group (map-side
     combinable, one shuffle on the group key) + a HAVING-style filter
     on the |groups|-row result. No join, no window over the corpus."""
+    return _time_split_finalize(
+        _time_split_partial(df, cut, group_col, ts_col)
+    )
+
+
+def _time_split_partial(
+    df: DataFrame, cut: str, group_col: str, ts_col: str
+) -> DataFrame:
+    """(group, n_train, n_test, first_test_epoch) per group:
+    time_split_audit's combinable half; partials merge by (sum, sum,
+    min)."""
     c = F.col(ts_col)
     is_test = c >= F.lit(cut).cast("timestamp")
-    return (
-        df.groupBy(group_col)
-        .agg(
-            F.sum(F.when(~is_test, 1).otherwise(0))
-            .cast("long")
-            .alias("n_train"),
-            F.sum(F.when(is_test, 1).otherwise(0))
-            .cast("long")
-            .alias("n_test"),
-            F.min(
-                F.when(is_test, F.unix_timestamp(c))
-            ).alias("first_test_epoch"),
-        )
-        .filter((F.col("n_train") > 0) & (F.col("n_test") > 0))
+    return df.groupBy(group_col).agg(
+        F.sum(F.when(~is_test, 1).otherwise(0)).cast("long").alias("n_train"),
+        F.sum(F.when(is_test, 1).otherwise(0)).cast("long").alias("n_test"),
+        F.min(F.when(is_test, F.unix_timestamp(c))).alias("first_test_epoch"),
     )
+
+
+def _time_split_finalize(per: DataFrame) -> DataFrame:
+    """The leaked groups: rows on both sides of the cut."""
+    return per.filter((F.col("n_train") > 0) & (F.col("n_test") > 0))

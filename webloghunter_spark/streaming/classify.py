@@ -7,8 +7,8 @@ vocab, drift's reference histogram): training happens once, batch-side
 row-local — a document's logit depends on its own tokens and the
 static weight vector — so each micro-batch runs the exact batch scorer
 and the union of per-batch outputs equals the batch result: parity by
-statelessness, no cross-batch state, replay-idempotent by keyed
-overwrite. This is also the production semantics: a quality filter's
+statelessness, no cross-batch state; a replayed batch re-emits the
+same rows. This is also the production semantics: a quality filter's
 weights are pinned for a crawl snapshot; re-training mid-stream would
 make acceptance time-dependent.
 """
@@ -23,6 +23,7 @@ from webloghunter_spark.pipelines.classify import (
     CLS_BUCKETS,
     quality_classifier_scores,
 )
+from webloghunter_spark.streaming.runner import _stage_writer
 
 
 def quality_scores_stream_writer(
@@ -33,23 +34,13 @@ def quality_scores_stream_writer(
     n_buckets: int = CLS_BUCKETS,
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function: per micro-batch, `sink(rows,
-    batch_id)` receives the CURRENT accumulated
-    [(id, ntok, logit_micro, prob_bp)] list, sorted by id. Exposes
-    `.state` (id -> row, the parity surface)."""
-    state: dict = {}
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = quality_classifier_scores(
-            batch_df, weights, text_col=text_col, id_col=id_col,
+    batch_id)` receives the batch's [(id, ntok, logit_micro,
+    prob_bp)] rows, sorted. `.release()` is a no-op (the weights live
+    on the driver)."""
+    return _stage_writer(sink, (
+        lambda b: quality_classifier_scores(
+            b, weights, text_col=text_col, id_col=id_col,
             n_buckets=n_buckets,
-        ).collect()
-        for r in rows:
-            state[r[id_col]] = (
-                int(r["ntok"]), int(r["logit_micro"]), int(r["prob_bp"])
-            )
-        sink(
-            [(i, *v) for i, v in sorted(state.items())], batch_id
-        )
-
-    process.state = state
-    return process
+        ),
+        (),
+    ))

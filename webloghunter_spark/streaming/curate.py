@@ -59,12 +59,8 @@ from webloghunter_spark.pipelines.curate import (
 )
 from webloghunter_spark.pipelines.decontam import decontaminate, eval_shingle_set
 from webloghunter_spark.pipelines.gate import gate_keep_expr
-from webloghunter_spark.streaming.incdedup import (
-    _drop_stage,
-    _filled,
-    _near_stage,
-    _sorted_rows,
-)
+from webloghunter_spark.streaming.incdedup import _drop_stage, _near_stage
+from webloghunter_spark.streaming.runner import _filled, _sorted_rows
 
 
 def curate_against_stream_writer(

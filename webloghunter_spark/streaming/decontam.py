@@ -33,6 +33,7 @@ from webloghunter_spark.pipelines.decontam import (
     decontaminate,
     eval_shingle_set,
 )
+from webloghunter_spark.streaming.runner import _filled, _stage_writer
 
 
 def decontaminate_stream_writer(
@@ -92,32 +93,18 @@ def contamination_spans_stream_writer(
     EXACT batch operator and the union of per-batch outputs equals
     the batch result — parity by statelessness, no cross-batch merge
     needed (a document is batch-atomic; re-keying split docs would be
-    an upstream bug). `sink(rows, batch_id)` receives the CURRENT
-    accumulated [(id, n_pos_hits, max_run)] list each batch; `.state`
-    exposes it and `.release` frees the persisted gram set."""
+    an upstream bug). `sink(rows, batch_id)` receives the batch's
+    [(id, n_pos_hits, max_run)] rows, sorted; `.release` frees the
+    persisted gram set."""
     from webloghunter_spark.pipelines.decontam import contamination_spans
 
     grams = eval_shingle_set(eval_df, text_col, n).persist()
-    grams.count()  # settle before the stream starts
-    state: dict = {}
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = contamination_spans(
-            batch_df, id_col=id_col, text_col=text_col, n=n,
-            eval_grams=grams,
-        ).collect()
-        for r in rows:
-            state[r[id_col]] = (int(r["n_pos_hits"]), int(r["max_run"]))
-        sink(
-            [(i, h, m) for i, (h, m) in sorted(state.items())], batch_id
-        )
-
-    def release() -> None:
-        grams.unpersist()
-
-    process.state = state
-    process.release = release
-    return process
+    return _stage_writer(sink, (
+        lambda b: contamination_spans(
+            b, id_col=id_col, text_col=text_col, n=n, eval_grams=grams,
+        ),
+        _filled(grams),
+    ))
 
 
 def semantic_contam_stream_writer(
@@ -135,38 +122,28 @@ def semantic_contam_stream_writer(
     micro-batch of train vectors runs the exact batch probe against
     it. The verdict is row-local given the static eval side, so the
     union of per-batch outputs equals the batch result: parity by
-    statelessness, replay-idempotent by keyed overwrite. `sink(rows,
-    batch_id)` receives the CURRENT accumulated
-    [(id, n_contam, max_cos_bp, contaminated)], sorted by id; exposes
-    `.state` and `.eval_prepared` (unpersist when done)."""
+    statelessness; a replayed batch re-emits the same rows.
+    `sink(rows, batch_id)` receives the batch's [(id, n_contam,
+    max_cos_bp, contaminated)] rows, sorted; `.release()` frees the
+    persisted eval side after stream stop."""
     from webloghunter_spark.pipelines.decontam import (
         eval_bucket_frame,
         semantic_contam,
     )
 
     prepared = eval_bucket_frame(eval_df, num_planes, dim, vec_col).persist()
-    prepared.count()  # pin before the source frame moves on
-    state: dict = {}
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = semantic_contam(
-            batch_df,
+    return _stage_writer(sink, (
+        lambda b: semantic_contam(
+            b,
             threshold=threshold,
             num_planes=num_planes,
             dim=dim,
             vec_col=vec_col,
             id_col=id_col,
             eval_prepared=prepared,
-        ).collect()
-        for r in rows:
-            state[r[id_col]] = (
-                int(r["n_contam"]), int(r["max_cos_bp"]), bool(r["contaminated"])
-            )
-        sink([(i, *v) for i, v in sorted(state.items())], batch_id)
-
-    process.state = state
-    process.eval_prepared = prepared
-    return process
+        ),
+        _filled(prepared),
+    ))
 
 
 def contamination_matrix_stream_writer(

@@ -18,6 +18,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from webloghunter_spark.streaming.runner import _filled, _stage_writer
+
 
 def dedup_stream(
     events: DataFrame,
@@ -54,32 +56,22 @@ def boilerplate_stream_writer(
     operator over the union of batches — parity by statelessness,
     like the frozen-LM scorer.
 
-    `sink(rows, batch_id)` receives the CURRENT accumulated
-    [(id, n_seg, n_kept, new_text)] list sorted by id. The key set is
-    persist()ed here in the closure — NOT session.materialize(),
-    whose registry is drained per-query by batch callers and would
-    unpersist a live stream's index. Exposes `.state` (parity
-    surface) and `.release` (call after stream stop).
+    `sink(rows, batch_id)` receives the batch's
+    [(id, n_seg, n_kept, new_text)] rows, sorted. The key set is
+    persist()ed here — NOT session.materialize(), whose registry is
+    drained per-query by batch callers and would unpersist a live
+    stream's index. Call `.release()` after stream stop.
     """
     from webloghunter_spark.pipelines.dedup import remove_boilerplate
 
     b = boiler.persist()
-    state: dict = {}
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = remove_boilerplate(
-            batch_df, b, text_col=text_col, id_col=id_col,
+    return _stage_writer(sink, (
+        lambda batch: remove_boilerplate(
+            batch, b, text_col=text_col, id_col=id_col,
             seg_tokens=seg_tokens,
-        ).collect()
-        for r in rows:
-            state[r[id_col]] = (
-                int(r["n_seg"]), int(r["n_kept"]), r["new_text"]
-            )
-        sink([(i, *v) for i, v in sorted(state.items())], batch_id)
-
-    process.state = state
-    process.release = b.unpersist
-    return process
+        ),
+        _filled(b),
+    ))
 
 
 def keep_best_stream_writer(

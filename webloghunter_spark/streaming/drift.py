@@ -1,106 +1,60 @@
-"""Streaming twin of pipelines/select.distribution_drift — a live
-token-distribution drift monitor against a FROZEN reference corpus.
+"""Streaming twins of two monitors: pipelines/select.distribution_drift
+against a FROZEN reference corpus, and detectors/ewma.ewma_alerts.
 
-The batch operator compares two static snapshots. The production
-question is continuous: "is the feed drifting away from the corpus we
-trained on?" — a frozen-model twin (gate / decontam / oov family):
-the reference's B-cell bucket histogram is computed ONCE and held in
-the closure; each micro-batch contributes one map-side-combinable
-B-cell aggregate whose counts MERGE BY SUM into the running stream
-histogram (the hll/mix/cms free-parity family), and the JS divergence
-re-derives per batch from the merged totals with the batch operator's
-exact arithmetic — Laplace spine smoothing, per-cell contributions
-quantized to 1e-9 nats (half-up, matching F.round on non-negative
-terms), integer sum. After the last batch the emitted (n_a, n_b,
-js_nano) row is IDENTICAL to distribution_drift(reference,
-union-of-batches): parity is exact, not approximate, because the only
-cross-batch state is an integer histogram.
+Both run their batch operator's own partial and finalize through
+`_merge_writer` (streaming/runner.py); neither repeats any of its
+arithmetic.
+
+- dist_drift: the reference's token-bucket counts are computed ONCE
+  and persisted (a frozen-model twin, like gate / decontam / oov);
+  each micro-batch's bucket counts merge into the stream's counts by
+  sum, and the batch JS core runs on the reference and merged counts.
+  The emitted (n_ref, n_stream, js_nano) row is the one
+  distribution_drift(reference, union-of-batches) returns.
+- ewma_alerts: (type, hour) counts merge by sum (bounded at |hours| x
+  |types| rows: time-bounded, never corpus-bounded), and the batch
+  finalize zero-fills the hour spine and folds the EWMA over them.
+
+Every prefix of the stream equals the batch operator over the rows
+streamed so far, for any batch slicing; a replayed batch_id only
+re-emits.
 """
 
 from __future__ import annotations
 
-import math
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webloghunter_spark.functions.text import hash_bucket_expr, tokens_expr
-
-DRIFT_BUCKETS = 1024
-
-
-def _bucket_counts(
-    df: DataFrame, text_col: str, n_buckets: int
-) -> DataFrame:
-    """(bucket, cnt) md5-hashed token-feature histogram — the same
-    feature space as distribution_drift/dsir_weights."""
-    return (
-        df.select(F.explode(tokens_expr(text_col)).alias("_t"))
-        .select(hash_bucket_expr("_t", n_buckets).alias("_b"))
-        .groupBy("_b")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-
-
-def js_nano_from_hists(
-    ref: dict[int, int],
-    cur: dict[int, int],
-    n_buckets: int = DRIFT_BUCKETS,
-) -> tuple[int, int, int]:
-    """(n_ref, n_cur, js_nano) from two bucket histograms — the exact
-    batch formula: Laplace +1 smoothing over the full spine, per-cell
-    nano-nat quantization (floor(x*1e9 + 0.5), valid because JS terms
-    are non-negative — matches Spark's HALF_UP round), integer sum."""
-    ta, tb = sum(ref.values()), sum(cur.values())
-    js = 0
-    for b in range(n_buckets):
-        p = (ref.get(b, 0) + 1) / (ta + n_buckets)
-        q = (cur.get(b, 0) + 1) / (tb + n_buckets)
-        m = (p + q) / 2.0
-        c = (p * math.log(p / m) + q * math.log(q / m)) / 2.0 * 1e9
-        js += int(math.floor(c + 0.5))
-    return ta, tb, js
+from webloghunter_spark.pipelines.select import (
+    DSIR_BUCKETS,
+    _js_divergence,
+    _token_bucket_counts,
+)
+from webloghunter_spark.streaming.runner import _filled, _merge_writer
 
 
 def dist_drift_stream_writer(
     ref_df: DataFrame,
-    sink: Callable[[tuple, int], None],
+    sink: Callable[[list[tuple], int], None],
     text_col: str = "text",
-    n_buckets: int = DRIFT_BUCKETS,
+    n_buckets: int = DSIR_BUCKETS,
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function: per micro-batch,
-    `sink((n_ref, n_stream, js_nano), batch_id)` receives the CURRENT
-    divergence of everything streamed so far vs the frozen reference.
-    Exposes `.counts` (the merged stream histogram — the parity
-    surface) and `.current()`."""
-    ref = {
-        int(r["_b"]): int(r["_c"])
-        for r in _bucket_counts(ref_df, text_col, n_buckets).collect()
-    }
-    state: dict[int, int] = {}
-    # bounded replay guard: batch_ids are monotone within a query, so
-    # one high-water int gives identical at-least-once protection
-    # without accumulating a set entry per micro-batch forever
-    last_seen = [-1]
-
-    def current() -> tuple:
-        return js_nano_from_hists(ref, state, n_buckets)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: a replayed micro-batch arrives
-        # with the SAME batch_id — adding its counts twice would break
-        # the exact-parity claim permanently, so replays only re-emit
-        if batch_id > last_seen[0]:
-            last_seen[0] = batch_id
-            for r in _bucket_counts(batch_df, text_col, n_buckets).collect():
-                b = int(r["_b"])
-                state[b] = state.get(b, 0) + int(r["_c"])
-        sink(current(), batch_id)
-
-    process.counts = state
-    process.current = current
-    return process
+    `sink([(n_ref, n_stream, js_nano)], batch_id)` receives the
+    divergence of everything streamed so far from the frozen
+    reference. `.state` holds the merged stream bucket counts,
+    `.current()` the last row list; call `.release()` after stream
+    stop to free the persisted reference counts."""
+    ref = _token_bucket_counts(ref_df, text_col, n_buckets).persist()
+    return _merge_writer(
+        sink,
+        lambda b: _token_bucket_counts(b, text_col, n_buckets),
+        {"_c": F.sum},
+        lambda cur: _js_divergence(ref, cur, n_buckets),
+        frozen=_filled(ref),
+    )
 
 
 def ewma_alerts_stream_writer(
@@ -112,76 +66,22 @@ def ewma_alerts_stream_writer(
     type_col: str = "event_type",
 ) -> Callable[[DataFrame, int], None]:
     """Streaming twin of detectors/ewma.ewma_alerts — the rate-anomaly
-    monitor run against the live event stream: per micro-batch,
-    (hour, type) counts merge into state by SUM (bounded at
-    |hours| x |types| rows — time-bounded, never corpus-bounded),
-    then the SAME integer ewma_fold the batch operator runs
-    (imported, not copied — one algorithm, no drift) replays over the
-    zero-filled hour spine from the merged counts. Every prefix
-    equals the batch operator over the events streamed so far, for
-    any batch slicing, because the EWMA is a deterministic function
-    of the (complete, gap-filled) count series. Replay-guarded;
-    `sink(rows, batch_id)` receives the CURRENT
-    [(event_type, hour_epoch, cnt, ewma_micro, prev_micro, alert)]
-    sorted (event_type, hour_epoch); exposes `.counts` and
-    `.current()`."""
-    from webloghunter_spark.detectors.ewma import ewma_fold
+    monitor over the live event stream. `sink(rows, batch_id)`
+    receives [(event_type, hour_epoch, cnt, ewma_micro, prev_micro,
+    alert)] over the events streamed so far; a NULL-ts row extends no
+    hour span but keeps its type in the type dimension."""
+    from webloghunter_spark.detectors.ewma import (
+        _ewma_finalize,
+        _ewma_partial,
+    )
 
     if not (0 < lam_num < lam_denom):
         raise ValueError("need 0 < lam_num < lam_denom")
-    state: dict[tuple[str, int], int] = {}  # (type, hour_epoch) -> cnt
-    types: set = set()
-    span = [None, None]  # [lo_hour_epoch, hi_hour_epoch] over ALL rows
-    last_seen = [-1]
-
-    def current() -> list[tuple]:
-        if span[0] is None:
-            return []
-        spine = list(range(span[0], span[1] + 3600, 3600))
-        out: list[tuple] = []
-        # NULL-safe sort; a NULL type mirrors the batch operator's
-        # null-unsafe spine join: its rows extend the hour span but
-        # its per-hour counts are all zero.
-        for t in sorted(types, key=lambda x: (x is not None, x)):
-            cnts = [
-                state.get((t, h), 0) if t is not None else 0
-                for h in spine
-            ]
-            trip = ewma_fold(cnts, lam_num, lam_denom, threshold_num)
-            out.extend(
-                (t, h, c, e, p, a)
-                for h, c, (e, p, a) in zip(spine, cnts, trip)
-            )
-        return out
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id > last_seen[0]:
-            last_seen[0] = batch_id
-            rows = (
-                batch_df.select(
-                    F.unix_timestamp(
-                        F.date_trunc("hour", ts_col)
-                    ).alias("_h"),
-                    F.col(type_col).alias("_t"),
-                )
-                .groupBy("_t", "_h")
-                .agg(F.count(F.lit(1)).alias("_c"))
-                .collect()
-            )
-            for r in rows:
-                types.add(r["_t"])
-                if r["_h"] is None:
-                    # NULL ts: batch bounds/spine ignore it, but the
-                    # type still appears in the distinct-types dim.
-                    continue
-                h = int(r["_h"])
-                span[0] = h if span[0] is None else min(span[0], h)
-                span[1] = h if span[1] is None else max(span[1], h)
-                if r["_t"] is not None:
-                    key = (r["_t"], h)
-                    state[key] = state.get(key, 0) + int(r["_c"])
-        sink(current(), batch_id)
-
-    process.counts = state
-    process.current = current
-    return process
+    return _merge_writer(
+        sink,
+        lambda b: _ewma_partial(b, ts_col, type_col),
+        {"cnt": F.sum},
+        lambda counts: _ewma_finalize(
+            counts, lam_num, lam_denom, threshold_num
+        ),
+    )

@@ -1,15 +1,14 @@
 """Streaming distinct-count twin of functions/sketches.hll_distinct.
 
-HLL registers merge by MAX — commutative, associative, idempotent —
-so unlike the frozen-model twins (gate, resample), this stream needs
-no reference corpus and its final state is EXACTLY the batch sketch
-regardless of arrival order, batch slicing, or replay: max is the one
-aggregation for which streaming parity is free. Per micro-batch the
-batch-side `hll_registers` runs (map-side combinable, <= 64 cells per
-group), the <=64 x |groups| register rows are merged into a
-driver-held dict (the sketch IS tiny — that's its point; a 10^9-group
-cardinality would move this into a state store, same max semantics),
-and the current per-group estimate goes to the sink.
+HLL registers merge by MAX (commutative, associative, idempotent), so
+the stream needs no reference corpus and its merged registers are
+EXACTLY the batch sketch's, whatever the arrival order or batch
+slicing. The twin runs `hll_registers` (the batch partial, <= 64
+cells per group) through `_merge_writer` (streaming/runner.py), which
+merges `reg` by max into the driver-held sketch, and the batch
+`hll_estimate` on the merged registers. The sketch IS tiny; a 10^9
+group cardinality would move it into a state store, with the same
+max semantics.
 """
 
 from __future__ import annotations
@@ -17,20 +16,10 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from webloghunter_spark.functions.sketches import (
-    HLL_ALPHA,
-    HLL_M,
-    hll_registers,
-)
-
-
-def hll_estimate_from_registers(regs: dict[int, int]) -> float:
-    """Raw HLL harmonic-mean estimate from a bucket->max-rho dict
-    (absent buckets contribute 2^0), rounded to 2 — the same formula
-    `hll_distinct`'s aggregate computes."""
-    s = sum(2.0 ** -r for r in regs.values()) + (HLL_M - len(regs))
-    return round(HLL_ALPHA * HLL_M * HLL_M / s, 2)
+from webloghunter_spark.functions.sketches import hll_estimate, hll_registers
+from webloghunter_spark.streaming.runner import _merge_writer
 
 
 def hll_distinct_stream_writer(
@@ -39,28 +28,12 @@ def hll_distinct_stream_writer(
     group_cols: list[str],
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function. After each micro-batch,
-    `sink(rows, batch_id)` receives the CURRENT
-    [(group..., hll_est)] list over everything seen so far. The
-    returned function exposes `.registers` (the merged state, for
-    checkpointing/parity checks) and `.estimates()`."""
-    state: dict[tuple, dict[int, int]] = {}
-
-    def estimates() -> list[tuple]:
-        return [
-            (*g, hll_estimate_from_registers(regs))
-            for g, regs in sorted(state.items())
-        ]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = hll_registers(batch_df, value_col, group_cols).collect()
-        for r in rows:
-            g = tuple(r[c] for c in group_cols)
-            regs = state.setdefault(g, {})
-            b, rho = int(r["bucket"]), int(r["reg"])
-            if rho > regs.get(b, 0):
-                regs[b] = rho
-        sink(estimates(), batch_id)
-
-    process.registers = state
-    process.estimates = estimates
-    return process
+    `sink(rows, batch_id)` receives [(group..., hll_est)] over
+    everything seen so far. `.state` holds the merged (group...,
+    bucket, reg) registers, `.current()` the last rows."""
+    return _merge_writer(
+        sink,
+        lambda b: hll_registers(b, value_col, group_cols),
+        {"reg": F.max},
+        lambda regs: hll_estimate(regs, group_cols),
+    )

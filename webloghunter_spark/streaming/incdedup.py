@@ -39,46 +39,7 @@ from webloghunter_spark.pipelines.dedup import (
     _shingle_sets,
     lsh_band_signatures,
 )
-
-# A stage: (score, frozen). score(frame) -> DataFrame scores a frame
-# against the persisted corpus-side frames `frozen`.
-_Stage = tuple[Callable[[DataFrame], DataFrame], tuple[DataFrame, ...]]
-
-
-def _filled(*frames: DataFrame) -> tuple[DataFrame, ...]:
-    """Run each (already persist()ed) frozen frame once so its cache is
-    full before the first micro-batch."""
-    for f in frames:
-        f.count()
-    return frames
-
-
-def _sorted_rows(df: DataFrame) -> list[tuple]:
-    """`df` collected as tuples, sorted column by column with NULLs
-    first (ids can be NULL in bad-record reality) — the twins' sink
-    order."""
-    rows = [tuple(r) for r in df.collect()]
-    rows.sort(key=lambda r: [(v is not None, v) for v in r])
-    return rows
-
-
-def _stage_writer(
-    sink: Callable[[list[tuple], int], None], stage: _Stage
-) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch function: `sink(_sorted_rows(score(batch)),
-    batch_id)` per micro-batch. `.release` unpersists the frozen
-    frames after stream stop."""
-    score, frozen = stage
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sink(_sorted_rows(score(batch_df)), batch_id)
-
-    def release() -> None:
-        for f in frozen:
-            f.unpersist()
-
-    process.release = release
-    return process
+from webloghunter_spark.streaming.runner import _filled, _Stage, _stage_writer
 
 
 def _near_stage(

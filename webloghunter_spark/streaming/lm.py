@@ -7,8 +7,8 @@ batch-side (`bigram_lm_model`, persisted count frames); the stream
 only SCORES. A document's likelihood depends on its own bigrams and
 the static counts, so each micro-batch runs the exact frozen scorer
 and the union of per-batch outputs equals the batch result: parity by
-statelessness, replay-idempotent by keyed overwrite. This is CCNet's
-production semantics — the reference LM is pinned for a crawl
+statelessness; a replayed batch re-emits the same rows. This is
+CCNet's production semantics — the reference LM is pinned for a crawl
 snapshot; re-training mid-stream would make scores time-dependent.
 """
 
@@ -19,6 +19,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from webloghunter_spark.functions.lm import bigram_logprob_frozen
+from webloghunter_spark.streaming.runner import _stage_writer
 
 
 def bigram_ll_stream_writer(
@@ -29,18 +30,12 @@ def bigram_ll_stream_writer(
     alpha: float = 0.5,
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function: per micro-batch, `sink(rows,
-    batch_id)` receives the CURRENT accumulated
-    [(id, n_bigrams, avg_ll)] list, sorted by id. Exposes `.state`
-    (id -> row, the parity surface)."""
-    state: dict = {}
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = bigram_logprob_frozen(
-            batch_df, model, text_col=text_col, id_col=id_col, alpha=alpha
-        ).collect()
-        for r in rows:
-            state[r[id_col]] = (int(r["n_bigrams"]), r["avg_ll"])
-        sink([(i, *v) for i, v in sorted(state.items())], batch_id)
-
-    process.state = state
-    return process
+    batch_id)` receives the batch's [(id, n_bigrams, avg_ll)] rows,
+    sorted. The model's count frames stay the caller's to unpersist;
+    `.release()` is a no-op."""
+    return _stage_writer(sink, (
+        lambda b: bigram_logprob_frozen(
+            b, model, text_col=text_col, id_col=id_col, alpha=alpha
+        ),
+        (),
+    ))

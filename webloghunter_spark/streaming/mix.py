@@ -1,17 +1,16 @@
-"""Streaming twin of pipelines/split.mix_temperature — continuously
-updated sampling-temperature weights over an unbounded corpus feed.
+"""Streaming twins of the corpus-mix audits: mix_temperature,
+shard_balance, time_split_audit, unimax_alloc, len_quantiles and
+prefix_modal (plus upsample_epochs under a frozen plan).
 
-Per-source (n_docs, n_tokens) totals merge by SUM — commutative and
-associative, so like streaming/hll.py (max-merge) the final state is
-EXACTLY the batch aggregate regardless of arrival order or batch
-slicing: parity is free, no frozen reference corpus needed (contrast
-the frozen-model twins gate/resample, which pin a reference to keep
-batch/stream results comparable). Each micro-batch contributes one
-map-side-combinable aggregate (|sources-in-batch| rows to the
-driver); the p^alpha normalization re-derives from the running totals
-with the SAME basis-point quantization as the batch operator, so
-`weights()` after the last batch is row-identical to
-mix_temperature() over the union of all batches.
+Each aggregate twin is its batch operator's own partial and finalize
+run by `_merge_writer` (streaming/runner.py): per micro-batch the
+batch's partial (per-group, per-shard or histogram counts) merges
+into the driver-held state by the declared sum or min, and the
+batch operator's finalize runs over the merged frame. The sink
+therefore receives exactly what the batch operator returns over the
+docs streamed so far, at every prefix and for any batch slicing; no
+twin repeats any of the arithmetic. A replayed batch_id re-emits the
+last rows without merging.
 """
 
 from __future__ import annotations
@@ -21,6 +20,9 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from webloghunter_spark.functions.text import token_count_expr
+from webloghunter_spark.streaming.runner import _merge_writer
+
 
 def mix_temperature_stream_writer(
     sink: Callable[[list[tuple], int], None],
@@ -29,87 +31,25 @@ def mix_temperature_stream_writer(
     alpha: float = 0.7,
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function. After each micro-batch,
-    `sink(rows, batch_id)` receives the CURRENT
-    [(group, n_docs, n_tokens, raw_bp, temp_bp, boost_bp)] list over
-    everything seen so far. Exposes `.totals` (the merged state) and
-    `.weights()` for parity checks."""
+    `sink(rows, batch_id)` receives mix_temperature's
+    [(group, n_docs, n_tokens, raw_bp, temp_bp, boost_bp)] over
+    everything seen so far; per-group (n_docs, n_tokens) merge by
+    sum. `.state` holds the merged totals, `.current()` the last
+    rows."""
+    from webloghunter_spark.pipelines.split import (
+        _mix_temperature_finalize,
+        _mix_temperature_partial,
+    )
+
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
-    from webloghunter_spark.functions.text import token_count_expr
-
-    state: dict[str, list[int]] = {}  # group -> [n_docs, n_tokens]
-
-    def weights() -> list[tuple]:
-        import math
-
-        tot = float(sum(v[1] for v in state.values()))
-        # zero-token guards MATCH the batch operator exactly (a group
-        # of all-empty docs, or a whole corpus of them, must not
-        # ZeroDivisionError the stream NOR break row parity): raw
-        # pins to 0 when tot = 0, temp pins to 0 when z = 0, boost
-        # pins to 0 when the group has no tokens.
-        raws = {
-            g: (v[1] / tot if tot > 0 else 0.0)
-            for g, v in state.items()
-        }
-        # normalizer contributions quantized to the 1e-9 integer grid
-        # before summing (matching the batch operator and the DuckDB
-        # oracle exactly): the integer sum is order-free, so parity no
-        # longer leans on float summation order at bp boundaries
-        z = (
-            sum(
-                int(math.floor(raws[g] ** alpha * 1e9 + 0.5))
-                for g in raws
-            )
-            / 1e9
-        )
-
-        def bp(x: float) -> int:
-            return int(math.floor(x * 10000.0 + 0.5))
-
-        out = []
-        # NULL groups sort first, not crash (dirty ingest is normal;
-        # the batch operator keeps a NULL group row)
-        for g in sorted(state, key=lambda k: (k is not None, k)):
-            n_docs, n_tokens = state[g]
-            raw = raws[g]
-            temp = raw ** alpha / z if z > 0 else 0.0
-            boost = bp(temp / raw) if n_tokens > 0 else 0
-            out.append(
-                (g, n_docs, n_tokens, bp(raw), bp(temp), boost)
-            )
-        return out
-
-    # bounded replay guard: batch_ids are monotone within a query, so
-    # one high-water int gives identical at-least-once protection
-    # without accumulating a set entry per micro-batch forever
-    last_seen = [-1]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: a replayed micro-batch arrives
-        # with the SAME batch_id — re-adding its doc/token totals would
-        # double-count, so replays only re-emit the current weights.
-        if batch_id > last_seen[0]:
-            last_seen[0] = batch_id
-            rows = (
-                batch_df.groupBy(group_col)
-                .agg(
-                    F.count(F.lit(1)).alias("_d"),
-                    F.sum(
-                        token_count_expr(text_col).cast("long")
-                    ).alias("_t"),
-                )
-                .collect()
-            )
-            for r in rows:
-                cur = state.setdefault(r[group_col], [0, 0])
-                cur[0] += int(r["_d"])
-                cur[1] += int(r["_t"] or 0)
-        sink(weights(), batch_id)
-
-    process.totals = state
-    process.weights = weights
-    return process
+    ntok = token_count_expr(text_col)
+    return _merge_writer(
+        sink,
+        lambda b: _mix_temperature_partial(b, group_col, ntok),
+        {"n_docs": F.sum, "n_tokens": F.sum},
+        lambda per: _mix_temperature_finalize(per, group_col, alpha),
+    )
 
 
 def upsample_epochs_stream_writer(
@@ -122,7 +62,7 @@ def upsample_epochs_stream_writer(
     """Streaming twin of pipelines/split.upsample_epochs under a
     FROZEN repetition plan: `plan` maps group -> boost_bp (take it
     from a batch mix_temperature over the reference corpus, or from
-    this module's mix_temperature_stream_writer.weights()); each
+    this module's mix_temperature_stream_writer.current()); each
     arriving document expands row-locally to its group's
     clamp(ceil(boost/10000), 1, max_epochs) epochs — the same
     integer-`div` arithmetic as the batch operator. STATELESS: each
@@ -166,72 +106,23 @@ def shard_balance_stream_writer(
     text_col: str = "text",
 ) -> Callable[[DataFrame, int], None]:
     """Streaming twin of pipelines/shard.shard_balance: per-shard
-    (n_docs, n_tokens) totals merge by SUM (the mix/hll sum-merge
-    family — state bounded at n_shards rows, parity free for any
-    batch slicing). After each micro-batch `sink(rows, batch_id)`
-    receives the CURRENT [(shard_id, n_docs, n_tokens,
-    token_share_bp, dev_bp)] — equal at every prefix to the batch
-    operator over the docs streamed so far. Replays are guarded by
-    the high-water batch_id and only re-emit. Exposes `.totals` and
-    `.current()`."""
-    from webloghunter_spark.functions.text import token_count_expr
+    (n_docs, n_tokens) merge by sum (state bounded at n_shards rows).
+    After each micro-batch `sink(rows, batch_id)` receives
+    [(shard_id, n_docs, n_tokens, token_share_bp, dev_bp)] over the
+    docs streamed so far; a NULL doc_id's NULL shard sorts first."""
     from webloghunter_spark.pipelines.shard import (
-        order_key_expr,
-        shard_from_key_expr,
+        _shard_balance_finalize,
+        _shard_balance_partial,
     )
 
     if n_shards <= 0:
         raise ValueError(f"n_shards must be > 0, got {n_shards}")
-    state: dict[int, list[int]] = {}  # shard -> [n_docs, n_tokens]
-    last_seen = [-1]
-
-    def current() -> list[tuple]:
-        tot = sum(v[1] for v in state.values())
-        out = []
-        # a NULL doc_id hashes to a NULL shard — keep it as its own
-        # row (the batch operator and oracle group NULL), sorted first
-        for sh in sorted(state, key=lambda k: (k is not None, k)):
-            d, t = state[sh]
-            share = (t * 20000 + tot) // (2 * tot) if tot > 0 else 0
-            dev = (
-                (abs(t * n_shards - tot) * 20000 + tot * n_shards)
-                // (2 * tot * n_shards)
-                if tot > 0
-                else 0
-            )
-            out.append((sh, d, t, share, dev))
-        return out
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id > last_seen[0]:
-            last_seen[0] = batch_id
-            shard = shard_from_key_expr(
-                order_key_expr(id_col, seed), n_shards
-            )
-            rows = (
-                batch_df.select(
-                    shard.alias("_sh"),
-                    token_count_expr(text_col).cast("long").alias("_t"),
-                )
-                .groupBy("_sh")
-                .agg(
-                    F.count(F.lit(1)).alias("_d"),
-                    F.sum("_t").alias("_t"),
-                )
-                .collect()
-            )
-            for r in rows:
-                sh = r["_sh"]
-                cur = state.setdefault(
-                    int(sh) if sh is not None else None, [0, 0]
-                )
-                cur[0] += int(r["_d"])
-                cur[1] += int(r["_t"] or 0)
-        sink(current(), batch_id)
-
-    process.totals = state
-    process.current = current
-    return process
+    return _merge_writer(
+        sink,
+        lambda b: _shard_balance_partial(b, n_shards, seed, id_col, text_col),
+        {"n_docs": F.sum, "n_tokens": F.sum},
+        lambda per: _shard_balance_finalize(per, n_shards),
+    )
 
 
 def time_split_stream_writer(
@@ -244,58 +135,22 @@ def time_split_stream_writer(
     leakage monitor a live ingest runs against a pinned split cut:
     per-group (n_train, n_test, first_test_epoch) merge by
     (sum, sum, min). State holds one row per group EVER SEEN on
-    EITHER side — train-only groups are retained (a later test-side
-    arrival must find their train counts), so driver memory is
-    O(|distinct groups|), NOT the (typically tiny) leaked-group
-    output; on very-high-cardinality group columns run the batch
-    audit instead. Parity with the batch operator holds at every
-    prefix. `sink(rows, batch_id)`
-    receives the CURRENT leaked-group list
-    [(group, n_train, n_test, first_test_epoch)] sorted by group —
-    only groups with rows on BOTH sides, like the batch operator.
-    Replay-guarded; exposes `.totals` and `.current()`."""
-    state: dict = {}  # group -> [n_train, n_test, min_test_epoch|None]
-    last_seen = [-1]
+    EITHER side (a later test-side arrival must find the group's
+    train counts), so it is O(|distinct groups|), not the (typically
+    tiny) leaked-group output; on very-high-cardinality group columns
+    run the batch audit instead. `sink(rows, batch_id)` receives the
+    leaked groups [(group, n_train, n_test, first_test_epoch)]."""
+    from webloghunter_spark.pipelines.split import (
+        _time_split_finalize,
+        _time_split_partial,
+    )
 
-    def current() -> list[tuple]:
-        return [
-            (g, v[0], v[1], v[2])
-            for g, v in sorted(
-                state.items(), key=lambda kv: (kv[0] is not None, kv[0])
-            )
-            if v[0] > 0 and v[1] > 0
-        ]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id > last_seen[0]:
-            last_seen[0] = batch_id
-            c = F.col(ts_col)
-            is_test = c >= F.lit(cut).cast("timestamp")
-            rows = (
-                batch_df.groupBy(group_col)
-                .agg(
-                    F.sum(F.when(~is_test, 1).otherwise(0)).alias("_tr"),
-                    F.sum(F.when(is_test, 1).otherwise(0)).alias("_te"),
-                    F.min(
-                        F.when(is_test, F.unix_timestamp(c))
-                    ).alias("_fe"),
-                )
-                .collect()
-            )
-            for r in rows:
-                cur = state.setdefault(r[group_col], [0, 0, None])
-                cur[0] += int(r["_tr"])
-                cur[1] += int(r["_te"])
-                fe = r["_fe"]
-                if fe is not None:
-                    cur[2] = int(fe) if cur[2] is None else min(
-                        cur[2], int(fe)
-                    )
-        sink(current(), batch_id)
-
-    process.totals = state
-    process.current = current
-    return process
+    return _merge_writer(
+        sink,
+        lambda b: _time_split_partial(b, cut, group_col, ts_col),
+        {"n_train": F.sum, "n_test": F.sum, "first_test_epoch": F.min},
+        _time_split_finalize,
+    )
 
 
 def unimax_alloc_stream_writer(
@@ -307,60 +162,29 @@ def unimax_alloc_stream_writer(
 ) -> Callable[[DataFrame, int], None]:
     """Streaming twin of pipelines/select.unimax_alloc — the budget
     plan recomputed as the corpus grows: per-source token counts
-    merge by SUM (state bounded at |sources| rows), then the SAME
-    unimax_waterfill the batch operator runs (imported, not copied —
-    one algorithm, no drift) re-plans on the merged counts. Budget is
-    relative to the streamed-so-far total, so every prefix equals the
-    batch operator over the docs streamed so far, for any batch
-    slicing. A NULL group fails loudly, exactly like the batch form.
-    Replay-guarded; `sink(rows, batch_id)` receives the CURRENT
-    [(group, c_tokens, cap_tokens, alloc_tokens, capped, epochs_bp)]
-    in ascending (capacity, group) order; exposes `.totals` and
-    `.current()`."""
-    from webloghunter_spark.functions.text import token_count_expr
-    from webloghunter_spark.pipelines.select import unimax_waterfill
+    merge by sum (state bounded at |sources| rows) and the batch
+    finalize re-plans the waterfill on them. The budget is relative
+    to the streamed-so-far total, so every prefix equals the batch
+    operator over the docs streamed so far. A NULL group fails
+    loudly, exactly like the batch form, and leaves the state as it
+    was. `sink(rows, batch_id)` receives [(group, c_tokens,
+    cap_tokens, alloc_tokens, capped, epochs_bp)]."""
+    from webloghunter_spark.pipelines.select import (
+        _check_unimax_args,
+        _unimax_finalize,
+        _unimax_partial,
+    )
 
-    if budget_bp_of_total < 0:
-        raise ValueError(
-            f"budget_bp_of_total must be >= 0, got {budget_bp_of_total}"
-        )
-    if max_epochs < 1:
-        raise ValueError(f"max_epochs must be >= 1, got {max_epochs}")
-    state: dict = {}  # group -> c_tokens
-    last_seen = [-1]
-
-    def current() -> list[tuple]:
-        return unimax_waterfill(
-            list(state.items()), budget_bp_of_total, max_epochs
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id > last_seen[0]:
-            last_seen[0] = batch_id
-            rows = (
-                batch_df.groupBy(group_col)
-                .agg(
-                    F.sum(
-                        token_count_expr(text_col).cast("long")
-                    ).alias("_c")
-                )
-                .collect()
-            )
-            if any(r[group_col] is None for r in rows):
-                raise ValueError(
-                    "unimax_alloc_stream_writer: NULL group value —"
-                    " coalesce the group column upstream (batch-form"
-                    " contract)."
-                )
-            for r in rows:
-                state[r[group_col]] = state.get(r[group_col], 0) + int(
-                    r["_c"] or 0
-                )
-        sink(current(), batch_id)
-
-    process.totals = state
-    process.current = current
-    return process
+    _check_unimax_args(budget_bp_of_total, max_epochs)
+    ntok = token_count_expr(text_col)
+    return _merge_writer(
+        sink,
+        lambda b: _unimax_partial(b, group_col, ntok),
+        {"_c": F.sum},
+        lambda per: _unimax_finalize(
+            per, budget_bp_of_total, max_epochs, group_col
+        ),
+    )
 
 
 def len_quantiles_stream_writer(
@@ -370,62 +194,23 @@ def len_quantiles_stream_writer(
     group_col: str = "source",
 ) -> Callable[[DataFrame, int], None]:
     """Streaming twin of pipelines/select.len_quantiles — the
-    length-profile monitor over a live ingest: per micro-batch,
-    (source, ntok) counts merge into state by SUM (bounded at
-    |sources| x |distinct lengths| rows), then the nearest-rank walk
-    replays per source on the merged histogram. Every prefix equals
-    the batch operator over the docs streamed so far, for any batch
-    slicing (the quantile is a deterministic function of the
-    histogram). Replay-guarded; `sink(rows, batch_id)` receives the
-    CURRENT [(source, q_bp, n_docs, ntok)] sorted null-first by
-    (source, q_bp); exposes `.counts` and `.current()`."""
-    from webloghunter_spark.functions.text import token_count_expr
+    length-profile monitor over a live ingest: (source, ntok) counts
+    merge by sum (bounded at |sources| x |distinct lengths| rows) and
+    the batch nearest-rank walk runs on the merged histogram.
+    `sink(rows, batch_id)` receives [(source, q_bp, n_docs, ntok)]."""
+    from webloghunter_spark.pipelines.select import (
+        _len_quantiles_finalize,
+        _len_quantiles_partial,
+    )
 
-    qs = sorted({int(q) for q in qs_bp})
-    if not qs or any(not (0 < q <= 10000) for q in qs):
+    if not qs_bp or any(not (0 < q <= 10000) for q in qs_bp):
         raise ValueError(f"qs_bp must be in (0, 10000], got {qs_bp}")
-    state: dict = {}  # (source, ntok) -> count
-    last_seen = [-1]
-
-    def current() -> list[tuple]:
-        per_src: dict = {}
-        for (src, k), c in state.items():
-            per_src.setdefault(src, {})
-            per_src[src][k] = per_src[src].get(k, 0) + c
-        out: list[tuple] = []
-        for src in sorted(per_src, key=lambda s: (s is not None, s)):
-            hist = sorted(per_src[src].items())
-            n = sum(c for _, c in hist)
-            for q in qs:
-                rank = max(1, (q * n + 9999) // 10000)
-                cum = 0
-                for k, c in hist:
-                    cum += c
-                    if cum >= rank:
-                        out.append((src, q, n, k))
-                        break
-        return out
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id > last_seen[0]:
-            last_seen[0] = batch_id
-            rows = (
-                batch_df.select(
-                    F.col(group_col).alias("_s"),
-                    token_count_expr(text_col).alias("_k"),
-                )
-                .groupBy("_s", "_k")
-                .agg(F.count(F.lit(1)).alias("_c"))
-                .collect()
-            )
-            for r in rows:
-                key = (r["_s"], int(r["_k"]))
-                state[key] = state.get(key, 0) + int(r["_c"])
-        sink(current(), batch_id)
-
-    process.counts = state
-    process.current = current
-    return process
+    return _merge_writer(
+        sink,
+        lambda b: _len_quantiles_partial(b, text_col, group_col),
+        {"_c": F.sum},
+        lambda hist: _len_quantiles_finalize(hist, qs_bp),
+    )
 
 
 def prefix_modal_stream_writer(
@@ -436,58 +221,20 @@ def prefix_modal_stream_writer(
 ) -> Callable[[DataFrame, int], None]:
     """Streaming twin of pipelines/curate.prefix_modal — the
     template-farm monitor over a live ingest: (source, prefix) counts
-    merge by SUM (state bounded by distinct prefixes per source),
-    then the modal argmax (max count, lexicographically smallest
-    prefix on ties) replays on the merged counts. Every prefix of
-    the stream equals the batch operator, for any slicing.
-    Replay-guarded; `sink(rows, batch_id)` receives the CURRENT
-    [(source, n_docs, n_prefixes, top_prefix, top_n, top_share_bp)]
-    sorted null-first by source; exposes `.counts` and
-    `.current()`."""
+    merge by sum (state bounded by distinct prefixes per source) and
+    the batch argmax runs on the merged counts. `sink(rows,
+    batch_id)` receives [(source, n_docs, n_prefixes, top_prefix,
+    top_n, top_share_bp)]."""
+    from webloghunter_spark.pipelines.curate import (
+        _prefix_modal_finalize,
+        _prefix_modal_partial,
+    )
+
     if n_tokens < 1:
         raise ValueError(f"n_tokens must be >= 1, got {n_tokens}")
-    from webloghunter_spark.functions.text import tokens_expr
-
-    state: dict = {}  # (source, prefix) -> count
-    last_seen = [-1]
-
-    def current() -> list[tuple]:
-        per_src: dict = {}
-        for (src, p), c in state.items():
-            per_src.setdefault(src, {})
-            per_src[src][p] = per_src[src].get(p, 0) + c
-        out: list[tuple] = []
-        for src in sorted(per_src, key=lambda s: (s is not None, s)):
-            counts = per_src[src]
-            n_docs = sum(counts.values())
-            top_p, top_n = min(
-                counts.items(), key=lambda kv: (-kv[1], kv[0])
-            )
-            out.append(
-                (src, n_docs, len(counts), top_p, top_n,
-                 (top_n * 10000) // n_docs)
-            )
-        return out
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id > last_seen[0]:
-            last_seen[0] = batch_id
-            prefix = F.array_join(
-                F.slice(tokens_expr(text_col), 1, n_tokens), " "
-            )
-            rows = (
-                batch_df.select(
-                    F.col(group_col).alias("_s"), prefix.alias("_p")
-                )
-                .groupBy("_s", "_p")
-                .agg(F.count(F.lit(1)).alias("_c"))
-                .collect()
-            )
-            for r in rows:
-                key = (r["_s"], r["_p"])
-                state[key] = state.get(key, 0) + int(r["_c"])
-        sink(current(), batch_id)
-
-    process.counts = state
-    process.current = current
-    return process
+    return _merge_writer(
+        sink,
+        lambda b: _prefix_modal_partial(b, n_tokens, text_col, group_col),
+        {"_n": F.sum},
+        _prefix_modal_finalize,
+    )
