@@ -403,6 +403,7 @@ def test_dist_drift_batch_stream_parity(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+        fn.release()
     assert seen["batches"] >= 2
     assert seen["last"] == [(expected.n_a, expected.n_b, expected.js_nano)]
 
@@ -480,13 +481,16 @@ def test_dist_drift_stream_replay_idempotent(spark):
     )
     emitted = []
     fn = dist_drift_stream_writer(ref, lambda row, bid: emitted.append(row))
-    fn(batch, 0)
-    first = list(fn.state)
-    fn(batch, 0)  # replay: same batch_id
-    assert fn.state == first  # no double count
-    assert emitted[0] == emitted[1]  # but the sink still saw a row
-    fn(batch, 1)  # a genuinely new batch does merge
-    assert sum(c for _, c in fn.state) == 2 * sum(c for _, c in first)
+    try:
+        fn(batch, 0)
+        first = list(fn.state)
+        fn(batch, 0)  # replay: same batch_id
+        assert fn.state == first  # no double count
+        assert emitted[0] == emitted[1]  # but the sink still saw a row
+        fn(batch, 1)  # a genuinely new batch does merge
+        assert sum(c for _, c in fn.state) == 2 * sum(c for _, c in first)
+    finally:
+        fn.release()
 
 
 def test_contam_matrix_stream_replay_idempotent(spark):
@@ -1664,9 +1668,9 @@ def test_time_split_batch_stream_parity_and_replay(spark, tmp_path):
         tuple(r) for r in time_split_audit(ev, cut).collect()
     )
     assert sorted(seen["last"]) == expected
-    first = list(fn.state)
+    first = {k: list(v) for k, v in fn.totals.items()}
     fn(ev, 0)  # stale batch_id
-    assert fn.state == first
+    assert {k: list(v) for k, v in fn.totals.items()} == first
 
 
 def test_stream_twins_null_keys_no_crash(spark):
@@ -2126,9 +2130,9 @@ def test_ewma_alerts_batch_stream_parity_and_replay(spark, tmp_path):
             tuple(r) for r in ewma_alerts(prefix).collect()
         )
         assert sorted(fn.current()) == exp
-    first = list(fn.state)
+    first = dict(fn.counts)
     fn(ev, 0)  # stale batch_id: must not merge
-    assert fn.state == first
+    assert dict(fn.counts) == first
     # NULL ts: type enters the dim with zero counts, span unchanged
     nulls = spark.createDataFrame(
         [("ghost", None)], "event_type string, ts timestamp"
@@ -2222,6 +2226,10 @@ def test_prefix_modal_batch_stream_parity(spark):
     # after batch 1 'a a a' wins outright at 3/4
     t_row = [r for r in fn.current() if r[0] == "t"][0]
     assert t_row[3] == "a a a" and t_row[4] == 3 and t_row[5] == 7500
+    # replay guard: a re-delivered batch_id must not re-add its counts
+    snap, rows = dict(fn.counts), fn.current()
+    fn(df, 1)
+    assert dict(fn.counts) == snap and fn.current() == rows
 
 
 def test_containment_drop_twin_every_prefix_vs_registry(spark):
@@ -2343,22 +2351,16 @@ def test_curate_against_twin_every_prefix_vs_registry(spark):
 def _merge_twin(name, spark, sink):
     """(writer, batch operator over a frame, projected to the sink
     columns) for one merge twin."""
-    from webloghunter_spark.detectors.ewma import ewma_alerts
     from webloghunter_spark.functions.sketches import hll_distinct
-    from webloghunter_spark.pipelines.curate import prefix_modal
     from webloghunter_spark.pipelines.select import (
         distribution_drift,
         len_quantiles,
         unimax_alloc,
     )
     from webloghunter_spark.pipelines.shard import shard_balance
-    from webloghunter_spark.pipelines.split import (
-        mix_temperature,
-        time_split_audit,
-    )
+    from webloghunter_spark.pipelines.split import mix_temperature
     from webloghunter_spark.streaming import drift, hll, mix
 
-    cut = "2024-01-01 01:00:00"
     ref = spark.createDataFrame(
         [(0, "alpha beta gamma"), (1, "beta delta")],
         "doc_id long, text string",
@@ -2372,10 +2374,6 @@ def _merge_twin(name, spark, sink):
             lambda: mix.shard_balance_stream_writer(sink, n_shards=3),
             lambda d: shard_balance(d, n_shards=3),
         ),
-        "time_split": (
-            lambda: mix.time_split_stream_writer(sink, cut),
-            lambda d: time_split_audit(d, cut),
-        ),
         "unimax_alloc": (
             lambda: mix.unimax_alloc_stream_writer(sink),
             unimax_alloc,
@@ -2384,17 +2382,9 @@ def _merge_twin(name, spark, sink):
             lambda: mix.len_quantiles_stream_writer(sink),
             len_quantiles,
         ),
-        "prefix_modal": (
-            lambda: mix.prefix_modal_stream_writer(sink, n_tokens=1),
-            lambda d: prefix_modal(d, n_tokens=1),
-        ),
         "dist_drift": (
             lambda: drift.dist_drift_stream_writer(ref, sink),
             lambda d: distribution_drift(ref, d),
-        ),
-        "ewma_alerts": (
-            lambda: drift.ewma_alerts_stream_writer(sink),
-            ewma_alerts,
         ),
         "hll_distinct": (
             lambda: hll.hll_distinct_stream_writer(sink, "text", ["source"]),
@@ -2418,9 +2408,8 @@ def _jobs_in(sc, group, action):
 
 @pytest.mark.parametrize(
     "name",
-    ["mix_temperature", "shard_balance", "time_split", "unimax_alloc",
-     "len_quantiles", "prefix_modal", "dist_drift", "ewma_alerts",
-     "hll_distinct"],
+    ["mix_temperature", "shard_balance", "unimax_alloc", "len_quantiles",
+     "dist_drift", "hll_distinct"],
 )
 def test_merge_twin_replay_reemits_without_a_job(spark, name):
     """The merge runner's one replay guard, per twin: a replayed
@@ -2434,13 +2423,10 @@ def test_merge_twin_replay_reemits_without_a_job(spark, name):
         name, spark, lambda rows, bid: emitted.append(rows)
     )
     b = spark.createDataFrame(
-        [(0, "web", "alpha beta gamma", 1, "2024-01-01 00:10:00", "click"),
-         (1, "web", "alpha zeta", 2, "2024-01-01 01:20:00", "error"),
-         (2, "code", "beta beta eta theta", 1, "2024-01-01 03:05:00",
-          "click")],
-        "doc_id long, source string, text string, user_id long, "
-        "ts_s string, event_type string",
-    ).withColumn("ts", F.to_timestamp("ts_s"))
+        [(0, "web", "alpha beta gamma"), (1, "web", "alpha zeta"),
+         (2, "code", "beta beta eta theta")],
+        "doc_id long, source string, text string",
+    )
     sc = spark.sparkContext
     try:
         fn(b, 0)

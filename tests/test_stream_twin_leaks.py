@@ -37,9 +37,6 @@ def _with_columns(df):
         "doc_id",
         "text",
         F.concat(F.lit("s"), (i % 2).cast("string")).alias("source"),
-        (i % 3).alias("user_id"),
-        F.timestamp_seconds(i * 1800).alias("ts"),
-        F.when(i % 2 == 0, "click").otherwise("error").alias("event_type"),
         F.array(F.lit(1.0), (i % 2).cast("double"), F.lit(0.0), F.lit(0.0))
         .alias("embedding"),
     )
@@ -143,12 +140,6 @@ def _drift(sink, corpus):
     return dist_drift_stream_writer(corpus, sink)
 
 
-def _ewma(sink, corpus):
-    from webloghunter_spark.streaming.drift import ewma_alerts_stream_writer
-
-    return ewma_alerts_stream_writer(sink)
-
-
 def _hll(sink, corpus):
     from webloghunter_spark.streaming.hll import hll_distinct_stream_writer
 
@@ -158,12 +149,9 @@ def _hll(sink, corpus):
 _MERGE_TWINS = {
     "mix_temperature": _mix("mix_temperature_stream_writer"),
     "shard_balance": _mix("shard_balance_stream_writer", n_shards=4),
-    "time_split": _mix("time_split_stream_writer", cut="1970-01-01 01:00:00"),
     "unimax_alloc": _mix("unimax_alloc_stream_writer"),
     "len_quantiles": _mix("len_quantiles_stream_writer"),
-    "prefix_modal": _mix("prefix_modal_stream_writer"),
     "dist_drift": _drift,
-    "ewma_alerts": _ewma,
     "hll_distinct": _hll,
 }
 

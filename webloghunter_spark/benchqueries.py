@@ -9524,23 +9524,21 @@ SQL_BM25_BATCH = _bm25_batch_sql()
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # ORDER IS DRIVER COVERAGE: the correctness driver samples the
-    # FIRST 50 entries. Front = the 11 names whose operator was split
+    # FIRST 50 entries. Front = the 9 names whose operator was split
     # into a partial aggregate and a finalize (its streaming twin runs
     # both), then the 20 names whose work changed when each Python UDF
     # became one evaluation per row (their plans, or the plans of the
     # stages they settle, apply the MinHash, SimHash or winnowing UDF),
     # then the other 13 names whose builder changed when each operator
-    # kept one implementation, then the first 6 of the previous
+    # kept one implementation, then the first 8 of the previous
     # front's staleness cohort. Everything after slot 50 is covered by
     # the committed full-registry HASHCHECK artifacts.
-    # -- operators split into partial and finalize (11) --
+    # -- operators split into partial and finalize (9) --
     "mix_temperature": q_mix_temperature,
     "upsample_epochs": q_upsample_epochs,
     "shard_balance": q_shard_balance,
-    "time_split": q_time_split,
     "unimax_alloc": q_unimax_alloc,
     "len_quantiles": q_len_quantiles,
-    "prefix_modal": q_prefix_modal,
     "dist_drift": q_dist_drift,
     "emb_drift": q_emb_drift,
     "hll_distinct": q_hll_distinct,
@@ -9645,6 +9643,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "media_sniff": q_media_sniff,
     "novelty_frac": q_novelty_frac,
     "padding_curve": q_padding_curve,
+    "prefix_modal": q_prefix_modal,
     "quality_gate": q_quality_gate,
     "quantize_recall": q_quantize_recall,
     "rollup_counts": q_rollup_counts,
@@ -9693,6 +9692,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sessionize": q_sessionize,
     "sigma_rules": q_sigma_rules,
     "text_normalize": q_text_normalize,
+    "time_split": q_time_split,
     "token_stats": q_token_stats,
     "tool_scan": q_tool_scan,
     "tool_scan_single": q_tool_scan_single,

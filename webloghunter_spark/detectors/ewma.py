@@ -46,7 +46,9 @@ def ewma_fold(
     threshold_num: int = 2,
 ) -> list[tuple[int, int, int]]:
     """The exact integer EWMA recursion over an hour-ordered count
-    series: [(ewma_micro, prev_micro, alert)] per position."""
+    series: [(ewma_micro, prev_micro, alert)] per position. Pure
+    function shared by the batch operator and the streaming twin —
+    one algorithm, no drift."""
     keep = lam_denom - lam_num
     out: list[tuple[int, int, int]] = []
     prev = 0
@@ -63,61 +65,30 @@ def ewma_fold(
     return out
 
 
-def _ewma_partial(
-    events: DataFrame, ts_col: str, type_col: str
-) -> DataFrame:
-    """(event_type, hour_epoch, cnt) counts: ewma_alerts' combinable
-    half; partials merge by sum. A NULL ts keeps a NULL hour, so its
-    type still enters the type dimension."""
-    return (
-        events.select(
-            F.col(type_col).alias("event_type"),
-            F.unix_timestamp(F.date_trunc("hour", ts_col)).alias("hour_epoch"),
-        )
-        .groupBy("event_type", "hour_epoch")
+def hourly_counts_spine(events: DataFrame, ts_col: str = "ts",
+                        type_col: str = "event_type") -> DataFrame:
+    """Zero-filled (hour_epoch, type, cnt) over the full hour spine."""
+    counts = (
+        events.select(F.date_trunc("hour", ts_col).alias("h"), type_col)
+        .groupBy("h", type_col)
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def _ewma_finalize(
-    counts: DataFrame, lam_num: int, lam_denom: int, threshold_num: int
-) -> DataFrame:
-    """Zero-fill the counts over the full hour spine x type dimension
-    (the spine join is NULL-unsafe, so a NULL type gets zero counts),
-    then run ewma_fold per type."""
-    bounds = counts.agg(
-        F.min("hour_epoch").alias("mn"), F.max("hour_epoch").alias("mx")
+    bounds = events.agg(
+        F.date_trunc("hour", F.min(ts_col)).alias("mn"),
+        F.date_trunc("hour", F.max(ts_col)).alias("mx"),
     )
     spine = bounds.select(
-        F.explode(
-            F.sequence("mn", "mx", F.lit(3600).cast("long"))
-        ).alias("hour_epoch")
+        F.explode(F.expr("sequence(mn, mx, interval 1 hour)")).alias("h")
     )
-    types = counts.select("event_type").distinct()
-    base = (
+    types = events.select(type_col).distinct()
+    return (
         spine.crossJoin(F.broadcast(types))
-        .join(counts, ["hour_epoch", "event_type"], "left")
+        .join(counts, ["h", type_col], "left")
         .select(
-            "hour_epoch",
-            "event_type",
+            F.unix_timestamp("h").alias("hour_epoch"),
+            F.col(type_col).alias("event_type"),
             F.coalesce("cnt", F.lit(0)).cast("long").alias("cnt"),
         )
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("hour_epoch").reset_index(drop=True)
-        cnts = pdf["cnt"].astype("int64").tolist()
-        trip = ewma_fold(cnts, lam_num, lam_denom, threshold_num)
-        pdf["ewma_micro"] = pd.Series([t[0] for t in trip], dtype="int64")
-        pdf["prev_micro"] = pd.Series([t[1] for t in trip], dtype="int64")
-        pdf["alert"] = pd.Series([t[2] for t in trip], dtype="int64")
-        return pdf[["event_type", "hour_epoch", "cnt",
-                    "ewma_micro", "prev_micro", "alert"]]
-
-    return base.groupBy("event_type").applyInPandas(
-        fold,
-        "event_type string, hour_epoch long, cnt long, "
-        "ewma_micro long, prev_micro long, alert long",
     )
 
 
@@ -137,7 +108,20 @@ def ewma_alerts(
     """
     if not (0 < lam_num < lam_denom):
         raise ValueError("need 0 < lam_num < lam_denom")
-    return _ewma_finalize(
-        _ewma_partial(events, ts_col, type_col),
-        lam_num, lam_denom, threshold_num,
+    base = hourly_counts_spine(events, ts_col, type_col)
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("hour_epoch").reset_index(drop=True)
+        cnts = pdf["cnt"].astype("int64").tolist()
+        trip = ewma_fold(cnts, lam_num, lam_denom, threshold_num)
+        pdf["ewma_micro"] = pd.Series([t[0] for t in trip], dtype="int64")
+        pdf["prev_micro"] = pd.Series([t[1] for t in trip], dtype="int64")
+        pdf["alert"] = pd.Series([t[2] for t in trip], dtype="int64")
+        return pdf[["event_type", "hour_epoch", "cnt",
+                    "ewma_micro", "prev_micro", "alert"]]
+
+    return base.groupBy("event_type").applyInPandas(
+        fold,
+        "event_type string, hour_epoch long, cnt long, "
+        "ewma_micro long, prev_micro long, alert long",
     )

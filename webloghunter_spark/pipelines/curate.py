@@ -766,31 +766,16 @@ def prefix_modal(
     """
     if n_tokens < 1:
         raise ValueError(f"n_tokens must be >= 1, got {n_tokens}")
-    return _prefix_modal_finalize(
-        _prefix_modal_partial(df, n_tokens, text_col, group_col)
-    )
-
-
-def _prefix_modal_partial(
-    df: DataFrame, n_tokens: int, text_col: str, group_col: str
-) -> DataFrame:
-    """(source, _p, _n) prefix counts: prefix_modal's combinable half;
-    partials merge by sum."""
     from webloghunter_spark.functions.text import tokens_expr
 
     prefix = F.array_join(
         F.slice(tokens_expr(text_col), 1, n_tokens), " "
     )
-    return (
+    counts = (
         df.select(F.col(group_col).alias("source"), prefix.alias("_p"))
         .groupBy("source", "_p")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-
-
-def _prefix_modal_finalize(counts: DataFrame) -> DataFrame:
-    """Each source's modal prefix (struct-MIN argmax) from its prefix
-    counts."""
     per_source = counts.groupBy("source").agg(
         F.sum("_n").cast("long").alias("n_docs"),
         F.count(F.lit(1)).cast("long").alias("n_prefixes"),

@@ -730,26 +730,20 @@ def time_split_audit(
     Scale: one conditional-count aggregate per group (map-side
     combinable, one shuffle on the group key) + a HAVING-style filter
     on the |groups|-row result. No join, no window over the corpus."""
-    return _time_split_finalize(
-        _time_split_partial(df, cut, group_col, ts_col)
-    )
-
-
-def _time_split_partial(
-    df: DataFrame, cut: str, group_col: str, ts_col: str
-) -> DataFrame:
-    """(group, n_train, n_test, first_test_epoch) per group:
-    time_split_audit's combinable half; partials merge by (sum, sum,
-    min)."""
     c = F.col(ts_col)
     is_test = c >= F.lit(cut).cast("timestamp")
-    return df.groupBy(group_col).agg(
-        F.sum(F.when(~is_test, 1).otherwise(0)).cast("long").alias("n_train"),
-        F.sum(F.when(is_test, 1).otherwise(0)).cast("long").alias("n_test"),
-        F.min(F.when(is_test, F.unix_timestamp(c))).alias("first_test_epoch"),
+    return (
+        df.groupBy(group_col)
+        .agg(
+            F.sum(F.when(~is_test, 1).otherwise(0))
+            .cast("long")
+            .alias("n_train"),
+            F.sum(F.when(is_test, 1).otherwise(0))
+            .cast("long")
+            .alias("n_test"),
+            F.min(
+                F.when(is_test, F.unix_timestamp(c))
+            ).alias("first_test_epoch"),
+        )
+        .filter((F.col("n_train") > 0) & (F.col("n_test") > 0))
     )
-
-
-def _time_split_finalize(per: DataFrame) -> DataFrame:
-    """The leaked groups: rows on both sides of the cut."""
-    return per.filter((F.col("n_train") > 0) & (F.col("n_test") > 0))

@@ -11,6 +11,13 @@ therefore receives exactly what the batch operator returns over the
 docs streamed so far, at every prefix and for any batch slicing; no
 twin repeats any of the arithmetic. A replayed batch_id re-emits the
 last rows without merging.
+
+time_split and prefix_modal are not on the runner: their state grows
+with the corpus (one row per distinct group, one per distinct
+prefix), and the runner sends its whole state to Spark every
+trigger. They merge each batch's aggregate into a driver dict and
+replay the batch operator's filter / argmax in Python, until the
+state can live in an executor-side frame.
 """
 
 from __future__ import annotations
@@ -135,22 +142,58 @@ def time_split_stream_writer(
     leakage monitor a live ingest runs against a pinned split cut:
     per-group (n_train, n_test, first_test_epoch) merge by
     (sum, sum, min). State holds one row per group EVER SEEN on
-    EITHER side (a later test-side arrival must find the group's
-    train counts), so it is O(|distinct groups|), not the (typically
-    tiny) leaked-group output; on very-high-cardinality group columns
-    run the batch audit instead. `sink(rows, batch_id)` receives the
-    leaked groups [(group, n_train, n_test, first_test_epoch)]."""
-    from webloghunter_spark.pipelines.split import (
-        _time_split_finalize,
-        _time_split_partial,
-    )
+    EITHER side — train-only groups are retained (a later test-side
+    arrival must find their train counts), so driver memory is
+    O(|distinct groups|), NOT the (typically tiny) leaked-group
+    output; on very-high-cardinality group columns run the batch
+    audit instead. Parity with the batch operator holds at every
+    prefix. `sink(rows, batch_id)`
+    receives the CURRENT leaked-group list
+    [(group, n_train, n_test, first_test_epoch)] sorted by group —
+    only groups with rows on BOTH sides, like the batch operator.
+    Replay-guarded; exposes `.totals` and `.current()`."""
+    state: dict = {}  # group -> [n_train, n_test, min_test_epoch|None]
+    last_seen = [-1]
 
-    return _merge_writer(
-        sink,
-        lambda b: _time_split_partial(b, cut, group_col, ts_col),
-        {"n_train": F.sum, "n_test": F.sum, "first_test_epoch": F.min},
-        _time_split_finalize,
-    )
+    def current() -> list[tuple]:
+        return [
+            (g, v[0], v[1], v[2])
+            for g, v in sorted(
+                state.items(), key=lambda kv: (kv[0] is not None, kv[0])
+            )
+            if v[0] > 0 and v[1] > 0
+        ]
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id > last_seen[0]:
+            last_seen[0] = batch_id
+            c = F.col(ts_col)
+            is_test = c >= F.lit(cut).cast("timestamp")
+            rows = (
+                batch_df.groupBy(group_col)
+                .agg(
+                    F.sum(F.when(~is_test, 1).otherwise(0)).alias("_tr"),
+                    F.sum(F.when(is_test, 1).otherwise(0)).alias("_te"),
+                    F.min(
+                        F.when(is_test, F.unix_timestamp(c))
+                    ).alias("_fe"),
+                )
+                .collect()
+            )
+            for r in rows:
+                cur = state.setdefault(r[group_col], [0, 0, None])
+                cur[0] += int(r["_tr"])
+                cur[1] += int(r["_te"])
+                fe = r["_fe"]
+                if fe is not None:
+                    cur[2] = int(fe) if cur[2] is None else min(
+                        cur[2], int(fe)
+                    )
+        sink(current(), batch_id)
+
+    process.totals = state
+    process.current = current
+    return process
 
 
 def unimax_alloc_stream_writer(
@@ -221,20 +264,58 @@ def prefix_modal_stream_writer(
 ) -> Callable[[DataFrame, int], None]:
     """Streaming twin of pipelines/curate.prefix_modal — the
     template-farm monitor over a live ingest: (source, prefix) counts
-    merge by sum (state bounded by distinct prefixes per source) and
-    the batch argmax runs on the merged counts. `sink(rows,
-    batch_id)` receives [(source, n_docs, n_prefixes, top_prefix,
-    top_n, top_share_bp)]."""
-    from webloghunter_spark.pipelines.curate import (
-        _prefix_modal_finalize,
-        _prefix_modal_partial,
-    )
-
+    merge by SUM (state bounded by distinct prefixes per source),
+    then the modal argmax (max count, lexicographically smallest
+    prefix on ties) replays on the merged counts. Every prefix of
+    the stream equals the batch operator, for any slicing.
+    Replay-guarded; `sink(rows, batch_id)` receives the CURRENT
+    [(source, n_docs, n_prefixes, top_prefix, top_n, top_share_bp)]
+    sorted null-first by source; exposes `.counts` and
+    `.current()`."""
     if n_tokens < 1:
         raise ValueError(f"n_tokens must be >= 1, got {n_tokens}")
-    return _merge_writer(
-        sink,
-        lambda b: _prefix_modal_partial(b, n_tokens, text_col, group_col),
-        {"_n": F.sum},
-        _prefix_modal_finalize,
-    )
+    from webloghunter_spark.functions.text import tokens_expr
+
+    state: dict = {}  # (source, prefix) -> count
+    last_seen = [-1]
+
+    def current() -> list[tuple]:
+        per_src: dict = {}
+        for (src, p), c in state.items():
+            per_src.setdefault(src, {})
+            per_src[src][p] = per_src[src].get(p, 0) + c
+        out: list[tuple] = []
+        for src in sorted(per_src, key=lambda s: (s is not None, s)):
+            counts = per_src[src]
+            n_docs = sum(counts.values())
+            top_p, top_n = min(
+                counts.items(), key=lambda kv: (-kv[1], kv[0])
+            )
+            out.append(
+                (src, n_docs, len(counts), top_p, top_n,
+                 (top_n * 10000) // n_docs)
+            )
+        return out
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id > last_seen[0]:
+            last_seen[0] = batch_id
+            prefix = F.array_join(
+                F.slice(tokens_expr(text_col), 1, n_tokens), " "
+            )
+            rows = (
+                batch_df.select(
+                    F.col(group_col).alias("_s"), prefix.alias("_p")
+                )
+                .groupBy("_s", "_p")
+                .agg(F.count(F.lit(1)).alias("_c"))
+                .collect()
+            )
+            for r in rows:
+                key = (r["_s"], r["_p"])
+                state[key] = state.get(key, 0) + int(r["_c"])
+        sink(current(), batch_id)
+
+    process.counts = state
+    process.current = current
+    return process

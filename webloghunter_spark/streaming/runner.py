@@ -1,4 +1,4 @@
-"""The two foreachBatch runners every batch-operator twin is built on.
+"""The two foreachBatch runners the batch-operator twins are built on.
 
 A twin is its batch operator run per micro-batch by one of them:
 
@@ -13,8 +13,9 @@ A twin is its batch operator run per micro-batch by one of them:
   so the merged state is the partial of everything streamed so far
   and `finalize(state)` IS the batch operator over it, at every
   prefix and for any slicing. State is held on the driver and sent
-  back to Spark each trigger, so it suits operators whose partial is
-  small (|groups|, |shards|, |buckets| or |hours| rows).
+  back to Spark once each trigger, so it suits operators whose partial
+  stays small as the stream grows (|sources|, |shards|, |buckets| or
+  |hours| rows), not one row per user or per distinct prefix.
 """
 
 from __future__ import annotations
@@ -83,6 +84,9 @@ def _merge_writer(
     as the new state, and `sink` receives
     `_sorted_rows(finalize(state))`.
 
+    The state is sent to Spark once per trigger: the frame `finalize`
+    ran over is kept and unioned with the next batch's partial.
+
     foreachBatch is at-least-once: a replayed batch_id (one at or
     below the high-water mark; ids are monotone within a query)
     re-emits the last rows and runs no job. The state moves only
@@ -91,15 +95,15 @@ def _merge_writer(
     sent, `.release()` unpersists `frozen`."""
     last_seen = [-1]
     out: list[tuple] = []
+    held: list[DataFrame] = []  # the state frame finalize last ran over
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id > last_seen[0]:
-            spark = batch_df.sparkSession
             part = partial(batch_df)
             schema = part.schema
             keys = [c for c in part.columns if c not in merge]
             state = _sorted_rows(
-                part.union(spark.createDataFrame(process.state, schema))
+                (part.union(held[0]) if held else part)
                 .groupBy(*keys)
                 .agg(*(
                     agg(c).cast(schema[c].dataType).alias(c)
@@ -107,9 +111,10 @@ def _merge_writer(
                 ))
                 .select(*part.columns)
             )
-            rows = _sorted_rows(finalize(spark.createDataFrame(state, schema)))
+            frame = batch_df.sparkSession.createDataFrame(state, schema)
+            rows = _sorted_rows(finalize(frame))
             last_seen[0] = batch_id
-            process.state, out[:] = state, rows
+            process.state, out[:], held[:] = state, rows, [frame]
         sink(list(out), batch_id)
 
     process.state = []
