@@ -458,10 +458,19 @@ def distribution_drift(
     B-cell aggregates + arithmetic on a B-row spine."""
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be > 0, got {n_buckets}")
+    fa = _token_buckets(a, text_col, n_buckets)
+    fb = _token_buckets(b, text_col, n_buckets)
     return _js_divergence(
-        _token_bucket_counts(a, text_col, n_buckets),
-        _token_bucket_counts(b, text_col, n_buckets),
+        _bucket_counts(fa), _bucket_counts(fb), _n_rows(fa), _n_rows(fb),
         n_buckets,
+    )
+
+
+def _token_buckets(df: DataFrame, text_col: str, n_buckets: int) -> DataFrame:
+    """The single-column `_b` md5 token-bucket feature frame (the
+    dsir_weights feature space)."""
+    return df.select(F.explode(tokens_expr(text_col)).alias("_t")).select(
+        hash_bucket_expr("_t", n_buckets).alias("_b")
     )
 
 
@@ -471,35 +480,38 @@ def _bucket_counts(f: DataFrame) -> DataFrame:
     return f.groupBy("_b").agg(F.count(F.lit(1)).alias("_c"))
 
 
-def _token_bucket_counts(
-    df: DataFrame, text_col: str, n_buckets: int
+def _n_rows(f: DataFrame) -> DataFrame:
+    """One-row (_t) row count of a feature frame."""
+    return f.agg(F.count(F.lit(1)).alias("_t"))
+
+
+def _js_from_counts(ca: DataFrame, cb: DataFrame, n_cells: int) -> DataFrame:
+    """The drift finalize over count frames alone: each total is its
+    frame's count sum (0 when empty), the `_n_rows` of the features it
+    counts. The batch operators take the totals from the feature frames
+    instead, which saves a stage."""
+    total = lambda c: c.agg(  # noqa: E731
+        F.coalesce(F.sum("_c"), F.lit(0)).alias("_t")
+    )
+    return _js_divergence(ca, cb, total(ca), total(cb), n_cells)
+
+
+def _js_divergence(
+    ca: DataFrame, cb: DataFrame, ta: DataFrame, tb: DataFrame, n_cells: int
 ) -> DataFrame:
-    """distribution_drift's partial: md5 token-bucket counts (the
-    dsir_weights feature space)."""
-    return _bucket_counts(
-        df.select(F.explode(tokens_expr(text_col)).alias("_t")).select(
-            hash_bucket_expr("_t", n_buckets).alias("_b")
-        )
-    )
-
-
-def _js_divergence(ca: DataFrame, cb: DataFrame, n_cells: int) -> DataFrame:
-    """Shared JS core over two (_b, _c) count frames: Laplace-smoothed
-    distributions on the full n_cells spine, per-cell contributions
-    quantized to 1e-9 nats, order-free integer sum -> one (n_a, n_b,
-    js_nano) row. Totals are the count frames' sums (0 when empty)."""
+    """Shared JS core over two (_b, _c) count frames and their one-row
+    (_t) totals: Laplace-smoothed distributions on the full n_cells
+    spine, per-cell contributions quantized to 1e-9 nats, order-free
+    integer sum -> one (n_a, n_b, js_nano) row."""
     bl = F.lit(int(n_cells))
-    total = lambda c, name: c.agg(  # noqa: E731
-        F.coalesce(F.sum("_c"), F.lit(0)).alias(name)
-    )
     spine = ca.sparkSession.range(int(n_cells)).select(
         F.col("id").alias("_b")
     )
     j = (
         spine.join(ca.withColumnRenamed("_c", "_ca"), "_b", "left")
         .join(cb.withColumnRenamed("_c", "_cb"), "_b", "left")
-        .crossJoin(F.broadcast(total(ca, "_ta")))
-        .crossJoin(F.broadcast(total(cb, "_tb")))
+        .crossJoin(F.broadcast(ta.withColumnRenamed("_t", "_ta")))
+        .crossJoin(F.broadcast(tb.withColumnRenamed("_t", "_tb")))
     )
     p = (F.coalesce(F.col("_ca"), F.lit(0)) + F.lit(1)) / (F.col("_ta") + bl)
     q = (F.coalesce(F.col("_cb"), F.lit(0)) + F.lit(1)) / (F.col("_tb") + bl)
@@ -539,10 +551,14 @@ def embedding_drift(
         hyperplane_bucket_expr,
     )
 
-    counts = lambda df: _bucket_counts(  # noqa: E731
+    fa, fb = (
         df.select(hyperplane_bucket_expr(vec_col, num_planes, dim).alias("_b"))
+        for df in (a, b)
     )
-    return _js_divergence(counts(a), counts(b), 1 << num_planes)
+    return _js_divergence(
+        _bucket_counts(fa), _bucket_counts(fb), _n_rows(fa), _n_rows(fb),
+        1 << num_planes,
+    )
 
 
 def vocab_coverage(

@@ -28,8 +28,9 @@ from pyspark.sql import functions as F
 
 from webloghunter_spark.pipelines.select import (
     DSIR_BUCKETS,
-    _js_divergence,
-    _token_bucket_counts,
+    _bucket_counts,
+    _js_from_counts,
+    _token_buckets,
 )
 from webloghunter_spark.streaming.runner import _filled, _merge_writer
 
@@ -46,12 +47,15 @@ def dist_drift_stream_writer(
     reference. `.state` holds the merged stream bucket counts,
     `.current()` the last row list; call `.release()` after stream
     stop to free the persisted reference counts."""
-    ref = _token_bucket_counts(ref_df, text_col, n_buckets).persist()
+    counts = lambda df: _bucket_counts(  # noqa: E731
+        _token_buckets(df, text_col, n_buckets)
+    )
+    ref = counts(ref_df).persist()
     return _merge_writer(
         sink,
-        lambda b: _token_bucket_counts(b, text_col, n_buckets),
+        counts,
         {"_c": F.sum},
-        lambda cur: _js_divergence(ref, cur, n_buckets),
+        lambda cur: _js_from_counts(ref, cur, n_buckets),
         frozen=_filled(ref),
     )
 
