@@ -25,16 +25,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from webloghunter_spark.benchqueries import QUERIES
-from webloghunter_spark.session import get_spark, release_materialized
-
-
-def materialize(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
+from webloghunter_spark.benchqueries import QUERIES, run_noop
+from webloghunter_spark.session import get_spark
 
 
 def main() -> int:
@@ -67,21 +62,13 @@ def main() -> int:
         for name in names:
             if name in errors:
                 continue  # failed once, don't burn repeats on it
-            fn = QUERIES[name]
-            t0 = time.perf_counter()
+            # run_noop releases what the query persisted, so no cache
+            # (or cross-query speedup) leaks into the next measurement
             try:
-                materialize(fn(spark, sf_dir))
-                runs[name].append(round(time.perf_counter() - t0, 3))
+                runs[name].append(round(run_noop(spark, name, sf_dir), 3))
             except Exception as e:  # one bad query must not kill the round
                 errors[name] = f"{type(e).__name__}: {e}"[:500]
                 print(f"BENCH-ERROR {name}: {errors[name]}", file=sys.stderr)
-            finally:
-                # Queries that persist() intermediates must not leak
-                # cache (or cross-query speedups) into the next
-                # measurement; drain the materialize() registry first so
-                # it doesn't grow.
-                release_materialized()
-                spark.catalog.clearCache()
 
     def median(xs: list[float]) -> float:
         s = sorted(xs)

@@ -17,8 +17,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from webloghunter_spark.benchqueries import QUERIES
-from webloghunter_spark.session import get_spark, release_materialized
+from webloghunter_spark.benchqueries import QUERIES, run_noop
+from webloghunter_spark.session import get_spark
 
 
 def _stage_metrics(sc) -> dict[int, tuple[int, int, int]]:
@@ -46,17 +46,15 @@ def main() -> int:
     tracker = sc.statusTracker()
 
     rows = []
-    for name, fn in QUERIES.items():
+    for name in QUERIES:
         sc.setJobGroup(name, name)
         try:
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            run_noop(spark, name, sf_dir)
         except Exception as e:
             rows.append((name, -1, -1, -1, f"ERROR: {type(e).__name__}"))
             continue
         finally:
             sc.setJobGroup(None, None)
-            release_materialized()
-            spark.catalog.clearCache()
         stage_ids = set()
         for jid in tracker.getJobIdsForGroup(name):
             info = tracker.getJobInfo(jid)

@@ -15,24 +15,17 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from webloghunter_spark.benchqueries import QUERIES
-from webloghunter_spark.session import get_spark, release_materialized
+from webloghunter_spark.benchqueries import run_noop
+from webloghunter_spark.session import get_spark
 
 
 def run(spark, name, sf_dir, repeats, side):
     times = []
     for i in range(repeats):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        times.append(round(time.perf_counter() - t0, 2))
-        release_materialized()
-        spark.catalog.clearCache()
+        times.append(round(run_noop(spark, name, sf_dir), 2))
         print(json.dumps({"query": name, "side": side, "run": i,
                           "s": times[-1]}), flush=True)
     return times

@@ -1,9 +1,18 @@
-r"""Query registry: every operator exposed as (Spark callable, oracle SQL).
+r"""Query registry: every operator exposed as (Spark builder, oracle SQL).
 
-Each entry maps one operator family from SURVEY §2 (or a training-data
+Each query maps one operator family from SURVEY §2 (or a training-data
 pipeline op) onto the driver's synthetic tables. The Spark side calls
 the real engine modules; the oracle side is independent ANSI SQL that
 DuckDB runs on the same parquet — the correctness gate.
+
+Every query is one row of `_REGISTRY`, `(name, builder, oracle)`, and
+`QUERIES` and `ORACLES` are read off that table, so a name cannot exist
+without its oracle. Adding a query means adding one row (its place in
+the table is its place in the driver's coverage order). A query that
+reads one table and calls one operator with fixed arguments is declared
+in its row as `_on(table, operator, *args, **kwargs)`; any other query
+is a `q_*` function defined next to its `SQL_*` oracle. `run_noop(spark,
+name, sf_dir)` runs one query into the no-op writer and releases it.
 
 Conventions keeping the two sides hash-identical:
 - timestamps exported as floor(epoch) BIGINT (Spark `unix_timestamp`
@@ -42,31 +51,56 @@ shared fragments:
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from webloghunter_spark.functions.lm import perplexity_bands, pmi_collocations
 from webloghunter_spark.functions.risk import method_risk_expr, status_risk_expr
-from webloghunter_spark.functions.similarity import cosine_topk, grid_round_expr
+from webloghunter_spark.functions.similarity import (
+    cosine_topk, grid_round_expr, jl_project, neardup_pairs_lsh,
+)
 from webloghunter_spark.functions.text import (
-    lang_id_expr,
-    punct_count_expr,
-    quality_bp_expr,
-    stopword_count_expr,
-    token_count_expr,
+    bm25_batch, bm25_topk, char_entropy, lang_consistency, lang_id_expr, longest_repeat,
+    punct_count_expr, quality_bp_expr, split_coherence, stopword_count_expr,
+    text_normalize, tfidf_topk, token_count_expr, vocab_topk,
 )
 from webloghunter_spark.operators.counts import with_request_count
 from webloghunter_spark.operators.dedup import remove_cross_source_dups
 from webloghunter_spark.operators.filters import apply_filters
 from webloghunter_spark.operators.sessionize import sessionize
+from webloghunter_spark.pipelines.bpe import bpe_encode, bpe_merge_learn
+from webloghunter_spark.pipelines.classify import topic_classify
+from webloghunter_spark.pipelines.curate import prefix_modal
 from webloghunter_spark.pipelines.dedup import (
-    exact_dedup,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
+    boilerplate_segments, containment_drop, containment_pairs, dedup_keep_best,
+    dedup_sensitivity, dup_ngram_frac, dup_source_matrix, exact_dedup,
+    lsh_candidate_pairs, lsh_recall_audit, minhash_signatures, ngram_jaccard_pairs,
+    remove_repeated_spans, repeated_window_spans, segment_dedup, simhash_fingerprints,
+    winnow_containment_drop, winnow_pairs,
 )
+from webloghunter_spark.pipelines.gate import gopher_rules, quality_gate
+from webloghunter_spark.pipelines.kmeans import kmeans_lloyd
+from webloghunter_spark.pipelines.overlap import novelty_frac, source_overlap
+from webloghunter_spark.pipelines.pack import (
+    fim_splits, padding_curve, padding_waste, span_corruption_plan,
+)
+from webloghunter_spark.pipelines.select import (
+    dataset_card, effective_data, heaps_fit, len_quantiles, mmr_select, oov_rate,
+    scorecard_budget, source_divergence, source_scorecard, tail_index, unimax_alloc,
+    vocab_coverage, zipf_fit,
+)
+from webloghunter_spark.pipelines.semdedup import density_sample
+from webloghunter_spark.pipelines.shard import (
+    batch_leakage, boundary_leakage, epoch_order, shard_balance, train_order,
+    train_order_manifest,
+)
+from webloghunter_spark.pipelines.split import time_split_audit, upsample_epochs
 from webloghunter_spark.rules.sigma import DEFAULT_RULES, apply_rules
+from webloghunter_spark.session import release_materialized
+from webloghunter_spark.streaming.vocab import cms_heavy_hitters, cms_overestimate_audit
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -128,6 +162,19 @@ def _fan(df: DataFrame) -> DataFrame:
     if est_splits >= min(target, 8):
         return df
     return df.repartition(target)
+
+
+Builder = Callable[[SparkSession, str], DataFrame]
+
+
+def _on(table: str, op: Callable[..., DataFrame], *args, **kwargs) -> Builder:
+    """The builder of a query that reads one table and calls one
+    operator: `op(_fan(table), *args, **kwargs)`."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return op(_fan(_t(spark, sf_dir, table)), *args, **kwargs)
+
+    return build
 
 
 # ---------------------------------------------------------------------------
@@ -881,11 +928,6 @@ SQL_JSON_AGG = """
 """
 
 
-def q_dedup_exact(spark, sf_dir):
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return exact_dedup(docs)
-
-
 SQL_DEDUP_EXACT = f"""
     SELECT {_norm_key('text')} AS fingerprint,
            min(doc_id) AS doc_id, count(*) AS n_dups
@@ -995,11 +1037,6 @@ SQL_MINHASH = _with(
            list_min(list_transform(h, x -> substr(x, 1 + 8 * seed, 8))) AS minhash
     FROM hashed, (SELECT unnest(generate_series(0, 3)) AS seed)
 """)
-
-
-def q_lsh_pairs(spark, sf_dir):
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return lsh_candidate_pairs(docs, num_hashes=4, band_size=2)
 
 
 SQL_LSH_PAIRS = _with(**_DOC_SHINGLES, **_minhash("shingles"), select=_lsh_pairs())
@@ -1352,22 +1389,16 @@ SQL_JACCARD_PAIRS = _with(
 """)
 
 
-def q_containment_pairs(spark, sf_dir):
-    """Asymmetric shingle-containment pairs (doc-in-doc near-dup —
-    the signal Jaccard/MinHash-LSH structurally miss): candidates
-    from a bounded inverted-index join on discriminative shingles
-    (2 <= df <= 20), exact |A∩B|/|A| verify on distinct shingle
-    arrays, max-direction threshold 0.5. Shingles are 60-bit
-    md5-prefix ints; this builder answers two oracles: the
-    string-shingle SQL_CONTAINMENT_PAIRS (agreement there means no
-    60-bit collision changed a pair on the fixture) and
-    SQL_CONTAINMENT_PAIRS_HASHED (exact by construction)."""
-    from webloghunter_spark.pipelines.dedup import containment_pairs
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return containment_pairs(
-        docs, shingle_k=3, threshold=0.5, max_df=20
-    )
+# Asymmetric shingle-containment pairs (doc-in-doc near-dup —
+# the signal Jaccard/MinHash-LSH structurally miss): candidates
+# from a bounded inverted-index join on discriminative shingles
+# (2 <= df <= 20), exact |A∩B|/|A| verify on distinct shingle
+# arrays, max-direction threshold 0.5. Shingles are 60-bit
+# md5-prefix ints; this builder answers two oracles: the
+# string-shingle SQL_CONTAINMENT_PAIRS (agreement there means no
+# 60-bit collision changed a pair on the fixture) and
+# SQL_CONTAINMENT_PAIRS_HASHED (exact by construction).
+q_containment_pairs = _on("documents", containment_pairs, shingle_k=3, threshold=0.5, max_df=20)
 
 
 def _contained(a: str, b: str, p: str = "") -> dict[str, str]:
@@ -1445,21 +1476,6 @@ SQL_CONTAINMENT_PAIRS = _with(
 
 
 SQL_CONTAINMENT_PAIRS_HASHED = _with(**_HSH, **_containment("dsh"), select="SELECT * FROM cont")
-
-
-def q_containment_drop(spark, sf_dir):
-    """The intervention form of containment_pairs: drop a doc when it
-    is contained (>= 0.8 shingle containment, exact-integer bp rule)
-    in a not-smaller other doc; mutual same-size containment resolves
-    by dedup_keep_best's keep-best rule (higher quality_bp, tie ->
-    lower id). One shingle pass feeds pair machinery and per-doc
-    stats; output is the per-doc decision frame."""
-    from webloghunter_spark.pipelines.dedup import containment_drop
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return containment_drop(
-        docs, shingle_k=3, threshold_bp=8000, size_ratio_bp=10000, max_df=20
-    )
 
 
 # The pair machinery is SQL_CONTAINMENT_PAIRS_HASHED's. The drop rules
@@ -1575,20 +1591,6 @@ SQL_CONTAINMENT_DROP_AGAINST = _with(
 """)
 
 
-def q_dedup_sensitivity(spark, sf_dir):
-    """Near-dup attrition vs threshold (0.7/0.8/0.9): ONE shared
-    MinHash/LSH/exact-Jaccard pass, per-threshold pair counts and
-    would-drop doc counts on the integer bp grid — the knob-tuning
-    curve run before committing near_dedup's threshold. The oracle
-    composes SQL_JACCARD_PAIRS, so the pair machinery is shared."""
-    from webloghunter_spark.pipelines.dedup import dedup_sensitivity
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return dedup_sensitivity(
-        docs, thresholds_bp=(7000, 8000, 9000), num_hashes=4, band_size=2
-    )
-
-
 SQL_DEDUP_SENSITIVITY = _with(
     jacc=SQL_JACCARD_PAIRS,
     b="""
@@ -1603,22 +1605,6 @@ SQL_DEDUP_SENSITIVITY = _with(
     FROM b JOIN t ON b.jbp >= t.t_bp
     GROUP BY t_bp
 """)
-
-
-def q_dup_source_matrix(spark, sf_dir):
-    """Cross-source near-dup flow matrix: per unordered source pair,
-    the count and share of >=0.8-Jaccard near-dup pairs (diagonal =
-    within-source churn; off-diagonal = one source copying another) —
-    the diagnostic that decides whether cross-source dedup is worth
-    its shuffle before anything is dropped. Same MinHash/LSH/exact
-    verify and parameters as near_dedup; the oracle composes
-    SQL_JACCARD_PAIRS, so the pair machinery is shared."""
-    from webloghunter_spark.pipelines.dedup import dup_source_matrix
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return dup_source_matrix(
-        docs, threshold=0.8, num_hashes=4, band_size=2
-    )
 
 
 SQL_DUP_SOURCE_MATRIX = _with(
@@ -1646,14 +1632,6 @@ SQL_DUP_SOURCE_MATRIX = _with(
 """)
 
 
-def q_simhash(spark, sf_dir):
-    """16-bit SimHash fingerprint per document."""
-    from webloghunter_spark.pipelines.dedup import simhash_fingerprints
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return simhash_fingerprints(docs, shingle_k=3, bits=16)
-
-
 SQL_SIMHASH = _with(
     **_DOC_SHINGLES,
     hashed="""
@@ -1671,14 +1649,6 @@ SQL_SIMHASH = _with(
     select="""
     SELECT doc_id, CAST(sum(bit) AS BIGINT) AS simhash FROM bits GROUP BY doc_id
 """)
-
-
-def q_neardup_embeddings(spark, sf_dir):
-    """Embedding near-dup: cosine over hyperplane-LSH bucket pairs."""
-    from webloghunter_spark.functions.similarity import neardup_pairs_lsh
-
-    emb = _fan(_t(spark, sf_dir, "embeddings"))
-    return neardup_pairs_lsh(emb, num_planes=4, dim=64, threshold=0.2)
 
 
 SQL_NEARDUP_EMB = _with(
@@ -2099,23 +2069,6 @@ SQL_WINNOW = _with(
 """)
 
 
-def q_winnow_pairs(spark, sf_dir):
-    """MOSS-style overlap pairs from winnowed fingerprints — the
-    sparse candidate generator winnowing exists for (fingerprint
-    inverted index ~1/((w+1)/2) the density of the shingle index):
-    candidates from discriminative fingerprints (2 <= df <= 20),
-    exact shared-count verify on the per-doc sorted distinct
-    fingerprint arrays, n_shared >= 2, overlap on the integer bp
-    grid. The oracle composes SQL_WINNOW, so the fingerprint
-    definition is shared."""
-    from webloghunter_spark.pipelines.dedup import winnow_pairs
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return winnow_pairs(
-        docs, kgram=8, window=4, max_df=20, min_shared=2
-    )
-
-
 # winnow_pairs' machinery over SQL_WINNOW: wex holds every candidate
 # pair's shared-fingerprint count, before the min_shared filter.
 _WINNOW_PAIRS = {
@@ -2144,23 +2097,6 @@ SQL_WINNOW_PAIRS = _with(
            (n_shared * 10000 // least(na, nb))::BIGINT AS overlap_bp
     FROM wex WHERE n_shared >= 2
 """)
-
-
-def q_winnow_containment_drop(spark, sf_dir):
-    """containment_drop's intervention on WINNOWED fingerprints — the
-    MOSS candidate generator (~1/((window+1)/2) the shingle index
-    density) feeding the same exact-integer drop rules (contained at
-    >= 0.8 in a not-smaller doc -> dropped; mutual containment ->
-    keep-best). The oracle composes winnow_pairs' machinery
-    (_WINNOW_PAIRS) with the quality score and the keep-best decision
-    (_keep_best) that SQL_CONTAINMENT_DROP uses."""
-    from webloghunter_spark.pipelines.dedup import winnow_containment_drop
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return winnow_containment_drop(
-        docs, kgram=8, window=4,
-        threshold_bp=8000, size_ratio_bp=10000, max_df=20,
-    )
 
 
 SQL_WINNOW_CONTAINMENT_DROP = _with(
@@ -2647,16 +2583,6 @@ SQL_DOMAIN_MIX = _with(
 """)
 
 
-def q_segment_dedup(spark, sf_dir):
-    """Sub-document exact dedup at 10-token segment granularity
-    (Lee et al. exact-substring stand-in): globally-first occurrence
-    of each distinct segment survives; docs reassemble from survivors."""
-    from webloghunter_spark.pipelines.dedup import segment_dedup
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return segment_dedup(docs, "text", "doc_id", seg_tokens=10)
-
-
 SQL_SEGMENT_DEDUP = _with(
     toks=_toks("doc_id"),
     base="""
@@ -2692,16 +2618,6 @@ SQL_SEGMENT_DEDUP = _with(
            coalesce(s.new_text, '') AS new_text
     FROM base b LEFT JOIN stats s ON b.doc_id = s.doc_id
 """)
-
-
-def q_cms_heavy_hitters(spark, sf_dir):
-    """Heavy hitters THROUGH a count-min sketch (md5 cell family, 4x1024):
-    one-sided superset of true >=threshold tokens — the bounded-state
-    vocabulary primitive whose streaming twin is cms_vocab_stream."""
-    from webloghunter_spark.streaming.vocab import cms_heavy_hitters
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return cms_heavy_hitters(docs, "text", threshold=100)
 
 
 SQL_CMS_HEAVY_HITTERS = _with(
@@ -2807,18 +2723,6 @@ SQL_BIGRAM_LOGPROB = _with(
 """)
 
 
-def q_perplexity_filter(spark, sf_dir):
-    """CCNet head/middle/tail perplexity banding over the self-trained
-    bigram LM: per-language equal-height terciles of avg_ll (ntile
-    semantics), keep = head|middle. Spark side runs the bounded
-    (lang, score-cell) histogram + driver cut walk — never a per-lang
-    window sort; the oracle states the same result as plain ntile."""
-    from webloghunter_spark.functions.lm import perplexity_bands
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return perplexity_bands(docs, "text", "doc_id", "lang", alpha=0.5)
-
-
 SQL_PERPLEXITY_FILTER = _with(
     toks=rf"""
         SELECT doc_id,
@@ -2868,17 +2772,6 @@ SQL_PERPLEXITY_FILTER = _with(
                 ELSE nt.b <= 2 END AS kept
     FROM sc LEFT JOIN nt ON sc.doc_id = nt.doc_id
 """)
-
-
-def q_fim_split(spark, sf_dir):
-    """Deterministic fill-in-the-middle cut points: two md5-derived
-    char positions per doc, span lengths + a digest over the
-    0x1f-separated prefix|middle|suffix reconstruction. One narrow
-    projection, no shuffle."""
-    from webloghunter_spark.pipelines.pack import fim_splits
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return fim_splits(docs, "text", "doc_id", seed="r7f")
 
 
 SQL_FIM_SPLIT = _with(
@@ -3037,21 +2930,6 @@ SQL_BUDGET_BY_SOURCE = _with(
     **_BUDGET_WALK,
     recursive=("rec",),
     select=_BUDGET_SELECT)
-
-
-def q_unimax_alloc(spark, sf_dir):
-    """UniMax budget allocation (Chung et al. 2023): a 1.8x-total
-    token budget waterfilled across sources as uniformly as possible
-    under a 2-epoch repetition cap — the published alternative to
-    temperature sampling when over-repeating small sources hurts more
-    than under-weighting large ones. One combinable (source -> sum
-    ntok) aggregate; the ascending-capacity waterfill is driver
-    integer arithmetic on the |sources|-row result. The oracle replays
-    the walk with a recursive CTE, one recursion step per source."""
-    from webloghunter_spark.pipelines.select import unimax_alloc
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return unimax_alloc(docs, budget_bp_of_total=18000, max_epochs=2)
 
 
 SQL_UNIMAX_ALLOC = _with(
@@ -3232,21 +3110,6 @@ def q_dataset_diff(spark, sf_dir):
     )
 
 
-
-
-
-def q_epoch_order(spark, sf_dir):
-    """Multi-epoch loader-ready training order: upsample_epochs'
-    plan expanded, fresh md5(seed|epoch|id) interleave per epoch,
-    position within (epoch, shard). One exchange (the train_order
-    window, partition count x epochs)."""
-    from webloghunter_spark.pipelines.shard import epoch_order
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return epoch_order(docs, "source", alpha=0.7, max_epochs=4,
-                       n_shards=8, seed="r7e")
-
-
 SQL_EPOCH_ORDER = _with(
     toks=_toks("doc_id", "source"),
     per="""
@@ -3291,17 +3154,6 @@ SQL_EPOCH_ORDER = _with(
            doc_id, source
     FROM a
 """)
-
-
-def q_span_corruption(spark, sf_dir):
-    """T5 span-corruption plan at 15%: per-position md5 coin on the
-    10000-grid, adjacent hits form one span, masked_digest pins the
-    exact mask. One narrow HOF projection, no shuffle."""
-    from webloghunter_spark.pipelines.pack import span_corruption_plan
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return span_corruption_plan(docs, "text", "doc_id", seed="r7t5",
-                                rate_bp=1500)
 
 
 SQL_SPAN_CORRUPTION = _with(
@@ -3375,17 +3227,6 @@ SQL_READABILITY = _with(
 """)
 
 
-def q_pmi_collocations(spark, sf_dir):
-    """Top-100 collocations by PMI (Church & Hanks) with a min-count
-    floor against PMI's low-frequency bias: vocabulary-bounded count
-    aggregates, margin joins, TakeOrderedAndProject top-k. PMI in
-    micro-nats (ln over identical IEEE doubles, 1e-6 grid)."""
-    from webloghunter_spark.functions.lm import pmi_collocations
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return pmi_collocations(docs, "text", "doc_id", min_count=5, k=100)
-
-
 SQL_PMI_COLLOCATIONS = _with(
     toks=rf"""
         SELECT doc_id,
@@ -3413,20 +3254,6 @@ SQL_PMI_COLLOCATIONS = _with(
     ORDER BY pmi_micro DESC, cb.w1, cb.w2
     LIMIT 100
 """)
-
-
-def q_quality_gate(spark, sf_dir):
-    """Composed intake gate (C4/Gopher-style rule stack): length bounds,
-    encoding damage, heuristic quality, corpus-LM likelihood — first
-    failing rule is the drop reason. Integer threshold arithmetic
-    everywhere except the (rounded) LM compare."""
-    from webloghunter_spark.pipelines.gate import quality_gate
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return quality_gate(
-        docs, min_tokens=30, max_tokens=5000, max_nonprintable_bp=1000,
-        min_quality_bp=5000, min_avg_ll=-8.0,
-    )
 
 
 SQL_QUALITY_GATE = _with(
@@ -3466,16 +3293,6 @@ SQL_QUALITY_GATE = _with(
 """)
 
 
-def q_novelty_frac(spark, sf_dir):
-    """Per-document novelty: distinct 3-grams vs how many first occur
-    at this id — the memorization signal boilerplate-heavy docs fail
-    even when no single earlier doc matches them wholesale."""
-    from webloghunter_spark.pipelines.overlap import novelty_frac
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return novelty_frac(docs, "text", "doc_id", k=3)
-
-
 SQL_NOVELTY_FRAC = _with(
     **_DOC_SHINGLES,
     # 60-bit hashed grams mirroring Spark's hashed_shingles_expr
@@ -3495,15 +3312,6 @@ SQL_NOVELTY_FRAC = _with(
            coalesce(per.n_novel, 0) AS n_novel
     FROM documents d2 LEFT JOIN per ON d2.doc_id = per.doc_id
 """)
-
-
-def q_source_overlap(spark, sf_dir):
-    """Pairwise distinct-3-gram overlap between sources — the corpus
-    composition matrix that decides whether cross-source dedup pays."""
-    from webloghunter_spark.pipelines.overlap import source_overlap
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return source_overlap(docs, "text", "source", k=3)
 
 
 SQL_SOURCE_OVERLAP = _with(
@@ -3567,15 +3375,6 @@ SQL_TOKEN_ENTROPY = _with(
 """)
 
 
-def q_vocab_topk(spark, sf_dir):
-    """Corpus vocabulary heavy hitters (exact counts): map-side
-    combinable hash aggregate + TakeOrderedAndProject."""
-    from webloghunter_spark.functions.text import vocab_topk
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return vocab_topk(docs, "text", k=100)
-
-
 SQL_VOCAB_TOPK = _with(
     toks=_toks(lower=True),
     flat="SELECT unnest(t) AS token FROM toks",
@@ -3587,14 +3386,10 @@ SQL_VOCAB_TOPK = _with(
 """)
 
 
-def q_tfidf_topk(spark, sf_dir):
-    """Per-document top-5 TF-IDF terms — the feature-extraction shape
-    of a training-data pipeline (tf shuffle, df from the tf table,
-    bounded per-doc window on the rounded score)."""
-    from webloghunter_spark.functions.text import tfidf_topk
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return tfidf_topk(docs, "text", "doc_id", k=5)
+# Per-document top-5 TF-IDF terms — the feature-extraction shape
+# of a training-data pipeline (tf shuffle, df from the tf table,
+# bounded per-doc window on the rounded score).
+q_tfidf_topk = _on("documents", tfidf_topk, "text", "doc_id", k=5)
 
 
 SQL_TFIDF_TOPK = _with(
@@ -4776,26 +4571,6 @@ SQL_FUZZY_MATCH = _with(
 """)
 
 
-def q_lsh_recall(spark, sf_dir):
-    """Dedup deployment audit: recall of the MinHash-LSH candidate
-    generator (4 hashes, 2 bands) against EXACT all-pairs Jaccard >=
-    0.5 ground truth. Truth comes from the gram-key self-join (pairs
-    with J > 0 must share a shingle — never n^2); the one-row result
-    is the number a band/hash configuration must justify before
-    near_dedup trusts it. ann_recall's text twin.
-
-    sample_bp is passed EXPLICITLY (matching the operator default) so
-    the oracle stays hash-exact if the default ever moves: the audit
-    runs on the deterministic 20% md5-bucket subset — the exact
-    all-pairs audit is opt-in only (it dies at the 32x dup-stress)."""
-    from webloghunter_spark.pipelines.dedup import lsh_recall_audit
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return lsh_recall_audit(
-        docs, tau=0.5, num_hashes=4, band_size=2, sample_bp=2000
-    )
-
-
 SQL_LSH_RECALL = _with(
     **_DOC_SHINGLES,
     aud="""
@@ -5166,18 +4941,6 @@ SQL_KNN_IVF_TRAINED = _with(
 """)
 
 
-def q_jl_project(spark, sf_dir):
-    """Johnson-Lindenstrauss 64→16 reduction of the embedding store
-    with an md5-derived Achlioptas ±1/0 matrix — the deterministic
-    pre-shrink before ANN indexing. One mapInPandas matmul, no
-    shuffle; the oracle rebuilds the same matrix from the same md5
-    expression and projects in long form."""
-    from webloghunter_spark.functions.similarity import jl_project
-
-    emb = _fan(_t(spark, sf_dir, "embeddings"))
-    return jl_project(emb, out_dim=16, in_dim=64)
-
-
 SQL_JL_PROJECT = _with(
     v="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
@@ -5297,21 +5060,6 @@ SQL_MIX_RESAMPLE = _with(
                 AS INTEGER) AS rep
     FROM c
 """)
-
-
-def q_kmeans_train(spark, sf_dir):
-    """Deterministic 2-pass Lloyd's k-means over the embedding store:
-    seeds are the 8 lowest-id vectors, one quantized mean update, then
-    the final assignment with squared-L2 distances. The trainer the
-    SemDeDup/IVF stand-in centroids graduate to when real centers are
-    wanted with an exact oracle (pyspark.ml's k-means|| is random-init
-    and unorderable). Per pass: broadcast k x dim matmul assignment
-    (mapInPandas, no shuffle) + a combinable posexplode mean whose
-    exchange carries k x dim cells per partition, not n x dim rows."""
-    from webloghunter_spark.pipelines.kmeans import kmeans_lloyd
-
-    emb = _fan(_t(spark, sf_dir, "embeddings"))
-    return kmeans_lloyd(emb, k=8, iters=2)
 
 
 SQL_KMEANS_TRAIN = _with(
@@ -5696,17 +5444,6 @@ SQL_MIX_TEMPERATURE = _with(
 """)
 
 
-def q_upsample_epochs(spark, sf_dir):
-    """Materialized repetition plan for the temperature mix on a
-    data-constrained corpus: per-source epochs = clamp(ceil(boost), 1,
-    4); one row per (doc, epoch). Broadcast plan join + bounded
-    explode — the output is the repeated-corpus listing itself."""
-    from webloghunter_spark.pipelines.split import upsample_epochs
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return upsample_epochs(docs, "source", alpha=0.7, max_epochs=4)
-
-
 SQL_UPSAMPLE_EPOCHS = _with(
     toks=_toks("doc_id", "source"),
     per="""
@@ -5733,17 +5470,6 @@ SQL_UPSAMPLE_EPOCHS = _with(
     JOIN plan p ON d.source IS NOT DISTINCT FROM p.source,
     UNNEST(generate_series(0, p.n_epochs - 1)) AS u(epoch)
 """)
-
-
-def q_oov_rate(spark, sf_dir):
-    """Tokenizer-coverage audit: per-doc fraction of tokens outside
-    the corpus's own top-1000 vocabulary (count DESC, token ASC ties).
-    Vocab via one combinable count + TakeOrderedAndProject; per-doc
-    OOV via explode + broadcast anti-join against the 1000-row vocab."""
-    from webloghunter_spark.pipelines.select import oov_rate
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return oov_rate(docs, vocab_size=1000)
 
 
 SQL_OOV_RATE = _with(
@@ -5876,18 +5602,6 @@ SQL_TOKEN_BUDGET = _with(
 """)
 
 
-def q_substring_dedup(spark, sf_dir):
-    """Exact-substring duplication signal (Lee et al. ExactSubstr,
-    relational form): 8-token windows whose md5 repeats anywhere in
-    the corpus; per affected doc, the repeated-window count and the
-    UNION length of covered spans (running-max interval merge — no
-    double counting) in tokens and basis points."""
-    from webloghunter_spark.pipelines.dedup import repeated_window_spans
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return repeated_window_spans(docs, window=8)
-
-
 SQL_SUBSTRING_DEDUP = _with(
     toks=_toks("doc_id"),
     sh=_shingles(8, "doc_id"),
@@ -5919,18 +5633,6 @@ SQL_SUBSTRING_DEDUP = _with(
                AS dup_bp
     FROM pd p JOIN base b USING (doc_id)
 """)
-
-
-def q_substring_remove(spark, sf_dir):
-    """The ExactSubstr intervention substring_dedup measures: rewrite
-    each document with every token covered by a duplicated 8-token
-    window deleted (interval union — overlapping spans delete once).
-    One row per input doc: ntok, removed_tokens, and the cleaned
-    whitespace-normalized text ('' when fully duplicated)."""
-    from webloghunter_spark.pipelines.dedup import remove_repeated_spans
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return remove_repeated_spans(docs, window=8)
 
 
 SQL_SUBSTRING_REMOVE = _with(
@@ -5974,17 +5676,6 @@ SQL_SUBSTRING_REMOVE = _with(
 """)
 
 
-def q_padding_waste(spark, sf_dir):
-    """Per-source padding-efficiency report for naive (unpacked)
-    sequence loading at L=128: documents chunk into ceil(ntok/L)
-    sequences, the last is padded; waste_bp prices what packing
-    would save. One combinable aggregate, no text movement."""
-    from webloghunter_spark.pipelines.pack import padding_waste
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return padding_waste(docs, max_seq_len=128, group_col="source")
-
-
 SQL_PADDING_WASTE = _with(
     per=rf"""
         SELECT source,
@@ -6006,18 +5697,6 @@ SQL_PADDING_WASTE = _with(
     FROM x
     GROUP BY source
 """)
-
-
-def q_padding_curve(spark, sf_dir):
-    """Padding waste vs context length (128/512/1024/2048): the
-    sizing curve read before pinning a training sequence length. ONE
-    combinable aggregate computes every length's sums in a single
-    scan; per-L rows explode from the 1-row result. Monotone
-    non-increasing n_seqs in L by construction."""
-    from webloghunter_spark.pipelines.pack import padding_curve
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return padding_curve(docs, seq_lens=(128, 512, 1024, 2048))
 
 
 SQL_PADDING_CURVE = _with(
@@ -6044,17 +5723,6 @@ SQL_PADDING_CURVE = _with(
 """
         for L in (128, 512, 1024, 2048)
     ))
-
-
-def q_vocab_coverage(spark, sf_dir):
-    """Tokenizer-sizing curve: corpus coverage of the top-V vocabulary
-    for V in {250, 1k, 4k, 16k}. One type-count aggregate + a bounded
-    top-max(V) (TakeOrderedAndProject, never a global type sort), a
-    cumulative sum over the <=16k-row frame, broadcast size spine."""
-    from webloghunter_spark.pipelines.select import vocab_coverage
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return vocab_coverage(docs, sizes=[250, 1000, 4000, 16000])
 
 
 SQL_VOCAB_COVERAGE = _with(
@@ -6089,18 +5757,6 @@ SQL_VOCAB_COVERAGE = _with(
 """)
 
 
-def q_source_divergence(spark, sf_dir):
-    """Pairwise JS-divergence matrix between all sources' hashed
-    unigram distributions (dist_drift generalized to the full
-    all-pairs mixing-design view): one corpus scan into a combinable
-    (source, bucket) aggregate, then |sources|^2 x 1024 spine
-    arithmetic — never token-scale pair volume."""
-    from webloghunter_spark.pipelines.select import source_divergence
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return source_divergence(docs, group_col="source")
-
-
 SQL_SOURCE_DIVERGENCE = _with(
     toks=_toks("source"),
     tk="""
@@ -6131,17 +5787,6 @@ SQL_SOURCE_DIVERGENCE = _with(
     FROM pairs
     GROUP BY source_a, source_b, n_a, n_b
 """)
-
-
-def q_zipf_fit(spark, sf_dir):
-    """Rank-frequency OLS in log-log space over the top-1000 types:
-    slope ~ -1 is natural text, flatter flags templated/synthetic
-    corpora. Bounded top-k + 1e-9-quantized regression sums —
-    engine-exact, order-free."""
-    from webloghunter_spark.pipelines.select import zipf_fit
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return zipf_fit(docs, top_k=1000)
 
 
 SQL_ZIPF_FIT = _with(
@@ -6194,19 +5839,6 @@ SQL_ZIPF_FIT = _with(
                 ELSE 0 END AS intercept_micro
     FROM f
 """)
-
-
-def q_cms_counts(spark, sf_dir):
-    """Count-Min sketch overestimate audit on the md5 cell family the
-    streaming vocab sketch uses (4x1024 — fixed state at any corpus
-    size): estimate the 20 true-top tokens through the sketch and
-    report the collision mass (over_bp). est >= true always; this is
-    the number that tunes depth/width. Rides streaming/vocab.py's
-    existing sketch machinery — one implementation, batch + stream."""
-    from webloghunter_spark.streaming.vocab import cms_overestimate_audit
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return cms_overestimate_audit(docs, "text", k=20)
 
 
 SQL_CMS_COUNTS = _with(
@@ -6501,19 +6133,6 @@ SQL_MIX_SOLVER = _with(
 """)
 
 
-def q_bpe_merges(spark, sf_dir):
-    """BPE-style merge training, phrase-level: 4 rounds of
-    count-adjacent-pairs -> merge-the-argmax over the whitespace-token
-    symbol stream (3-pass delimiter merge — deterministic,
-    engine-portable; merged symbols merge again, building the BPE
-    hierarchy). The oracle replays all 4 rounds with nothing but
-    string replace() and must land identical merges and counts."""
-    from webloghunter_spark.pipelines.bpe import bpe_merge_learn
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return bpe_merge_learn(docs, steps=4)
-
-
 def _bpe_merge(m: str, src: str) -> str:
     """Merge the symbol pair of the one-row CTE `m` in every src.s
     (three passes catch overlapping runs; no-op when m is empty)."""
@@ -6558,18 +6177,6 @@ SQL_BPE_MERGES = _with(
     UNION ALL
     SELECT 4 AS step, a AS sym_a, b AS sym_b, cnt AS pair_count FROM m4
 """)
-
-
-def q_bpe_encode(spark, sf_dir):
-    """Apply the 4 learned merges back to the corpus: per-doc symbol
-    counts and compression (saved_bp) under the trained merge table —
-    the report that prices a merge vocabulary before committing to a
-    real tokenizer. The oracle re-learns the merges and re-applies
-    them with the id carried through every round's state."""
-    from webloghunter_spark.pipelines.bpe import bpe_encode
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return bpe_encode(docs, steps=4)
 
 
 SQL_BPE_ENCODE = _with(
@@ -6661,18 +6268,6 @@ SQL_BPE_ROUNDTRIP = _with(
 """)
 
 
-def q_mmr_select(spark, sf_dir):
-    """Greedy maximal-marginal-relevance pick of 4 vectors balancing
-    relevance to vec_id 0 against redundancy with prior picks
-    (lambda = 0.5, integer-bp scoring): the diverse-subset primitive
-    for eval-set and few-shot example selection. The oracle unrolls
-    the 4 greedy rounds with the true max-sim state carried through."""
-    from webloghunter_spark.pipelines.select import mmr_select
-
-    emb = _fan(_t(spark, sf_dir, "embeddings"))
-    return mmr_select(emb, k=4, lam_bp=5000, query_id=0)
-
-
 SQL_MMR_SELECT = _with(
     v="""
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
@@ -6735,17 +6330,6 @@ SQL_MMR_SELECT = _with(
 """)
 
 
-def q_dataset_card(spark, sf_dir):
-    """Per-source dataset card: doc/token counts, language mix
-    (distinct langs, majority lang + share), exact-dup share and
-    empty share — the composition/hygiene one-screener next to
-    corpus_stats' length profile. Three group-scale aggregates."""
-    from webloghunter_spark.pipelines.select import dataset_card
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return dataset_card(docs)
-
-
 SQL_DATASET_CARD = _with(
     base=rf"""
         SELECT source, lang, md5(coalesce(text, '')) AS h,
@@ -6796,22 +6380,6 @@ SQL_DATASET_CARD = _with(
 """)
 
 
-def q_source_scorecard(spark, sf_dir):
-    """Per-source contamination/dup one-screener ("which source do we
-    cut"): dataset_card composition/hygiene + near-dup matrix
-    exposure (self + cross pair counts) + containment_drop attrition,
-    one row per source. Composition operator: replays the three
-    pipelines and joins their |sources|-scale outputs broadcast-side."""
-    from webloghunter_spark.pipelines.select import source_scorecard
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return source_scorecard(
-        docs, neardup_threshold=0.8, num_hashes=4, band_size=2,
-        shingle_k=3, containment_threshold_bp=8000,
-        size_ratio_bp=10000, max_df=20,
-    )
-
-
 # Composed from SQL_DATASET_CARD + SQL_DUP_SOURCE_MATRIX +
 # SQL_CONTAINMENT_DROP: the three pipelines replay their own registry
 # oracles' CTEs, so the machinery is the individually-verified one. The
@@ -6852,24 +6420,6 @@ SQL_SOURCE_SCORECARD = _with(
     LEFT JOIN crossp cp ON coalesce(c.source, '') = cp.s
     LEFT JOIN contained ct ON coalesce(c.source, '') = ct.s
 """)
-
-
-def q_scorecard_budget(spark, sf_dir):
-    """Audit-driven budget allocation (closes source_scorecard's
-    loop): each source's share of a 20k-token budget is proportional
-    to its EFFECTIVE clean token mass — n_tokens scaled by
-    (10000 - min(dup_doc_bp + contained_bp, 10000)) on the exact
-    integer grid — then every source admits its highest-quality docs
-    until its budget is spent (the budget_by_source walk). Mirror
-    sources de-budget themselves instead of being hand-excluded."""
-    from webloghunter_spark.pipelines.select import scorecard_budget
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return scorecard_budget(
-        docs, total_budget=20_000, neardup_threshold=0.8, num_hashes=4,
-        band_size=2, shingle_k=3, containment_threshold_bp=8000,
-        size_ratio_bp=10000, max_df=20,
-    )
 
 
 # budget_by_source's per-doc frame and selection walk, with the
@@ -7041,18 +6591,6 @@ SQL_LABEL_PROPAGATION = _with(
 """)
 
 
-def q_train_order(spark, sf_dir):
-    """Seeded deterministic global training order: shard + 0-based
-    within-shard position as pure functions of (seed, id) via the
-    md5 interleave key — reproducible source-mixing ahead of the data
-    loader. One shuffle (window partitioned by shard = repartition +
-    sort-within-partition on the 16-byte key), no global sort."""
-    from webloghunter_spark.pipelines.shard import train_order
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return train_order(docs, n_shards=16, seed="r7")
-
-
 def q_curriculum_order(spark, sf_dir):
     """Easy-first staged training order: difficulty stages from the
     quality score (fixed-width integer bins, stage 0 = easiest), then
@@ -7113,18 +6651,6 @@ SQL_TRAIN_ORDER = _with(
            doc_id
     FROM a
 """)
-
-
-def q_train_manifest(spark, sf_dir):
-    """Per-shard audit rows for the seeded training order: doc/token
-    totals plus an order-free-to-compute bit_xor digest over
-    md5('id@position') prefixes — position is baked into each digest,
-    so one number per shard pins the exact training order any engine
-    can re-derive from (seed, id)."""
-    from webloghunter_spark.pipelines.shard import train_order_manifest
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return train_order_manifest(docs, n_shards=16, seed="r7")
 
 
 SQL_TRAIN_MANIFEST = _with(
@@ -7735,19 +7261,6 @@ SQL_DATASET_DIFF = _with(
 """)
 
 
-def q_longest_repeat(spark, sf_dir):
-    """Per-document longest repeated token n-gram + tie count — the
-    open-ended repetition statistic beyond the fixed-k window family
-    (rep_signals / segment_dedup). Row-local: one Arrow mapInPandas
-    pass, zero shuffle; the kernel binary-searches k with O(n) set
-    probes. The oracle replays it as the full quadratic gram explode
-    (bounded: docs are <= ~100 tokens in the fixture)."""
-    from webloghunter_spark.functions.text import longest_repeat
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return longest_repeat(docs)
-
-
 SQL_LONGEST_REPEAT = _with(
     toks=_toks("doc_id"),
     grams="""
@@ -7906,20 +7419,6 @@ SQL_URL_BLOCKLIST_BIG = _with(
 """)
 
 
-
-
-def q_shard_balance(spark, sf_dir):
-    """Per-shard token-load balance audit of the seeded md5 shard
-    assignment: doc counts, token totals, share and |share - 1/n|
-    deviation on the integer cross-multiply grid. ONE combinable
-    (shard) aggregate — no order-key sort, no window over the corpus
-    (balance doesn't depend on the within-shard order)."""
-    from webloghunter_spark.pipelines.shard import shard_balance
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return shard_balance(docs, n_shards=16, seed="bal")
-
-
 SQL_SHARD_BALANCE = _with(
     s=rf"""
         SELECT doc_id,
@@ -7946,17 +7445,6 @@ SQL_SHARD_BALANCE = _with(
                 ELSE 0 END::BIGINT AS dev_bp
     FROM per, tot
 """)
-
-
-def q_time_split(spark, sf_dir):
-    """Temporal split leakage audit: users with events on BOTH sides
-    of the cut, with train/test counts and the floor-epoch of the
-    earliest post-cut event. One conditional-count aggregate on the
-    group key; an empty result is the clean-split verdict."""
-    from webloghunter_spark.pipelines.split import time_split_audit
-
-    ev = _fan(_t(spark, sf_dir, "events"))
-    return time_split_audit(ev, "2024-01-15 00:00:00")
 
 
 SQL_TIME_SPLIT = """
@@ -8121,17 +7609,6 @@ SQL_EMB_DRIFT = _with(
 """)
 
 
-def q_topic_classify(spark, sf_dir):
-    """Lexicon domain tagging ahead of the mix operators
-    (WebOrganizer-style taxonomy bootstrap): per-topic marker-token
-    hits + declaration-order-tie argmax, one pure-codegen projection
-    — no shuffle, no UDF, scan speed at 100 TB."""
-    from webloghunter_spark.pipelines.classify import topic_classify
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return topic_classify(docs)
-
-
 def _topic_classify_sql() -> str:
     """Oracle generated FROM the library lexicon dict so the SQL CASE
     chain can never drift from DEFAULT_TOPICS' declaration order."""
@@ -8260,17 +7737,6 @@ SQL_INTERLEAVE_AUDIT = _with(
 """)
 
 
-def q_lang_consistency(spark, sf_dir):
-    """Segment-level language agreement / code-switch detection:
-    10-token segments lang-ID'd independently, majority + agreement
-    per doc. Explode + two combinable aggs + one window, all
-    hash-partitioned on doc_id."""
-    from webloghunter_spark.functions.text import lang_consistency
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return lang_consistency(docs, seg_tokens=10)
-
-
 def _lang_consistency_sql() -> str:
     """Oracle generated FROM LANG_MARKERS so the per-segment CASE
     chain and the tie-break index can never drift from the library."""
@@ -8397,16 +7863,6 @@ SQL_CONTAM_MATRIX = _with(
 """)
 
 
-def q_text_normalize(spark, sf_dir):
-    """Unicode-aware corpus canonicalization: NFC (Arrow-batched UDF
-    with C-speed ASCII fast path — Spark has no builtin) + control
-    strip + whitespace collapse, all in one projection, no shuffle."""
-    from webloghunter_spark.functions.text import text_normalize
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return text_normalize(docs)
-
-
 SQL_TEXT_NORMALIZE = _with(
     n=rf"""
         SELECT doc_id,
@@ -8447,25 +7903,6 @@ SQL_SAMPLE_EXACT_K = r"""
         ORDER BY md5('sample|' || CAST(doc_id AS VARCHAR)), doc_id
     ) <= 20
 """
-
-
-def q_gopher_rules(spark, sf_dir):
-    """Gopher quality-rule audit matrix (Rae et al. 2021): one boolean
-    per rule per document — word-count bounds, mean-word-length band,
-    symbol ratio, alpha-word fraction, distinct-stopword floor,
-    bullet/ellipsis line ratios — all integer cross-multiplies in ONE
-    codegen projection; no shuffle, no UDF, scan speed at 100 TB.
-    Thresholds here are tightened from the published defaults so the
-    fixture exercises the word-count, mean-word-length, and stopword
-    rules (the symbol/alpha/line rules are covered by unit tests —
-    the synthetic corpus contains no symbols or multi-line docs)."""
-    from webloghunter_spark.pipelines.gate import gopher_rules
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return gopher_rules(
-        docs, min_words=30, max_words=60, min_mwl_deci=38, max_mwl_deci=45,
-        min_stopwords=2,
-    )
 
 
 SQL_GOPHER_RULES = _with(
@@ -8585,18 +8022,6 @@ SQL_RANK_FUSION = _with(
 """)
 
 
-def q_boilerplate_segments(spark, sf_dir):
-    """CCNet-style boilerplate removal: segments whose document
-    frequency reaches min_df are deleted from EVERY document
-    (segment_dedup keeps the first copy; here the template text goes
-    everywhere). Two combinable md5-key aggregates + one left_anti
-    join + one rebuild — no windows, no all-pairs."""
-    from webloghunter_spark.pipelines.dedup import boilerplate_segments
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return boilerplate_segments(docs, seg_tokens=5, min_df=2)
-
-
 SQL_BOILERPLATE_SEGMENTS = _with(
     toks=_toks("doc_id"),
     base="""
@@ -8631,17 +8056,6 @@ SQL_BOILERPLATE_SEGMENTS = _with(
            coalesce(s.new_text, '') AS new_text
     FROM base b LEFT JOIN stats s USING (doc_id)
 """)
-
-
-def q_density_sample(spark, sf_dir):
-    """Embedding-space density equalization: hyperplane-LSH buckets
-    (the emb_drift hash family), at most cap survivors per bucket by
-    seeded md5 order, integer inverse-density weights for unbiased
-    reweighting. One exchange on the bucket id."""
-    from webloghunter_spark.pipelines.semdedup import density_sample
-
-    emb = _fan(_t(spark, sf_dir, "embeddings"))
-    return density_sample(emb, cap=20, num_planes=4)
 
 
 SQL_DENSITY_SAMPLE = _with(
@@ -8679,17 +8093,13 @@ SQL_DENSITY_SAMPLE = _with(
 BM25_QUERY_TERMS = ["spark", "query", "table", "join"]
 
 
-def q_bm25_topk(spark, sf_dir):
-    """BM25 retrieval probe: top-20 docs for a fixed 4-term query.
-    The query is tiny, so tf is computed ROW-LOCALLY with array
-    filter() — no explode/shuffle of corpus tokens (contrast
-    tfidf_topk's tf table). Two corpus passes: one combinable
-    stats aggregate collected as a SINGLE row (guard-bounded:
-    2+|q| scalars), then scan + score + TakeOrderedAndProject."""
-    from webloghunter_spark.functions.text import bm25_topk
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return bm25_topk(docs, BM25_QUERY_TERMS, k=20)
+# BM25 retrieval probe: top-20 docs for a fixed 4-term query.
+# The query is tiny, so tf is computed ROW-LOCALLY with array
+# filter() — no explode/shuffle of corpus tokens (contrast
+# tfidf_topk's tf table). Two corpus passes: one combinable
+# stats aggregate collected as a SINGLE row (guard-bounded:
+# 2+|q| scalars), then scan + score + TakeOrderedAndProject.
+q_bm25_topk = _on("documents", bm25_topk, BM25_QUERY_TERMS, k=20)
 
 
 def q_bm25_drift(spark, sf_dir):
@@ -8928,18 +8338,6 @@ SQL_EWMA_ALERTS = _with(
 """)
 
 
-def q_heaps_fit(spark, sf_dir):
-    """Heaps'-law vocabulary growth over a doubling prefix grid +
-    log-log OLS (V ~ K*N^beta). One token explode -> min(doc_id) per
-    type; every grid point falls out of conditional counts over the
-    type frame — no per-prefix rescans. Fit terms on the 1e-9 integer
-    grid (zipf_fit's engine-exact form)."""
-    from webloghunter_spark.pipelines.select import heaps_fit
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return heaps_fit(docs, n_points=7)
-
-
 SQL_HEAPS_FIT = _with(
     nn="SELECT count(*)::BIGINT AS n FROM documents",
     toks=rf"""
@@ -9007,18 +8405,6 @@ SQL_HEAPS_FIT = _with(
 """)
 
 
-def q_effective_data(spark, sf_dir):
-    """Muennighoff data-constrained scaling: per-source effective
-    tokens and repetition efficiency across an epochs grid. One
-    (source, fingerprint) combinable aggregate; the exp decay factors
-    are driver-side libm literals (|grid| values), so no per-row
-    engine transcendental."""
-    from webloghunter_spark.pipelines.select import effective_data
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return effective_data(docs, epochs_grid=(1, 2, 4, 8, 16, 32))
-
-
 SQL_EFFECTIVE_DATA = _with(
     fp=f"""
         SELECT source, {_norm_key('text')} AS f, min(len({_TOKENS})::BIGINT) AS mk
@@ -9050,17 +8436,6 @@ SQL_EFFECTIVE_DATA = _with(
 """)
 
 
-def q_dedup_keep_best(spark, sf_dir):
-    """Exact dedup keeping the highest-quality duplicate (ties ->
-    lowest id) — the CCNet/RefinedWeb keep rule. One combinable
-    fingerprint aggregate with a lexicographic struct-MIN argmax; no
-    per-group window."""
-    from webloghunter_spark.pipelines.dedup import dedup_keep_best
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return dedup_keep_best(docs)
-
-
 SQL_DEDUP_KEEP_BEST = _with(
     toks=_toks("doc_id", "text"),
     bp=f"""
@@ -9079,16 +8454,6 @@ SQL_DEDUP_KEEP_BEST = _with(
     SELECT fingerprint, doc_id, quality_bp, n_dups
     FROM ranked WHERE rn = 1
 """)
-
-
-def q_tail_index(spark, sf_dir):
-    """Hill tail-index estimate over the top-20 token frequencies —
-    the extreme-tail companion to zipf_fit. Bounded top-(k+1) +
-    1e-9-grid integer ln sums (engine-exact, order-free)."""
-    from webloghunter_spark.pipelines.select import tail_index
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return tail_index(docs, k=20)
 
 
 SQL_TAIL_INDEX = _with(
@@ -9123,30 +8488,6 @@ SQL_TAIL_INDEX = _with(
                 ELSE 0 END AS alpha_micro
     FROM h
 """)
-
-
-def q_boundary_leakage(spark, sf_dir):
-    """Adjacent-doc shingle overlap in the seeded training order —
-    the in-batch leakage audit. Distinct shingle arrays computed
-    before train_order's one shuffle and carried through it; the
-    adjacency self-join co-partitions on shard_id; Jaccard is exact
-    integer basis points."""
-    from webloghunter_spark.pipelines.shard import boundary_leakage
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return boundary_leakage(docs, n_shards=16, seed="lk")
-
-
-def q_batch_leakage(spark, sf_dir):
-    """All-pairs shingle overlap within an 8-row window of the seeded
-    training order — the general in-batch (contrastive-negative)
-    leakage audit; boundary_leakage is its batch_size=2 case. The
-    self-join keys on (shard_id, position div B) with a two-bucket
-    explode, so candidates stay <= 2B per doc instead of |shard|²."""
-    from webloghunter_spark.pipelines.shard import batch_leakage
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return batch_leakage(docs, batch_size=8, n_shards=16, seed="lk")
 
 
 SQL_BATCH_LEAKAGE = _with(
@@ -9240,17 +8581,6 @@ SQL_BOUNDARY_LEAKAGE = _with(
 """)
 
 
-def q_char_entropy(spark, sf_dir):
-    """Per-doc character entropy in integer nano-nats — the gibberish
-    / encoding-damage tripwire. Row-local Arrow kernel, zero shuffle;
-    per-char terms quantized to nano BEFORE summing (order-free,
-    engine-exact)."""
-    from webloghunter_spark.functions.text import char_entropy
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return char_entropy(docs)
-
-
 SQL_CHAR_ENTROPY = _with(
     base="""
         SELECT doc_id, trim(coalesce(text, ''), ' ') AS t FROM documents
@@ -9286,16 +8616,6 @@ SQL_CHAR_ENTROPY = _with(
 """)
 
 
-def q_split_coherence(spark, sf_dir):
-    """First-half vs second-half shingle Jaccard per doc — the
-    concatenation-artifact detector. One row-local codegen
-    projection, zero shuffle, exact integer bp."""
-    from webloghunter_spark.functions.text import split_coherence
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return split_coherence(docs, shingle_k=3)
-
-
 SQL_SPLIT_COHERENCE = _with(
     toks=_toks("doc_id"),
     halves="""
@@ -9326,17 +8646,6 @@ SQL_SPLIT_COHERENCE = _with(
                 ELSE 0 END AS coherence_bp
     FROM sh
 """)
-
-
-def q_dup_ngram_frac(spark, sf_dir):
-    """Against-the-corpus repetition: per-doc share of distinct
-    shingles appearing in another document. One exchange to the
-    (shingle, doc) posting frame; df is a window on that layout —
-    no second shuffle; integer bp."""
-    from webloghunter_spark.pipelines.dedup import dup_ngram_frac
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return dup_ngram_frac(docs, shingle_k=3)
 
 
 SQL_DUP_NGRAM_FRAC = _with(
@@ -9370,17 +8679,6 @@ SQL_DUP_NGRAM_FRAC = _with(
 """)
 
 
-def q_prefix_modal(spark, sf_dir):
-    """Per-source modal k-token document prefix + share — the
-    template/header-farm detector. Two combinable aggregates; the
-    argmax is a lexicographic struct-MIN over the compact count
-    frame, no window over corpus rows."""
-    from webloghunter_spark.pipelines.curate import prefix_modal
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return prefix_modal(docs, n_tokens=3)
-
-
 SQL_PREFIX_MODAL = _with(
     toks=_toks("source"),
     pre="""
@@ -9405,17 +8703,6 @@ SQL_PREFIX_MODAL = _with(
            (n * 10000) // n_docs AS top_share_bp
     FROM ranked WHERE rn = 1
 """)
-
-
-def q_len_quantiles(spark, sf_dir):
-    """Exact per-source token-length quantiles (p10/p50/p90,
-    lower-nearest-rank) — sequence-length planning per source. One
-    combinable (source, ntok) histogram; the cumulative walk runs on
-    each source's compact histogram rows, never the corpus."""
-    from webloghunter_spark.pipelines.select import len_quantiles
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return len_quantiles(docs, qs_bp=(1000, 5000, 9000))
 
 
 SQL_LEN_QUANTILES = _with(
@@ -9447,17 +8734,6 @@ BM25_BATCH_QUERIES = {
     "q1": ["table", "join"],
     "q2": ["slow", "fast"],
 }
-
-
-def q_bm25_batch(spark, sf_dir):
-    """Multi-query BM25 (the retrieval-eval harness): 3 named queries
-    share ONE tokenize+stats pass over the persisted narrow tf frame;
-    each query is a TakeOrderedAndProject over the cache, results
-    unioned plan-side."""
-    from webloghunter_spark.functions.text import bm25_batch
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    return bm25_batch(docs, BM25_BATCH_QUERIES, k=10)
 
 
 def _bm25_batch_sql() -> str:
@@ -9522,7 +8798,10 @@ def _bm25_batch_sql() -> str:
 SQL_BM25_BATCH = _bm25_batch_sql()
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+# The registry: one (name, Spark builder, DuckDB oracle) row per query.
+# A one-table query is declared with `_on(table, operator, *args)`; the
+# builder's description is the comment above its row.
+_REGISTRY: list[tuple[str, Builder, str]] = [
     # ORDER IS DRIVER COVERAGE: the correctness driver samples the
     # FIRST 50 entries. Front = the 9 names whose operator was split
     # into a partial aggregate and a finalize (its streaming twin runs
@@ -9534,411 +8813,555 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # front's staleness cohort. Everything after slot 50 is covered by
     # the committed full-registry HASHCHECK artifacts.
     # -- operators split into partial and finalize (9) --
-    "mix_temperature": q_mix_temperature,
-    "upsample_epochs": q_upsample_epochs,
-    "shard_balance": q_shard_balance,
-    "unimax_alloc": q_unimax_alloc,
-    "len_quantiles": q_len_quantiles,
-    "dist_drift": q_dist_drift,
-    "emb_drift": q_emb_drift,
-    "hll_distinct": q_hll_distinct,
-    "ewma_alerts": q_ewma_alerts,
+    ("mix_temperature", q_mix_temperature, SQL_MIX_TEMPERATURE),
+    # Materialized repetition plan for the temperature mix on a
+    # data-constrained corpus: per-source epochs = clamp(ceil(boost), 1,
+    # 4); one row per (doc, epoch). Broadcast plan join + bounded
+    # explode — the output is the repeated-corpus listing itself.
+    ("upsample_epochs", _on("documents", upsample_epochs, "source", alpha=0.7, max_epochs=4),
+     SQL_UPSAMPLE_EPOCHS),
+    # Per-shard token-load balance audit of the seeded md5 shard
+    # assignment: doc counts, token totals, share and |share - 1/n|
+    # deviation on the integer cross-multiply grid. ONE combinable
+    # (shard) aggregate — no order-key sort, no window over the corpus
+    # (balance doesn't depend on the within-shard order).
+    ("shard_balance", _on("documents", shard_balance, n_shards=16, seed="bal"), SQL_SHARD_BALANCE),
+    # UniMax budget allocation (Chung et al. 2023): a 1.8x-total
+    # token budget waterfilled across sources as uniformly as possible
+    # under a 2-epoch repetition cap — the published alternative to
+    # temperature sampling when over-repeating small sources hurts more
+    # than under-weighting large ones. One combinable (source -> sum
+    # ntok) aggregate; the ascending-capacity waterfill is driver
+    # integer arithmetic on the |sources|-row result. The oracle replays
+    # the walk with a recursive CTE, one recursion step per source.
+    ("unimax_alloc", _on("documents", unimax_alloc, budget_bp_of_total=18000, max_epochs=2),
+     SQL_UNIMAX_ALLOC),
+    # Exact per-source token-length quantiles (p10/p50/p90,
+    # lower-nearest-rank) — sequence-length planning per source. One
+    # combinable (source, ntok) histogram; the cumulative walk runs on
+    # each source's compact histogram rows, never the corpus.
+    ("len_quantiles", _on("documents", len_quantiles, qs_bp=(1000, 5000, 9000)),
+     SQL_LEN_QUANTILES),
+    ("dist_drift", q_dist_drift, SQL_DIST_DRIFT),
+    ("emb_drift", q_emb_drift, SQL_EMB_DRIFT),
+    ("hll_distinct", q_hll_distinct, SQL_HLL_DISTINCT),
+    ("ewma_alerts", q_ewma_alerts, SQL_EWMA_ALERTS),
     # -- plans changed by one evaluation per UDF (20) --
-    "cc_representatives": q_cc_representatives,
-    "dup_stats": q_dup_stats,
-    "lsh_recall": q_lsh_recall,
-    "near_dedup": q_near_dedup,
-    "near_dedup_cc": q_near_dedup_cc,
-    "simhash_pairs": q_simhash_pairs,
-    "dedup_sensitivity": q_dedup_sensitivity,
-    "dup_source_matrix": q_dup_source_matrix,
-    "curate_incremental": q_curate_incremental,
-    "curate_pipeline": q_curate_pipeline,
-    "jaccard_pairs": q_jaccard_pairs,
-    "lsh_pairs": q_lsh_pairs,
-    "minhash_signatures": q_minhash,
-    "simhash": q_simhash,
-    "scorecard_budget": q_scorecard_budget,
-    "filter_track": q_filter_track,
-    "dataset_diff": q_dataset_diff,
-    "source_scorecard": q_source_scorecard,
-    "incremental_dedup": q_incremental_dedup,
-    "winnow_pairs": q_winnow_pairs,
+    ("cc_representatives", q_cc_representatives, SQL_CC_REPRESENTATIVES),
+    ("dup_stats", q_dup_stats, SQL_DUP_STATS),
+    # Dedup deployment audit: recall of the MinHash-LSH candidate
+    # generator (4 hashes, 2 bands) against EXACT all-pairs Jaccard >=
+    # 0.5 ground truth. Truth comes from the gram-key self-join (pairs
+    # with J > 0 must share a shingle — never n^2); the one-row result
+    # is the number a band/hash configuration must justify before
+    # near_dedup trusts it. ann_recall's text twin.
+    #
+    # sample_bp is passed EXPLICITLY (matching the operator default) so
+    # the oracle stays hash-exact if the default ever moves: the audit
+    # runs on the deterministic 20% md5-bucket subset — the exact
+    # all-pairs audit is opt-in only (it dies at the 32x dup-stress).
+    ("lsh_recall", _on("documents", lsh_recall_audit, tau=0.5, num_hashes=4, band_size=2,
+                       sample_bp=2000),
+     SQL_LSH_RECALL),
+    ("near_dedup", q_near_dedup, SQL_NEAR_DEDUP),
+    ("near_dedup_cc", q_near_dedup_cc, SQL_NEAR_DEDUP_CC),
+    ("simhash_pairs", q_simhash_pairs, SQL_SIMHASH_PAIRS),
+    # Near-dup attrition vs threshold (0.7/0.8/0.9): ONE shared
+    # MinHash/LSH/exact-Jaccard pass, per-threshold pair counts and
+    # would-drop doc counts on the integer bp grid — the knob-tuning
+    # curve run before committing near_dedup's threshold. The oracle
+    # composes SQL_JACCARD_PAIRS, so the pair machinery is shared.
+    ("dedup_sensitivity", _on("documents", dedup_sensitivity, thresholds_bp=(7000, 8000, 9000),
+                              num_hashes=4, band_size=2),
+     SQL_DEDUP_SENSITIVITY),
+    # Cross-source near-dup flow matrix: per unordered source pair,
+    # the count and share of >=0.8-Jaccard near-dup pairs (diagonal =
+    # within-source churn; off-diagonal = one source copying another) —
+    # the diagnostic that decides whether cross-source dedup is worth
+    # its shuffle before anything is dropped. Same MinHash/LSH/exact
+    # verify and parameters as near_dedup; the oracle composes
+    # SQL_JACCARD_PAIRS, so the pair machinery is shared.
+    ("dup_source_matrix", _on("documents", dup_source_matrix, threshold=0.8, num_hashes=4,
+                              band_size=2),
+     SQL_DUP_SOURCE_MATRIX),
+    ("curate_incremental", q_curate_incremental, SQL_CURATE_INCREMENTAL),
+    ("curate_pipeline", q_curate_pipeline, SQL_CURATE_PIPELINE),
+    ("jaccard_pairs", q_jaccard_pairs, SQL_JACCARD_PAIRS),
+    ("lsh_pairs", _on("documents", lsh_candidate_pairs, num_hashes=4, band_size=2), SQL_LSH_PAIRS),
+    ("minhash_signatures", q_minhash, SQL_MINHASH),
+    # 16-bit SimHash fingerprint per document.
+    ("simhash", _on("documents", simhash_fingerprints, shingle_k=3, bits=16), SQL_SIMHASH),
+    # Audit-driven budget allocation (closes source_scorecard's
+    # loop): each source's share of a 20k-token budget is proportional
+    # to its EFFECTIVE clean token mass — n_tokens scaled by
+    # (10000 - min(dup_doc_bp + contained_bp, 10000)) on the exact
+    # integer grid — then every source admits its highest-quality docs
+    # until its budget is spent (the budget_by_source walk). Mirror
+    # sources de-budget themselves instead of being hand-excluded.
+    ("scorecard_budget", _on("documents", scorecard_budget, total_budget=20_000,
+                             neardup_threshold=0.8, num_hashes=4, band_size=2, shingle_k=3,
+                             containment_threshold_bp=8000, size_ratio_bp=10000, max_df=20),
+     SQL_SCORECARD_BUDGET),
+    ("filter_track", q_filter_track, SQL_FILTER_TRACK),
+    ("dataset_diff", q_dataset_diff, SQL_DATASET_DIFF),
+    # Per-source contamination/dup one-screener ("which source do we
+    # cut"): dataset_card composition/hygiene + near-dup matrix
+    # exposure (self + cross pair counts) + containment_drop attrition,
+    # one row per source. Composition operator: replays the three
+    # pipelines and joins their |sources|-scale outputs broadcast-side.
+    ("source_scorecard", _on("documents", source_scorecard, neardup_threshold=0.8, num_hashes=4,
+                             band_size=2, shingle_k=3, containment_threshold_bp=8000,
+                             size_ratio_bp=10000, max_df=20),
+     SQL_SOURCE_SCORECARD),
+    ("incremental_dedup", q_incremental_dedup, SQL_INCREMENTAL_DEDUP),
+    # MOSS-style overlap pairs from winnowed fingerprints — the
+    # sparse candidate generator winnowing exists for (fingerprint
+    # inverted index ~1/((w+1)/2) the density of the shingle index):
+    # candidates from discriminative fingerprints (2 <= df <= 20),
+    # exact shared-count verify on the per-doc sorted distinct
+    # fingerprint arrays, n_shared >= 2, overlap on the integer bp
+    # grid. The oracle composes SQL_WINNOW, so the fingerprint
+    # definition is shared.
+    ("winnow_pairs", _on("documents", winnow_pairs, kgram=8, window=4, max_df=20, min_shared=2),
+     SQL_WINNOW_PAIRS),
     # -- builders changed by the one-implementation pass (13) --
-    "doc_fingerprint": q_doc_fingerprint,
-    "doc_fingerprint_fast": q_doc_fingerprint,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    "winnow_fingerprints_fast": q_winnow_fingerprints,
-    "semantic_dedup": q_semantic_dedup,
-    "semantic_dedup_fast": q_semantic_dedup,
-    "containment_pairs": q_containment_pairs,
-    "containment_pairs_hashed": q_containment_pairs,
-    "tfidf_topk": q_tfidf_topk,
-    "tfidf_topk_salted": q_tfidf_topk,
-    "substring_dedup": q_substring_dedup,
-    "bigram_logprob": q_bigram_logprob,
-    "winnow_containment_drop": q_winnow_containment_drop,
+    ("doc_fingerprint", q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    ("doc_fingerprint_fast", q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    ("winnow_fingerprints", q_winnow_fingerprints, SQL_WINNOW),
+    ("winnow_fingerprints_fast", q_winnow_fingerprints, SQL_WINNOW),
+    ("semantic_dedup", q_semantic_dedup, SQL_SEMANTIC_DEDUP),
+    ("semantic_dedup_fast", q_semantic_dedup, SQL_SEMANTIC_DEDUP),
+    ("containment_pairs", q_containment_pairs, SQL_CONTAINMENT_PAIRS),
+    ("containment_pairs_hashed", q_containment_pairs, SQL_CONTAINMENT_PAIRS_HASHED),
+    ("tfidf_topk", q_tfidf_topk, SQL_TFIDF_TOPK),
+    ("tfidf_topk_salted", q_tfidf_topk, SQL_TFIDF_TOPK),
+    # Exact-substring duplication signal (Lee et al. ExactSubstr,
+    # relational form): 8-token windows whose md5 repeats anywhere in
+    # the corpus; per affected doc, the repeated-window count and the
+    # UNION length of covered spans (running-max interval merge — no
+    # double counting) in tokens and basis points.
+    ("substring_dedup", _on("documents", repeated_window_spans, window=8), SQL_SUBSTRING_DEDUP),
+    ("bigram_logprob", q_bigram_logprob, SQL_BIGRAM_LOGPROB),
+    # containment_drop's intervention on WINNOWED fingerprints — the
+    # MOSS candidate generator (~1/((window+1)/2) the shingle index
+    # density) feeding the same exact-integer drop rules (contained at
+    # >= 0.8 in a not-smaller doc -> dropped; mutual containment ->
+    # keep-best). The oracle composes winnow_pairs' machinery
+    # (_WINNOW_PAIRS) with the quality score and the keep-best decision
+    # (_keep_best) that SQL_CONTAINMENT_DROP uses.
+    ("winnow_containment_drop", _on("documents", winnow_containment_drop, kgram=8, window=4,
+                                    threshold_bp=8000, size_ratio_bp=10000, max_df=20),
+     SQL_WINNOW_CONTAINMENT_DROP),
     # -- round-9/10 staleness cohort (17) --
-    "url_blocklist_big": q_url_blocklist_big,
-    "batch_leakage": q_batch_leakage,
-    "bloom_audit": q_bloom_audit,
-    "bm25_drift": q_bm25_drift,
-    "bpe_encode": q_bpe_encode,
-    "bpe_merges": q_bpe_merges,
-    "budget_by_source": q_budget_by_source,
-    "chunk_sliding": q_chunk_sliding,
-    "clean_html": q_clean_html,
-    "cluster_purity": q_cluster_purity,
-    "containment_drop": q_containment_drop,
-    "corpus_stats": q_corpus_stats,
-    "decontam_bloom": q_decontam_bloom,
-    "decontaminate": q_decontaminate,
-    "funnel": q_funnel,
-    "fuzzy_match": q_fuzzy_match,
-    "gapfill_hourly": q_gapfill_hourly,
+    ("url_blocklist_big", q_url_blocklist_big, SQL_URL_BLOCKLIST_BIG),
+    # All-pairs shingle overlap within an 8-row window of the seeded
+    # training order — the general in-batch (contrastive-negative)
+    # leakage audit; boundary_leakage is its batch_size=2 case. The
+    # self-join keys on (shard_id, position div B) with a two-bucket
+    # explode, so candidates stay <= 2B per doc instead of |shard|².
+    ("batch_leakage", _on("documents", batch_leakage, batch_size=8, n_shards=16, seed="lk"),
+     SQL_BATCH_LEAKAGE),
+    ("bloom_audit", q_bloom_audit, SQL_BLOOM_AUDIT),
+    ("bm25_drift", q_bm25_drift, SQL_BM25_DRIFT),
+    # Apply the 4 learned merges back to the corpus: per-doc symbol
+    # counts and compression (saved_bp) under the trained merge table —
+    # the report that prices a merge vocabulary before committing to a
+    # real tokenizer. The oracle re-learns the merges and re-applies
+    # them with the id carried through every round's state.
+    ("bpe_encode", _on("documents", bpe_encode, steps=4), SQL_BPE_ENCODE),
+    # BPE-style merge training, phrase-level: 4 rounds of
+    # count-adjacent-pairs -> merge-the-argmax over the whitespace-token
+    # symbol stream (3-pass delimiter merge — deterministic,
+    # engine-portable; merged symbols merge again, building the BPE
+    # hierarchy). The oracle replays all 4 rounds with nothing but
+    # string replace() and must land identical merges and counts.
+    ("bpe_merges", _on("documents", bpe_merge_learn, steps=4), SQL_BPE_MERGES),
+    ("budget_by_source", q_budget_by_source, SQL_BUDGET_BY_SOURCE),
+    ("chunk_sliding", q_chunk_sliding, SQL_CHUNK_SLIDING),
+    ("clean_html", q_clean_html, SQL_CLEAN_HTML),
+    ("cluster_purity", q_cluster_purity, SQL_CLUSTER_PURITY),
+    # The intervention form of containment_pairs: drop a doc when it
+    # is contained (>= 0.8 shingle containment, exact-integer bp rule)
+    # in a not-smaller other doc; mutual same-size containment resolves
+    # by dedup_keep_best's keep-best rule (higher quality_bp, tie ->
+    # lower id). One shingle pass feeds pair machinery and per-doc
+    # stats; output is the per-doc decision frame.
+    ("containment_drop", _on("documents", containment_drop, shingle_k=3, threshold_bp=8000,
+                             size_ratio_bp=10000, max_df=20),
+     SQL_CONTAINMENT_DROP),
+    ("corpus_stats", q_corpus_stats, SQL_CORPUS_STATS),
+    ("decontam_bloom", q_decontam_bloom, SQL_DECONTAM_BLOOM),
+    ("decontaminate", q_decontaminate, SQL_DECONTAMINATE),
+    ("funnel", q_funnel, SQL_FUNNEL),
+    ("fuzzy_match", q_fuzzy_match, SQL_FUZZY_MATCH),
+    ("gapfill_hourly", q_gapfill_hourly, SQL_GAPFILL_HOURLY),
     # -- the remainder (committed full-registry HASHCHECK coverage) --
-    "jl_project": q_jl_project,
-    "kmeans_sizes": q_kmeans_sizes,
-    "kmeans_train": q_kmeans_train,
-    "knn_ivf_trained": q_knn_ivf_trained,
-    "knn_quantized": q_knn_quantized,
-    "mad_outliers": q_mad_outliers,
-    "mix_resample": q_mix_resample,
-    "pack_bins": q_pack_bins,
-    "pack_chunks": q_pack_chunks,
-    "pagerank": q_pagerank,
-    "pii_redact": q_pii_redact,
-    "pivot_counts": q_pivot_counts,
-    "quality_ecdf": q_quality_ecdf,
-    "quantize_emb": q_quantize_emb,
-    "referrer_hosts": q_referrer_hosts,
-    "rep_signals": q_rep_signals,
-    "returned_items": q_returned_items,
-    "shard_manifest": q_shard_manifest,
-    "stratified_sample": q_stratified_sample,
-    "value_quantiles": q_value_quantiles,
-    "vocab_topk": q_vocab_topk,
-    "weighted_sample": q_weighted_sample,
-    "topk_per_group": q_topk_per_group,
-    "url_blocklist": q_url_blocklist,
-    "ann_recall": q_ann_recall,
-    "asof_join": q_asof_join,
-    "bm25_batch": q_bm25_batch,
-    "bm25_topk": q_bm25_topk,
-    "boundary_leakage": q_boundary_leakage,
-    "bpe_roundtrip": q_bpe_roundtrip,
-    "bpe_tokens": q_bpe_tokens,
-    "char_entropy": q_char_entropy,
-    "charset_stats": q_charset_stats,
-    "cms_heavy_hitters": q_cms_heavy_hitters,
-    "dedup_keep_best": q_dedup_keep_best,
-    "domain_mix": q_domain_mix,
-    "dup_ngram_frac": q_dup_ngram_frac,
-    "effective_data": q_effective_data,
-    "heaps_fit": q_heaps_fit,
-    "ivf_probe_curve": q_ivf_probe_curve,
-    "knn_batch": q_knn_batch,
-    "knn_ivf": q_knn_ivf,
-    "media_decode": q_media_decode,
-    "media_sniff": q_media_sniff,
-    "novelty_frac": q_novelty_frac,
-    "padding_curve": q_padding_curve,
-    "prefix_modal": q_prefix_modal,
-    "quality_gate": q_quality_gate,
-    "quantize_recall": q_quantize_recall,
-    "rollup_counts": q_rollup_counts,
-    "salted_collect": q_salted_collect,
-    "salted_join": q_salted_join,
-    "segment_dedup": q_segment_dedup,
-    "shipping_priority": q_shipping_priority,
-    "source_overlap": q_source_overlap,
-    "split_coherence": q_split_coherence,
-    "tail_index": q_tail_index,
-    "token_entropy": q_token_entropy,
-    "tool_focus": q_tool_focus,
-    "trailing_rate": q_trailing_rate,
-    "train_split": q_train_split,
-    "uri_risk": q_uri_risk,
-    "boilerplate_segments": q_boilerplate_segments,
-    "bpe_apply": q_bpe_apply,
-    "burst_detect": q_burst_detect,
-    "burst_success": q_burst_success,
-    "cidr_filter": q_cidr_filter,
-    "contam_matrix": q_contam_matrix,
-    "contam_sensitivity": q_contam_sensitivity,
-    "dedup_cross_source": q_dedup_cross_source,
-    "dedup_exact": q_dedup_exact,
-    "density_sample": q_density_sample,
-    "event_risk": q_event_risk,
-    "filter_api": q_filter_api,
-    "first_last": q_first_last,
-    "gopher_rules": q_gopher_rules,
-    "interleave_audit": q_interleave_audit,
-    "json_agg": q_json_agg,
-    "knn_bruteforce": q_knn,
-    "knn_lsh": q_knn_lsh,
-    "lag_delta": q_lag_delta,
-    "lang_consistency": q_lang_consistency,
-    "lang_id": q_lang_id,
-    "longest_repeat": q_longest_repeat,
-    "neardup_embeddings": q_neardup_embeddings,
-    "parse_roundtrip": q_parse_roundtrip,
-    "pricing_summary": q_pricing_summary,
-    "quality_score": q_quality,
-    "rank_fusion": q_rank_fusion,
-    "request_count": q_request_count,
-    "sample_exact_k": q_sample_exact_k,
-    "session_stats": q_session_stats,
-    "sessionize": q_sessionize,
-    "sigma_rules": q_sigma_rules,
-    "text_normalize": q_text_normalize,
-    "time_split": q_time_split,
-    "token_stats": q_token_stats,
-    "tool_scan": q_tool_scan,
-    "tool_scan_single": q_tool_scan_single,
-    "tool_scan_windowed": q_tool_scan_windowed,
-    "top_revenue": q_top_revenue,
-    "topic_classify": q_topic_classify,
-    "containment_drop_against": q_containment_drop_against,
-    "containment_pairs_against": q_containment_pairs_against,
-    "cms_counts": q_cms_counts,
-    "contam_spans": q_contam_spans,
-    "curriculum_order": q_curriculum_order,
-    "dataset_card": q_dataset_card,
-    "dedup_normalized": q_dedup_normalized,
-    "dsir_weights": q_dsir_weights,
-    "emb_outliers": q_emb_outliers,
-    "epoch_order": q_epoch_order,
-    "fim_split": q_fim_split,
-    "group_split": q_group_split,
-    "hard_negatives": q_hard_negatives,
-    "interval_join": q_interval_join,
-    "label_propagation": q_label_propagation,
-    "local_volume": q_local_volume,
-    "mix_solver": q_mix_solver,
-    "mmr_select": q_mmr_select,
-    "oov_rate": q_oov_rate,
-    "order_priority": q_order_priority,
-    "padding_waste": q_padding_waste,
-    "perplexity_filter": q_perplexity_filter,
-    "pmi_collocations": q_pmi_collocations,
-    "quality_calibration": q_quality_calibration,
-    "quality_classifier": q_quality_classifier,
-    "readability": q_readability,
-    "semantic_contam": q_semantic_contam,
-    "snapshot_diff": q_snapshot_diff,
-    "source_divergence": q_source_divergence,
-    "span_corruption": q_span_corruption,
-    "substring_remove": q_substring_remove,
-    "token_budget": q_token_budget,
-    "tokenizer_fertility": q_tokenizer_fertility,
-    "train_manifest": q_train_manifest,
-    "train_order": q_train_order,
-    "triplet_mining": q_triplet_mining,
-    "url_normalize": q_url_normalize,
-    "vocab_coverage": q_vocab_coverage,
-    "zipf_fit": q_zipf_fit,
-}
+    # Johnson-Lindenstrauss 64→16 reduction of the embedding store
+    # with an md5-derived Achlioptas ±1/0 matrix — the deterministic
+    # pre-shrink before ANN indexing. One mapInPandas matmul, no
+    # shuffle; the oracle rebuilds the same matrix from the same md5
+    # expression and projects in long form.
+    ("jl_project", _on("embeddings", jl_project, out_dim=16, in_dim=64), SQL_JL_PROJECT),
+    ("kmeans_sizes", q_kmeans_sizes, SQL_KMEANS_SIZES),
+    # Deterministic 2-pass Lloyd's k-means over the embedding store:
+    # seeds are the 8 lowest-id vectors, one quantized mean update, then
+    # the final assignment with squared-L2 distances. The trainer the
+    # SemDeDup/IVF stand-in centroids graduate to when real centers are
+    # wanted with an exact oracle (pyspark.ml's k-means|| is random-init
+    # and unorderable). Per pass: broadcast k x dim matmul assignment
+    # (mapInPandas, no shuffle) + a combinable posexplode mean whose
+    # exchange carries k x dim cells per partition, not n x dim rows.
+    ("kmeans_train", _on("embeddings", kmeans_lloyd, k=8, iters=2), SQL_KMEANS_TRAIN),
+    ("knn_ivf_trained", q_knn_ivf_trained, SQL_KNN_IVF_TRAINED),
+    ("knn_quantized", q_knn_quantized, SQL_KNN_QUANTIZED),
+    ("mad_outliers", q_mad_outliers, SQL_MAD_OUTLIERS),
+    ("mix_resample", q_mix_resample, SQL_MIX_RESAMPLE),
+    ("pack_bins", q_pack_bins, SQL_PACK_BINS),
+    ("pack_chunks", q_pack_chunks, SQL_PACK_CHUNKS),
+    ("pagerank", q_pagerank, SQL_PAGERANK),
+    ("pii_redact", q_pii_redact, SQL_PII_REDACT),
+    ("pivot_counts", q_pivot_counts, SQL_PIVOT_COUNTS),
+    ("quality_ecdf", q_quality_ecdf, SQL_QUALITY_ECDF),
+    ("quantize_emb", q_quantize_emb, SQL_QUANTIZE_EMB),
+    ("referrer_hosts", q_referrer_hosts, SQL_REFERRER_HOSTS),
+    ("rep_signals", q_rep_signals, SQL_REP_SIGNALS),
+    ("returned_items", q_returned_items, SQL_RETURNED_ITEMS),
+    ("shard_manifest", q_shard_manifest, SQL_SHARD_MANIFEST),
+    ("stratified_sample", q_stratified_sample, SQL_STRATIFIED_SAMPLE),
+    ("value_quantiles", q_value_quantiles, SQL_VALUE_QUANTILES),
+    # Corpus vocabulary heavy hitters (exact counts): map-side
+    # combinable hash aggregate + TakeOrderedAndProject.
+    ("vocab_topk", _on("documents", vocab_topk, "text", k=100), SQL_VOCAB_TOPK),
+    ("weighted_sample", q_weighted_sample, SQL_WEIGHTED_SAMPLE),
+    ("topk_per_group", q_topk_per_group, SQL_TOPK_PER_GROUP),
+    ("url_blocklist", q_url_blocklist, SQL_URL_BLOCKLIST),
+    ("ann_recall", q_ann_recall, SQL_ANN_RECALL),
+    ("asof_join", q_asof_join, SQL_ASOF_JOIN),
+    # Multi-query BM25 (the retrieval-eval harness): 3 named queries
+    # share ONE tokenize+stats pass over the persisted narrow tf frame;
+    # each query is a TakeOrderedAndProject over the cache, results
+    # unioned plan-side.
+    ("bm25_batch", _on("documents", bm25_batch, BM25_BATCH_QUERIES, k=10), SQL_BM25_BATCH),
+    ("bm25_topk", q_bm25_topk, SQL_BM25_TOPK),
+    # Adjacent-doc shingle overlap in the seeded training order —
+    # the in-batch leakage audit. Distinct shingle arrays computed
+    # before train_order's one shuffle and carried through it; the
+    # adjacency self-join co-partitions on shard_id; Jaccard is exact
+    # integer basis points.
+    ("boundary_leakage", _on("documents", boundary_leakage, n_shards=16, seed="lk"),
+     SQL_BOUNDARY_LEAKAGE),
+    ("bpe_roundtrip", q_bpe_roundtrip, SQL_BPE_ROUNDTRIP),
+    ("bpe_tokens", q_bpe_tokens, SQL_BPE_TOKENS),
+    # Per-doc character entropy in integer nano-nats — the gibberish
+    # / encoding-damage tripwire. Row-local Arrow kernel, zero shuffle;
+    # per-char terms quantized to nano BEFORE summing (order-free,
+    # engine-exact).
+    ("char_entropy", _on("documents", char_entropy), SQL_CHAR_ENTROPY),
+    ("charset_stats", q_charset_stats, SQL_CHARSET_STATS),
+    # Heavy hitters THROUGH a count-min sketch (md5 cell family, 4x1024):
+    # one-sided superset of true >=threshold tokens — the bounded-state
+    # vocabulary primitive whose streaming twin is cms_vocab_stream.
+    ("cms_heavy_hitters", _on("documents", cms_heavy_hitters, "text", threshold=100),
+     SQL_CMS_HEAVY_HITTERS),
+    # Exact dedup keeping the highest-quality duplicate (ties ->
+    # lowest id) — the CCNet/RefinedWeb keep rule. One combinable
+    # fingerprint aggregate with a lexicographic struct-MIN argmax; no
+    # per-group window.
+    ("dedup_keep_best", _on("documents", dedup_keep_best), SQL_DEDUP_KEEP_BEST),
+    ("domain_mix", q_domain_mix, SQL_DOMAIN_MIX),
+    # Against-the-corpus repetition: per-doc share of distinct
+    # shingles appearing in another document. One exchange to the
+    # (shingle, doc) posting frame; df is a window on that layout —
+    # no second shuffle; integer bp.
+    ("dup_ngram_frac", _on("documents", dup_ngram_frac, shingle_k=3), SQL_DUP_NGRAM_FRAC),
+    # Muennighoff data-constrained scaling: per-source effective
+    # tokens and repetition efficiency across an epochs grid. One
+    # (source, fingerprint) combinable aggregate; the exp decay factors
+    # are driver-side libm literals (|grid| values), so no per-row
+    # engine transcendental.
+    ("effective_data", _on("documents", effective_data, epochs_grid=(1, 2, 4, 8, 16, 32)),
+     SQL_EFFECTIVE_DATA),
+    # Heaps'-law vocabulary growth over a doubling prefix grid +
+    # log-log OLS (V ~ K*N^beta). One token explode -> min(doc_id) per
+    # type; every grid point falls out of conditional counts over the
+    # type frame — no per-prefix rescans. Fit terms on the 1e-9 integer
+    # grid (zipf_fit's engine-exact form).
+    ("heaps_fit", _on("documents", heaps_fit, n_points=7), SQL_HEAPS_FIT),
+    ("ivf_probe_curve", q_ivf_probe_curve, SQL_IVF_PROBE_CURVE),
+    ("knn_batch", q_knn_batch, SQL_KNN_BATCH),
+    ("knn_ivf", q_knn_ivf, SQL_KNN_IVF),
+    ("media_decode", q_media_decode, SQL_MEDIA_DECODE),
+    ("media_sniff", q_media_sniff, SQL_MEDIA_SNIFF),
+    # Per-document novelty: distinct 3-grams vs how many first occur
+    # at this id — the memorization signal boilerplate-heavy docs fail
+    # even when no single earlier doc matches them wholesale.
+    ("novelty_frac", _on("documents", novelty_frac, "text", "doc_id", k=3), SQL_NOVELTY_FRAC),
+    # Padding waste vs context length (128/512/1024/2048): the
+    # sizing curve read before pinning a training sequence length. ONE
+    # combinable aggregate computes every length's sums in a single
+    # scan; per-L rows explode from the 1-row result. Monotone
+    # non-increasing n_seqs in L by construction.
+    ("padding_curve", _on("documents", padding_curve, seq_lens=(128, 512, 1024, 2048)),
+     SQL_PADDING_CURVE),
+    # Per-source modal k-token document prefix + share — the
+    # template/header-farm detector. Two combinable aggregates; the
+    # argmax is a lexicographic struct-MIN over the compact count
+    # frame, no window over corpus rows.
+    ("prefix_modal", _on("documents", prefix_modal, n_tokens=3), SQL_PREFIX_MODAL),
+    # Composed intake gate (C4/Gopher-style rule stack): length bounds,
+    # encoding damage, heuristic quality, corpus-LM likelihood — first
+    # failing rule is the drop reason. Integer threshold arithmetic
+    # everywhere except the (rounded) LM compare.
+    ("quality_gate", _on("documents", quality_gate, min_tokens=30, max_tokens=5000,
+                         max_nonprintable_bp=1000, min_quality_bp=5000, min_avg_ll=-8.0),
+     SQL_QUALITY_GATE),
+    ("quantize_recall", q_quantize_recall, SQL_QUANTIZE_RECALL),
+    ("rollup_counts", q_rollup_counts, SQL_ROLLUP),
+    ("salted_collect", q_salted_collect, SQL_SALTED_COLLECT),
+    ("salted_join", q_salted_join, SQL_SALTED_JOIN),
+    # Sub-document exact dedup at 10-token segment granularity
+    # (Lee et al. exact-substring stand-in): globally-first occurrence
+    # of each distinct segment survives; docs reassemble from survivors.
+    ("segment_dedup", _on("documents", segment_dedup, "text", "doc_id", seg_tokens=10),
+     SQL_SEGMENT_DEDUP),
+    ("shipping_priority", q_shipping_priority, SQL_SHIPPING_PRIORITY),
+    # Pairwise distinct-3-gram overlap between sources — the corpus
+    # composition matrix that decides whether cross-source dedup pays.
+    ("source_overlap", _on("documents", source_overlap, "text", "source", k=3),
+     SQL_SOURCE_OVERLAP),
+    # First-half vs second-half shingle Jaccard per doc — the
+    # concatenation-artifact detector. One row-local codegen
+    # projection, zero shuffle, exact integer bp.
+    ("split_coherence", _on("documents", split_coherence, shingle_k=3), SQL_SPLIT_COHERENCE),
+    # Hill tail-index estimate over the top-20 token frequencies —
+    # the extreme-tail companion to zipf_fit. Bounded top-(k+1) +
+    # 1e-9-grid integer ln sums (engine-exact, order-free).
+    ("tail_index", _on("documents", tail_index, k=20), SQL_TAIL_INDEX),
+    ("token_entropy", q_token_entropy, SQL_TOKEN_ENTROPY),
+    ("tool_focus", q_tool_focus, SQL_TOOL_FOCUS),
+    ("trailing_rate", q_trailing_rate, SQL_TRAILING_RATE),
+    ("train_split", q_train_split, SQL_TRAIN_SPLIT),
+    ("uri_risk", q_uri_risk, SQL_URI_RISK),
+    # CCNet-style boilerplate removal: segments whose document
+    # frequency reaches min_df are deleted from EVERY document
+    # (segment_dedup keeps the first copy; here the template text goes
+    # everywhere). Two combinable md5-key aggregates + one left_anti
+    # join + one rebuild — no windows, no all-pairs.
+    ("boilerplate_segments", _on("documents", boilerplate_segments, seg_tokens=5, min_df=2),
+     SQL_BOILERPLATE_SEGMENTS),
+    ("bpe_apply", q_bpe_apply, SQL_BPE_APPLY),
+    ("burst_detect", q_burst_detect, SQL_BURST_DETECT),
+    ("burst_success", q_burst_success, SQL_BURST_SUCCESS),
+    ("cidr_filter", q_cidr_filter, SQL_CIDR_FILTER),
+    ("contam_matrix", q_contam_matrix, SQL_CONTAM_MATRIX),
+    ("contam_sensitivity", q_contam_sensitivity, SQL_CONTAM_SENSITIVITY),
+    ("dedup_cross_source", q_dedup_cross_source, SQL_DEDUP_CROSS_SOURCE),
+    ("dedup_exact", _on("documents", exact_dedup), SQL_DEDUP_EXACT),
+    # Embedding-space density equalization: hyperplane-LSH buckets
+    # (the emb_drift hash family), at most cap survivors per bucket by
+    # seeded md5 order, integer inverse-density weights for unbiased
+    # reweighting. One exchange on the bucket id.
+    ("density_sample", _on("embeddings", density_sample, cap=20, num_planes=4),
+     SQL_DENSITY_SAMPLE),
+    ("event_risk", q_event_risk, SQL_EVENT_RISK),
+    ("filter_api", q_filter_api, SQL_FILTER_API),
+    ("first_last", q_first_last, SQL_FIRST_LAST),
+    # Gopher quality-rule audit matrix (Rae et al. 2021): one boolean
+    # per rule per document — word-count bounds, mean-word-length band,
+    # symbol ratio, alpha-word fraction, distinct-stopword floor,
+    # bullet/ellipsis line ratios — all integer cross-multiplies in ONE
+    # codegen projection; no shuffle, no UDF, scan speed at 100 TB.
+    # Thresholds here are tightened from the published defaults so the
+    # fixture exercises the word-count, mean-word-length, and stopword
+    # rules (the symbol/alpha/line rules are covered by unit tests —
+    # the synthetic corpus contains no symbols or multi-line docs).
+    ("gopher_rules", _on("documents", gopher_rules, min_words=30, max_words=60, min_mwl_deci=38,
+                         max_mwl_deci=45, min_stopwords=2),
+     SQL_GOPHER_RULES),
+    ("interleave_audit", q_interleave_audit, SQL_INTERLEAVE_AUDIT),
+    ("json_agg", q_json_agg, SQL_JSON_AGG),
+    ("knn_bruteforce", q_knn, SQL_KNN),
+    ("knn_lsh", q_knn_lsh, SQL_KNN_LSH),
+    ("lag_delta", q_lag_delta, SQL_LAG_DELTA),
+    # Segment-level language agreement / code-switch detection:
+    # 10-token segments lang-ID'd independently, majority + agreement
+    # per doc. Explode + two combinable aggs + one window, all
+    # hash-partitioned on doc_id.
+    ("lang_consistency", _on("documents", lang_consistency, seg_tokens=10), SQL_LANG_CONSISTENCY),
+    ("lang_id", q_lang_id, SQL_LANG_ID),
+    # Per-document longest repeated token n-gram + tie count — the
+    # open-ended repetition statistic beyond the fixed-k window family
+    # (rep_signals / segment_dedup). Row-local: one Arrow mapInPandas
+    # pass, zero shuffle; the kernel binary-searches k with O(n) set
+    # probes. The oracle replays it as the full quadratic gram explode
+    # (bounded: docs are <= ~100 tokens in the fixture).
+    ("longest_repeat", _on("documents", longest_repeat), SQL_LONGEST_REPEAT),
+    # Embedding near-dup: cosine over hyperplane-LSH bucket pairs.
+    ("neardup_embeddings", _on("embeddings", neardup_pairs_lsh, num_planes=4, dim=64,
+                               threshold=0.2),
+     SQL_NEARDUP_EMB),
+    ("parse_roundtrip", q_parse_roundtrip, SQL_PARSE_ROUNDTRIP),
+    ("pricing_summary", q_pricing_summary, SQL_PRICING),
+    ("quality_score", q_quality, SQL_QUALITY),
+    ("rank_fusion", q_rank_fusion, SQL_RANK_FUSION),
+    ("request_count", q_request_count, SQL_REQUEST_COUNT),
+    ("sample_exact_k", q_sample_exact_k, SQL_SAMPLE_EXACT_K),
+    ("session_stats", q_session_stats, SQL_SESSION_STATS),
+    ("sessionize", q_sessionize, SQL_SESSIONIZE),
+    ("sigma_rules", q_sigma_rules, SQL_SIGMA_RULES),
+    # Unicode-aware corpus canonicalization: NFC (Arrow-batched UDF
+    # with C-speed ASCII fast path — Spark has no builtin) + control
+    # strip + whitespace collapse, all in one projection, no shuffle.
+    ("text_normalize", _on("documents", text_normalize), SQL_TEXT_NORMALIZE),
+    # Temporal split leakage audit: users with events on BOTH sides
+    # of the cut, with train/test counts and the floor-epoch of the
+    # earliest post-cut event. One conditional-count aggregate on the
+    # group key; an empty result is the clean-split verdict.
+    ("time_split", _on("events", time_split_audit, "2024-01-15 00:00:00"), SQL_TIME_SPLIT),
+    ("token_stats", q_token_stats, SQL_TOKEN_STATS),
+    ("tool_scan", q_tool_scan, SQL_TOOL_SCAN),
+    ("tool_scan_single", q_tool_scan_single, SQL_TOOL_SCAN_SINGLE),
+    ("tool_scan_windowed", q_tool_scan_windowed, SQL_TOOL_SCAN_WINDOWED),
+    ("top_revenue", q_top_revenue, SQL_TOP_REVENUE),
+    # Lexicon domain tagging ahead of the mix operators
+    # (WebOrganizer-style taxonomy bootstrap): per-topic marker-token
+    # hits + declaration-order-tie argmax, one pure-codegen projection
+    # — no shuffle, no UDF, scan speed at 100 TB.
+    ("topic_classify", _on("documents", topic_classify), SQL_TOPIC_CLASSIFY),
+    ("containment_drop_against", q_containment_drop_against, SQL_CONTAINMENT_DROP_AGAINST),
+    ("containment_pairs_against", q_containment_pairs_against, SQL_CONTAINMENT_PAIRS_AGAINST),
+    # Count-Min sketch overestimate audit on the md5 cell family the
+    # streaming vocab sketch uses (4x1024 — fixed state at any corpus
+    # size): estimate the 20 true-top tokens through the sketch and
+    # report the collision mass (over_bp). est >= true always; this is
+    # the number that tunes depth/width. Rides streaming/vocab.py's
+    # existing sketch machinery — one implementation, batch + stream.
+    ("cms_counts", _on("documents", cms_overestimate_audit, "text", k=20), SQL_CMS_COUNTS),
+    ("contam_spans", q_contam_spans, SQL_CONTAM_SPANS),
+    ("curriculum_order", q_curriculum_order, SQL_CURRICULUM_ORDER),
+    # Per-source dataset card: doc/token counts, language mix
+    # (distinct langs, majority lang + share), exact-dup share and
+    # empty share — the composition/hygiene one-screener next to
+    # corpus_stats' length profile. Three group-scale aggregates.
+    ("dataset_card", _on("documents", dataset_card), SQL_DATASET_CARD),
+    ("dedup_normalized", q_dedup_normalized, SQL_DEDUP_NORMALIZED),
+    ("dsir_weights", q_dsir_weights, SQL_DSIR_WEIGHTS),
+    ("emb_outliers", q_emb_outliers, SQL_EMB_OUTLIERS),
+    # Multi-epoch loader-ready training order: upsample_epochs'
+    # plan expanded, fresh md5(seed|epoch|id) interleave per epoch,
+    # position within (epoch, shard). One exchange (the train_order
+    # window, partition count x epochs).
+    ("epoch_order", _on("documents", epoch_order, "source", alpha=0.7, max_epochs=4, n_shards=8,
+                        seed="r7e"),
+     SQL_EPOCH_ORDER),
+    # Deterministic fill-in-the-middle cut points: two md5-derived
+    # char positions per doc, span lengths + a digest over the
+    # 0x1f-separated prefix|middle|suffix reconstruction. One narrow
+    # projection, no shuffle.
+    ("fim_split", _on("documents", fim_splits, "text", "doc_id", seed="r7f"), SQL_FIM_SPLIT),
+    ("group_split", q_group_split, SQL_GROUP_SPLIT),
+    ("hard_negatives", q_hard_negatives, SQL_HARD_NEGATIVES),
+    ("interval_join", q_interval_join, SQL_INTERVAL_JOIN),
+    ("label_propagation", q_label_propagation, SQL_LABEL_PROPAGATION),
+    ("local_volume", q_local_volume, SQL_LOCAL_VOLUME),
+    ("mix_solver", q_mix_solver, SQL_MIX_SOLVER),
+    # Greedy maximal-marginal-relevance pick of 4 vectors balancing
+    # relevance to vec_id 0 against redundancy with prior picks
+    # (lambda = 0.5, integer-bp scoring): the diverse-subset primitive
+    # for eval-set and few-shot example selection. The oracle unrolls
+    # the 4 greedy rounds with the true max-sim state carried through.
+    ("mmr_select", _on("embeddings", mmr_select, k=4, lam_bp=5000, query_id=0), SQL_MMR_SELECT),
+    # Tokenizer-coverage audit: per-doc fraction of tokens outside
+    # the corpus's own top-1000 vocabulary (count DESC, token ASC ties).
+    # Vocab via one combinable count + TakeOrderedAndProject; per-doc
+    # OOV via explode + broadcast anti-join against the 1000-row vocab.
+    ("oov_rate", _on("documents", oov_rate, vocab_size=1000), SQL_OOV_RATE),
+    ("order_priority", q_order_priority, SQL_ORDER_PRIORITY),
+    # Per-source padding-efficiency report for naive (unpacked)
+    # sequence loading at L=128: documents chunk into ceil(ntok/L)
+    # sequences, the last is padded; waste_bp prices what packing
+    # would save. One combinable aggregate, no text movement.
+    ("padding_waste", _on("documents", padding_waste, max_seq_len=128, group_col="source"),
+     SQL_PADDING_WASTE),
+    # CCNet head/middle/tail perplexity banding over the self-trained
+    # bigram LM: per-language equal-height terciles of avg_ll (ntile
+    # semantics), keep = head|middle. Spark side runs the bounded
+    # (lang, score-cell) histogram + driver cut walk — never a per-lang
+    # window sort; the oracle states the same result as plain ntile.
+    ("perplexity_filter", _on("documents", perplexity_bands, "text", "doc_id", "lang", alpha=0.5),
+     SQL_PERPLEXITY_FILTER),
+    # Top-100 collocations by PMI (Church & Hanks) with a min-count
+    # floor against PMI's low-frequency bias: vocabulary-bounded count
+    # aggregates, margin joins, TakeOrderedAndProject top-k. PMI in
+    # micro-nats (ln over identical IEEE doubles, 1e-6 grid).
+    ("pmi_collocations", _on("documents", pmi_collocations, "text", "doc_id", min_count=5, k=100),
+     SQL_PMI_COLLOCATIONS),
+    ("quality_calibration", q_quality_calibration, SQL_QUALITY_CALIBRATION),
+    ("quality_classifier", q_quality_classifier, SQL_QUALITY_CLASSIFIER),
+    ("readability", q_readability, SQL_READABILITY),
+    ("semantic_contam", q_semantic_contam, SQL_SEMANTIC_CONTAM),
+    ("snapshot_diff", q_snapshot_diff, SQL_SNAPSHOT_DIFF),
+    # Pairwise JS-divergence matrix between all sources' hashed
+    # unigram distributions (dist_drift generalized to the full
+    # all-pairs mixing-design view): one corpus scan into a combinable
+    # (source, bucket) aggregate, then |sources|^2 x 1024 spine
+    # arithmetic — never token-scale pair volume.
+    ("source_divergence", _on("documents", source_divergence, group_col="source"),
+     SQL_SOURCE_DIVERGENCE),
+    # T5 span-corruption plan at 15%: per-position md5 coin on the
+    # 10000-grid, adjacent hits form one span, masked_digest pins the
+    # exact mask. One narrow HOF projection, no shuffle.
+    ("span_corruption", _on("documents", span_corruption_plan, "text", "doc_id", seed="r7t5",
+                            rate_bp=1500),
+     SQL_SPAN_CORRUPTION),
+    # The ExactSubstr intervention substring_dedup measures: rewrite
+    # each document with every token covered by a duplicated 8-token
+    # window deleted (interval union — overlapping spans delete once).
+    # One row per input doc: ntok, removed_tokens, and the cleaned
+    # whitespace-normalized text ('' when fully duplicated).
+    ("substring_remove", _on("documents", remove_repeated_spans, window=8), SQL_SUBSTRING_REMOVE),
+    ("token_budget", q_token_budget, SQL_TOKEN_BUDGET),
+    ("tokenizer_fertility", q_tokenizer_fertility, SQL_TOKENIZER_FERTILITY),
+    # Per-shard audit rows for the seeded training order: doc/token
+    # totals plus an order-free-to-compute bit_xor digest over
+    # md5('id@position') prefixes — position is baked into each digest,
+    # so one number per shard pins the exact training order any engine
+    # can re-derive from (seed, id).
+    ("train_manifest", _on("documents", train_order_manifest, n_shards=16, seed="r7"),
+     SQL_TRAIN_MANIFEST),
+    # Seeded deterministic global training order: shard + 0-based
+    # within-shard position as pure functions of (seed, id) via the
+    # md5 interleave key — reproducible source-mixing ahead of the data
+    # loader. One shuffle (window partitioned by shard = repartition +
+    # sort-within-partition on the 16-byte key), no global sort.
+    ("train_order", _on("documents", train_order, n_shards=16, seed="r7"), SQL_TRAIN_ORDER),
+    ("triplet_mining", q_triplet_mining, SQL_TRIPLET_MINING),
+    ("url_normalize", q_url_normalize, SQL_URL_NORMALIZE),
+    # Tokenizer-sizing curve: corpus coverage of the top-V vocabulary
+    # for V in {250, 1k, 4k, 16k}. One type-count aggregate + a bounded
+    # top-max(V) (TakeOrderedAndProject, never a global type sort), a
+    # cumulative sum over the <=16k-row frame, broadcast size spine.
+    ("vocab_coverage", _on("documents", vocab_coverage, sizes=[250, 1000, 4000, 16000]),
+     SQL_VOCAB_COVERAGE),
+    # Rank-frequency OLS in log-log space over the top-1000 types:
+    # slope ~ -1 is natural text, flatter flags templated/synthetic
+    # corpora. Bounded top-k + 1e-9-quantized regression sums —
+    # engine-exact, order-free.
+    ("zipf_fit", _on("documents", zipf_fit, top_k=1000), SQL_ZIPF_FIT),
+]
 
-ORACLES: dict[str, str] = {
-    "bloom_audit": SQL_BLOOM_AUDIT,
-    "cc_representatives": SQL_CC_REPRESENTATIVES,
-    "contam_spans": SQL_CONTAM_SPANS,
-    "curate_pipeline": SQL_CURATE_PIPELINE,
-    "curate_incremental": SQL_CURATE_INCREMENTAL,
-    "filter_track": SQL_FILTER_TRACK,
-    "longest_repeat": SQL_LONGEST_REPEAT,
-    "url_blocklist_big": SQL_URL_BLOCKLIST_BIG,
-    "bpe_roundtrip": SQL_BPE_ROUNDTRIP,
-    "dataset_diff": SQL_DATASET_DIFF,
-    "containment_pairs": SQL_CONTAINMENT_PAIRS,
-    "containment_drop": SQL_CONTAINMENT_DROP,
-    "containment_pairs_against": SQL_CONTAINMENT_PAIRS_AGAINST,
-    "containment_drop_against": SQL_CONTAINMENT_DROP_AGAINST,
-    "scorecard_budget": SQL_SCORECARD_BUDGET,
-    "source_scorecard": SQL_SOURCE_SCORECARD,
-    "bm25_drift": SQL_BM25_DRIFT,
-    "url_blocklist": SQL_URL_BLOCKLIST,
-    "shard_balance": SQL_SHARD_BALANCE,
-    "time_split": SQL_TIME_SPLIT,
-    "contam_sensitivity": SQL_CONTAM_SENSITIVITY,
-    "dedup_normalized": SQL_DEDUP_NORMALIZED,
-    "dist_drift": SQL_DIST_DRIFT,
-    "dsir_weights": SQL_DSIR_WEIGHTS,
-    "emb_drift": SQL_EMB_DRIFT,
-    "emb_outliers": SQL_EMB_OUTLIERS,
-    "group_split": SQL_GROUP_SPLIT,
-    "incremental_dedup": SQL_INCREMENTAL_DEDUP,
-    "interval_join": SQL_INTERVAL_JOIN,
-    "local_volume": SQL_LOCAL_VOLUME,
-    "mix_temperature": SQL_MIX_TEMPERATURE,
-    "oov_rate": SQL_OOV_RATE,
-    "order_priority": SQL_ORDER_PRIORITY,
-    "quality_calibration": SQL_QUALITY_CALIBRATION,
-    "substring_dedup": SQL_SUBSTRING_DEDUP,
-    "token_budget": SQL_TOKEN_BUDGET,
-    "tokenizer_fertility": SQL_TOKENIZER_FERTILITY,
-    "url_normalize": SQL_URL_NORMALIZE,
-    "substring_remove": SQL_SUBSTRING_REMOVE,
-    "train_order": SQL_TRAIN_ORDER,
-    "train_manifest": SQL_TRAIN_MANIFEST,
-    "padding_waste": SQL_PADDING_WASTE,
-    "vocab_coverage": SQL_VOCAB_COVERAGE,
-    "cms_counts": SQL_CMS_COUNTS,
-    "source_divergence": SQL_SOURCE_DIVERGENCE,
-    "zipf_fit": SQL_ZIPF_FIT,
-    "quality_classifier": SQL_QUALITY_CLASSIFIER,
-    "mix_solver": SQL_MIX_SOLVER,
-    "bpe_merges": SQL_BPE_MERGES,
-    "bpe_encode": SQL_BPE_ENCODE,
-    "bpe_apply": SQL_BPE_APPLY,
-    "mmr_select": SQL_MMR_SELECT,
-    "hard_negatives": SQL_HARD_NEGATIVES,
-    "cluster_purity": SQL_CLUSTER_PURITY,
-    "dataset_card": SQL_DATASET_CARD,
-    "perplexity_filter": SQL_PERPLEXITY_FILTER,
-    "curriculum_order": SQL_CURRICULUM_ORDER,
-    "upsample_epochs": SQL_UPSAMPLE_EPOCHS,
-    "pmi_collocations": SQL_PMI_COLLOCATIONS,
-    "label_propagation": SQL_LABEL_PROPAGATION,
-    "semantic_contam": SQL_SEMANTIC_CONTAM,
-    "readability": SQL_READABILITY,
-    "fim_split": SQL_FIM_SPLIT,
-    "budget_by_source": SQL_BUDGET_BY_SOURCE,
-    "unimax_alloc": SQL_UNIMAX_ALLOC,
-    "span_corruption": SQL_SPAN_CORRUPTION,
-    "triplet_mining": SQL_TRIPLET_MINING,
-    "epoch_order": SQL_EPOCH_ORDER,
-    "snapshot_diff": SQL_SNAPSHOT_DIFF,
-    "pricing_summary": SQL_PRICING,
-    "top_revenue": SQL_TOP_REVENUE,
-    "sessionize": SQL_SESSIONIZE,
-    "session_stats": SQL_SESSION_STATS,
-    "request_count": SQL_REQUEST_COUNT,
-    "lag_delta": SQL_LAG_DELTA,
-    "burst_detect": SQL_BURST_DETECT,
-    "first_last": SQL_FIRST_LAST,
-    "event_risk": SQL_EVENT_RISK,
-    "sigma_rules": SQL_SIGMA_RULES,
-    "filter_api": SQL_FILTER_API,
-    "cidr_filter": SQL_CIDR_FILTER,
-    "topk_per_group": SQL_TOPK_PER_GROUP,
-    "json_agg": SQL_JSON_AGG,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "dedup_cross_source": SQL_DEDUP_CROSS_SOURCE,
-    "token_stats": SQL_TOKEN_STATS,
-    "quality_score": SQL_QUALITY,
-    "lang_id": SQL_LANG_ID,
-    "minhash_signatures": SQL_MINHASH,
-    "lsh_pairs": SQL_LSH_PAIRS,
-    "quality_gate": SQL_QUALITY_GATE,
-    "novelty_frac": SQL_NOVELTY_FRAC,
-    "source_overlap": SQL_SOURCE_OVERLAP,
-    "token_entropy": SQL_TOKEN_ENTROPY,
-    "knn_batch": SQL_KNN_BATCH,
-    "ann_recall": SQL_ANN_RECALL,
-    "ivf_probe_curve": SQL_IVF_PROBE_CURVE,
-    "media_sniff": SQL_MEDIA_SNIFF,
-    "media_decode": SQL_MEDIA_DECODE,
-    "shipping_priority": SQL_SHIPPING_PRIORITY,
-    "dup_stats": SQL_DUP_STATS,
-    "returned_items": SQL_RETURNED_ITEMS,
-    "vocab_topk": SQL_VOCAB_TOPK,
-    "tfidf_topk": SQL_TFIDF_TOPK,
-    "tfidf_topk_salted": SQL_TFIDF_TOPK,
-    "corpus_stats": SQL_CORPUS_STATS,
-    "quantize_emb": SQL_QUANTIZE_EMB,
-    "knn_quantized": SQL_KNN_QUANTIZED,
-    "simhash_pairs": SQL_SIMHASH_PAIRS,
-    "referrer_hosts": SQL_REFERRER_HOSTS,
-    "funnel": SQL_FUNNEL,
-    "pivot_counts": SQL_PIVOT_COUNTS,
-    "clean_html": SQL_CLEAN_HTML,
-    "mad_outliers": SQL_MAD_OUTLIERS,
-    "pack_chunks": SQL_PACK_CHUNKS,
-    "rep_signals": SQL_REP_SIGNALS,
-    "pii_redact": SQL_PII_REDACT,
-    "near_dedup": SQL_NEAR_DEDUP,
-    "near_dedup_cc": SQL_NEAR_DEDUP_CC,
-    "stratified_sample": SQL_STRATIFIED_SAMPLE,
-    "decontaminate": SQL_DECONTAMINATE,
-    "semantic_dedup": SQL_SEMANTIC_DEDUP,
-    "semantic_dedup_fast": SQL_SEMANTIC_DEDUP,
-    "kmeans_train": SQL_KMEANS_TRAIN,
-    "kmeans_sizes": SQL_KMEANS_SIZES,
-    "mix_resample": SQL_MIX_RESAMPLE,
-    "chunk_sliding": SQL_CHUNK_SLIDING,
-    "jl_project": SQL_JL_PROJECT,
-    "knn_ivf_trained": SQL_KNN_IVF_TRAINED,
-    "shard_manifest": SQL_SHARD_MANIFEST,
-    "quality_ecdf": SQL_QUALITY_ECDF,
-    "hll_distinct": SQL_HLL_DISTINCT,
-    "pagerank": SQL_PAGERANK,
-    "pack_bins": SQL_PACK_BINS,
-    "lsh_recall": SQL_LSH_RECALL,
-    "gapfill_hourly": SQL_GAPFILL_HOURLY,
-    "fuzzy_match": SQL_FUZZY_MATCH,
-    "value_quantiles": SQL_VALUE_QUANTILES,
-    "decontam_bloom": SQL_DECONTAM_BLOOM,
-    "weighted_sample": SQL_WEIGHTED_SAMPLE,
-    "knn_bruteforce": SQL_KNN,
-    "parse_roundtrip": SQL_PARSE_ROUNDTRIP,
-    "jaccard_pairs": SQL_JACCARD_PAIRS,
-    "dup_source_matrix": SQL_DUP_SOURCE_MATRIX,
-    "dedup_sensitivity": SQL_DEDUP_SENSITIVITY,
-    "simhash": SQL_SIMHASH,
-    "neardup_embeddings": SQL_NEARDUP_EMB,
-    "burst_success": SQL_BURST_SUCCESS,
-    "tool_scan": SQL_TOOL_SCAN,
-    "tool_scan_single": SQL_TOOL_SCAN_SINGLE,
-    "tool_scan_windowed": SQL_TOOL_SCAN_WINDOWED,
-    "knn_lsh": SQL_KNN_LSH,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "winnow_fingerprints": SQL_WINNOW,
-    "winnow_pairs": SQL_WINNOW_PAIRS,
-    "winnow_containment_drop": SQL_WINNOW_CONTAINMENT_DROP,
-    "containment_pairs_hashed": SQL_CONTAINMENT_PAIRS_HASHED,
-    "quantize_recall": SQL_QUANTIZE_RECALL,
-    "padding_curve": SQL_PADDING_CURVE,
-    "bm25_topk": SQL_BM25_TOPK,
-    "ewma_alerts": SQL_EWMA_ALERTS,
-    "heaps_fit": SQL_HEAPS_FIT,
-    "effective_data": SQL_EFFECTIVE_DATA,
-    "dedup_keep_best": SQL_DEDUP_KEEP_BEST,
-    "tail_index": SQL_TAIL_INDEX,
-    "boundary_leakage": SQL_BOUNDARY_LEAKAGE,
-    "batch_leakage": SQL_BATCH_LEAKAGE,
-    "char_entropy": SQL_CHAR_ENTROPY,
-    "split_coherence": SQL_SPLIT_COHERENCE,
-    "dup_ngram_frac": SQL_DUP_NGRAM_FRAC,
-    "prefix_modal": SQL_PREFIX_MODAL,
-    "len_quantiles": SQL_LEN_QUANTILES,
-    "bm25_batch": SQL_BM25_BATCH,
-    "doc_fingerprint_fast": SQL_DOC_FINGERPRINT,
-    "winnow_fingerprints_fast": SQL_WINNOW,
-    "knn_ivf": SQL_KNN_IVF,
-    "tool_focus": SQL_TOOL_FOCUS,
-    "uri_risk": SQL_URI_RISK,
-    "bpe_tokens": SQL_BPE_TOKENS,
-    "salted_join": SQL_SALTED_JOIN,
-    "salted_collect": SQL_SALTED_COLLECT,
-    "rollup_counts": SQL_ROLLUP,
-    "trailing_rate": SQL_TRAILING_RATE,
-    "asof_join": SQL_ASOF_JOIN,
-    "train_split": SQL_TRAIN_SPLIT,
-    "domain_mix": SQL_DOMAIN_MIX,
-    "segment_dedup": SQL_SEGMENT_DEDUP,
-    "cms_heavy_hitters": SQL_CMS_HEAVY_HITTERS,
-    "charset_stats": SQL_CHARSET_STATS,
-    "bigram_logprob": SQL_BIGRAM_LOGPROB,
-    "topic_classify": SQL_TOPIC_CLASSIFY,
-    "interleave_audit": SQL_INTERLEAVE_AUDIT,
-    "lang_consistency": SQL_LANG_CONSISTENCY,
-    "contam_matrix": SQL_CONTAM_MATRIX,
-    "text_normalize": SQL_TEXT_NORMALIZE,
-    "sample_exact_k": SQL_SAMPLE_EXACT_K,
-    "gopher_rules": SQL_GOPHER_RULES,
-    "rank_fusion": SQL_RANK_FUSION,
-    "boilerplate_segments": SQL_BOILERPLATE_SEGMENTS,
-    "density_sample": SQL_DENSITY_SAMPLE,
-}
+QUERIES: dict[str, Builder] = {name: build for name, build, _ in _REGISTRY}
+ORACLES: dict[str, str] = {name: sql for name, _, sql in _REGISTRY}
+
+
+def run_noop(spark: SparkSession, name: str, sf_dir: str) -> float:
+    """Build query `name`, run it into the no-op writer and release what
+    it persisted. Returns the seconds of the build and the run (the
+    release is not timed)."""
+    t0 = time.perf_counter()
+    try:
+        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        return time.perf_counter() - t0
+    finally:
+        release_materialized()
+        spark.catalog.clearCache()
