@@ -1,5 +1,7 @@
 """Presentation sinks and CLI plumbing."""
 
+from pyspark.sql import functions as F
+
 from webloghunter_spark.render import (
     build_email,
     display_projection,
@@ -24,11 +26,68 @@ def _scored(spark):
     )
 
 
-def test_display_projection_drops_empty_cols(spark):
-    out = display_projection(_scored(spark))
-    assert "method_path" in out.columns
-    assert "tool" not in out.columns          # all-empty -> dropped
-    assert "risk_score" in out.columns
+def _header(table):
+    """Column names of a render_table string."""
+    return [h.strip() for h in table.splitlines()[1].strip("|").split("|")]
+
+
+def test_render_table_drops_empty_cols(spark):
+    proj = display_projection(_scored(spark))
+    assert "tool" in proj.columns             # the projection is lazy
+    header = _header(render_table(proj))
+    assert "method_path" in header and "risk_score" in header
+    assert "tool" not in header               # all-empty -> dropped
+
+
+def _jobs_in(sc, group, action):
+    """(result, Spark jobs) of `action()`, counted through a job group."""
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_untruncated_render_runs_one_job(spark, tmp_path):
+    """A result that fits on screen is decided from the one collect:
+    its all-empty columns (cluster, tool) cost no aggregate job."""
+    write_parquet_store(_scored(spark), str(tmp_path / "store"))
+    df = spark.read.parquet(str(tmp_path / "store")).orderBy("source", "timestamp")
+    table, jobs = _jobs_in(spark.sparkContext, "render-one-job",
+                           lambda: render_table(display_projection(df)))
+    header = _header(table)
+    assert "cluster" not in header and "tool" not in header
+    assert "method_path" in header
+    assert jobs == 1
+
+
+def test_truncated_render_settles_unseen_rows(spark):
+    """Past the row cap the collected rows cannot show a column empty:
+    `late` is empty in the first max_rows + 1 rows only, so it stays;
+    `never` is empty in every row and goes."""
+    df = spark.range(10).select(
+        F.col("id").cast("string").alias("ip"),
+        F.when(F.col("id") >= 8, "x").otherwise("").alias("late"),
+        F.lit("-").alias("never"),
+    ).orderBy("ip")
+    table = render_table(df, max_rows=3, color=False)
+    assert _header(table) == ["ip", "late"]
+    assert table.endswith("(output truncated at 3 rows)")
+
+
+def test_render_float_null_vs_nan_matches_aggregate(spark):
+    """Arrow collects a null double as NaN; a real NaN is content to
+    Spark's `!= 0.0`, a null is not. The table keeps what the Spark
+    predicate keeps."""
+    df = spark.createDataFrame(
+        [("a", None, float("nan")), ("b", 0.0, 0.0)],
+        "ip string, nulls double, nans double",
+    )
+    flags = df.agg(*(F.max((F.col(c) != 0.0).cast("int")).alias(c)
+                     for c in ("nulls", "nans"))).collect()[0]
+    assert not flags["nulls"] and flags["nans"]
+    assert _header(render_table(df, color=False)) == ["ip", "nans"]
 
 
 def test_render_table_colors_and_cap(spark):

@@ -1,10 +1,13 @@
 """Presentation sinks (reference K1/K2/K3 — dataframe.py:391-600,
 utils/email.py).
 
-Engine-side work (projection, emptiness aggregation, ordering) stays
-distributed; only the final limited result is collected for terminal
-rendering. CSV export writes distributed (`df.write.csv`) or to a
-single local file for parity with the reference's one-file output.
+Engine-side work (filtering, projection, ordering) stays distributed;
+only the final limited result is collected for terminal rendering. The
+terminal table drops all-empty columns (dataframe.py:424-435), judged
+from the rows it collects; only the columns those rows cannot settle
+cost a Spark aggregate, so a result that fits on screen is one job.
+CSV export writes distributed (`df.write.csv`) or to a single local
+file for parity with the reference's one-file output.
 """
 
 from __future__ import annotations
@@ -14,7 +17,7 @@ import io
 import textwrap
 from email.message import EmailMessage
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Risk-band ANSI colors (dataframe.py:529-541).
@@ -62,32 +65,61 @@ _COLUMN_CONFIG: dict[str, tuple[int, bool, bool]] = {
 _BOUNDARY_COLS = ("source", "timestamp", "utc_timestamp", "ip")
 
 
-def display_projection(df: DataFrame, drop_empty: bool = True) -> DataFrame:
-    """P1/P2: method_path concat + drop of all-empty/zero columns
-    (computed in ONE aggregate pass, dataframe.py:424-435)."""
+def display_projection(df: DataFrame) -> DataFrame:
+    """P1/P2: method_path concat + select of the display columns
+    (dataframe.py:403-451). Lazy: no Spark job runs here; the drop of
+    all-empty columns belongs to the terminal table (`render_table`)."""
     if "method" in df.columns and "request_uri" in df.columns:
         df = df.withColumn(
             "method_path", F.concat_ws(" ", F.col("method"), F.col("request_uri"))
         )
-    cols = [c for c in DISPLAY_COLS if c in df.columns]
-    out = df.select(*cols)
-    if drop_empty and cols:
-        checks = []
-        for c in cols:
-            dt = dict(out.dtypes)[c]
-            if dt in ("string",):
-                nonempty = (F.col(c) != "") & (F.col(c) != "-")
-            elif dt in ("double", "float"):
-                nonempty = F.col(c) != 0.0
-            elif dt in ("int", "bigint", "smallint"):
-                nonempty = F.col(c) != 0
-            else:
-                nonempty = F.col(c).isNotNull()
-            checks.append(F.max(nonempty.cast("int")).alias(c))
-        flags = out.agg(*checks).collect()[0].asDict()
-        keep = [c for c in cols if flags.get(c)]
-        out = out.select(*(keep or cols))
-    return out
+    return df.select(*(c for c in DISPLAY_COLS if c in df.columns))
+
+
+_INTS = ("int", "bigint", "smallint")
+_FLOATS = ("double", "float")
+
+
+def _has_content(c: str, dtype: str) -> Column:
+    """A value is content unless it is ''/'-' (strings), 0 (ints and
+    floats) or null (dataframe.py:424-435). A NaN float is content."""
+    if dtype == "string":
+        return (F.col(c) != "") & (F.col(c) != "-")
+    if dtype in _FLOATS:
+        return F.col(c) != 0.0
+    if dtype in _INTS:
+        return F.col(c) != 0
+    return F.col(c).isNotNull()
+
+
+def _nonempty_columns(df: DataFrame, pdf, complete: bool) -> list[str]:
+    """Columns of `df` holding any content, judged first from `pdf`,
+    the rows already collected from it (all of them when `complete`).
+
+    A collected content value keeps its column. Without one, the column
+    is dropped only when `pdf` is complete and none of its values could
+    be a NaN: Arrow collects a null float as NaN, which `_has_content`
+    counts differently. The columns left undecided are settled by one
+    aggregate over `df`. All-empty everywhere keeps every column."""
+    dtypes = dict(df.dtypes)
+    keep, undecided = set(), []
+    for c in pdf.columns:
+        s, dtype = pdf[c], dtypes[c]
+        content = s.notna()
+        if dtype == "string":
+            content &= (s != "") & (s != "-")
+        elif dtype in _INTS or dtype in _FLOATS:
+            content &= s != 0
+        if content.any():
+            keep.add(c)
+        elif not complete or (dtype in _FLOATS and s.isna().any()):
+            undecided.append(c)
+    if undecided:
+        flags = df.agg(
+            *(F.max(_has_content(c, dtypes[c]).cast("int")).alias(c) for c in undecided)
+        ).collect()[0]
+        keep.update(c for c in undecided if flags[c])
+    return [c for c in pdf.columns if c in keep] or list(pdf.columns)
 
 
 def _truncate(value: str, width: int, from_tail: bool) -> str:
@@ -105,7 +137,10 @@ def render_table(
 ) -> str:
     """K1: collect a bounded result and format a fixed-width table.
 
-    Reference-parity presentation (dataframe.py:460-560):
+    Reference-parity presentation (dataframe.py:424-435, 460-560):
+    - columns that are empty in every row of `df` (see `_has_content`)
+      are dropped; the one bounded collect decides most of them, and
+      only the rest cost an aggregate over `df`;
     - per-column widths from DISPLAY_CONFIG; unknown columns use
       `truncate_width`;
     - rows with risk_score >= 70 WRAP their long text columns
@@ -121,8 +156,8 @@ def render_table(
     """
     pdf = df.limit(max_rows + 1).toPandas()
     truncated = len(pdf) > max_rows
-    pdf = pdf.head(max_rows)
-    cols = list(pdf.columns)
+    cols = _nonempty_columns(df, pdf, complete=not truncated)
+    pdf = pdf[cols].head(max_rows)
     if cluster_enabled is None:
         cluster_enabled = "cluster" in cols
     has_boundary = cluster_enabled and {"ip", "source", "cluster"} <= set(cols)
