@@ -22,8 +22,6 @@ MANIFEST = Path(__file__).with_name("registry_manifest.txt")
 # rows move to one partition), by library site. Each one runs over a
 # small frame; a name missing here is a new single-partition window.
 UNPARTITIONED_WINDOWS = {
-    # operators/sessionize.py: running session offset over the buckets
-    "burst_detect", "session_stats", "sessionize",
     # operators/outliers.py ecdf_bp: over the value histogram
     "quality_ecdf",
     # pipelines/shard.py shard_balance: token total over the shard rows

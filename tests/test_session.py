@@ -79,6 +79,77 @@ def test_zip_directory_is_reread_only_after_a_change(tmp_path, monkeypatch):
     assert reads[-1] == other
 
 
+def _installed_matches_zip() -> bool:
+    """Whether the pyspark the driver imported has the same
+    pyspark/version.py as $SPARK_HOME's pyspark.zip."""
+    import pyspark
+
+    from webloghunter_spark.pydaemon import _dir_version, _zip_version
+
+    lib = os.path.join(os.environ.get("SPARK_HOME", ""), "python", "lib", "pyspark.zip")
+    site = os.path.dirname(os.path.dirname(pyspark.__file__))
+    return _zip_version(lib) is not None and _zip_version(lib) == _dir_version(site)
+
+
+def test_workers_import_compiled_pyspark(spark):
+    """A pandas UDF reports where its worker imported pyspark from: the
+    installed package when its version.py matches the zip's."""
+
+    @F.pandas_udf("string")
+    def where(ids):
+        import pyspark
+
+        return ids.map(lambda _: pyspark.__file__)
+
+    got = {r.w for r in spark.range(0, 4, 1, 2).select(where("id").alias("w")).collect()}
+    assert len(got) == 1
+    (path,) = got
+    if _installed_matches_zip():
+        assert ".zip" not in path, path
+    else:
+        assert ".zip" in path, path
+
+
+def _fake_pyspark_zip(path, version):
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("pyspark/__init__.py", "")
+        z.writestr("pyspark/version.py", version)
+
+
+def _fake_pyspark_dir(root, version):
+    (root / "pyspark").mkdir(parents=True)
+    (root / "pyspark" / "__init__.py").write_text("")
+    (root / "pyspark" / "version.py").write_text(version)
+
+
+def test_spark_zips_move_behind_a_matching_install(tmp_path):
+    from webloghunter_spark.pydaemon import zips_behind_installed
+
+    lib = tmp_path / "lib"
+    lib.mkdir()
+    pz, py4j = str(lib / "pyspark.zip"), str(lib / "py4j-src.zip")
+    _fake_pyspark_zip(pz, "__version__ = '4.1.2'\n")
+    with zipfile.ZipFile(py4j, "w") as z:
+        z.writestr("py4j/__init__.py", "")
+    site = tmp_path / "site"
+    _fake_pyspark_dir(site, "__version__ = '4.1.2'\n")
+    other = str(tmp_path / "other")
+    path = [pz, py4j, other, str(site), "/x"]
+    assert zips_behind_installed(path) == [other, str(site), pz, py4j, "/x"]
+
+
+def test_spark_zips_stay_first_on_a_version_mismatch(tmp_path):
+    from webloghunter_spark.pydaemon import zips_behind_installed
+
+    pz = str(tmp_path / "pyspark.zip")
+    _fake_pyspark_zip(pz, "__version__ = '4.1.2'\n")
+    site = tmp_path / "site"
+    _fake_pyspark_dir(site, "__version__ = '4.0.0'\n")
+    path = [pz, str(site)]
+    assert zips_behind_installed(path) == path
+    assert zips_behind_installed([str(site)]) == [str(site)]  # no zip at all
+
+
 def test_udf_runs_from_a_driver_outside_the_repo(tmp_path):
     """Spark's workers start the daemon module by name, so they must
     find the package when the driver's cwd is elsewhere and nothing on

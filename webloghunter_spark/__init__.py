@@ -18,4 +18,14 @@ Layout:
 
 __version__ = "0.1.0"
 
-from webloghunter_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # `get_spark` is exported lazily (PEP 562): importing the package must
+    # not import pyspark, because Spark's Python workers start as
+    # `python -m webloghunter_spark.pydaemon`, which runs this file before
+    # the daemon can choose where pyspark is imported from.
+    if name == "get_spark":
+        from webloghunter_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

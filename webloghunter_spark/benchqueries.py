@@ -8803,15 +8803,21 @@ SQL_BM25_BATCH = _bm25_batch_sql()
 # builder's description is the comment above its row.
 _REGISTRY: list[tuple[str, Builder, str]] = [
     # ORDER IS DRIVER COVERAGE: the correctness driver samples the
-    # FIRST 50 entries. Front = the 9 names whose operator was split
+    # FIRST 50 entries. Front = the 3 names that run sessionize, whose
+    # plans changed when it persisted its windowed rows and lost its
+    # single-partition window, then the 9 names whose operator was split
     # into a partial aggregate and a finalize (its streaming twin runs
     # both), then the 20 names whose work changed when each Python UDF
     # became one evaluation per row (their plans, or the plans of the
     # stages they settle, apply the MinHash, SimHash or winnowing UDF),
     # then the other 13 names whose builder changed when each operator
-    # kept one implementation, then the first 8 of the previous
+    # kept one implementation, then the first 5 of the previous
     # front's staleness cohort. Everything after slot 50 is covered by
     # the committed full-registry HASHCHECK artifacts.
+    # -- sessionize: persisted window pass, partitioned bucket offsets (3) --
+    ("sessionize", q_sessionize, SQL_SESSIONIZE),
+    ("session_stats", q_session_stats, SQL_SESSION_STATS),
+    ("burst_detect", q_burst_detect, SQL_BURST_DETECT),
     # -- operators split into partial and finalize (9) --
     ("mix_temperature", q_mix_temperature, SQL_MIX_TEMPERATURE),
     # Materialized repetition plan for the temperature mix on a
@@ -9150,7 +9156,6 @@ _REGISTRY: list[tuple[str, Builder, str]] = [
     ("boilerplate_segments", _on("documents", boilerplate_segments, seg_tokens=5, min_df=2),
      SQL_BOILERPLATE_SEGMENTS),
     ("bpe_apply", q_bpe_apply, SQL_BPE_APPLY),
-    ("burst_detect", q_burst_detect, SQL_BURST_DETECT),
     ("burst_success", q_burst_success, SQL_BURST_SUCCESS),
     ("cidr_filter", q_cidr_filter, SQL_CIDR_FILTER),
     ("contam_matrix", q_contam_matrix, SQL_CONTAM_MATRIX),
@@ -9206,8 +9211,6 @@ _REGISTRY: list[tuple[str, Builder, str]] = [
     ("rank_fusion", q_rank_fusion, SQL_RANK_FUSION),
     ("request_count", q_request_count, SQL_REQUEST_COUNT),
     ("sample_exact_k", q_sample_exact_k, SQL_SAMPLE_EXACT_K),
-    ("session_stats", q_session_stats, SQL_SESSION_STATS),
-    ("sessionize", q_sessionize, SQL_SESSIONIZE),
     ("sigma_rules", q_sigma_rules, SQL_SIGMA_RULES),
     # Unicode-aware corpus canonicalization: NFC (Arrow-batched UDF
     # with C-speed ASCII fast path — Spark has no builtin) + control

@@ -23,7 +23,7 @@ from webloghunter_spark.render import (
     write_parquet_store,
 )
 from webloghunter_spark.rules.sigma import load_rules
-from webloghunter_spark.session import get_spark, materialize, materialized_scope
+from webloghunter_spark.session import get_spark, materialized_scope
 
 
 def make_parser() -> argparse.ArgumentParser:
@@ -123,10 +123,10 @@ def main(argv: list[str] | None = None) -> int:
         cfg.ignore_extensions = tuple(args.ignore_extension)
 
     spark = get_spark(app_name="webloghunter-cli")
-    # The pipeline persist()s intermediates (engine materialize_
-    # intermediate, tool_scanner row keys); release them when the run's
-    # terminal action has completed so repeated in-process invocations
-    # (tests, notebooks) don't accumulate cache.
+    # The pipeline persist()s intermediates (the parse, sessionize's
+    # windowed rows, the scored frame, tool_scanner row keys); release
+    # them when the run's terminal action has completed so repeated
+    # in-process invocations (tests, notebooks) don't accumulate cache.
     with materialized_scope():
         return _run(spark, args, cfg, conf_opts)
 
@@ -163,10 +163,8 @@ def _run(spark, args, cfg, conf_opts) -> int:
         ignore_extensions=cfg.ignore_extensions,
     )
 
-    if args.errors_log:
-        # persist: count + write would otherwise regex-parse the whole
-        # input twice just for the side channel
-        errors = materialize(errors)
+    # errors reads the pipeline's persisted parse (read_access_logs), so
+    # the count and the errors-log write parse no line again
     n_errors = errors.count()
     if n_errors:
         print(f"[!] {n_errors} unparseable lines (errors side-channel)", file=sys.stderr)

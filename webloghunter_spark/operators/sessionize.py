@@ -13,13 +13,22 @@ Semantics reproduced from /root/reference/WebLogTriage/dataframe.py:604-658:
   (``pd.factorize``, dataframe.py:638-639), i.e. ordered by
   (source, ip, local).
 
+Two steps, each lazy: `session_windows` adds the local ids in one
+window pass over the (source, ip) exchange, and `number_sessions` turns
+them into dense global ids. `sessionize` persists the windowed rows
+between the two (`session.materialize`), because the second step reads
+them twice: once for the per-group session counts and once to stamp the
+ids. Without that barrier the group table would re-run the whole input
+lineage (for the triage pipeline: read, parse, dedup and the window).
+
 Scale design: the global renumbering is NOT done with a global window over
 the event table (that would serialize 100 TB through one partition).
 Instead we aggregate to one row per group (orders of magnitude smaller),
 assign dense offsets on the group-level table with a TWO-LEVEL
-range-bucketed prefix sum — intra-bucket running sums in parallel, a
-single-partition pass only over the per-bucket totals — and
-broadcast-join back. No table at any level funnels through one task.
+range-bucketed prefix sum — intra-bucket running sums in parallel, and
+each bucket's total sent to every later bucket and summed there — and
+broadcast-join back. No table at any level funnels through one task,
+and no window runs without a partition spec.
 """
 
 from __future__ import annotations
@@ -29,20 +38,17 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from webloghunter_spark.session import materialize
 
-def sessionize(
+
+def session_windows(
     df: DataFrame,
     group_cols: Sequence[str] = ("source", "ip"),
     ts_col: str = "utc_timestamp",
     threshold: int = 60,
-    cluster_col: str = "cluster",
     epoch_expr: Column | None = None,
 ) -> DataFrame:
-    """Add a dense global session id column (`cluster_col`).
-
-    `epoch_expr` may override how epoch seconds are derived from `ts_col`
-    (the reference truncates ns -> s via integer division, i.e. floor).
-    """
+    """Add `_local`, each row's session number within its group."""
     gcols = list(group_cols)
     epoch = epoch_expr if epoch_expr is not None else F.unix_timestamp(F.col(ts_col))
     df = df.withColumn("_epoch", epoch.cast("long"))
@@ -57,44 +63,81 @@ def sessionize(
         "_local",
         F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
     )
+    return df.drop("_epoch", "_new")
 
-    # Global dense ids without funneling sessions through one partition:
-    # cluster = offset(group) + local, where offset is the running total
-    # of session counts over groups ordered by group key — identical to
-    # factorize-order dense ids because sessions are contiguous per
-    # group and locally ordered. The per-group session count reuses the
-    # window exchange (no extra shuffle); only the GROUP-level table
-    # (users/ips, orders of magnitude smaller than sessions or events)
-    # passes through the single-partition running sum, then broadcasts.
-    df = df.withColumn("_nsess", F.max("_local").over(Window.partitionBy(*gcols)) + 1)
-    groups = df.select(*gcols, "_nsess").distinct()
-    # Two-level exclusive prefix sum over groups in key order: range-
-    # bucket the group table, run intra-bucket running sums in parallel,
-    # and push only the per-bucket TOTALS (one row per bucket) through a
-    # single-partition pass — so even at 1e8 (source, ip) groups nothing
-    # group-sized serializes through one task. Range boundaries come
-    # from sampling, but offsets depend only on global key ORDER, which
-    # range partitioning preserves, so ids are deterministic.
-    groups = (
-        groups.repartitionByRange(*gcols)
-        .sortWithinPartitions(*gcols)
-        .withColumn("_bkt", F.spark_partition_id())
+
+def number_sessions(
+    windowed: DataFrame,
+    group_cols: Sequence[str] = ("source", "ip"),
+    cluster_col: str = "cluster",
+) -> DataFrame:
+    """`session_windows` output -> dense global session ids (`cluster_col`).
+
+    cluster = offset(group) + local, where offset is the running total
+    of session counts over groups ordered by group key — identical to
+    factorize-order dense ids because sessions are contiguous per group
+    and locally ordered. `windowed` is read twice (group table and
+    join-back); persist it first unless its lineage is cheap.
+    """
+    gcols = list(group_cols)
+    # One row per group. The windowed rows are already hash-partitioned
+    # on the group keys, so this aggregate needs no exchange.
+    groups = windowed.groupBy(*gcols).agg((F.max("_local") + 1).alias("_nsess"))
+    # Two-level exclusive prefix sum over groups in key order. Range-
+    # bucket the group table into `n` buckets; one window pass per
+    # bucket gives each group's running sum within its bucket and the
+    # bucket's total. Range boundaries come from sampling, but offsets
+    # depend only on global key ORDER, which range partitioning
+    # preserves, so ids are deterministic.
+    n = int(windowed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    groups = groups.repartitionByRange(n, *gcols).withColumn("_bkt", F.spark_partition_id())
+    wb = Window.partitionBy("_bkt")
+    groups = groups.select(
+        *gcols,
+        "_bkt",
+        F.coalesce(
+            F.sum("_nsess").over(
+                wb.orderBy(*gcols).rowsBetween(Window.unboundedPreceding, -1)
+            ),
+            F.lit(0),
+        ).alias("_intra"),
+        F.sum("_nsess").over(wb).alias("_tot"),
     )
-    wi = (
-        Window.partitionBy("_bkt")
-        .orderBy(*gcols)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    # Bucket offsets in the same linear plan (a second branch off the
+    # group table would re-read the windowed rows: Spark reuses no
+    # exchange above a cached scan). Each bucket's first group — the one
+    # whose running sum is 0, as every group holds a session — is also
+    # sent, carrying the bucket total, to every later bucket; one more
+    # window per bucket sums what it received. That adds at most
+    # n * (n - 1) / 2 rows, one per pair of buckets.
+    last = F.when(F.col("_intra") == 0, F.lit(n - 1)).otherwise(F.col("_bkt"))
+    sent = F.when(F.col("_to") > F.col("_bkt"), F.col("_tot")).otherwise(F.lit(0))
+    groups = groups.withColumn("_to", F.explode(F.sequence(F.col("_bkt"), last))).withColumn(
+        "_boff", F.sum(sent).over(Window.partitionBy("_to"))
     )
-    groups = groups.withColumn("_intra", F.coalesce(F.sum("_nsess").over(wi), F.lit(0)))
-    wb = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    totals = (
-        groups.groupBy("_bkt")
-        .agg(F.sum("_nsess").alias("_tot"))
-        .select("_bkt", F.coalesce(F.sum("_tot").over(wb), F.lit(0)).alias("_boff"))
-    )
-    groups = groups.join(F.broadcast(totals), "_bkt").select(
+    groups = groups.filter(F.col("_to") == F.col("_bkt")).select(
         *gcols, (F.col("_boff") + F.col("_intra")).alias("_offset")
     )
-    out = df.join(F.broadcast(groups), on=gcols, how="left")
+    out = windowed.join(F.broadcast(groups), on=gcols, how="left")
     out = out.withColumn(cluster_col, (F.col("_offset") + F.col("_local")).cast("long"))
-    return out.drop("_epoch", "_new", "_local", "_nsess", "_offset")
+    return out.drop("_local", "_offset")
+
+
+def sessionize(
+    df: DataFrame,
+    group_cols: Sequence[str] = ("source", "ip"),
+    ts_col: str = "utc_timestamp",
+    threshold: int = 60,
+    cluster_col: str = "cluster",
+    epoch_expr: Column | None = None,
+) -> DataFrame:
+    """Add a dense global session id column (`cluster_col`).
+
+    `epoch_expr` may override how epoch seconds are derived from `ts_col`
+    (the reference truncates ns -> s via integer division, i.e. floor).
+    The windowed rows are persisted with `materialize()` so the group
+    table and the join-back share one window pass; release them with
+    `release_materialized()` / `materialized_scope()` after the action.
+    """
+    windowed = session_windows(df, group_cols, ts_col, threshold, epoch_expr)
+    return number_sessions(materialize(windowed), group_cols, cluster_col)

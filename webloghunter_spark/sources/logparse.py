@@ -10,7 +10,8 @@ parser.py:8-18, :108-158) as a declarative Spark projection:
 - a trailing-junk regex sub is applied (parser.py:134);
 - eight log-format regexes are tried IN ORDER, first match wins
   (parser.py:137-141); unmatched lines go to an errors side-channel
-  (parser.py:122-123) — here a separate DataFrame, not a log file;
+  (parser.py:122-123) — here a separate DataFrame, not a log file,
+  split off the same parse as the entries (`parse_rows`, `split_rows`);
 - per-entry defaults: user_agent/referrer '' -> '-', non-digit status
   -> 0, missing resp_size -> 0, missing method -> 'INVALID'
   (parser.py:143-153);
@@ -23,7 +24,9 @@ codegen'd projection — ``rlike`` per format picks the first match, and
 each field extracts from the winning pattern only (conditional branches,
 so the non-matching regexes are not evaluated per field). No Python
 runs per row; scales linearly with input and parallelizes per file
-split.
+split. `read_access_logs` persists the one parse both frames are split
+from, so a pipeline that writes the entries and then counts the errors
+reads and parses each line once.
 """
 
 from __future__ import annotations
@@ -32,6 +35,8 @@ from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from webloghunter_spark.session import materialize
 
 # (format name, regex, {field: capture-group index})
 # Same patterns and order as the reference; named groups re-expressed as
@@ -187,16 +192,13 @@ def _field_col(field: str, ssl: bool = False) -> Column:
     return expr.otherwise(F.lit(None))
 
 
-def parse_lines(
-    lines: DataFrame, enable_apache_ssl: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """(value, source, ordinal) -> (parsed entries, unparsed errors).
+def parse_rows(lines: DataFrame, enable_apache_ssl: bool = False) -> DataFrame:
+    """(value, source, ordinal) -> one frame of every non-skipped line.
 
-    Output schema: ip, timestamp, method, request_uri, status(int),
-    resp_size(long), referrer, user_agent, extra, time_taken(int),
-    source, ordinal — with the reference's default fills.
-    `enable_apache_ssl` additionally tries the (upstream-disabled)
-    apache_ssl format, whose entries get status 200 (parser.py:146-147).
+    Parsed lines carry the `parse_lines` entry columns; a line no format
+    matches has a null `log_format` and its text in `_unparsed` (null on
+    parsed lines). `split_rows` turns the frame into (entries, errors),
+    so a persisted frame gives both from one parse.
     """
     ssl = enable_apache_ssl
     stripped = F.regexp_replace(F.col("value"), GREP_PREFIX_RE, "")
@@ -220,11 +222,6 @@ def parse_lines(
          for name, pattern, groups in _formats(ssl)}
     ).withColumn("_format", _format_col(ssl))
 
-    errors = candidates.filter(F.col("_format").isNull()).select(
-        "value", "source", "ordinal"
-    )
-
-    p = candidates.filter(F.col("_format").isNotNull())
     status_raw = _field_col("status", ssl)
     resp_raw = _field_col("resp_size", ssl)
     # non-digit status -> 0 (parser.py:149-150); apache_ssl has no
@@ -232,7 +229,7 @@ def parse_lines(
     status = F.coalesce(status_raw.try_cast("int"), F.lit(0))
     if ssl:
         status = F.when(F.col("_format") == "apache_ssl", F.lit(200)).otherwise(status)
-    parsed = p.select(
+    return candidates.select(
         F.coalesce(_field_col("ip", ssl), F.lit("")).alias("ip"),
         F.coalesce(_field_col("timestamp", ssl), F.lit("")).alias("timestamp"),
         # missing/empty method -> 'INVALID' (parser.py:153)
@@ -249,12 +246,43 @@ def parse_lines(
         F.col("_format").alias("log_format"),
         "source",
         "ordinal",
+        F.when(F.col("_format").isNull(), F.col("value")).alias("_unparsed"),
+    )
+
+
+def split_rows(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """`parse_rows` output -> (parsed entries, unparsed errors)."""
+    parsed = rows.filter(F.col("log_format").isNotNull()).drop("_unparsed")
+    errors = rows.filter(F.col("log_format").isNull()).select(
+        F.col("_unparsed").alias("value"), "source", "ordinal"
     )
     return parsed, errors
+
+
+def parse_lines(
+    lines: DataFrame, enable_apache_ssl: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """(value, source, ordinal) -> (parsed entries, unparsed errors).
+
+    Output schema: ip, timestamp, method, request_uri, status(int),
+    resp_size(long), referrer, user_agent, extra, time_taken(int),
+    log_format, source, ordinal — with the reference's default fills.
+    `enable_apache_ssl` additionally tries the (upstream-disabled)
+    apache_ssl format, whose entries get status 200 (parser.py:146-147).
+    Both frames are lazy and each evaluates the parse on its own; see
+    `read_access_logs` for one parse feeding both.
+    """
+    return split_rows(parse_rows(lines, enable_apache_ssl))
 
 
 def read_access_logs(
     spark: SparkSession, paths: list[str] | str
 ) -> tuple[DataFrame, DataFrame]:
-    """Convenience: read + parse. Returns (entries, errors)."""
-    return parse_lines(read_raw_lines(spark, paths))
+    """Read + parse once. Returns (entries, errors).
+
+    The parsed frame is persisted with `materialize()`, so the first
+    action parses each line and later ones (errors.count() after a store
+    write) read the cached rows; release it with
+    `release_materialized()` / `materialized_scope()`.
+    """
+    return split_rows(materialize(parse_rows(read_raw_lines(spark, paths))))
