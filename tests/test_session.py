@@ -224,3 +224,64 @@ def test_release_drops_settled_counts(spark):
     assert S.settled_rows(cut) == 5
     S.release_materialized()
     assert cut not in S._SETTLED_ROWS
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_scopes_on_two_threads_release_only_their_own_frames(spark):
+    """Each driver thread's materialized_scope() is a run of its own.
+    Thread A opens a scope and persists a frame; thread B then opens
+    one and persists another; A's scope exits first. B's frame must
+    stay cached until B's own scope exits."""
+    from pyspark.storagelevel import StorageLevel
+
+    a_made, b_made, a_done = threading.Event(), threading.Event(), threading.Event()
+    frames, seen = {}, {}
+    cached = lambda key: frames[key].storageLevel != StorageLevel.NONE  # noqa: E731
+
+    def thread_a():
+        with S.materialized_scope():
+            frames["a"] = S.materialize(spark.range(31).selectExpr("id * 3 AS a"))
+            a_made.set()
+            b_made.wait(60)
+        a_done.set()
+
+    def thread_b():
+        a_made.wait(60)
+        with S.materialized_scope():
+            frames["b"] = S.materialize(spark.range(37).selectExpr("id * 5 AS b"))
+            b_made.set()
+            a_done.wait(60)
+            seen["a"], seen["b"] = cached("a"), cached("b")
+
+    root = len(S._MATERIALIZED)
+    threads = [threading.Thread(target=f, daemon=True) for f in (thread_a, thread_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert seen == {"a": False, "b": True}
+    assert not cached("b")
+    assert len(S._MATERIALIZED) == root
+
+
+def test_dataset_diff_replays_register_in_the_callers_run(spark):
+    """dataset_diff replays its two funnels on pool threads. What they
+    persist belongs to the caller's run: the caller's scope frees all
+    of it, and the root run gains nothing."""
+    from webloghunter_spark.pipelines.curate import dataset_diff
+
+    docs = [(i, " ".join(f"tok{i}x{j} the of and is on a" for j in range(8)))
+            for i in range(1, 6)]
+    old = spark.createDataFrame(docs[:4], "doc_id long, text string")
+    new = spark.createDataFrame(docs[1:] + [(9, "tiny")], "doc_id long, text string")
+    root = len(S._MATERIALIZED)
+    before = _persistent_rdds(spark)
+    with S.materialized_scope():
+        out = dataset_diff(old, new, min_quality_bp=1000, min_tokens=5).collect()
+        assert _persistent_rdds(spark) - before
+    assert sum(r.n for r in out) == 6
+    assert _persistent_rdds(spark) <= before
+    assert len(S._MATERIALIZED) == root

@@ -8,7 +8,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from test_pipeline_e2e import logdir  # noqa: F401  (the e2e log fixture)
 
-from webloghunter_spark.engine import EngineConfig, build_pipeline
+from webloghunter_spark.engine import build_pipeline
 from webloghunter_spark.render import write_parquet_store
 from webloghunter_spark.session import materialized_scope
 
@@ -91,17 +91,3 @@ def test_score_barrier_is_the_first_materialize_lookup(spark, logdir, monkeypatc
         build_pipeline(spark, logdir)
     columns = got.value.args[0]
     assert {"cluster", "request_count", "uri_risk", "rule_applied"} <= set(columns)
-
-
-def test_lazy_pipeline_persists_nothing_and_matches(spark, logdir):  # noqa: F811
-    """materialize_intermediate=False builds a pure lazy plan (it may
-    read the input more than once) with the same rows and errors."""
-    from webloghunter_spark.session import _MATERIALIZED
-
-    with materialized_scope():
-        scored, errors = build_pipeline(spark, logdir)
-        want = sorted(scored.collect()), sorted(errors.collect())
-    before = len(_MATERIALIZED)
-    scored, errors = build_pipeline(spark, logdir, EngineConfig(materialize_intermediate=False))
-    assert len(_MATERIALIZED) == before
-    assert (sorted(scored.collect()), sorted(errors.collect())) == want

@@ -108,7 +108,7 @@ def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]:
 
 def main():
     import __spark_entry__ as entrymod
-    from webloghunter_spark.session import get_spark, release_materialized
+    from webloghunter_spark.session import get_spark, materialized_scope
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -124,13 +124,13 @@ def main():
             continue
         t0 = time.perf_counter()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            with materialized_scope():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
             continue
         finally:
-            release_materialized()
             spark.catalog.clearCache()
         spark_s = time.perf_counter() - t0
         t0 = time.perf_counter()

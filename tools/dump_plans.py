@@ -29,7 +29,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from webloghunter_spark.benchqueries import QUERIES
-from webloghunter_spark.session import get_spark, release_materialized
+from webloghunter_spark.session import get_spark, materialized_scope
 
 _RUN_SPECIFIC = [
     (re.compile(r"#\d+"), "#"),
@@ -56,14 +56,14 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            df = fn(spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            with materialized_scope():
+                df = fn(spark, sf_dir)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR: {type(e).__name__}: {e}"
         finally:
-            release_materialized()
             spark.catalog.clearCache()
         (out_dir / f"{name}.txt").write_text(normalize(plan))
         print(name, flush=True)

@@ -99,7 +99,7 @@ from webloghunter_spark.pipelines.shard import (
 )
 from webloghunter_spark.pipelines.split import time_split_audit, upsample_epochs
 from webloghunter_spark.rules.sigma import DEFAULT_RULES, apply_rules
-from webloghunter_spark.session import release_materialized
+from webloghunter_spark.session import materialized_scope
 from webloghunter_spark.streaming.vocab import cms_heavy_hitters, cms_overestimate_audit
 
 
@@ -9363,8 +9363,9 @@ def run_noop(spark: SparkSession, name: str, sf_dir: str) -> float:
     release is not timed)."""
     t0 = time.perf_counter()
     try:
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - t0
+        with materialized_scope():
+            QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+            return time.perf_counter() - t0
     finally:
-        release_materialized()
+        # frees the bare persist()s of a few builders, which no run owns
         spark.catalog.clearCache()

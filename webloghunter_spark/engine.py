@@ -8,16 +8,21 @@ load-bearing (SURVEY §3.1):
 
 Everything is one lazy DataFrame plan: build_pipeline runs no Spark
 job. Catalyst fuses the scalar-risk and rule-engine projections into a
-single codegen stage. Under `EngineConfig.materialize_intermediate`,
-three persisted barriers (`session.materialize`) let each line be read
-and parsed once: the parse, which feeds both the entries and the errors
-side-channel (`read_access_logs`); sessionize's windowed rows, which
-feed both its group table and the id join-back; and the scored frame
-before the detectors. The shuffles are: the dedup exchange on the
-normalized dedup key; the session-window exchange on (source, ip),
-which request_count's window reuses; the session-id renumbering over
-one row per (source, ip) (a range exchange, two bucket exchanges and a
-broadcast back); and the detectors' own exchanges.
+single codegen stage. Column pruning makes two branches of one input
+canonically different, and Spark reuses no exchange above a cached
+scan, so without a barrier each branch would re-run everything below
+it. Three persisted barriers (`session.materialize`) let each line be
+read and parsed once: the parse, which feeds both the entries and the
+errors side-channel (`read_access_logs`); sessionize's windowed rows,
+which feed both its group table and the id join-back; and the scored
+frame before the detectors, which each read it on a slim detection
+branch and a wide probe branch. The persisted frames belong to the
+caller's run (`session.materialized_scope`). The shuffles are: the
+dedup exchange on the normalized dedup key; the session-window
+exchange on (source, ip), which request_count's window reuses; the
+session-id renumbering over one row per (source, ip) (a range
+exchange, two bucket exchanges and a broadcast back); and the
+detectors' own exchanges.
 """
 
 from __future__ import annotations
@@ -39,14 +44,10 @@ from webloghunter_spark.functions.risk import (
 from webloghunter_spark.operators.counts import with_request_count
 from webloghunter_spark.operators.dedup import remove_cross_source_dups
 from webloghunter_spark.operators.filters import DEFAULT_IGNORE_EXTENSIONS, apply_filters
-from webloghunter_spark.operators.sessionize import (
-    number_sessions,
-    session_windows,
-    sessionize,
-)
+from webloghunter_spark.operators.sessionize import sessionize
 from webloghunter_spark.operators.timeutil import with_utc_timestamp
 from webloghunter_spark.rules.sigma import DEFAULT_RULES, apply_rules
-from webloghunter_spark.sources.logparse import parse_lines, read_access_logs, read_raw_lines
+from webloghunter_spark.sources.logparse import read_access_logs
 
 
 @dataclass
@@ -67,18 +68,6 @@ class EngineConfig:
     # from output, and authorized-scanner networks dropped by default.
     ignore_extensions: tuple = DEFAULT_IGNORE_EXTENSIONS
     ignore_ip: tuple = ()
-    # Persist the frames that feed two plan branches: column pruning
-    # makes the branches' scan subtrees canonically different, and Spark
-    # reuses no exchange above a cached scan, so without a barrier each
-    # branch re-runs everything below it. With it, one parse feeds the
-    # entries and the errors (read_access_logs), one window pass feeds
-    # sessionize's group table and its join-back (sessionize), and the
-    # scored frame (parse, dedup, session/count windows, uri_risk UDF,
-    # rule engine) is computed once for the detectors, which each read
-    # their input on a slim detection branch and a wide probe branch.
-    # persist(MEMORY_AND_DISK) via session.materialize; disable for a
-    # pure-lazy plan, which then reads the input more than once.
-    materialize_intermediate: bool = True
 
 
 def score(df: DataFrame, config: EngineConfig | None = None) -> DataFrame:
@@ -95,14 +84,14 @@ def score(df: DataFrame, config: EngineConfig | None = None) -> DataFrame:
         .withColumn("status_risk", status_risk_expr("status"))
     )
     df = apply_rules(df, cfg.rules)
-    if cfg.materialize_intermediate:
-        from webloghunter_spark.session import materialize
+    # Looked up at call time, so a patched `session.materialize` cuts
+    # the pipeline here (perfbench's rules.sigma layer).
+    from webloghunter_spark.session import materialize
 
-        # One barrier after the expensive prefix (parse, dedup,
-        # session/count windows, uri_risk UDF, rule engine): the two
-        # detectors below each fan into two plan branches — see
-        # EngineConfig.materialize_intermediate.
-        df = materialize(df)
+    # One barrier after the expensive prefix (parse, dedup, session/count
+    # windows, uri_risk UDF, rule engine): the two detectors below each
+    # fan into two plan branches (see the module docstring).
+    df = materialize(df)
     df = burst_success_detector(
         df,
         risk_score=cfg.burst_risk_score,
@@ -120,19 +109,13 @@ def build_pipeline(
 ) -> tuple[DataFrame, DataFrame]:
     """Raw log paths -> (fully scored frame, parse-errors frame)."""
     cfg = config or EngineConfig()
-    lazy = not cfg.materialize_intermediate
-    if lazy:
-        entries, errors = parse_lines(read_raw_lines(spark, paths))
-    else:
-        entries, errors = read_access_logs(spark, paths)
+    entries, errors = read_access_logs(spark, paths)
     df = remove_cross_source_dups(entries)
     df = with_utc_timestamp(df, time_offset=cfg.time_offset)
     if cfg.cluster_off:
         # Reference --cluster-off: no sessionization, plain timestamp
         # order; cluster 0 keeps the downstream grouping keys stable.
         df = df.withColumn("cluster", F.lit(0).cast("long"))
-    elif lazy:
-        df = number_sessions(session_windows(df, threshold=cfg.session_gap_seconds))
     else:
         df = sessionize(df, threshold=cfg.session_gap_seconds)
     df = with_request_count(df)

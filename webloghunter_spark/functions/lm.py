@@ -306,8 +306,8 @@ def bigram_lm_model(
 ) -> dict:
     """Train-once artifact for frozen-LM scoring: the two count
     frames and the vocabulary size, persisted (stream-lifetime state,
-    so plain persist — NOT session.materialize, whose registry is for
-    query-scoped intermediates). The dict is the model: pass it to
+    so plain persist — NOT session.materialize: the frozen side
+    outlives any run). The dict is the model: pass it to
     `bigram_logprob_frozen` / the streaming scorer."""
     # the bigram frame feeds both count tables: persist it so the
     # extraction runs once, and free it once they are filled

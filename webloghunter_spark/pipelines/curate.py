@@ -702,6 +702,7 @@ def dataset_diff(
     idle (the scheduler runs concurrent jobs FIFO; results are
     settled frames, so construction order cannot change any value)."""
     ds = snapshot_diff(old, new, id_col=id_col, text_col=text_col)
+    import contextvars
     from concurrent.futures import ThreadPoolExecutor
 
     def _tags(snap: DataFrame) -> DataFrame:
@@ -709,8 +710,11 @@ def dataset_diff(
             snap, eval_df, id_col=id_col, text_col=text_col, **funnel_kwargs
         )
 
+    # A pool thread starts with an empty context: each replay runs in a
+    # copy of the caller's, so what it persists joins the caller's run.
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fo, fn_ = pool.submit(_tags, old), pool.submit(_tags, new)
+        fo, fn_ = (pool.submit(contextvars.copy_context().run, _tags, snap)
+                   for snap in (old, new))
         so = fo.result().withColumnRenamed("last_stage", "_so")
         sn = fn_.result().withColumnRenamed("last_stage", "_sn")
     j = (

@@ -30,7 +30,7 @@ from webloghunter_spark.functions.text import (
     shingles_expr,
     tokens_expr,
 )
-from webloghunter_spark.session import materialize, swap_materialized
+from webloghunter_spark.session import drop_materialized, materialize, settle
 
 
 def exact_dedup(
@@ -964,8 +964,9 @@ def connected_components(
     Checkpointing makes each round's plan a leaf, so both lineage and
     plan size stay O(1) in the round count; on a real cluster swap
     localCheckpoint for a reliable checkpoint dir if executor loss
-    matters. The returned frame is registered with the materialize()
-    lifecycle — call release_materialized() after the consuming action.
+    matters. Each superseded round is unpersisted at once; the returned
+    frame is registered in the caller's run (session.materialized_scope)
+    like any materialize()d frame.
     """
     sym = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
@@ -1006,27 +1007,15 @@ def connected_components(
             )
         )
         # eager localCheckpoint: materializes AND truncates the plan
-        # (persist would leave a ~3^rounds logical tree — see docstring)
-        new_cc = jumped.localCheckpoint(eager=True)
+        # (persist would leave a ~3^rounds logical tree — see docstring),
+        # whatever SETTLE_LINEAGE says
+        new_cc = settle(jumped, lineage=False)
         changed = new_cc.filter(F.col("comp") != F.col("_prev")).limit(1).count()
-        _release_checkpointed(cc)
-        # re-register the surviving frame with the lifecycle registry
-        swap_materialized(cc, new_cc)
+        drop_materialized(cc)
         cc = new_cc
         if changed == 0:
             break
     return cc.select(F.col("id").alias(id_col), "comp")
-
-
-def _release_checkpointed(df: DataFrame) -> None:
-    """Free a superseded round's storage: Dataset.unpersist() is a
-    no-op for localCheckpoint'ed frames (their RDD is persisted outside
-    the cache manager), so without session._unpersist_any's LogicalRDD
-    reach-in every CC round's label blocks would linger until
-    nondeterministic JVM GC."""
-    from webloghunter_spark.session import _unpersist_any
-
-    _unpersist_any(df)
 
 
 def near_dedup_cc(

@@ -1,4 +1,5 @@
-"""SparkSession factory with engine defaults.
+"""SparkSession factory with engine defaults, and the runs that own
+the frames materialize()/settle() persist.
 
 Defaults are tuned for correctness-parity with a UTC-naive oracle
 (session timezone pinned to UTC) and for scale (AQE on, Arrow on,
@@ -7,6 +8,7 @@ shuffle partitions sized to the machine rather than the 200 default).
 
 from __future__ import annotations
 
+import contextvars
 import os
 import weakref
 from contextlib import contextmanager
@@ -16,14 +18,23 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-# Every frame materialize() persists, in persist order. Library
-# operators return LAZY frames, so they cannot unpersist their own
-# intermediates (the consuming action hasn't run yet); the lifecycle
-# belongs to whoever runs the action — CLI, bench harness, tests —
-# via release_materialized() / materialized_scope(). Unpersisting is
-# always safe for correctness: a consumer that reads the frame later
-# just recomputes from lineage.
+# Every frame materialize()/settle() persists is registered, in
+# persist order, in the current run: the list _RUN holds in the current
+# context. Library operators return LAZY frames, so they cannot
+# unpersist their own intermediates (the consuming action hasn't run
+# yet); the lifecycle belongs to whoever runs the action — CLI, bench
+# harness, tests — via materialized_scope(), which opens a fresh run,
+# or release_materialized(). Unpersisting is always safe for
+# correctness: a consumer that reads the frame later just recomputes
+# from lineage. Outside any scope the run is the root list
+# _MATERIALIZED. Each driver thread has its own context, so runs on
+# different threads never see each other's frames; a pool thread
+# starts in the root run unless its work is submitted through
+# contextvars.copy_context().run.
 _MATERIALIZED: list[DataFrame] = []
+_RUN: contextvars.ContextVar[list[DataFrame]] = contextvars.ContextVar(
+    "materialized_run", default=_MATERIALIZED
+)
 
 # settle()d frame -> the Observation of count(1) its checkpoint job
 # recorded. Weak keys: an entry lives exactly as long as the frame, and
@@ -36,7 +47,7 @@ _SETTLED_ROWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _OBSERVATION_WAIT_S = 30.0
 
 
-def materialize(df: DataFrame, memory: bool = True) -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Reliable multi-consumer materialization / pushdown barrier.
 
     Used where a (typically small) intermediate feeds BOTH sides of a
@@ -45,17 +56,16 @@ def materialize(df: DataFrame, memory: bool = True) -> DataFrame:
     unlike localCheckpoint's executor-local blocks — is recomputable
     from lineage after an executor loss, so a 1000-executor run does
     not die with the first node. MEMORY_AND_DISK spills instead of
-    OOMing when the intermediate outgrows executor memory; pass
-    memory=False for DISK_ONLY when it is known to be large.
+    OOMing when the intermediate outgrows executor memory.
 
-    The persisted frame is registered; call release_materialized()
-    (or wrap the consuming action in materialized_scope()) after the
-    terminal action, or a long-lived session accumulates cached frames
-    until the executor block store churns under LRU eviction.
+    The persisted frame is registered in the current run; wrap the
+    consuming action in materialized_scope() (or call
+    release_materialized() after it), or a long-lived session
+    accumulates cached frames until the executor block store churns
+    under LRU eviction.
     """
-    level = StorageLevel.MEMORY_AND_DISK if memory else StorageLevel.DISK_ONLY
-    df = df.persist(level)
-    _MATERIALIZED.append(df)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _RUN.get().append(df)
     return df
 
 
@@ -89,9 +99,8 @@ def settle(df: DataFrame, lineage: bool | None = None) -> DataFrame:
     materialize() for within-operator self-join barriers where the
     intermediate is consumed inside one plan.
 
-    The frame is registered for release_materialized(), whose
-    _unpersist_any already frees checkpointed RDDs via the LogicalRDD
-    path.
+    The frame is registered in the current run, whose release frees
+    checkpointed RDDs too (see _release).
 
     `lineage` (default: module-level SETTLE_LINEAGE) opts a call — or,
     via the module switch, a whole deployment — back into persist()'d
@@ -112,7 +121,7 @@ def settle(df: DataFrame, lineage: bool | None = None) -> DataFrame:
     df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
         eager=True
     )
-    _MATERIALIZED.append(df)
+    _RUN.get().append(df)
     _SETTLED_ROWS[df] = obs
     return df
 
@@ -143,88 +152,64 @@ def settled_rows(df: DataFrame) -> int:
     return df.count()
 
 
-def swap_materialized(old: DataFrame, new: DataFrame) -> None:
-    """Replace `old` with `new` in the registry — for iterative
-    operators that persist a frame per round and eagerly unpersist the
-    previous one (only the live frame should stay registered)."""
-    try:
-        _MATERIALIZED.remove(old)
-    except ValueError:
-        pass
-    _MATERIALIZED.append(new)
-
-
 def drop_materialized(df: DataFrame) -> None:
-    """Unpersist `df` and deregister it — for iterative operators
-    replacing a per-round persisted state whose NEW frame was already
-    registered by its own materialize() call (swap_materialized would
-    double-register it). Keeps the registry holding live frames only."""
+    """Unpersist `df` and deregister it from the current run — for
+    iterative operators replacing a per-round state whose new frame
+    their own materialize()/settle() call already registered. Keeps
+    the run holding live frames only."""
     try:
-        _MATERIALIZED.remove(df)
+        _RUN.get().remove(df)
     except ValueError:
         pass
-    _unpersist_any(df)
-    _SETTLED_ROWS.pop(df, None)
+    _release([df])
 
 
-def _unpersist_any(df: DataFrame) -> None:
-    """Unpersist a frame whether it was persist()ed or
-    localCheckpoint()ed: Dataset.unpersist() only clears cache-manager
-    entries; a checkpointed frame's RDD is persisted directly, so reach
-    into its LogicalRDD plan too (guarded — falls back to GC cleanup on
-    any plan-shape change)."""
-    df.unpersist()
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def release_materialized() -> int:
-    """Unpersist every registered frame (newest first); returns the
-    count released. Safe to call repeatedly / with a stopped session."""
+def _release(frames: list[DataFrame]) -> int:
+    """Unpersist and remove every frame of `frames` (newest first);
+    returns the count released. A localCheckpoint()ed frame's RDD is
+    persisted outside the cache manager, where Dataset.unpersist()
+    does not reach, so its LogicalRDD plan is unpersisted too (guarded:
+    a plan-shape change falls back to GC cleanup). Safe with a stopped
+    session."""
     n = 0
-    while _MATERIALIZED:
-        df = _MATERIALIZED.pop()
+    while frames:
+        df = frames.pop()
         _SETTLED_ROWS.pop(df, None)
         try:
-            _unpersist_any(df)
+            df.unpersist()
             n += 1
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:
             pass
     return n
 
 
+def release_materialized() -> int:
+    """Unpersist every frame of the current run (the root run outside
+    any materialized_scope()); returns the count released. Safe to call
+    repeatedly / with a stopped session."""
+    return _release(_RUN.get())
+
+
 @contextmanager
 def materialized_scope():
-    """Unpersist, on exit, exactly the frames materialize()d inside the
-    scope — the pattern for running one pipeline inside a long-lived
-    session without leaking cache:
+    """Run the body as a fresh run and unpersist, on exit, exactly the
+    frames materialize()d or settle()d in it — the pattern for running
+    one pipeline inside a long-lived session without leaking cache:
 
         with materialized_scope():
             scored, errors = build_pipeline(spark, paths)
             scored.write.parquet(out)          # consuming action
 
-    SINGLE-THREADED TOP-LEVEL CONTRACT: the scope is a len()-mark
-    slice of the shared module-global registry, so two scopes open
-    concurrently on different driver threads can unpersist each
-    other's frames. Operators that fan work out to driver threads
-    internally (dataset_diff's funnel pool) are fine — they join
-    their threads before returning, so the registry is single-
-    threaded again at every scope boundary — but do not open
-    materialized_scope() itself on concurrent threads."""
-    mark = len(_MATERIALIZED)
+    Scopes nest, and scopes open on different driver threads are
+    independent: each releases only its own run."""
+    frames: list[DataFrame] = []
+    token = _RUN.set(frames)
     try:
         yield
     finally:
-        tail, del_from = _MATERIALIZED[mark:], mark
-        del _MATERIALIZED[del_from:]
-        for df in reversed(tail):
-            _SETTLED_ROWS.pop(df, None)
-            try:
-                _unpersist_any(df)
-            except Exception:
-                pass
+        _RUN.reset(token)
+        _release(frames)
 
 
 # The directory holding the package, for Spark's Python workers.

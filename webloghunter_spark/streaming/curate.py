@@ -12,8 +12,8 @@ fed its split (asserted every-prefix in
 tests/test_batch_stream_parity.py).
 
 Frozen artifacts, built ONCE per stream start and persisted in the
-closure (never session.materialize(), whose registry is drained by
-batch callers — the stream twins' convention), and the kernel each
+closure (never session.materialize(): the frozen side outlives any
+run — the stream twins' convention), and the kernel each
 stage runs per micro-batch — the one curate_against runs:
 
     1. quality gate        none            gate_keep_expr filter

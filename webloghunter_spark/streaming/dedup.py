@@ -58,9 +58,10 @@ def boilerplate_stream_writer(
 
     `sink(rows, batch_id)` receives the batch's
     [(id, n_seg, n_kept, new_text)] rows, sorted. The key set is
-    persist()ed here — NOT session.materialize(), whose registry is
-    drained per-query by batch callers and would unpersist a live
-    stream's index. Call `.release()` after stream stop.
+    persist()ed here — NOT session.materialize(): the frozen side
+    outlives any run, and the run that registered it would unpersist
+    a live stream's index when it ends. Call `.release()` after stream
+    stop.
     """
     from webloghunter_spark.pipelines.dedup import remove_boilerplate
 

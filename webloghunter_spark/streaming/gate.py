@@ -57,7 +57,7 @@ def quality_gate_stream_writer(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch form with the LM rule: the bigram model is trained
     ONCE on `ref_corpus` (bigram_lm_model, persisted in the closure —
-    not session.materialize(), whose registry batch callers drain) and
+    not session.materialize(): the frozen side outlives any run) and
     applied to each micro-batch — verdicts are arrival-order
     independent, unlike self-training on the stream. Per batch the
     docs are scored by bigram_logprob_frozen and judged by

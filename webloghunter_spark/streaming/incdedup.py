@@ -4,7 +4,7 @@ and containment_drop_against.
 
 Each batch operator is a corpus side, built once, plus a scoring
 kernel. A twin persist()s the corpus side for the stream's life (NOT
-session.materialize(), whose registry batch callers drain) and calls
+session.materialize(): the frozen side outlives any run) and calls
 the batch operator's own kernel on every micro-batch; the kernels
 never materialize, so nothing is cached per batch. The operators are
 ASYMMETRIC (batch docs are compared only against the corpus, never

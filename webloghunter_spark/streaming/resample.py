@@ -5,8 +5,8 @@ depend on every group's total count), so deriving them from the stream
 would make early verdicts depend on arrival order. The streaming form
 follows the frozen-model shape of streaming/gate.py: rates are
 computed ONCE from a batch reference corpus, persisted in the closure
-(NOT via session.materialize() — the global registry is drained by
-unrelated release_materialized() calls), and applied to each
+(NOT via session.materialize(): the frozen side outlives any run, and
+a run releases what it registered when it ends), and applied to each
 micro-batch with the same md5-bucket copy-count arithmetic as the
 batch operator. A row's copy count is a pure function of (id, rate),
 so batch and stream agree row-for-row whenever the reference corpus
