@@ -147,6 +147,43 @@ def test_curate_corpus_full_funnel(spark):
     assert f3[-1][2] <= f3[-1][1]
 
 
+@pytest.mark.parametrize("containment_bp", [8000, None])
+@pytest.mark.parametrize("with_eval", [True, False])
+def test_stage_tags_count_each_curate_stage(spark, containment_bp, with_eval):
+    """funnel_stage_tags runs curate_corpus's stage list: for the same
+    parameters, the docs tagged k or higher are stage k's rows_out,
+    and a skipped stage repeats the count of the stage before it."""
+    from webloghunter_spark.pipelines.curate import curate_corpus, funnel_stage_tags
+    from webloghunter_spark.session import materialized_scope
+
+    docs, eval_df = _funnel_fixture(spark)
+    small = " ".join(f"c{j}" for j in range(30))
+    wrapper = " ".join(f"p{j}" for j in range(30)) + f" {small} " + " ".join(
+        f"f{j}" for j in range(30)
+    )                                                   # contains doc 200
+    docs = docs.unionByName(spark.createDataFrame(
+        [(200, small, "s0"), (201, wrapper, "s0")], docs.schema
+    ))
+    params = dict(
+        eval_df=eval_df if with_eval else None, min_quality_bp=1000,
+        min_tokens=5, max_tokens=100_000, near_dedup_threshold=0.8,
+        dedup_num_hashes=8, dedup_band_size=2, dedup_shingle_k=3,
+        containment_threshold_bp=containment_bp, decontam_n=8,
+    )
+    with materialized_scope():
+        _, funnel = curate_corpus(docs, **params)
+        tags = [r.last_stage for r in funnel_stage_tags(docs, **params).collect()]
+    rows_out = {stage: n for stage, _, n in funnel}
+    expected, n = [], None
+    for stage in ("quality_gate", "normalized_dedup", "near_dedup",
+                  "containment_drop", "decontaminate"):
+        n = rows_out.get(stage, n)
+        expected.append(n)
+    dropped_c, dropped_e = int(containment_bp is not None), int(with_eval)
+    assert expected == [14, 13, 12, 12 - dropped_c, 12 - dropped_c - dropped_e]
+    assert [sum(t >= k for t in tags) for k in range(1, 6)] == expected
+
+
 def test_build_training_dataset_round_trip(spark, tmp_path):
     """The one-call dataset builder: funnel runs, files land as
     epoch=E/shard_id=K partitions whose row order is the training

@@ -113,22 +113,28 @@ def test_no_complex_toplevel_columns(spark):
 
     Mostly plan analysis, but NOT execution-free: several kNN-family
     builders collect() their query vector / centroids during
-    construction, so this runs small Spark jobs against SF_DIR and
-    must release the materialize() frames some builders persist.
+    construction, so this runs small Spark jobs against SF_DIR. Each
+    builder runs in its own materialized_scope(), and Spark's cache
+    must be empty once the scope exits: a frame a builder persists
+    outside materialize() is owned by no run and outlives it.
 
     The same sweep collects the names whose optimized plan, with the
     plans of the frames it reads from the cache, has a Window with an
     empty partition spec. Stages a builder settled (checkpointed) are
     not in the plan."""
-    from webloghunter_spark.session import release_materialized
+    from webloghunter_spark.session import materialized_scope
 
-    bad, unpartitioned = {}, set()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # what earlier tests left in the root run
+    bad, unpartitioned, leaked = {}, set(), []
     for name, fn in entrymod.queries().items():
-        df = fn(spark, SF_DIR)
-        schema = df.schema
-        plan = df._jdf.queryExecution().optimizedPlan()
-        release_materialized()
-        spark.catalog.clearCache()
+        with materialized_scope():
+            df = fn(spark, SF_DIR)
+            schema = df.schema
+            plan = df._jdf.queryExecution().optimizedPlan()
+        if not cache.isEmpty():
+            leaked.append(name)
+            spark.catalog.clearCache()  # judge the next name on its own
         complex_cols = [
             f.name
             for f in schema.fields
@@ -140,6 +146,38 @@ def test_no_complex_toplevel_columns(spark):
             unpartitioned.add(name)
     assert bad == {}, f"complex top-level columns break driver canon: {bad}"
     assert unpartitioned == UNPARTITIONED_WINDOWS
+    assert leaked == [], f"cache entries outlive their builder's run: {leaked}"
+
+
+def test_registry_tools_run_in_process(spark, monkeypatch, capsys, tmp_path):
+    """tools/check_hash.py and tools/dump_plans.py on a settled funnel
+    (curate_pipeline) and a builder that materializes its input
+    (filter_api): the strict check passes, every plan is written, and
+    each query's run releases its cache."""
+    import sys
+
+    import webloghunter_spark.session as session
+    from tools import check_hash, dump_plans
+
+    names = ["curate_pipeline", "filter_api"]
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    monkeypatch.setattr(dump_plans, "get_spark", lambda **_: spark)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # what earlier tests left in the root run
+
+    monkeypatch.setattr(sys, "argv", ["check_hash.py", SF_DIR, *names])
+    assert check_hash.main() == 0
+    out = capsys.readouterr().out
+    assert sorted(l.split()[1] for l in out.splitlines() if l.startswith("PASS")) == names
+    assert out.rstrip().endswith("ALL PASS")
+    assert cache.isEmpty()
+
+    monkeypatch.setattr(sys, "argv", ["dump_plans.py", str(tmp_path), SF_DIR, *names])
+    assert dump_plans.main() == 0
+    for name in names:
+        plan = (tmp_path / f"{name}.txt").read_text()
+        assert plan.startswith("== Physical Plan ==")
+    assert cache.isEmpty()
 
 
 def test_bench_isolates_failing_query(spark, monkeypatch, capsys, tmp_path):

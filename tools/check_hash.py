@@ -130,8 +130,6 @@ def main():
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
             continue
-        finally:
-            spark.catalog.clearCache()
         spark_s = time.perf_counter() - t0
         t0 = time.perf_counter()
         try:

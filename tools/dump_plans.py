@@ -63,8 +63,6 @@ def main() -> int:
                 )
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR: {type(e).__name__}: {e}"
-        finally:
-            spark.catalog.clearCache()
         (out_dir / f"{name}.txt").write_text(normalize(plan))
         print(name, flush=True)
     return 0

@@ -18,7 +18,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from webloghunter_spark.benchqueries import QUERIES
-from webloghunter_spark.session import get_spark
+from webloghunter_spark.session import get_spark, materialized_scope
 
 
 # A Python evaluation node lists the UDF calls it runs, each rendered
@@ -85,12 +85,15 @@ def main() -> int:
     spark = get_spark(app_name="plan-audit")
     rows = []
     for name, fn in QUERIES.items():
-        df = fn(spark, sf_dir)
-        # Materialize THIS Dataset's own query execution (a noop write
-        # would plan a separate one) so AQE finalizes it — codegen
-        # `*(n)` markers and final join strategies only appear then.
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        # the scope releases what the builder persisted once the plan is read
+        with materialized_scope():
+            df = fn(spark, sf_dir)
+            # Materialize THIS Dataset's own query execution (a noop
+            # write would plan a separate one) so AQE finalizes it —
+            # codegen `*(n)` markers and final join strategies only
+            # appear then.
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
         # The adaptive plan string appends the pre-AQE "Initial Plan" —
         # audit only the final plan.
         plan = plan.split("== Initial Plan ==")[0]

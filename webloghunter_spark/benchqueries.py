@@ -99,7 +99,7 @@ from webloghunter_spark.pipelines.shard import (
 )
 from webloghunter_spark.pipelines.split import time_split_audit, upsample_epochs
 from webloghunter_spark.rules.sigma import DEFAULT_RULES, apply_rules
-from webloghunter_spark.session import materialized_scope
+from webloghunter_spark.session import materialize, materialized_scope
 from webloghunter_spark.streaming.vocab import cms_heavy_hitters, cms_overestimate_audit
 
 
@@ -846,12 +846,12 @@ SQL_SIGMA_RULES = _with(
 def q_filter_api(spark, sf_dir):
     """F-class predicates incl. static-extension exclusion.
 
-    _fan+persist: a pure filter query has no shuffle, so on the
+    _fan+materialize: a pure filter query has no shuffle, so on the
     single-row-group test input the whole regex/CASE pipeline would run
     as ONE serial task (and predicate pushdown sinks the filter below
     any bare repartition, re-serializing it). Real multi-split tables
     parallelize the scan naturally and want the pushdown instead."""
-    w = _fan(weblog_from_events(spark, sf_dir)).persist()
+    w = materialize(_fan(weblog_from_events(spark, sf_dir)))
     out = apply_filters(
         w,
         status_include=[200, 500],
@@ -1222,7 +1222,6 @@ def q_media_decode(spark, sf_dir):
         resize_media,
         sample_frames,
     )
-    from webloghunter_spark.session import materialize
 
     docs = _fan(_t(spark, sf_dir, "documents"))
     body = F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8")
@@ -1343,14 +1342,14 @@ def q_parse_roundtrip(spark, sf_dir):
     # Cache the synthesized lines: parse_lines' comment/blank filter
     # otherwise pushes below the exchange with the whole synthesis CASE
     # substituted in — recomputing it per predicate on the single scan
-    # task. A persist() is a pushdown barrier without the eager physical
-    # planning localCheckpoint pays; real file reads don't need this
+    # task. materialize() is a pushdown barrier without the eager
+    # physical planning localCheckpoint pays; real file reads don't need this
     # (the filter then pushes into the scan, which is already parallel —
     # exactly what pushdown is for).
-    lines = _fan(w.select(
+    lines = materialize(_fan(w.select(
         line.alias("value"), F.lit("events.log").alias("source"),
         F.col("event_id").alias("ordinal"),
-    )).persist()
+    )))
     parsed, _errors = parse_lines(lines)
     out = with_utc_timestamp(parsed)
     return out.select(
@@ -1743,7 +1742,7 @@ SQL_BURST_SUCCESS = _with(
 def _tool_scan_frame(spark, sf_dir):
     """Weblog projection keyed for the tool scanner: cluster=user_id so
     groups are small (and the DuckDB oracle's recursive walk stays
-    shallow). persist(): the scanner reads the frame on two branches
+    shallow). materialize(): the scanner reads the frame on two branches
     (slim candidate side + wide probe side) and pushes its candidate
     filter down — against this SYNTHETIC frame that would inline the
     JSON+CASE pipeline once per keyword on the pre-exchange scan task
@@ -1759,7 +1758,7 @@ def _tool_scan_frame(spark, sf_dir):
         "request_uri", "utc_timestamp",
         F.col("event_id").alias("ordinal"),
     )
-    return frame.persist()
+    return materialize(frame)
 
 
 def q_tool_scan(spark, sf_dir):
@@ -2013,9 +2012,9 @@ def q_doc_fingerprint(spark, sf_dir):
     from webloghunter_spark.functions.text import with_rolling_fingerprint
 
     docs = _fan(_t(spark, sf_dir, "documents"))
-    # persist(): the isNotNull filter would otherwise push below the
+    # materialize(): the isNotNull filter would otherwise push below the
     # projection and evaluate the Arrow UDF twice.
-    fp = with_rolling_fingerprint(docs, "text", out_col="rh").persist()
+    fp = materialize(with_rolling_fingerprint(docs, "text", out_col="rh"))
     return fp.select("doc_id", "rh").filter(F.col("rh").isNotNull())
 
 
@@ -2039,10 +2038,10 @@ def q_winnow_fingerprints(spark, sf_dir):
     from webloghunter_spark.functions.text import with_winnowed_fingerprints
 
     docs = _fan(_t(spark, sf_dir, "documents"))
-    # persist() before explode: InferFiltersFromGenerate adds a
+    # materialize() before explode: InferFiltersFromGenerate adds a
     # size(winnow_fps) > 0 filter that pushdown would otherwise place
     # below the projection, running the Arrow UDF a second time.
-    fps = with_winnowed_fingerprints(docs, "text", kgram=8, window=4).persist()
+    fps = materialize(with_winnowed_fingerprints(docs, "text", kgram=8, window=4))
     return fps.select("doc_id", F.explode("winnow_fps").alias("fp")).distinct()
 
 
@@ -2262,19 +2261,19 @@ def q_tool_focus(spark, sf_dir):
     """F14 through the real apply_filters(tool_focus=True) path: first
     and last event per (source, ip, tool) for tool-tagged rows.
 
-    persist: tool_focus's `tool != ''` filter would otherwise push
+    materialize: tool_focus's `tool != ''` filter would otherwise push
     below the fan-out with the JSON+CASE synthesis inlined per
     reference — re-running get_json_object several times per row on
     the single pre-exchange scan task (the same pushdown-substitution
     trap `_tool_scan_frame` documents)."""
-    w = _fan(weblog_from_events(spark, sf_dir)).withColumn(
+    w = materialize(_fan(weblog_from_events(spark, sf_dir)).withColumn(
         "source", F.lit("ev")
     ).withColumn(
         "tool",
         F.when(F.col("request_uri").isin("/admin/panel", "/login"), "DS01")
         .when(F.col("request_uri").isin("/dump.sql", "/cgi?cmd=whoami"), "SC01")
         .otherwise(""),
-    ).persist()
+    ))
     out = apply_filters(w, tool_focus=True, all_extensions=True, order_result=False)
     return out.select("event_id", "tool")
 
@@ -6821,7 +6820,6 @@ def q_dedup_normalized(spark, sf_dir):
     per family; family_n sizes the duplicate cluster. One hash
     shuffle on the 16-byte key; pure codegen normalization."""
     from webloghunter_spark.functions.text import normalized_text_expr
-    from webloghunter_spark.session import materialize
 
     docs = _t(spark, sf_dir, "documents")
     # keyed feeds BOTH the family aggregate and the join probe side:
@@ -8803,17 +8801,34 @@ SQL_BM25_BATCH = _bm25_batch_sql()
 # builder's description is the comment above its row.
 _REGISTRY: list[tuple[str, Builder, str]] = [
     # ORDER IS DRIVER COVERAGE: the correctness driver samples the
-    # FIRST 50 entries. Front = the 3 names that run sessionize, whose
-    # plans changed when it persisted its windowed rows and lost its
-    # single-partition window, then the 9 names whose operator was split
-    # into a partial aggregate and a finalize (its streaming twin runs
-    # both), then the 20 names whose work changed when each Python UDF
-    # became one evaluation per row (their plans, or the plans of the
-    # stages they settle, apply the MinHash, SimHash or winnowing UDF),
-    # then the other 13 names whose builder changed when each operator
-    # kept one implementation, then the first 5 of the previous
-    # front's staleness cohort. Everything after slot 50 is covered by
-    # the committed full-registry HASHCHECK artifacts.
+    # FIRST 50 entries. Front = the 12 names whose plans changed when
+    # the curate funnel was declared once (filter_track and dataset_diff
+    # settle every stage funnel_stage_tags runs) and when the bare
+    # persist()s of 10 builders became materialize() (their cache is
+    # serialized and released with the run), then the 3 names that run
+    # sessionize, whose plans changed when it persisted its windowed
+    # rows and lost its single-partition window, then the 9 names whose
+    # operator was split into a partial aggregate and a finalize (its
+    # streaming twin runs both), then the other 18 names whose work
+    # changed when each Python UDF became one evaluation per row (their
+    # plans, or the plans of the stages they settle, apply the MinHash,
+    # SimHash or winnowing UDF), then the first 8 of the other 9 names
+    # whose builder changed when each operator kept one implementation.
+    # Everything after slot 50 is covered by the committed
+    # full-registry HASHCHECK artifacts.
+    # -- funnel declared once; bare persist() -> materialize() (12) --
+    ("filter_track", q_filter_track, SQL_FILTER_TRACK),
+    ("dataset_diff", q_dataset_diff, SQL_DATASET_DIFF),
+    ("doc_fingerprint", q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    ("doc_fingerprint_fast", q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    ("filter_api", q_filter_api, SQL_FILTER_API),
+    ("parse_roundtrip", q_parse_roundtrip, SQL_PARSE_ROUNDTRIP),
+    ("tool_focus", q_tool_focus, SQL_TOOL_FOCUS),
+    ("tool_scan", q_tool_scan, SQL_TOOL_SCAN),
+    ("tool_scan_single", q_tool_scan_single, SQL_TOOL_SCAN_SINGLE),
+    ("tool_scan_windowed", q_tool_scan_windowed, SQL_TOOL_SCAN_WINDOWED),
+    ("winnow_fingerprints", q_winnow_fingerprints, SQL_WINNOW),
+    ("winnow_fingerprints_fast", q_winnow_fingerprints, SQL_WINNOW),
     # -- sessionize: persisted window pass, partitioned bucket offsets (3) --
     ("sessionize", q_sessionize, SQL_SESSIONIZE),
     ("session_stats", q_session_stats, SQL_SESSION_STATS),
@@ -8852,7 +8867,7 @@ _REGISTRY: list[tuple[str, Builder, str]] = [
     ("emb_drift", q_emb_drift, SQL_EMB_DRIFT),
     ("hll_distinct", q_hll_distinct, SQL_HLL_DISTINCT),
     ("ewma_alerts", q_ewma_alerts, SQL_EWMA_ALERTS),
-    # -- plans changed by one evaluation per UDF (20) --
+    # -- plans changed by one evaluation per UDF (18) --
     ("cc_representatives", q_cc_representatives, SQL_CC_REPRESENTATIVES),
     ("dup_stats", q_dup_stats, SQL_DUP_STATS),
     # Dedup deployment audit: recall of the MinHash-LSH candidate
@@ -8908,8 +8923,6 @@ _REGISTRY: list[tuple[str, Builder, str]] = [
                              neardup_threshold=0.8, num_hashes=4, band_size=2, shingle_k=3,
                              containment_threshold_bp=8000, size_ratio_bp=10000, max_df=20),
      SQL_SCORECARD_BUDGET),
-    ("filter_track", q_filter_track, SQL_FILTER_TRACK),
-    ("dataset_diff", q_dataset_diff, SQL_DATASET_DIFF),
     # Per-source contamination/dup one-screener ("which source do we
     # cut"): dataset_card composition/hygiene + near-dup matrix
     # exposure (self + cross pair counts) + containment_drop attrition,
@@ -8930,11 +8943,7 @@ _REGISTRY: list[tuple[str, Builder, str]] = [
     # definition is shared.
     ("winnow_pairs", _on("documents", winnow_pairs, kgram=8, window=4, max_df=20, min_shared=2),
      SQL_WINNOW_PAIRS),
-    # -- builders changed by the one-implementation pass (13) --
-    ("doc_fingerprint", q_doc_fingerprint, SQL_DOC_FINGERPRINT),
-    ("doc_fingerprint_fast", q_doc_fingerprint, SQL_DOC_FINGERPRINT),
-    ("winnow_fingerprints", q_winnow_fingerprints, SQL_WINNOW),
-    ("winnow_fingerprints_fast", q_winnow_fingerprints, SQL_WINNOW),
+    # -- builders changed by the one-implementation pass (9) --
     ("semantic_dedup", q_semantic_dedup, SQL_SEMANTIC_DEDUP),
     ("semantic_dedup_fast", q_semantic_dedup, SQL_SEMANTIC_DEDUP),
     ("containment_pairs", q_containment_pairs, SQL_CONTAINMENT_PAIRS),
@@ -9144,7 +9153,6 @@ _REGISTRY: list[tuple[str, Builder, str]] = [
     # 1e-9-grid integer ln sums (engine-exact, order-free).
     ("tail_index", _on("documents", tail_index, k=20), SQL_TAIL_INDEX),
     ("token_entropy", q_token_entropy, SQL_TOKEN_ENTROPY),
-    ("tool_focus", q_tool_focus, SQL_TOOL_FOCUS),
     ("trailing_rate", q_trailing_rate, SQL_TRAILING_RATE),
     ("train_split", q_train_split, SQL_TRAIN_SPLIT),
     ("uri_risk", q_uri_risk, SQL_URI_RISK),
@@ -9169,7 +9177,6 @@ _REGISTRY: list[tuple[str, Builder, str]] = [
     ("density_sample", _on("embeddings", density_sample, cap=20, num_planes=4),
      SQL_DENSITY_SAMPLE),
     ("event_risk", q_event_risk, SQL_EVENT_RISK),
-    ("filter_api", q_filter_api, SQL_FILTER_API),
     ("first_last", q_first_last, SQL_FIRST_LAST),
     # Gopher quality-rule audit matrix (Rae et al. 2021): one boolean
     # per rule per document — word-count bounds, mean-word-length band,
@@ -9205,7 +9212,6 @@ _REGISTRY: list[tuple[str, Builder, str]] = [
     ("neardup_embeddings", _on("embeddings", neardup_pairs_lsh, num_planes=4, dim=64,
                                threshold=0.2),
      SQL_NEARDUP_EMB),
-    ("parse_roundtrip", q_parse_roundtrip, SQL_PARSE_ROUNDTRIP),
     ("pricing_summary", q_pricing_summary, SQL_PRICING),
     ("quality_score", q_quality, SQL_QUALITY),
     ("rank_fusion", q_rank_fusion, SQL_RANK_FUSION),
@@ -9222,9 +9228,6 @@ _REGISTRY: list[tuple[str, Builder, str]] = [
     # group key; an empty result is the clean-split verdict.
     ("time_split", _on("events", time_split_audit, "2024-01-15 00:00:00"), SQL_TIME_SPLIT),
     ("token_stats", q_token_stats, SQL_TOKEN_STATS),
-    ("tool_scan", q_tool_scan, SQL_TOOL_SCAN),
-    ("tool_scan_single", q_tool_scan_single, SQL_TOOL_SCAN_SINGLE),
-    ("tool_scan_windowed", q_tool_scan_windowed, SQL_TOOL_SCAN_WINDOWED),
     ("top_revenue", q_top_revenue, SQL_TOP_REVENUE),
     # Lexicon domain tagging ahead of the mix operators
     # (WebOrganizer-style taxonomy bootstrap): per-topic marker-token
@@ -9362,10 +9365,6 @@ def run_noop(spark: SparkSession, name: str, sf_dir: str) -> float:
     it persisted. Returns the seconds of the build and the run (the
     release is not timed)."""
     t0 = time.perf_counter()
-    try:
-        with materialized_scope():
-            QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            return time.perf_counter() - t0
-    finally:
-        # frees the bare persist()s of a few builders, which no run owns
-        spark.catalog.clearCache()
+    with materialized_scope():
+        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        return time.perf_counter() - t0

@@ -17,14 +17,22 @@ embedded in a large one has Jaccard ~0, containment 1.0); it runs
 AFTER near-dedup so the expensive pair verify sees the post-dedup
 survivor set.
 
-Each stage is optional (None/0 disables it and its jobs entirely).
-Returns (survivors, funnel) where `funnel` is one row per stage with
-rows-in/rows-out — the attrition report every curation run gets
-audited by. The funnel numbers cost no extra job: each stage's
-checkpoint job counts its own rows (session.settled_rows; the stages
-themselves each materialize once anyway at 100 TB — write survivors
-between stages rather than fusing six corpus-wide joins into one plan
-whose failure loses everything).
+The funnel is declared once. A stage is a (name, step) pair, where
+step(cur) returns the survivors of `cur`; _corpus_steps builds stages
+1-5 from the parameters (a None threshold, or eval_df=None, leaves
+its stage out), and _run_funnel is the one loop that runs them.
+curate_corpus appends the token budget; curate_against swaps the
+dedup tiers for their against-forms; funnel_stage_tags tags the
+stage frames for filter_track and dataset_diff.
+
+curate_corpus and curate_against return (survivors, funnel) where
+`funnel` is one row per enabled stage with rows-in/rows-out — the
+attrition report every curation run gets audited by. The funnel
+numbers cost no extra job: each stage's checkpoint job counts its own
+rows (session.settled_rows; the stages themselves each materialize
+once anyway at 100 TB — write survivors between stages rather than
+fusing six corpus-wide joins into one plan whose failure loses
+everything).
 
 Stage boundaries use session.settle() (eager localCheckpoint), NOT
 persist(): persist caches rows but keeps the nested logical plan, so
@@ -43,10 +51,24 @@ stage-skip), not re-proves the math.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webloghunter_spark.session import settle, settled_rows
+
+#: A funnel stage: its name and the step that maps the stage's input
+#: to its survivors.
+Stage = tuple[str, Callable[[DataFrame], DataFrame]]
+
+#: The names of _corpus_steps's stages in funnel order; funnel_stage_tags
+#: tags each document with the position of the last one it survives.
+_CORPUS_STAGES = (
+    "quality_gate", "normalized_dedup", "near_dedup", "containment_drop",
+    "decontaminate",
+)
 
 
 def _corpus_keys(corpus: DataFrame, text_col: str) -> DataFrame:
@@ -78,6 +100,122 @@ def _undropped(cur: DataFrame, dec: DataFrame, id_col: str) -> DataFrame:
     keeps (dropped = 0)."""
     keep = dec.filter(F.col("dropped") == 0).select(id_col)
     return cur.join(keep, id_col, "left_semi")
+
+
+def _gate_step(
+    text_col: str, min_tokens: int, max_tokens: int, min_quality_bp: int
+) -> Stage:
+    """The quality gate as a row-local filter (LM rule off): ONE
+    codegen filter pass over the text instead of verdict-frame +
+    semi-join — the same keep set by construction (gate_keep_expr
+    shares quality_gate's metric exprs; guide §2.4)."""
+    from webloghunter_spark.pipelines.gate import gate_keep_expr
+
+    return "quality_gate", lambda cur: cur.filter(
+        gate_keep_expr(
+            text_col,
+            min_tokens=min_tokens,
+            max_tokens=max_tokens,
+            min_quality_bp=min_quality_bp,
+        )
+    )
+
+
+def _decontam_step(
+    eval_df: DataFrame, id_col: str, text_col: str, n: int
+) -> Stage:
+    """Eval n-gram decontamination — already an against-form: the eval
+    set is frozen."""
+    from webloghunter_spark.pipelines.decontam import decontaminate
+
+    return "decontaminate", lambda cur: decontaminate(
+        cur, eval_df, id_col=id_col, text_col=text_col, n=n
+    )
+
+
+def _corpus_steps(
+    eval_df: DataFrame | None, id_col: str, text_col: str,
+    min_quality_bp: int | None, min_tokens: int, max_tokens: int,
+    near_dedup_threshold: float | None, dedup_num_hashes: int,
+    dedup_band_size: int, dedup_shingle_k: int,
+    containment_threshold_bp: int | None, containment_size_ratio_bp: int,
+    containment_max_df: int, decontam_n: int,
+) -> list[Stage]:
+    """curate_corpus's stages 1-5 for these parameters, in funnel
+    order. `min_quality_bp=None` leaves out the gate,
+    `near_dedup_threshold=None` both dedup tiers,
+    `containment_threshold_bp=None` the containment drop and
+    `eval_df=None` the decontamination."""
+    from webloghunter_spark.functions.text import normalized_text_expr
+    from webloghunter_spark.pipelines.dedup import containment_drop, near_dedup
+
+    def normalized_dedup(cur: DataFrame) -> DataFrame:
+        # cheap tier: canonical-key exact families, keep min id
+        keyed = cur.select(
+            F.col(id_col), F.md5(normalized_text_expr(text_col)).alias("_k")
+        )
+        keep = keyed.groupBy("_k").agg(F.min(id_col).alias(id_col))
+        return cur.join(keep.select(id_col), id_col, "left_semi")
+
+    def near(cur: DataFrame) -> DataFrame:
+        return near_dedup(
+            cur,
+            text_col=text_col,
+            id_col=id_col,
+            threshold=near_dedup_threshold,
+            num_hashes=dedup_num_hashes,
+            band_size=dedup_band_size,
+            shingle_k=dedup_shingle_k,
+        )
+
+    def containment(cur: DataFrame) -> DataFrame:
+        # the intervention form: drop docs contained in a not-smaller
+        # survivor (quote farms / wrapper pages the Jaccard tier
+        # misses); keep-best tie-break is containment_drop's
+        dec = containment_drop(
+            cur,
+            text_col=text_col,
+            id_col=id_col,
+            source_col=None,
+            shingle_k=dedup_shingle_k,
+            threshold_bp=containment_threshold_bp,
+            size_ratio_bp=containment_size_ratio_bp,
+            max_df=containment_max_df,
+        )
+        return _undropped(cur, dec, id_col)
+
+    steps: list[Stage] = []
+    if min_quality_bp is not None:
+        steps.append(_gate_step(text_col, min_tokens, max_tokens, min_quality_bp))
+    if near_dedup_threshold is not None:
+        steps += [("normalized_dedup", normalized_dedup), ("near_dedup", near)]
+    if containment_threshold_bp is not None:
+        steps.append(("containment_drop", containment))
+    if eval_df is not None:
+        steps.append(_decontam_step(eval_df, id_col, text_col, decontam_n))
+    return steps
+
+
+def _run_funnel(cur: DataFrame, steps: list[Stage]) -> list[tuple[str, DataFrame]]:
+    """Run `steps` in order, each on the survivors of the one before,
+    and settle() every stage's survivors; returns [(stage, frame)]."""
+    frames = []
+    for name, step in steps:
+        cur = settle(step(cur))
+        frames.append((name, cur))
+    return frames
+
+
+def _curate(
+    docs: DataFrame, steps: list[Stage]
+) -> tuple[DataFrame, list[tuple[str, int, int]]]:
+    """(survivors, funnel) of `steps` on `docs`. The rows of each
+    [(stage, rows_in, rows_out)] are read off the settled frames."""
+    cur = settle(docs)
+    frames = _run_funnel(cur, steps)
+    rows = [settled_rows(df) for df in [cur] + [df for _, df in frames]]
+    funnel = [(name, rows[i], rows[i + 1]) for i, (name, _) in enumerate(frames)]
+    return (frames[-1][1] if frames else cur), funnel
 
 
 def curate_corpus(
@@ -112,112 +250,24 @@ def curate_corpus(
       quality_bp_expr, so gated-then-budgeted corpora rank on the
       same scale the gate filtered on).
     """
-    from webloghunter_spark.functions.text import (
-        normalized_text_expr,
-        quality_bp_expr,
+    steps = _corpus_steps(
+        eval_df, id_col, text_col, min_quality_bp, min_tokens, max_tokens,
+        near_dedup_threshold, dedup_num_hashes, dedup_band_size,
+        dedup_shingle_k, containment_threshold_bp, containment_size_ratio_bp,
+        containment_max_df, decontam_n,
     )
 
-    funnel: list[tuple[str, int, int]] = []
-    cur = settle(docs)
-    n = settled_rows(cur)
-
-    if min_quality_bp is not None:
-        from webloghunter_spark.pipelines.gate import gate_keep_expr
-
-        # row-local gate (LM rule off): ONE codegen filter pass over
-        # the text instead of verdict-frame + semi-join — same keep
-        # set by construction (gate_keep_expr shares quality_gate's
-        # metric exprs; guide §2.4)
-        cur = settle(
-            cur.filter(
-                gate_keep_expr(
-                    text_col,
-                    min_tokens=min_tokens,
-                    max_tokens=max_tokens,
-                    min_quality_bp=min_quality_bp,
-                )
-            )
+    def budget(cur: DataFrame) -> DataFrame:
+        from webloghunter_spark.functions.text import (
+            quality_bp_expr,
+            token_count_expr,
         )
-        m = settled_rows(cur)
-        funnel.append(("quality_gate", n, m))
-        n = m
-
-    if near_dedup_threshold is not None:
-        # cheap tier: canonical-key exact families, keep min id
-        keyed = cur.select(
-            F.col(id_col),
-            F.md5(normalized_text_expr(text_col)).alias("_k"),
-        )
-        keep = keyed.groupBy("_k").agg(F.min(id_col).alias(id_col)).select(
-            id_col
-        )
-        cur = settle(cur.join(keep, id_col, "left_semi"))
-        m = settled_rows(cur)
-        funnel.append(("normalized_dedup", n, m))
-        n = m
-
-        from webloghunter_spark.pipelines.dedup import near_dedup
-
-        cur = settle(
-            near_dedup(
-                cur,
-                text_col=text_col,
-                id_col=id_col,
-                threshold=near_dedup_threshold,
-                num_hashes=dedup_num_hashes,
-                band_size=dedup_band_size,
-                shingle_k=dedup_shingle_k,
-            )
-        )
-        m = settled_rows(cur)
-        funnel.append(("near_dedup", n, m))
-        n = m
-
-    if containment_threshold_bp is not None:
-        from webloghunter_spark.pipelines.dedup import containment_drop
-
-        # the intervention form: drop docs contained in a not-smaller
-        # survivor (quote farms / wrapper pages the Jaccard tier
-        # misses); keep-best tie-break is containment_drop's
-        dec = containment_drop(
-            cur,
-            text_col=text_col,
-            id_col=id_col,
-            source_col=None,
-            shingle_k=dedup_shingle_k,
-            threshold_bp=containment_threshold_bp,
-            size_ratio_bp=containment_size_ratio_bp,
-            max_df=containment_max_df,
-        )
-        cur = settle(_undropped(cur, dec, id_col))
-        m = settled_rows(cur)
-        funnel.append(("containment_drop", n, m))
-        n = m
-
-    if eval_df is not None:
-        from webloghunter_spark.pipelines.decontam import decontaminate
-
-        cur = settle(
-            decontaminate(
-                cur, eval_df, id_col=id_col, text_col=text_col, n=decontam_n
-            )
-        )
-        m = settled_rows(cur)
-        funnel.append(("decontaminate", n, m))
-        n = m
-
-    if token_budget is not None:
         from webloghunter_spark.pipelines.select import token_budget_select
 
         if score_col is None:
-            scored = cur.withColumn(
-                "_score", quality_bp_expr(text_col)
-            )
-            sc = "_score"
+            scored, sc = cur.withColumn("_score", quality_bp_expr(text_col)), "_score"
         else:
             scored, sc = cur, score_col
-        from webloghunter_spark.functions.text import token_count_expr
-
         sel = token_budget_select(
             scored,
             token_budget,
@@ -227,14 +277,11 @@ def curate_corpus(
             # ntok derives from a hardcoded "text" column
             ntok_col=token_count_expr(text_col),
         )
-        cur = settle(
-            sel.filter(F.col("selected")).drop("selected", "ntok", "_score")
-        )
-        m = settled_rows(cur)
-        funnel.append(("token_budget", n, m))
-        n = m
+        return sel.filter(F.col("selected")).drop("selected", "ntok", "_score")
 
-    return cur, funnel
+    if token_budget is not None:
+        steps.append(("token_budget", budget))
+    return _curate(docs, steps)
 
 
 def curate_against(
@@ -281,9 +328,11 @@ def curate_against(
     Batch-internal duplicates deliberately SURVIVE — run curate_corpus
     on the batch first if ingest batches self-duplicate.
 
-    Same stage-skip semantics and (survivors, funnel) return shape as
-    curate_corpus; stage boundaries settle() (eager localCheckpoint)
-    for the same driver-side planning reason.
+    Stages 1 and 5 are curate_corpus's own gate and decontamination
+    steps, and the five stages run through the same settle loop, so
+    the stage-skip semantics, the (survivors, funnel) return shape and
+    the settle()d stage boundaries are curate_corpus's by
+    construction.
 
     PRECONDITION — globally unique ids: `id_col` must be unique across
     batch AND corpus combined (inherited from incremental_near_dedup /
@@ -306,57 +355,27 @@ def curate_against(
     builds them once, persists them for the stream's life, and runs
     the same stage kernels (_exact_against, _near_drop, _drop_against,
     decontaminate) on each micro-batch."""
-    funnel: list[tuple[str, int, int]] = []
-    cur = settle(batch)
-    n = settled_rows(cur)
+    from webloghunter_spark.pipelines.dedup import (
+        containment_drop_against,
+        incremental_near_dedup,
+    )
 
-    if min_quality_bp is not None:
-        from webloghunter_spark.pipelines.gate import gate_keep_expr
+    def exact(cur: DataFrame) -> DataFrame:
+        return _exact_against(cur, _corpus_keys(corpus, text_col), text_col, id_col)
 
-        # row-local gate filter — curate_corpus's rationale (§2.4)
-        cur = settle(
-            cur.filter(
-                gate_keep_expr(
-                    text_col,
-                    min_tokens=min_tokens,
-                    max_tokens=max_tokens,
-                    min_quality_bp=min_quality_bp,
-                )
-            )
+    def near(cur: DataFrame) -> DataFrame:
+        return incremental_near_dedup(
+            cur,
+            corpus,
+            text_col=text_col,
+            id_col=id_col,
+            threshold=near_dedup_threshold,
+            num_hashes=dedup_num_hashes,
+            band_size=dedup_band_size,
+            shingle_k=dedup_shingle_k,
         )
-        m = settled_rows(cur)
-        funnel.append(("quality_gate", n, m))
-        n = m
 
-    if near_dedup_threshold is not None:
-        cur = settle(
-            _exact_against(cur, _corpus_keys(corpus, text_col), text_col, id_col)
-        )
-        m = settled_rows(cur)
-        funnel.append(("exact_against", n, m))
-        n = m
-
-        from webloghunter_spark.pipelines.dedup import incremental_near_dedup
-
-        cur = settle(
-            incremental_near_dedup(
-                cur,
-                corpus,
-                text_col=text_col,
-                id_col=id_col,
-                threshold=near_dedup_threshold,
-                num_hashes=dedup_num_hashes,
-                band_size=dedup_band_size,
-                shingle_k=dedup_shingle_k,
-            )
-        )
-        m = settled_rows(cur)
-        funnel.append(("near_against", n, m))
-        n = m
-
-    if containment_threshold_bp is not None:
-        from webloghunter_spark.pipelines.dedup import containment_drop_against
-
+    def containment(cur: DataFrame) -> DataFrame:
         dec = containment_drop_against(
             cur,
             corpus,
@@ -367,24 +386,18 @@ def curate_against(
             size_ratio_bp=containment_size_ratio_bp,
             max_df=containment_max_df,
         )
-        cur = settle(_undropped(cur, dec, id_col))
-        m = settled_rows(cur)
-        funnel.append(("containment_against", n, m))
-        n = m
+        return _undropped(cur, dec, id_col)
 
+    steps: list[Stage] = []
+    if min_quality_bp is not None:
+        steps.append(_gate_step(text_col, min_tokens, max_tokens, min_quality_bp))
+    if near_dedup_threshold is not None:
+        steps += [("exact_against", exact), ("near_against", near)]
+    if containment_threshold_bp is not None:
+        steps.append(("containment_against", containment))
     if eval_df is not None:
-        from webloghunter_spark.pipelines.decontam import decontaminate
-
-        cur = settle(
-            decontaminate(
-                cur, eval_df, id_col=id_col, text_col=text_col, n=decontam_n
-            )
-        )
-        m = settled_rows(cur)
-        funnel.append(("decontaminate", n, m))
-        n = m
-
-    return cur, funnel
+        steps.append(_decontam_step(eval_df, id_col, text_col, decontam_n))
+    return _curate(batch, steps)
 
 
 def snapshot_diff(
@@ -464,106 +477,46 @@ def funnel_stage_tags(
     last_stage) with 1=gate, 2=exact dedup, 3=near dedup,
     4=containment drop, 5=decontamination; gate-dead docs are ABSENT
     (callers coalesce to 0). `containment_threshold_bp=None` skips the
-    containment stage — a skipped stage drops nothing, so every
-    near-dedup survivor carries the containment tag too (stage
-    numbering stays stable for consumers). This is filter_track's survivor
-    computation factored out so dataset_diff can run it on two
-    snapshots without drift — one code path, one oracle CTE chain.
+    containment stage — a skipped stage drops nothing, so it takes the
+    frame of the stage before it and every near-dedup survivor carries
+    the containment tag too (stage numbering stays stable for
+    consumers). This is filter_track's survivor computation factored
+    out so dataset_diff can run it on two snapshots without drift; the
+    stages are curate_corpus's own (_corpus_steps, run by the same
+    settle loop), so the count of last_stage >= k equals rows_out of
+    curate_corpus's stage k for the same parameters.
 
-    Scale: stage frames carry (id, text) only until the dedup tiers
-    need the text, then id-only; survivor sets are NESTED so the
-    membership flags collapse to ONE union + max(stage) aggregate
-    (the filter_track lesson: 4.2x -> 2.82x at the 32x control).
-    Stage boundaries settle() (eager localCheckpoint — lineage cut),
-    so the union's plan is five LogicalRDD scans, not five nested
-    replays of the whole funnel; see curate_corpus's docstring."""
-    from webloghunter_spark.functions.text import normalized_text_expr
-    from webloghunter_spark.pipelines.dedup import containment_drop, near_dedup
-    from webloghunter_spark.pipelines.decontam import decontaminate
-    from webloghunter_spark.pipelines.gate import gate_keep_expr
+    Scale: stage frames carry (id, text) only — the projection runs
+    before the gate, and its unsettled input costs no extra job;
+    survivor sets are NESTED so the membership flags collapse to ONE
+    union + max(stage) aggregate (the filter_track lesson: 4.2x ->
+    2.82x at the 32x control). Stage boundaries settle() (eager
+    localCheckpoint — lineage cut), so the union's plan is five
+    LogicalRDD scans, not five nested replays of the whole funnel; see
+    curate_corpus's docstring."""
 
-    # row-local gate filter instead of verdict-frame + semi-join —
-    # curate_corpus's rationale (guide §2.4; same keep set by
-    # construction, gate_keep_expr shares quality_gate's metric exprs)
-    s1 = settle(
-        docs.filter(
-            gate_keep_expr(
-                text_col,
-                min_tokens=min_tokens,
-                max_tokens=max_tokens,
-                min_quality_bp=min_quality_bp,
-            )
-        ).select(F.col(id_col), F.col(text_col).alias("_txt"))
+    def txt(df: DataFrame) -> DataFrame:
+        return df.select(F.col(id_col), F.col(text_col).alias("_txt"))
+
+    steps = _corpus_steps(
+        None if eval_df is None else txt(eval_df), id_col, "_txt",
+        min_quality_bp, min_tokens, max_tokens, near_dedup_threshold,
+        dedup_num_hashes, dedup_band_size, dedup_shingle_k,
+        containment_threshold_bp, containment_size_ratio_bp,
+        containment_max_df, decontam_n,
     )
-    keyed = s1.select(
-        F.col(id_col), F.md5(normalized_text_expr("_txt")).alias("_k")
-    )
-    s2 = settle(
-        s1.join(
-            keyed.groupBy("_k").agg(F.min(id_col).alias(id_col)).select(id_col),
-            id_col,
-            "left_semi",
-        )
-    )
-    s3 = settle(
-        s2.join(
-            near_dedup(
-                s2,
-                text_col="_txt",
-                id_col=id_col,
-                threshold=near_dedup_threshold,
-                num_hashes=dedup_num_hashes,
-                band_size=dedup_band_size,
-                shingle_k=dedup_shingle_k,
-            ).select(id_col),
-            id_col,
-            "left_semi",
-        )
-    )
-    if containment_threshold_bp is not None:
-        s4 = settle(
-            s3.join(
-                containment_drop(
-                    s3,
-                    text_col="_txt",
-                    id_col=id_col,
-                    source_col=None,
-                    shingle_k=dedup_shingle_k,
-                    threshold_bp=containment_threshold_bp,
-                    size_ratio_bp=containment_size_ratio_bp,
-                    max_df=containment_max_df,
-                )
-                .filter(F.col("dropped") == 0)
-                .select(id_col),
-                id_col,
-                "left_semi",
-            )
-        )
-    else:
-        s4 = s3
-    if eval_df is not None:
-        # decontaminate shingles BOTH frames on text_col — mirror the
-        # rename on the eval side
-        ev = eval_df.select(F.col(id_col), F.col(text_col).alias("_txt"))
-        s5 = decontaminate(
-            s4, ev, id_col=id_col, text_col="_txt", n=decontam_n
-        ).select(id_col)
-    else:
-        s5 = s4.select(id_col)
-    # settle() is eager, so s1..s4 are already materialized AND their
-    # plans cut to LogicalRDD scans before the fan-out union below —
-    # the branches hit checkpointed blocks instead of recomputing (or
-    # re-planning) shared funnel lineage.
+    cur = txt(docs)
+    frames = dict(_run_funnel(cur, steps))
     # Survivor sets are NESTED (clean ⊆ contain ⊆ near ⊆ exact ⊆
     # gate), so the membership flags collapse to ONE number — the last
     # stage a doc survived: union the id sets with a stage tag, take
     # max(tag), join ONCE. One exchange + one join instead of five.
+    tagged = []
+    for k, name in enumerate(_CORPUS_STAGES, 1):
+        cur = frames.get(name, cur)
+        tagged.append(cur.select(F.col(id_col), F.lit(k).alias("_st")))
     return (
-        s1.select(F.col(id_col), F.lit(1).alias("_st"))
-        .unionByName(s2.select(F.col(id_col), F.lit(2).alias("_st")))
-        .unionByName(s3.select(F.col(id_col), F.lit(3).alias("_st")))
-        .unionByName(s4.select(F.col(id_col), F.lit(4).alias("_st")))
-        .unionByName(s5.select(F.col(id_col), F.lit(5).alias("_st")))
+        reduce(DataFrame.unionByName, tagged)
         .groupBy(id_col)
         .agg(F.max("_st").alias("last_stage"))
     )
@@ -590,10 +543,10 @@ def filter_track(
 ) -> DataFrame:
     """DataComp-style attrition report: the curate_corpus funnel
     (gate -> normalized exact dedup -> MinHash-LSH near-dedup ->
-    containment drop -> n-gram decontamination, identical stage exprs
-    and parameters),
-    tracked per (group, quality band) instead of collapsed to global
-    funnel counts — the table that shows WHERE a source's data dies
+    containment drop -> n-gram decontamination: curate_corpus's own
+    stage list, via funnel_stage_tags), tracked per (group, quality
+    band) instead of collapsed to global funnel counts — the table
+    that shows WHERE a source's data dies
     and whether the gate and the dedup tiers hit the same quality
     strata. Bands are fixed-width quality_bp bins
     (band = min(qbp div band_width_bp, 10000 div band_width_bp - 1),
@@ -629,21 +582,10 @@ def filter_track(
         )
     )
     stages = funnel_stage_tags(
-        docs,
-        eval_df,
-        id_col=id_col,
-        text_col=text_col,
-        min_quality_bp=min_quality_bp,
-        min_tokens=min_tokens,
-        max_tokens=max_tokens,
-        near_dedup_threshold=near_dedup_threshold,
-        dedup_num_hashes=dedup_num_hashes,
-        dedup_band_size=dedup_band_size,
-        dedup_shingle_k=dedup_shingle_k,
-        containment_threshold_bp=containment_threshold_bp,
-        containment_size_ratio_bp=containment_size_ratio_bp,
-        containment_max_df=containment_max_df,
-        decontam_n=decontam_n,
+        docs, eval_df, id_col, text_col, min_quality_bp, min_tokens,
+        max_tokens, near_dedup_threshold, dedup_num_hashes, dedup_band_size,
+        dedup_shingle_k, containment_threshold_bp, containment_size_ratio_bp,
+        containment_max_df, decontam_n,
     ).withColumnRenamed("last_stage", "_last")
     flags = base.select(id_col, "_grp", "quality_band").join(
         stages, id_col, "left"
