@@ -357,6 +357,7 @@ def test_decontaminate_batch_stream_parity(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+        fn.release()
     assert got_ids == expected
 
 
@@ -722,6 +723,7 @@ def test_quality_gate_batch_stream_parity(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+        fn.release()
     assert got == expected
 
 

@@ -56,16 +56,6 @@ def test_decontaminate_removes_only_contaminated(spark):
     assert kept == {1, 3}
 
 
-def test_decontaminate_shuffle_fallback_matches_broadcast(spark):
-    a = contaminated_docs(
-        _df(spark, TRAIN), _df(spark, EVAL), n=4, broadcast_eval=True
-    ).collect()
-    b = contaminated_docs(
-        _df(spark, TRAIN), _df(spark, EVAL), n=4, broadcast_eval=False
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 # ---------------------------------------------------------------- semdedup
 
 

@@ -136,25 +136,15 @@ def test_scorecard_budget_debudgets_mirror_source(spark):
     }
 
 
-def test_settle_lineage_switch(spark):
-    """ADVICE r12: settle(lineage=True) (or SETTLE_LINEAGE=True) must
-    fall back to persist()-based boundaries — plan kept (no LogicalRDD
-    swap), rows correct — while the default stays the eager
-    localCheckpoint lineage cut."""
+def test_settle_cuts_the_plan(spark):
+    """settle() is an eager localCheckpoint: the settled frame's plan
+    is a LogicalRDD scan of the rows, not the plan it was built from."""
     from webloghunter_spark import session as S
 
     df = spark.range(10).withColumn("x", F.col("id") * 2)
-    try:
-        kept = S.settle(df, lineage=True)
-        assert "LogicalRDD" not in (
-            kept._jdf.queryExecution().analyzed().toString()
-        )
-        assert kept.count() == 10
-
+    with S.materialized_scope():
         cut = S.settle(df)
         assert "LogicalRDD" in (
             cut._jdf.queryExecution().analyzed().toString()
         )
         assert cut.count() == 10
-    finally:
-        S.release_materialized()

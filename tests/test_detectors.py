@@ -132,12 +132,15 @@ def test_tool_null_group_key_stamped(spark):
     assert all(r.ip is None for r in out)
 
 
-def test_tool_sparse_stamps_broadcast_flag(spark):
+def test_tool_scanner_requires_ordinal(spark):
+    # the stamps join back on `ordinal`; a frame without it must fail
+    # at build time, not stamp the wrong rows
+    import pytest
+
     rows = _tool_rows(["/.a", "/.b", "/.c"])
-    df = spark.createDataFrame(rows, TOOL_SCHEMA)
-    out = tool_scanner(df, TOOL_SIGS, sparse_stamps=True)
-    assert [r.tool for r in out.orderBy("ordinal").collect()] == ["T1", "T1", "T1"]
-    assert "BroadcastHashJoin" in out._jdf.queryExecution().executedPlan().toString()
+    df = spark.createDataFrame(rows, TOOL_SCHEMA).drop("ordinal")
+    with pytest.raises(ValueError, match="ordinal"):
+        tool_scanner(df, TOOL_SIGS)
 
 
 # --- EWMA control chart --------------------------------------------------------

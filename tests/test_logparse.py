@@ -167,16 +167,10 @@ def test_weblog_datasource_matches_native(spark, tmp_path):
     assert errors.count() == 1
 
 
-def test_apache_ssl_opt_in(spark):
+def test_apache_ssl_line_is_unparsed(spark):
+    # upstream parity: the reference's apache_ssl format is commented
+    # out (parser.py:15), so such a line is an error, not an entry
     ssl_line = ('[10/Oct/2024:13:55:36 +0000] 7.7.7.7 TLSv1.2 ECDHE-RSA-AES256 '
                 '"GET /secure.html HTTP/1.1" 512')
-    # disabled by default (upstream parity: format commented out)
     parsed, errors = parse_lines(_lines_df(spark, [ssl_line]))
     assert parsed.count() == 0 and errors.count() == 1
-    # opt-in: parses with assumed status 200 (ref parser.py:146-147)
-    parsed, errors = parse_lines(_lines_df(spark, [ssl_line]), enable_apache_ssl=True)
-    (r,) = parsed.collect()
-    assert r.log_format == "apache_ssl"
-    assert r.status == 200
-    assert (r.ip, r.request_uri, r.resp_size) == ("7.7.7.7", "/secure.html", 512)
-    assert r.extra.startswith("TLSv1.2")

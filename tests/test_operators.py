@@ -536,9 +536,9 @@ def test_blocked_fuzzy_join_matches_and_depth_guard(spark):
         block_len=16, max_dist=1, max_block_depth=None,
     ).collect()
     assert len(got) == 1
-    # probe-side guard: with broadcast_probes=False a degenerate PROBE
-    # key must trip too (a large shuffled probe frame goes quadratic
-    # from its side); the corpus here has distinct block prefixes
+    # broadcast probes are exempt from the guard (small-by-declaration
+    # side): a degenerate PROBE key against a corpus with distinct
+    # block prefixes runs
     ok_corpus = spark.createDataFrame(
         [(i, f"{i:016d} record") for i in range(20)], "cid long, name string"
     )
@@ -546,17 +546,9 @@ def test_blocked_fuzzy_join_matches_and_depth_guard(spark):
         [(i, f"Customer Record {i:04d}") for i in range(30)],
         "pid long, pname string",
     )
-    with pytest.raises(ValueError, match="probe block"):
-        blocked_fuzzy_join(
-            deep_probes, ok_corpus, "pname", "name",
-            block_len=16, max_dist=1, max_block_depth=10,
-            broadcast_probes=False,
-        )
-    # broadcast probes are exempt: small-by-declaration side
     blocked_fuzzy_join(
         deep_probes, ok_corpus, "pname", "name",
         block_len=16, max_dist=1, max_block_depth=10,
-        broadcast_probes=True,
     ).collect()
 
 
@@ -664,3 +656,19 @@ def test_blocked_fuzzy_join_same_column_name(spark):
     r = got[0]
     assert r.cid == 3 and r.dist == 1
     assert r.name_corpus == "Person Record 0003 name"
+
+
+def test_query_order_breaks_ties_by_ordinal(spark):
+    """(source, utc_timestamp) is not a total order: rows that tie on it
+    come back in input line order (`ordinal`), whatever order they were
+    fed in."""
+    from webloghunter_spark.operators.filters import apply_filters
+
+    rows = [("a.log", _ts("2024-01-01 00:00:00"), f"/p{o}", o)
+            for o in range(7, -1, -1)]
+    rows.append(("a.log", _ts("2023-12-31 23:59:59"), "/first", 9))
+    df = spark.createDataFrame(
+        rows, "source string, utc_timestamp timestamp, request_uri string, "
+        "ordinal long",
+    ).coalesce(1)
+    assert [r.ordinal for r in apply_filters(df).collect()] == [9] + list(range(8))

@@ -201,13 +201,13 @@ def test_settle_empty_frame_counts_zero(spark):
         assert S.settled_rows(S.settle(spark.range(10).filter("id < 0"))) == 0
 
 
-def test_settled_rows_lineage_mode_counts_without_hanging(spark):
-    """A lineage-mode settle() runs no job, so there is no observation
-    to read: settled_rows() must count instead of blocking."""
+def test_settled_rows_counts_an_unsettled_frame_without_hanging(spark):
+    """A frame settle() did not return has no observation to read:
+    settled_rows() must count instead of blocking."""
     df = spark.range(10).withColumn("x", F.col("id") * 2)
     got = []
     with S.materialized_scope():
-        kept = S.settle(df, lineage=True)
+        kept = S.materialize(df)
         t = threading.Thread(target=lambda: got.append(S.settled_rows(kept)),
                              daemon=True)
         t.start()

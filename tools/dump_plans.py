@@ -10,9 +10,12 @@ that must not move a plan. Queries that EXECUTE during construction
 (settled funnels, iterative driver loops) run their stages here; this
 is a plan dump, not a timing harness.
 
-Dumps that can differ between two runs of the same code:
-- contam_matrix: its collect_set + countDistinct aggregate plans an
-  `Expand` whose distinct-group order swaps between JVM runs;
+An `Expand` that feeds distinct aggregates lists its distinct groups
+in an order that follows expression-id hashes, so it swaps between JVM
+runs (contam_matrix's two count-distincts); `normalize` puts the
+groups in name order and renumbers their group ids to match.
+
+Dumps that can still differ between two runs of the same code:
 - perplexity_filter: it executes while it is built, so its dump is an
   AQE final plan whose join sides follow runtime sizes;
 - dataset_diff: its two funnel replays are built on two driver
@@ -40,9 +43,62 @@ _RUN_SPECIFIC = [
 ]
 
 
+_EXPAND_ARGS = re.compile(r"^Arguments: \[(\[.*\])\], \[([^\[\]]*)\]$", re.M)
+_ITEM = re.compile(r"^(?:[\w#]+|null|\d+)$")
+
+
+def _canonical_expand(plan: str, match: re.Match) -> str:
+    """`plan` with one distinct-aggregate Expand's groups in name order:
+    its projection lists sorted by their group columns, the group
+    columns of its output (and of the nodes above that repeat them) in
+    that order, and `gid = k` filters renumbered to match. Returned
+    unchanged for any other Expand (a rollup's grouping id is a bit
+    mask, not a position) or unless every item is a plain column, null
+    or integer."""
+    projs = [p.split(", ") for p in match.group(1)[1:-1].split("], [")]
+    out = match.group(2).split(", ")
+    gid = out[-1]
+    if gid != "gid#" or any(len(p) != len(out) for p in projs) or not all(
+        _ITEM.match(i) for p in projs + [out] for i in p
+    ):
+        return plan
+    # group columns: null in some projections, set in others
+    pos = [i for i in range(len(out) - 1) if len({p[i] == "null" for p in projs}) == 2]
+    ordered = sorted(projs, key=lambda p: [p[i] for i in pos if p[i] != "null"])
+    cols = list(dict.fromkeys(p[i] for p in ordered for i in pos if p[i] != "null"))
+    if not pos or len(cols) != len(pos):
+        return plan
+    col_at = dict(zip(pos, cols))
+    renumber = dict(zip((p[-1] for p in ordered), sorted((p[-1] for p in projs), key=int)))
+
+    def rebuild(p: list[str]) -> str:
+        live = {p[i] for i in pos}
+        items = [(col_at[i] if col_at[i] in live else "null") if i in col_at else c
+                 for i, c in enumerate(p[:-1])]
+        return "[" + ", ".join(items + [renumber[p[-1]]]) + "]"
+
+    new_out = [col_at.get(i, c) for i, c in enumerate(out)]
+    args = "Arguments: [{}], [{}]".format(
+        ", ".join(rebuild(p) for p in ordered), ", ".join(new_out)
+    )
+    # Nodes above the Expand repeat its group columns next to the gid
+    # column, and filter on `gid = k`.
+    tail = plan[match.end():].replace(
+        ", ".join([out[i] for i in pos] + [gid]), ", ".join(cols + [gid])
+    )
+    tail = re.sub(
+        rf"\({re.escape(gid)} = (\d+)\)",
+        lambda m: f"({gid} = {renumber.get(m.group(1), m.group(1))})",
+        tail,
+    )
+    return plan[: match.start()] + args + tail
+
+
 def normalize(plan: str) -> str:
     for pattern, repl in _RUN_SPECIFIC:
         plan = pattern.sub(repl, plan)
+    for match in reversed(list(_EXPAND_ARGS.finditer(plan))):
+        plan = _canonical_expand(plan, match)
     return plan
 
 

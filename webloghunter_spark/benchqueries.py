@@ -1157,10 +1157,9 @@ def q_media_sniff(spark, sf_dir):
         .otherwise(F.concat(F.lit(b"\x00"), body))
     )
     media = docs.select("doc_id", payload.alias("payload"))
-    # sniff_only: the oracle hardcodes the HEADER constants; a full PIL
-    # decode (when installed) could read the trailing text bytes as
-    # image data and disagree — the sniffer depends on headers alone
-    out = decode_media(media, "payload", sniff_only=True)
+    # the oracle hardcodes the HEADER constants; the sniffer depends on
+    # headers alone
+    out = decode_media(media, "payload")
     # unrecognized payloads -> -1 sentinel, not NULL: NaN-bearing float
     # columns are a canonicalization hazard (NaN != NaN breaks multiset
     # and sort-based compares on both the local mimic and the driver)

@@ -238,18 +238,15 @@ def tool_scanner(
     df: DataFrame,
     signatures: list[dict] | None = None,
     ts_col: str = "utc_timestamp",
-    sparse_stamps: bool = False,
 ) -> DataFrame:
     """Stamp (tool, tool_name, tool_desc) onto the full frame.
 
-    `sparse_stamps=True` force-broadcasts the stamp table onto the
-    probe side — use when the caller KNOWS detections are rare and
-    wants to skip the exchange even below AQE's visibility (e.g. a
-    pre-sized production job). The default leaves the join strategy to
-    the optimizer: AQE sees the stamp table's actual post-shuffle size
-    and converts to a broadcast join at runtime when it is small, but
-    will not OOM the driver on a pathological signature family that
-    stamps half the table."""
+    The stamps join back on the frame's `ordinal` (globally unique in
+    parsed-log frames), so a frame without one is refused. The join
+    strategy is left to the optimizer: AQE sees the stamp table's
+    actual post-shuffle size and converts to a broadcast join at
+    runtime when it is small, but will not OOM the driver on a
+    pathological signature family that stamps half the table."""
     signatures = signatures if signatures is not None else DEFAULT_TOOL_SIGNATURES
     _, kw_exprs = _keyword_exprs(signatures)
     if not kw_exprs:
@@ -257,36 +254,23 @@ def tool_scanner(
         for c in _STAMP_COLS:
             out = out.withColumn(c, F.lit(""))
         return out
+    if "ordinal" not in df.columns:
+        raise ValueError(
+            "tool_scanner needs an `ordinal` column (the row key its "
+            f"stamps join back on); got columns {df.columns}"
+        )
 
-    # Row identity for the stamp join-back: `ordinal` when the caller
-    # provides one (globally unique in parsed-log frames). Otherwise a
-    # synthetic id — which MUST be materialized: the stamps branch and
-    # the probe branch would otherwise evaluate
-    # monotonically_increasing_id independently, and shuffle-read row
-    # order (hence the assigned ids) is not deterministic for inputs
-    # with a shuffle in their lineage.
-    if "ordinal" in df.columns:
-        keyed, key = df, "ordinal"
-    else:
-        from webloghunter_spark.session import materialize
-
-        keyed = materialize(df.withColumn("_row_key", F.monotonically_increasing_id()))
-        key = "_row_key"
-
-    stamps = tool_scan_detections(keyed, signatures, ts_col=ts_col, key=key)
-    if sparse_stamps:
-        stamps = F.broadcast(stamps)
+    stamps = tool_scan_detections(df, signatures, ts_col=ts_col)
     # eqNullSafe on the group columns: the kernel groups null keys
     # null-safely (a null-source/ip/cluster group scans as one group),
     # so the join-back must not drop its stamps via null != null. The
-    # row key itself is never null (ordinal / generated id).
-    cond = [keyed[c].eqNullSafe(stamps[c]) for c in GROUP_COLS]
-    cond.append(keyed[key] == stamps[key])
-    joined = keyed.join(stamps, on=cond, how="left").select(
-        keyed["*"],
+    # row key itself is never null.
+    cond = [df[c].eqNullSafe(stamps[c]) for c in GROUP_COLS]
+    cond.append(df["ordinal"] == stamps["ordinal"])
+    return df.join(stamps, on=cond, how="left").select(
+        df["*"],
         *[
             F.coalesce(stamps[c], F.lit("")).alias(c)
             for c in _STAMP_COLS
         ],
     )
-    return joined.drop("_row_key") if key == "_row_key" else joined

@@ -60,9 +60,6 @@ class EngineConfig:
     session_gap_seconds: int = 60
     cluster_off: bool = False
     time_offset: int = 0
-    burst_min_requests: int = 100
-    burst_max_gap_seconds: float = 1.0
-    burst_risk_score: float = 95.0
     # Filter-stage defaults the reference seeds from config.yaml via its
     # argparse defaults (triage.py:164,191): static extensions hidden
     # from output, and authorized-scanner networks dropped by default.
@@ -92,12 +89,7 @@ def score(df: DataFrame, config: EngineConfig | None = None) -> DataFrame:
     # windows, uri_risk UDF, rule engine): the two detectors below each
     # fan into two plan branches (see the module docstring).
     df = materialize(df)
-    df = burst_success_detector(
-        df,
-        risk_score=cfg.burst_risk_score,
-        min_requests=cfg.burst_min_requests,
-        max_gap_seconds=cfg.burst_max_gap_seconds,
-    )
+    df = burst_success_detector(df)
     df = tool_scanner(df, cfg.tool_signatures)
     return df
 

@@ -2,18 +2,12 @@
 with typed metadata, processed via Arrow-batched mapInPandas.
 
 The Spark-side plumbing — schemas, partitioning, UDF signatures, batch
-shapes, fan-out — is real and tested. Decoding has three tiers:
-
-1. `use_real_codecs=False` (default): `_decode_stub` derives
-   deterministic fake dimensions from the payload hash — the
-   benchmarkable, dependency-free path.
-2. `use_real_codecs=True`, PIL absent: a pure-stdlib header sniffer
-   reads REAL width/height/channels from PNG/GIF/BMP/JPEG payloads
-   (undecodable payloads yield NULL dims). Audio WAVs decode with the
-   stdlib `wave` module via `decode_audio` — also real.
-3. `use_real_codecs=True`, PIL importable: full PIL decode (any
-   format PIL knows, plus real `resize_media`). The import is
-   guarded; nothing here requires PIL at import time.
+shapes, fan-out — is real and tested. `decode_media` reads REAL
+width/height/channels from PNG/GIF/BMP/JPEG headers with a pure-stdlib
+sniffer (undecodable payloads yield NULL dims), so its result depends
+on the header bytes alone. Audio WAVs decode with the stdlib `wave`
+module via `decode_audio` — also real. `resize_media` is a byte-tiling
+stub; no codec library is needed.
 
 Design for 100 TB of media:
 - payloads stay in `binary` columns (parquet keeps them out of
@@ -34,14 +28,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # optional dependency: full image decode/resize
-    from PIL import Image as _PILImage
-
-    HAS_PIL = True
-except Exception:  # pragma: no cover - environment-dependent
-    _PILImage = None
-    HAS_PIL = False
 
 DECODED_SCHEMA = "width int, height int, channels int"
 
@@ -84,21 +70,6 @@ def sniff_dimensions(b: bytes) -> tuple[int, int, int] | None:
     return None
 
 
-def _decode_real(b: bytes) -> tuple[int | None, int | None, int | None]:
-    """PIL decode when available, stdlib header sniff otherwise;
-    (None, None, None) for undecodable payloads."""
-    if HAS_PIL:
-        import io
-
-        try:
-            with _PILImage.open(io.BytesIO(b)) as im:
-                return int(im.width), int(im.height), len(im.getbands())
-        except Exception:
-            pass  # fall through to the sniffer (e.g. truncated file)
-    dims = sniff_dimensions(b)
-    return dims if dims is not None else (None, None, None)
-
-
 def with_media_metadata(
     df: DataFrame, payload_col: str = "payload", mime: str = "application/octet-stream"
 ) -> DataFrame:
@@ -112,50 +83,21 @@ def with_media_metadata(
     return df.withColumn("media_meta", meta)
 
 
-def _decode_stub(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic fake decode: dimensions derived from content hash.
-
-    REAL IMPLEMENTATION GOES HERE (PIL.Image.open(BytesIO(payload))).
-    """
-    h = hashlib.md5(payload).digest()
-    return 64 + h[0] % 192, 64 + h[1] % 192, 1 + h[2] % 3
-
-
-def decode_media(
-    df: DataFrame,
-    payload_col: str = "payload",
-    use_real_codecs: bool = False,
-    sniff_only: bool = False,
-) -> DataFrame:
-    """Add (width, height, channels) per media row via mapInPandas.
-
-    use_real_codecs=True decodes REAL dimensions: full PIL decode when
-    PIL is importable, else the stdlib header sniffer (PNG/GIF/BMP/
-    JPEG); unrecognized payloads get NULL dims. False keeps the
-    deterministic hash-derived stub (benchmarking without fixtures).
-    sniff_only=True forces the stdlib header sniffer even when PIL is
-    importable — results then depend only on the header bytes, never
-    on which codec library happens to be installed (the property an
-    external oracle needs: PIL can e.g. parse a truncated GIF to mode
-    'P'/1-channel where the sniffer reports the descriptor's 3)."""
-    if sniff_only:
-        decode = lambda b: (
-            lambda d: d if d is not None else (None, None, None)
-        )(sniff_dimensions(b))
-    elif use_real_codecs:
-        decode = _decode_real
-    else:
-        decode = _decode_stub
+def decode_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """Add (width, height, channels) per media row via mapInPandas,
+    read by `sniff_dimensions` from the payload's header; unrecognized
+    payloads get NULL dims."""
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
     ) + f", {DECODED_SCHEMA}"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            dims = pdf[payload_col].map(lambda b: decode(bytes(b)))
+            dims = pdf[payload_col].map(
+                lambda b: sniff_dimensions(bytes(b)) or (None, None, None)
+            )
             pdf = pdf.copy()
-            # Int32 (capital-I): nullable — real decode yields None for
-            # undecodable payloads
+            # Int32 (capital-I): nullable — undecodable payloads yield None
             pdf["width"] = dims.map(lambda d: d[0]).astype("Int32")
             pdf["height"] = dims.map(lambda d: d[1]).astype("Int32")
             pdf["channels"] = dims.map(lambda d: d[2]).astype("Int32")
@@ -240,23 +182,14 @@ def resize_media(
     target_w: int,
     target_h: int,
     payload_col: str = "payload",
-    use_real_codecs: bool = False,
 ) -> DataFrame:
     """Resize each media payload to (target_w, target_h) via mapInPandas.
 
-    use_real_codecs=True requires PIL (import-guarded): decode, LANCZOS
-    resize, re-encode as PNG; payloads PIL cannot decode pass through
-    as NULL. Without PIL it raises NotImplementedError. The default
-    stub truncates/tiles the payload bytes to w*h — keeps the Spark
-    plumbing (binary-in/binary-out schema, metadata update, Arrow
-    batching) exercised with no image fixtures. Either way this is the
-    real 100 TB shape: one Python round-trip per batch, payloads never
-    leave the executor as rows."""
-    if use_real_codecs and not HAS_PIL:
-        raise NotImplementedError(
-            "resize_media(use_real_codecs=True) requires PIL, which is not "
-            "importable in this environment; install pillow or use the stub"
-        )
+    A stub: it truncates/tiles the payload bytes to w*h — keeps the
+    Spark plumbing (binary-in/binary-out schema, metadata update, Arrow
+    batching) exercised with no image fixtures. This is the real 100 TB
+    shape: one Python round-trip per batch, payloads never leave the
+    executor as rows."""
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}"
         for f in df.schema.fields
@@ -264,31 +197,15 @@ def resize_media(
     ) + f", `{payload_col}` binary, width int, height int"
     n_out = max(target_w * target_h, 1)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    def scale(b) -> bytes:
+        raw = bytes(b) or b"\x00"
+        reps = (n_out + len(raw) - 1) // len(raw)
+        return (raw * reps)[:n_out]
 
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             pdf = pdf.copy()
-
-            def scale_stub(b) -> bytes:
-                raw = bytes(b)
-                if not raw:
-                    raw = b"\x00"
-                reps = (n_out + len(raw) - 1) // len(raw)
-                return (raw * reps)[:n_out]
-
-            def scale_real(b):
-                try:
-                    with _PILImage.open(io.BytesIO(bytes(b))) as im:
-                        out = io.BytesIO()
-                        im.resize((target_w, target_h)).save(out, format="PNG")
-                        return out.getvalue()
-                except Exception:
-                    return None
-
-            pdf[payload_col] = pdf[payload_col].map(
-                scale_real if use_real_codecs else scale_stub
-            )
+            pdf[payload_col] = pdf[payload_col].map(scale)
             pdf["width"] = target_w
             pdf["height"] = target_h
             yield pdf

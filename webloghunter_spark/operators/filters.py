@@ -130,5 +130,9 @@ def apply_filters(
         )
 
     if order_result:
-        out = out.orderBy("source", ts_col)
+        # `ordinal` (input line order) breaks (source, timestamp) ties,
+        # so tied rows and the session-boundary coloring that follows
+        # them cannot reorder when the collect plan changes.
+        tiebreak = ["ordinal"] if "ordinal" in out.columns else []
+        out = out.orderBy("source", ts_col, *tiebreak)
     return out

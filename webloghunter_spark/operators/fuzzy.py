@@ -33,7 +33,6 @@ def blocked_fuzzy_join(
     block_len: int = 16,
     max_dist: int = 1,
     max_block_depth: int | None = 10_000,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """Join probe rows to corpus rows with
     levenshtein(probe, corpus) <= max_dist, blocked on the first
@@ -45,21 +44,19 @@ def blocked_fuzzy_join(
 
     `max_block_depth` guards the quadratic-within-block cost: if any
     block holds more rows, raise with the worst offenders instead of
-    launching a join that is Σ|block|² in the degenerate key. The
-    corpus side is always audited; the probe side too when
-    `broadcast_probes=False` (a broadcast probe frame is small by
+    launching a join that is Σ|block|² in the degenerate key. Only the
+    corpus side is audited: the probe frame is broadcast, small by
     declaration, so Σ|probe-block|x|corpus-block| is already bounded
-    by |probes| x max_block_depth — but a large shuffled probe frame
-    with a degenerate key would go quadratic from ITS side). Each
-    check is one combinable aggregate + a 5-row collect — O(scan),
-    never O(pairs). Pass None to skip (only when the keys are
-    already audited)."""
+    by |probes| x max_block_depth. The check is one combinable
+    aggregate + a 5-row collect — O(scan), never O(pairs). Pass None
+    to skip (only when the keys are already audited)."""
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
 
-    def _depth_guard(df: DataFrame, col: str, side: str) -> None:
+    if max_block_depth is not None:
+        block = F.substring(corpus_col, 1, block_len).alias("_bk")
         deep = (
-            df.groupBy(F.substring(col, 1, block_len).alias("_bk"))
+            corpus.groupBy(block)
             .agg(F.count(F.lit(1)).alias("_n"))
             .filter(F.col("_n") > max_block_depth)
             .orderBy(F.col("_n").desc())
@@ -69,7 +66,7 @@ def blocked_fuzzy_join(
         if deep:
             worst = ", ".join(f"{r._bk!r}x{r._n}" for r in deep)
             raise ValueError(
-                f"blocked_fuzzy_join: {side} block(s) deeper than "
+                f"blocked_fuzzy_join: corpus block(s) deeper than "
                 f"{max_block_depth} — the block key does not "
                 f"discriminate and the within-block join would be "
                 f"quadratic (worst: {worst}). Use a longer/more "
@@ -77,18 +74,13 @@ def blocked_fuzzy_join(
                 f"deliberately."
             )
 
-    if max_block_depth is not None:
-        _depth_guard(corpus, corpus_col, "corpus")
-        if not broadcast_probes:
-            _depth_guard(probes, probe_col, "probe")
     right = corpus
     right_col = corpus_col
     if probe_col == corpus_col:
         right_col = f"{corpus_col}_corpus"
         right = corpus.withColumnRenamed(corpus_col, right_col)
-    left = F.broadcast(probes) if broadcast_probes else probes
     return (
-        left.join(
+        F.broadcast(probes).join(
             right,
             (
                 F.substring(probe_col, 1, block_len)

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from webloghunter_spark.session import materialize
@@ -46,12 +46,10 @@ def session_windows(
     group_cols: Sequence[str] = ("source", "ip"),
     ts_col: str = "utc_timestamp",
     threshold: int = 60,
-    epoch_expr: Column | None = None,
 ) -> DataFrame:
     """Add `_local`, each row's session number within its group."""
     gcols = list(group_cols)
-    epoch = epoch_expr if epoch_expr is not None else F.unix_timestamp(F.col(ts_col))
-    df = df.withColumn("_epoch", epoch.cast("long"))
+    df = df.withColumn("_epoch", F.unix_timestamp(F.col(ts_col)).cast("long"))
 
     w = Window.partitionBy(*gcols).orderBy("_epoch")
     # diff().fillna(0) < threshold: null gap (first row) => same session.
@@ -129,15 +127,14 @@ def sessionize(
     ts_col: str = "utc_timestamp",
     threshold: int = 60,
     cluster_col: str = "cluster",
-    epoch_expr: Column | None = None,
 ) -> DataFrame:
     """Add a dense global session id column (`cluster_col`).
 
-    `epoch_expr` may override how epoch seconds are derived from `ts_col`
-    (the reference truncates ns -> s via integer division, i.e. floor).
-    The windowed rows are persisted with `materialize()` so the group
+    Epoch seconds are `unix_timestamp(ts_col)`, which floors sub-second
+    parts as the reference's ns -> s integer division does. The
+    windowed rows are persisted with `materialize()` so the group
     table and the join-back share one window pass; release them with
     `release_materialized()` / `materialized_scope()` after the action.
     """
-    windowed = session_windows(df, group_cols, ts_col, threshold, epoch_expr)
+    windowed = session_windows(df, group_cols, ts_col, threshold)
     return number_sessions(materialize(windowed), group_cols, cluster_col)

@@ -17,10 +17,6 @@ Scale shape (the only one that survives 100 TB of train text):
   the corpus, so the shuffle is bounded by contamination volume, not
   corpus volume.
 
-The eval shingle set can exceed broadcast limits for giant eval suites;
-`broadcast_eval=False` falls back to a shuffle semi-join (AQE still
-promotes it back to broadcast if the stats allow).
-
 No counterpart in the reference repo (it has no corpus tooling);
 tokenization matches functions/text.py:tokens_expr so fingerprints,
 jaccard and decontamination all agree on token boundaries.
@@ -66,7 +62,6 @@ def contaminated_docs(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    broadcast_eval: bool = True,
     eval_grams: DataFrame | None = None,
 ) -> DataFrame:
     """(id_col, n_hits) for every train document sharing >=1 n-gram
@@ -83,11 +78,8 @@ def contaminated_docs(
         if eval_df is None:
             raise ValueError("need eval_df or eval_grams")
         eval_grams = eval_shingle_set(eval_df, text_col, n)
-    grams = eval_grams
-    if broadcast_eval:
-        grams = F.broadcast(grams)
     hits = _doc_shingles(train, id_col, text_col, n).join(
-        grams, "_gram", "inner"
+        F.broadcast(eval_grams), "_gram", "inner"
     )
     return hits.groupBy(id_col).agg(F.count("*").alias("n_hits"))
 
@@ -98,14 +90,13 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    broadcast_eval: bool = True,
     eval_grams: DataFrame | None = None,
 ) -> DataFrame:
     """Train corpus with contaminated documents removed (left-anti join
     against the contaminated id list — the same bounded-shuffle shape
     as near_dedup's drop list)."""
     bad = contaminated_docs(
-        train, eval_df, id_col, text_col, n, broadcast_eval, eval_grams
+        train, eval_df, id_col, text_col, n, eval_grams
     ).select(id_col)
     return train.join(bad, id_col, "left_anti")
 
@@ -116,7 +107,6 @@ def contamination_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    broadcast_eval: bool = True,
     eval_grams: DataFrame | None = None,
 ) -> DataFrame:
     """(id, n_pos_hits, max_run) for every contaminated train doc:
@@ -139,12 +129,11 @@ def contamination_spans(
         if eval_df is None:
             raise ValueError("need eval_df or eval_grams")
         eval_grams = eval_shingle_set(eval_df, text_col, n)
-    grams = F.broadcast(eval_grams) if broadcast_eval else eval_grams
     pos = train.select(
         F.col(id_col),
         F.posexplode(shingles_expr(text_col, n)).alias("_pos", "_gram"),
     )
-    hits = pos.join(grams, "_gram", "left_semi")
+    hits = pos.join(F.broadcast(eval_grams), "_gram", "left_semi")
     w = Window.partitionBy(id_col).orderBy("_pos")
     runs = hits.withColumn("_grp", F.col("_pos") - F.row_number().over(w))
     return (
@@ -486,8 +475,6 @@ def contamination_matrix(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    broadcast_eval: bool = True,
-    eval_grams_tagged: DataFrame | None = None,
 ) -> DataFrame:
     """Per-benchmark contamination report — the release-notes table a
     model card needs: for EVERY eval set at once, how many of its
@@ -507,9 +494,7 @@ def contamination_matrix(
     """
     if not eval_sets:
         raise ValueError("eval_sets must be non-empty")
-    if eval_grams_tagged is None:
-        eval_grams_tagged = tagged_eval_grams(eval_sets, text_col, n)
-    tagged = eval_grams_tagged
+    tagged = tagged_eval_grams(eval_sets, text_col, n)
     # K-row spine from the dict keys so a benchmark whose docs yield
     # zero grams still reports (n_eval_grams=0, coverage NULL) instead
     # of silently vanishing from the matrix.
@@ -526,10 +511,9 @@ def contamination_matrix(
         "eval_set",
         F.coalesce("n_eval_grams", F.lit(0)).alias("n_eval_grams"),
     )
-    probe = F.broadcast(tagged) if broadcast_eval else tagged
     hits = (
         _doc_shingles(train, id_col, text_col, n)
-        .join(probe, "_gram", "inner")
+        .join(F.broadcast(tagged), "_gram", "inner")
         .groupBy("eval_set")
         .agg(
             F.countDistinct("_gram").alias("n_hit_grams"),

@@ -1007,9 +1007,8 @@ def connected_components(
             )
         )
         # eager localCheckpoint: materializes AND truncates the plan
-        # (persist would leave a ~3^rounds logical tree — see docstring),
-        # whatever SETTLE_LINEAGE says
-        new_cc = settle(jumped, lineage=False)
+        # (persist would leave a ~3^rounds logical tree — see docstring)
+        new_cc = settle(jumped)
         changed = new_cc.filter(F.col("comp") != F.col("_prev")).limit(1).count()
         drop_materialized(cc)
         cc = new_cc

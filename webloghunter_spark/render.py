@@ -59,6 +59,8 @@ _COLUMN_CONFIG: dict[str, tuple[int, bool, bool]] = {
     "cluster": (4, False, False),
     "tool": (6, False, False),
 }
+# width of a column DISPLAY_CONFIG does not list
+_DEFAULT_WIDTH = 60
 
 # Cells colored blue-bold on a session-boundary row
 # (dataframe.py:543-544).
@@ -132,7 +134,6 @@ def render_table(
     df: DataFrame,
     max_rows: int = 1000,
     color: bool = True,
-    truncate_width: int = 60,
     cluster_enabled: bool | None = None,
 ) -> str:
     """K1: collect a bounded result and format a fixed-width table.
@@ -142,7 +143,7 @@ def render_table(
       are dropped; the one bounded collect decides most of them, and
       only the rest cost an aggregate over `df`;
     - per-column widths from DISPLAY_CONFIG; unknown columns use
-      `truncate_width`;
+      `_DEFAULT_WIDTH`;
     - rows with risk_score >= 70 WRAP their long text columns
       (method_path, user_agent, referrer, rule_applied) onto multiple
       lines instead of truncating (OUTPUT_RISK_WRAP, dataframe.py:474-479);
@@ -173,7 +174,7 @@ def render_table(
                 pass
         cell_lines = []
         for c in cols:
-            width, wrap_hi, rev = _COLUMN_CONFIG.get(c, (truncate_width, False, False))
+            width, wrap_hi, rev = _COLUMN_CONFIG.get(c, (_DEFAULT_WIDTH, False, False))
             val = str(r[c])
             if wrap_hi and risk is not None and risk >= RISK_WRAP_THRESHOLD:
                 cell_lines.append(textwrap.wrap(val, width=width) or [""])

@@ -69,15 +69,7 @@ def materialize(df: DataFrame) -> DataFrame:
     return df
 
 
-# Module switch for settle(): True -> persist()-based stage boundaries
-# (lineage kept, recomputable after executor loss — for multi-executor
-# cluster deployments that prefer recoverability over the driver-side
-# planning cut). Default False = eager localCheckpoint (the measured
-# 340x per-action planning win on deep funnels; see settle()).
-SETTLE_LINEAGE = False
-
-
-def settle(df: DataFrame, lineage: bool | None = None) -> DataFrame:
+def settle(df: DataFrame) -> DataFrame:
     """Stage-boundary materialization + LINEAGE CUT for deep pipelines.
 
     materialize()/persist() caches rows but KEEPS the nested logical
@@ -102,21 +94,9 @@ def settle(df: DataFrame, lineage: bool | None = None) -> DataFrame:
     The frame is registered in the current run, whose release frees
     checkpointed RDDs too (see _release).
 
-    `lineage` (default: module-level SETTLE_LINEAGE) opts a call — or,
-    via the module switch, a whole deployment — back into persist()'d
-    boundaries: rows cached but the logical plan kept, so an executor
-    loss recomputes from lineage instead of failing the job. The cost
-    is the multiplicative per-action driver planning this function
-    exists to cut; prefer it only where executor churn is expected and
-    funnels are shallow.
-
-    On the checkpoint path the row count rides along: the checkpoint
-    job observes count(1), and settled_rows() returns it without a
-    second job.
+    The row count rides along: the checkpoint job observes count(1),
+    and settled_rows() returns it without a second job.
     """
-    use_lineage = SETTLE_LINEAGE if lineage is None else lineage
-    if use_lineage:
-        return materialize(df)  # lazy persist: lineage-recoverable
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(
         eager=True
@@ -130,12 +110,11 @@ def settled_rows(df: DataFrame) -> int:
     """Row count of a settle()d frame, read from its checkpoint job's
     observation instead of a separate count() job.
 
-    Any other frame — a lineage-mode settle() (persist() is lazy, so
-    no job has run to observe), or one settle() did not return — is
-    counted with df.count(). Observation.get blocks until a job delivers the
-    metric, so it is only read after a bounded wait for delivery;
-    should the metric not arrive within _OBSERVATION_WAIT_S, the
-    count() is paid instead of blocking."""
+    Any other frame — one settle() did not return, or one released
+    since — is counted with df.count(). Observation.get blocks until a
+    job delivers the metric, so it is only read after a bounded wait
+    for delivery; should the metric not arrive within
+    _OBSERVATION_WAIT_S, the count() is paid instead of blocking."""
     obs = _SETTLED_ROWS.get(df)
     if obs is not None:
         jvm = df.sparkSession._jvm

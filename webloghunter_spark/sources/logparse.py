@@ -84,15 +84,9 @@ LOG_FORMATS: list[tuple[str, str, dict[str, int]]] = [
     ),
 ]
 
-# apache_ssl is COMMENTED OUT in the reference's format list
-# (parser.py:15) but its special case — no status group, assume 200
-# (parser.py:146-147) — is kept; here it is opt-in via
-# parse_lines(..., enable_apache_ssl=True), preserving default parity.
-APACHE_SSL_FORMAT: tuple[str, str, dict[str, int]] = (
-    "apache_ssl",
-    r'^\[(\d{2}/[A-Za-z]{3}/\d{4}:\d{2}:\d{2}:\d{2}\s[+-]\d{4})\] (\S+) ([^"]+) "([A-Z]+) ([^ ]+) HTTP/[0-9.]+" (\d+|-)$',
-    {"timestamp": 1, "ip": 2, "extra": 3, "method": 4, "request_uri": 5, "resp_size": 6},
-)
+# apache_ssl, the reference's ninth format, is COMMENTED OUT in its
+# format list (parser.py:15), so its lines go to the errors frame here
+# too; its status-200 special case (parser.py:146-147) is unreachable.
 
 GREP_PREFIX_RE = r"^[\w./-]+:\s*"
 TRAILING_JUNK_RE = r'(".*?"|-" ".*?"|-")$.*'
@@ -162,14 +156,10 @@ def _arr_name(fmt: str) -> str:
     return f"_g_{fmt}"
 
 
-def _formats(ssl: bool) -> list[tuple[str, str, dict[str, int]]]:
-    return list(LOG_FORMATS) + ([APACHE_SSL_FORMAT] if ssl else [])
-
-
 @lru_cache(maxsize=None)
-def _format_col(ssl: bool = False) -> Column:
+def _format_col() -> Column:
     fmt = None
-    for name, _, _ in _formats(ssl):
+    for name, _, _ in LOG_FORMATS:
         cond = F.size(F.col(_arr_name(name))) > 1
         fmt = F.when(cond, name) if fmt is None else fmt.when(cond, name)
     return fmt.otherwise(F.lit(None))
@@ -179,9 +169,9 @@ def _format_col(ssl: bool = False) -> Column:
 # so the per-field CASE trees (hundreds of py4j round-trips to build) are
 # constructed once per process and reused across plans.
 @lru_cache(maxsize=None)
-def _field_col(field: str, ssl: bool = False) -> Column:
+def _field_col(field: str) -> Column:
     expr = None
-    for name, pattern, groups in _formats(ssl):
+    for name, pattern, groups in LOG_FORMATS:
         if field not in groups:
             continue
         val = F.try_element_at(F.col(_arr_name(name)), F.lit(groups[field]))
@@ -192,7 +182,7 @@ def _field_col(field: str, ssl: bool = False) -> Column:
     return expr.otherwise(F.lit(None))
 
 
-def parse_rows(lines: DataFrame, enable_apache_ssl: bool = False) -> DataFrame:
+def parse_rows(lines: DataFrame) -> DataFrame:
     """(value, source, ordinal) -> one frame of every non-skipped line.
 
     Parsed lines carry the `parse_lines` entry columns; a line no format
@@ -200,7 +190,6 @@ def parse_rows(lines: DataFrame, enable_apache_ssl: bool = False) -> DataFrame:
     parsed lines). `split_rows` turns the frame into (entries, errors),
     so a persisted frame gives both from one parse.
     """
-    ssl = enable_apache_ssl
     stripped = F.regexp_replace(F.col("value"), GREP_PREFIX_RE, "")
     line = F.when(stripped != "", stripped).otherwise(F.col("value"))
     # \x01 is the group-join separator used by _format_arr: a raw line
@@ -219,30 +208,24 @@ def parse_rows(lines: DataFrame, enable_apache_ssl: bool = False) -> DataFrame:
     # each format regex runs exactly once per line.
     candidates = candidates.withColumns(
         {_arr_name(name): _format_arr(pattern, max(groups.values()))
-         for name, pattern, groups in _formats(ssl)}
-    ).withColumn("_format", _format_col(ssl))
+         for name, pattern, groups in LOG_FORMATS}
+    ).withColumn("_format", _format_col())
 
-    status_raw = _field_col("status", ssl)
-    resp_raw = _field_col("resp_size", ssl)
-    # non-digit status -> 0 (parser.py:149-150); apache_ssl has no
-    # status group and is assumed 200 (parser.py:146-147)
-    status = F.coalesce(status_raw.try_cast("int"), F.lit(0))
-    if ssl:
-        status = F.when(F.col("_format") == "apache_ssl", F.lit(200)).otherwise(status)
     return candidates.select(
-        F.coalesce(_field_col("ip", ssl), F.lit("")).alias("ip"),
-        F.coalesce(_field_col("timestamp", ssl), F.lit("")).alias("timestamp"),
+        F.coalesce(_field_col("ip"), F.lit("")).alias("ip"),
+        F.coalesce(_field_col("timestamp"), F.lit("")).alias("timestamp"),
         # missing/empty method -> 'INVALID' (parser.py:153)
-        F.coalesce(F.nullif(_field_col("method", ssl), F.lit("")), F.lit("INVALID")).alias("method"),
-        F.coalesce(_field_col("request_uri", ssl), F.lit("")).alias("request_uri"),
-        status.alias("status"),
+        F.coalesce(F.nullif(_field_col("method"), F.lit("")), F.lit("INVALID")).alias("method"),
+        F.coalesce(_field_col("request_uri"), F.lit("")).alias("request_uri"),
+        # non-digit status -> 0 (parser.py:149-150)
+        F.coalesce(_field_col("status").try_cast("int"), F.lit(0)).alias("status"),
         # '-' or missing resp_size -> 0 (parser.py:151-152)
-        F.coalesce(resp_raw.try_cast("long"), F.lit(0)).alias("resp_size"),
+        F.coalesce(_field_col("resp_size").try_cast("long"), F.lit(0)).alias("resp_size"),
         # empty referrer/user_agent -> '-' (parser.py:143-144)
-        F.coalesce(F.nullif(_field_col("referrer", ssl), F.lit("")), F.lit("-")).alias("referrer"),
-        F.coalesce(F.nullif(_field_col("user_agent", ssl), F.lit("")), F.lit("-")).alias("user_agent"),
-        F.coalesce(_field_col("extra", ssl), F.lit("")).alias("extra"),
-        F.coalesce(_field_col("time_taken", ssl).try_cast("int"), F.lit(0)).alias("time_taken"),
+        F.coalesce(F.nullif(_field_col("referrer"), F.lit("")), F.lit("-")).alias("referrer"),
+        F.coalesce(F.nullif(_field_col("user_agent"), F.lit("")), F.lit("-")).alias("user_agent"),
+        F.coalesce(_field_col("extra"), F.lit("")).alias("extra"),
+        F.coalesce(_field_col("time_taken").try_cast("int"), F.lit(0)).alias("time_taken"),
         F.col("_format").alias("log_format"),
         "source",
         "ordinal",
@@ -259,20 +242,16 @@ def split_rows(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
     return parsed, errors
 
 
-def parse_lines(
-    lines: DataFrame, enable_apache_ssl: bool = False
-) -> tuple[DataFrame, DataFrame]:
+def parse_lines(lines: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(value, source, ordinal) -> (parsed entries, unparsed errors).
 
     Output schema: ip, timestamp, method, request_uri, status(int),
     resp_size(long), referrer, user_agent, extra, time_taken(int),
     log_format, source, ordinal — with the reference's default fills.
-    `enable_apache_ssl` additionally tries the (upstream-disabled)
-    apache_ssl format, whose entries get status 200 (parser.py:146-147).
     Both frames are lazy and each evaluates the parse on its own; see
     `read_access_logs` for one parse feeding both.
     """
-    return split_rows(parse_rows(lines, enable_apache_ssl))
+    return split_rows(parse_rows(lines))
 
 
 def read_access_logs(

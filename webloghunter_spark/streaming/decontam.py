@@ -28,11 +28,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webloghunter_spark.pipelines.decontam import (
-    contaminated_docs,
-    decontaminate,
-    eval_shingle_set,
-)
+from webloghunter_spark.pipelines.decontam import decontaminate, eval_shingle_set
 from webloghunter_spark.streaming.runner import _filled, _stage_writer
 
 
@@ -42,11 +38,9 @@ def decontaminate_stream_writer(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    emit_hits: bool = False,
 ) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function: per micro-batch, either the
-    decontaminated survivors (default) or the (id, n_hits) audit rows
-    (`emit_hits=True`) are handed to `sink(df, batch_id)`.
+    """Build the foreachBatch function: per micro-batch, the
+    decontaminated survivors are handed to `sink(df, batch_id)`.
 
     Usage::
 
@@ -57,16 +51,9 @@ def decontaminate_stream_writer(
     grams = eval_shingle_set(eval_df, text_col, n).persist()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if emit_hits:
-            out = contaminated_docs(
-                batch_df, id_col=id_col, text_col=text_col, n=n,
-                eval_grams=grams,
-            )
-        else:
-            out = decontaminate(
-                batch_df, id_col=id_col, text_col=text_col, n=n,
-                eval_grams=grams,
-            )
+        out = decontaminate(
+            batch_df, id_col=id_col, text_col=text_col, n=n, eval_grams=grams,
+        )
         sink(out, batch_id)
 
     def release() -> None:

@@ -2,14 +2,11 @@
 pipelines/dedup.exact_dedup.
 
 A training-data ingest stream dedups on a content fingerprint (e.g.
-`fingerprint_expr`'s md5 of normalized text). State shape matters:
-
-- `dropDuplicatesWithinWatermark` (default here) keeps one state row
-  per key only until the watermark passes it — BOUNDED state, the
-  correct choice when duplicates arrive close together (re-crawls,
-  retry storms). A duplicate arriving after the horizon is re-emitted.
-- `dropDuplicates` keeps every key forever — exact over the whole
-  stream, unbounded state; only for key spaces known to be small.
+`fingerprint_expr`'s md5 of normalized text) with
+`dropDuplicatesWithinWatermark`: one state row per key, kept only
+until the watermark passes it — BOUNDED state, the right shape when
+duplicates arrive close together (re-crawls, retry storms). A
+duplicate arriving after the horizon is re-emitted.
 """
 
 from __future__ import annotations
@@ -26,14 +23,12 @@ def dedup_stream(
     key_cols: Sequence[str] = ("fingerprint",),
     ts_col: str = "ts",
     watermark: str = "1 hour",
-    within_watermark: bool = True,
 ) -> DataFrame:
-    """First occurrence per key; see module docstring for the state
-    trade-off behind `within_watermark`."""
-    wm = events.withWatermark(ts_col, watermark)
-    if within_watermark:
-        return wm.dropDuplicatesWithinWatermark(list(key_cols))
-    return wm.dropDuplicates(list(key_cols))
+    """First occurrence per key within the watermark horizon; see the
+    module docstring for the state bound."""
+    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        list(key_cols)
+    )
 
 
 def boilerplate_stream_writer(
